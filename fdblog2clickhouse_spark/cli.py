@@ -611,11 +611,11 @@ def cmd_compact_store(args) -> int:
         compact_banded_index,
         compact_signature_store,
         fold_retractions,
-        heal_swap,
         maybe_rebucket_table,
         members_path,
         rebucket_banded_index,
     )
+    from .storage import heal_swap
 
     spark = _spark()
     # fold retraction sidecars FIRST, so the compaction below rewrites
@@ -804,7 +804,7 @@ def cmd_retract_vectors(args) -> int:
     and retires it. The codebook keeps its centroids; run
     probe-recall / refresh-ivf afterwards if the deletion is large
     enough to drift recall."""
-    from .operators.dedup_store import retract_ivf_vectors
+    from .operators.ann_store import retract_ivf_vectors
 
     spark = _spark()
     stats = retract_ivf_vectors(spark, args.lists, _retract_ids_frame(spark, args))

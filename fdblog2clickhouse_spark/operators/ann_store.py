@@ -29,8 +29,8 @@ lists table is one row per vector (the partition key at 100 TB —
 queries touch nprobe/k of it); insert cost is O(batch × centroids)
 with no shuffle beyond the batch's own assignment window.
 
-MAINTAINER CONTRACT (VERDICT r17 #2 / ADVICE r17) — the rule every
-writer in this module pins, mirroring `dedup_store.heal_table_fold`:
+MAINTAINER CONTRACT (VERDICT r17 #2 / ADVICE r17) — the rule of the
+`storage` module, which carries every write in this module:
 
   ONE MAINTAINER, MANY READERS. An index artifact set (codebook,
   lists, codes, PQ codebook, sidecars) takes its WRITES from exactly
@@ -41,12 +41,15 @@ writer in this module pins, mirroring `dedup_store.heal_table_fold`:
   beside it — pause the stream (or route the maintenance commands
   through the same process, which serializes them).
 
-  Concurrent QUERY processes are safe against the one maintainer:
-  every reader heals crash remnants before building its plan
-  (`heal_swap`, rename-only), a reader's heal that fires inside the
-  maintainer's swap window is absorbed by the swap's bounded retry
-  (`dedup_store._swap_aside`), and a heal that LOSES its own rename
-  race tolerates it (`heal_swap`'s guard). A reader whose
+  Every rewrite is a `storage` whole-table swap (`storage.commit`,
+  or `storage.stage` … `storage.publish` for the refresh/split
+  double swap), so at every instant each artifact or its '.old'
+  aside holds a complete table. Concurrent QUERY processes are safe
+  against the one maintainer: every reader heals crash remnants
+  before building its plan (`storage.heal_swap`, rename-only), a
+  reader's heal that fires inside the maintainer's swap window is
+  absorbed by the swap's bounded retry (`storage._swap_aside`), and
+  a heal that LOSES its own rename race tolerates it. A reader whose
   already-built scan raced a swap sees FileNotFound and retries the
   read — the standard rename-swap caveat.
 
@@ -56,6 +59,10 @@ writer in this module pins, mirroring `dedup_store.heal_table_fold`:
   pass converges on re-run. Pinned by
   tests/test_ann_store.py::test_swap_survives_racing_heal and
   ::test_second_writer_aborts_not_corrupts.
+
+The IVF takedown path (`retract_ivf_vectors` → tombstone sidecar,
+`live_ivf_lists` → composed read, `fold_ivf_retractions` → physical
+fold) lives here beside the lists and codes it rewrites.
 """
 
 from __future__ import annotations
@@ -64,8 +71,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from .. import storage
+from ..session import overlap
 from .dedup import _QUANT_CTE, _quantized
-from .dedup_store import fold_ivf_retractions, live_ivf_lists
 from .sinkcheck import scratch_dir
 from .similarity import (
     _ANN_IVF_SQL,
@@ -185,15 +193,13 @@ def ivf_store_search_plan(
     HERE keeps the probe/candidate/rank body single-source (ADVICE
     r15: the filtered plan used to duplicate it, so tie-break or
     nprobe fixes had to be made twice)."""
-    from .dedup_store import heal_swap
-
     # heal-on-every-read-path (the dedup family's rule, extended to
     # the query node in r17): a refresh/split that crashed mid-swap
     # leaves the codebook only at '.old' — without this one stat the
     # query node raises PATH_NOT_FOUND until maintenance reruns.
     # Rename-only (no .old cleanup): readers never delete a
     # maintainer's in-flight state.
-    heal_swap(codebook_path)
+    storage.heal_swap(codebook_path)
     lists = live_ivf_lists(spark, lists_path)
     if allowed is not None:
         lists = lists.join(allowed.select("n_id"), "n_id", "left_semi")
@@ -312,6 +318,97 @@ def ivf_codes_path(lists_path: str) -> str:
     return lists_path.rstrip("/") + "_codes"
 
 
+def ivf_tombstones_path(lists_path: str) -> str:
+    return lists_path.rstrip("/") + "_tombstones"
+
+
+def _lists_id_col(lists: DataFrame) -> str:
+    """The vector-id column of an inverted-lists table: ann_store
+    writes (n_id, list_id); accept vec_id too for externally built
+    tables (the CLI takes an arbitrary --lists path)."""
+    return "n_id" if "n_id" in lists.columns else "vec_id"
+
+
+def live_ivf_lists(spark: SparkSession, lists_path: str) -> DataFrame:
+    """The inverted-lists table with retractions applied: tombstoned
+    vec_ids removed. The sidecar is O(retracted) → broadcast — the
+    same composition rule as `live_members`, so EVERY lists reader
+    (search, probe-recall, refresh, split, compaction) sees the
+    post-takedown index without a single physical rewrite."""
+    storage.heal_swap(lists_path)
+    lists = spark.read.parquet(lists_path)
+    tomb = storage.read_sidecar(spark, ivf_tombstones_path(lists_path))
+    if tomb is None:
+        return lists
+    idc = _lists_id_col(lists)
+    return lists.join(
+        F.broadcast(tomb.select(F.col("vec_id").alias(idc))), idc, "left_anti"
+    )
+
+
+def retract_ivf_vectors(
+    spark: SparkSession, lists_path: str, ids: DataFrame
+) -> dict:
+    """The IVF sibling of `dedup_store.retract_docs` — O(retracted), never
+    O(index) (VERDICT r13 #2: the previous full read→anti-join→swap
+    rewrite was a full-index write per takedown batch): merge the
+    retracted vec_ids into a tombstone sidecar beside the lists
+    table; the physical lists are untouched, readers compose the
+    sidecar (`live_ivf_lists`), and `fold_ivf_retractions` (run by
+    compact-store / refresh-ivf, which rewrite the lists anyway)
+    retires it. The codebook keeps its centroids — vanished-list ids
+    never drop, matching refresh_ivf_centroids' rule — and recall
+    drift from the now-stale centroids is what `probe-recall` exists
+    to catch. Same crash-safe swap as the text sidecars."""
+    ids = ids.select(F.col("doc_id").alias("vec_id")).distinct()
+    tomb_path = ivf_tombstones_path(lists_path)
+    storage.heal_swap(tomb_path)
+    old_tomb = storage.read_sidecar(spark, tomb_path)
+    new_tomb = ids
+    if old_tomb is not None:
+        new_tomb = new_tomb.unionByName(old_tomb.select("vec_id")).distinct()
+    # localCheckpoint before the swap: new_tomb's lineage reads the
+    # OLD sidecar, which the swap removes (same hazard retract_docs'
+    # tombstone write had — ADVICE r13)
+    new_tomb = new_tomb.localCheckpoint()
+    n_total = new_tomb.count()
+    storage.commit(tomb_path, new_tomb.write.parquet)
+    return {"tombstoned": n_total}
+
+
+def fold_ivf_retractions(spark: SparkSession, lists_path: str) -> dict:
+    """Fold the IVF tombstone sidecar into the physical lists table
+    and retire it — the compaction-time companion to
+    `retract_ivf_vectors`, mirroring `fold_retractions`: one swap
+    rewrite of the lists (the only O(index) write, amortized into the
+    maintenance pass that rewrites them anyway), sidecar deleted
+    LAST. A codes sibling (`ivf_codes_path`) is folded in the same
+    pass — the takedown contract covers the taken-down vectors'
+    DERIVED representations, not just their list membership
+    (VERDICT r14). A crash between the steps leaves tombstones that
+    match nothing — harmless, and the re-run retires them. No-op
+    when no sidecar exists."""
+    import os
+
+    storage.heal_swap(lists_path)
+    tomb_path = ivf_tombstones_path(lists_path)
+    tomb = storage.read_sidecar(spark, tomb_path)
+    if tomb is None:
+        return {"folded": False}
+    storage.commit(lists_path, live_ivf_lists(spark, lists_path).write.parquet)
+    codes_p = ivf_codes_path(lists_path)
+    storage.heal_swap(codes_p)
+    if os.path.isdir(codes_p):
+        storage.commit(
+            codes_p,
+            spark.read.parquet(codes_p)
+            .join(tomb.select("vec_id"), "vec_id", "left_anti")
+            .write.parquet,
+        )
+    storage.retire_sidecar(tomb_path)
+    return {"folded": True}
+
+
 def ivf_insert_batch(
     spark: SparkSession, qn_batch: DataFrame, codebook_path: str,
     lists_path: str, *, compact_trigger_files: int | None = None,
@@ -363,8 +460,6 @@ def ivf_insert_batch(
     query processes are always safe)."""
     import os
 
-    from .dedup_store import heal_swap
-
     # heal crash-interrupted swaps FIRST (a compaction that died
     # mid-rename leaves the table only at path+'.old'): the reads
     # below would raise PATH_NOT_FOUND — and worse, the codes
@@ -372,14 +467,14 @@ def ivf_insert_batch(
     # as lists-only, inserting vectors invisible to compressed
     # search (and an append to the missing lists path would fork a
     # fresh table beside the real one at .old)
-    heal_swap(lists_path)
-    heal_swap(codebook_path)
+    storage.heal_swap(lists_path)
+    storage.heal_swap(codebook_path)
     codes_p = ivf_codes_path(lists_path)
-    heal_swap(codes_p)
+    storage.heal_swap(codes_p)
     has_codes = os.path.isdir(codes_p)
     if has_codes:
         pq_p = pq_codebook_path(codebook_path)
-        heal_swap(pq_p)
+        storage.heal_swap(pq_p)
         if not os.path.isdir(pq_p):
             raise RuntimeError(
                 f"index has a codes table ({codes_p}) but no PQ "
@@ -519,18 +614,9 @@ def compact_ivf_lists(
     import glob
     import os
 
-    from .dedup_store import (
-        _read_sidecar,
-        _swap_write,
-        heal_swap,
-        ivf_tombstones_path,
-        live_ivf_lists,
-        retire_sidecar,
-    )
-
-    heal_swap(lists_path)
+    storage.heal_swap(lists_path)
     tomb_path = ivf_tombstones_path(lists_path)
-    tomb = _read_sidecar(spark, tomb_path)
+    tomb = storage.read_sidecar(spark, tomb_path)
     has_tomb = tomb is not None
     files = glob.glob(os.path.join(lists_path, "*.parquet"))
     if not has_tomb and len(files) <= n_files:
@@ -538,21 +624,22 @@ def compact_ivf_lists(
         # already-compact table: nothing to fold — clean the remnant
         # so the next probe doesn't see phantom state
         if os.path.isdir(tomb_path):
-            retire_sidecar(tomb_path)
+            storage.retire_sidecar(tomb_path)
         return {
             "files_before": len(files),
             "files_after": len(files),
             "rewrote": False,
             "folded": False,
         }
-    _swap_write(
+    storage.commit(
+        lists_path,
         live_ivf_lists(spark, lists_path)
         .repartition(n_files)
-        .sortWithinPartitions("list_id"),
-        lists_path,
+        .sortWithinPartitions("list_id")
+        .write.parquet,
     )
     codes_p = ivf_codes_path(lists_path)
-    heal_swap(codes_p)
+    storage.heal_swap(codes_p)
     if has_tomb and os.path.isdir(codes_p):
         # fold the takedown into the DERIVED representation too: a
         # tombstoned vector's PQ codes leave disk with the same pass
@@ -560,15 +647,16 @@ def compact_ivf_lists(
         # — candidates come from live lists — but takedown means
         # REMOVED, and the rows otherwise accumulate unboundedly
         # under an insert+retract loop)
-        _swap_write(
+        storage.commit(
+            codes_p,
             spark.read.parquet(codes_p)
             .join(tomb.select("vec_id"), "vec_id", "left_anti")
             .repartition(n_files)
-            .sortWithinPartitions("vec_id"),
-            codes_p,
+            .sortWithinPartitions("vec_id")
+            .write.parquet,
         )
     if has_tomb:
-        retire_sidecar(tomb_path)
+        storage.retire_sidecar(tomb_path)
     return {
         "files_before": len(files),
         "files_after": len(
@@ -642,18 +730,17 @@ def maybe_compact_ivf_lists(
         # taken post-compact, but the explicit guard keeps the
         # single-rewrite invariant independent of the fold's sizing)
         folded_codes = res["folded"] and os.path.isdir(codes_p)
-    from .dedup_store import _swap_write, heal_swap
-
     if os.path.isdir(codes_p):
-        heal_swap(codes_p)
+        storage.heal_swap(codes_p)
         cfiles = glob.glob(os.path.join(codes_p, "*.parquet"))
         if not folded_codes and len(cfiles) > trigger_files:
             total = sum(os.path.getsize(f) for f in cfiles)
-            _swap_write(
+            storage.commit(
+                codes_p,
                 spark.read.parquet(codes_p)
                 .repartition(max(1, math.ceil(total / target_bytes)))
-                .sortWithinPartitions("vec_id"),
-                codes_p,
+                .sortWithinPartitions("vec_id")
+                .write.parquet,
             )
             out["codes_compacted"] = True
     return out
@@ -679,7 +766,6 @@ def train_pq_codebook(
     vote); the output is the 128-row (sub, code, carr) frame
     `_pq_train_cb` defines, swap-written for crash safety. `qn` must
     cover every live indexed vector. Returns the written path."""
-    from .dedup_store import _swap_write
     from .similarity import _pq_train_cb
 
     cent = spark.read.parquet(codebook_path).select(
@@ -695,7 +781,7 @@ def train_pq_codebook(
         )
     )
     out = pq_codebook_path(codebook_path)
-    _swap_write(_pq_train_cb(resid).coalesce(1), out)
+    storage.commit(out, _pq_train_cb(resid).coalesce(1).write.parquet)
     return out
 
 
@@ -716,8 +802,6 @@ def reencode_ivf_codes(
     every live indexed vector — enforced, because the resid inner
     join would otherwise DROP missing vectors' codes silently.
     Swap-written; returns the re-encoded row count's vector count."""
-    from .dedup_store import _swap_write
-
     codes_path = codes_path or ivf_codes_path(lists_path)
     cent = spark.read.parquet(codebook_path).select(
         "c_id", F.col("q").alias("cq")
@@ -740,7 +824,7 @@ def reencode_ivf_codes(
             f"vector ({n_resid} of {n_live} matched) — pass the full "
             "corpus, or fold/retract missing vectors first"
         )
-    _swap_write(_ivfpq_codes(resid, pq_cb), codes_path)
+    storage.commit(codes_path, _ivfpq_codes(resid, pq_cb).write.parquet)
     return n_resid
 
 
@@ -1083,10 +1167,8 @@ def ivfpq_store_search_plan(
     artifact it reads (rename-only — the query node never deletes a
     maintainer's in-flight '.old'), so a refresh/split/compact that
     died mid-rename doesn't take the read path down with it."""
-    from .dedup_store import heal_swap
-
     for p in (codebook_path, codes_path, pq_codebook_path(codebook_path)):
-        heal_swap(p)
+        storage.heal_swap(p)
     return _ivfpq_query(
         queries,
         spark.read.parquet(codebook_path),
@@ -1225,21 +1307,9 @@ def refresh_ivf_centroids(
     MAINTAINER CONTRACT): do not run beside a live insert stream
     (the stream's auto-compact is itself a writer)."""
     import os
-    import shutil
 
-    def _heal(path: str) -> None:
-        from .dedup_store import _claim_rmtree
-
-        old = path + ".old"
-        if os.path.exists(old) and not os.path.exists(path):
-            os.rename(old, path)
-        # claim-then-delete (r18): an in-place rmtree of '.old' races
-        # a reader's heal renaming content out of it / this writer's
-        # next aside renaming content into it
-        _claim_rmtree(old)
-
-    _heal(codebook_path)
-    _heal(lists_path)
+    cb_staging = storage.stage(codebook_path)
+    li_staging = storage.stage(lists_path)
 
     # LIVE lists: a pending takedown must not vote in the M-step or
     # re-enter the reassigned table — and since the rewrite below
@@ -1282,8 +1352,6 @@ def refresh_ivf_centroids(
         old_cb.join(newc.select("c_id"), "c_id", "left_anti")
     )
 
-    cb_staging = codebook_path + ".refresh"
-    shutil.rmtree(cb_staging, ignore_errors=True)
     cb1.coalesce(1).write.mode("overwrite").parquet(cb_staging)
 
     # E-step against the STAGED codebook (the swap hasn't happened —
@@ -1291,8 +1359,6 @@ def refresh_ivf_centroids(
     lists1 = _assign(member_vecs, spark.read.parquet(cb_staging), 1).select(
         F.col("v_id").alias("n_id"), F.col("c_id").alias("list_id")
     )
-    li_staging = lists_path + ".refresh"
-    shutil.rmtree(li_staging, ignore_errors=True)
     lists1.write.mode("overwrite").parquet(li_staging)
 
     # stats BEFORE the swap (reads old + staged tables). ONE driver
@@ -1330,19 +1396,12 @@ def refresh_ivf_centroids(
         "max_list_after": rrow["ma"],
     }
 
-    from .dedup_store import _swap_aside
-
-    for live, staging in (
-        (codebook_path, cb_staging),
-        (lists_path, li_staging),
-    ):
-        _swap_aside(live, staging)
+    storage.publish(codebook_path)
+    storage.publish(lists_path)
     # the rewritten lists carry live members only — retire the
     # tombstone sidecar LAST (a crash before this leaves tombstones
     # that match nothing; the next fold/refresh retires them)
-    from .dedup_store import heal_swap, ivf_tombstones_path, retire_sidecar
-
-    retire_sidecar(ivf_tombstones_path(lists_path))
+    storage.retire_sidecar(ivf_tombstones_path(lists_path))
     # a persisted PQ codebook encodes residuals against the OLD
     # centroids — retrain it against the refreshed index so the
     # artifact never goes silently stale (self-review r14; qn covers
@@ -1351,9 +1410,9 @@ def refresh_ivf_centroids(
     # codebook (ADVICE r14: stale codes against a refreshed LUT are
     # ADC-incoherent), so it is re-encoded in the same pass.
     pq_p = pq_codebook_path(codebook_path)
-    heal_swap(pq_p)
+    storage.heal_swap(pq_p)
     codes_p = ivf_codes_path(lists_path)
-    heal_swap(codes_p)
+    storage.heal_swap(codes_p)
     if os.path.isdir(codes_p) and not os.path.isdir(pq_p):
         raise RuntimeError(
             f"IVF index has a codes table ({codes_p}) but no PQ "
@@ -1474,21 +1533,9 @@ def split_ivf_lists(
     WRITER — one maintainer per artifact set (module docstring
     MAINTAINER CONTRACT)."""
     import os
-    import shutil
 
-    def _heal(path: str) -> None:
-        from .dedup_store import _claim_rmtree
-
-        old = path + ".old"
-        if os.path.exists(old) and not os.path.exists(path):
-            os.rename(old, path)
-        # claim-then-delete (r18): an in-place rmtree of '.old' races
-        # a reader's heal renaming content out of it / this writer's
-        # next aside renaming content into it
-        _claim_rmtree(old)
-
-    _heal(codebook_path)
-    _heal(lists_path)
+    cb_staging = storage.stage(codebook_path)
+    li_staging = storage.stage(lists_path)
 
     # raw lists drive the untouched-list passthrough (byte-invariance
     # pin); the LIVE view drives everything semantic — the over-budget
@@ -1513,10 +1560,8 @@ def split_ivf_lists(
     # (ADVICE r14: a qn missing vectors in untouched lists silently
     # trained the codebook on a residual subset). Enforce it before
     # any staging write.
-    from .dedup_store import heal_swap as _heal_swap
-
     pq_p = pq_codebook_path(codebook_path)
-    _heal_swap(pq_p)
+    storage.heal_swap(pq_p)
     if os.path.isdir(pq_p):
         n_live = lists_live.count()
         n_cov = lists_live.join(
@@ -1672,11 +1717,7 @@ def split_ivf_lists(
         eff_map.select("list_id"), "list_id", "left_anti"
     ).unionByName(relabel.select("n_id", "list_id"))
 
-    cb_staging = codebook_path + ".split"
-    shutil.rmtree(cb_staging, ignore_errors=True)
     cb1.coalesce(1).write.mode("overwrite").parquet(cb_staging)
-    li_staging = lists_path + ".split"
-    shutil.rmtree(li_staging, ignore_errors=True)
     lists1.write.mode("overwrite").parquet(li_staging)
     max_after = (
         spark.read.parquet(li_staging)
@@ -1686,24 +1727,17 @@ def split_ivf_lists(
         .first()[0]
     )
     assigned.unpersist()
-    from .dedup_store import _swap_aside
-
-    for live, staging in (
-        (codebook_path, cb_staging),
-        (lists_path, li_staging),
-    ):
-        _swap_aside(live, staging)
+    storage.publish(codebook_path)
+    storage.publish(lists_path)
     # split changed centroids and list assignments — retrain a
     # persisted PQ codebook so it never encodes against retired
     # geometry (same staleness rule as refresh, self-review r14),
     # and re-encode a persisted codes table against the new
     # geometry in the same pass (ADVICE r14). Coverage was enforced
     # up front.
-    from .dedup_store import heal_swap
-
-    heal_swap(pq_p)
+    storage.heal_swap(pq_p)
     codes_p = ivf_codes_path(lists_path)
-    heal_swap(codes_p)
+    storage.heal_swap(codes_p)
     if os.path.isdir(codes_p) and not os.path.isdir(pq_p):
         raise RuntimeError(
             f"IVF index has a codes table ({codes_p}) but no PQ "
@@ -1771,8 +1805,6 @@ def maybe_split_ivf_lists(
     indexed vector when the decision fires (split_ivf_lists' own
     precondition). Returns {"triggered", "rounds", "split",
     "reseeded", "max_list_before", "max_list_after"}."""
-    from .dedup_store import live_ivf_lists
-
     def _max_list() -> int:
         m = (
             live_ivf_lists(spark, lists_path)
@@ -1851,9 +1883,7 @@ def ivf_recall_probe(
         .where(F.col("rank") <= topk)
         .select("q_id", "n_id")
     )
-    from .dedup_store import heal_swap
-
-    heal_swap(codebook_path)  # read-path heal, same rule as the plans
+    storage.heal_swap(codebook_path)  # read-path heal, same rule as the plans
     probes = _assign(queries, spark.read.parquet(codebook_path), nprobe).select(
         F.col("v_id").alias("q_id"), F.col("c_id").alias("probe_list")
     )
@@ -1929,10 +1959,7 @@ def ann_ivf_refresh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("c_id"), "q", "nq"
     ).coalesce(1).write.mode("overwrite").parquet(codebook_path)
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        brute_f = pool.submit(brute.count)
+    def _build_lists() -> None:
         cb_disk = spark.read.parquet(codebook_path)
         _assign(qn0.select("vec_id", "q", "nq"), cb_disk, 1).select(
             F.col("v_id").alias("n_id"), F.col("c_id").alias("list_id")
@@ -1945,7 +1972,8 @@ def ann_ivf_refresh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select(
             F.col("v_id").alias("n_id"), F.col("c_id").alias("list_id")
         ).write.mode("append").parquet(lists_path)
-        brute_f.result()
+
+    overlap(brute.count, _build_lists)
 
     before = _ivf_search_hits(spark, corpus, brute, codebook_path, lists_path)
     before.withColumn("phase", F.lit("before")).select(
@@ -2047,10 +2075,7 @@ def ann_ivfpq_refresh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("c_id"), "q", "nq"
     ).coalesce(1).write.mode("overwrite").parquet(codebook_path)
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        brute_f = pool.submit(brute.count)
+    def _build_index() -> None:
         cent_d = spark.read.parquet(codebook_path)
         _assign(qn0, cent_d, 1).select(
             F.col("v_id").alias("n_id"), F.col("c_id").alias("list_id")
@@ -2088,7 +2113,8 @@ def ann_ivfpq_refresh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             "append"
         ).parquet(codes_path)
         b_lists.unpersist()
-        brute_f.result()
+
+    overlap(brute.count, _build_index)
 
     before = _ivfpq_search_hits(
         spark, corpus, brute, codebook_path, lists_path, codes_path

@@ -55,6 +55,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import overlap
+from ..storage import (
+    commit,
+    heal_swap,
+    heal_table_fold,
+    publish,
+    publish_partitions,
+    read_sidecar,
+    retire_sidecar,
+    stage,
+    stage_partitions,
+    write_json,
+)
 from .dedup import (
     _COSINE_THRESHOLD,
     _dot,
@@ -316,30 +329,21 @@ def compact_signature_store(
     `optimize_mergetree` handles for the time-partitioned table.
     Rewrites the store into `n_files` files sorted by a band key
     (band-key locality tightens row-group min/max stats for the
-    admission band join's store scan), through a staging dir so a
-    crash leaves old or new, never a mix: the old store is renamed
-    ASIDE first, the staging dir renamed into place, and only then
-    is the old copy deleted — at every instant either `path` exists
-    with complete content or `path + '.old'` does (ADVICE r9: the
-    previous rmtree-then-rename order had a window with neither).
-    Returns the file count before compaction. Content-invariance
+    admission band join's store scan), through the whole-table swap
+    of `storage`, so a crash leaves the old or the new store, never
+    a mix. Returns the file count before compaction. Content-invariance
     (admission results identical before/after) is CI-pinned."""
     import glob
     import os
     import shutil
 
-    # finish a previous crash-interrupted swap: the .old dir is the
-    # complete pre-compaction store — restore it if path vanished.
-    # Then a crashed granular fold's per-partition swaps: compaction
-    # reads the live dirs, so a missing bucket would lose its rows.
-    old = path + ".old"
-    if os.path.exists(old) and not os.path.exists(path):
-        os.rename(old, path)
-    _claim_rmtree(old)
+    # finish a previous crash-interrupted swap, then a crashed
+    # granular fold's per-partition swaps: compaction reads the live
+    # dirs, so a missing bucket would lose its rows.
+    staging = stage(path)
     heal_table_fold(path)
 
     lay = table_layout(path)
-    staging = path + ".compact"
     if lay is not None:
         # bucketed layout: compact WITHIN each pb partition (the
         # banded-index compactor's shape — `n_files` is the
@@ -363,7 +367,7 @@ def compact_signature_store(
         shutil.copy2(
             os.path.join(path, _TBL_META), os.path.join(staging, _TBL_META)
         )
-        _swap_aside(path, staging)
+        publish(path)
         return n_before
 
     files = glob.glob(os.path.join(path, "*.parquet"))
@@ -376,7 +380,7 @@ def compact_signature_store(
         .write.mode("overwrite")
         .parquet(staging)
     )
-    _swap_aside(path, staging)
+    publish(path)
     return len(files)
 
 
@@ -599,7 +603,6 @@ def write_banded_index(
     this call (a hive write of an empty frame creates nothing on
     its own) — readers rely on that to tell 'legitimately empty'
     from 'index lost'."""
-    import json
     import os
 
     if mode == "append" and os.path.exists(path):
@@ -644,8 +647,10 @@ def write_banded_index(
     if persisted is not None:
         persisted.unpersist()
     os.makedirs(path, exist_ok=True)
-    with open(os.path.join(path, _BANDED_META), "w") as f:
-        json.dump({"buckets": buckets, "key_cols": key_cols}, f)
+    write_json(
+        os.path.join(path, _BANDED_META),
+        {"buckets": buckets, "key_cols": key_cols},
+    )
 
 
 def pruned_store_rows(
@@ -666,12 +671,9 @@ def pruned_store_rows(
 
     from pyspark.errors import AnalysisException
 
-    # complete a crashed compaction swap first (same recovery rule as
-    # the flat-store compactor: the .old dir is the complete index),
-    # then a crashed granular fold's per-partition swaps
-    old = path + ".old"
-    if os.path.exists(old) and not os.path.exists(path):
-        os.rename(old, path)
+    # complete a crashed compaction swap first, then a crashed
+    # granular fold's per-partition swaps
+    heal_swap(path)
     heal_table_fold(path)
     if not os.path.exists(path):
         # a write_banded_index'd index dir ALWAYS exists, even empty
@@ -680,7 +682,7 @@ def pruned_store_rows(
         # every store×batch pair (review finding, round 11).
         raise FileNotFoundError(
             f"banded index missing at {path}: rebuild it from the flat "
-            f"store with write_banded_index (or restore {old}) before "
+            f"store with write_banded_index (or restore {path}.old) before "
             "admitting"
         )
 
@@ -759,9 +761,8 @@ def compact_banded_index(
     (crash-leaked duplicate index rows are tolerated by the
     reader's dropDuplicates; compaction retires them permanently).
     Same
-    crash-safe rename-aside swap as `compact_signature_store`:
-    at every instant either `path` or `path + '.old'` holds a
-    complete index. Returns the file count before compaction;
+    crash-safe whole-table swap as `compact_signature_store`.
+    Returns the file count before compaction;
     no-ops (and returns it) when every partition is already within
     budget. Search invariance (pruned reads identical before/after)
     is CI-pinned."""
@@ -769,10 +770,7 @@ def compact_banded_index(
     import os
     import shutil
 
-    old = path + ".old"
-    if os.path.exists(old) and not os.path.exists(path):
-        os.rename(old, path)
-    _claim_rmtree(old)
+    staging = stage(path)
     heal_table_fold(path)
 
     part_dirs = glob.glob(os.path.join(path, "band=*", "kb=*"))
@@ -786,7 +784,7 @@ def compact_banded_index(
     # without it, so a marker-less index here means a crashed build:
     # surface it rather than launder it through a compaction. Checked
     # BEFORE the staging write so the failure costs a stat call, not
-    # a full Spark rewrite job that leaves a .compact dir behind
+    # a full Spark rewrite job that leaves a staging dir behind
     # (ADVICE r11).
     meta = os.path.join(path, _BANDED_META)
     if not os.path.exists(meta):
@@ -794,7 +792,6 @@ def compact_banded_index(
             f"banded index at {path} has no layout marker (interrupted "
             "build?): rebuild it before compacting"
         )
-    staging = path + ".compact"
     (
         spark.read.parquet(path)
         .dropDuplicates()
@@ -804,7 +801,7 @@ def compact_banded_index(
         .parquet(staging)
     )
     shutil.copy2(meta, os.path.join(staging, _BANDED_META))
-    _swap_aside(path, staging)
+    publish(path)
     return n_before
 
 
@@ -829,13 +826,7 @@ def rebucket_banded_index(
     pure pruning key — candidate generation matches on (band,
     band_key), which any bucketing preserves. Returns
     {buckets_before, buckets_after}."""
-    import os
-    import shutil
-
-    old = path + ".old"
-    if os.path.exists(old) and not os.path.exists(path):
-        os.rename(old, path)
-    _claim_rmtree(old)
+    staging = stage(path)
     heal_table_fold(path)
     lay = banded_layout(path)
     if lay is None:
@@ -846,8 +837,6 @@ def rebucket_banded_index(
         )
     if lay["buckets"] == buckets:
         return {"buckets_before": lay["buckets"], "buckets_after": buckets}
-    staging = path + ".rebucket"
-    shutil.rmtree(staging, ignore_errors=True)
     write_banded_index(
         read_table(spark, store_path),
         staging,
@@ -855,7 +844,7 @@ def rebucket_banded_index(
         key_cols=lay["key_cols"],
         buckets=buckets,
     )
-    _swap_aside(path, staging)
+    publish(path)
     return {"buckets_before": lay["buckets"], "buckets_after": buckets}
 
 
@@ -921,17 +910,10 @@ def _auto_buckets(rows: int) -> int:
 # says to RAISE the bucket count (the r15 soak: fold 7.6 s at 256
 # buckets vs 18.0 s at 1024 on the same store). The granular path
 # rewrites ONLY the partitions that hold tombstoned/relabeled rows
-# and leaves every other partition dir byte-invariant. Crash story:
-# a journal marker (leading '_' — parquet listing skips it) lists
-# the partition dirs mid-swap; each dir is renamed aside to a
-# '.bfold-'-prefixed sibling (leading '.' — likewise invisible)
-# before its staged replacement renames in, so `heal_table_fold`
-# can always roll a bucket back (safe at ANY point: the sidecars
-# are retired only after the whole fold succeeds, so pre-fold
-# bucket + sidecars is exactly the live view) or drop a completed
-# swap's remnant. Hot read paths pay one stat() on the journal.
-_FOLD_JOURNAL = "_fold_inflight.json"
-_BFOLD_PREFIX = ".bfold-"
+# through `storage.publish_partitions` and leaves every other
+# partition dir byte-invariant. Rolling a crashed fold back is safe
+# at ANY point: the sidecars are retired only after the whole fold
+# succeeds, so pre-fold bucket + sidecars is exactly the live view.
 
 
 def table_layout(path: str) -> dict | None:
@@ -1003,9 +985,8 @@ def _write_tbl_marker(
     wrote — so `maybe_rebucket_table` reads a number instead of
     scanning; appends invalidate it (`_set_marker_rows(path, None)`)
     and the gate's count() fallback re-derives + re-persists.
-    Written atomically (tmp + rename): readers stat it on every
+    Written atomically (`write_json`): readers stat it on every
     pruned read."""
-    import json
     import os
 
     os.makedirs(path, exist_ok=True)
@@ -1017,10 +998,7 @@ def _write_tbl_marker(
     }
     if rows is not None:
         meta["rows"] = rows
-    p = os.path.join(path, _TBL_META)
-    with open(p + ".tmp", "w") as f:
-        json.dump(meta, f)
-    os.rename(p + ".tmp", p)
+    write_json(os.path.join(path, _TBL_META), meta)
 
 
 def _footer_rows(path: str) -> int | None:
@@ -1067,7 +1045,7 @@ def _set_marker_rows(path: str, rows: int | None) -> None:
     """Update (rows=int) or invalidate (rows=None) the marker's
     cached row count, preserving every other field; no-op on tables
     without a `_TBL_META` marker (legacy flat dirs, banded indexes).
-    Atomic (tmp + rename) — readers stat the marker on every pruned
+    Atomic (`write_json`) — readers stat the marker on every pruned
     read."""
     import json
     import os
@@ -1083,9 +1061,7 @@ def _set_marker_rows(path: str, rows: int | None) -> None:
         lay.pop("rows")
     else:
         lay["rows"] = int(rows)
-    with open(meta + ".tmp", "w") as f:
-        json.dump(lay, f)
-    os.rename(meta + ".tmp", meta)
+    write_json(meta, lay)
 
 
 def _table_schema(spark: SparkSession, path: str):
@@ -1187,7 +1163,7 @@ def read_table(spark: SparkSession, path: str) -> DataFrame:
 
     # one stat call unless a granular fold crashed mid-swap, in which
     # case a missing bucket dir would silently drop its rows from
-    # this read (the _read_sidecar heal-first lesson, per-partition)
+    # this read (the read_sidecar heal-first lesson, per-partition)
     heal_table_fold(path)
     try:
         return spark.read.parquet(path).drop(_TBL_PB)
@@ -1297,19 +1273,15 @@ def bucket_table(
 ) -> dict:
     """Migrate a table to the bucketed layout (or to a NEW bucket
     count) — the flat-store/members sibling of
-    `rebucket_banded_index`, with the same rename-aside swap: at
-    every instant `path` or `path + '.old'` holds a complete table.
+    `rebucket_banded_index`, with the same whole-table swap.
     Pruned-read results are invariant across a re-bucket (the bucket
     is a pure pruning key; every join still matches on the key value
     itself). Also migrates a pre-r15 raw-pmod layout to the
     skew-robust xxh64 bucket expression (data and marker rewritten
     together — the no-op early return requires the CURRENT
     expression version). Returns {buckets_before, buckets_after}."""
-    import shutil
-
-    heal_swap(path)
+    staging = stage(path)
     heal_table_fold(path)
-    _claim_rmtree(path + ".old")
     lay = table_layout(path)
     before = lay["buckets"] if lay else None
     if (
@@ -1319,12 +1291,10 @@ def bucket_table(
         and lay["pb"] == "xxh64"
     ):
         return {"buckets_before": before, "buckets_after": buckets}
-    staging = path + ".rebucket"
-    shutil.rmtree(staging, ignore_errors=True)
     write_table(
         read_table(spark, path), staging, "overwrite", key=key, buckets=buckets
     )
-    _swap_aside(path, staging)
+    publish(path)
     return {"buckets_before": before, "buckets_after": buckets}
 
 
@@ -1400,23 +1370,19 @@ def maybe_rebucket_table(
 
 
 def _swap_write_table(df: DataFrame, path: str) -> None:
-    """`_swap_write` for the big tables: a full rewrite (retraction
+    """`commit` for the big tables: a full rewrite (retraction
     fold) that PRESERVES the persisted bucketed layout — the marker
     is written into the staging dir before the swap, so no
     observable state pairs bucketed data with a missing marker.
     Legacy tables stay legacy."""
-    import shutil
-
     heal_swap(path)
-    lay = table_layout(path)
-    if lay is None:
-        _swap_write(df, path)
-        return
-    old, staging = path + ".old", path + ".staging"
-    _claim_rmtree(old)
-    shutil.rmtree(staging, ignore_errors=True)
-    write_table(df, staging, "overwrite", key=lay["key"], buckets=lay["buckets"])
-    _swap_aside(path, staging)
+    lay = table_layout(path) or {"key": None, "buckets": None}
+    commit(
+        path,
+        lambda staging: write_table(
+            df, staging, "overwrite", key=lay["key"], buckets=lay["buckets"]
+        ),
+    )
 
 
 def bootstrap_rep_store(
@@ -1441,23 +1407,19 @@ def bootstrap_rep_store(
     crashed BOOTSTRAP is re-run from scratch wholesale (every caller
     builds into a fresh root), so the banded/members completion order
     is not load-bearing."""
-    from concurrent.futures import ThreadPoolExecutor
-
     write_table(sig_frame, sig_path, "overwrite", key="gh")
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        mem_f = pool.submit(
-            write_table, members_frame, mem_path, "overwrite", key="doc_id"
-        )
-        try:
-            write_banded_index(
-                read_table(spark, sig_path),
-                band_path,
-                "overwrite",
-                sized_from=sig_path,
-                **({"key_cols": key_cols} if key_cols else {}),
-            )
-        finally:
-            mem_f.result()
+    overlap(
+        lambda: write_table(
+            members_frame, mem_path, "overwrite", key="doc_id"
+        ),
+        lambda: write_banded_index(
+            read_table(spark, sig_path),
+            band_path,
+            "overwrite",
+            sized_from=sig_path,
+            **({"key_cols": key_cols} if key_cols else {}),
+        ),
+    )
 
 
 def rep_admission_frames(
@@ -1576,7 +1538,7 @@ def rep_admission_step(
     # path+'.old', and the next caller is far more likely to be an
     # admission step than a maintenance re-run — without this the
     # step dies on PATH_NOT_FOUND until an operator runs
-    # compact-store (the _read_sidecar lesson, r14 self-review #1,
+    # compact-store (the read_sidecar lesson, r14 self-review #1,
     # applied to the main tables).
     heal_swap(sig_path)
     heal_swap(mem_path)
@@ -1589,7 +1551,7 @@ def rep_admission_step(
     # silently routing a genuinely new same-content doc's member row
     # to a dead id (_apply_gdelta filters it forever: data loss). The
     # sidecar is O(retracted) → broadcast, same as _apply_gdelta's.
-    tomb = _read_sidecar(spark, tombstones_path(mem_path))
+    tomb = read_sidecar(spark, tombstones_path(mem_path))
     if tomb is not None:
         g_batch = g_batch.join(
             F.broadcast(tomb.select("doc_id")), "doc_id", "left_anti"
@@ -1720,17 +1682,13 @@ def rep_admission_step(
         # dropDuplicates, gh classification). The members append —
         # the step's commit point, which flips a redelivered batch to
         # "skip" — still runs LAST, strictly after the evidence
-        # result is in (ev.result() re-raises a failed evidence write
+        # result is in (`overlap` re-raises a failed evidence write
         # before the batch can commit).
-        from concurrent.futures import ThreadPoolExecutor
+        def _appends() -> None:
+            write_banded_index(new_sigs, band_path, "append")
+            write_table(new_sigs, sig_path, "append")
 
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            ev = pool.submit(write_evidence, verified)
-            try:
-                write_banded_index(new_sigs, band_path, "append")
-                write_table(new_sigs, sig_path, "append")
-            finally:
-                ev.result()
+        overlap(lambda: write_evidence(verified), _appends)
         write_table(
             mem_new.join(group_map, "gh").select("doc_id", "gh", "group_id"),
             mem_path,
@@ -2302,190 +2260,6 @@ def gdelta_keys_path(sig_path: str) -> str:
     return sig_path.rstrip("/") + "_gdelta_keys"
 
 
-def _read_sidecar(spark: SparkSession, path: str) -> DataFrame | None:
-    """Sidecar read: None when absent or holding no parquet yet (a
-    crashed first write) — callers treat both as 'no retractions'.
-    Heals a crash-interrupted swap FIRST (self-review r14): a reader
-    running before any writer would otherwise see only path+'.old'
-    and conclude 'no retractions' — the admission guard would readmit
-    takedowns, a retract re-run would rebuild the sidecar WITHOUT the
-    earlier tombstones (then _swap_write's own healer restores the
-    old set only to rename it aside and delete it: permanent loss),
-    and every IVF reader would serve taken-down vectors."""
-    import os
-
-    from pyspark.errors import AnalysisException
-
-    heal_swap(path)
-    if not os.path.isdir(path):
-        return None
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException:
-        return None
-
-
-def _pid_alive(pid: int) -> bool:
-    """Same-host process liveness (signal 0): True on EPERM (alive,
-    not ours), False only when the pid is gone."""
-    import os
-
-    try:
-        os.kill(pid, 0)
-        return True
-    except ProcessLookupError:
-        return False
-    except PermissionError:
-        return True
-    except OSError:
-        return False
-
-
-def _claim_rmtree(d: str) -> None:
-    """Delete a dir ANOTHER process may concurrently rename content
-    INTO (asides, '.old' swap remnants, retired sidecars): an
-    in-place rmtree races path reuse — its file walk can unlink the
-    FRESH content a racing rename just moved into the path, gutting
-    a dir some process then treats as a complete table (the r18 fold
-    stress's final loss chain: a healer's remnant rmtree gutted an
-    aside the writer had re-renamed the live partition into, and a
-    later restore published the gutted copy). So: atomically CLAIM
-    the dir by renaming it to a unique dot-prefixed trash name
-    (rename is atomic — after it, no other process's rename can
-    target the claimed content), then delete the claim at leisure.
-    Losing the claim race (dir gone / being claimed) means someone
-    else owns the deletion — done either way. Crash-leaked trash
-    dirs are invisible to readers (dot prefix) and reaped by
-    `_clear_orphan_fold_staging` / the next claim of the same
-    path."""
-    import os
-    import shutil
-    import uuid
-
-    parent, leaf = os.path.split(d.rstrip("/"))
-    trash = os.path.join(
-        parent, f".trash-{leaf}-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-    )
-    try:
-        os.rename(d, trash)
-    except OSError:
-        return
-    shutil.rmtree(trash, ignore_errors=True)
-
-
-def heal_swap(path: str) -> None:
-    """Complete a crash-interrupted rename-aside swap: if only
-    path+'.old' exists it is the complete table — restore it. Must
-    run BEFORE any read of `path` on a recovery path (self-review
-    r13: building a read plan over the missing path raises
-    PATH_NOT_FOUND before the healer inside the writer is ever
-    reached).
-
-    RACE-TOLERANT (ADVICE r17, hardened by tools/race_stress.py): a
-    reader's heal can observe the live maintainer's swap window —
-    path absent between rename(path→old) and rename(staging→path) —
-    and lose the restore race to the maintainer completing its swap
-    or to another reader's heal. The loss can surface as EITHER
-    rename error (ENOENT: someone moved `old` first; ENOTEMPTY:
-    `path` came back first), and a point-in-time guard is itself
-    racy — by the time this process re-checks, the live writer may
-    already have re-asided `path` for its NEXT swap (the TOCTOU the
-    stress tool caught at 5000 swaps × 8 healers). So: re-evaluate
-    the heal precondition and retry. A RACE cannot reproduce across
-    8 observations of a stable (old ∧ ¬path) state — races require
-    another process actively moving these dirs — so a persistent
-    failure on a stable state is a real filesystem error and
-    surfaces on the final attempt. The maintainer's side of the same
-    race is `_swap_aside`'s retry."""
-    import os
-
-    old = path + ".old"
-    for _ in range(8):
-        if not (os.path.exists(old) and not os.path.exists(path)):
-            return  # nothing to heal (or someone else already did)
-        try:
-            os.rename(old, path)
-            return
-        except OSError:
-            continue  # raced — re-check the precondition
-    if os.path.exists(old) and not os.path.exists(path):
-        os.rename(old, path)  # stable state + still failing: surface it
-
-
-def retire_sidecar(path: str) -> None:
-    """Remove a FOLDED sidecar together with its swap remnants: a
-    stale path+'.old' left by a _swap_write that crashed before its
-    final cleanup would be resurrected by the next heal_swap as live
-    state — e.g. re-inserted vectors silently vanishing because a
-    long-retired tombstone set came back (self-review r14)."""
-    for p in (path, path + ".old", path + ".staging"):
-        _claim_rmtree(p)
-
-
-def _swap_aside(live: str, staging: str) -> None:
-    """Publish a complete `staging` dir over `live` through the
-    rename-aside discipline, ROBUST to a racing reader heal
-    (ADVICE r17): a query node in ANOTHER process whose `heal_swap`
-    fires between this writer's rename(live→old) and
-    rename(staging→live) restores the superseded table into `live`,
-    failing the second rename (ENOTEMPTY). Since `staging` is still
-    complete, the restored dir is by construction the superseded
-    table — re-aside it and retry instead of aborting the
-    maintenance pass. Each retry consumes one reader's one-shot
-    heal, so the loop terminates against any finite set of racing
-    readers; exhausting it means a SECOND WRITER keeps re-creating
-    `live` (out of contract — every maintainer docstring pins ONE
-    maintenance process per artifact set) and raises with the
-    artifact set intact (live complete, staging complete — re-run
-    converges).
-
-    At every instant `live` or `live+'.old'` holds a complete table
-    (both, transiently, when a heal raced) — the invariant every
-    crash/heal path in this module relies on."""
-    import os
-    import shutil
-
-    old = live + ".old"
-    for _ in range(16):
-        if os.path.exists(live):
-            os.rename(live, old)
-        try:
-            os.rename(staging, live)
-        except OSError:
-            if os.path.isdir(staging) and os.path.exists(live):
-                continue  # racing heal restored old→live: re-aside
-            raise
-        _claim_rmtree(old)
-        return
-    raise RuntimeError(
-        f"swap of {live!r} kept losing the rename race — a second "
-        "maintainer process is writing the same artifact set (the "
-        f"contract is ONE); staging is complete at {staging!r} and "
-        "the live table is intact — stop the other writer and re-run"
-    )
-
-
-def _swap_write(df: DataFrame, path: str) -> None:
-    """Generic rename-aside swap rewrite: at every instant path or
-    path+'.old' is complete. Callers own sizing and layout — the
-    O(retracted) sidecars write through it directly; full-table
-    rewrites go through `_swap_write_table` (bucketed-layout
-    preserving) or the compactors' staging spellings, which handle
-    their own repartitioning (ADVICE r14: the old 'sidecars only'
-    docstring had drifted — fold_ivf_retractions and
-    compact_ivf_lists push the full inverted-lists table through
-    here). The final swap is `_swap_aside` — robust to a racing
-    reader heal (ADVICE r17)."""
-    import shutil
-
-    heal_swap(path)
-    _claim_rmtree(path + ".old")
-    staging = path + ".staging"
-    shutil.rmtree(staging, ignore_errors=True)
-    df.write.parquet(staging)
-    _swap_aside(path, staging)
-
-
 def live_members(
     spark: SparkSession, mem_path: str, sig_path: str
 ) -> DataFrame:
@@ -2494,7 +2268,7 @@ def live_members(
     (belt — a dropped group's members are all tombstoned by
     construction)."""
     m = read_table(spark, mem_path)
-    tomb = _read_sidecar(spark, tombstones_path(mem_path))
+    tomb = read_sidecar(spark, tombstones_path(mem_path))
     if tomb is not None:
         m = m.join(tomb.select("doc_id"), "doc_id", "left_anti")
     return _apply_gdelta(spark, m, sig_path, "group_id")
@@ -2528,7 +2302,7 @@ def _apply_gdelta(
     group-id column (flat sigs, members, the pruned index read):
     dropped groups' rows removed, re-elected groups relabeled. The
     sidecar is O(retracted groups) → broadcast."""
-    gd = _read_sidecar(spark, gdelta_path(sig_path))
+    gd = read_sidecar(spark, gdelta_path(sig_path))
     if gd is None:
         return df
     gd = F.broadcast(
@@ -2632,9 +2406,9 @@ def retract_docs(
     # members buckets (doc_id) this gdelta's fold must rewrite.
     # Written BEFORE the gdelta so any crash leaves keys ⊇ gdelta.
     gd_schema = "group_id long, new_group_id long"
-    old_gd = _read_sidecar(spark, gdelta_path(sig_path))
+    old_gd = read_sidecar(spark, gdelta_path(sig_path))
     keys_p = gdelta_keys_path(sig_path)
-    old_keys = _read_sidecar(spark, keys_p)
+    old_keys = read_sidecar(spark, keys_p)
     legacy_keys = old_gd is not None and old_keys is None
     if not legacy_keys:
         new_keys = (
@@ -2653,7 +2427,7 @@ def retract_docs(
         # localCheckpoint: the union's lineage reads the old sidecar
         # the swap below removes (the tombstone write's rule)
         new_keys = new_keys.localCheckpoint()
-        _swap_write(new_keys, keys_p)
+        commit(keys_p, new_keys.write.parquet)
     if old_gd is None:
         old_gd = spark.createDataFrame([], gd_schema)
     mapped = old_gd.join(
@@ -2668,14 +2442,14 @@ def retract_docs(
         "left_anti",
     ).select("group_id", "new_group_id")
     new_gd = old_keep.unionByName(mapped).unionByName(eff_entries)
-    _swap_write(new_gd, gdelta_path(sig_path))
+    commit(gdelta_path(sig_path), new_gd.write.parquet)
 
     tomb_path = tombstones_path(mem_path)
-    old_tomb = _read_sidecar(spark, tomb_path)
+    old_tomb = read_sidecar(spark, tomb_path)
     new_tomb = r.select("doc_id")
     if old_tomb is not None:
         new_tomb = new_tomb.unionByName(old_tomb.select("doc_id")).distinct()
-    _swap_write(new_tomb, tomb_path)
+    commit(tomb_path, new_tomb.write.parquet)
 
     for c in (ids, eff_changes):
         c.unpersist()
@@ -2686,239 +2460,17 @@ def retract_docs(
     }
 
 
-def heal_table_fold(path: str) -> None:
-    """Complete or roll back a crash-interrupted partition-granular
-    fold (`_granular_fold_rewrite`). The journal names the partition
-    dirs that were mid-swap: an aside dir ('.bfold-<leaf>') paired
-    with a MISSING live dir is the complete pre-fold partition —
-    restore it (rolling back is always safe: the retraction sidecars
-    are retired only after the entire fold succeeds, so pre-fold
-    content + sidecars IS the live view, and the fold re-run
-    converges — already-folded partitions hold no matching rows and
-    are not selected again); an aside paired with a present live dir
-    is a completed swap's remnant — drop it. No journal = one stat
-    call, so every read path affords the check.
-
-    SINGLE MAINTAINER, MANY READERS (ADVICE r16/r17): one fold
-    WRITER per table — two concurrent folds corrupt nothing but
-    abort each other (rename collisions; both converge on re-run).
-    Concurrent READERS in other processes are safe: this healer
-    tolerates losing its restore race to the live fold completing a
-    swap (`_restore_aside`), and the fold's per-partition swaps
-    retry through a racing heal (`_granular_fold_rewrite`'s bounded
-    retry) instead of aborting — a reader whose already-built scan
-    plan raced a swap sees FileNotFound and retries the read, the
-    standard rename-swap caveat.
-
-    An UNREADABLE journal (truncated/corrupt JSON — the writer
-    crashed inside the journal write) is recovered, not raised
-    (ADVICE r16): at that crash point no live partition has been
-    touched (staging is fully written before the journal; swaps
-    happen only after the journal is complete), so recovery is
-    'remove journal + staging, restore any aside dirs found by
-    glob' — and since the journal is now written atomically
-    (tmp + rename), asides can only be remnants of an EARLIER
-    completed heal, safe to restore-or-drop by the same rule."""
-    import glob
-    import json
-    import os
-    import shutil
-
-    j = os.path.join(path, _FOLD_JOURNAL)
-    if not os.path.exists(j):
-        return
-    try:
-        with open(j) as f:
-            jd = json.load(f)
-        rels = jd["dirs"]
-        if not isinstance(rels, list):
-            raise ValueError("journal dirs is not a list")
-    except FileNotFoundError:
-        # the exists()→open() window raced the live fold writer (or
-        # another healer) removing the journal — the fold completed;
-        # nothing to heal (tools/race_stress.py fold mode)
-        return
-    except (json.JSONDecodeError, KeyError, ValueError, TypeError):
-        jd = None
-    if jd is not None:
-        # LIVE-WRITER DISCRIMINATION (r18, tools/race_stress.py fold
-        # mode): a journal names an in-flight fold, and rolling back
-        # a LIVE one both aborts useful work and — under many hot
-        # readers — livelocks the fold entirely. The journal records
-        # the writer's pid; while that process is alive, WAIT for
-        # the swap phase to finish (journal removed — typically
-        # milliseconds) instead of rolling back. Rollback remains the
-        # recovery for a DEAD writer (crash) and, after the bounded
-        # wait, for a hung one — abort-then-converge as before. Pid
-        # liveness is same-host; a multi-host shared-storage
-        # deployment needs a lease service in its place (the module
-        # contract already pins one maintainer per artifact set).
-        pid = jd.get("pid")
-        if pid and _pid_alive(int(pid)):
-            import time as _time
-
-            for _ in range(200):  # ≤ 10 s: swap phases are ms-scale
-                _time.sleep(0.05)
-                if not os.path.exists(j):
-                    return  # the live fold finished its swap phase
-                try:
-                    with open(j) as f:
-                        jd2 = json.load(f)
-                    if jd2.get("pid") != pid:
-                        # a different fold owns the journal now —
-                        # restart against the fresh state
-                        return heal_table_fold(path)
-                except (FileNotFoundError, json.JSONDecodeError):
-                    return
-            # fall through: writer hung (or pid confusion) — roll back
-    if jd is None:
-        # corrupt journal: no swap has happened — drop journal +
-        # staging, restore any aside found on disk (missing live →
-        # it IS the partition; live present → stale remnant)
-        for aside in glob.glob(
-            os.path.join(path, "**", _BFOLD_PREFIX + "*"), recursive=True
-        ):
-            parent, leaf = os.path.split(aside)
-            live = os.path.join(parent, leaf[len(_BFOLD_PREFIX):])
-            _restore_aside(aside, live)
-        _claim_rmtree(path + ".bfold")
-        _remove_quiet(j)
-        return
-    for rel in rels:
-        parent, leaf = os.path.split(rel)
-        live = os.path.join(path, rel)
-        aside = os.path.join(path, parent, _BFOLD_PREFIX + leaf)
-        _restore_aside(aside, live)
-    # remove ONLY the staging dir THIS journal names (r18 stress
-    # finding): a healer acting on a stale journal must never fire
-    # its rmtree into a later attempt's staging. Legacy journals
-    # (no 'staging' key) used the fixed '.bfold' name.
-    stg = jd.get("staging")
-    _claim_rmtree(
-        os.path.join(os.path.dirname(path), stg)
-        if stg
-        else path + ".bfold"
-    )
-    _remove_quiet(j)
-
-
-def _restore_aside(aside: str, live: str) -> None:
-    """Restore one fold aside dir, tolerating the races concurrent
-    READERS are allowed to run (ADVICE r17 — heal fires on every
-    read path, so two query processes can heal the same crash
-    remnant, and a heal can fire inside the live fold's own swap
-    window): losing the rename race to the fold writer completing
-    its swap (`live` appears) or to another healer (`aside`
-    vanishes) means the partition already holds a complete state —
-    nothing left to heal. A point-in-time failure guard is itself
-    racy (heal_swap's TOCTOU, caught by tools/race_stress.py), so
-    the precondition is re-evaluated and retried; a persistent
-    failure on a stable state is a real error and surfaces."""
-    import os
-    import shutil
-
-    for _ in range(8):
-        if not os.path.isdir(aside):
-            return
-        if os.path.isdir(live):
-            _claim_rmtree(aside)
-            return
-        try:
-            os.rename(aside, live)
-            return
-        except OSError:
-            continue  # raced — re-check
-    if os.path.isdir(aside) and not os.path.isdir(live):
-        os.rename(aside, live)
-
-
-def _remove_quiet(p: str) -> None:
-    """os.remove tolerating a concurrent healer/writer having removed
-    the file first (two readers may heal the same journal)."""
-    import os
-
-    try:
-        os.remove(p)
-    except FileNotFoundError:
-        pass
-
-
-def _fold_staging_path(path: str) -> str:
-    """A UNIQUE staging dir per fold attempt, recorded in the
-    journal so healers only ever clean the staging of the fold they
-    actually observed (r18 stress finding, tools/race_stress.py fold
-    mode): with the old fixed `path + '.bfold'` name, a healer that
-    read an EARLIER aborted attempt's journal could fire its staging
-    rmtree into a LATER attempt's in-progress staging write."""
-    import os
-    import uuid
-
-    return f"{path}.bfold-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-
-
-def _clear_orphan_fold_staging(path: str) -> None:
-    """Writer-side entry cleanup: remove fold staging dirs with no
-    journal left to name them (a crashed attempt after its journal
-    was healed away), and orphaned publish-handoff dirs ('.bpub-*',
-    dot-prefixed so readers never see them — a crash between the
-    handoff rename and the publish leaves one; its live partition
-    still holds the pre-fold content, so dropping the orphan and
-    re-folding is the correct recovery). Single-maintainer territory
-    — only the fold writer calls this, and only BEFORE it begins
-    staging."""
-    import glob
-    import os
-    import shutil
-
-    if os.path.exists(os.path.join(path, _FOLD_JOURNAL)):
-        return  # a journal exists: heal first, don't guess
-    for d in glob.glob(path + ".bfold*"):
-        shutil.rmtree(d, ignore_errors=True)
-    for d in glob.glob(os.path.join(path, "**", ".bpub-*"), recursive=True):
-        shutil.rmtree(d, ignore_errors=True)
-    # reap crash-leaked claim-trash (`_claim_rmtree` died between its
-    # claim rename and the delete): inside the table (aside claims)
-    # and beside it (.old/staging claims) — all dot-prefixed, so
-    # readers never saw them
-    for d in glob.glob(os.path.join(path, "**", ".trash-*"), recursive=True):
-        shutil.rmtree(d, ignore_errors=True)
-    parent, leaf = os.path.split(path.rstrip("/"))
-    for d in glob.glob(os.path.join(parent, f".trash-{leaf}*")):
-        shutil.rmtree(d, ignore_errors=True)
-
-
-def _granular_fold_rewrite(
+def _publish_fold(
     path: str, staging: str, rels: list[str], emptied: set[str]
 ) -> None:
-    """Swap staged partition dirs into the live table under the fold
-    journal. `staging` (already fully written — no live state is
-    touched until the staged job has committed) holds the FOLDED
-    content of exactly the partitions named by `rels` (relative dirs
-    like 'pb=3' or 'band=2/kb=7'); a rel the fold EMPTIED has its
-    live dir retired. `emptied` is computed by the CALLER from the
-    folded frame's own lineage (distinct partition values — reads
-    the writer-owned live sources, never the staging dir), so no
-    amount of staging tampering by a racing healer can turn a
-    non-empty partition into a retire: tampering at worst fails the
-    staged-dir checks below and aborts (r18 stress finding — the
-    earlier staged-dir-absence inference lost a partition when a
-    stale healer gutted staging mid-write). Every
-    partition NOT in `rels` is left byte-invariant — the whole point
-    (VERDICT r15 #2: full-table rewrites made fold cost scale with
-    the bucket count instead of the retracted set). The journal is
-    written ATOMICALLY (tmp + rename, ADVICE r16) and names this
-    attempt's staging dir; on ANY failure the writer rolls its own
-    attempt back (asides restored, staging + journal gone), so an
-    abort never leaves a journal inviting healers into a future
-    attempt's state."""
-    import json
+    """`storage.publish_partitions` for a fold, keeping the marker's
+    cached row count exact at O(retracted) cost (VERDICT r17 #5):
+    footer-count only the affected partitions (pre-swap live vs
+    staged), invalidate the cache BEFORE any swap (a crash or a
+    raced abort leaves no stale number), and write the adjusted
+    count back only on success."""
     import os
-    import shutil
-    # keep the marker's cached row count exact through the fold at
-    # O(retracted) cost (VERDICT r17 #5): footer-count only the
-    # affected partitions (pre-swap live vs staged), invalidate the
-    # cache BEFORE any swap (a crash or a raced abort leaves no stale
-    # number), and write the adjusted count back only on success.
+
     prior = _marker_rows(path)
     delta = 0
     if prior is not None:
@@ -2930,156 +2482,9 @@ def _granular_fold_rewrite(
                 break
             delta += new_n - old_n
         _set_marker_rows(path, None)
-    # snapshot each staged partition's file set BEFORE the journal
-    # exists (until then no healer touches staging): a cross-process
-    # heal_table_fold rolling this fold back rmtree's the staging
-    # dir, and its in-flight deletion can GUT a staged partition's
-    # files in the instants before our rename publishes it — an
-    # isdir() check passes while the dir is already partial, and
-    # swapping a partial partition in would be silent row loss, not
-    # an abort. The post-swap verification below turns that
-    # interleaving into the documented abort-then-converge
-    # (tools/race_stress.py fold mode).
-    staged_files = {
-        rel: sorted(os.listdir(os.path.join(staging, rel)))
-        for rel in rels
-        if rel not in emptied
-    }
-    j = os.path.join(path, _FOLD_JOURNAL)
-    with open(j + ".tmp", "w") as f:
-        json.dump(
-            {
-                "dirs": rels,
-                "emptied": sorted(emptied),
-                "staging": os.path.basename(staging),
-                # writer liveness (r18): healers WAIT out a live
-                # fold's swap phase instead of rolling it back —
-                # rollback is for dead/hung writers
-                "pid": os.getpid(),
-            },
-            f,
-        )
-    os.rename(j + ".tmp", j)
-    try:
-        _fold_swap_loop(path, staging, rels, emptied, staged_files)
-    except BaseException:
-        # writer-side rollback: finish what a heal would do so NO
-        # journal survives this abort — a stale journal is what let
-        # a healer clean a FUTURE attempt's staging (the r18 stress
-        # loss chain). Already-swapped rels stay folded (consistent:
-        # sidecars are retired only after the whole fold succeeds);
-        # everything else is restored to its pre-fold content.
-        for rel in rels:
-            parent, leaf = os.path.split(rel)
-            _restore_aside(
-                os.path.join(path, parent, _BFOLD_PREFIX + leaf),
-                os.path.join(path, rel),
-            )
-            shutil.rmtree(
-                os.path.join(path, parent, ".bpub-" + leaf),
-                ignore_errors=True,
-            )
-        shutil.rmtree(staging, ignore_errors=True)
-        _remove_quiet(j)
-        raise
-    shutil.rmtree(staging, ignore_errors=True)
-    _remove_quiet(j)
+    publish_partitions(path, staging, rels, emptied)
     if prior is not None:
         _set_marker_rows(path, prior + delta)
-
-
-def _fold_swap_loop(
-    path: str,
-    staging: str,
-    rels: list[str],
-    emptied: set[str],
-    staged_files: dict[str, list[str]],
-) -> None:
-    import os
-    import shutil
-
-    for rel in rels:
-        parent, leaf = os.path.split(rel)
-        live = os.path.join(path, rel)
-        aside = os.path.join(path, parent, _BFOLD_PREFIX + leaf)
-        _claim_rmtree(aside)
-        staged = os.path.join(staging, rel)
-        if rel in emptied:
-            # fold emptied this partition: retire it. A racing heal
-            # can resurrect the aside into `live` before the rmtree
-            # lands — re-check and re-retire (otherwise the fold
-            # would REPORT success while the partition keeps its
-            # unfolded rows: wrong answers, not an abort).
-            for attempt in range(16):
-                if os.path.isdir(live):
-                    os.rename(live, aside)
-                _claim_rmtree(aside)
-                if not os.path.isdir(live):
-                    break
-            else:
-                raise RuntimeError(
-                    f"fold retire of {live!r} kept losing the rename "
-                    "race — a second maintenance process is folding "
-                    "the same table (the contract is ONE); re-run"
-                )
-            continue
-        # PUBLISH HANDOFF (r18 stress finding, the partial-publish
-        # loss chain): a racing heal's rollback rmtree's the staging
-        # tree, and a staged dir can be HALF-deleted at the instant
-        # we would publish it; the old spelling renamed it into
-        # `live` and verified after — but a concurrent heal then saw
-        # (aside ∧ live) and dropped the aside as a "completed swap
-        # remnant", deleting the only pre-fold copy before our
-        # rollback could use it. So: move the staged dir OUT of the
-        # healer-deletable staging tree first (after the rename, an
-        # in-flight rmtree holds only stale paths and can delete
-        # nothing more), verify the PRIVATE copy against the
-        # pre-journal snapshot, and only then touch `live`. A
-        # published live dir is therefore ALWAYS complete — which is
-        # exactly the invariant that makes the healer's
-        # 'live present ⇒ aside is a remnant' rule safe.
-        pub = os.path.join(path, parent, ".bpub-" + leaf)
-        shutil.rmtree(pub, ignore_errors=True)
-        try:
-            os.rename(staged, pub)
-        except OSError:
-            if not os.path.isdir(staged):
-                raise RuntimeError(
-                    f"fold staging for {rel!r} vanished mid-fold — a "
-                    "reader's heal_table_fold in another process "
-                    "rolled this fold back. The table is intact "
-                    "(pre-fold content + sidecars = the live view); "
-                    "re-run the fold"
-                )
-            raise
-        if sorted(os.listdir(pub)) != staged_files[rel]:
-            shutil.rmtree(pub, ignore_errors=True)
-            raise RuntimeError(
-                f"fold staging for {rel!r} was gutted mid-fold by a "
-                "reader's heal_table_fold in another process — the "
-                "live partition was never touched; re-run the fold"
-            )
-        # rename-aside with the `_swap_aside` retry (ADVICE r17): a
-        # reader's heal restoring the aside inside this window is
-        # re-asided and retried; `pub` is writer-private and verified
-        # complete, so the publish itself can no longer be gutted
-        for attempt in range(16):
-            if os.path.isdir(live):
-                os.rename(live, aside)
-            try:
-                os.rename(pub, live)
-            except OSError:
-                if os.path.isdir(pub) and os.path.isdir(live):
-                    continue
-                raise
-            _claim_rmtree(aside)
-            break
-        else:
-            raise RuntimeError(
-                f"fold swap of {live!r} kept losing the rename race — "
-                "a second maintenance process is folding the same "
-                "table (the contract is ONE); re-run the fold"
-            )
 
 
 def _fold_table_granular(
@@ -3197,8 +2602,7 @@ def _fold_table_granular(
             f"emptied={sorted(emptied)}",
             flush=True,
         )
-    _clear_orphan_fold_staging(path)
-    staging = _fold_staging_path(path)
+    staging = stage_partitions(path)
     (
         # carry the READ's own partition column through — bit-identical
         # layout by construction (the fold never changes a bucket key,
@@ -3208,7 +2612,7 @@ def _fold_table_granular(
         .mode("overwrite")
         .parquet(staging)
     )
-    _granular_fold_rewrite(path, staging, rels, emptied)
+    _publish_fold(path, staging, rels, emptied)
     return len(rels)
 
 
@@ -3297,15 +2701,14 @@ def _fold_index_granular(
         for r in folded.select("band", "kb").distinct().collect()
     }
     emptied = {rel for rel in rels if rel not in present}
-    _clear_orphan_fold_staging(band_path)
-    staging = _fold_staging_path(band_path)
+    staging = stage_partitions(band_path)
     (
         folded.repartition("band", "kb")
         .write.partitionBy("band", "kb")
         .mode("overwrite")
         .parquet(staging)
     )
-    _granular_fold_rewrite(band_path, staging, rels, emptied)
+    _publish_fold(band_path, staging, rels, emptied)
     return len(rels)
 
 
@@ -3341,7 +2744,7 @@ def fold_retractions(
     # heal crash-interrupted swaps FIRST: a prior fold (or sidecar
     # write) that died mid-rename leaves only path+'.old' (or a
     # granular fold's journal + aside dirs), and the live-view read
-    # plans below would raise PATH_NOT_FOUND before _swap_write's
+    # plans below would raise PATH_NOT_FOUND before commit's
     # own healer ran (self-review r13 finding #2)
     for p in (sig_path, mem_path, band_path):
         heal_swap(p)
@@ -3350,9 +2753,9 @@ def fold_retractions(
     keys_p = gdelta_keys_path(sig_path)
     for p in (gd_p, tomb_p):
         heal_swap(p)
-    gd = _read_sidecar(spark, gd_p)
-    tomb = _read_sidecar(spark, tomb_p)
-    keys = _read_sidecar(spark, keys_p)
+    gd = read_sidecar(spark, gd_p)
+    tomb = read_sidecar(spark, tomb_p)
+    keys = read_sidecar(spark, keys_p)
     if gd is None and tomb is None:
         return {"folded": False}
     lay = banded_layout(band_path)
@@ -3424,98 +2827,6 @@ def fold_retractions(
     for p in (gd_p, tomb_p, keys_p):
         retire_sidecar(p)
     return stats
-
-
-def ivf_tombstones_path(lists_path: str) -> str:
-    return lists_path.rstrip("/") + "_tombstones"
-
-
-def _lists_id_col(lists: DataFrame) -> str:
-    """The vector-id column of an inverted-lists table: ann_store
-    writes (n_id, list_id); accept vec_id too for externally built
-    tables (the CLI takes an arbitrary --lists path)."""
-    return "n_id" if "n_id" in lists.columns else "vec_id"
-
-
-def live_ivf_lists(spark: SparkSession, lists_path: str) -> DataFrame:
-    """The inverted-lists table with retractions applied: tombstoned
-    vec_ids removed. The sidecar is O(retracted) → broadcast — the
-    same composition rule as `live_members`, so EVERY lists reader
-    (search, probe-recall, refresh, split, compaction) sees the
-    post-takedown index without a single physical rewrite."""
-    heal_swap(lists_path)
-    lists = spark.read.parquet(lists_path)
-    tomb = _read_sidecar(spark, ivf_tombstones_path(lists_path))
-    if tomb is None:
-        return lists
-    idc = _lists_id_col(lists)
-    return lists.join(
-        F.broadcast(tomb.select(F.col("vec_id").alias(idc))), idc, "left_anti"
-    )
-
-
-def retract_ivf_vectors(
-    spark: SparkSession, lists_path: str, ids: DataFrame
-) -> dict:
-    """The IVF sibling of `retract_docs` — O(retracted), never
-    O(index) (VERDICT r13 #2: the previous full read→anti-join→swap
-    rewrite was a full-index write per takedown batch): merge the
-    retracted vec_ids into a tombstone sidecar beside the lists
-    table; the physical lists are untouched, readers compose the
-    sidecar (`live_ivf_lists`), and `fold_ivf_retractions` (run by
-    compact-store / refresh-ivf, which rewrite the lists anyway)
-    retires it. The codebook keeps its centroids — vanished-list ids
-    never drop, matching refresh_ivf_centroids' rule — and recall
-    drift from the now-stale centroids is what `probe-recall` exists
-    to catch. Same crash-safe swap as the text sidecars."""
-    ids = ids.select(F.col("doc_id").alias("vec_id")).distinct()
-    tomb_path = ivf_tombstones_path(lists_path)
-    heal_swap(tomb_path)
-    old_tomb = _read_sidecar(spark, tomb_path)
-    new_tomb = ids
-    if old_tomb is not None:
-        new_tomb = new_tomb.unionByName(old_tomb.select("vec_id")).distinct()
-    # localCheckpoint before the swap: new_tomb's lineage reads the
-    # OLD sidecar, which the swap removes (same hazard retract_docs'
-    # tombstone write had — ADVICE r13)
-    new_tomb = new_tomb.localCheckpoint()
-    n_total = new_tomb.count()
-    _swap_write(new_tomb, tomb_path)
-    return {"tombstoned": n_total}
-
-
-def fold_ivf_retractions(spark: SparkSession, lists_path: str) -> dict:
-    """Fold the IVF tombstone sidecar into the physical lists table
-    and retire it — the compaction-time companion to
-    `retract_ivf_vectors`, mirroring `fold_retractions`: one swap
-    rewrite of the lists (the only O(index) write, amortized into the
-    maintenance pass that rewrites them anyway), sidecar deleted
-    LAST. A codes sibling (`<lists>_codes`,
-    ann_store.ivf_codes_path's convention) is folded in the same
-    pass — the takedown contract covers the taken-down vectors'
-    DERIVED representations, not just their list membership
-    (VERDICT r14). A crash between the steps leaves tombstones that
-    match nothing — harmless, and the re-run retires them. No-op
-    when no sidecar exists."""
-    import os
-
-    heal_swap(lists_path)
-    tomb_path = ivf_tombstones_path(lists_path)
-    tomb = _read_sidecar(spark, tomb_path)
-    if tomb is None:
-        return {"folded": False}
-    _swap_write(live_ivf_lists(spark, lists_path), lists_path)
-    codes_p = lists_path.rstrip("/") + "_codes"
-    heal_swap(codes_p)
-    if os.path.isdir(codes_p):
-        _swap_write(
-            spark.read.parquet(codes_p).join(
-                tomb.select("vec_id"), "vec_id", "left_anti"
-            ),
-            codes_p,
-        )
-    retire_sidecar(tomb_path)
-    return {"folded": True}
 
 
 # ------------------------------ retraction invariance proof ops

@@ -56,6 +56,27 @@ def scoped_shuffle_partitions(spark: SparkSession, n: int):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
+def overlap(background, foreground) -> None:
+    """Run `background()` on a worker thread while `foreground()`
+    runs on this one, so independent Spark jobs back-fill each
+    other's stragglers; return once both are done. The foreground's
+    error wins: a background error raised alongside it is chained as
+    its cause instead of replacing it, and a background error alone
+    is raised as itself."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        bg = pool.submit(background)
+        try:
+            foreground()
+        except BaseException as err:
+            bg_err = bg.exception()
+            if bg_err is not None:
+                raise err from bg_err
+            raise
+        bg.result()
+
+
 def tune(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable confs to a session we didn't build
     (e.g. the driver's). Only touches dynamically settable keys."""

@@ -9,8 +9,8 @@ the per-type value quantiles (the batch analog is
 (event_type, bin) with a count, the merge operator is per-bin SUM —
 commutative and associative, so ANY batch slicing of the stream
 yields the identical state (NOT idempotent, like the Summing rollup
-and unlike HLL's MAX: exactly-once delivery is the transport's job
-here).
+and unlike HLL's MAX: the batch-id watermark of sinks/state.py makes
+a replayed batch a no-op).
 
 Scale shape: each micro-batch reduces map-side to O(types × bins)
 rows before anything is read or merged; the stored state is bounded
@@ -22,13 +22,11 @@ counts).
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.sketches import _QH_QS, _QH_WIDTH
+from .state import foreach_batch, merge_state, read_state
 
 _KEYS = ["event_type", "b"]
 
@@ -47,25 +45,19 @@ def batch_bins(df: DataFrame) -> DataFrame:
     )
 
 
+def _sum_bins(df: DataFrame) -> DataFrame:
+    """Per-bin SUM — the quantileMerge background step, done
+    eagerly."""
+    return df.groupBy(*_KEYS).agg(F.sum("c").alias("c"))
+
+
 def merge_hist(spark: SparkSession, path: str, batch: DataFrame) -> None:
-    """Merge a batch's bins into the stored state (per-bin SUM — the
-    quantileMerge background step, done eagerly; write-then-swap
-    commit like the sibling sinks)."""
-    agg = batch_bins(batch)
-    if os.path.exists(path):
-        state = spark.read.parquet(path)
-        agg = state.unionByName(agg).groupBy(*_KEYS).agg(F.sum("c").alias("c"))
-    agg.write.mode("overwrite").parquet(path + ".new")
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    os.rename(path + ".new", path)
+    """Merge a batch's bins into the stored state."""
+    merge_state(spark, path, batch_bins(batch), _sum_bins)
 
 
 def foreach_batch_hist(path: str):
-    def _fn(batch_df: DataFrame, batch_id: int) -> None:
-        merge_hist(batch_df.sparkSession, path, batch_df)
-
-    return _fn
+    return foreach_batch(path, batch_bins, _sum_bins)
 
 
 def read_quantiles(spark: SparkSession, path: str) -> DataFrame:
@@ -74,7 +66,7 @@ def read_quantiles(spark: SparkSession, path: str) -> DataFrame:
     operators/sketches.py::value_quantile_hist's finalize verbatim
     (constants shared by import), so the streamed estimate is
     bit-identical to the batch sketch — and to the DuckDB oracle."""
-    bins = spark.read.parquet(path)
+    bins = read_state(spark, path)
     w_cum = (
         Window.partitionBy("event_type")
         .orderBy("b")

@@ -24,9 +24,6 @@ the merge, so the sink's cost is flat at 100 TB.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -38,6 +35,7 @@ from ..operators.sketches import (
     _HLL_RHO_MAX,
     _HLL_SCALE,
 )
+from .state import foreach_batch, merge_state, read_state
 
 _KEYS = ["event_type", "bucket"]
 
@@ -67,32 +65,26 @@ def batch_registers(df: DataFrame) -> DataFrame:
     )
 
 
+def _max_registers(df: DataFrame) -> DataFrame:
+    """Per-register MAX — the uniqMerge step, done eagerly."""
+    return df.groupBy(*_KEYS).agg(F.max("m").alias("m"))
+
+
 def merge_hll(spark: SparkSession, path: str, batch: DataFrame) -> None:
-    """Merge a batch's register state into the stored state
-    (per-register MAX — the uniqMerge step, done eagerly). Idempotent:
-    re-merging an already-absorbed batch is a no-op."""
-    agg = batch_registers(batch)
-    if os.path.exists(path):
-        state = spark.read.parquet(path)
-        agg = state.unionByName(agg).groupBy(*_KEYS).agg(F.max("m").alias("m"))
-    agg.write.mode("overwrite").parquet(path + ".new")
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    os.rename(path + ".new", path)
+    """Merge a batch's register state into the stored state.
+    Idempotent: re-merging an already-absorbed batch is a no-op."""
+    merge_state(spark, path, batch_registers(batch), _max_registers)
 
 
 def foreach_batch_hll(path: str):
-    def _fn(batch_df: DataFrame, batch_id: int) -> None:
-        merge_hll(batch_df.sparkSession, path, batch_df)
-
-    return _fn
+    return foreach_batch(path, batch_registers, _max_registers)
 
 
 def read_estimate(spark: SparkSession, path: str) -> DataFrame:
     """uniqMerge + finalize: fold the stored registers into the
     distinct-count estimate (identical expression to the batch HLL
     query in operators/sketches.py)."""
-    regs = spark.read.parquet(path)
+    regs = read_state(spark, path)
     per_type = regs.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("present"),
         F.sum(

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import storage
+
 
 def write_mergetree(
     df: DataFrame,
@@ -24,6 +26,9 @@ def write_mergetree(
     time_col: str = "time",
     mode: str = "append",
 ) -> None:
+    # an append into a partition a crashed optimize left aside would
+    # turn the aside into a "completed swap remnant": heal first
+    storage.heal_table_fold(path)
     out = df.withColumn(
         "yyyymm", (F.year(time_col) * 100 + F.month(time_col)).cast("int")
     )
@@ -37,6 +42,8 @@ def write_mergetree(
 
 
 def read_mergetree(spark: SparkSession, path: str) -> DataFrame:
+    # complete or roll back a crashed optimize before planning the scan
+    storage.heal_table_fold(path)
     return spark.read.parquet(path)
 
 
@@ -62,29 +69,34 @@ def optimize_mergetree(
     `time_col` is tight again (appends interleave time ranges,
     widening every row group's stats).
 
-    Partition-parallel and safe: each partition directory rewrites
-    through a staging path, so a crash leaves either the old or the
-    new layout, never a mix. Returns {partition: files_before} for
-    observability."""
+    Each compacted partition is written to a staging dir BESIDE the
+    table (invisible to readers) and published on its own through
+    `storage.publish_partitions`, so a reader sees each partition
+    either old or compacted — never both, never neither — and a
+    crash at any point is healed by the next `read_mergetree`.
+    Compaction leaves a partition's rows unchanged, so partitions
+    need no common publish: the extra disk is one partition, and a
+    failure keeps the partitions already compacted. Untouched
+    partitions stay byte-invariant. SINGLE MAINTAINER: appends must
+    not run concurrently with an optimize. Returns
+    {partition: files_before} for observability."""
     import glob
     import os
-    import shutil
 
+    storage.heal_table_fold(path)
     stats: dict[str, int] = {}
     for part_dir in sorted(glob.glob(os.path.join(path, "yyyymm=*"))):
         part = os.path.basename(part_dir)
         files = glob.glob(os.path.join(part_dir, "*.parquet"))
         if len(files) <= target_files_per_partition:
             continue
-        stats[part] = len(files)
-        staging = part_dir + ".compact"
+        staging = storage.stage_partitions(path)
         (
             spark.read.parquet(part_dir)
             .repartition(target_files_per_partition)
             .sortWithinPartitions(time_col)
-            .write.mode("overwrite")
-            .parquet(staging)
+            .write.parquet(os.path.join(staging, part))
         )
-        shutil.rmtree(part_dir)
-        os.rename(staging, part_dir)
+        storage.publish_partitions(path, staging, [part])
+        stats[part] = len(files)
     return stats

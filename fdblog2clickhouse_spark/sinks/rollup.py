@@ -5,8 +5,8 @@ trace table so per-bucket aggregates stay cheap (the reference's
 README promises exactly this rollup-style consumption of the ingested
 events — reference README.md:139-141). Spark-native equivalent: a
 parquet rollup table maintained per micro-batch by MERGING the new
-batch's partial aggregate with the stored aggregate and rewriting
-only affected partitions' state.
+batch's partial aggregate with the stored aggregate and replacing
+the (groups-sized) state table.
 
 Scale shape: each batch aggregates map-side to one row per touched
 group before anything is read or shuffled; the stored rollup is
@@ -14,15 +14,17 @@ O(groups), not O(events), so the merge join is a groups-sized
 aggregate regardless of stream volume. All measures are exact BIGINT
 sums/counts (order- and batch-boundary-independent by commutativity),
 so ANY batch slicing of the input yields the identical rollup — the
-unit tests assert 1-batch ≡ 2-batch ≡ N-batch.
+unit tests assert 1-batch ≡ 2-batch ≡ N-batch. SUM is not idempotent,
+so a replayed batch would double-count; the merge and its batch-id
+watermark live in sinks/state.py, which skips replays.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .state import foreach_batch, merge_state, read_state
 
 # rollup grain: (yyyymm, severity, type) — the reference's partition
 # law crossed with the severity/type analysis axes.
@@ -45,43 +47,26 @@ def batch_rollup(df: DataFrame) -> DataFrame:
     )
 
 
-def merge_rollup(spark: SparkSession, path: str, batch: DataFrame) -> None:
-    """Merge one batch's partial aggregate into the stored rollup:
-    read state, union, re-aggregate (sum-of-sums — the SummingMergeTree
-    background merge, done eagerly), atomically replace via
-    write-then-rename. Exact integer measures make the merge
-    associative: state never depends on batch boundaries."""
-    agg = batch_rollup(batch)
-    if os.path.exists(path):
-        state = spark.read.parquet(path)
-        agg = (
-            state.unionByName(agg)
-            .groupBy(*_KEYS)
-            .agg(
-                F.sum("n_events").alias("n_events"),
-                F.sum("value_c").alias("value_c"),
-            )
-        )
-    # write-then-swap: the merged state is written next to the live
-    # dir (reading `path` while writing `path.new` is safe), then
-    # renamed over — the portable local/HDFS-style commit.
-    import shutil
+def _sum_measures(df: DataFrame) -> DataFrame:
+    """Sum-of-sums — the SummingMergeTree background merge, done
+    eagerly. Exact integer measures make it associative: state never
+    depends on batch boundaries."""
+    return df.groupBy(*_KEYS).agg(
+        F.sum("n_events").alias("n_events"),
+        F.sum("value_c").alias("value_c"),
+    )
 
-    agg.write.mode("overwrite").parquet(path + ".new")
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    os.rename(path + ".new", path)
+
+def merge_rollup(spark: SparkSession, path: str, batch: DataFrame) -> None:
+    """Merge one batch's partial aggregate into the stored rollup."""
+    merge_state(spark, path, batch_rollup(batch), _sum_measures)
 
 
 def foreach_batch_rollup(path: str):
     """foreachBatch hook: attach the rollup maintenance to any
-    streaming ingest (`.writeStream.foreachBatch(...)`)."""
-
-    def _fn(batch_df: DataFrame, batch_id: int) -> None:
-        merge_rollup(batch_df.sparkSession, path, batch_df)
-
-    return _fn
+    streaming ingest (`.writeStream.foreachBatch(...)`), exactly once
+    per batch id."""
+    return foreach_batch(path, batch_rollup, _sum_measures)
 
 
-def read_rollup(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+read_rollup = read_state

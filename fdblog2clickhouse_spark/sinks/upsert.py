@@ -17,10 +17,12 @@ is one window over O(keys + batch) rows, partitioned by key hash.
 
 from __future__ import annotations
 
-import os
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from .state import foreach_batch, merge_state, read_state
 
 
 def latest_per_key(
@@ -45,38 +47,16 @@ def merge_upsert(
     version: str,
     tiebreak: str,
 ) -> None:
-    """Merge one batch into the stored latest-state table
-    (write-then-swap, same commit shape as sinks/rollup.py)."""
-    new_state = latest_per_key(batch, keys, version, tiebreak)
-    if os.path.exists(path):
-        state = spark.read.parquet(path)
-        new_state = latest_per_key(
-            state.unionByName(new_state), keys, version, tiebreak
-        )
-    import shutil
-
-    new_state.write.mode("overwrite").parquet(path + ".new")
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    os.rename(path + ".new", path)
+    """Merge one batch into the stored latest-state table."""
+    latest = partial(latest_per_key, keys=keys, version=version, tiebreak=tiebreak)
+    merge_state(spark, path, latest(batch), latest)
 
 
 def foreach_batch_upsert(path: str, *, keys: list[str], version: str, tiebreak: str):
     """foreachBatch hook: attach latest-state maintenance to a
     streaming ingest."""
-
-    def _fn(batch_df: DataFrame, batch_id: int) -> None:
-        merge_upsert(
-            batch_df.sparkSession,
-            path,
-            batch_df,
-            keys=keys,
-            version=version,
-            tiebreak=tiebreak,
-        )
-
-    return _fn
+    latest = partial(latest_per_key, keys=keys, version=version, tiebreak=tiebreak)
+    return foreach_batch(path, latest, latest)
 
 
-def read_upsert(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+read_upsert = read_state

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+from fdblog2clickhouse_spark import storage
 from fdblog2clickhouse_spark.operators import ann_store, similarity
 from tests.oracle import compare
 
@@ -401,7 +402,7 @@ def test_store_search_composes_tombstones(spark, sf_oracle):
     import os
 
     from fdblog2clickhouse_spark.operators.dedup import _quantized
-    from fdblog2clickhouse_spark.operators.dedup_store import (
+    from fdblog2clickhouse_spark.operators.ann_store import (
         ivf_tombstones_path,
         retract_ivf_vectors,
     )
@@ -483,9 +484,7 @@ def test_split_ignores_tombstoned_vectors(spark, tmp_path):
     split gates/assigns on the live view, and the retracted row is
     physically dropped from the rewritten split list while the
     sidecar keeps filtering untouched lists."""
-    from fdblog2clickhouse_spark.operators.dedup_store import (
-        retract_ivf_vectors,
-    )
+    from fdblog2clickhouse_spark.operators.ann_store import retract_ivf_vectors
 
     qn = _skew_fixture_qn(spark)
     cb, li = _skew_index(spark, tmp_path, qn)
@@ -512,7 +511,7 @@ def test_refresh_folds_tombstones(spark, tmp_path):
     vector is physically gone."""
     import os
 
-    from fdblog2clickhouse_spark.operators.dedup_store import (
+    from fdblog2clickhouse_spark.operators.ann_store import (
         ivf_tombstones_path,
         retract_ivf_vectors,
     )
@@ -615,7 +614,7 @@ def test_compact_ivf_lists_skips_when_compact_and_no_sidecar(spark, tmp_path):
     import glob
     import os
 
-    from fdblog2clickhouse_spark.operators.dedup_store import (
+    from fdblog2clickhouse_spark.operators.ann_store import (
         ivf_tombstones_path,
         retract_ivf_vectors,
     )
@@ -660,9 +659,7 @@ def test_ivfpq_store_search_composes_tombstones(spark, sf_oracle):
     import os
 
     from fdblog2clickhouse_spark.operators.dedup import _quantized
-    from fdblog2clickhouse_spark.operators.dedup_store import (
-        retract_ivf_vectors,
-    )
+    from fdblog2clickhouse_spark.operators.ann_store import retract_ivf_vectors
     from fdblog2clickhouse_spark.operators.sinkcheck import scratch_path
     from fdblog2clickhouse_spark.operators.similarity import _N_QUERIES
     from pyspark.sql import functions as F
@@ -714,7 +711,7 @@ def _toy_codes_index(spark, tmp_path):
 def test_compact_folds_takedown_into_codes(spark, tmp_path):
     import os
 
-    from fdblog2clickhouse_spark.operators.dedup_store import (
+    from fdblog2clickhouse_spark.operators.ann_store import (
         ivf_tombstones_path,
         retract_ivf_vectors,
     )
@@ -737,7 +734,7 @@ def test_compact_folds_takedown_into_codes(spark, tmp_path):
 def test_fold_ivf_retractions_folds_codes(spark, tmp_path):
     import os
 
-    from fdblog2clickhouse_spark.operators.dedup_store import (
+    from fdblog2clickhouse_spark.operators.ann_store import (
         fold_ivf_retractions,
         retract_ivf_vectors,
     )
@@ -763,9 +760,7 @@ def test_refresh_reencodes_persisted_codes(spark, sf_smoke, tmp_path):
     from pyspark.sql.functions import broadcast
 
     from fdblog2clickhouse_spark.operators.dedup import _quantized
-    from fdblog2clickhouse_spark.operators.dedup_store import (
-        retract_ivf_vectors,
-    )
+    from fdblog2clickhouse_spark.operators.ann_store import retract_ivf_vectors
 
     qn = _quantized(spark, sf_smoke).cache()
     cb = str(tmp_path / "codebook")
@@ -856,9 +851,7 @@ def test_filtered_search_prefilters_and_composes_tombstones(
     from pyspark.sql import functions as F
 
     from fdblog2clickhouse_spark.operators.dedup import _quantized
-    from fdblog2clickhouse_spark.operators.dedup_store import (
-        retract_ivf_vectors,
-    )
+    from fdblog2clickhouse_spark.operators.ann_store import retract_ivf_vectors
 
     qn = _quantized(spark, sf_oracle).cache()
     cb = str(tmp_path / "codebook")
@@ -1070,7 +1063,7 @@ def test_ivf_insert_respects_pending_tombstones(spark, sf_smoke, tmp_path):
     after the fold the id admits fresh."""
     from pyspark.sql import functions as F
 
-    from fdblog2clickhouse_spark.operators.dedup_store import (
+    from fdblog2clickhouse_spark.operators.ann_store import (
         fold_ivf_retractions,
         retract_ivf_vectors,
     )
@@ -1087,7 +1080,7 @@ def test_ivf_insert_respects_pending_tombstones(spark, sf_smoke, tmp_path):
     # redelivery while the tombstone is pending: skipped, not revived
     r2 = ann_store.ivf_insert_batch(spark, batch, cb, lists)
     assert r2["vectors"] == 0 and r2["skipped"] == r1["vectors"]
-    from fdblog2clickhouse_spark.operators.dedup_store import live_ivf_lists
+    from fdblog2clickhouse_spark.operators.ann_store import live_ivf_lists
 
     assert live_ivf_lists(spark, lists).where(
         F.col("n_id") == vid
@@ -1354,7 +1347,7 @@ def test_ivf_lifecycle_random_ops_match_model(spark, tmp_path, seed):
 
     from pyspark.sql import functions as F
 
-    from fdblog2clickhouse_spark.operators.dedup_store import (
+    from fdblog2clickhouse_spark.operators.ann_store import (
         fold_ivf_retractions,
         live_ivf_lists,
         retract_ivf_vectors,
@@ -1540,7 +1533,7 @@ def test_auto_compact_fold_retires_tombstones_mid_insert_loop(
 
     from pyspark.sql import functions as F
 
-    from fdblog2clickhouse_spark.operators.dedup_store import (
+    from fdblog2clickhouse_spark.operators.ann_store import (
         ivf_tombstones_path,
         live_ivf_lists,
         retract_ivf_vectors,
@@ -1596,8 +1589,6 @@ def test_swap_survives_racing_heal(spark, sf_smoke, tmp_path, monkeypatch):
     ENOTEMPTY abort) and search results are unchanged."""
     import os
 
-    from fdblog2clickhouse_spark.operators import dedup_store
-
     qn, cb, lists, batch = _build_ivfpq_fixture(spark, sf_smoke, tmp_path)
     ann_store.ivf_insert_batch(spark, batch, cb, lists)
     want = sorted(
@@ -1614,7 +1605,7 @@ def test_swap_survives_racing_heal(spark, sf_smoke, tmp_path, monkeypatch):
         real_rename(src, dst)
         if src == lists and dst == lists + ".old" and not fired:
             fired.append(1)
-            dedup_store.heal_swap(lists)  # the query node's heal
+            storage.heal_swap(lists)  # the query node's heal
 
     monkeypatch.setattr(os, "rename", racing)
     res = ann_store.compact_ivf_lists(spark, lists, n_files=1)
@@ -1642,8 +1633,6 @@ def test_second_writer_aborts_not_corrupts(spark, sf_smoke, tmp_path, monkeypatc
 
     import pytest
 
-    from fdblog2clickhouse_spark.operators import dedup_store
-
     qn, cb, lists, batch = _build_ivfpq_fixture(spark, sf_smoke, tmp_path)
     ann_store.ivf_insert_batch(spark, batch, cb, lists)
     want = sorted(
@@ -1658,7 +1647,7 @@ def test_second_writer_aborts_not_corrupts(spark, sf_smoke, tmp_path, monkeypatc
     def always_racing(src, dst):
         real_rename(src, dst)
         if src == lists and dst == lists + ".old":
-            dedup_store.heal_swap(lists)
+            storage.heal_swap(lists)
 
     monkeypatch.setattr(os, "rename", always_racing)
     with pytest.raises(RuntimeError, match="second"):
@@ -1693,7 +1682,6 @@ def test_maybe_compact_single_codes_rewrite_when_fold_runs(
     pending takedown it already rewrites the codes sibling —
     maybe_compact_ivf_lists must not pay a second O(codes) rewrite
     in the same pass."""
-    from fdblog2clickhouse_spark.operators import dedup_store
 
     qn, cb, lists, batch = _build_ivfpq_fixture(spark, sf_smoke, tmp_path)
     ann_store.ivf_insert_batch(
@@ -1701,19 +1689,18 @@ def test_maybe_compact_single_codes_rewrite_when_fold_runs(
     )
     # a pending takedown → the triggered compaction is also a fold
     victim = spark.read.parquet(lists).limit(1)
-    dedup_store.retract_ivf_vectors(
+    ann_store.retract_ivf_vectors(
         spark, lists, victim.select(victim.n_id.alias("doc_id"))
     )
 
     calls = []
-    real = dedup_store._swap_write
+    real = storage.commit
 
-    def counting(df, path):
+    def counting(path, write):
         calls.append(path)
-        real(df, path)
+        real(path, write)
 
-    monkeypatch.setattr(dedup_store, "_swap_write", counting)
-    # also patch the name ann_store's functions import lazily
+    monkeypatch.setattr(storage, "commit", counting)
     out = ann_store.maybe_compact_ivf_lists(spark, lists, trigger_files=0)
     assert out["compacted"] is True
     codes_p = ann_store.ivf_codes_path(lists)

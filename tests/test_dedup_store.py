@@ -12,7 +12,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from fdblog2clickhouse_spark.operators import dedup_store
+from fdblog2clickhouse_spark import storage
+from fdblog2clickhouse_spark.operators import ann_store, dedup_store
 from tests.oracle import compare
 
 
@@ -195,7 +196,7 @@ def test_compaction_crash_recovery(spark, tmp_path):
     assert sorted(r["doc_id"] for r in spark.read.parquet(p).collect()) == rows
     assert not os.path.exists(p + ".old")
     # and a stale staging dir from an earlier crash is inert
-    shutil.copytree(p, p + ".compact")
+    shutil.copytree(p, p + storage.STAGING)
     dedup_store.compact_signature_store(spark, p, sort_col="bk0")
     assert sorted(r["doc_id"] for r in spark.read.parquet(p).collect()) == rows
 
@@ -1350,34 +1351,34 @@ def test_retract_ivf_vectors(spark, tmp_path):
     ).write.parquet(lists)
     files_before = sorted(os.listdir(lists))
 
-    stats = dedup_store.retract_ivf_vectors(spark, lists, _ids(spark, 2, 3, 99))
+    stats = ann_store.retract_ivf_vectors(spark, lists, _ids(spark, 2, 3, 99))
     assert stats == {"tombstoned": 3}  # 99 tombstones too (never indexed)
     # physical table untouched — the whole point of the sidecar
     assert sorted(os.listdir(lists)) == files_before
     assert spark.read.parquet(lists).count() == 4
     live = {
         (r["list_id"], r["vec_id"])
-        for r in dedup_store.live_ivf_lists(spark, lists).collect()
+        for r in ann_store.live_ivf_lists(spark, lists).collect()
     }
     assert live == {(0, 1), (1, 4)}
 
     # a second retraction composes (sidecar union), still no rewrite
-    stats = dedup_store.retract_ivf_vectors(spark, lists, _ids(spark, 1, 2))
+    stats = ann_store.retract_ivf_vectors(spark, lists, _ids(spark, 1, 2))
     assert stats == {"tombstoned": 4}
     assert sorted(os.listdir(lists)) == files_before
     assert {
         (r["list_id"], r["vec_id"])
-        for r in dedup_store.live_ivf_lists(spark, lists).collect()
+        for r in ann_store.live_ivf_lists(spark, lists).collect()
     } == {(1, 4)}
 
     # fold: one rewrite, sidecar retired, live view unchanged
-    assert dedup_store.fold_ivf_retractions(spark, lists) == {"folded": True}
-    assert not os.path.isdir(dedup_store.ivf_tombstones_path(lists))
+    assert ann_store.fold_ivf_retractions(spark, lists) == {"folded": True}
+    assert not os.path.isdir(ann_store.ivf_tombstones_path(lists))
     assert {
         (r["list_id"], r["vec_id"]) for r in spark.read.parquet(lists).collect()
     } == {(1, 4)}
     # idempotent: folding again is a no-op
-    assert dedup_store.fold_ivf_retractions(spark, lists) == {"folded": False}
+    assert ann_store.fold_ivf_retractions(spark, lists) == {"folded": False}
 
 
 def test_rep_admission_redelivered_tombstoned_doc(spark, tmp_path):
@@ -1752,7 +1753,7 @@ def test_retract_rerun_after_crashed_sidecar_swap_keeps_old_tombstones(
     sig, bands, mem = _build_rep_store(spark, tmp_path)
     dedup_store.retract_docs(spark, sig, mem, _ids(spark, 3))
     tomb = dedup_store.tombstones_path(mem)
-    # crash inside _swap_write: live dir renamed aside, staging lost
+    # crash inside storage.commit: live dir renamed aside, staging lost
     os.rename(tomb, tomb + ".old")
 
     dedup_store.retract_docs(spark, sig, mem, _ids(spark, 4))
@@ -1774,19 +1775,19 @@ def test_live_ivf_lists_heals_crashed_sidecar_swap(spark, tmp_path):
     spark.createDataFrame(
         [(0, 1), (0, 2), (1, 3)], "list_id int, vec_id long"
     ).write.parquet(lists)
-    dedup_store.retract_ivf_vectors(spark, lists, _ids(spark, 2))
-    tomb = dedup_store.ivf_tombstones_path(lists)
+    ann_store.retract_ivf_vectors(spark, lists, _ids(spark, 2))
+    tomb = ann_store.ivf_tombstones_path(lists)
     os.rename(tomb, tomb + ".old")
 
     live = {
-        r["vec_id"] for r in dedup_store.live_ivf_lists(spark, lists).collect()
+        r["vec_id"] for r in ann_store.live_ivf_lists(spark, lists).collect()
     }
     assert live == {1, 3}  # the takedown still filters
 
 
 def test_sidecar_retirement_removes_swap_remnants(spark, tmp_path):
     """Self-review r14: retiring a folded sidecar must also remove a
-    stale .old left by a _swap_write that crashed before its final
+    stale .old left by a storage.commit that crashed before its final
     cleanup — the next heal would otherwise resurrect long-retired
     tombstones and silently delete re-inserted rows."""
     import os
@@ -1795,17 +1796,17 @@ def test_sidecar_retirement_removes_swap_remnants(spark, tmp_path):
     spark.createDataFrame(
         [(0, 1), (0, 2)], "list_id int, vec_id long"
     ).write.parquet(lists)
-    dedup_store.retract_ivf_vectors(spark, lists, _ids(spark, 1))
-    tomb = dedup_store.ivf_tombstones_path(lists)
+    ann_store.retract_ivf_vectors(spark, lists, _ids(spark, 1))
+    tomb = ann_store.ivf_tombstones_path(lists)
     # simulate the crashed final-cleanup state: tomb AND a stale .old
     spark.createDataFrame([(2,)], "vec_id long").write.parquet(tomb + ".old")
 
-    assert dedup_store.fold_ivf_retractions(spark, lists) == {"folded": True}
+    assert ann_store.fold_ivf_retractions(spark, lists) == {"folded": True}
     assert not os.path.isdir(tomb)
     assert not os.path.exists(tomb + ".old")
     # vec 2 (re-insertable content) is NOT ghost-filtered afterwards
     assert {
-        r["vec_id"] for r in dedup_store.live_ivf_lists(spark, lists).collect()
+        r["vec_id"] for r in ann_store.live_ivf_lists(spark, lists).collect()
     } == {2}
 
 
@@ -2223,7 +2224,7 @@ def test_admission_step_heals_crashed_maintenance_swap(spark, tmp_path):
     """A fold/rebucket interrupted between its two renames leaves a
     table only at path+'.old'; the NEXT caller is usually an
     admission step, not a maintenance re-run — the step must heal
-    before reading (the _read_sidecar rule applied to the main
+    before reading (the read_sidecar rule applied to the main
     tables) instead of dying on PATH_NOT_FOUND."""
     import os
 
@@ -2465,25 +2466,25 @@ def test_heal_table_fold_crash_windows(spark, tmp_path):
     # (a) mid-swap: live renamed aside, journal present
     os.rename(
         os.path.join(path, part),
-        os.path.join(path, ds._BFOLD_PREFIX + part),
+        os.path.join(path, storage._BFOLD_PREFIX + part),
     )
-    with open(os.path.join(path, ds._FOLD_JOURNAL), "w") as f:
+    with open(os.path.join(path, storage._FOLD_JOURNAL), "w") as f:
         json.dump({"dirs": [part]}, f)
     # a raw read WOULD drop the bucket's rows; read_table heals first
     assert ds.read_table(spark, path).count() == total
     assert os.path.isdir(os.path.join(path, part))
-    assert not os.path.exists(os.path.join(path, ds._FOLD_JOURNAL))
+    assert not os.path.exists(os.path.join(path, storage._FOLD_JOURNAL))
 
     # (b) completed swap, aside remnant left behind
     shutil.copytree(
         os.path.join(path, part),
-        os.path.join(path, ds._BFOLD_PREFIX + part),
+        os.path.join(path, storage._BFOLD_PREFIX + part),
     )
-    with open(os.path.join(path, ds._FOLD_JOURNAL), "w") as f:
+    with open(os.path.join(path, storage._FOLD_JOURNAL), "w") as f:
         json.dump({"dirs": [part]}, f)
     keys = spark.createDataFrame([(1,)], "doc_id long")
     assert ds.pruned_table(spark, path, keys).count() >= 1
-    assert not os.path.isdir(os.path.join(path, ds._BFOLD_PREFIX + part))
+    assert not os.path.isdir(os.path.join(path, storage._BFOLD_PREFIX + part))
     assert ds.read_table(spark, path).count() == total
 
 
@@ -2550,8 +2551,8 @@ def test_heal_table_fold_banded_index_reader(spark, tmp_path):
     kb_dir = glob.glob(os.path.join(bands, "band=*", "kb=*"))[0]
     parent, leaf = os.path.split(kb_dir)
     rel = os.path.join(os.path.basename(parent), leaf)
-    os.rename(kb_dir, os.path.join(parent, ds._BFOLD_PREFIX + leaf))
-    with open(os.path.join(bands, ds._FOLD_JOURNAL), "w") as f:
+    os.rename(kb_dir, os.path.join(parent, storage._BFOLD_PREFIX + leaf))
+    with open(os.path.join(bands, storage._FOLD_JOURNAL), "w") as f:
         json.dump({"dirs": [rel]}, f)
 
     got = {
@@ -2559,7 +2560,7 @@ def test_heal_table_fold_banded_index_reader(spark, tmp_path):
     }
     assert got == want  # healed before planning — nothing vanished
     assert os.path.isdir(kb_dir)
-    assert not os.path.exists(os.path.join(bands, ds._FOLD_JOURNAL))
+    assert not os.path.exists(os.path.join(bands, storage._FOLD_JOURNAL))
 
 
 def test_fold_mixed_legacy_and_bucketed_layouts(spark, tmp_path):
@@ -2674,35 +2675,35 @@ def test_heal_table_fold_corrupt_journal(spark, tmp_path):
     )
 
     # (1) truncated journal, no swap started: staging remnant dropped
-    with open(os.path.join(path, ds._FOLD_JOURNAL), "w") as f:
+    with open(os.path.join(path, storage._FOLD_JOURNAL), "w") as f:
         f.write('{"dirs": ["pb=')  # the mid-write crash
     os.makedirs(path + ".bfold/pb=0", exist_ok=True)
     assert ds.read_table(spark, path).count() == total
-    assert not os.path.exists(os.path.join(path, ds._FOLD_JOURNAL))
+    assert not os.path.exists(os.path.join(path, storage._FOLD_JOURNAL))
     assert not os.path.exists(path + ".bfold")
 
     # (2) corrupt journal + an aside whose live dir is missing (an
     # EARLIER completed heal's leftovers): restored by glob
     os.rename(
         os.path.join(path, parts[0]),
-        os.path.join(path, ds._BFOLD_PREFIX + parts[0]),
+        os.path.join(path, storage._BFOLD_PREFIX + parts[0]),
     )
     # (3) ... and an aside whose live dir is present: dropped
     shutil.copytree(
         os.path.join(path, parts[1]),
-        os.path.join(path, ds._BFOLD_PREFIX + parts[1]),
+        os.path.join(path, storage._BFOLD_PREFIX + parts[1]),
     )
-    with open(os.path.join(path, ds._FOLD_JOURNAL), "w") as f:
+    with open(os.path.join(path, storage._FOLD_JOURNAL), "w") as f:
         f.write("not json at all")
     assert ds.read_table(spark, path).count() == total
     assert os.path.isdir(os.path.join(path, parts[0]))
     assert not os.path.exists(
-        os.path.join(path, ds._BFOLD_PREFIX + parts[0])
+        os.path.join(path, storage._BFOLD_PREFIX + parts[0])
     )
     assert not os.path.exists(
-        os.path.join(path, ds._BFOLD_PREFIX + parts[1])
+        os.path.join(path, storage._BFOLD_PREFIX + parts[1])
     )
-    assert not os.path.exists(os.path.join(path, ds._FOLD_JOURNAL))
+    assert not os.path.exists(os.path.join(path, storage._FOLD_JOURNAL))
     assert ds.read_table(spark, path).count() == total
 
 
@@ -2734,13 +2735,16 @@ def test_granular_fold_journal_written_atomically(spark, tmp_path, monkeypatch):
     # table and swap one partition under the journal
     import shutil
 
-    staging = ds._fold_staging_path(path)
+    staging = storage._fold_staging_path(path)
     live0 = [p for p in os.listdir(path) if p.startswith("pb=")][0]
     shutil.copytree(path, staging, ignore=shutil.ignore_patterns("_*"))
     # r18 signature: the caller passes the semantic emptied set
-    ds._granular_fold_rewrite(path, staging, [live0], set())
+    ds._publish_fold(path, staging, [live0], set())
     assert seen and all(n.endswith(".tmp") for n in seen)
-    assert not os.path.exists(os.path.join(path, ds._FOLD_JOURNAL))
+    # the journal and both marker row-count writes went through the spy
+    meta_tmp = os.path.join(path, ds._TBL_META) + ".tmp"
+    assert seen.count(meta_tmp) == 2
+    assert not os.path.exists(os.path.join(path, storage._FOLD_JOURNAL))
 
 
 def test_gdelta_keys_recorded_accumulated_retired(spark, tmp_path):
@@ -2901,10 +2905,10 @@ def test_swap_aside_survives_racing_heal(tmp_path, monkeypatch):
         real_rename(src, dst)
         if src == live and dst == live + ".old" and not fired:
             fired.append(1)
-            dedup_store.heal_swap(live)  # the reader in another process
+            storage.heal_swap(live)  # the reader in another process
 
     monkeypatch.setattr(os, "rename", racing)
-    dedup_store._swap_aside(live, staging)
+    storage._swap_aside(live, staging)
     assert fired  # the race actually happened
     assert os.listdir(live) == ["b.txt"]
     assert not os.path.exists(live + ".old")
@@ -2930,17 +2934,17 @@ def test_second_writer_aborts_not_corrupts_swap_aside(tmp_path, monkeypatch):
     def always_racing(src, dst):
         real_rename(src, dst)
         if src == live and dst == live + ".old":
-            dedup_store.heal_swap(live)
+            storage.heal_swap(live)
 
     monkeypatch.setattr(os, "rename", always_racing)
     with pytest.raises(RuntimeError, match="second"):
-        dedup_store._swap_aside(live, staging)
+        storage._swap_aside(live, staging)
     # abort, not corruption: both complete
     assert os.listdir(live) == ["a.txt"]
     assert os.listdir(staging) == ["b.txt"]
 
     monkeypatch.setattr(os, "rename", real_rename)
-    dedup_store._swap_aside(live, staging)
+    storage._swap_aside(live, staging)
     assert os.listdir(live) == ["b.txt"]
     assert not os.path.exists(staging)
 
@@ -2966,7 +2970,7 @@ def test_heal_swap_tolerates_losing_race(tmp_path, monkeypatch):
         real_rename(src, dst)
 
     monkeypatch.setattr(os, "rename", lose)
-    dedup_store.heal_swap(path)  # must not raise
+    storage.heal_swap(path)  # must not raise
     assert os.listdir(path) == ["b.txt"]
 
 
@@ -2998,20 +3002,20 @@ def test_fold_aborts_cleanly_when_reader_heal_rolls_back(
 
     def racing(src, dst):
         real_rename(src, dst)
-        if dedup_store._BFOLD_PREFIX in os.path.basename(dst) and not fired:
+        if storage._BFOLD_PREFIX in os.path.basename(dst) and not fired:
             # the reader in another process: full heal of the TABLE
             # whose partition is mid-swap (walk up from the aside to
             # the dir holding the fold journal — band/kb rels nest)
             d = os.path.dirname(dst)
             while d and not os.path.exists(
-                os.path.join(d, dedup_store._FOLD_JOURNAL)
+                os.path.join(d, storage._FOLD_JOURNAL)
             ):
                 nd = os.path.dirname(d)
                 if nd == d:
                     return
                 d = nd
             fired.append(1)
-            dedup_store.heal_table_fold(d)
+            storage.heal_table_fold(d)
 
     monkeypatch.setattr(os, "rename", racing)
     with pytest.raises(RuntimeError, match="vanished|losing the rename"):
@@ -3031,11 +3035,11 @@ def test_fold_aborts_cleanly_when_reader_heal_rolls_back(
 
     for p in (sig, bands, mem):
         assert not glob.glob(
-            os.path.join(p, "**", dedup_store._BFOLD_PREFIX + "*"),
+            os.path.join(p, "**", storage._BFOLD_PREFIX + "*"),
             recursive=True,
         )
         assert not os.path.exists(
-            os.path.join(p, dedup_store._FOLD_JOURNAL)
+            os.path.join(p, storage._FOLD_JOURNAL)
         )
 
     # converge on re-run
@@ -3079,12 +3083,12 @@ def test_fold_emptied_partition_not_resurrected_by_racing_heal(
 
     def racing(src, dst):
         real_rename(src, dst)
-        if dedup_store._BFOLD_PREFIX in os.path.basename(dst) and not fired:
+        if storage._BFOLD_PREFIX in os.path.basename(dst) and not fired:
             fired.append(1)
             # narrow racer: just the aside restore (heal_table_fold's
             # per-partition rule), not the full staging rollback —
             # the resurrection window specifically
-            dedup_store._restore_aside(dst, os.path.join(path, part))
+            storage._restore_aside(dst, os.path.join(path, part))
 
     monkeypatch.setattr(os, "rename", racing)
     # sig_path = a dir with no sidecars → gdelta composes as a no-op
@@ -3193,29 +3197,29 @@ def test_heal_rolls_back_dead_writer_promptly(tmp_path):
     import time
 
     path = str(tmp_path / "tbl")
-    os.makedirs(os.path.join(path, dedup_store._BFOLD_PREFIX + "pb=0"))
+    os.makedirs(os.path.join(path, storage._BFOLD_PREFIX + "pb=0"))
     with open(
-        os.path.join(path, dedup_store._BFOLD_PREFIX + "pb=0", "a.parquet"),
+        os.path.join(path, storage._BFOLD_PREFIX + "pb=0", "a.parquet"),
         "w",
     ) as f:
         f.write("x")
-    stg = os.path.basename(dedup_store._fold_staging_path(path))
+    stg = os.path.basename(storage._fold_staging_path(path))
     os.makedirs(os.path.join(str(tmp_path), stg))
     dead = subprocess.Popen(["true"])
     dead.wait()
-    with open(os.path.join(path, dedup_store._FOLD_JOURNAL), "w") as f:
+    with open(os.path.join(path, storage._FOLD_JOURNAL), "w") as f:
         json.dump(
             {"dirs": ["pb=0"], "emptied": [], "staging": stg,
              "pid": dead.pid},
             f,
         )
     t0 = time.perf_counter()
-    dedup_store.heal_table_fold(path)
+    storage.heal_table_fold(path)
     elapsed = time.perf_counter() - t0
     assert elapsed < 5, elapsed  # no 10s liveness wait for a dead pid
     assert os.path.isdir(os.path.join(path, "pb=0"))  # aside restored
     assert not os.path.exists(
-        os.path.join(path, dedup_store._FOLD_JOURNAL)
+        os.path.join(path, storage._FOLD_JOURNAL)
     )
     assert not os.path.isdir(os.path.join(str(tmp_path), stg))
 
@@ -3231,9 +3235,9 @@ def test_heal_waits_out_live_fold_writer(tmp_path):
     import time
 
     path = str(tmp_path / "tbl")
-    aside = os.path.join(path, dedup_store._BFOLD_PREFIX + "pb=0")
+    aside = os.path.join(path, storage._BFOLD_PREFIX + "pb=0")
     os.makedirs(aside)
-    j = os.path.join(path, dedup_store._FOLD_JOURNAL)
+    j = os.path.join(path, storage._FOLD_JOURNAL)
     with open(j, "w") as f:
         json.dump(
             {"dirs": ["pb=0"], "emptied": [],
@@ -3248,7 +3252,7 @@ def test_heal_waits_out_live_fold_writer(tmp_path):
     t = threading.Thread(target=finish_fold)
     t.start()
     t0 = time.perf_counter()
-    dedup_store.heal_table_fold(path)
+    storage.heal_table_fold(path)
     elapsed = time.perf_counter() - t0
     t.join()
     assert 0.7 <= elapsed < 9, elapsed  # waited, didn't time out
@@ -3269,7 +3273,7 @@ def test_claim_rmtree_is_atomic_against_reuse(tmp_path):
     os.makedirs(d)
     with open(os.path.join(d, "old.txt"), "w") as f:
         f.write("old")
-    dedup_store._claim_rmtree(d)
+    storage._claim_rmtree(d)
     assert not os.path.exists(d)
     # reuse the path immediately — nothing can delete this content
     os.makedirs(d)
@@ -3277,7 +3281,7 @@ def test_claim_rmtree_is_atomic_against_reuse(tmp_path):
         f.write("new")
     assert os.listdir(d) == ["new.txt"]
     # claiming a missing dir is a quiet no-op
-    dedup_store._claim_rmtree(str(tmp_path / "nope"))
+    storage._claim_rmtree(str(tmp_path / "nope"))
 
 
 def test_clear_orphan_fold_staging_rules(tmp_path):
@@ -3305,16 +3309,16 @@ def test_clear_orphan_fold_staging_rules(tmp_path):
     tr_out = mk(str(tmp_path), ".trash-tbl-9-def")
 
     # a journal exists: nothing is touched
-    j = os.path.join(path, dedup_store._FOLD_JOURNAL)
+    j = os.path.join(path, storage._FOLD_JOURNAL)
     with open(j, "w") as f:
         json.dump({"dirs": []}, f)
-    dedup_store._clear_orphan_fold_staging(path)
+    storage._clear_orphan_fold_staging(path)
     for d in (stg, legacy, pub, tr_in, tr_out):
         assert os.path.isdir(d), d
 
     # no journal: all five reaped, live partition untouched
     os.remove(j)
-    dedup_store._clear_orphan_fold_staging(path)
+    storage._clear_orphan_fold_staging(path)
     for d in (stg, legacy, pub, tr_in, tr_out):
         assert not os.path.exists(d), d
     assert os.path.isdir(os.path.join(path, "pb=0"))

@@ -483,3 +483,246 @@ def test_hist_sink_slicing_invariant(spark, sf_smoke, tmp_path):
     qa = sorted(map(tuple, read_quantiles(spark, one).collect()))
     qb = sorted(map(tuple, read_quantiles(spark, three).collect()))
     assert qa == qb
+
+
+# ------------------------------- state sinks: exactly-once + crash point
+#
+# The four state sinks (SUM rollup, SUM histogram, MAX-register HLL,
+# latest-wins upsert) share one merge and one commit (sinks/state.py,
+# fdblog2clickhouse_spark/storage.py); these pins run each of them
+# through replay and through a crash inside the commit.
+
+_STATE_SINKS = ["rollup", "hist", "hll", "upsert"]
+_QUERY_ID = "sql.streaming.queryId"
+
+
+def _state_sink(name):
+    """(merge(spark, path, df), foreachBatch hook factory(path))."""
+    from functools import partial
+
+    if name == "rollup":
+        from fdblog2clickhouse_spark.sinks.rollup import (
+            foreach_batch_rollup,
+            merge_rollup,
+        )
+
+        return merge_rollup, foreach_batch_rollup
+    if name == "hist":
+        from fdblog2clickhouse_spark.sinks.hist_rollup import (
+            foreach_batch_hist,
+            merge_hist,
+        )
+
+        return merge_hist, foreach_batch_hist
+    if name == "hll":
+        from fdblog2clickhouse_spark.sinks.hll_rollup import (
+            foreach_batch_hll,
+            merge_hll,
+        )
+
+        return merge_hll, foreach_batch_hll
+    from fdblog2clickhouse_spark.sinks.upsert import (
+        foreach_batch_upsert,
+        merge_upsert,
+    )
+
+    kw = {"keys": ["user_id", "event_type"], "version": "ts", "tiebreak": "event_id"}
+    return partial(merge_upsert, **kw), partial(foreach_batch_upsert, **kw)
+
+
+def _state_sink_rows(spark, sf_dir):
+    """Every column any of the four sinks reads."""
+    e = table(spark, sf_dir, "events")
+    return e.select(
+        F.col("ts").alias("time"),
+        F.when(F.col("event_type") == "error", F.lit(40))
+        .otherwise(F.lit(10))
+        .cast("int")
+        .alias("severity"),
+        F.col("event_type").alias("type"),
+        F.round(F.col("value") * 100, 0).cast("long").alias("value_c"),
+        "event_type",
+        "value",
+        "user_id",
+        "ts",
+        "event_id",
+    )
+
+
+def _state(spark, path):
+    df = spark.read.parquet(path)
+    return sorted(map(tuple, df.select(*sorted(df.columns)).collect()))
+
+
+@pytest.mark.parametrize("sink", _STATE_SINKS)
+def test_state_sink_replay_is_exactly_once(spark, sf_smoke, tmp_path, sink):
+    """foreachBatch replay: the same (batch, batch_id) delivered twice
+    under one streaming query id leaves the state of one delivery.
+    A fresh checkpoint — new
+    query id, batch ids restarting at 0 — still merges, and the
+    result equals plain direct merges of the two batches."""
+    merge, hook = _state_sink(sink)
+    rows = _state_sink_rows(spark, sf_smoke)
+    b0 = rows.where(F.col("event_id") % 2 == 0)
+    b1 = rows.where(F.col("event_id") % 2 == 1)
+    once, twice, direct = (str(tmp_path / n) for n in ("once", "twice", "direct"))
+
+    sc = spark.sparkContext
+    try:
+        sc.setLocalProperty(_QUERY_ID, "query-a")
+        hook(once)(b0, 0)
+        hook(twice)(b0, 0)
+        hook(twice)(b0, 0)  # replay of batch 0
+        assert _state(spark, twice) == _state(spark, once)
+
+        sc.setLocalProperty(_QUERY_ID, "query-b")
+        hook(once)(b1, 0)
+        hook(twice)(b1, 0)
+    finally:
+        sc.setLocalProperty(_QUERY_ID, None)
+    merge(spark, direct, b0)
+    merge(spark, direct, b1)
+    assert _state(spark, once) == _state(spark, direct)
+    assert _state(spark, twice) == _state(spark, direct)
+
+
+@pytest.mark.parametrize("sink", _STATE_SINKS)
+def test_state_sink_crash_before_publish_heals(
+    spark, sf_smoke, tmp_path, monkeypatch, sink
+):
+    """Crash inside the commit after the live state is renamed aside
+    and before the new state is published: the next merge heals the
+    aside back and the stream's redelivery of the failed batch ends
+    in the state of a run with no crash."""
+    merge, _ = _state_sink(sink)
+    rows = _state_sink_rows(spark, sf_smoke)
+    # user slices: every sink's state (HLL registers and upsert keys
+    # included) depends on the lost batch
+    batches = [rows.where(F.pmod("user_id", F.lit(3)) == k) for k in range(3)]
+    clean, path = str(tmp_path / "clean"), str(tmp_path / "state")
+    for b in batches:
+        merge(spark, clean, b)
+
+    merge(spark, path, batches[0])
+    real_rename = os.rename
+
+    def crash_on_publish(src, dst):
+        if dst == path:
+            raise OSError("simulated crash before publish")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crash_on_publish)
+    with pytest.raises(OSError, match="simulated crash"):
+        merge(spark, path, batches[1])
+    monkeypatch.setattr(os, "rename", real_rename)
+    assert not os.path.exists(path)
+
+    merge(spark, path, batches[1])  # at-least-once redelivery
+    merge(spark, path, batches[2])
+    assert _state(spark, path) == _state(spark, clean)
+
+
+# ------------------------------- optimize_mergetree: reader-safe publish
+
+
+def _appended_mergetree(spark, sf_dir, tmp_path):
+    """A MergeTree table with ≥2 files per partition, and its rows."""
+    path = str(tmp_path / "mt")
+    e = table(spark, sf_dir, "events").select(
+        F.col("ts").alias("time"), "event_id", "event_type", "value"
+    )
+    for i in range(2):
+        write_mergetree(e.where(F.col("event_id") % 2 == i), path)
+    back = read_mergetree(spark, path)
+    assert dict(back.dtypes)["yyyymm"] == "int"
+    return path, sorted(map(tuple, back.collect()))
+
+
+def _assert_mergetree_rows(spark, path, want):
+    back = read_mergetree(spark, path)
+    assert dict(back.dtypes)["yyyymm"] == "int"
+    assert sorted(map(tuple, back.collect())) == want
+
+
+def test_optimize_mergetree_failed_publish_keeps_table(
+    spark, sf_smoke, tmp_path, monkeypatch
+):
+    """The first compacted partition is staged, then its publish into
+    the live table fails once: the writer rolls its own attempt back
+    (no journal, no aside left behind), and readers see exactly the
+    pre-optimize rows, with an int yyyymm (a staging dir inside the
+    table would show up as an extra, string-typed partition)."""
+    from fdblog2clickhouse_spark import storage
+    from fdblog2clickhouse_spark.sinks.mergetree import optimize_mergetree
+
+    path, pre = _appended_mergetree(spark, sf_smoke, tmp_path)
+    real_rename = os.rename
+    failed = []
+
+    def fail_publish_once(src, dst):
+        if os.path.basename(dst).startswith("yyyymm=") and not failed:
+            failed.append(dst)
+            raise OSError("simulated publish failure")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", fail_publish_once)
+    with pytest.raises(OSError, match="simulated publish failure"):
+        optimize_mergetree(spark, path)
+    monkeypatch.setattr(os, "rename", real_rename)
+    assert not os.path.exists(os.path.join(path, storage._FOLD_JOURNAL))
+    assert not glob.glob(os.path.join(path, storage._BFOLD_PREFIX + "*"))
+    assert not glob.glob(path + storage._BFOLD_PREFIX + "*")  # staging
+    _assert_mergetree_rows(spark, path, pre)
+    assert not glob.glob(os.path.join(path, "*.*"))  # no staging inside
+
+
+def test_optimize_mergetree_crash_mid_publish_heals_on_read(
+    spark, sf_smoke, tmp_path, monkeypatch
+):
+    """The optimize's writer process dies after renaming a partition
+    aside and before publishing its compacted copy — the partition is
+    missing from the live table. The next read heals the table back
+    to the pre-optimize rows, and the next optimize converges."""
+    import subprocess
+    import sys
+    import textwrap
+
+    from fdblog2clickhouse_spark import storage
+    from fdblog2clickhouse_spark.sinks.mergetree import optimize_mergetree
+
+    path, pre = _appended_mergetree(spark, sf_smoke, tmp_path)
+    staged = []
+    monkeypatch.setattr(storage, "publish_partitions", lambda *a: staged.append(a))
+    optimize_mergetree(spark, path)
+    monkeypatch.undo()
+    compacted = {a[2][0] for a in staged}
+    # each partition is staged on its own; staging the next one reaps
+    # the previous (unpublished) staging dir, so the last survives
+    _, staging, rels = staged[-1][:3]
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    child = textwrap.dedent(
+        f"""
+        import os, sys
+        sys.path.insert(0, {repo!r})
+        from fdblog2clickhouse_spark import storage
+        real_rename = os.rename
+        def crash_on_publish(src, dst):
+            if os.path.basename(dst).startswith("yyyymm="):
+                os._exit(3)
+            real_rename(src, dst)
+        os.rename = crash_on_publish
+        storage.publish_partitions({path!r}, {staging!r}, {rels!r})
+        """
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", child], capture_output=True, text=True, timeout=120
+    )
+    assert proc.returncode == 3, proc.stdout + proc.stderr
+    assert not os.path.isdir(os.path.join(path, rels[0]))
+    assert os.path.isdir(os.path.join(path, storage._BFOLD_PREFIX + rels[0]))
+
+    _assert_mergetree_rows(spark, path, pre)
+    assert not os.path.exists(os.path.join(path, storage._FOLD_JOURNAL))
+    assert set(optimize_mergetree(spark, path)) == compacted
+    _assert_mergetree_rows(spark, path, pre)

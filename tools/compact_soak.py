@@ -45,7 +45,6 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from fdblog2clickhouse_spark.session import get_spark  # noqa: E402
 from fdblog2clickhouse_spark.operators import ann_store as ast  # noqa: E402
-from fdblog2clickhouse_spark.operators import dedup_store as ds  # noqa: E402
 from fdblog2clickhouse_spark.operators.dedup import _quantized  # noqa: E402
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
@@ -107,7 +106,7 @@ for i in range(N_BATCHES):
             .select(F.col("vec_id").alias("doc_id"))
             .limit(RETRACT_N)
         )
-        ds.retract_ivf_vectors(spark, li, retracted_ids)
+        ast.retract_ivf_vectors(spark, li, retracted_ids)
         print(f"batch {i}: retracted {RETRACT_N} mid-stream", flush=True)
     t0 = time.perf_counter()
     r = ast.ivf_insert_batch(
@@ -121,7 +120,7 @@ for i in range(N_BATCHES):
         if (
             folded_at is None
             and retracted_ids is not None
-            and not os.path.isdir(ds.ivf_tombstones_path(li))
+            and not os.path.isdir(ast.ivf_tombstones_path(li))
         ):
             folded_at = i
     if i % 8 == 0 or r["compacted"]:
@@ -164,7 +163,7 @@ print(
 expect = n_base + N_BATCHES * BATCH_N - RETRACT_N
 got_lists = spark.read.parquet(li).count()
 got_codes = spark.read.parquet(co).select("vec_id").distinct().count()
-tomb_left = os.path.isdir(ds.ivf_tombstones_path(li))
+tomb_left = os.path.isdir(ast.ivf_tombstones_path(li))
 remnants = [
     p
     for p in (li + ".old", li + ".staging", co + ".old", co + ".staging")

@@ -113,7 +113,7 @@ def remnants() -> list[str]:
         found += glob.glob(os.path.join(p, "**", "_fold_inflight.json*"),
                            recursive=True)
         found += glob.glob(os.path.join(p, "**", ".bfold-*"), recursive=True)
-        for suffix in (".bfold", ".old", ".staging", ".rebucket"):
+        for suffix in (".bfold", ".old", ".staging"):
             if os.path.exists(p + suffix):
                 found.append(p + suffix)
     for sidecar in (

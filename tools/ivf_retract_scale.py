@@ -6,7 +6,8 @@ import sys, time, statistics, shutil, os, tempfile
 sys.path.insert(0, "/root/repo")
 from pyspark.sql import functions as F
 from fdblog2clickhouse_spark.session import get_spark
-from fdblog2clickhouse_spark.operators import dedup_store as ds
+from fdblog2clickhouse_spark import storage
+from fdblog2clickhouse_spark.operators import ann_store
 
 spark = get_spark()
 spark.sparkContext.setLogLevel("ERROR")
@@ -22,13 +23,13 @@ def old_retract(path, ids):
     lists = spark.read.parquet(path)
     kept = lists.join(idf.withColumnRenamed("vec_id","n_id"), "n_id", "left_anti")
     n_before = lists.count()
-    ds._swap_write(kept, path)
+    storage.commit(path, kept.write.parquet)
     n_after = spark.read.parquet(path).count()
     return n_before - n_after
 
 def new_retract(path, ids):
     idf = spark.createDataFrame([(i,) for i in ids], "doc_id long")
-    ds.retract_ivf_vectors(spark, path, idf)
+    ann_store.retract_ivf_vectors(spark, path, idf)
 
 for n in (1_000_000, 10_000_000, 100_000_000):
     po, pn = f"{root}/old_{n}", f"{root}/new_{n}"

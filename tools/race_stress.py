@@ -130,12 +130,14 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from fdblog2clickhouse_spark import storage  # noqa: E402
 
 
 def racer(path: str, stop, hits) -> None:
     """The query node in another process: heal before every read."""
-    from fdblog2clickhouse_spark.operators.dedup_store import heal_swap
+    from fdblog2clickhouse_spark.storage import heal_swap
 
     old = path + ".old"
     while not stop.is_set():
@@ -150,10 +152,7 @@ def fold_racer(path: str, stop, sightings) -> None:
     """A query node's read-path heal, run hot: heal as fast as the
     OS allows, counting how often the fold journal was actually
     observed (a zero-sighting run exercised nothing — report it)."""
-    from fdblog2clickhouse_spark.operators.dedup_store import (
-        _FOLD_JOURNAL,
-        heal_table_fold,
-    )
+    from fdblog2clickhouse_spark.storage import _FOLD_JOURNAL, heal_table_fold
 
     j = os.path.join(path, _FOLD_JOURNAL)
     while not stop.is_set():
@@ -257,11 +256,11 @@ def fold_main() -> None:
             print(
                 "  asides:",
                 _g.glob(
-                    os.path.join(path, "**", ds._BFOLD_PREFIX + "*"),
+                    os.path.join(path, "**", storage._BFOLD_PREFIX + "*"),
                     recursive=True,
                 ),
             )
-            jj = os.path.join(path, ds._FOLD_JOURNAL)
+            jj = os.path.join(path, storage._FOLD_JOURNAL)
             if os.path.exists(jj):
                 print("  journal:", open(jj).read())
             raise AssertionError(
@@ -276,9 +275,9 @@ def fold_main() -> None:
         assert p.exitcode == 0, f"fold racer crashed: {p.exitcode}"
     import glob as _g
 
-    assert not os.path.exists(os.path.join(path, ds._FOLD_JOURNAL))
+    assert not os.path.exists(os.path.join(path, storage._FOLD_JOURNAL))
     assert not _g.glob(
-        os.path.join(path, "**", ds._BFOLD_PREFIX + "*"), recursive=True
+        os.path.join(path, "**", storage._BFOLD_PREFIX + "*"), recursive=True
     )
     print(
         f"fold-race-stress: GREEN — {cycles} retract→fold cycles vs "
@@ -295,10 +294,7 @@ def store_racer(paths: list[str], stop, sightings) -> None:
     """A query node healing before every read of the three-table
     store: loop `heal_table_fold` over all three paths hot,
     counting journal sightings on any of them."""
-    from fdblog2clickhouse_spark.operators.dedup_store import (
-        _FOLD_JOURNAL,
-        heal_table_fold,
-    )
+    from fdblog2clickhouse_spark.storage import _FOLD_JOURNAL, heal_table_fold
 
     while not stop.is_set():
         for p in paths:
@@ -439,9 +435,9 @@ def store_main() -> None:
     import glob as _g
 
     for p in paths:
-        assert not os.path.exists(os.path.join(p, ds._FOLD_JOURNAL)), p
+        assert not os.path.exists(os.path.join(p, storage._FOLD_JOURNAL)), p
         assert not _g.glob(
-            os.path.join(p, "**", ds._BFOLD_PREFIX + "*"), recursive=True
+            os.path.join(p, "**", storage._BFOLD_PREFIX + "*"), recursive=True
         ), p
         assert not _g.glob(
             os.path.join(p, "**", ".bpub-*"), recursive=True
@@ -462,7 +458,7 @@ def ivf_racer(paths: list[str], stop, hits) -> None:
     """A query node healing all four IVF artifacts before every
     read, run hot; counts how often a swap window ('.old' present,
     live missing) was actually observed."""
-    from fdblog2clickhouse_spark.operators.dedup_store import heal_swap
+    from fdblog2clickhouse_spark.storage import heal_swap
 
     while not stop.is_set():
         for p in paths:
@@ -625,13 +621,13 @@ def crash_child() -> None:
     with open(batches_file) as f:
         batches = json.load(f)
 
-    orig = ds._fold_swap_loop
+    orig = storage._fold_swap_loop
 
     def slow_swap(*a, **k):
         _t.sleep(1.0)
         return orig(*a, **k)
 
-    ds._fold_swap_loop = slow_swap
+    storage._fold_swap_loop = slow_swap
     with open(ready_file, "w") as f:
         f.write("ready")
     for idx, victims in enumerate(batches):
@@ -696,7 +692,7 @@ def crash_main() -> None:
         # SIGKILL; the ~1 s widened window makes the poll reliable).
         # even kills: random landing past the cold first fold
         # (session-warm ~5-8 s), anywhere in the fold lifecycle.
-        j = os.path.join(path, ds._FOLD_JOURNAL)
+        j = os.path.join(path, storage._FOLD_JOURNAL)
         if k % 2 == 1:
             deadline = time.perf_counter() + 60
             while not os.path.exists(j):
@@ -709,7 +705,7 @@ def crash_main() -> None:
             time.sleep(rng.uniform(4.0, 15.0))
         os.killpg(child.pid, signal.SIGKILL)
         child.wait()
-        j_seen = os.path.exists(os.path.join(path, ds._FOLD_JOURNAL))
+        j_seen = os.path.exists(os.path.join(path, storage._FOLD_JOURNAL))
         in_window += j_seen
         done = []
         if os.path.exists(pf):
@@ -721,10 +717,10 @@ def crash_main() -> None:
         # the next maintenance pass: heal must roll a DEAD writer's
         # journal back immediately (no 10 s liveness wait)
         th = time.perf_counter()
-        ds.heal_table_fold(path)
+        storage.heal_table_fold(path)
         heal_dt = time.perf_counter() - th
         assert heal_dt < 5, f"kill {k}: dead-writer heal took {heal_dt:.1f}s"
-        assert not os.path.exists(os.path.join(path, ds._FOLD_JOURNAL))
+        assert not os.path.exists(os.path.join(path, storage._FOLD_JOURNAL))
         # re-run the interrupted batch's fold (idempotent: partially
         # swapped partitions converge) and verify exact content
         if i < len(batches):
@@ -756,9 +752,9 @@ def crash_main() -> None:
 
     import glob as _g
 
-    assert not os.path.exists(os.path.join(path, ds._FOLD_JOURNAL))
+    assert not os.path.exists(os.path.join(path, storage._FOLD_JOURNAL))
     assert not _g.glob(
-        os.path.join(path, "**", ds._BFOLD_PREFIX + "*"), recursive=True
+        os.path.join(path, "**", storage._BFOLD_PREFIX + "*"), recursive=True
     )
     assert not _g.glob(path + ".bfold*")  # re-run's entry reaped orphans
     print(
@@ -793,13 +789,13 @@ def crash_store_child() -> None:
     with open(batches_file) as f:
         batches = json.load(f)
 
-    orig = ds._fold_swap_loop
+    orig = storage._fold_swap_loop
 
     def slow_swap(*a, **k):
         _t.sleep(0.4)
         return orig(*a, **k)
 
-    ds._fold_swap_loop = slow_swap
+    storage._fold_swap_loop = slow_swap
     with open(ready_file, "w") as f:
         f.write("ready")
     for idx, victims in enumerate(batches):
@@ -864,7 +860,7 @@ def crash_store_main() -> None:
     batches = [ids0[2 * k : 2 * k + 2] for k in range(4 * kills)]
 
     journals = [
-        os.path.join(p, ds._FOLD_JOURNAL)
+        os.path.join(p, storage._FOLD_JOURNAL)
         for p in (sig_path, band_path, mem_path)
     ]
 
@@ -971,9 +967,9 @@ def crash_store_main() -> None:
     import glob as _g
 
     for p in (sig_path, band_path, mem_path):
-        assert not os.path.exists(os.path.join(p, ds._FOLD_JOURNAL)), p
+        assert not os.path.exists(os.path.join(p, storage._FOLD_JOURNAL)), p
         assert not _g.glob(
-            os.path.join(p, "**", ds._BFOLD_PREFIX + "*"), recursive=True
+            os.path.join(p, "**", storage._BFOLD_PREFIX + "*"), recursive=True
         ), p
         assert not _g.glob(
             os.path.join(p, "**", ".bpub-*"), recursive=True
@@ -1089,7 +1085,7 @@ def crash_ivf_main() -> None:
     n_batches = 4 * kills
     batches = [stream_ids[j::n_batches] for j in range(n_batches)]
 
-    from fdblog2clickhouse_spark.operators.dedup_store import heal_swap
+    from fdblog2clickhouse_spark.storage import heal_swap
 
     def vec_ids(path, col):
         return {
@@ -1200,7 +1196,7 @@ def main() -> None:
     n_swaps = int(sys.argv[1]) if len(sys.argv) > 1 else 300
     n_racers = int(sys.argv[2]) if len(sys.argv) > 2 else 4
 
-    from fdblog2clickhouse_spark.operators.dedup_store import _swap_aside
+    from fdblog2clickhouse_spark.storage import _swap_aside
 
     root = tempfile.mkdtemp(prefix="race_stress_")
     path = os.path.join(root, "tbl")
