@@ -114,27 +114,57 @@ def cmd_alter_schema(args) -> int:
     return 2 if unmappable else 0
 
 
-def cmd_ingest(args) -> int:
-    """One batch: read trace JSON (file or dir), normalize, insert."""
-    from pyspark.sql import functions as F
+def _reread_path(uri: str) -> str:
+    """A path string that DataFrameReader resolves back to the file
+    `uri` names: percent-escapes decoded, glob characters escaped."""
+    import re
+    from urllib.parse import unquote, urlparse
 
+    u = urlparse(uri)
+    path = re.sub(r"([{}\[\]*?\\])", r"\\\1", unquote(u.path))
+    return f"{u.scheme}://{u.netloc}{path}"
+
+
+def _local_paths(uris: list[str]) -> list[str]:
+    """Local paths of `file:` URIs. Any other scheme is refused: a
+    remote file cannot be removed with os.remove, and a local file
+    of the same path is unrelated data."""
+    from urllib.parse import unquote, urlparse
+
+    paths = []
+    for uri in uris:
+        u = urlparse(uri)
+        if u.scheme != "file":
+            raise SystemExit(f"ingest --delete-logs: {uri} is not a local file")
+        paths.append(unquote(u.path))
+    return paths
+
+
+def cmd_ingest(args) -> int:
+    """Read trace JSON (file or dir), normalize, insert — in groups of
+    MAX_FILES_PER_INSERT files, so the driver holds one group's JSON
+    text at a time. --delete-logs removes each group's files right
+    after its insert succeeded (local files only, checked before any
+    insert)."""
+    import os
+
+    from .sinks.clickhouse import MAX_FILES_PER_INSERT
     from .sources.trace_json import read_trace_batch
     from .streaming.ingest import normalize_trace
 
     spark = _spark()
-    df = normalize_trace(read_trace_batch(spark, args.path))
+    files = sorted(read_trace_batch(spark, args.path).inputFiles())
+    local = _local_paths(files) if args.delete_logs else []
     sink = _sink(args)
-    sink.insert(df)
-    if args.delete_logs:
+    n = 0
+    for i in range(0, len(files), MAX_FILES_PER_INSERT):
+        group = [_reread_path(u) for u in files[i : i + MAX_FILES_PER_INSERT]]
+        n += sink.insert(normalize_trace(read_trace_batch(spark, group)))
         # the reference removes the source file after a 200
         # (trace-converter.py:129-130)
-        import glob as _glob
-        import os as _os
-
-        for f in _glob.glob(f"{args.path}/*.json") or [args.path]:
-            if _os.path.isfile(f):
-                _os.remove(f)
-    print(f"ingested rows: {df.count()}")
+        for path in local[i : i + MAX_FILES_PER_INSERT]:
+            os.remove(path)
+    print(f"ingested rows: {n}")
     return 0
 
 
@@ -149,11 +179,19 @@ def cmd_watch(args) -> int:
     import os
     import time
 
+    from .sinks.clickhouse import MAX_FILES_PER_INSERT
     from .streaming.ingest import normalize_trace, read_trace_stream
 
     spark = _spark()
     stream = normalize_trace(
-        read_trace_stream(spark, args.log_dir, delete_logs=args.delete_logs)
+        read_trace_stream(
+            spark,
+            args.log_dir,
+            delete_logs=args.delete_logs,
+            # bounds the driver memory of each micro-batch's insert;
+            # AvailableNow (--once) honours it too
+            max_files_per_trigger=MAX_FILES_PER_INSERT,
+        )
     )
     sink = _sink(args)
     writer = (

@@ -25,9 +25,10 @@ from pyspark.sql import functions as F
 from ..streaming.ingest import TRACE_SCHEMA, normalize_trace
 
 
-def read_trace_batch(spark: SparkSession, log_dir: str) -> DataFrame:
-    """Batch read of a rotated-trace-log directory with the declared
-    reference schema (trace-converter.py:85-93)."""
+def read_trace_batch(spark: SparkSession, log_dir: str | list[str]) -> DataFrame:
+    """Batch read of a rotated-trace-log directory (or a list of
+    files) with the declared reference schema
+    (trace-converter.py:85-93)."""
     return spark.read.schema(TRACE_SCHEMA).json(log_dir)
 
 

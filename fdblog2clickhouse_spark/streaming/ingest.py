@@ -21,21 +21,18 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import StringType, StructField, StructType
 
-# The reference's trace column set (trace-converter.py:85-93).
+# The reference's trace column set (trace-converter.py:85-93). FDB
+# quotes every value ("Severity": "10", "Time": "1706659207.545855"),
+# so Severity and Time are read as text (a JSON number's text too)
+# and converted in normalize_trace.
 TRACE_SCHEMA = StructType(
     [
-        StructField("Severity", IntegerType()),
+        StructField("Severity", StringType()),
         StructField("Machine", StringType()),
         StructField("LogGroup", StringType()),
-        StructField("Time", DoubleType()),  # epoch seconds, fractional
+        StructField("Time", StringType()),  # epoch seconds, fractional
         StructField("Type", StringType()),
         StructField("ID", StringType()),
     ]
@@ -61,13 +58,15 @@ def read_trace_stream(
 def normalize_trace(df: DataFrame) -> DataFrame:
     """Trim + coerce to the declared column set
     (trace-converter.py:114-119): fractional epoch seconds → exact
-    µs timestamp, severity/int coercion, stable column order."""
+    µs timestamp, severity/int coercion, stable column order. Quoted
+    and bare numbers give the same row; a malformed value becomes
+    NULL instead of failing the batch."""
     return df.select(
-        F.col("Severity").cast("int").alias("severity"),
+        F.col("Severity").try_cast("int").alias("severity"),
         F.col("Machine").alias("machine"),
         F.col("LogGroup").alias("log_group"),
         F.timestamp_micros(
-            F.round(F.col("Time") * 1_000_000, 0).cast("long")
+            F.round(F.col("Time").try_cast("double") * 1_000_000, 0).cast("long")
         ).alias("time"),
         F.col("Type").alias("type"),
         F.col("ID").alias("id"),

@@ -167,6 +167,104 @@ def test_ingest_spools_jsoneachrow(spark, sf_smoke, tmp_path, capsys):
     assert n_lines == n_events
 
 
+def test_ingest_delete_logs_removes_exactly_what_it_ingested(spark, sf_smoke, tmp_path, capsys):
+    """`ingest --delete-logs` on a mixed .json/.json.gz rotation dir:
+    exit 0, every event spooled exactly once, the source dir empty."""
+    import glob
+    import json
+    import shutil
+
+    from fdblog2clickhouse_spark.streaming.queries import _export_mixed_rotation_logs
+
+    log_dir = tmp_path / "logs"
+    log_dir.mkdir()
+    for f in glob.glob(_export_mixed_rotation_logs(spark, sf_smoke, str(tmp_path)) + "/part-*"):
+        shutil.move(f, log_dir)
+    assert {f.split(".", 1)[1] for f in os.listdir(log_dir)} == {"json", "json.gz"}
+    spool = str(tmp_path / "spool")
+
+    rc = cli.main(["--spool-dir", spool, "ingest", "--delete-logs", str(log_dir)])
+    assert rc == 0
+    ids = []
+    for b in os.listdir(spool):
+        with open(os.path.join(spool, b)) as f:
+            ids.extend(json.loads(ln)["id"] for ln in f.read().splitlines())
+    events = spark.read.parquet(f"{sf_smoke}/events.parquet")
+    assert sorted(ids) == sorted(str(r["event_id"]) for r in events.select("event_id").collect())
+    assert f"ingested rows: {len(ids)}" in capsys.readouterr().out
+    assert os.listdir(log_dir) == []
+
+
+def _one_line_rotations(log_dir, n, odd_names=()):
+    """n one-event rotation files, the first ones named `odd_names`."""
+    import json
+
+    os.makedirs(log_dir)
+    names = list(odd_names) + [f"trace.{i:04d}.json" for i in range(n - len(odd_names))]
+    for i, name in enumerate(names):
+        ev = {"Severity": "10", "Machine": "m", "LogGroup": "default",
+              "Time": f"{1706659207 + i}.5", "Type": "t", "ID": str(i)}
+        with open(os.path.join(log_dir, name), "w") as f:
+            f.write(json.dumps(ev) + "\n")
+
+
+def _spooled_ids(spool):
+    """Event IDs per spooled payload, sorted by payload size."""
+    import json
+
+    out = []
+    for b in os.listdir(spool):
+        with open(os.path.join(spool, b)) as f:
+            out.append([json.loads(ln)["id"] for ln in f.read().splitlines()])
+    return sorted(out, key=len)
+
+
+def test_watch_caps_files_per_micro_batch(tmp_path, capsys):
+    """The driver holds one micro-batch's JSON text, so `watch` bounds
+    a micro-batch in files, --once (AvailableNow) included."""
+    from fdblog2clickhouse_spark.sinks.clickhouse import MAX_FILES_PER_INSERT
+
+    log_dir, spool = str(tmp_path / "logs"), str(tmp_path / "spool")
+    _one_line_rotations(log_dir, MAX_FILES_PER_INSERT + 1)
+    rc = cli.main(["--spool-dir", spool, "watch", log_dir, "--once",
+                   "--checkpoint", str(tmp_path / "ckpt")])
+    assert rc == 0
+    out = capsys.readouterr().out
+    assert f"batch 0: rows={MAX_FILES_PER_INSERT} " in out
+    assert "batch 1: rows=1 " in out
+    ids = _spooled_ids(spool)
+    assert [len(x) for x in ids] == [1, MAX_FILES_PER_INSERT]
+    assert sorted(sum(ids, [])) == sorted(str(i) for i in range(MAX_FILES_PER_INSERT + 1))
+
+
+def test_ingest_inserts_in_file_groups(tmp_path, capsys):
+    """`ingest` re-reads its input files in groups: a name with a
+    space, a percent sign or glob characters still reads back once."""
+    from fdblog2clickhouse_spark.sinks.clickhouse import MAX_FILES_PER_INSERT
+
+    log_dir, spool = str(tmp_path / "logs"), str(tmp_path / "spool")
+    _one_line_rotations(
+        log_dir, MAX_FILES_PER_INSERT + 1, ["a b.json", "c%41.json", "d[1]{x}.json"]
+    )
+    rc = cli.main(["--spool-dir", spool, "ingest", "--delete-logs", log_dir])
+    assert rc == 0
+    assert f"ingested rows: {MAX_FILES_PER_INSERT + 1}" in capsys.readouterr().out
+    ids = _spooled_ids(spool)
+    assert [len(x) for x in ids] == [1, MAX_FILES_PER_INSERT]
+    assert sorted(sum(ids, [])) == sorted(str(i) for i in range(MAX_FILES_PER_INSERT + 1))
+    assert os.listdir(log_dir) == []
+
+
+def test_delete_logs_refuses_non_local_files():
+    import pytest
+
+    assert cli._local_paths(["file:///logs/a%20b.json", "file:/logs/c.json"]) == [
+        "/logs/a b.json", "/logs/c.json",
+    ]
+    with pytest.raises(SystemExit, match="not a local file"):
+        cli._local_paths(["file:///logs/a.json", "hdfs://nn:8020/logs/a.json"])
+
+
 def test_list_queries_covers_registry(capsys):
     from fdblog2clickhouse_spark import operators
 

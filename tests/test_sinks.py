@@ -726,3 +726,47 @@ def test_optimize_mergetree_crash_mid_publish_heals_on_read(
     assert not os.path.exists(os.path.join(path, storage._FOLD_JOURNAL))
     assert set(optimize_mergetree(spark, path)) == compacted
     _assert_mergetree_rows(spark, path, pre)
+
+
+# The insert runs one Spark job and no Python worker task: the encoded
+# lines come to the driver as Arrow and the driver POSTs them.
+
+def _multi_partition_batch(spark):
+    """A 4-partition micro-batch with no shuffle in its plan, with
+    quotes, a backslash and non-ASCII text for to_json to escape."""
+    return spark.range(0, 103, 1, 4).select(
+        F.col("id"),
+        F.concat(F.lit('m-"é\\'), F.col("id").cast("string")).alias("machine"),
+        F.when(F.col("id") % 3 == 0, F.lit(None)).otherwise(F.col("id") * 0.5).alias("x"),
+    )
+
+
+def test_foreach_batch_runs_one_spark_job(spark, fake_ch, capsys):
+    url, received, _ = fake_ch
+    sc = spark.sparkContext
+    batch = _multi_partition_batch(spark)
+    assert batch.rdd.getNumPartitions() > 1
+    group = "test-foreach-batch-jobs"
+    sc.setJobGroup(group, "ClickHouse sink foreach_batch")
+    try:
+        _http_sink(url).foreach_batch()(batch, 7)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert sum(len(r["body"].splitlines()) for r in received) == 103
+    assert "batch 7: rows=103 " in capsys.readouterr().out
+
+
+def test_insert_returns_count_and_posts_joined_lines(spark, fake_ch):
+    url, received, _ = fake_ch
+    batch = _multi_partition_batch(spark)
+    lines = [r["line"] for r in jsoneachrow(batch).collect()]
+    assert _http_sink(url).insert(batch) == 103
+    assert [r["body"].encode() for r in received] == ["\n".join(lines).encode()]
+
+
+def test_insert_empty_batch_posts_nothing(spark, fake_ch):
+    url, received, _ = fake_ch
+    assert _http_sink(url).insert(_multi_partition_batch(spark).limit(0)) == 0
+    assert received == []

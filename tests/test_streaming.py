@@ -442,3 +442,37 @@ def test_streaming_ivf_insert_redelivery_idempotent(spark, tmp_path):
         spark.read.parquet(codes).select("vec_id").distinct().count()
         == spark.read.parquet(lists).count()
     )
+
+
+def test_quoted_trace_values_normalize_like_numbers(spark, tmp_path):
+    """Real FDB traces quote every value ("Severity": "10"); a quoted
+    line must give the same row as its numeric twin, and a malformed
+    value must become NULL without failing the read."""
+    import json
+
+    from fdblog2clickhouse_spark.sources.trace_json import read_trace_batch
+    from fdblog2clickhouse_spark.streaming.ingest import normalize_trace
+
+    events = [(10, 1706659207.545855, "a"), (40, 1700000000.25, "b"), (20, 1.5, "c")]
+    for name, quote in (("numeric", lambda v: v), ("quoted", str)):
+        os.makedirs(tmp_path / name)
+        with open(tmp_path / name / "trace.json", "w") as f:
+            for sev, t, i in events:
+                f.write(json.dumps({"Severity": quote(sev), "Machine": "m", "LogGroup": "default",
+                                    "Time": quote(t), "Type": "T", "ID": i}) + "\n")
+
+    def rows(name):
+        df = normalize_trace(read_trace_batch(spark, str(tmp_path / name)))
+        return sorted(df.withColumn("time", F.unix_micros("time")).collect())
+
+    numeric = rows("numeric")
+    assert rows("quoted") == numeric
+    assert [(r["severity"], r["time"]) for r in numeric] == [
+        (10, 1706659207545855), (20, 1500000), (40, 1700000000250000),
+    ]
+
+    os.makedirs(tmp_path / "bad")
+    with open(tmp_path / "bad" / "trace.json", "w") as f:
+        f.write(json.dumps({"Severity": "ten", "Time": "soon", "ID": "x"}) + "\n")
+    [bad] = normalize_trace(read_trace_batch(spark, str(tmp_path / "bad"))).collect()
+    assert (bad["severity"], bad["time"], bad["id"]) == (None, None, "x")
