@@ -271,140 +271,59 @@ def cmd_optimize(args) -> int:
 _DOC_SCHEMA = "doc_id long, text string"
 
 
+def _store_source(spark, args, path: str):
+    """A rep-store command's input for its family: JSON-lines docs
+    (doc_id, text) for the text store, an embeddings parquet
+    (vec_id, embedding) for the vector store."""
+    from .operators.dedup_store import TEXT
+
+    if args.family is TEXT:
+        return spark.read.schema(_DOC_SCHEMA).json(path)
+    return spark.read.parquet(path)
+
+
 def cmd_build_store(args) -> int:
-    """Bootstrap the signature store from a document corpus
-    (JSON-lines rotations, doc_id + text) — the backfill step before
-    the `admit` loop runs. The store is the REPRESENTATIVE store
-    (operators/dedup_store.py rep pre-pass): one signature row per
-    distinct token stream (group_id, gh, s0..s15, bk0..bk3) plus a
-    membership side table at `<store>_members` with one
-    (doc_id, gh, group_id) row per doc. Byte-identical boilerplate
-    collapses here, before any signature is computed, so degenerate
-    buckets never reach the admission band join and the store grows
-    O(distinct contents) (VERDICT r9/r10 item #1)."""
-    from pyspark.sql import functions as F
-
+    """`build-store` / `build-vstore`: bootstrap a REPRESENTATIVE
+    store (operators/dedup_store.py rep pre-pass) of the family bound
+    by the subcommand — the backfill step before the admit loop runs.
+    Identical content (token stream, or quantized vector) collapses
+    to one group BEFORE any signature is computed: one signature row
+    per distinct content (group_id, gh, s0..s15, bk0..bk3 MinHash, or
+    group_id, gh, bv0..bv5 sign bands), a membership side table at
+    `<store>_members` with one (doc_id, gh, group_id) row per doc,
+    and the band-partitioned pruning index at `<store>_bands`.
+    Degenerate buckets never reach the admission band join and the
+    store grows O(distinct contents) (VERDICT r9/r10 item #1). The
+    gh/doc_id-bucketed layouts (VERDICT r14) let admit's flat-store
+    classification scan and members anti-join prune to the batch's
+    key buckets."""
     from .operators.dedup_store import (
         banded_path,
+        bootstrap_rep_store,
         members_path,
         read_table,
-        rep_group_frame,
-        rep_reps,
-        rep_signature_frame,
-        write_banded_index,
-        write_table,
+        rep_store_frames,
     )
 
     spark = _spark()
-    # cache the corpus group frame and the rep aggregate: the store
-    # write, the banded index, and the members join all draw on them
-    # — without the cache the most expensive pass (JSON read +
-    # tokenize + md5 of every doc) runs twice on a backfill corpus.
-    g = rep_group_frame(spark.read.schema(_DOC_SCHEMA).json(args.docs)).cache()
-    reps = rep_reps(g).cache()
-    # gh/doc_id-bucketed layouts (VERDICT r14): admit's flat-store
-    # classification scan and members anti-join prune to the batch's
-    # key buckets instead of reading the whole store per step.
-    write_table(
-        rep_signature_frame(reps), args.store, "overwrite", key="gh",
-        buckets=args.buckets,
-    )
-    # the band-partitioned index at <store>_bands: admit's store-side
-    # read prunes to the batch's (band, kb) partitions instead of
-    # scanning the whole store (VERDICT r10 item #4)
-    write_banded_index(
-        read_table(spark, args.store), banded_path(args.store), "overwrite",
-        sized_from=args.store,
-    )
-    write_table(
-        g.select("doc_id", "gh")
-        .join(reps.select("gh", "group_id"), "gh")
-        .select("doc_id", "gh", "group_id"),
-        members_path(args.store),
-        "overwrite",
-        key="doc_id",
-        buckets=args.buckets,
-    )
-    n_groups = read_table(spark, args.store).count()
-    n_docs = read_table(spark, members_path(args.store)).count()
-    g.unpersist(), reps.unpersist()
-    print(f"store groups: {n_groups} members: {n_docs}")
-    return 0
-
-
-def _vector_qn(spark, path: str):
-    """Vectors parquet (vec_id, embedding) → quantized (vec_id, q,
-    nq) — dedup._quantized's spelling over an arbitrary path
-    (dedup.py itself is byte-pinned until its r13 window rotation,
-    so the two-expression quantization is spelled here)."""
-    from pyspark.sql import functions as F
-
-    from .operators.dedup import _QUANT
-
-    emb = spark.read.parquet(path)
-    q = F.transform(
-        F.col("embedding"),
-        lambda x: F.round(x.cast("double") * _QUANT, 0).cast("long"),
-    )
-    return emb.select("vec_id", q.alias("q")).withColumn(
-        "nq",
-        F.aggregate(
-            F.transform(F.col("q"), lambda x: x * x),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ),
-    )
-
-
-def cmd_build_vstore(args) -> int:
-    """Bootstrap the VECTOR representative store from an embeddings
-    parquet — the hyperplane sibling of build-store: byte-identical
-    vectors collapse to one group (gh = md5 of the quantized
-    component stream) BEFORE any signature is computed, one
-    (group_id, gh, bv0..bv5) sign-band row per distinct vector, a
-    `<store>_members` table mapping every vec_id, and the int-keyed
-    `<store>_bands` pruning index."""
-    from pyspark.sql import functions as F
-
-    from .operators.dedup_store import (
-        _EMB_KEY_COLS,
-        banded_path,
-        emb_rep_group_frame,
-        emb_rep_reps,
-        emb_rep_signature_frame,
-        members_path,
-        read_table,
-        write_banded_index,
-        write_table,
-    )
-
-    spark = _spark()
-    g = emb_rep_group_frame(_vector_qn(spark, args.vectors)).cache()
-    reps = emb_rep_reps(g).cache()
-    write_table(
-        emb_rep_signature_frame(spark, reps), args.store, "overwrite",
-        key="gh", buckets=args.buckets,
-    )
-    write_banded_index(
-        read_table(spark, args.store),
+    # cache the corpus group frame: the store write and the members
+    # join both draw on it — without the cache the most expensive
+    # pass (corpus read + group hash of every doc) runs twice on a
+    # backfill corpus.
+    g = args.family.group_frame(_store_source(spark, args, args.source)).cache()
+    bootstrap_rep_store(
+        spark,
+        *rep_store_frames(g, args.family),
+        args.store,
         banded_path(args.store),
-        "overwrite",
-        key_cols=_EMB_KEY_COLS,
-        sized_from=args.store,
-    )
-    write_table(
-        g.select("doc_id", "gh")
-        .join(reps.select("gh", "group_id"), "gh")
-        .select("doc_id", "gh", "group_id"),
         members_path(args.store),
-        "overwrite",
-        key="doc_id",
+        family=args.family,
         buckets=args.buckets,
     )
     n_groups = read_table(spark, args.store).count()
     n_docs = read_table(spark, members_path(args.store)).count()
-    g.unpersist(), reps.unpersist()
-    print(f"vstore groups: {n_groups} members: {n_docs}")
+    g.unpersist()
+    print(f"{args.cmd.removeprefix('build-')} groups: {n_groups} members: {n_docs}")
     return 0
 
 
@@ -444,102 +363,23 @@ def _pairs_note(spark, stats: dict, ev_part: str | None, n_pairs: int) -> str:
     return str(n_pairs)
 
 
-def cmd_admit_vectors(args) -> int:
-    """One VECTOR admission batch against the rep store — the
-    hyperplane sibling of `admit`, running the SAME shared step
-    (rep_admission_step: deterministic full-rotation rescore,
-    idempotent three-table appends, '(kept)' redelivery reporting)
-    with the vector family's band keys, signature builder, and
-    exact-cosine verify. Evidence is GROUP-level (da, db, cosine) —
-    member pairs reconstruct through `<store>_members`, exactly like
-    the text path. `--vectors` must cover candidate vectors (the
-    verify side re-reads raw embeddings; the store persists
-    signatures only — the index/payload split)."""
-    from pyspark.sql import functions as F
-
-    from .operators.dedup_store import (
-        _COSINE_THRESHOLD,
-        _EMB_KEY_COLS,
-        banded_path,
-        cosine_on_candidates_nullsafe,
-        emb_rep_group_frame,
-        emb_rep_reps,
-        emb_rep_signature_frame,
-        members_path,
-        rep_admission_step,
-    )
-
-    spark = _spark()
-    thr = args.threshold if args.threshold is not None else _COSINE_THRESHOLD
-    g_batch = emb_rep_group_frame(_vector_qn(spark, args.batch)).cache()
-    n_batch = g_batch.count()
-
-    def feats_for(cand_ids):
-        return (
-            _vector_qn(spark, args.vectors)
-            .withColumnRenamed("vec_id", "doc_id")
-            .join(cand_ids, "doc_id", "left_semi")
-            .select(F.col("doc_id").alias("vec_id"), "q", "nq")
-        )
-
-    def verify(cand, feats):
-        v = cosine_on_candidates_nullsafe(
-            cand.select(F.col("da").alias("va"), F.col("db").alias("vb")),
-            feats,
-            thr,
-        )
-        return v.select(
-            F.col("va").alias("da"), F.col("vb").alias("db"), "cosine"
-        )
-
-    n_pairs = 0
-    ev_part = _evidence_partition(args.evidence, args.batch)
-
-    def write_evidence(verified) -> None:
-        nonlocal n_pairs
-        if ev_part:
-            verified.write.mode("overwrite").parquet(ev_part)
-            n_pairs = spark.read.parquet(ev_part).count()
-        else:
-            n_pairs = verified.count()
-
-    stats = rep_admission_step(
-        spark,
-        g_batch,
-        args.store,
-        banded_path(args.store),
-        members_path(args.store),
-        feats_for,
-        write_evidence,
-        skip_when_no_new_docs=True,
-        apply_appends=not args.no_append,
-        key_cols=_EMB_KEY_COLS,
-        rep_builder=lambda g: emb_rep_signature_frame(spark, emb_rep_reps(g)),
-        verify=verify,
-    )
-    g_batch.unpersist()
-    appended = bool(not args.no_append and stats.get("scored"))
-    print(
-        f"admit-vectors: batch_vecs={n_batch} new_docs={stats['new_docs']} "
-        f"groups={stats['groups']} new_groups={stats['new_groups']} "
-        f"rotation_pairs={_pairs_note(spark, stats, ev_part, n_pairs)} "
-        f"appended={appended}"
-    )
-    return 0
-
-
 def cmd_admit(args) -> int:
-    """One admission batch against the REPRESENTATIVE store: collapse
-    the rotation to distinct token streams, score only NEW content
-    groups (plus a rescore of store groups the rotation touched)
-    against the store, append the new groups' signatures and every
-    new doc's membership row. Known content never reaches the band
-    join and never grows the signature store — a rotation of 90
-    boilerplate copies costs one group row (VERDICT r9/r10 item #1).
-    Group-level evidence + membership reconstruct every doc-level
-    pair (dedup_store.py block comment proves the expansion exact);
-    evidence is a SET — read it with DISTINCT, since a group touched
-    by several rotations deterministically re-emits its pairs.
+    """`admit` / `admit-vectors`: one admission batch against the
+    REPRESENTATIVE store of the family bound by the subcommand:
+    collapse the rotation to distinct contents, score only NEW
+    content groups (plus a rescore of store groups the rotation
+    touched) against the store, append the new groups' signatures
+    and every new doc's membership row. Known content never reaches
+    the band join and never grows the signature store — a rotation
+    of 90 boilerplate copies costs one group row (VERDICT r9/r10
+    item #1). Group-level evidence (da, db, jaccard | cosine) +
+    membership reconstruct every doc-level pair (dedup_store.py
+    block comment proves the expansion exact); evidence is a SET —
+    read it with DISTINCT, since a group touched by several
+    rotations deterministically re-emits its pairs. `--corpus` /
+    `--vectors` must cover the candidates (the verify side re-reads
+    them; the store persists signatures only — the index/payload
+    split).
 
     EXACTLY-ONCE under crash-retry / at-least-once delivery, by one
     mechanism: the rotation's scoring is a DETERMINISTIC function of
@@ -559,30 +399,23 @@ def cmd_admit(args) -> int:
     Full redelivery of a completed rotation (no member-new docs)
     skips everything — the previous partition stands, and would be
     byte-identical if regenerated anyway."""
-    from pyspark.sql import functions as F
-
     from .operators.dedup_store import (
         banded_path,
         members_path,
         rep_admission_step,
-        rep_group_frame,
-        shingle_frame,
     )
 
+    family = args.family
     spark = _spark()
-    batch = spark.read.schema(_DOC_SCHEMA).json(args.batch)
-    g_batch = rep_group_frame(batch).cache()
+    g_batch = family.group_frame(_store_source(spark, args, args.batch)).cache()
     n_batch = g_batch.count()
 
-    # a group id IS its rep's doc_id, so --corpus (which must cover
-    # candidate docs' text) serves the verify side, pruned to the
-    # candidate reps BEFORE the shingle computation (at 100 TB the
-    # corpus read is the cost).
-    def feats_for(cand_ids):
-        corpus = spark.read.schema(_DOC_SCHEMA).json(args.corpus).join(
-            cand_ids, "doc_id", "left_semi"
-        )
-        return shingle_frame(corpus).select("doc_id", F.col("sh").alias("fs"))
+    # a group id IS its rep's doc_id, so the verify side is the
+    # corpus's group frame, pruned to the candidate reps BEFORE the
+    # feature computation (at 100 TB the corpus read is the cost).
+    feats_for = family.feats_for(
+        family.group_frame(_store_source(spark, args, args.corpus))
+    )
 
     n_pairs = 0
     ev_part = _evidence_partition(args.evidence, args.batch)
@@ -607,6 +440,7 @@ def cmd_admit(args) -> int:
         members_path(args.store),
         feats_for,
         write_evidence,
+        family=family,
         threshold=args.threshold,
         skip_when_no_new_docs=True,
         apply_appends=not args.no_append,
@@ -614,7 +448,7 @@ def cmd_admit(args) -> int:
     g_batch.unpersist()
     appended = bool(not args.no_append and stats.get("scored"))
     print(
-        f"admit: batch_docs={n_batch} new_docs={stats['new_docs']} "
+        f"{args.cmd}: batch_{args.unit}={n_batch} new_docs={stats['new_docs']} "
         f"groups={stats['groups']} new_groups={stats['new_groups']} "
         f"rotation_pairs={_pairs_note(spark, stats, ev_part, n_pairs)} "
         f"appended={appended}"
@@ -890,6 +724,7 @@ def cmd_refresh_ivf(args) -> int:
         split_ivf_lists,
         train_pq_codebook,
     )
+    from .operators.dedup import quantize
 
     # --split-trigger tunes the AUTOMATIC split decision, which
     # --max-list (manual split) and --no-auto-split each disable —
@@ -909,7 +744,7 @@ def cmd_refresh_ivf(args) -> int:
                 "that flag disables) — drop one"
             )
     spark = _spark()
-    qn = _vector_qn(spark, args.vectors)
+    qn = quantize(spark.read.parquet(args.vectors))
     stats = refresh_ivf_centroids(spark, qn, args.codebook, args.lists)
     msg = (
         f"refreshed: lists={stats['n_lists']} moved={stats['moved']} "
@@ -958,11 +793,12 @@ def cmd_probe_recall(args) -> int:
     still fits the corpus; a drop means inserts have drifted and a
     refresh is due. The probe is read-only."""
     from .operators.ann_store import ivf_recall_probe
+    from .operators.dedup import quantize
 
     spark = _spark()
     r = ivf_recall_probe(
         spark,
-        _vector_qn(spark, args.vectors),
+        quantize(spark.read.parquet(args.vectors)),
         args.codebook,
         args.lists,
         n_queries=args.queries,
@@ -998,9 +834,10 @@ def cmd_build_ivfpq(args) -> int:
         reencode_ivf_codes,
         train_pq_codebook,
     )
+    from .operators.dedup import quantize
 
     spark = _spark()
-    qn = _vector_qn(spark, args.vectors).cache()
+    qn = quantize(spark.read.parquet(args.vectors)).cache()
     cb_path = os.path.join(args.index, "codebook")
     lists_path = os.path.join(args.index, "lists")
     cent = qn.orderBy("vec_id").limit(args.centroids).select(
@@ -1033,9 +870,10 @@ def cmd_insert_vectors(args) -> int:
     of the same batch appends nothing twice — already-present
     vec_ids are reported as skipped."""
     from .operators.ann_store import ivf_insert_batch
+    from .operators.dedup import quantize
 
     spark = _spark()
-    qn_b = _vector_qn(spark, args.batch).cache()
+    qn_b = quantize(spark.read.parquet(args.batch)).cache()
     try:
         r = ivf_insert_batch(spark, qn_b, args.codebook, args.lists)
     except RuntimeError as e:
@@ -1061,9 +899,10 @@ def cmd_search_ivfpq(args) -> int:
     node; no training, no raw-vector scan beyond the query set).
     Queries are the --queries lowest vec_ids of --vectors."""
     from .operators.ann_store import ivf_codes_path, ivfpq_store_search_plan
+    from .operators.dedup import quantize
 
     spark = _spark()
-    qn = _vector_qn(spark, args.vectors)
+    qn = quantize(spark.read.parquet(args.vectors))
     queries = qn.orderBy("vec_id").limit(args.queries)
     out = ivfpq_store_search_plan(
         spark,
@@ -1172,15 +1011,18 @@ def main(argv: list[str] | None = None) -> int:
     so.add_argument("--target-files", type=int, default=1)
     so.set_defaults(fn=cmd_optimize)
 
+    from .operators.dedup_store import TEXT, VECTOR
+
     sb = sub.add_parser("build-store")
-    sb.add_argument("docs", help="JSON-lines doc corpus (doc_id, text)")
+    sb.add_argument("source", metavar="docs",
+                    help="JSON-lines doc corpus (doc_id, text)")
     sb.add_argument("store", help="signature-store parquet path")
     sb.add_argument("--buckets", type=int, default=None,
                     help="key-bucket count for the flat store (gh) and "
                          "members (doc_id) layouts — admission reads "
                          "prune to the batch's buckets (default 16; "
                          "size to batch_keys << buckets at scale)")
-    sb.set_defaults(fn=cmd_build_store)
+    sb.set_defaults(fn=cmd_build_store, family=TEXT)
 
     sm = sub.add_parser("admit")
     sm.add_argument("batch", help="JSON-lines batch of new docs")
@@ -1189,23 +1031,25 @@ def main(argv: list[str] | None = None) -> int:
                     help="JSON-lines docs covering candidate texts (verify side)")
     sm.add_argument("--evidence", default=None,
                     help="append verified pairs to this parquet path")
-    sm.add_argument("--threshold", type=float, default=0.5)
+    sm.add_argument("--threshold", type=float, default=None,
+                    help="Jaccard threshold (default: the family constant)")
     sm.add_argument("--no-append", action="store_true",
                     help="score only; do not grow the store")
-    sm.set_defaults(fn=cmd_admit)
+    sm.set_defaults(fn=cmd_admit, family=TEXT, unit="docs")
 
     sbv = sub.add_parser("build-vstore")
-    sbv.add_argument("vectors", help="embeddings parquet (vec_id, embedding)")
+    sbv.add_argument("source", metavar="vectors",
+                     help="embeddings parquet (vec_id, embedding)")
     sbv.add_argument("store", help="hyperplane-store parquet path")
     sbv.add_argument("--buckets", type=int, default=None,
                      help="key-bucket count for the flat store (gh) and "
                           "members (doc_id) layouts (default 16)")
-    sbv.set_defaults(fn=cmd_build_vstore)
+    sbv.set_defaults(fn=cmd_build_store, family=VECTOR)
 
     smv = sub.add_parser("admit-vectors")
     smv.add_argument("batch", help="vectors parquet batch (vec_id, embedding)")
     smv.add_argument("store", help="hyperplane-store parquet path")
-    smv.add_argument("--vectors", required=True,
+    smv.add_argument("--vectors", dest="corpus", required=True,
                      help="embeddings parquet covering candidate vectors "
                           "(verify side)")
     smv.add_argument("--evidence", default=None,
@@ -1214,7 +1058,7 @@ def main(argv: list[str] | None = None) -> int:
                      help="cosine threshold (default: the family constant)")
     smv.add_argument("--no-append", action="store_true",
                      help="score only; do not grow the store")
-    smv.set_defaults(fn=cmd_admit_vectors)
+    smv.set_defaults(fn=cmd_admit, family=VECTOR, unit="vecs")
 
     sk = sub.add_parser("compact-store")
     sk.add_argument("store")

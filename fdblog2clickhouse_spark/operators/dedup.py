@@ -341,8 +341,8 @@ def cosine_on_candidates(
     # threshold) while Spark 4's ANSI default RAISES — so a corpus
     # containing a zero embedding scores instead of crashing. Output
     # is bit-identical wherever no zero vector appears (try_divide ≡ /
-    # for nonzero divisors). Same spelling as the store family's
-    # cosine_on_candidates_nullsafe (dedup_store.py).
+    # for nonzero divisors). The rep-store families verify with this
+    # same function (dedup_store.py).
     cos = F.try_divide(
         _dot("qa", "qb").cast("double"),
         F.sqrt(F.col("na").cast("double")) * F.sqrt(F.col("nb").cast("double")),
@@ -993,16 +993,22 @@ WHERE i / (ca.n + cb.n - i) >= {_JACCARD_THRESHOLD}
 
 # ------------------------------------------- embedding_neardup
 
-def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Integer-quantized embeddings (+ exact integer squared norm).
-    Quantization makes dot products exact and summation-order-free —
-    the cross-engine determinism backbone for all vector ops."""
-    e = table(spark, sf_dir, "embeddings")
-    q = F.transform(
-        F.col("embedding"),
-        lambda x: F.round(x.cast("double") * _QUANT, 0).cast("long"),
+def quantize(frame: DataFrame, *keep: str) -> DataFrame:
+    """(vec_id, *keep, embedding) → (vec_id, *keep, q, nq):
+    integer-quantized components plus their exact integer squared
+    norm. Quantization makes dot products exact and
+    summation-order-free — the cross-engine determinism backbone for
+    all vector ops. A frame that already carries the quantized `q`
+    (an integer vector stream) keeps it and only gains nq."""
+    q = (
+        F.col("q")
+        if "q" in frame.columns
+        else F.transform(
+            F.col("embedding"),
+            lambda x: F.round(x.cast("double") * _QUANT, 0).cast("long"),
+        )
     )
-    return e.select("vec_id", "label", q.alias("q")).withColumn(
+    return frame.select("vec_id", *keep, q.alias("q")).withColumn(
         "nq",
         F.aggregate(
             F.transform(F.col("q"), lambda x: x * x),
@@ -1010,6 +1016,11 @@ def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda acc, x: acc + x,
         ),
     )
+
+
+def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The embeddings table, quantized: (vec_id, label, q, nq)."""
+    return quantize(table(spark, sf_dir, "embeddings"), "label")
 
 
 _QUANT_CTE = f"""

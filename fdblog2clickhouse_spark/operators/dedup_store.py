@@ -52,10 +52,15 @@ what one batch appended, the next batch's scoring reads.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from dataclasses import dataclass
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.text import shingles_expr, tokens
 from ..session import overlap
+from ..sources.tables import table
 from ..storage import (
     commit,
     heal_swap,
@@ -70,7 +75,6 @@ from ..storage import (
 )
 from .dedup import (
     _COSINE_THRESHOLD,
-    _dot,
     _FIRST_BAND_GATE_SQL,
     _HYPERPLANE_GATE_SQL,
     _JACCARD_THRESHOLD,
@@ -87,9 +91,11 @@ from .dedup import (
     _neardup_planes,
     _neardup_planes_values_sql,
     _quantized,
+    cosine_on_candidates,
     h32_spark_sql,
     h32_sql,
     jaccard_on_candidates,
+    quantize,
     shingles_cte_sql,
 )
 
@@ -128,8 +134,6 @@ def shingle_frame(d: DataFrame) -> DataFrame:
     a stream micro-batch), so batch and streaming admission share
     one feature path. Docs with < 3 tokens have no shingles and are
     excluded (same rule as every MinHash op and its oracle)."""
-    from ..functions.text import shingles_expr, tokens
-
     t = d.select("doc_id", tokens(F.col("text")).alias("t")).where(
         F.size("t") >= 3
     )
@@ -421,21 +425,20 @@ def rep_group_frame(d: DataFrame) -> DataFrame:
     stream (tokens contain no whitespace, so the single-space join is
     injective). Docs with < 3 tokens have no shingles/signature and
     are excluded — same eligibility rule as `shingle_frame`."""
-    from ..functions.text import tokens
-
     t = d.select("doc_id", tokens(F.col("text")).alias("t")).where(
         F.size("t") >= 3
     )
     return t.select("doc_id", F.md5(F.concat_ws(" ", "t")).alias("gh"), "t")
 
 
-def rep_reps(g: DataFrame) -> DataFrame:
-    """Group frame → one row per content group: (gh, group_id, t).
-    Same gh ⟹ identical token array, so `first(t)` is exact (not a
-    sample) and the whole rep choice is ONE aggregate — no join back
-    against the group frame."""
+def rep_reps(g: DataFrame, payload: str = "t") -> DataFrame:
+    """Group frame → one row per content group: (gh, group_id,
+    payload) — the token array `t` (text) or the quantized vector `q`.
+    Same gh ⟹ identical payload, so `first` is exact (not a sample)
+    and the whole rep choice is ONE aggregate — no join back against
+    the group frame."""
     return g.groupBy("gh").agg(
-        F.min("doc_id").alias("group_id"), F.first("t").alias("t")
+        F.min("doc_id").alias("group_id"), F.first(payload).alias(payload)
     )
 
 
@@ -450,7 +453,6 @@ def rep_signature_frame(reps: DataFrame) -> DataFrame:
     joined back (the joined-back spelling cost two extra corpus
     shuffles per admission step, measured in the round-11 rep-op
     cost audit)."""
-    from ..functions.text import shingles_expr
     from .dedup import _MINHASH_A, _MINHASH_B, _MINHASH_P
 
     hashed = reps.select(
@@ -489,6 +491,219 @@ def members_path(store: str) -> str:
     the store dir so parquet listing of the signatures never sees
     it."""
     return store.rstrip("/") + "_members"
+
+
+# ------------------------- vector representative store
+#
+# VERDICT r11's one standing `weak`: byte-identical documents produce
+# byte-identical embeddings under any deterministic embedder, so the
+# text kernel's mega-bucket mode existed verbatim on the vector side
+# — a degenerate sign-band bucket of identical vectors made the band
+# join quadratic in the bucket and grew the store with copies. The
+# fix is the SAME rep pre-pass, generalized over the hyperplane
+# band-key columns: group hash = md5 of the quantized component
+# stream (identical q arrays have identical sign bands AND identical
+# exact cosines to every other vector, so the collapse argument
+# carries over verbatim). The one family-specific subtlety lives in
+# the expansion: within-group pairs use the oracle's own self-cosine
+# arithmetic, never a 1.0 literal (see expand_group_evidence).
+
+
+def emb_rep_group_frame(qn: DataFrame) -> DataFrame:
+    """Quantized vectors → the vector group frame (doc_id, gh, q,
+    nq): gh = md5 of the exact quantized component stream (decimal
+    longs joined by a separator no long contains; NULL elements are
+    encoded to a sentinel OUTSIDE the decimal-long alphabet first,
+    because concat_ws silently skips NULLs and would otherwise hash
+    [1,NULL,2] and [1,2] to the same group — so the encoding is
+    injective over malformed embeddings too, ADVICE r12). doc_id
+    carries the vec_id under the name the shared step machinery
+    uses. Eligibility mirrors the text side's ≥3-token rule: an EMPTY
+    quantized vector is excluded here, at the group-frame level — it
+    can produce no band rows (the uncapped op and the oracle emit
+    none for it) and no non-NULL cosine, and admitting it into
+    membership would make every later batch's identical empty vector
+    classify as NEW content forever, since its group never gets a
+    signature row."""
+    return qn.where(F.size("q") > 0).select(
+        F.col("vec_id").alias("doc_id"),
+        F.md5(
+            F.concat_ws(
+                " ",
+                F.transform(
+                    F.col("q"), lambda x: F.coalesce(x.cast("string"), F.lit("∅"))
+                ),
+            )
+        ).alias("gh"),
+        "q",
+        "nq",
+    )
+
+
+def emb_rep_signature_frame(reps: DataFrame) -> DataFrame:
+    """Rep rows → one persistable hyperplane signature row PER GROUP:
+    (group_id, gh, bv0..bv5) — the IN-ROW sign-band spelling: each
+    plane's dot product is one `zip_with` aggregate against a 64-long
+    weight-array literal, the 8 planes of a band fold into one bit-OR
+    sum, all inside whole-stage codegen with ZERO shuffles (the
+    exploded posexplode → broadcast-join → double-groupBy spelling
+    costs two shuffles per call and this frame is built 3× per
+    admission lifecycle — base + both batches' new groups).
+    Interleaved median-of-5 A/B at sf0.1: 0.64 s → 0.26 s per build,
+    outputs byte-identical (round-12 rep-op cost audit). This is the
+    documented crossover case where in-row wins: the signature is
+    PERSISTED (no cache-shared verify join re-derives it — the
+    verify side reads raw q vectors, not signatures)."""
+    bb = _NEARDUP_LSH_BAND_BITS
+    w: dict[int, dict[int, int]] = {}
+    for p, i, wt in _neardup_planes():
+        w.setdefault(p, {})[i] = wt
+    dim = max(max(d) for d in w.values()) + 1
+    # both sides sliced to min(size(q), dim): zip_with NULL-pads the
+    # shorter array, which would poison the whole fold for any
+    # corpus whose vectors aren't exactly `dim`-dimensional — the
+    # exploded spelling this replaces intersected indices instead
+    # (caught by the hypothesis rep≡uncapped property on 4-dim
+    # corpora)
+    ln = f"least(size(q), {dim})"
+    cols = []
+    for b in range(_NEARDUP_LSH_BANDS):
+        terms = []
+        for j in range(bb):
+            p = b * bb + j
+            arr = "array(" + ",".join(
+                f"{w[p][i]}L" for i in range(dim)
+            ) + ")"
+            dot = (
+                f"aggregate(zip_with(slice(q, 1, {ln}), "
+                f"slice({arr}, 1, {ln}), (x, y) -> x * y), "
+                "0L, (a, x) -> a + x)"
+            )
+            terms.append(f"(CASE WHEN {dot} >= 0 THEN {1 << j} ELSE 0 END)")
+        cols.append(F.expr(" + ".join(terms)).cast("int").alias(f"bv{b}"))
+    # An EMPTY q would fold to dot = 0 on every plane (CASE >= 0 true
+    # → all-bits-set bands) while the exploded spelling and the oracle
+    # emit NO band rows for it — filter it out here so the two
+    # signature spellings stay structurally equivalent (ADVICE r12).
+    # Convergence was never at risk (empty-q cosines are NULL,
+    # threshold-excluded), but the spurious candidates and store row
+    # are gone now.
+    return reps.where(F.size("q") > 0).select("group_id", "gh", *cols)
+
+
+# ------------------------------------------------- rep-store families
+#
+# The rep store's one design decision is its FAMILY: MinHash over
+# token streams or hyperplane sign bands over quantized vectors. A
+# family holds only what differs between the two; the bootstrap, the
+# admission step, the proof lifecycles, the streaming op and the CLI
+# all take it as `family=` and are otherwise one code path.
+
+_EMB_KEY_COLS = [f"bv{b}" for b in range(_NEARDUP_LSH_BANDS)]
+
+
+def _cosine_verify(
+    cand: DataFrame, feats: DataFrame, threshold: float
+) -> DataFrame:
+    v = cosine_on_candidates(
+        cand.select(F.col("da").alias("va"), F.col("db").alias("vb")),
+        feats,
+        threshold,
+    )
+    return v.select(F.col("va").alias("da"), F.col("vb").alias("db"), "cosine")
+
+
+def _vector_feats(g: DataFrame) -> DataFrame:
+    return g.select(F.col("doc_id").alias("vec_id"), "q", "nq")
+
+
+def _self_cosines(g: DataFrame) -> DataFrame:
+    """Group-frame rows → (group_id, cosine): the pair expression
+    evaluated at qa = qb — dot(q,q) / (sqrt(nq)·sqrt(nq)), THE SAME
+    code path (`cosine_on_candidates`) every cross pair runs,
+    threshold included, so a within-group member pair inherits
+    exactly the value the oracle computes for it (and a zero-vector
+    group, whose self-cosine is null, is excluded on both engines
+    alike)."""
+    pairs = g.select(F.col("doc_id").alias("va"), F.col("doc_id").alias("vb"))
+    return cosine_on_candidates(
+        pairs, _vector_feats(g), _COSINE_THRESHOLD
+    ).select(F.col("va").alias("group_id"), "cosine")
+
+
+@dataclass(frozen=True)
+class StoreFamily:
+    """What differs between the two rep-store families.
+
+    group_frame — source rows → group frame (doc_id, gh, payload, …);
+    payload     — the content column the rep aggregate carries;
+    signatures  — rep rows → signature rows (group_id, gh, *key_cols);
+    feats       — group-frame rows → verify features for `verify`;
+    verify      — (cand (da, db), feats, threshold) → (da, db, value);
+    self_values — multi-member groups' group-frame rows → (group_id,
+                  value) for within-group pairs, or None when a
+                  within-group pair's value is exactly 1.0."""
+
+    group_frame: Callable[[DataFrame], DataFrame]
+    payload: str
+    signatures: Callable[[DataFrame], DataFrame]
+    key_cols: list[str]
+    feats: Callable[[DataFrame], DataFrame]
+    verify: Callable[[DataFrame, DataFrame, float], DataFrame]
+    threshold: float
+    value_col: str
+    out_cols: tuple[str, str]
+    self_values: Callable[[DataFrame], DataFrame] | None = None
+
+    def feats_for(self, g: DataFrame):
+        """`rep_admission_step`'s feats_for over a group frame: a
+        group id IS its rep's doc_id, so candidate features come
+        straight from `g`, pruned to the candidates before the
+        feature projection."""
+        return lambda cand_ids: self.feats(g.join(cand_ids, "doc_id", "left_semi"))
+
+
+TEXT = StoreFamily(
+    group_frame=rep_group_frame,
+    payload="t",
+    signatures=rep_signature_frame,
+    key_cols=[f"bk{b}" for b in range(_N_BANDS)],
+    feats=lambda g: g.select(
+        "doc_id", F.array_distinct(F.expr(shingles_expr("t", 3))).alias("fs")
+    ),
+    verify=jaccard_on_candidates,
+    threshold=_JACCARD_THRESHOLD,
+    value_col="jaccard",
+    out_cols=("da", "db"),
+)
+
+VECTOR = StoreFamily(
+    group_frame=lambda frame: emb_rep_group_frame(quantize(frame)),
+    payload="q",
+    signatures=emb_rep_signature_frame,
+    key_cols=_EMB_KEY_COLS,
+    feats=_vector_feats,
+    verify=_cosine_verify,
+    threshold=_COSINE_THRESHOLD,
+    value_col="cosine",
+    out_cols=("va", "vb"),
+    self_values=_self_cosines,
+)
+
+
+def rep_store_frames(
+    g: DataFrame, family: StoreFamily = TEXT
+) -> tuple[DataFrame, DataFrame]:
+    """Group frame → the bootstrap's (signature rows, members rows):
+    one signature row per content group, one (doc_id, gh, group_id)
+    membership row per doc."""
+    reps = rep_reps(g, family.payload)
+    members = (
+        g.select("doc_id", "gh")
+        .join(reps.select("gh", "group_id"), "gh")
+        .select("doc_id", "gh", "group_id")
+    )
+    return family.signatures(reps), members
 
 
 # ---------------------- band-partitioned store index (scan pruning)
@@ -1393,13 +1608,16 @@ def bootstrap_rep_store(
     band_path: str,
     mem_path: str,
     *,
-    key_cols: list[str] | None = None,
+    family: StoreFamily = TEXT,
+    buckets: int | None = None,
 ) -> None:
     """Fresh three-table rep-store bootstrap (flat signatures, banded
-    index, members), shared by the proof ops and the streaming
-    lifecycles: the flat store is written first (the banded index
-    auto-sizes from its just-written marker via `sized_from`), then
-    the banded index and the members table build CONCURRENTLY (r19,
+    index, members; `rep_store_frames` builds the two frames), shared
+    by the proof ops, the streaming op and `build-store` /
+    `build-vstore` (which pass their `--buckets`): the flat store is
+    written first (the banded index auto-sizes from its just-written
+    marker via `sized_from`), then the banded index and the members
+    table build CONCURRENTLY (r19,
     guide §2.6 — they write to different dirs and neither reads the
     other's output, so a bootstrap pays max(banded, members) instead
     of their sum). Appends never come through here; the
@@ -1407,23 +1625,23 @@ def bootstrap_rep_store(
     crashed BOOTSTRAP is re-run from scratch wholesale (every caller
     builds into a fresh root), so the banded/members completion order
     is not load-bearing."""
-    write_table(sig_frame, sig_path, "overwrite", key="gh")
+    write_table(sig_frame, sig_path, "overwrite", key="gh", buckets=buckets)
     overlap(
         lambda: write_table(
-            members_frame, mem_path, "overwrite", key="doc_id"
+            members_frame, mem_path, "overwrite", key="doc_id", buckets=buckets
         ),
         lambda: write_banded_index(
             read_table(spark, sig_path),
             band_path,
             "overwrite",
+            key_cols=family.key_cols,
             sized_from=sig_path,
-            **({"key_cols": key_cols} if key_cols else {}),
         ),
     )
 
 
 def rep_admission_frames(
-    store_sigs: DataFrame, g_batch: DataFrame, rep_builder=None
+    store_sigs: DataFrame, g_batch: DataFrame, family: StoreFamily = TEXT
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
     """Classify one batch's content groups against the persisted rep
     store and build the band join's batch side. Returns
@@ -1457,16 +1675,12 @@ def rep_admission_frames(
     flat store ~5× per step (classification 12 s + 28 s hiding in the
     'pruned' phase, both dominated by repeated store scans).
 
-    `rep_builder` maps the new-group subset of the batch group frame
-    to its signature rows (group_id, gh, *key_cols) — the MinHash
-    rep build by default; the vector store passes its hyperplane
-    sibling (the frames logic is family-agnostic)."""
-    rep_builder = rep_builder or (lambda g: rep_signature_frame(rep_reps(g)))
+    Only the new groups' signature build is family-specific."""
     bg = g_batch.select("gh").distinct()
     touched_sigs = store_sigs.join(bg, "gh", "left_semi").cache()
     touched = touched_sigs.select("gh", "group_id")
     g_new = g_batch.join(touched.select("gh"), "gh", "left_anti")
-    new_sigs = rep_builder(g_new)
+    new_sigs = family.signatures(rep_reps(g_new, family.payload))
     batch_side = new_sigs.unionByName(touched_sigs)
     # is_new tags the union so the step reads BOTH stats (total
     # groups, new groups) off one aggregation job instead of two
@@ -1492,19 +1706,17 @@ def rep_admission_step(
     feats_for,
     write_evidence,
     *,
-    threshold: float = _JACCARD_THRESHOLD,
+    family: StoreFamily = TEXT,
+    threshold: float | None = None,
     skip_when_no_new_docs: bool = False,
     apply_appends: bool = True,
-    key_cols: list[str] | None = None,
-    rep_builder=None,
-    verify=None,
 ) -> dict:
     """ONE admission step against a persisted rep store — the single
     source of truth for the ordering-critical sequence the CLI
-    (`admit`), the batch proof op, and the streaming sibling all
-    run (review finding, round 11: three hand-maintained copies had
-    already drifted — the streaming copy lost the members
-    anti-join):
+    (`admit` / `admit-vectors`), the batch proof ops, and the
+    streaming op all run, for either store family (three
+    hand-maintained copies had once drifted apart — the streaming copy
+    lost the members anti-join):
 
     1. docs already in members are identified (exactly-once under
        redelivery; `skip_when_no_new_docs` makes a fully-delivered
@@ -1518,21 +1730,15 @@ def rep_admission_step(
        read dropDuplicates, the gh classification, the doc_id
        anti-join).
 
-    `feats_for(cand_ids)` supplies verify-side features for candidate
-    group reps (corpus JSON in the CLI, a cached group frame in the
-    operators): (doc_id, fs) shingle sets for the MinHash store, the
-    quantized-vector frame for the hyperplane store. `key_cols` /
-    `rep_builder` / `verify` generalize the step over the two store
-    families — defaults are the MinHash spelling (bk0..bk3, the rep
-    MinHash signature build, exact-Jaccard verification at
-    `threshold`); the vector store passes bv0..bv5, the hyperplane
-    signature build, and exact-cosine verification. Returns the
-    step's counts."""
-    key_cols = key_cols or [f"bk{b}" for b in range(_N_BANDS)]
-    if verify is None:
-        verify = lambda cand, feats: jaccard_on_candidates(  # noqa: E731
-            cand, feats, threshold
-        )
+    `feats_for(cand_ids)` supplies `family.feats` rows for the
+    candidate group reps (`family.feats_for` over the corpus in the
+    CLI, over a cached group frame in the operators). `family` (TEXT
+    by default, or VECTOR) supplies the band key columns, the new
+    groups' signature build and the exact verify, at `threshold`
+    (default: the family's). Returns the step's counts."""
+    key_cols = family.key_cols
+    if threshold is None:
+        threshold = family.threshold
     # Heal crashed maintenance swaps BEFORE any read: a fold/rebucket
     # interrupted between its two renames leaves the table only at
     # path+'.old', and the next caller is far more likely to be an
@@ -1613,7 +1819,7 @@ def rep_admission_step(
         spark, sig_path, g_batch.select("gh"), vals=sig_vals
     )
     group_map, new_sigs, batch_side, touched_sigs = rep_admission_frames(
-        store_sigs, g_batch, rep_builder
+        store_sigs, g_batch, family
     )
     group_map, new_sigs = group_map.cache(), new_sigs.cache()
     store_rows = _apply_gdelta(
@@ -1665,7 +1871,7 @@ def rep_admission_step(
     n_groups, n_new_groups = srow["g"], srow["n"]
     if n_mem_new is None:
         n_mem_new = srow["nd"]
-    verified = verify(cand, feats)
+    verified = family.verify(cand, feats, threshold)
     if apply_appends:
         # banded BEFORE flat: a crash between the two re-admits the
         # group as new next retry and the index read's dropDuplicates
@@ -1706,71 +1912,135 @@ def rep_admission_step(
     }
 
 
-def dedup_store_rep_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`dedup_store_admission` with the production exact-dedup
-    representative pre-pass composed in (block comment above): the
-    same two-batch read-append-read lifecycle, but the persisted
-    store holds ONE signature row per distinct token stream plus a
-    (doc_id, gh, group_id) membership table, and the band join only
-    ever sees group representatives. The returned frame is the
-    group-level evidence EXPANDED back through membership to member
-    pairs — the oracle is the uncapped op's one-shot union SQL,
-    unchanged, so the hash match proves the pre-pass is
+def _rep_paths(root: str) -> tuple[str, str, str]:
+    return root + "/signatures", root + "/bands", root + "/members"
+
+
+def _rep_lifecycle(
+    spark: SparkSession, source: DataFrame, family: StoreFamily, name: str
+) -> tuple[str, DataFrame]:
+    """A proof op's fresh scratch rep store: `source`'s group frame,
+    CACHED (the bootstrap, every step's verify features and the
+    expansion all draw on it — a production verifier recomputes
+    features for candidate reps; the store persists signatures only),
+    with its base slice bootstrapped under <root>."""
+    from .sinkcheck import scratch_dir
+
+    root = scratch_dir(name)
+    g_all = family.group_frame(source).cache()
+    bootstrap_rep_store(
+        spark,
+        *rep_store_frames(g_all.where(_base_pred(F.col("doc_id"))), family),
+        *_rep_paths(root),
+        family=family,
+    )
+    return root, g_all
+
+
+def _rep_admit(
+    spark: SparkSession,
+    family: StoreFamily,
+    root: str,
+    g_all: DataFrame,
+    g_batch: DataFrame,
+    **step,
+) -> dict:
+    """One `rep_admission_step` of a proof op: verify features from
+    the cached group frame, evidence appended under <root>/evidence."""
+    return rep_admission_step(
+        spark,
+        g_batch,
+        *_rep_paths(root),
+        family.feats_for(g_all),
+        lambda verified: verified.write.mode("append").parquet(
+            root + "/evidence"
+        ),
+        family=family,
+        **step,
+    )
+
+
+def _rep_result(
+    spark: SparkSession,
+    family: StoreFamily,
+    root: str,
+    g_all: DataFrame,
+    *,
+    live: bool = False,
+    store_pred=None,
+) -> DataFrame:
+    """A proof op's output: the group evidence expanded through
+    membership (LIVE membership after a retraction), written under
+    <root>/result and read back in the family's output columns."""
+    sig_path, _, mem_path = _rep_paths(root)
+    self_values = None
+    if family.self_values is not None:
+        # self-values are only consumed by WITHIN-group pairs, which
+        # exist only for groups with ≥ 2 members — restrict the frame
+        # to those (on a mostly-distinct corpus this is near-empty,
+        # and the expansion's self-value join stays
+        # O(groups-with-dups), never O(groups); bench audit, round 12)
+        m = (
+            live_members(spark, mem_path, sig_path)
+            if live
+            else read_table(spark, mem_path)
+        )
+        multi = (
+            m.groupBy("group_id")
+            .count()
+            .where(F.col("count") > 1)
+            .select(F.col("group_id").alias("doc_id"))
+        )
+        self_values = family.self_values(g_all.join(multi, "doc_id", "left_semi"))
+    expand_group_evidence(
+        spark,
+        root + "/evidence",
+        mem_path,
+        value_col=family.value_col,
+        self_values=self_values,
+        sig_path=sig_path if live else None,
+        store_pred=store_pred,
+    ).write.mode("overwrite").parquet(root + "/result")
+    g_all.unpersist()
+    a, b = family.out_cols
+    return spark.read.parquet(root + "/result").select(
+        F.col("da").alias(a), F.col("db").alias(b), family.value_col
+    )
+
+
+def rep_store_admission(
+    spark: SparkSession, source: DataFrame, family: StoreFamily, name: str
+) -> DataFrame:
+    """The uncapped admission op with the production exact-dedup
+    representative pre-pass composed in (block comment above), for
+    either family: the same two-batch read-append-read lifecycle, but
+    the persisted store holds ONE signature row per distinct content
+    (token stream, or quantized vector) plus a (doc_id, gh, group_id)
+    membership table, and the band join only ever sees group
+    representatives. The returned frame is the group-level evidence
+    EXPANDED back through membership to member pairs — cross-group
+    pairs inherit the rep pair's value, within-group pairs carry the
+    family's self-value. The oracle is the uncapped op's one-shot
+    union SQL, unchanged, so the hash match proves the pre-pass
     semantics-preserving while the kernel's working set shrank from
     O(docs) to O(distinct contents). The store side of every band
     join comes through the band-partitioned index's PRUNED read
     (`pruned_store_rows` — only partitions the batch's band keys can
     match are opened), so the oracle covers the scan-pruning design
     too."""
-    from ..functions.text import shingles_expr
-    from ..sources.tables import table
-    from .sinkcheck import scratch_dir
-
-    root = scratch_dir("rep_store")
-    sig_path = root + "/signatures"
-    band_path = root + "/bands"
-    mem_path = root + "/members"
-    evidence = root + "/evidence"
-
-    g_all = rep_group_frame(table(spark, sf_dir, "documents")).cache()
-
-    g_base = g_all.where(_base_pred(F.col("doc_id")))
-    reps_base = rep_reps(g_base)
-    bootstrap_rep_store(
-        spark,
-        rep_signature_frame(reps_base),
-        g_base.select("doc_id", "gh")
-        .join(reps_base.select("gh", "group_id"), "gh")
-        .select("doc_id", "gh", "group_id"),
-        sig_path,
-        band_path,
-        mem_path,
-    )
-
-    # a group id IS its rep's doc_id, so rep features come straight
-    # from the cached group frame, pruned to candidates
-    def feats_for(cand_ids: DataFrame) -> DataFrame:
-        return g_all.join(cand_ids, "doc_id", "left_semi").select(
-            "doc_id",
-            F.array_distinct(F.expr(shingles_expr("t", 3))).alias("fs"),
-        )
-
+    root, g_all = _rep_lifecycle(spark, source, family, name)
     for rem in (_BATCH1_REM, _BATCH2_REM):
-        rep_admission_step(
-            spark,
-            g_all.where(_slice(F.col("doc_id"), rem)),
-            sig_path,
-            band_path,
-            mem_path,
-            feats_for,
-            lambda verified: verified.write.mode("append").parquet(evidence),
+        _rep_admit(
+            spark, family, root, g_all, g_all.where(_slice(F.col("doc_id"), rem))
         )
+    return _rep_result(spark, family, root, g_all)
 
-    expand_group_evidence(spark, evidence, mem_path).write.mode(
-        "overwrite"
-    ).parquet(root + "/result")
-    g_all.unpersist()
-    return spark.read.parquet(root + "/result").select("da", "db", "jaccard")
+
+def dedup_store_rep_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """`rep_store_admission` over the documents, text family."""
+    return rep_store_admission(
+        spark, table(spark, sf_dir, "documents"), TEXT, "rep_store"
+    )
 
 
 def expand_group_evidence(
@@ -1796,8 +2066,8 @@ def expand_group_evidence(
     (SCALE.md "Vector-side exposure"), so the expansion reuses the
     oracle's own self-cosine arithmetic instead of a literal. Pairs
     with both sides in the base slice are excluded (the admission
-    contract). Shared by the batch proof ops and the streaming
-    sibling (streaming/rep_admission.py).
+    contract). `_rep_result` passes the family's `self_values` for
+    the proof ops and the streaming op (streaming/rep_admission.py).
 
     `sig_path` switches membership to the LIVE (retraction-composed)
     view; `store_pred(col)` generalizes the both-sides-already-in-
@@ -1855,42 +2125,6 @@ def expand_group_evidence(
 
 # --------------------------------- embedding_store_admission
 
-def cosine_on_candidates_nullsafe(
-    cand: DataFrame, qn: DataFrame, threshold: float
-) -> DataFrame:
-    """`dedup.cosine_on_candidates` with the ORACLE's divide-by-zero
-    semantics: DuckDB yields NULL for x/0 (a zero vector's pair is
-    excluded by the threshold), while Spark 4's ANSI default RAISES —
-    try_divide restores the NULL, so a corpus containing a zero
-    embedding admits instead of crashing. Identical output wherever
-    no zero vector appears (try_divide ≡ / for nonzero divisors).
-    Kept local to the store family this round: dedup.py is
-    byte-pinned until its r8 cohort rotates through the r13 window;
-    its cosine ops carry the same latent zero-vector crash and should
-    adopt this spelling then."""
-    pairs = cand.join(
-        qn.select(
-            F.col("vec_id").alias("va"),
-            F.col("q").alias("qa"),
-            F.col("nq").alias("na"),
-        ),
-        "va",
-    ).join(
-        qn.select(
-            F.col("vec_id").alias("vb"),
-            F.col("q").alias("qb"),
-            F.col("nq").alias("nb"),
-        ),
-        "vb",
-    )
-    cos = F.try_divide(
-        _dot("qa", "qb").cast("double"),
-        F.sqrt(F.col("na").cast("double")) * F.sqrt(F.col("nb").cast("double")),
-    )
-    return pairs.select("va", "vb", cos.alias("cosine")).where(
-        F.col("cosine") >= threshold
-    )
-
 
 def emb_signature_frame(spark: SparkSession, qn: DataFrame) -> DataFrame:
     """(vec_id, q) → the persistable VECTOR store row: 6 hyperplane
@@ -1945,16 +2179,15 @@ def embedding_store_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, qn.where(_base_pred(F.col("vec_id")))
     ).write.mode("overwrite").parquet(store_path)
 
-    key_cols = [f"bv{b}" for b in range(_NEARDUP_LSH_BANDS)]
-    for step, rem in ((1, _BATCH1_REM), (2, _BATCH2_REM)):
+    for rem in (_BATCH1_REM, _BATCH2_REM):
         batch_sigs = emb_signature_frame(
             spark, qn.where(_slice(F.col("vec_id"), rem))
         )
         store_sigs = spark.read.parquet(store_path)
         cand = admission_candidates(
-            store_sigs, batch_sigs, key_cols, id_col="vec_id"
+            store_sigs, batch_sigs, _EMB_KEY_COLS, id_col="vec_id"
         ).select(F.col("da").alias("va"), F.col("db").alias("vb"))
-        verified = cosine_on_candidates_nullsafe(cand, qn, _COSINE_THRESHOLD)
+        verified = cosine_on_candidates(cand, qn, _COSINE_THRESHOLD)
         verified.write.mode("append").parquet(evidence)
         batch_sigs.write.mode("append").parquet(store_path)
 
@@ -1984,224 +2217,14 @@ WHERE {_NEARDUP_COS_SQL_BODY} >= {_COSINE_THRESHOLD}
 """
 
 
-# ---------------------- embedding_store_rep_admission
-#
-# VERDICT r11's one standing `weak`: byte-identical documents produce
-# byte-identical embeddings under any deterministic embedder, so the
-# text kernel's mega-bucket mode existed verbatim on the vector side
-# — a degenerate sign-band bucket of identical vectors made the band
-# join quadratic in the bucket and grew the store with copies. The
-# fix is the SAME rep pre-pass, generalized over the hyperplane
-# band-key columns: group hash = md5 of the quantized component
-# stream (identical q arrays have identical sign bands AND identical
-# exact cosines to every other vector, so the collapse argument
-# carries over verbatim). The one family-specific subtlety lives in
-# the expansion: within-group pairs use the oracle's own self-cosine
-# arithmetic, never a 1.0 literal (see expand_group_evidence).
-
-_EMB_KEY_COLS = [f"bv{b}" for b in range(_NEARDUP_LSH_BANDS)]
-
-
-def emb_rep_group_frame(qn: DataFrame) -> DataFrame:
-    """Quantized vectors → the vector group frame (doc_id, gh, q,
-    nq): gh = md5 of the exact quantized component stream (decimal
-    longs joined by a separator no long contains; NULL elements are
-    encoded to a sentinel OUTSIDE the decimal-long alphabet first,
-    because concat_ws silently skips NULLs and would otherwise hash
-    [1,NULL,2] and [1,2] to the same group — so the encoding is
-    injective over malformed embeddings too, ADVICE r12). doc_id
-    carries the vec_id under the name the shared step machinery
-    uses. Eligibility mirrors the text side's ≥3-token rule: an EMPTY
-    quantized vector is excluded here, at the group-frame level — it
-    can produce no band rows (the uncapped op and the oracle emit
-    none for it) and no non-NULL cosine, and admitting it into
-    membership would make every later batch's identical empty vector
-    classify as NEW content forever, since its group never gets a
-    signature row (self-review r13 finding #4)."""
-    return qn.where(F.size("q") > 0).select(
-        F.col("vec_id").alias("doc_id"),
-        F.md5(
-            F.concat_ws(
-                " ",
-                F.transform(
-                    F.col("q"), lambda x: F.coalesce(x.cast("string"), F.lit("∅"))
-                ),
-            )
-        ).alias("gh"),
-        "q",
-        "nq",
-    )
-
-
-def emb_rep_reps(g: DataFrame) -> DataFrame:
-    """Vector group frame → one row per content group: same gh ⟹
-    byte-identical q, so `first(q)` is exact and the rep choice is
-    one aggregate (the vector sibling of `rep_reps`)."""
-    return g.groupBy("gh").agg(
-        F.min("doc_id").alias("group_id"), F.first("q").alias("q")
-    )
-
-
-def emb_rep_signature_frame(spark: SparkSession, reps: DataFrame) -> DataFrame:
-    """Rep rows → one persistable hyperplane signature row PER GROUP:
-    (group_id, gh, bv0..bv5) — the IN-ROW sign-band spelling: each
-    plane's dot product is one `zip_with` aggregate against a 64-long
-    weight-array literal, the 8 planes of a band fold into one bit-OR
-    sum, all inside whole-stage codegen with ZERO shuffles (the
-    exploded posexplode → broadcast-join → double-groupBy spelling
-    costs two shuffles per call and this frame is built 3× per
-    admission lifecycle — base + both batches' rep_builder).
-    Interleaved median-of-5 A/B at sf0.1: 0.64 s → 0.26 s per build,
-    outputs byte-identical (round-12 rep-op cost audit). This is the
-    documented crossover case where in-row wins: the signature is
-    PERSISTED (no cache-shared verify join re-derives it — the
-    verify side reads raw q vectors, not signatures)."""
-    bb = _NEARDUP_LSH_BAND_BITS
-    w: dict[int, dict[int, int]] = {}
-    for p, i, wt in _neardup_planes():
-        w.setdefault(p, {})[i] = wt
-    dim = max(max(d) for d in w.values()) + 1
-    # both sides sliced to min(size(q), dim): zip_with NULL-pads the
-    # shorter array, which would poison the whole fold for any
-    # corpus whose vectors aren't exactly `dim`-dimensional — the
-    # exploded spelling this replaces intersected indices instead
-    # (caught by the hypothesis rep≡uncapped property on 4-dim
-    # corpora)
-    ln = f"least(size(q), {dim})"
-    cols = []
-    for b in range(_NEARDUP_LSH_BANDS):
-        terms = []
-        for j in range(bb):
-            p = b * bb + j
-            arr = "array(" + ",".join(
-                f"{w[p][i]}L" for i in range(dim)
-            ) + ")"
-            dot = (
-                f"aggregate(zip_with(slice(q, 1, {ln}), "
-                f"slice({arr}, 1, {ln}), (x, y) -> x * y), "
-                "0L, (a, x) -> a + x)"
-            )
-            terms.append(f"(CASE WHEN {dot} >= 0 THEN {1 << j} ELSE 0 END)")
-        cols.append(F.expr(" + ".join(terms)).cast("int").alias(f"bv{b}"))
-    # An EMPTY q would fold to dot = 0 on every plane (CASE >= 0 true
-    # → all-bits-set bands) while the exploded builder and the oracle
-    # emit NO band rows for it — filter it out here so the two
-    # signature builders stay structurally equivalent (ADVICE r12).
-    # Convergence was never at risk (empty-q cosines are NULL,
-    # threshold-excluded), but the spurious candidates and store row
-    # are gone now.
-    return reps.where(F.size("q") > 0).select("group_id", "gh", *cols)
-
-
-def emb_self_cosines(groups: DataFrame, qn_groups: DataFrame) -> DataFrame:
-    """(group_id) × the groups' quantized vectors → (group_id,
-    cosine) where cosine is the pair expression evaluated at qa = qb
-    — dot(q,q) / (sqrt(nq)·sqrt(nq)), THE SAME code path
-    (`cosine_on_candidates`) every cross pair runs, threshold
-    included, so a within-group member pair inherits exactly the
-    value the oracle computes for it (and a zero-vector group, whose
-    self-cosine is null, is excluded on both engines alike)."""
-    pairs = groups.select(
-        F.col("group_id").alias("va"), F.col("group_id").alias("vb")
-    )
-    return cosine_on_candidates_nullsafe(pairs, qn_groups, _COSINE_THRESHOLD).select(
-        F.col("va").alias("group_id"), "cosine"
-    )
-
-
 def embedding_store_rep_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`embedding_store_admission` with the representative pre-pass
-    composed in — the vector sibling of `dedup_store_rep_admission`,
-    closing the last uncapped admission kernel (VERDICT r11 #1): the
-    persisted store holds ONE hyperplane signature row per distinct
-    quantized vector plus a membership table, the band join only ever
-    sees group reps (served through the banded index's PRUNED read,
-    int-keyed), and the returned frame is the group evidence expanded
-    through membership — cross-group pairs inherit the rep pair's
-    cosine, within-group pairs carry the oracle's self-cosine
-    arithmetic. The oracle is the uncapped op's one-shot union SQL,
-    UNCHANGED, so the hash match proves the pre-pass
-    semantics-preserving while a degenerate bucket of B identical
-    vectors reaches the kernel as one row and the store grows
-    O(distinct vectors)."""
-    from .sinkcheck import scratch_dir
-
-    root = scratch_dir("hyperplane_rep_store")
-    sig_path = root + "/signatures"
-    band_path = root + "/bands"
-    mem_path = root + "/members"
-    evidence = root + "/evidence"
-
-    g_all = emb_rep_group_frame(_quantized(spark, sf_dir)).cache()
-
-    g_base = g_all.where(_base_pred(F.col("doc_id")))
-    reps_base = emb_rep_reps(g_base)
-    bootstrap_rep_store(
-        spark,
-        emb_rep_signature_frame(spark, reps_base),
-        g_base.select("doc_id", "gh")
-        .join(reps_base.select("gh", "group_id"), "gh")
-        .select("doc_id", "gh", "group_id"),
-        sig_path,
-        band_path,
-        mem_path,
-        key_cols=_EMB_KEY_COLS,
-    )
-
-    # a group id IS its rep's vec_id, so verify-side vectors come
-    # straight from the cached group frame, pruned to candidates
-    def feats_for(cand_ids: DataFrame) -> DataFrame:
-        return g_all.join(cand_ids, "doc_id", "left_semi").select(
-            F.col("doc_id").alias("vec_id"), "q", "nq"
-        )
-
-    def verify(cand: DataFrame, feats: DataFrame) -> DataFrame:
-        v = cosine_on_candidates_nullsafe(
-            cand.select(F.col("da").alias("va"), F.col("db").alias("vb")),
-            feats,
-            _COSINE_THRESHOLD,
-        )
-        return v.select(
-            F.col("va").alias("da"), F.col("vb").alias("db"), "cosine"
-        )
-
-    for rem in (_BATCH1_REM, _BATCH2_REM):
-        rep_admission_step(
-            spark,
-            g_all.where(_slice(F.col("doc_id"), rem)),
-            sig_path,
-            band_path,
-            mem_path,
-            feats_for,
-            lambda verified: verified.write.mode("append").parquet(evidence),
-            key_cols=_EMB_KEY_COLS,
-            rep_builder=lambda g: emb_rep_signature_frame(spark, emb_rep_reps(g)),
-            verify=verify,
-        )
-
-    # self-cosines are only consumed by WITHIN-group pairs, which
-    # exist only for groups with ≥ 2 members — restrict the frame to
-    # those (on a mostly-distinct corpus this is near-empty, and the
-    # expansion's self-value join stays O(groups-with-dups), never
-    # O(groups); bench audit, round 12)
-    multi = (
-        read_table(spark, mem_path)
-        .groupBy("group_id")
-        .count()
-        .where(F.col("count") > 1)
-        .select(F.col("group_id").alias("doc_id"))
-    )
-    reps_q = g_all.join(multi, "doc_id", "left_semi")
-    self_vals = emb_self_cosines(
-        reps_q.select(F.col("doc_id").alias("group_id")),
-        reps_q.select(F.col("doc_id").alias("vec_id"), "q", "nq"),
-    )
-    expand_group_evidence(
-        spark, evidence, mem_path, value_col="cosine", self_values=self_vals
-    ).write.mode("overwrite").parquet(root + "/result")
-    g_all.unpersist()
-    return spark.read.parquet(root + "/result").select(
-        F.col("da").alias("va"), F.col("db").alias("vb"), "cosine"
+    """`rep_store_admission` over the quantized embeddings, vector
+    family — closing the last uncapped admission kernel (VERDICT r11
+    #1): a degenerate bucket of B identical vectors reaches the
+    kernel as one row, the store grows O(distinct vectors), and the
+    banded index's pruned read is int-keyed."""
+    return rep_store_admission(
+        spark, _quantized(spark, sf_dir), VECTOR, "hyperplane_rep_store"
     )
 
 
@@ -2868,9 +2891,16 @@ def _retract_sql_pred(expr: str) -> str:
     return f"({pm7} = {_RETRACT_REM} AND {_pmod_sql(expr)} <> {_BATCH1_REM})"
 
 
-def dedup_store_retraction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Retraction invariance, text family: after base + batch-1
-    admission, a mid-lifecycle `retract_docs`, AND a
+def rep_store_retraction(
+    spark: SparkSession,
+    source: DataFrame,
+    family: StoreFamily,
+    name: str,
+    threshold: float | None = None,
+) -> DataFrame:
+    """Retraction invariance, either family (retraction itself is
+    family-agnostic — it never reads a signature column): after base
+    + batch-1 admission, a mid-lifecycle `retract_docs`, AND a
     partition-granular `fold_retractions` (round 16 — the tables are
     key-bucketed, so the driver row pins the granular fold
     end-to-end), batch 2's admission evidence (expanded through live
@@ -2880,46 +2910,19 @@ def dedup_store_retraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     verifying (the verify features come from the new rep's doc id,
     alive by construction), and folding is invisible to the
     oracle because it materializes exactly the live views."""
-    from ..functions.text import shingles_expr
-    from ..sources.tables import table
-    from .sinkcheck import scratch_dir
+    import shutil
 
-    root = scratch_dir("rep_store_retract")
-    sig_path = root + "/signatures"
-    band_path = root + "/bands"
-    mem_path = root + "/members"
-    evidence = root + "/evidence"
-
-    g_all = rep_group_frame(table(spark, sf_dir, "documents")).cache()
-
-    g_base = g_all.where(_base_pred(F.col("doc_id")))
-    reps_base = rep_reps(g_base)
-    bootstrap_rep_store(
-        spark,
-        rep_signature_frame(reps_base),
-        g_base.select("doc_id", "gh")
-        .join(reps_base.select("gh", "group_id"), "gh")
-        .select("doc_id", "gh", "group_id"),
-        sig_path,
-        band_path,
-        mem_path,
-    )
-
-    def feats_for(cand_ids: DataFrame) -> DataFrame:
-        return g_all.join(cand_ids, "doc_id", "left_semi").select(
-            "doc_id",
-            F.array_distinct(F.expr(shingles_expr("t", 3))).alias("fs"),
-        )
+    root, g_all = _rep_lifecycle(spark, source, family, name)
+    sig_path, band_path, mem_path = _rep_paths(root)
 
     def step(rem: int) -> None:
-        rep_admission_step(
+        _rep_admit(
             spark,
+            family,
+            root,
+            g_all,
             g_all.where(_slice(F.col("doc_id"), rem)),
-            sig_path,
-            band_path,
-            mem_path,
-            feats_for,
-            lambda verified: verified.write.mode("append").parquet(evidence),
+            threshold=threshold,
         )
 
     step(_BATCH2_REM)
@@ -2935,20 +2938,20 @@ def dedup_store_retraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unchanged, making this driver row the end-to-end pin that
     # retract → granular fold → admit ≡ never-admitted
     fold_retractions(spark, sig_path, band_path, mem_path)
-    import shutil
-
-    shutil.rmtree(evidence)  # pre-retraction evidence is history, not output
+    # pre-retraction evidence is history, not output
+    shutil.rmtree(root + "/evidence")
     step(_BATCH1_REM)
-
-    expand_group_evidence(
-        spark,
-        evidence,
-        mem_path,
-        sig_path=sig_path,
+    return _rep_result(
+        spark, family, root, g_all, live=True,
         store_pred=lambda c: ~_slice(c, _BATCH1_REM),
-    ).write.mode("overwrite").parquet(root + "/result")
-    g_all.unpersist()
-    return spark.read.parquet(root + "/result").select("da", "db", "jaccard")
+    )
+
+
+def dedup_store_retraction(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """`rep_store_retraction` over the documents, text family."""
+    return rep_store_retraction(
+        spark, table(spark, sf_dir, "documents"), TEXT, "rep_store_retract"
+    )
 
 
 _STORE_RETRACTION_SQL = f"""
@@ -2984,103 +2987,14 @@ WHERE i / (ca.n + cb.n - i) >= {_JACCARD_THRESHOLD}
 
 
 def embedding_store_retraction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Retraction invariance, vector family: the same lifecycle over
-    the hyperplane rep store (retraction itself is family-agnostic —
-    it never reads a signature column), with the vector op's
-    self-cosine expansion over LIVE membership."""
-    from .sinkcheck import scratch_dir
-
-    root = scratch_dir("hyperplane_store_retract")
-    sig_path = root + "/signatures"
-    band_path = root + "/bands"
-    mem_path = root + "/members"
-    evidence = root + "/evidence"
-
-    g_all = emb_rep_group_frame(_quantized(spark, sf_dir)).cache()
-
-    g_base = g_all.where(_base_pred(F.col("doc_id")))
-    reps_base = emb_rep_reps(g_base)
-    bootstrap_rep_store(
+    """`rep_store_retraction` over the quantized embeddings, vector
+    family, verified at the retraction proof's own cosine bar."""
+    return rep_store_retraction(
         spark,
-        emb_rep_signature_frame(spark, reps_base),
-        g_base.select("doc_id", "gh")
-        .join(reps_base.select("gh", "group_id"), "gh")
-        .select("doc_id", "gh", "group_id"),
-        sig_path,
-        band_path,
-        mem_path,
-        key_cols=_EMB_KEY_COLS,
-    )
-
-    def feats_for(cand_ids: DataFrame) -> DataFrame:
-        return g_all.join(cand_ids, "doc_id", "left_semi").select(
-            F.col("doc_id").alias("vec_id"), "q", "nq"
-        )
-
-    def verify(cand: DataFrame, feats: DataFrame) -> DataFrame:
-        v = cosine_on_candidates_nullsafe(
-            cand.select(F.col("da").alias("va"), F.col("db").alias("vb")),
-            feats,
-            _RETRACT_COSINE_THRESHOLD,
-        )
-        return v.select(
-            F.col("va").alias("da"), F.col("vb").alias("db"), "cosine"
-        )
-
-    def step(rem: int) -> None:
-        rep_admission_step(
-            spark,
-            g_all.where(_slice(F.col("doc_id"), rem)),
-            sig_path,
-            band_path,
-            mem_path,
-            feats_for,
-            lambda verified: verified.write.mode("append").parquet(evidence),
-            key_cols=_EMB_KEY_COLS,
-            rep_builder=lambda g: emb_rep_signature_frame(spark, emb_rep_reps(g)),
-            verify=verify,
-        )
-
-    step(_BATCH2_REM)
-    retract_docs(
-        spark,
-        sig_path,
-        mem_path,
-        g_all.where(_retract_pred(F.col("doc_id"))).select("doc_id"),
-    )
-    # granular-fold mid-lifecycle — see dedup_store_retraction; the
-    # vector family pins the same fold ≡ no-fold equivalence through
-    # its own oracle hash
-    fold_retractions(spark, sig_path, band_path, mem_path)
-    import shutil
-
-    shutil.rmtree(evidence)  # pre-retraction evidence is history, not output
-    step(_BATCH1_REM)
-
-    live_m = live_members(spark, mem_path, sig_path)
-    multi = (
-        live_m.groupBy("group_id")
-        .count()
-        .where(F.col("count") > 1)
-        .select(F.col("group_id").alias("doc_id"))
-    )
-    reps_q = g_all.join(multi, "doc_id", "left_semi")
-    self_vals = emb_self_cosines(
-        reps_q.select(F.col("doc_id").alias("group_id")),
-        reps_q.select(F.col("doc_id").alias("vec_id"), "q", "nq"),
-    )
-    expand_group_evidence(
-        spark,
-        evidence,
-        mem_path,
-        value_col="cosine",
-        self_values=self_vals,
-        sig_path=sig_path,
-        store_pred=lambda c: ~_slice(c, _BATCH1_REM),
-    ).write.mode("overwrite").parquet(root + "/result")
-    g_all.unpersist()
-    return spark.read.parquet(root + "/result").select(
-        F.col("da").alias("va"), F.col("db").alias("vb"), "cosine"
+        _quantized(spark, sf_dir),
+        VECTOR,
+        "hyperplane_store_retract",
+        threshold=_RETRACT_COSINE_THRESHOLD,
     )
 
 

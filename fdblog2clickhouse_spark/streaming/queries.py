@@ -18,7 +18,6 @@ finite, deterministic DataFrame:
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 from contextlib import contextmanager
 
@@ -86,8 +85,12 @@ def _run_to_scratch(
     row-count-bound, and funneling it through one driver thread is
     the serial stage that made the join anti-scale with cores. The
     file sink keeps rows executor-side; complete-mode callers stay
-    on `_run_to_memory` (the file sink is append-only)."""
-    base = tempfile.mkdtemp(prefix=f"{prefix}_")
+    on `_run_to_memory` (the file sink is append-only). The sink
+    lives in the caller's wiped-on-entry scratch dir, so repeated
+    runs reuse one copy instead of leaking a temp dir each."""
+    from ..operators.sinkcheck import scratch_dir
+
+    base = scratch_dir(prefix)
     out = os.path.join(base, "out")
     with _state_sized_shuffle(spark):
         q = (
@@ -153,25 +156,17 @@ def _export_mixed_rotation_logs(spark: SparkSession, sf_dir: str, base: str) -> 
 
 
 def streaming_trace_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = tempfile.mkdtemp(prefix="trace_ingest_")
+    from ..operators.sinkcheck import scratch_dir
+
     # Mixed plain + .json.gz rotations through one glob: the oracle
     # row for this op therefore covers gzip-compressed ingestion too.
-    glob = _export_mixed_rotation_logs(spark, sf_dir, base)
+    glob = _export_mixed_rotation_logs(spark, sf_dir, scratch_dir("trace_ingest"))
 
     stream = normalize_trace(read_trace_stream(spark, glob))
-    name = f"trace_ingest_{uuid.uuid4().hex[:8]}"
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     # epoch-µs output makes the streamed rows hash-comparable to the
     # batch SQL oracle (same lossless Time round trip as the batch
     # source — see sources/trace_json.py).
-    return spark.table(name).select(
+    return _run_to_memory(spark, stream, "trace_ingest", "append").select(
         "severity",
         "machine",
         "log_group",
@@ -326,7 +321,9 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     how it scales; with a watermark the state is bounded by the
     lateness horizon (finite AvailableNow run here, so no horizon is
     needed for determinism)."""
-    base = tempfile.mkdtemp(prefix="dedup_stream_")
+    from ..operators.sinkcheck import scratch_dir
+
+    base = scratch_dir("dedup_stream")
     _export_trace_logs(spark, sf_dir, os.path.join(base, "logs1"))
     _export_trace_logs(spark, sf_dir, os.path.join(base, "logs2"))
 
@@ -363,7 +360,9 @@ def streaming_rollup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     is an exact oracle for whatever batching the stream chose."""
     from ..sinks.rollup import foreach_batch_rollup, read_rollup
 
-    base = tempfile.mkdtemp(prefix="rollup_ingest_")
+    from ..operators.sinkcheck import scratch_dir
+
+    base = scratch_dir("rollup_ingest")
     path = os.path.join(base, "rollup")
     rows = _events_stream(spark, sf_dir).select(
         F.col("ts").alias("time"),
@@ -408,7 +407,9 @@ def streaming_upsert_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     window dedup regardless of batch boundaries."""
     from ..sinks.upsert import foreach_batch_upsert, read_upsert
 
-    base = tempfile.mkdtemp(prefix="upsert_ingest_")
+    from ..operators.sinkcheck import scratch_dir
+
+    base = scratch_dir("upsert_ingest")
     path = os.path.join(base, "state")
     rows = _events_stream(spark, sf_dir).select(
         "user_id", "event_type", "ts", "event_id",
@@ -516,7 +517,9 @@ def streaming_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact oracle regardless of how the stream was sliced."""
     from ..sinks.hll_rollup import foreach_batch_hll, read_estimate
 
-    base = tempfile.mkdtemp(prefix="hll_rollup_")
+    from ..operators.sinkcheck import scratch_dir
+
+    base = scratch_dir("hll_rollup")
     path = os.path.join(base, "hll")
     rows = _events_stream(spark, sf_dir).select("event_type", "user_id")
     q = (

@@ -2,22 +2,24 @@
 
 `streaming_store_admission` (queries.py) proves the ONLINE lifecycle
 for the deliberately-uncapped doc-level kernel; this module is its
-PRODUCTION sibling: the same growing-store-under-foreachBatch loop,
-but every micro-batch runs the round-11 representative design
-(operators/dedup_store.py) end to end —
+PRODUCTION form: the same growing-store-under-foreachBatch loop, but
+every micro-batch runs the round-11 representative design
+(operators/dedup_store.py) end to end, for either store family —
 
-  exact-dedup pre-pass (token-identical docs collapse to one group),
-  gh classification against the flat store, banded-index PRUNED
-  store-side read, new-group + touched-group scoring, and the
-  banded → flat → members append order
+  exact-dedup pre-pass (identical token streams, or identical
+  quantized vectors, collapse to one group), gh classification
+  against the flat store, banded-index PRUNED store-side read,
+  new-group + touched-group scoring, and the banded → flat → members
+  append order
 
 — so the store grows O(distinct contents) under the stream and a
 boilerplate-heavy rotation costs one group row, exactly like the
-batch CLI path (`admit`). The returned frame is the group evidence
-expanded through membership, and the oracle is the batch ops'
-one-shot union SQL unchanged: the hash match proves that micro-batch
-slicing, the rep collapse, and the pruned reads are all
-semantics-preserving at once.
+batch CLI path (`admit` / `admit-vectors`). One body serves both
+families; the registered names bind the family and the source. The
+returned frame is the group evidence expanded through membership,
+and the oracle is the batch ops' one-shot union SQL unchanged: the
+hash match proves that micro-batch slicing, the rep collapse, and
+the pruned reads are all semantics-preserving at once.
 
 Why slicing-invariance still holds with the rep pre-pass: a group's
 FIRST arrival scores it against everything in the store at that
@@ -38,74 +40,34 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.dedup import _quantized
 from ..operators.dedup_store import (
-    _EMB_KEY_COLS,
     _EMB_STORE_ADMISSION_SQL,
     _STORE_ADMISSION_SQL,
+    TEXT,
+    VECTOR,
+    StoreFamily,
     _base_pred,
-    bootstrap_rep_store,
-    cosine_on_candidates_nullsafe,
-    emb_rep_group_frame,
-    emb_rep_reps,
-    emb_rep_signature_frame,
-    emb_self_cosines,
-    expand_group_evidence,
-    read_table,
-    rep_admission_step,
-    rep_group_frame,
-    rep_reps,
-    rep_signature_frame,
+    _rep_admit,
+    _rep_lifecycle,
+    _rep_result,
 )
 from ..sources.tables import table
 
 
-def streaming_rep_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Four JSON rotations → four micro-batches
-    (maxFilesPerTrigger=1), each admitting against the persisted rep
-    store (flat + banded index + members) and growing all three —
-    then the membership expansion, identical to
-    `dedup_store_rep_admission`'s. Output: (da, db, jaccard),
-    hash-equal to the one-shot union oracle."""
-    from ..operators.sinkcheck import scratch_dir
-
-    root = scratch_dir("rep_admission_stream")
-    base_dir = root + "/rotations"
-    sig_path = root + "/signatures"
-    band_path = root + "/bands"
-    mem_path = root + "/members"
-    evidence = root + "/evidence"
-
-    d = table(spark, sf_dir, "documents").select("doc_id", "text")
-    d.where(~_base_pred(F.col("doc_id"))).coalesce(4).write.mode(
+def stream_rep_admission(
+    spark: SparkSession, source: DataFrame, family: StoreFamily, name: str
+) -> DataFrame:
+    """`source`'s non-base rows as four JSON rotations → four
+    micro-batches (maxFilesPerTrigger=1), each admitting against the
+    persisted rep store (flat + banded index + members) and growing
+    all three — then the membership expansion, identical to
+    `rep_store_admission`'s. The source's first column is its id."""
+    root, g_all = _rep_lifecycle(spark, source, family, name)
+    rotations = root + "/rotations"
+    source.where(~_base_pred(F.col(source.columns[0]))).coalesce(4).write.mode(
         "overwrite"
-    ).json(base_dir)
-
-    # corpus group frame, cached: the store bootstrap, every
-    # micro-batch's verify features, and the expansion all draw on it
-    # (a production verifier recomputes features for candidate reps —
-    # the store persists signatures only).
-    g_all = rep_group_frame(d).cache()
-
-    g_base = g_all.where(_base_pred(F.col("doc_id")))
-    reps_base = rep_reps(g_base)
-    bootstrap_rep_store(
-        spark,
-        rep_signature_frame(reps_base),
-        g_base.select("doc_id", "gh")
-        .join(reps_base.select("gh", "group_id"), "gh")
-        .select("doc_id", "gh", "group_id"),
-        sig_path,
-        band_path,
-        mem_path,
-    )
-
-    from ..functions.text import shingles_expr
-
-    def feats_for(cand_ids: DataFrame) -> DataFrame:
-        return g_all.join(cand_ids, "doc_id", "left_semi").select(
-            "doc_id",
-            F.array_distinct(F.expr(shingles_expr("t", 3))).alias("fs"),
-        )
+    ).json(rotations)
 
     def admit(batch_df: DataFrame, batch_id: int) -> None:
         # the SHARED step (operators/dedup_store.py) — including the
@@ -113,153 +75,55 @@ def streaming_rep_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
         # idempotent under foreachBatch's at-least-once contract
         # (skip_when_no_new_docs: a fully-committed batch replayed
         # after a checkpoint-less restart is a no-op).
-        rep_admission_step(
+        _rep_admit(
             batch_df.sparkSession,
-            rep_group_frame(batch_df),
-            sig_path,
-            band_path,
-            mem_path,
-            feats_for,
-            lambda verified: verified.write.mode("append").parquet(evidence),
+            family,
+            root,
+            g_all,
+            family.group_frame(batch_df),
             skip_when_no_new_docs=True,
         )
 
-    stream = spark.readStream.schema("doc_id long, text string").option(
+    stream = spark.readStream.schema(source.schema).option(
         "maxFilesPerTrigger", 1
-    ).json(base_dir)
+    ).json(rotations)
     q = (
         stream.writeStream.foreachBatch(admit)
-        .option("checkpointLocation", base_dir + "_ckpt")
+        .option("checkpointLocation", rotations + "_ckpt")
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
+    return _rep_result(spark, family, root, g_all)
 
-    expand_group_evidence(spark, evidence, mem_path).write.mode(
-        "overwrite"
-    ).parquet(root + "/result")
-    g_all.unpersist()
-    return spark.read.parquet(root + "/result").select("da", "db", "jaccard")
+
+def streaming_rep_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Text family: (doc_id, text) rotations. Output: (da, db,
+    jaccard), hash-equal to the one-shot union oracle."""
+    return stream_rep_admission(
+        spark,
+        table(spark, sf_dir, "documents").select("doc_id", "text"),
+        TEXT,
+        "rep_admission_stream",
+    )
 
 
 def streaming_embedding_rep_admission(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """The VECTOR sibling (round 12): four rotations of QUANTIZED
-    vectors → four micro-batches, each running the hyperplane rep
-    design against the persisted store — quantized-vector-hash
-    pre-pass, gh classification, int-keyed banded PRUNED read,
-    exact-cosine verify, banded → flat → members appends — then the
-    membership expansion with the oracle's self-cosine arithmetic
-    for within-group pairs. Output: (va, vb, cosine), hash-equal to
-    `embedding_store_admission`'s one-shot union SQL unchanged, so
-    one match pins micro-batch slicing, the vector rep collapse,
-    and the pruned reads together. The stream carries the quantized
-    long arrays (a float JSON roundtrip could flip a .5-boundary
-    rounding; the integer stream is exact by construction — a
-    production feed ships whatever its embedder emits, and the
-    quantization contract lives at ingest either way)."""
-    from ..operators.dedup import _quantized
-    from ..operators.dedup_store import _COSINE_THRESHOLD
-    from ..operators.sinkcheck import scratch_dir
-
-    root = scratch_dir("emb_rep_admission_stream")
-    base_dir = root + "/rotations"
-    sig_path = root + "/signatures"
-    band_path = root + "/bands"
-    mem_path = root + "/members"
-    evidence = root + "/evidence"
-
-    g_all = emb_rep_group_frame(_quantized(spark, sf_dir)).cache()
-    g_all.where(~_base_pred(F.col("doc_id"))).select(
-        F.col("doc_id").alias("vec_id"), "q"
-    ).coalesce(4).write.mode("overwrite").json(base_dir)
-
-    g_base = g_all.where(_base_pred(F.col("doc_id")))
-    reps_base = emb_rep_reps(g_base)
-    bootstrap_rep_store(
+    """Vector family: rotations of QUANTIZED vectors (vec_id, q).
+    Output: (va, vb, cosine), hash-equal to
+    `embedding_store_admission`'s one-shot union SQL unchanged. The
+    stream carries the quantized long arrays (a float JSON roundtrip
+    could flip a .5-boundary rounding; the integer stream is exact by
+    construction — a production feed ships whatever its embedder
+    emits, and the quantization contract lives at ingest either
+    way)."""
+    return stream_rep_admission(
         spark,
-        emb_rep_signature_frame(spark, reps_base),
-        g_base.select("doc_id", "gh")
-        .join(reps_base.select("gh", "group_id"), "gh")
-        .select("doc_id", "gh", "group_id"),
-        sig_path,
-        band_path,
-        mem_path,
-        key_cols=_EMB_KEY_COLS,
-    )
-
-    def feats_for(cand_ids: DataFrame) -> DataFrame:
-        return g_all.join(cand_ids, "doc_id", "left_semi").select(
-            F.col("doc_id").alias("vec_id"), "q", "nq"
-        )
-
-    def verify(cand: DataFrame, feats: DataFrame) -> DataFrame:
-        v = cosine_on_candidates_nullsafe(
-            cand.select(F.col("da").alias("va"), F.col("db").alias("vb")),
-            feats,
-            _COSINE_THRESHOLD,
-        )
-        return v.select(
-            F.col("va").alias("da"), F.col("vb").alias("db"), "cosine"
-        )
-
-    def admit(batch_df: DataFrame, batch_id: int) -> None:
-        ss = batch_df.sparkSession
-        qn_b = batch_df.select(
-            F.col("vec_id"),
-            "q",
-            F.aggregate(
-                F.transform(F.col("q"), lambda x: x * x),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ).alias("nq"),
-        )
-        rep_admission_step(
-            ss,
-            emb_rep_group_frame(qn_b),
-            sig_path,
-            band_path,
-            mem_path,
-            feats_for,
-            lambda verified: verified.write.mode("append").parquet(evidence),
-            skip_when_no_new_docs=True,
-            key_cols=_EMB_KEY_COLS,
-            rep_builder=lambda g: emb_rep_signature_frame(
-                ss, emb_rep_reps(g)
-            ),
-            verify=verify,
-        )
-
-    stream = spark.readStream.schema("vec_id long, q array<long>").option(
-        "maxFilesPerTrigger", 1
-    ).json(base_dir)
-    q = (
-        stream.writeStream.foreachBatch(admit)
-        .option("checkpointLocation", base_dir + "_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    multi = (
-        read_table(spark, mem_path)
-        .groupBy("group_id")
-        .count()
-        .where(F.col("count") > 1)
-        .select(F.col("group_id").alias("doc_id"))
-    )
-    reps_q = g_all.join(multi, "doc_id", "left_semi")
-    self_vals = emb_self_cosines(
-        reps_q.select(F.col("doc_id").alias("group_id")),
-        reps_q.select(F.col("doc_id").alias("vec_id"), "q", "nq"),
-    )
-    expand_group_evidence(
-        spark, evidence, mem_path, value_col="cosine", self_values=self_vals
-    ).write.mode("overwrite").parquet(root + "/result")
-    g_all.unpersist()
-    return spark.read.parquet(root + "/result").select(
-        F.col("da").alias("va"), F.col("db").alias("vb"), "cosine"
+        _quantized(spark, sf_dir).select("vec_id", "q"),
+        VECTOR,
+        "emb_rep_admission_stream",
     )
 
 

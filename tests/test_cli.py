@@ -555,6 +555,55 @@ def test_admit_cli_lifecycle(spark, tmp_path, capsys):
     ) == group_ids
 
 
+def test_build_and_admit_cli_both_families(spark, tmp_path, capsys):
+    """One command function per verb serves both store families:
+    build-store → admit over JSON docs and build-vstore →
+    admit-vectors over an embeddings parquet each exit 0 and print
+    their family's counts (an exact dup joins membership only, a
+    near-dup scores one group pair)."""
+    import json
+
+    docs = {1: _T_A, 2: _T_A, 3: _T_B, 40: _T_A, 50: _T_C + " extra"}
+
+    def write_json(name, ids):
+        p = tmp_path / name
+        p.write_text("".join(
+            json.dumps({"doc_id": i, "text": docs[i]}) + "\n" for i in ids
+        ))
+        return str(p)
+
+    corpus = write_json("corpus.json", docs)
+    store = str(tmp_path / "store")
+    assert cli.main(["build-store", write_json("base.json", [1, 2, 3]), store]) == 0
+    assert "store groups: 2 members: 3" in capsys.readouterr().out
+    assert cli.main(["admit", write_json("b1.json", [40, 50]), store,
+                     "--corpus", corpus]) == 0
+    out = capsys.readouterr().out
+    assert ("admit: batch_docs=2 new_docs=2 groups=2 new_groups=1 "
+            "rotation_pairs=0 appended=True") in out
+
+    base_v, near_v = [0.01, 0.02, 0.03, 0.04], [0.01, 0.02, 0.03, 0.041]
+    vecs = {1: base_v, 2: base_v, 3: [-0.04, 0.03, -0.02, 0.01],
+            30: base_v, 40: near_v}
+
+    def write_vecs(name, ids):
+        p = str(tmp_path / name)
+        spark.createDataFrame(
+            [(i, vecs[i]) for i in ids], "vec_id long, embedding array<float>"
+        ).coalesce(1).write.parquet(p)
+        return p
+
+    vcorpus = write_vecs("vcorpus", list(vecs))
+    vstore = str(tmp_path / "vstore")
+    assert cli.main(["build-vstore", write_vecs("vbase", [1, 2, 3]), vstore]) == 0
+    assert "vstore groups: 2 members: 3" in capsys.readouterr().out
+    assert cli.main(["admit-vectors", write_vecs("vb1", [30, 40]), vstore,
+                     "--vectors", vcorpus]) == 0
+    out = capsys.readouterr().out
+    assert ("admit-vectors: batch_vecs=2 new_docs=2 groups=2 new_groups=1 "
+            "rotation_pairs=1 appended=True") in out
+
+
 def test_admit_cli_idempotent_under_redelivery(spark, tmp_path, capsys):
     """Re-delivering an already-admitted rotation must be a no-op:
     no duplicate signatures in the store, no duplicate membership,

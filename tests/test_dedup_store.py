@@ -1114,9 +1114,7 @@ def test_rebucket_banded_index_vector_family(spark, tmp_path):
     from fdblog2clickhouse_spark.operators.dedup import _quantized
 
     g = dedup_store.emb_rep_group_frame(_quantized(spark, str(tmp_path)))
-    sigs = dedup_store.emb_rep_signature_frame(
-        spark, dedup_store.emb_rep_reps(g)
-    )
+    sigs = dedup_store.emb_rep_signature_frame(dedup_store.rep_reps(g, "q"))
     store = str(tmp_path / "vstore")
     sigs.write.parquet(store)
     bands = str(tmp_path / "vbands")
@@ -1187,7 +1185,7 @@ def test_emb_rep_signature_skips_empty_vectors(spark):
         "vec_id long, q array<long>, nq long",
     )
     g = dedup_store.emb_rep_group_frame(qn)
-    sigs = dedup_store.emb_rep_signature_frame(spark, dedup_store.emb_rep_reps(g))
+    sigs = dedup_store.emb_rep_signature_frame(dedup_store.rep_reps(g, "q"))
     rows = sigs.collect()
     assert [r["group_id"] for r in rows] == [2]
 

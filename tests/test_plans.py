@@ -572,6 +572,6 @@ def test_emb_rep_signature_build_has_no_shuffle(spark):
         [(1, "g1", [1000] * 64), (2, "g2", [-7] * 64)],
         "group_id long, gh string, q array<long>",
     )
-    plan = formatted_plan(dedup_store.emb_rep_signature_frame(spark, reps))
+    plan = formatted_plan(dedup_store.emb_rep_signature_frame(reps))
     assert "Exchange" not in plan, plan
     assert "BatchEvalPython" not in plan, plan

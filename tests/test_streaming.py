@@ -312,7 +312,7 @@ def test_streaming_insert_into_codes_bearing_ivfpq(spark, tmp_path):
     every listed vector) and `search-ivfpq`'s plan can ANSWER with
     streamed vectors."""
     from fdblog2clickhouse_spark import cli
-    from fdblog2clickhouse_spark.cli import _vector_qn
+    from fdblog2clickhouse_spark.operators.dedup import quantize
     from fdblog2clickhouse_spark.operators.ann_store import (
         ivf_codes_path,
         ivf_insert_batch,
@@ -335,7 +335,7 @@ def test_streaming_insert_into_codes_bearing_ivfpq(spark, tmp_path):
     arrivals = str(tmp_path / "rotations")
     all_p = str(tmp_path / "all")
     emb.coalesce(1).write.parquet(all_p)
-    qn = _vector_qn(spark, all_p).cache()
+    qn = quantize(spark.read.parquet(all_p)).cache()
     qn.where(F.pmod("vec_id", F.lit(10)) == 0).coalesce(2).write.json(
         arrivals
     )
@@ -387,7 +387,7 @@ def test_streaming_ivf_insert_redelivery_idempotent(spark, tmp_path):
     import glob
 
     from fdblog2clickhouse_spark import cli
-    from fdblog2clickhouse_spark.cli import _vector_qn
+    from fdblog2clickhouse_spark.operators.dedup import quantize
     from fdblog2clickhouse_spark.operators.ann_store import (
         ivf_codes_path,
         ivf_insert_batch,
@@ -407,7 +407,7 @@ def test_streaming_ivf_insert_redelivery_idempotent(spark, tmp_path):
     arrivals = str(tmp_path / "rotations")
     all_p = str(tmp_path / "all")
     emb.coalesce(1).write.parquet(all_p)
-    qn = _vector_qn(spark, all_p)
+    qn = quantize(spark.read.parquet(all_p))
     qn.where(F.pmod("vec_id", F.lit(10)) == 0).coalesce(2).write.json(
         arrivals
     )

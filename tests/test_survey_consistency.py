@@ -37,3 +37,15 @@ def test_survey_matches_registry():
             assert name in oracle, f"{name} marked [oracle] but has no oracle SQL"
         else:
             assert name not in oracle, f"{name} marked [rows-only] but has oracle SQL"
+
+
+def test_front_window_is_changed_ops_then_fifty_registered():
+    """The external correctness gate oracle-checks only the first 50
+    queries(): the window must be 50 distinct registered names, lead
+    with CHANGED_OPS, and be exactly what registration order yields."""
+    window = operators._FRONT_WINDOW
+    queries = operators.all_queries()
+    assert len(window) == len(set(window)) == 50
+    assert set(window) <= set(queries)
+    assert window[: len(operators.CHANGED_OPS)] == operators.CHANGED_OPS
+    assert list(queries)[:50] == window

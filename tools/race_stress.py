@@ -325,21 +325,12 @@ def store_main() -> None:
         "doc_id", F.col("text")
     )
     g = ds.rep_group_frame(docs).cache()
-    reps = ds.rep_reps(g)
-    ds.write_table(
-        ds.rep_signature_frame(reps), sig_path, "overwrite", key="gh"
-    )
+    sigs, members = ds.rep_store_frames(g)
+    ds.write_table(sigs, sig_path, "overwrite", key="gh")
     ds.write_banded_index(
         ds.read_table(spark, sig_path), band_path, "overwrite"
     )
-    ds.write_table(
-        g.select("doc_id", "gh")
-        .join(reps.select("gh", "group_id"), "gh")
-        .select("doc_id", "gh", "group_id"),
-        mem_path,
-        "overwrite",
-        key="doc_id",
-    )
+    ds.write_table(members, mem_path, "overwrite", key="doc_id")
     # ground truth, driver-side: doc_id → gh for every admitted doc
     # (sf0.001 documents — a few hundred rows)
     doc_gh = {
@@ -836,21 +827,12 @@ def crash_store_main() -> None:
         "doc_id", F.col("text")
     )
     g = ds.rep_group_frame(docs).cache()
-    reps = ds.rep_reps(g)
-    ds.write_table(
-        ds.rep_signature_frame(reps), sig_path, "overwrite", key="gh"
-    )
+    sigs, members = ds.rep_store_frames(g)
+    ds.write_table(sigs, sig_path, "overwrite", key="gh")
     ds.write_banded_index(
         ds.read_table(spark, sig_path), band_path, "overwrite"
     )
-    ds.write_table(
-        g.select("doc_id", "gh")
-        .join(reps.select("gh", "group_id"), "gh")
-        .select("doc_id", "gh", "group_id"),
-        mem_path,
-        "overwrite",
-        key="doc_id",
-    )
+    ds.write_table(members, mem_path, "overwrite", key="doc_id")
     doc_gh = {
         r["doc_id"]: r["gh"] for r in g.select("doc_id", "gh").collect()
     }

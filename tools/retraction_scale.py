@@ -75,14 +75,7 @@ g_all = ds.rep_group_frame(
     table(spark, SF, "documents").select("doc_id", "text")
 ).cache()
 g_base = g_all.where(ds._base_pred(F.col("doc_id")))
-reps_base = ds.rep_reps(g_base)
-sigs_base = ds.rep_signature_frame(reps_base).cache()
-mem_base = (
-    g_base.select("doc_id", "gh")
-    .join(reps_base.select("gh", "group_id"), "gh")
-    .select("doc_id", "gh", "group_id")
-    .cache()
-)
+sigs_base, mem_base = (f.cache() for f in ds.rep_store_frames(g_base))
 print(f"base store: {sigs_base.count()} groups, {mem_base.count()} members",
       flush=True)
 
@@ -131,13 +124,7 @@ batch = g_all.where(ds._slice(F.col("doc_id"), ds._BATCH1_REM)).orderBy(
 ).limit(BATCH_DOCS).cache()
 batch.count()
 
-from fdblog2clickhouse_spark.functions.text import shingles_expr  # noqa: E402
-
-
-def feats_for(cand_ids):
-    return g_all.join(cand_ids, "doc_id", "left_semi").select(
-        "doc_id", F.array_distinct(F.expr(shingles_expr("t", 3))).alias("fs")
-    )
+feats_for = ds.TEXT.feats_for(g_all)
 
 
 def t_retract(k: int, ids: list[int]) -> float:
