@@ -224,12 +224,19 @@ def cmd_rollup(args) -> int:
     parquet at OUT. --once drains and exits."""
     from pyspark.sql import functions as F
 
+    from .sinks.clickhouse import MAX_FILES_PER_INSERT
     from .sinks.rollup import foreach_batch_rollup, read_rollup
     from .streaming.ingest import normalize_trace, read_trace_stream
 
     spark = _spark()
     rows = normalize_trace(
-        read_trace_stream(spark, args.log_dir, delete_logs=args.delete_logs)
+        read_trace_stream(
+            spark,
+            args.log_dir,
+            delete_logs=args.delete_logs,
+            # each micro-batch folds into the rollup in one task
+            max_files_per_trigger=MAX_FILES_PER_INSERT,
+        )
     ).select(
         "time",
         "severity",

@@ -133,7 +133,7 @@ GROUP BY 1
 # The streaming_* ingest ops (streaming/queries.py) drive these
 # sinks under trigger(availableNow) — which, over a finite local
 # input, delivers ONE micro-batch, so their merge-into-EXISTING-
-# state path (read state → union → re-aggregate → swap) never runs
+# state path (read state → union the lifted batch → aggregate → swap) never runs
 # against non-empty state in a driver-checked row. These four rows
 # close that: explicit multi-batch merges with real prior state on
 # disk, read back and hash-matched against the one-shot batch

@@ -12,9 +12,10 @@ yields the identical state (NOT idempotent, like the Summing rollup
 and unlike HLL's MAX: the batch-id watermark of sinks/state.py makes
 a replayed batch a no-op).
 
-Scale shape: each micro-batch reduces map-side to O(types × bins)
-rows before anything is read or merged; the stored state is bounded
-by the value domain, independent of stream volume. The family is now
+Scale shape: the stored state is bounded by the value domain
+(O(types × bins)), independent of stream volume, so a merge folds the
+batch's one-count bin rows and the stored bins in one aggregation in
+one task: one Spark job, no exchange (sinks/state.py). The family is now
 complete: counts (sinks/rollup.py, SUM), distincts
 (sinks/hll_rollup.py, idempotent MAX), quantiles (here, SUM of bin
 counts).
@@ -31,33 +32,35 @@ from .state import foreach_batch, merge_state, read_state
 _KEYS = ["event_type", "b"]
 
 
-def batch_bins(df: DataFrame) -> DataFrame:
-    """One micro-batch's partial histogram state. Bin math imported
-    from operators/sketches.py so the streamed state can never drift
-    from the batch sketch. Input needs (event_type, value)."""
-    return (
-        df.select(
-            "event_type",
-            F.floor(F.col("value") / _QH_WIDTH).cast("long").alias("b"),
-        )
-        .groupBy(*_KEYS)
-        .agg(F.count(F.lit(1)).alias("c"))
+def _lift(df: DataFrame) -> DataFrame:
+    """One value as a one-count bin row. Bin math imported from
+    operators/sketches.py so the streamed state can never drift from
+    the batch sketch. Input needs (event_type, value)."""
+    return df.select(
+        "event_type",
+        F.floor(F.col("value") / _QH_WIDTH).cast("long").alias("b"),
+        F.lit(1).cast("long").alias("c"),
     )
 
 
 def _sum_bins(df: DataFrame) -> DataFrame:
     """Per-bin SUM — the quantileMerge background step, done
-    eagerly."""
-    return df.groupBy(*_KEYS).agg(F.sum("c").alias("c"))
+    eagerly, in one task."""
+    return df.coalesce(1).groupBy(*_KEYS).agg(F.sum("c").alias("c"))
+
+
+def batch_bins(df: DataFrame) -> DataFrame:
+    """One micro-batch's histogram state."""
+    return _sum_bins(_lift(df))
 
 
 def merge_hist(spark: SparkSession, path: str, batch: DataFrame) -> None:
-    """Merge a batch's bins into the stored state."""
-    merge_state(spark, path, batch_bins(batch), _sum_bins)
+    """Fold a batch's values into the stored bins."""
+    merge_state(spark, path, batch, _lift, _sum_bins)
 
 
 def foreach_batch_hist(path: str):
-    return foreach_batch(path, batch_bins, _sum_bins)
+    return foreach_batch(path, _lift, _sum_bins)
 
 
 def read_quantiles(spark: SparkSession, path: str) -> DataFrame:

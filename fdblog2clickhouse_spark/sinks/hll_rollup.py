@@ -18,8 +18,9 @@ state's estimate is bit-identical to the batch HLL query (and to the
 DuckDB oracle).
 
 Scale shape: state is O(types × 64 registers) regardless of stream
-volume; each micro-batch reduces map-side to ≤ that many rows before
-the merge, so the sink's cost is flat at 100 TB.
+volume, so a merge folds the batch's per-event register rows and the
+stored registers in one aggregation in one task: one Spark job, no
+exchange (sinks/state.py).
 """
 
 from __future__ import annotations
@@ -40,10 +41,9 @@ from .state import foreach_batch, merge_state, read_state
 _KEYS = ["event_type", "bucket"]
 
 
-def batch_registers(df: DataFrame) -> DataFrame:
-    """One micro-batch's HLL register partial state: per
-    (event_type, bucket) max rho over the batch's user hashes.
-    Input needs (event_type, user_id)."""
+def _lift(df: DataFrame) -> DataFrame:
+    """One event as one register row: (event_type, bucket, rho of
+    the user hash). Input needs (event_type, user_id)."""
     hashed = df.select(
         "event_type", h32(F.col("user_id").cast("string")).alias("h")
     )
@@ -60,24 +60,29 @@ def batch_registers(df: DataFrame) -> DataFrame:
             .otherwise(F.lit(_HLL_RHO_MAX) - F.length(F.bin("rem")))
             .alias("m"),
         )
-        .groupBy(*_KEYS)
-        .agg(F.max("m").alias("m"))
     )
 
 
 def _max_registers(df: DataFrame) -> DataFrame:
-    """Per-register MAX — the uniqMerge step, done eagerly."""
-    return df.groupBy(*_KEYS).agg(F.max("m").alias("m"))
+    """Per-register MAX — the uniqMerge step, done eagerly, in one
+    task."""
+    return df.coalesce(1).groupBy(*_KEYS).agg(F.max("m").alias("m"))
+
+
+def batch_registers(df: DataFrame) -> DataFrame:
+    """One micro-batch's HLL register state: per (event_type,
+    bucket) max rho over the batch's user hashes."""
+    return _max_registers(_lift(df))
 
 
 def merge_hll(spark: SparkSession, path: str, batch: DataFrame) -> None:
-    """Merge a batch's register state into the stored state.
-    Idempotent: re-merging an already-absorbed batch is a no-op."""
-    merge_state(spark, path, batch_registers(batch), _max_registers)
+    """Fold a batch into the stored registers. Idempotent:
+    re-merging an already-absorbed batch is a no-op."""
+    merge_state(spark, path, batch, _lift, _max_registers)
 
 
 def foreach_batch_hll(path: str):
-    return foreach_batch(path, batch_registers, _max_registers)
+    return foreach_batch(path, _lift, _max_registers)
 
 
 def read_estimate(spark: SparkSession, path: str) -> DataFrame:

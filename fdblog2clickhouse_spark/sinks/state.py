@@ -1,12 +1,25 @@
-"""Exactly-once merge of a micro-batch into a persisted state table —
+"""Exactly-once fold of a micro-batch into a persisted state table —
 the one commit behind the rollup, histogram, HLL and upsert sinks
 (SURVEY §2.8).
 
-Each sink keeps a small state table (O(groups), never O(events)) and
-folds one batch's partial state into it: read the state, union the
-partial, re-aggregate with the sink's own `combine`, and replace the
-table through `storage.commit` — so at every instant the table or its
-'.old' aside is complete, and every reader heals before it reads.
+Each sink keeps a small state table and names two functions: `lift`,
+which turns a batch's rows into rows of the state's shape, and
+`combine`, which aggregates state-shaped rows into the state. A merge
+folds the lifted batch straight into the stored state —
+`combine(state ∪ lift(batch))`, one aggregation — and replaces the
+table through `storage.commit`, so at every instant the table or its
+'.old' aside is complete, and every reader heals before it reads. The
+state is read under `combine(lift(batch)).schema`, which costs
+analysis only, no schema-inference job.
+
+Jobs per merge: the rollup, histogram and HLL states are bounded by
+the value domain, and their `combine` starts with `coalesce(1)`, so
+the fold plans no exchange and the whole merge is 1 Spark job — the
+parquet write — in a single task. That task reads the whole state and
+the whole batch, so callers bound a micro-batch in files
+(`maxFilesPerTrigger`). The upsert state is O(keys) and keeps a
+key-partitioned window: 2 jobs, the shuffle's map stage and the
+write.
 
 Exactly-once under `foreachBatch` replay follows *Structured
 Streaming* (SIGMOD 2018): a replayable source plus a sink that is
@@ -16,7 +29,8 @@ before the publish, so the watermark and the state it describes
 commit together. A batch whose id is at or below its query's recorded
 id is skipped. A restart from the same checkpoint keeps its query id;
 a fresh checkpoint gets a new one and starts its own watermark; a
-direct `merge_*` call carries no batch id and always merges.
+direct `merge_*` call carries no batch id and always merges. The
+watermark is driver-side file I/O and adds no Spark job.
 """
 
 from __future__ import annotations
@@ -43,15 +57,15 @@ def _applied(path: str) -> dict:
 def merge_state(
     spark: SparkSession,
     path: str,
-    partial: DataFrame,
+    batch_df: DataFrame,
+    lift,
     combine,
     batch: tuple[str, int] | None = None,
 ) -> None:
-    """Merge `partial` into the state table at `path`; `combine`
-    re-aggregates the union of the stored state and `partial`.
-    `batch=(query_id, batch_id)` records the batch in the same commit
-    and makes a replay of it a no-op. Driver-side file I/O only: the
-    watermark adds no Spark job."""
+    """Fold `lift(batch_df)` into the state table at `path`:
+    `combine(state ∪ lift(batch_df))`. `batch=(query_id, batch_id)`
+    records the batch in the same commit and makes a replay of it a
+    no-op."""
     storage.heal_swap(path)
     marks = _applied(path)
     if batch is not None:
@@ -59,18 +73,21 @@ def merge_state(
         if batch_id <= marks.get(query_id, -1):
             return
         marks[query_id] = batch_id
+    rows = lift(batch_df)
+    merged = combine(rows)
     if os.path.isdir(path):
-        partial = combine(spark.read.parquet(path).unionByName(partial))
+        state = spark.read.schema(merged.schema).parquet(path)
+        merged = combine(state.unionByName(rows))
 
     def write(staging: str) -> None:
-        partial.write.parquet(staging)
+        merged.write.parquet(staging)
         storage.write_json(os.path.join(staging, _MARKS), marks)
 
     storage.commit(path, write)
 
 
-def foreach_batch(path: str, partial, combine):
-    """foreachBatch hook: merge `partial(batch_df)` into the state at
+def foreach_batch(path: str, lift, combine):
+    """foreachBatch hook: fold `lift(batch_df)` into the state at
     `path` exactly once per (streaming query, batch id)."""
 
     def _fn(batch_df: DataFrame, batch_id: int) -> None:
@@ -79,7 +96,8 @@ def foreach_batch(path: str, partial, combine):
         merge_state(
             spark,
             path,
-            partial(batch_df),
+            batch_df,
+            lift,
             combine,
             None if query_id is None else (query_id, batch_id),
         )

@@ -11,8 +11,11 @@ with the stored state and only the max-version row per key survives.
 Resolution is a TOTAL order — (version, tiebreak) — so merge order
 cannot matter: applying batches in ANY order, with ANY slicing,
 yields the same state (tested). That is what makes the sink safe
-under reordered/re-delivered rotations at 100 TB; the merge itself
-is one window over O(keys + batch) rows, partitioned by key hash.
+under reordered/re-delivered rotations at 100 TB. Unlike the rollup,
+histogram and HLL states, this state is O(keys), not bounded by a
+value domain, so it cannot fold in one task: a merge is one window
+over the stored rows ∪ the batch's rows, partitioned by key hash —
+2 Spark jobs, the shuffle's map stage and the write (sinks/state.py).
 """
 
 from __future__ import annotations
@@ -38,6 +41,10 @@ def latest_per_key(
     )
 
 
+def _identity(df: DataFrame) -> DataFrame:
+    return df
+
+
 def merge_upsert(
     spark: SparkSession,
     path: str,
@@ -49,14 +56,14 @@ def merge_upsert(
 ) -> None:
     """Merge one batch into the stored latest-state table."""
     latest = partial(latest_per_key, keys=keys, version=version, tiebreak=tiebreak)
-    merge_state(spark, path, latest(batch), latest)
+    merge_state(spark, path, batch, _identity, latest)
 
 
 def foreach_batch_upsert(path: str, *, keys: list[str], version: str, tiebreak: str):
     """foreachBatch hook: attach latest-state maintenance to a
     streaming ingest."""
     latest = partial(latest_per_key, keys=keys, version=version, tiebreak=tiebreak)
-    return foreach_batch(path, latest, latest)
+    return foreach_batch(path, _identity, latest)
 
 
 read_upsert = read_state

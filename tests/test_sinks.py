@@ -493,6 +493,7 @@ def test_hist_sink_slicing_invariant(spark, sf_smoke, tmp_path):
 # through replay and through a crash inside the commit.
 
 _STATE_SINKS = ["rollup", "hist", "hll", "upsert"]
+_UPSERT_KW = {"keys": ["user_id", "event_type"], "version": "ts", "tiebreak": "event_id"}
 _QUERY_ID = "sql.streaming.queryId"
 
 
@@ -526,8 +527,7 @@ def _state_sink(name):
         merge_upsert,
     )
 
-    kw = {"keys": ["user_id", "event_type"], "version": "ts", "tiebreak": "event_id"}
-    return partial(merge_upsert, **kw), partial(foreach_batch_upsert, **kw)
+    return partial(merge_upsert, **_UPSERT_KW), partial(foreach_batch_upsert, **_UPSERT_KW)
 
 
 def _state_sink_rows(spark, sf_dir):
@@ -620,6 +620,69 @@ def test_state_sink_crash_before_publish_heals(
     merge(spark, path, batches[1])  # at-least-once redelivery
     merge(spark, path, batches[2])
     assert _state(spark, path) == _state(spark, clean)
+
+
+# A merge folds the batch into the stored state in one aggregation:
+# rollup, histogram and HLL in one task (1 Spark job, the write),
+# upsert through one key-partitioned window (2 jobs: its map stage
+# and the write). The state is read under the fold's own schema.
+
+_JOBS_PER_MERGE = {"rollup": 1, "hist": 1, "hll": 1, "upsert": 2}
+
+
+def _fold(name):
+    """The sink's public `combine(lift(df))` at its own grain."""
+    from functools import partial
+
+    from fdblog2clickhouse_spark.sinks.hist_rollup import batch_bins
+    from fdblog2clickhouse_spark.sinks.hll_rollup import batch_registers
+    from fdblog2clickhouse_spark.sinks.rollup import batch_rollup
+    from fdblog2clickhouse_spark.sinks.upsert import latest_per_key
+
+    return {
+        "rollup": batch_rollup,
+        "hist": batch_bins,
+        "hll": batch_registers,
+        "upsert": partial(latest_per_key, **_UPSERT_KW),
+    }[name]
+
+
+def _file_batch(spark, sf_dir, tmp_path):
+    """The state-sink rows as a 4-file parquet scan: a multi-partition
+    batch with no shuffle in its plan, like a file-stream batch."""
+    path = str(tmp_path / "batch")
+    _state_sink_rows(spark, sf_dir).repartition(4).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+@pytest.mark.parametrize("sink", _STATE_SINKS)
+def test_state_sink_merge_jobs_and_schema(spark, sf_smoke, tmp_path, sink):
+    """A multi-partition batch merged into existing state runs the
+    sink's job count. The state is read under
+    `combine(lift(batch)).schema`, so that schema must be the one Spark
+    reads back from the committed state (every column nullable)."""
+    merge, hook = _state_sink(sink)
+    rows = _file_batch(spark, sf_smoke, tmp_path)
+    assert rows.rdd.getNumPartitions() > 1
+    path = str(tmp_path / "state")
+    merge(spark, path, rows.where(F.col("event_id") % 2 == 0))
+    sc = spark.sparkContext
+    group = f"test-state-sink-jobs-{sink}"
+    sc.setJobGroup(group, "state sink fold")
+    try:
+        hook(path)(rows.where(F.col("event_id") % 2 == 1), 0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == _JOBS_PER_MERGE[sink]
+
+    direct = str(tmp_path / "direct")
+    merge(spark, direct, rows)
+    assert _state(spark, path) == _state(spark, direct)
+    fold = _fold(sink)(_state_sink_rows(spark, sf_smoke)).schema
+    back = spark.read.parquet(path).schema
+    assert [(f.name, f.dataType) for f in fold] == [(f.name, f.dataType) for f in back]
+    assert all(f.nullable for f in back)
 
 
 # ------------------------------- optimize_mergetree: reader-safe publish
