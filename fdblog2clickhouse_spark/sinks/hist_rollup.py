@@ -15,7 +15,9 @@ a replayed batch a no-op).
 Scale shape: the stored state is bounded by the value domain
 (O(types × bins)), independent of stream volume, so a merge folds the
 batch's one-count bin rows and the stored bins in one aggregation in
-one task: one Spark job, no exchange (sinks/state.py). The family is now
+one task: one Spark job, no exchange, for a micro-batch of one or two
+scan partitions; a larger batch reduces map-side, in parallel, to
+O(types × bins) rows first (sinks/state.py). The family is now
 complete: counts (sinks/rollup.py, SUM), distincts
 (sinks/hll_rollup.py, idempotent MAX), quantiles (here, SUM of bin
 counts).
@@ -45,8 +47,8 @@ def _lift(df: DataFrame) -> DataFrame:
 
 def _sum_bins(df: DataFrame) -> DataFrame:
     """Per-bin SUM — the quantileMerge background step, done
-    eagerly, in one task."""
-    return df.coalesce(1).groupBy(*_KEYS).agg(F.sum("c").alias("c"))
+    eagerly."""
+    return df.groupBy(*_KEYS).agg(F.sum("c").alias("c"))
 
 
 def batch_bins(df: DataFrame) -> DataFrame:
@@ -56,11 +58,11 @@ def batch_bins(df: DataFrame) -> DataFrame:
 
 def merge_hist(spark: SparkSession, path: str, batch: DataFrame) -> None:
     """Fold a batch's values into the stored bins."""
-    merge_state(spark, path, batch, _lift, _sum_bins)
+    merge_state(spark, path, batch, _sum_bins, lift=_lift)
 
 
 def foreach_batch_hist(path: str):
-    return foreach_batch(path, _lift, _sum_bins)
+    return foreach_batch(path, _sum_bins, lift=_lift)
 
 
 def read_quantiles(spark: SparkSession, path: str) -> DataFrame:

@@ -18,9 +18,11 @@ state's estimate is bit-identical to the batch HLL query (and to the
 DuckDB oracle).
 
 Scale shape: state is O(types × 64 registers) regardless of stream
-volume, so a merge folds the batch's per-event register rows and the
-stored registers in one aggregation in one task: one Spark job, no
-exchange (sinks/state.py).
+volume. A micro-batch of one or two scan partitions folds its
+per-event register rows with the stored registers in one task (one
+Spark job, no exchange); a larger one reduces map-side, in parallel,
+to ≤ that many rows before the merge (sinks/state.py), so a merge's
+cost does not grow with stream volume.
 """
 
 from __future__ import annotations
@@ -64,9 +66,8 @@ def _lift(df: DataFrame) -> DataFrame:
 
 
 def _max_registers(df: DataFrame) -> DataFrame:
-    """Per-register MAX — the uniqMerge step, done eagerly, in one
-    task."""
-    return df.coalesce(1).groupBy(*_KEYS).agg(F.max("m").alias("m"))
+    """Per-register MAX — the uniqMerge step, done eagerly."""
+    return df.groupBy(*_KEYS).agg(F.max("m").alias("m"))
 
 
 def batch_registers(df: DataFrame) -> DataFrame:
@@ -78,11 +79,11 @@ def batch_registers(df: DataFrame) -> DataFrame:
 def merge_hll(spark: SparkSession, path: str, batch: DataFrame) -> None:
     """Fold a batch into the stored registers. Idempotent:
     re-merging an already-absorbed batch is a no-op."""
-    merge_state(spark, path, batch, _lift, _max_registers)
+    merge_state(spark, path, batch, _max_registers, lift=_lift)
 
 
 def foreach_batch_hll(path: str):
-    return foreach_batch(path, _lift, _max_registers)
+    return foreach_batch(path, _max_registers, lift=_lift)
 
 
 def read_estimate(spark: SparkSession, path: str) -> DataFrame:

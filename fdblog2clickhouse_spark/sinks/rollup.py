@@ -11,9 +11,11 @@ batch's events into the stored aggregate and replacing the
 Scale shape: the stored rollup is O(groups), not O(events). A merge
 lifts each event to a one-event row of the rollup's shape and sums
 those rows together with the stored ones in one aggregation
-(sinks/state.py): the whole merge is one Spark job in one task, with
-no exchange, so its cost is the rows of one micro-batch plus the
-groups-sized state. All measures are exact BIGINT
+(sinks/state.py): one Spark job in one task for a micro-batch of one
+or two scan partitions, and a parallel map-side pre-aggregation to
+one row per touched group (one more job) for a larger one, so the
+sink's cost stays the batch's rows plus the groups-sized state at
+any stream volume. All measures are exact BIGINT
 sums/counts (order- and batch-boundary-independent by commutativity),
 so ANY batch slicing of the input yields the identical rollup — the
 unit tests assert 1-batch ≡ 2-batch ≡ N-batch. SUM is not idempotent,
@@ -47,10 +49,9 @@ def _lift(df: DataFrame) -> DataFrame:
 
 def _sum_measures(df: DataFrame) -> DataFrame:
     """Sum-of-sums — the SummingMergeTree background merge, done
-    eagerly, in one task (the state is bounded by the value domain).
-    Exact integer measures make it associative: state never depends
-    on batch boundaries."""
-    return df.coalesce(1).groupBy(*_KEYS).agg(
+    eagerly. Exact integer measures make it associative: state never
+    depends on batch boundaries."""
+    return df.groupBy(*_KEYS).agg(
         F.sum("n_events").alias("n_events"),
         F.sum("value_c").alias("value_c"),
     )
@@ -63,14 +64,14 @@ def batch_rollup(df: DataFrame) -> DataFrame:
 
 def merge_rollup(spark: SparkSession, path: str, batch: DataFrame) -> None:
     """Fold one batch into the stored rollup."""
-    merge_state(spark, path, batch, _lift, _sum_measures)
+    merge_state(spark, path, batch, _sum_measures, lift=_lift)
 
 
 def foreach_batch_rollup(path: str):
     """foreachBatch hook: attach the rollup maintenance to any
     streaming ingest (`.writeStream.foreachBatch(...)`), exactly once
     per batch id."""
-    return foreach_batch(path, _lift, _sum_measures)
+    return foreach_batch(path, _sum_measures, lift=_lift)
 
 
 read_rollup = read_state

@@ -41,10 +41,6 @@ def latest_per_key(
     )
 
 
-def _identity(df: DataFrame) -> DataFrame:
-    return df
-
-
 def merge_upsert(
     spark: SparkSession,
     path: str,
@@ -56,14 +52,14 @@ def merge_upsert(
 ) -> None:
     """Merge one batch into the stored latest-state table."""
     latest = partial(latest_per_key, keys=keys, version=version, tiebreak=tiebreak)
-    merge_state(spark, path, batch, _identity, latest)
+    merge_state(spark, path, batch, latest)
 
 
 def foreach_batch_upsert(path: str, *, keys: list[str], version: str, tiebreak: str):
     """foreachBatch hook: attach latest-state maintenance to a
     streaming ingest."""
     latest = partial(latest_per_key, keys=keys, version=version, tiebreak=tiebreak)
-    return foreach_batch(path, _identity, latest)
+    return foreach_batch(path, latest)
 
 
 read_upsert = read_state

@@ -238,21 +238,21 @@ def test_watch_caps_files_per_micro_batch(tmp_path, capsys):
 
 
 def test_rollup_caps_files_per_micro_batch(spark, tmp_path, capsys):
-    """Each micro-batch folds into the rollup in one task, so `rollup`
-    bounds a micro-batch in files, --once (AvailableNow) included."""
-    from fdblog2clickhouse_spark.sinks.clickhouse import MAX_FILES_PER_INSERT
+    """`rollup` takes a backlog in bounded micro-batches, --once
+    (AvailableNow) included, and counts each event once."""
+    from fdblog2clickhouse_spark.cli import ROLLUP_FILES_PER_TRIGGER as MAX_FILES
     from fdblog2clickhouse_spark.sinks.rollup import read_rollup
 
     log_dir, out = str(tmp_path / "logs"), str(tmp_path / "rollup")
     ckpt = str(tmp_path / "ckpt")
-    _one_line_rotations(log_dir, MAX_FILES_PER_INSERT + 1)
+    _one_line_rotations(log_dir, MAX_FILES + 1)
     rc = cli.main(["rollup", log_dir, out, "--once", "--checkpoint", ckpt])
     assert rc == 0
     assert "rollup cells: 1" in capsys.readouterr().out
     commits = [n for n in os.listdir(os.path.join(ckpt, "commits")) if n.isdigit()]
     assert sorted(commits) == ["0", "1"]
     assert [tuple(r) for r in read_rollup(spark, out).collect()] == [
-        (202401, 10, "t", MAX_FILES_PER_INSERT + 1, 0)
+        (202401, 10, "t", MAX_FILES + 1, 0)
     ]
 
 

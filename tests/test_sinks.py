@@ -622,12 +622,14 @@ def test_state_sink_crash_before_publish_heals(
     assert _state(spark, path) == _state(spark, clean)
 
 
-# A merge folds the batch into the stored state in one aggregation:
-# rollup, histogram and HLL in one task (1 Spark job, the write),
-# upsert through one key-partitioned window (2 jobs: its map stage
-# and the write). The state is read under the fold's own schema.
+# A merge folds the batch into the stored state in one aggregation.
+# Rollup, histogram and HLL fold a batch of at most ONE_TASK_PARTITIONS
+# partitions in one task (1 Spark job, the write) and pre-aggregate a
+# larger one in parallel (2 jobs: its map stage and the write); upsert
+# always runs one key-partitioned window (2 jobs). The state is read
+# under the fold's own schema, and the stored columns are recorded.
 
-_JOBS_PER_MERGE = {"rollup": 1, "hist": 1, "hll": 1, "upsert": 2}
+_JOBS_PER_MERGE = {"rollup": (1, 2), "hist": (1, 2), "hll": (1, 2), "upsert": (2, 2)}
 
 
 def _fold(name):
@@ -647,42 +649,95 @@ def _fold(name):
     }[name]
 
 
-def _file_batch(spark, sf_dir, tmp_path):
-    """The state-sink rows as a 4-file parquet scan: a multi-partition
-    batch with no shuffle in its plan, like a file-stream batch."""
-    path = str(tmp_path / "batch")
-    _state_sink_rows(spark, sf_dir).repartition(4).write.parquet(path)
-    return spark.read.parquet(path)
+def _jobs(spark, name, fn) -> int:
+    """Spark jobs that `fn()` runs."""
+    sc = spark.sparkContext
+    group = f"test-state-sink-jobs-{name}"
+    sc.setJobGroup(group, "state sink fold")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.mark.parametrize("sink", _STATE_SINKS)
 def test_state_sink_merge_jobs_and_schema(spark, sf_smoke, tmp_path, sink):
-    """A multi-partition batch merged into existing state runs the
-    sink's job count. The state is read under
-    `combine(lift(batch)).schema`, so that schema must be the one Spark
-    reads back from the committed state (every column nullable)."""
+    """Two file batches merged into existing state, one of
+    ONE_TASK_PARTITIONS partitions and one of more, run the sink's job
+    counts. The state is read under `combine(lift(batch)).schema`, so
+    that schema must be the one Spark reads back from the committed
+    state (every column nullable)."""
+    from fdblog2clickhouse_spark.sinks.state import ONE_TASK_PARTITIONS as N
+
     merge, hook = _state_sink(sink)
-    rows = _file_batch(spark, sf_smoke, tmp_path)
-    assert rows.rdd.getNumPartitions() > 1
+    rows = _state_sink_rows(spark, sf_smoke)
+    files = str(tmp_path / "batch")
+    rows.repartition(2 * N + 1).write.parquet(files)
+    parts = sorted(glob.glob(os.path.join(files, "part-*")))
+    small, large = spark.read.parquet(*parts[:N]), spark.read.parquet(*parts[N:])
+    assert small.rdd.getNumPartitions() == N < large.rdd.getNumPartitions()
+
     path = str(tmp_path / "state")
     merge(spark, path, rows.where(F.col("event_id") % 2 == 0))
-    sc = spark.sparkContext
-    group = f"test-state-sink-jobs-{sink}"
-    sc.setJobGroup(group, "state sink fold")
-    try:
-        hook(path)(rows.where(F.col("event_id") % 2 == 1), 0)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == _JOBS_PER_MERGE[sink]
+    odd = F.col("event_id") % 2 == 1
+    jobs = (
+        _jobs(spark, f"{sink}-small", lambda: hook(path)(small.where(odd), 0)),
+        _jobs(spark, f"{sink}-large", lambda: hook(path)(large.where(odd), 1)),
+    )
+    assert jobs == _JOBS_PER_MERGE[sink]
 
     direct = str(tmp_path / "direct")
     merge(spark, direct, rows)
     assert _state(spark, path) == _state(spark, direct)
-    fold = _fold(sink)(_state_sink_rows(spark, sf_smoke)).schema
+    fold = _fold(sink)(rows).schema
     back = spark.read.parquet(path).schema
     assert [(f.name, f.dataType) for f in fold] == [(f.name, f.dataType) for f in back]
     assert all(f.nullable for f in back)
+
+
+def test_upsert_merge_refuses_changed_columns(spark, sf_smoke, tmp_path):
+    """The upsert state keeps whatever columns its stream selects.
+    A batch that drops a stored column, or adds one, raises instead
+    of dropping or NULL-filling a column, and the state is left as
+    it was."""
+    merge, _ = _state_sink("upsert")
+    rows = _state_sink_rows(spark, sf_smoke)
+    path = str(tmp_path / "state")
+    merge(spark, path, rows.where(F.col("event_id") % 2 == 0))
+    before = _state(spark, path)
+    odd = rows.where(F.col("event_id") % 2 == 1)
+    for batch in (odd.drop("value_c"), odd.withColumn("extra", F.lit(1))):
+        with pytest.raises(ValueError, match="columns"):
+            merge(spark, path, batch)
+    assert _state(spark, path) == before
+
+
+def test_state_sink_keeps_a_legacy_watermark(spark, sf_smoke, tmp_path):
+    """A state whose `_batches.json` is the bare {query id: batch id}
+    map, written before the columns were recorded, still skips a
+    replayed batch; its next merge records the columns."""
+    _, hook = _state_sink("rollup")
+    rows = _state_sink_rows(spark, sf_smoke)
+    path = str(tmp_path / "state")
+    marks = os.path.join(path, "_batches.json")
+    sc = spark.sparkContext
+    try:
+        sc.setLocalProperty(_QUERY_ID, "query-a")
+        hook(path)(rows, 0)
+        with open(marks, "w") as f:
+            json.dump({"query-a": 0}, f)
+        before = _state(spark, path)
+        hook(path)(rows, 0)  # replay of batch 0
+        assert _state(spark, path) == before
+        hook(path)(rows, 1)
+    finally:
+        sc.setLocalProperty(_QUERY_ID, None)
+    with open(marks) as f:
+        meta = json.load(f)
+    assert meta["batches"] == {"query-a": 1}
+    assert [c for c, _ in meta["columns"]] == spark.read.parquet(path).columns
 
 
 # ------------------------------- optimize_mergetree: reader-safe publish
