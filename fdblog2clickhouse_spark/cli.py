@@ -180,7 +180,7 @@ def cmd_watch(args) -> int:
     import time
 
     from .sinks.clickhouse import MAX_FILES_PER_INSERT
-    from .streaming.ingest import normalize_trace, read_trace_stream
+    from .streaming.ingest import glob_name_guard, normalize_trace, read_trace_stream
 
     spark = _spark()
     stream = normalize_trace(
@@ -195,7 +195,7 @@ def cmd_watch(args) -> int:
     )
     sink = _sink(args)
     writer = (
-        stream.writeStream.foreachBatch(sink.foreach_batch())
+        stream.writeStream.foreachBatch(glob_name_guard(args.log_dir, sink.foreach_batch()))
         .option("checkpointLocation", args.checkpoint)
     )
     sentinel = args.completion_file or os.environ.get("WATCH_COMPLETION_FILE")
@@ -233,7 +233,7 @@ def cmd_rollup(args) -> int:
     from pyspark.sql import functions as F
 
     from .sinks.rollup import foreach_batch_rollup, read_rollup
-    from .streaming.ingest import normalize_trace, read_trace_stream
+    from .streaming.ingest import glob_name_guard, normalize_trace, read_trace_stream
 
     spark = _spark()
     rows = normalize_trace(
@@ -252,7 +252,7 @@ def cmd_rollup(args) -> int:
         F.lit(0).cast("long").alias("value_c"),
     )
     writer = (
-        rows.writeStream.foreachBatch(foreach_batch_rollup(args.out))
+        rows.writeStream.foreachBatch(glob_name_guard(args.log_dir, foreach_batch_rollup(args.out)))
         .option("checkpointLocation", args.checkpoint)
     )
     q = writer.trigger(availableNow=True).start() if args.once else writer.start()

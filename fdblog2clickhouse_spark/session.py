@@ -5,6 +5,20 @@ configuration is chosen to also be sane on a large cluster: AQE for
 runtime re-planning and skew joins, Arrow for any Python-edge
 exchange, UTC session time, and a shuffle partition count that AQE
 coalesces down when partitions are small.
+
+The `file` scheme is served by `jvm/LocalFileSystem.java` (built into
+`jvm/localfs.jar` by tools/build_jvm.py). Without libhadoop, Hadoop's
+RawLocalFileSystem starts a `chmod` process for every file create and
+mkdir and a `readlink` process for every link-status lookup, four per
+FileContext rename. A streaming trigger writes offsets, commits,
+source-log entries and state-sink parquet, so each live trigger paid
+for dozens of such processes. The helper makes the same system calls
+through java.nio and keeps checksums; it is wired in for both
+FileSystem users (`fs.file.impl`) and FileContext users such as
+Spark's checkpoint manager (`fs.AbstractFileSystem.file.impl`). The
+jar goes on the driver class path when this process launches the JVM.
+A JVM launched without it (another caller built the first session)
+cannot load the classes, so its sessions keep stock Hadoop.
 """
 
 from __future__ import annotations
@@ -23,6 +37,27 @@ from pyspark.sql import SparkSession
 # construction.
 DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
 
+LOCAL_FS_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "localfs.jar")
+LOCAL_FS = "fdblog2clickhouse_spark.jvm.LocalFileSystem"
+
+
+def _local_fs_conf() -> dict[str, str]:
+    """The settings that serve `file:` paths from LOCAL_FS, or none
+    when the running JVM cannot load it (every file operation would
+    raise ClassNotFoundException)."""
+    from pyspark import SparkContext
+
+    jvm = SparkContext._jvm
+    if not os.path.exists(LOCAL_FS_JAR) or (
+        jvm is not None and not jvm.org.apache.spark.util.Utils.classIsLoadable(LOCAL_FS)
+    ):
+        return {}
+    return {
+        "spark.driver.extraClassPath": LOCAL_FS_JAR,
+        "spark.hadoop.fs.file.impl": LOCAL_FS,
+        "spark.hadoop.fs.AbstractFileSystem.file.impl": LOCAL_FS + "$Fs",
+    }
+
 
 def get_spark(app_name: str = "fdblog2clickhouse-spark") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -39,6 +74,7 @@ def get_spark(app_name: str = "fdblog2clickhouse-spark") -> SparkSession:
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )
+    builder = builder.config(map=_local_fs_conf())
     return builder.getOrCreate()
 
 

@@ -16,9 +16,6 @@ because round(Time * 1e6) recovers the original microsecond exactly
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -33,9 +30,10 @@ def read_trace_batch(spark: SparkSession, log_dir: str | list[str]) -> DataFrame
 
 
 def trace_json_batch_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.sinkcheck import scratch_dir
     from ..streaming.queries import _export_mixed_rotation_logs
 
-    base = tempfile.mkdtemp(prefix="trace_batch_")
+    base = scratch_dir("trace_batch")
     # Half the rotations are .json.gz (see _export_mixed_rotation_logs)
     # so the driver's oracle row proves compressed batch ingestion.
     glob = _export_mixed_rotation_logs(spark, sf_dir, base)

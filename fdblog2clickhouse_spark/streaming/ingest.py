@@ -19,6 +19,8 @@ Time, exactly like the reference's pandas slice + astype.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
@@ -53,6 +55,30 @@ def read_trace_stream(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return reader.json(log_dir)
+
+
+# Spark's file stream source reads a micro-batch wrongly when one of
+# its file names holds a character Hadoop's glob syntax gives a
+# meaning: the per-batch read runs with globbing off and then expands
+# each glob-looking path to every path of the batch, so each other
+# file of the batch is read twice (4 files gave 7 rows, Spark 4.1.2).
+GLOB_CHARS = frozenset("{}[]*?\\")
+
+
+def glob_name_guard(log_dir: str, hook):
+    """The foreachBatch `hook`, behind a check that fails the
+    micro-batch with a ValueError naming the file while the local
+    directory `log_dir` holds a file the stream would misread (a name
+    with one of GLOB_CHARS)."""
+
+    def _fn(df: DataFrame, batch_id: int) -> None:
+        if os.path.isdir(log_dir):
+            bad = sorted(e.path for e in os.scandir(log_dir) if GLOB_CHARS.intersection(e.name))
+            if bad:
+                raise ValueError(f"{bad[0]}: a glob character in a trace file name; rename the file")
+        hook(df, batch_id)
+
+    return _fn
 
 
 def normalize_trace(df: DataFrame) -> DataFrame:

@@ -274,6 +274,24 @@ def test_ingest_inserts_in_file_groups(tmp_path, capsys):
     assert os.listdir(log_dir) == []
 
 
+def test_watch_and_rollup_refuse_glob_named_files(tmp_path):
+    """A file name with a glob character makes the file stream read
+    the micro-batch's other files twice, so both stream commands fail
+    naming the file instead of inserting or folding."""
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    log_dir = str(tmp_path / "logs")
+    _one_line_rotations(log_dir, 4, ["d{1}.json"])
+    for argv in (
+        ["--spool-dir", str(tmp_path / "spool"), "watch", log_dir, "--once"],
+        ["rollup", log_dir, str(tmp_path / "rollup"), "--once"],
+    ):
+        with pytest.raises(StreamingQueryException, match=r"d\{1\}\.json: a glob character"):
+            cli.main(argv + ["--checkpoint", str(tmp_path / "ckpt")])
+    assert not os.path.exists(tmp_path / "spool") and not os.path.exists(tmp_path / "rollup")
+
+
 def test_delete_logs_refuses_non_local_files():
     import pytest
 
