@@ -175,12 +175,19 @@ def cmd_watch(args) -> int:
     completion-file sentinel appears (--completion-file /
     $WATCH_COMPLETION_FILE, ≙ entrypoint.sh:22-24: the simulation
     harness drops `sim-completed` and the watch loop drains remaining
-    logs and exits cleanly)."""
+    logs and exits cleanly). --delete-logs removes each micro-batch's
+    files after its commit, the last batch's once the stream ended
+    cleanly."""
     import os
     import time
 
     from .sinks.clickhouse import MAX_FILES_PER_INSERT
-    from .streaming.ingest import glob_name_guard, normalize_trace, read_trace_stream
+    from .streaming.ingest import (
+        delete_last_batch,
+        glob_name_guard,
+        normalize_trace,
+        read_trace_stream,
+    )
 
     spark = _spark()
     stream = normalize_trace(
@@ -214,6 +221,8 @@ def cmd_watch(args) -> int:
     else:
         q = writer.start()
         q.awaitTermination()
+    if args.delete_logs:
+        delete_last_batch(spark, args.checkpoint)
     return 0
 
 
@@ -229,11 +238,17 @@ def cmd_rollup(args) -> int:
     """Maintain the SummingMergeTree-style rollup table from a log
     dir (the materialized-view consumer of the ingest loop): stream
     rotated trace logs, merge each micro-batch into the rollup
-    parquet at OUT. --once drains and exits."""
+    parquet at OUT. --once drains and exits; --delete-logs as in
+    `watch`."""
     from pyspark.sql import functions as F
 
     from .sinks.rollup import foreach_batch_rollup, read_rollup
-    from .streaming.ingest import glob_name_guard, normalize_trace, read_trace_stream
+    from .streaming.ingest import (
+        delete_last_batch,
+        glob_name_guard,
+        normalize_trace,
+        read_trace_stream,
+    )
 
     spark = _spark()
     rows = normalize_trace(
@@ -257,6 +272,8 @@ def cmd_rollup(args) -> int:
     )
     q = writer.trigger(availableNow=True).start() if args.once else writer.start()
     q.awaitTermination()
+    if args.delete_logs:
+        delete_last_batch(spark, args.checkpoint)
     if args.once:
         n = read_rollup(spark, args.out).count()
         print(f"rollup cells: {n}")

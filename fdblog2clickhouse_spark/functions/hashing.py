@@ -45,10 +45,6 @@ def h32_seeded(col: Column, seed: int) -> Column:
     return h32(F.concat(F.lit(f"{seed}|"), col))
 
 
-def h32_seeded_sql(expr: str, seed: int) -> str:
-    return h32_sql(f"'{seed}|' || {expr}")
-
-
 # ------------------------------------------------------------- money
 
 def cents(col: Column, decimals: int = 2) -> Column:

@@ -1091,7 +1091,6 @@ def rebucket_banded_index(
 
 _TBL_META = "_table_meta.json"  # leading '_': parquet listing skips it
 _TBL_PB = "pb"
-_STORE_BUCKETS = 16  # fallback when the build's row count is unknown
 
 # Build-time bucket sizing (r18 optimization): a fresh build knows its
 # own row count, so the initial bucket count is derived from it instead

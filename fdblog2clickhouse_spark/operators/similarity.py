@@ -709,13 +709,6 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pq_codebook_values_sql() -> str:
-    return ", ".join(
-        f"({s}, {c}, [{', '.join(str(w) for w in arr)}])"
-        for s, c, arr in _pq_codebook()
-    )
-
-
 _PQ_D2_SQL = (
     f"list_sum(list_transform(list_zip(list_slice(q, sub * {_PQ_SUBDIM} + 1,"
     f" sub * {_PQ_SUBDIM} + {_PQ_SUBDIM}), carr), p -> (p[1] - p[2]) * (p[1] - p[2])))"

@@ -24,7 +24,6 @@ cannot load the classes, so its sessions keep stock Hadoop.
 from __future__ import annotations
 
 import os
-from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -76,20 +75,6 @@ def get_spark(app_name: str = "fdblog2clickhouse-spark") -> SparkSession:
     )
     builder = builder.config(map=_local_fs_conf())
     return builder.getOrCreate()
-
-
-@contextmanager
-def scoped_shuffle_partitions(spark: SparkSession, n: int):
-    """Temporarily set the shuffle width for a plan whose working set
-    is far smaller than the corpus (iterative loops over edge lists,
-    bounded stateful streams). The caller sizes `n` from the actual
-    data volume so the same code fans out on a cluster."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def overlap(background, foreground) -> None:

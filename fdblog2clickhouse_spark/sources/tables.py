@@ -23,9 +23,6 @@ TABLE_NAMES = [
     "embeddings",
 ]
 
-# Small dimension tables — always broadcast-join these against facts.
-DIMENSIONS = {"region", "nation", "customer", "supplier", "part"}
-
 
 # DataFrame handles are lazy plans; memoizing them per (session, path)
 # skips repeated file listing + footer/schema reads when many queries
@@ -137,10 +134,3 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     if kind == "nanos":
         return stream.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     return stream.withColumn("ts", F.col("ts").cast("timestamp"))
-
-
-def register_all(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view so spark.sql() queries run
-    against the same names the DuckDB oracle uses."""
-    for name in TABLE_NAMES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -8,9 +8,9 @@ stream source:
 
   inotify watch            → readStream.json(log_dir)
   one rotated file = batch → maxFilesPerTrigger / AvailableNow
-  --delete-logs            → option("cleanSource", "delete")
+  --delete-logs            → option("cleanSource", "delete"), plus
+                             delete_last_batch at the end
   POST JSONEachRow         → foreachBatch(ClickHouseHttpSink)
-                             or a partitioned parquet sink
 
 Schema is declared up front (the reference's `columns` table,
 trace-converter.py:85-93); normalization trims to it and coerces
@@ -19,6 +19,7 @@ Time, exactly like the reference's pandas slice + astype.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -55,6 +56,34 @@ def read_trace_stream(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return reader.json(log_dir)
+
+
+def delete_last_batch(spark: SparkSession, checkpoint_dir: str) -> None:
+    """Delete the input files of the last micro-batch committed under
+    the local `checkpoint_dir`. cleanSource=delete removes a batch's
+    files only while the next batch is planned, so the batch a stream
+    ends on keeps them. Call this once the query has ended without
+    error; the batch comes from the commit log, so an uncommitted
+    batch is never touched."""
+    commits = os.path.join(checkpoint_dir, "commits")
+    ids = [int(n) for n in os.listdir(commits) if n.isdigit()] if os.path.isdir(commits) else []
+    if not ids:
+        return
+    last = max(ids)
+    # the file source's log: a version line, then one JSON entry per
+    # file; every 10th batch is written as `<id>.compact`, which holds
+    # the entries of all earlier batches too
+    log = os.path.join(checkpoint_dir, "sources", "0", str(last))
+    if not os.path.exists(log):
+        log += ".compact"
+    with open(log) as f:
+        entries = [json.loads(line) for line in f.read().splitlines()[1:]]
+    jvm, conf = spark._jvm, spark._jsc.hadoopConfiguration()
+    for e in entries:
+        if e["batchId"] == last:
+            # the path is a URI string, resolved as cleanSource does
+            path = jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(e["path"]))
+            path.getFileSystem(conf).delete(path, False)
 
 
 # Spark's file stream source reads a micro-batch wrongly when one of
@@ -98,27 +127,3 @@ def normalize_trace(df: DataFrame) -> DataFrame:
         F.col("ID").alias("id"),
     )
 
-
-def ingest_availablenow(
-    spark: SparkSession,
-    log_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    *,
-    delete_logs: bool = False,
-) -> None:
-    """Batch-drain the log dir into a MergeTree-style parquet sink
-    (partitioned by toYYYYMM(time), the reference's PARTITION BY)."""
-    stream = normalize_trace(read_trace_stream(spark, log_dir, delete_logs=delete_logs))
-    q = (
-        stream.withColumn(
-            "yyyymm", (F.year("time") * 100 + F.month("time")).cast("int")
-        )
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .partitionBy("yyyymm")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

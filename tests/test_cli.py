@@ -256,6 +256,34 @@ def test_rollup_caps_files_per_micro_batch(spark, tmp_path, capsys):
     ]
 
 
+def test_stream_delete_logs_empties_the_log_dir(spark, tmp_path, capsys):
+    """`--delete-logs` on `watch` (--once and a completion-file drain)
+    and on `rollup --once`: 20 rotations, two micro-batches, every
+    file deleted once its batch committed (the last batch's too) and
+    every event inserted or counted once."""
+    from fdblog2clickhouse_spark.sinks.rollup import read_rollup
+
+    n = 20
+    done = tmp_path / "done"  # present from the start: drain, then stop
+    done.touch()
+    for k, extra in enumerate((["--once"], ["--completion-file", str(done)])):
+        log_dir, spool = str(tmp_path / f"logs{k}"), str(tmp_path / f"spool{k}")
+        _one_line_rotations(log_dir, n)
+        rc = cli.main(["--spool-dir", spool, "watch", log_dir, "--delete-logs",
+                       "--checkpoint", str(tmp_path / f"ckpt{k}"), *extra])
+        assert rc == 0
+        assert os.listdir(log_dir) == []
+        assert sorted(sum(_spooled_ids(spool), [])) == sorted(str(i) for i in range(n))
+
+    log_dir, out = str(tmp_path / "logs_r"), str(tmp_path / "rollup")
+    _one_line_rotations(log_dir, n)
+    rc = cli.main(["rollup", log_dir, out, "--once", "--delete-logs",
+                   "--checkpoint", str(tmp_path / "ckpt_r")])
+    assert rc == 0
+    assert os.listdir(log_dir) == []
+    assert [tuple(r) for r in read_rollup(spark, out).collect()] == [(202401, 10, "t", n, 0)]
+
+
 def test_ingest_inserts_in_file_groups(tmp_path, capsys):
     """`ingest` re-reads its input files in groups: a name with a
     space, a percent sign or glob characters still reads back once."""

@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from fdblog2clickhouse_spark.sources.tables import table
 from fdblog2clickhouse_spark.streaming import queries as sq
-from fdblog2clickhouse_spark.streaming.ingest import ingest_availablenow
 
 from .oracle import compare
 
@@ -25,32 +24,6 @@ def test_streaming_trace_ingest_oracle(spark, sf_smoke):
 def test_streaming_windowed_counts_oracle(spark, sf_oracle):
     df = sq.streaming_windowed_counts(spark, sf_oracle)
     compare(df, sq.ORACLE["streaming_windowed_counts"], sf_oracle)
-
-
-def test_ingest_availablenow_mergetree_layout(spark, sf_smoke):
-    """Full pipeline: rotated JSON logs → stream → normalized,
-    toYYYYMM-partitioned parquet sink (the reference's PARTITION BY
-    law), with delete-on-success (--delete-logs) semantics."""
-    base = tempfile.mkdtemp(prefix="ingest_e2e_")
-    log_dir = os.path.join(base, "logs")
-    out_dir = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    sq._export_trace_logs(spark, sf_smoke, log_dir)
-    n_logs_before = len(glob.glob(f"{log_dir}/*.json"))
-    assert n_logs_before > 0
-
-    ingest_availablenow(spark, log_dir, out_dir, ckpt, delete_logs=True)
-
-    out = spark.read.parquet(out_dir)
-    n_events = table(spark, sf_smoke, "events").count()
-    assert out.count() == n_events
-    # partition dirs follow the MergeTree toYYYYMM law
-    parts = {os.path.basename(p) for p in glob.glob(f"{out_dir}/yyyymm=*")}
-    assert parts, "expected yyyymm= partition directories"
-    months = out.select(
-        (F.year("time") * 100 + F.month("time")).cast("int").alias("m")
-    ).distinct()
-    assert parts == {f"yyyymm={r['m']}" for r in months.collect()}
 
 
 def test_streaming_dedup_events_oracle(spark, sf_smoke):
