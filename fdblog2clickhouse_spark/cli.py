@@ -9,6 +9,7 @@ trace file argument) and entrypoint.sh's watch loop
   trace-convert --create-schema           →  create-schema
   trace-convert [--delete-logs] f.json    →  ingest [--delete-logs] PATH
   entrypoint.sh watch loop                →  watch [--once] LOG_DIR
+  SummingMergeTree view on the insert     →  watch --rollup OUT LOG_DIR
 
 Connection config comes from the same env vars the reference reads
 (CLICKHOUSE_ADDR/DB/TABLE/USER/PASS, trace-converter.py:11-17).
@@ -21,7 +22,7 @@ from __future__ import annotations
 import argparse
 import sys
 
-from .sinks.clickhouse import TRACE_COLUMNS, ClickHouseHttpSink, mergetree_ddl
+from .sinks.clickhouse import MAX_FILES_PER_INSERT, TRACE_COLUMNS, ClickHouseHttpSink, mergetree_ddl
 
 
 def _sink(args) -> ClickHouseHttpSink:
@@ -148,7 +149,6 @@ def cmd_ingest(args) -> int:
     insert)."""
     import os
 
-    from .sinks.clickhouse import MAX_FILES_PER_INSERT
     from .sources.trace_json import read_trace_batch
     from .streaming.ingest import normalize_trace
 
@@ -175,20 +175,26 @@ def cmd_watch(args) -> int:
     completion-file sentinel appears (--completion-file /
     $WATCH_COMPLETION_FILE, ≙ entrypoint.sh:22-24: the simulation
     harness drops `sim-completed` and the watch loop drains remaining
-    logs and exits cleanly). --delete-logs removes each micro-batch's
-    files after its commit, the last batch's once the stream ended
-    cleanly."""
+    logs and exits cleanly). --rollup OUT also folds each micro-batch
+    into the SummingMergeTree-style rollup parquet at OUT in the same
+    query, so a checkpoint that ran without it is refused.
+    --delete-logs removes each micro-batch's files after its commit,
+    the last batch's once the stream ended cleanly."""
     import os
     import time
 
-    from .sinks.clickhouse import MAX_FILES_PER_INSERT
+    from .sinks.rollup import foreach_batch_rollup, read_rollup
     from .streaming.ingest import (
         delete_last_batch,
         glob_name_guard,
+        insert_and_rollup,
         normalize_trace,
         read_trace_stream,
+        unfolded_batches,
     )
 
+    if args.rollup and (gap := unfolded_batches(args.checkpoint, args.rollup)):
+        raise SystemExit(f"watch --rollup: {gap}")
     spark = _spark()
     stream = normalize_trace(
         read_trace_stream(
@@ -200,82 +206,27 @@ def cmd_watch(args) -> int:
             max_files_per_trigger=MAX_FILES_PER_INSERT,
         )
     )
-    sink = _sink(args)
+    hook = _sink(args).foreach_batch()
+    if args.rollup:
+        hook = insert_and_rollup(hook, foreach_batch_rollup(args.rollup))
     writer = (
-        stream.writeStream.foreachBatch(glob_name_guard(args.log_dir, sink.foreach_batch()))
+        stream.writeStream.foreachBatch(glob_name_guard(args.log_dir, hook))
         .option("checkpointLocation", args.checkpoint)
     )
-    sentinel = args.completion_file or os.environ.get("WATCH_COMPLETION_FILE")
-    if args.once:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-    elif sentinel:
-        q = writer.start()
-        while q.isActive and not os.path.exists(sentinel):
-            time.sleep(0.5)
-        if q.isActive:
-            q.processAllAvailable()  # drain what arrived before the sentinel
-            q.stop()
-        q.awaitTermination()
-        print(f"watch: completion file {sentinel} seen, exiting")
-    else:
-        q = writer.start()
-        q.awaitTermination()
-    if args.delete_logs:
-        delete_last_batch(spark, args.checkpoint)
-    return 0
-
-
-# `rollup` takes a backlog 16 files per micro-batch, so a restart on a
-# long backlog commits its progress as it goes. Such a batch takes the
-# parallel fold (sinks/state.py): 16 rotations of 16.8 MB each fold
-# into the rollup in 1.0-1.2 s wall on 4 cores, against 2.7-3.2 s in
-# one task.
-ROLLUP_FILES_PER_TRIGGER = 16
-
-
-def cmd_rollup(args) -> int:
-    """Maintain the SummingMergeTree-style rollup table from a log
-    dir (the materialized-view consumer of the ingest loop): stream
-    rotated trace logs, merge each micro-batch into the rollup
-    parquet at OUT. --once drains and exits; --delete-logs as in
-    `watch`."""
-    from pyspark.sql import functions as F
-
-    from .sinks.rollup import foreach_batch_rollup, read_rollup
-    from .streaming.ingest import (
-        delete_last_batch,
-        glob_name_guard,
-        normalize_trace,
-        read_trace_stream,
-    )
-
-    spark = _spark()
-    rows = normalize_trace(
-        read_trace_stream(
-            spark,
-            args.log_dir,
-            delete_logs=args.delete_logs,
-            max_files_per_trigger=ROLLUP_FILES_PER_TRIGGER,
-        )
-    ).select(
-        "time",
-        "severity",
-        "type",
-        # the reference's trace schema carries no numeric measure;
-        # the rollup still tracks exact event counts per cell.
-        F.lit(0).cast("long").alias("value_c"),
-    )
-    writer = (
-        rows.writeStream.foreachBatch(glob_name_guard(args.log_dir, foreach_batch_rollup(args.out)))
-        .option("checkpointLocation", args.checkpoint)
-    )
-    q = writer.trigger(availableNow=True).start() if args.once else writer.start()
+    sentinel = not args.once and (args.completion_file or os.environ.get("WATCH_COMPLETION_FILE"))
+    q = (writer.trigger(availableNow=True) if args.once else writer).start()
+    while sentinel and q.isActive and not os.path.exists(sentinel):
+        time.sleep(0.5)
+    if sentinel and q.isActive:
+        q.processAllAvailable()  # drain what arrived before the sentinel
+        q.stop()
     q.awaitTermination()
+    if sentinel:
+        print(f"watch: completion file {sentinel} seen, exiting")
     if args.delete_logs:
         delete_last_batch(spark, args.checkpoint)
-    if args.once:
-        n = read_rollup(spark, args.out).count()
+    if args.rollup and args.once:  # OUT exists once a batch folded
+        n = read_rollup(spark, args.rollup).count() if os.path.isdir(args.rollup) else 0
         print(f"rollup cells: {n}")
     return 0
 
@@ -1025,15 +976,8 @@ def main(argv: list[str] | None = None) -> int:
         default=None,
         help="exit cleanly when this file appears (default: $WATCH_COMPLETION_FILE)",
     )
+    sw.add_argument("--rollup", metavar="OUT", help="also fold each batch into the rollup at OUT")
     sw.set_defaults(fn=cmd_watch)
-
-    sr = sub.add_parser("rollup")
-    sr.add_argument("log_dir")
-    sr.add_argument("out")
-    sr.add_argument("--once", action="store_true")
-    sr.add_argument("--delete-logs", action="store_true")
-    sr.add_argument("--checkpoint", default="/tmp/trace-rollup-ckpt")
-    sr.set_defaults(fn=cmd_rollup)
 
     so = sub.add_parser("optimize")
     so.add_argument("path")

@@ -77,25 +77,29 @@ def get_spark(app_name: str = "fdblog2clickhouse-spark") -> SparkSession:
     return builder.getOrCreate()
 
 
-def overlap(background, foreground) -> None:
+def overlap(background, foreground, pool=None) -> None:
     """Run `background()` on a worker thread while `foreground()`
     runs on this one, so independent Spark jobs back-fill each
     other's stragglers; return once both are done. The foreground's
     error wins: a background error raised alongside it is chained as
     its cause instead of replacing it, and a background error alone
-    is raised as itself."""
+    is raised as itself. A caller that overlaps on every micro-batch
+    keeps a one-worker `pool`: each new Python thread costs a new
+    py4j-pinned JVM thread, 40-55 ms a call on local[4]."""
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        bg = pool.submit(background)
-        try:
-            foreground()
-        except BaseException as err:
-            bg_err = bg.exception()
-            if bg_err is not None:
-                raise err from bg_err
-            raise
-        bg.result()
+    if pool is None:
+        with ThreadPoolExecutor(max_workers=1) as own:
+            return overlap(background, foreground, own)
+    bg = pool.submit(background)
+    try:
+        foreground()
+    except BaseException as err:
+        bg_err = bg.exception()
+        if bg_err is not None:
+            raise err from bg_err
+        raise
+    bg.result()
 
 
 def tune(spark: SparkSession) -> SparkSession:

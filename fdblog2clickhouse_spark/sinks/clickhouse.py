@@ -21,11 +21,11 @@ Re-expresses the reference's sink surface Spark-first:
 Driver memory: `insert` holds its whole DataFrame's JSON text on the
 driver, about 150 B per trace row, and the collect fails once that
 passes `spark.driver.maxResultSize` (1 GiB by default). The CLI
-bounds it in files: `watch` caps each micro-batch at
-`MAX_FILES_PER_INSERT` rotated files (maxFilesPerTrigger) and
-`ingest` inserts its input in groups of that many. A file is never
-split, so the bound holds as long as rotations stay small (fdbserver
-rolls its trace files at 10 MiB by default).
+bounds it in files: `watch` (and the rollup it folds) takes
+`MAX_FILES_PER_INSERT` rotated files per micro-batch, and `ingest`
+inserts groups of that many. A file is never split, so the bound
+holds as long as rotations stay small (fdbserver rolls its trace
+files at 10 MiB by default).
 
 What is measured, all on local[4] against local endpoints: the CPU
 saving and the job count, with micro-batches of at most 96k rows.
@@ -235,6 +235,10 @@ def jsoneachrow(df: DataFrame) -> DataFrame:
     return df.select(F.to_json(F.struct(*df.columns)).alias("line"))
 
 
+# seconds a POST waits to connect and per read: a stalled server fails the batch
+POST_TIMEOUT_S = 60
+
+
 def _post(payload: bytes, url: str, params: dict, auth, spool_dir: str | None):
     if spool_dir is not None:
         os.makedirs(spool_dir, exist_ok=True)
@@ -244,7 +248,7 @@ def _post(payload: bytes, url: str, params: dict, auth, spool_dir: str | None):
         return
     if not HAVE_REQUESTS:
         raise RuntimeError("requests not available; use dry_run spooling")
-    r = requests.post(url, params=params, data=payload, auth=auth)
+    r = requests.post(url, params=params, data=payload, auth=auth, timeout=POST_TIMEOUT_S)
     r.raise_for_status()
 
 

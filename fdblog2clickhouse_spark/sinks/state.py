@@ -67,8 +67,9 @@ def _columns(df: DataFrame) -> list[list[str]]:
 
 def _meta(path: str) -> tuple[dict, list | None]:
     """The state's {query id: batch id} watermark and its recorded
-    columns; None columns for a state written before they were
-    recorded."""
+    columns, after healing an interrupted swap; None columns for a
+    state written before they were recorded."""
+    storage.heal_swap(path)
     try:
         with open(os.path.join(path, _MARKS)) as f:
             meta = json.load(f)
@@ -97,7 +98,6 @@ def merge_state(
     `batch=(query_id, batch_id)` records the batch in the same commit
     and makes a replay of it a no-op. Raises ValueError, before the
     write, when the stored columns differ from the fold's."""
-    storage.heal_swap(path)
     marks, stored = _meta(path)
     if batch is not None:
         query_id, batch_id = batch
@@ -149,6 +149,11 @@ def foreach_batch(path: str, combine, *, lift=None):
         )
 
     return _fn
+
+
+def applied_batch(path: str, query_id: str) -> int:
+    """The last batch of streaming query `query_id` folded at `path`, or -1."""
+    return _meta(path)[0].get(query_id, -1)
 
 
 def read_state(spark: SparkSession, path: str) -> DataFrame:

@@ -11,6 +11,7 @@ stream source:
   --delete-logs            → option("cleanSource", "delete"), plus
                              delete_last_batch at the end
   POST JSONEachRow         → foreachBatch(ClickHouseHttpSink)
+  materialized-view rollup → the same foreachBatch (insert_and_rollup)
 
 Schema is declared up front (the reference's `columns` table,
 trace-converter.py:85-93); normalization trims to it and coerces
@@ -58,6 +59,13 @@ def read_trace_stream(
     return reader.json(log_dir)
 
 
+def _last_commit(checkpoint_dir: str) -> int | None:
+    """The last batch id in the local checkpoint's commit log."""
+    commits = os.path.join(checkpoint_dir, "commits")
+    ids = [int(n) for n in os.listdir(commits) if n.isdigit()] if os.path.isdir(commits) else []
+    return max(ids, default=None)
+
+
 def delete_last_batch(spark: SparkSession, checkpoint_dir: str) -> None:
     """Delete the input files of the last micro-batch committed under
     the local `checkpoint_dir`. cleanSource=delete removes a batch's
@@ -65,11 +73,9 @@ def delete_last_batch(spark: SparkSession, checkpoint_dir: str) -> None:
     ends on keeps them. Call this once the query has ended without
     error; the batch comes from the commit log, so an uncommitted
     batch is never touched."""
-    commits = os.path.join(checkpoint_dir, "commits")
-    ids = [int(n) for n in os.listdir(commits) if n.isdigit()] if os.path.isdir(commits) else []
-    if not ids:
+    last = _last_commit(checkpoint_dir)
+    if last is None:
         return
-    last = max(ids)
     # the file source's log: a version line, then one JSON entry per
     # file; every 10th batch is written as `<id>.compact`, which holds
     # the entries of all earlier batches too
@@ -108,6 +114,42 @@ def glob_name_guard(log_dir: str, hook):
         hook(df, batch_id)
 
     return _fn
+
+
+def insert_and_rollup(insert, rollup):
+    """foreachBatch hook feeding both sinks of a log dir from one
+    batch: `insert` (ClickHouseHttpSink.foreach_batch) on a background
+    thread, `rollup` (foreach_batch_rollup) on the query's own thread,
+    whose `sql.streaming.queryId` property its replay watermark reads.
+    Returns once both are done, so the batch commits, and cleanSource
+    deletes its files, only after both sinks took it."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from ..session import overlap
+
+    pool = ThreadPoolExecutor(max_workers=1)  # one insert thread for the query's life
+
+    def _fn(df: DataFrame, batch_id: int) -> None:
+        # the trace schema has no numeric measure: the rollup counts events
+        rows = df.select("time", "severity", "type", F.lit(0).cast("long").alias("value_c"))
+        overlap(lambda: insert(df, batch_id), lambda: rollup(rows, batch_id), pool)
+
+    return _fn
+
+
+def unfolded_batches(checkpoint_dir: str, state_path: str) -> str | None:
+    """Why the state at `state_path` cannot join the query of the local
+    `checkpoint_dir` (Spark resumes after its last commit, so batches
+    committed but not folded never reach it), or None. No Spark job."""
+    from ..sinks.state import applied_batch
+
+    last = _last_commit(checkpoint_dir)
+    if last is not None:
+        with open(os.path.join(checkpoint_dir, "metadata")) as f:
+            folded = applied_batch(state_path, json.loads(f.readline())["id"])
+        if folded < last:
+            return f"{checkpoint_dir} committed batches {folded + 1}..{last} that {state_path} has not folded"
+    return None
 
 
 def normalize_trace(df: DataFrame) -> DataFrame:

@@ -96,3 +96,15 @@ def fake_ch():
     finally:
         srv.shutdown()
         srv.server_close()
+
+
+@pytest.fixture()
+def stalled_ch():
+    """An HTTP endpoint that accepts connections and never replies:
+    the kernel completes each connection into the listen backlog and
+    buffers the request, and nothing reads it. Yields its URL; closing
+    the socket at teardown resets every pending connection."""
+    import socket
+
+    with socket.create_server(("127.0.0.1", 0)) as srv:
+        yield f"http://127.0.0.1:{srv.getsockname()[1]}"

@@ -237,30 +237,102 @@ def test_watch_caps_files_per_micro_batch(tmp_path, capsys):
     assert sorted(sum(ids, [])) == sorted(str(i) for i in range(MAX_FILES_PER_INSERT + 1))
 
 
-def test_rollup_caps_files_per_micro_batch(spark, tmp_path, capsys):
-    """`rollup` takes a backlog in bounded micro-batches, --once
-    (AvailableNow) included, and counts each event once."""
-    from fdblog2clickhouse_spark.cli import ROLLUP_FILES_PER_TRIGGER as MAX_FILES
+def test_rollup_caps_files_per_micro_batch(spark, tmp_path, capsys, monkeypatch):
+    """`watch --rollup` takes a backlog in bounded micro-batches,
+    --once (AvailableNow) included, and counts each event once. It
+    runs one StreamingQuery with one source log, and the status line
+    reports the rows the insert sent (Spark's numInputRows counts each
+    row once per sink)."""
+    from pyspark.sql.streaming import DataStreamWriter
+
+    from fdblog2clickhouse_spark.sinks.clickhouse import MAX_FILES_PER_INSERT as MAX_FILES
     from fdblog2clickhouse_spark.sinks.rollup import read_rollup
 
+    started, start = [], DataStreamWriter.start
+
+    def start_and_keep(*args, **kwargs):
+        started.append(start(*args, **kwargs))
+        return started[-1]
+
+    monkeypatch.setattr(DataStreamWriter, "start", start_and_keep)
     log_dir, out = str(tmp_path / "logs"), str(tmp_path / "rollup")
-    ckpt = str(tmp_path / "ckpt")
+    spool, ckpt = str(tmp_path / "spool"), str(tmp_path / "ckpt")
+    os.makedirs(log_dir)  # nothing to fold yet is a success too
+    rc = cli.main(["--spool-dir", spool, "watch", log_dir, "--rollup", out, "--once",
+                   "--checkpoint", ckpt])
+    assert rc == 0 and "rollup cells: 0" in capsys.readouterr().out
+    os.rmdir(log_dir)
+    started.clear()
     _one_line_rotations(log_dir, MAX_FILES + 1)
-    rc = cli.main(["rollup", log_dir, out, "--once", "--checkpoint", ckpt])
+    rc = cli.main(["--spool-dir", spool, "watch", log_dir, "--rollup", out, "--once",
+                   "--checkpoint", ckpt])
     assert rc == 0
-    assert "rollup cells: 1" in capsys.readouterr().out
+    stdout = capsys.readouterr().out
+    assert "rollup cells: 1" in stdout
+    assert f"batch 0: rows={MAX_FILES} " in stdout and "batch 1: rows=1 " in stdout
+    assert [p["numInputRows"] for p in started[0].recentProgress] == [2 * MAX_FILES, 2]
+    assert len(started) == 1 and os.listdir(os.path.join(ckpt, "sources")) == ["0"]
     commits = [n for n in os.listdir(os.path.join(ckpt, "commits")) if n.isdigit()]
     assert sorted(commits) == ["0", "1"]
     assert [tuple(r) for r in read_rollup(spark, out).collect()] == [
         (202401, 10, "t", MAX_FILES + 1, 0)
     ]
+    assert sorted(sum(_spooled_ids(spool), [])) == sorted(str(i) for i in range(MAX_FILES + 1))
+
+
+def test_watch_rollup_refuses_unfolded_batches(spark, tmp_path):
+    """A rollup attached to a checkpoint whose query committed batches
+    without it would never see them (Spark resumes after its last
+    commit), so `watch --rollup` exits naming both paths, before any
+    Spark job: once when added to an insert-only checkpoint, and once
+    when dropped for a run and then added back."""
+    import re
+
+    import pytest
+
+    from fdblog2clickhouse_spark.sinks.rollup import read_rollup
+    from fdblog2clickhouse_spark.streaming.ingest import unfolded_batches
+
+    def watch(k, *extra):
+        """One new one-event rotation, then `watch --once` over it."""
+        log_dir = ckpt + "_logs"
+        os.makedirs(log_dir, exist_ok=True)
+        with open(os.path.join(log_dir, f"trace.{k}.json"), "w") as f:
+            f.write(f'{{"Severity": "10", "Time": "1706659207.5", "Type": "t", "ID": "{k}"}}\n')
+        return cli.main(["--spool-dir", str(tmp_path / "spool"), "watch", log_dir, "--once",
+                         "--checkpoint", ckpt, *extra])
+
+    def refusal(first, last):
+        return re.escape(f"{ckpt} committed batches {first}..{last} that {out} has not folded")
+
+    ckpt, out = str(tmp_path / "ckpt_added"), str(tmp_path / "rollup_added")
+    assert watch(0) == 0
+    with pytest.raises(SystemExit, match=refusal(0, 0)):
+        watch(1, "--rollup", out)
+    assert not os.path.exists(out)
+
+    ckpt, out = str(tmp_path / "ckpt_dropped"), str(tmp_path / "rollup_dropped")
+    assert watch(2, "--rollup", out) == 0
+    assert watch(3, "--rollup", out) == 0  # resuming with the rollup is fine
+    assert watch(4) == 0
+    sc = spark.sparkContext
+    sc.setJobGroup("test-unfolded-batches", "rollup resume check")
+    try:
+        assert re.fullmatch(refusal(2, 2), unfolded_batches(ckpt, out))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    assert sc.statusTracker().getJobIdsForGroup("test-unfolded-batches") == []
+    with pytest.raises(SystemExit, match=refusal(2, 2)):
+        watch(5, "--rollup", out)
+    assert [tuple(r) for r in read_rollup(spark, out).collect()] == [(202401, 10, "t", 2, 0)]
 
 
 def test_stream_delete_logs_empties_the_log_dir(spark, tmp_path, capsys):
     """`--delete-logs` on `watch` (--once and a completion-file drain)
-    and on `rollup --once`: 20 rotations, two micro-batches, every
-    file deleted once its batch committed (the last batch's too) and
-    every event inserted or counted once."""
+    and on `watch --rollup --once`: 20 rotations, two micro-batches,
+    every file deleted once its batch committed (the last batch's too)
+    and every event inserted and counted once."""
     from fdblog2clickhouse_spark.sinks.rollup import read_rollup
 
     n = 20
@@ -276,12 +348,15 @@ def test_stream_delete_logs_empties_the_log_dir(spark, tmp_path, capsys):
         assert sorted(sum(_spooled_ids(spool), [])) == sorted(str(i) for i in range(n))
 
     log_dir, out = str(tmp_path / "logs_r"), str(tmp_path / "rollup")
+    spool, ckpt = str(tmp_path / "spool_r"), str(tmp_path / "ckpt_r")
     _one_line_rotations(log_dir, n)
-    rc = cli.main(["rollup", log_dir, out, "--once", "--delete-logs",
-                   "--checkpoint", str(tmp_path / "ckpt_r")])
+    rc = cli.main(["--spool-dir", spool, "watch", log_dir, "--rollup", out, "--once",
+                   "--delete-logs", "--checkpoint", ckpt])
     assert rc == 0
     assert os.listdir(log_dir) == []
+    assert sorted(sum(_spooled_ids(spool), [])) == sorted(str(i) for i in range(n))
     assert [tuple(r) for r in read_rollup(spark, out).collect()] == [(202401, 10, "t", n, 0)]
+    assert os.listdir(os.path.join(ckpt, "sources")) == ["0"]
 
 
 def test_ingest_inserts_in_file_groups(tmp_path, capsys):
@@ -304,17 +379,15 @@ def test_ingest_inserts_in_file_groups(tmp_path, capsys):
 
 def test_watch_and_rollup_refuse_glob_named_files(tmp_path):
     """A file name with a glob character makes the file stream read
-    the micro-batch's other files twice, so both stream commands fail
-    naming the file instead of inserting or folding."""
+    the micro-batch's other files twice, so `watch`, with and without
+    --rollup, fails naming the file instead of inserting or folding."""
     import pytest
     from pyspark.errors import StreamingQueryException
 
     log_dir = str(tmp_path / "logs")
     _one_line_rotations(log_dir, 4, ["d{1}.json"])
-    for argv in (
-        ["--spool-dir", str(tmp_path / "spool"), "watch", log_dir, "--once"],
-        ["rollup", log_dir, str(tmp_path / "rollup"), "--once"],
-    ):
+    watch = ["--spool-dir", str(tmp_path / "spool"), "watch", log_dir, "--once"]
+    for argv in (watch, watch + ["--rollup", str(tmp_path / "rollup")]):
         with pytest.raises(StreamingQueryException, match=r"d\{1\}\.json: a glob character"):
             cli.main(argv + ["--checkpoint", str(tmp_path / "ckpt")])
     assert not os.path.exists(tmp_path / "spool") and not os.path.exists(tmp_path / "rollup")
@@ -349,8 +422,8 @@ def test_query_command_runs_operator(capsys):
 
 
 def test_rollup_command_maintains_state(spark, sf_smoke, tmp_path):
-    """rollup --once: logs -> stream -> incremental rollup parquet,
-    cells equal the direct batch aggregate."""
+    """watch --rollup --once: logs -> stream -> incremental rollup
+    parquet, cells equal the direct batch aggregate."""
     from pyspark.sql import functions as F
 
     from fdblog2clickhouse_spark.sinks.rollup import read_rollup
@@ -362,7 +435,8 @@ def test_rollup_command_maintains_state(spark, sf_smoke, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     _export_trace_logs(spark, sf_smoke, log_dir)
 
-    rc = cli.main(["rollup", log_dir, out_path, "--once", "--checkpoint", ckpt])
+    rc = cli.main(["--spool-dir", str(tmp_path / "spool"), "watch", log_dir,
+                   "--rollup", out_path, "--once", "--checkpoint", ckpt])
     assert rc == 0
     got = {
         (r["yyyymm"], r["severity"], r["type"]): r["n_events"]
@@ -456,6 +530,38 @@ def test_watch_once_live_http_end_to_end(spark, sf_smoke, tmp_path, fake_ch, mon
         rows.extend(json.loads(x) for x in r["body"].splitlines() if x.strip())
     assert len(rows) == table(spark, sf_smoke, "events").count()
     assert set(rows[0]) <= {"severity", "machine", "log_group", "time", "type", "id"}
+
+
+def test_watch_fails_on_a_stalled_server(tmp_path, stalled_ch, monkeypatch):
+    """A POST that gets no reply fails the micro-batch after
+    POST_TIMEOUT_S, so `watch --rollup --once` exits with an error
+    instead of hanging the insert and the rollup."""
+    import threading
+
+    from pyspark.errors import StreamingQueryException
+
+    from fdblog2clickhouse_spark.sinks import clickhouse
+
+    monkeypatch.setattr(clickhouse, "POST_TIMEOUT_S", 1)
+    monkeypatch.setenv("CLICKHOUSE_ADDR", stalled_ch)
+    log_dir = str(tmp_path / "logs")
+    _one_line_rotations(log_dir, 2)
+    err: list[Exception] = []
+
+    def run():
+        try:
+            cli.main(["watch", log_dir, "--rollup", str(tmp_path / "rollup"), "--once",
+                      "--checkpoint", str(tmp_path / "ckpt")])
+        except Exception as e:
+            err.append(e)
+
+    t = threading.Thread(target=run)
+    t.start()
+    t.join(timeout=60)
+    assert not t.is_alive(), "watch hung on a server that never replies"
+    assert len(err) == 1 and isinstance(err[0], StreamingQueryException)
+    assert "Read timed out. (read timeout=1)" in str(err[0])
+    assert not os.path.exists(tmp_path / "ckpt" / "commits" / "0")
 
 
 def test_watch_keeps_ingesting_through_schema_evolution(

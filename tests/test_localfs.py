@@ -58,11 +58,10 @@ def test_gitignore_keeps_jar():
 _ONE_TRIGGER = r"""
 import json, os, sys
 sys.path.insert(0, os.getcwd())
-from pyspark.sql import functions as F
 from fdblog2clickhouse_spark.session import get_spark
 from fdblog2clickhouse_spark.sinks.clickhouse import ClickHouseHttpSink
 from fdblog2clickhouse_spark.sinks.rollup import foreach_batch_rollup, read_rollup
-from fdblog2clickhouse_spark.streaming.ingest import normalize_trace, read_trace_stream
+from fdblog2clickhouse_spark.streaming.ingest import insert_and_rollup, normalize_trace, read_trace_stream
 
 base = sys.argv[1]
 logs, spool, out = (os.path.join(base, d) for d in ("logs", "spool", "rollup"))
@@ -72,13 +71,8 @@ with open(os.path.join(logs, "trace.0.json"), "w") as f:
         f.write(json.dumps({"Severity": "10", "Machine": "m", "LogGroup": "default",
                             "Time": f"1706659207.{i:06d}", "Type": "T", "ID": str(i)}) + "\n")
 spark = get_spark("localfs-test")
-insert = ClickHouseHttpSink(spool_dir=spool, table="trace").foreach_batch()
-rollup = foreach_batch_rollup(out)
-
-def both(df, batch_id):
-    insert(df, batch_id)
-    rollup(df.select("time", "severity", "type", F.lit(0).cast("long").alias("value_c")), batch_id)
-
+both = insert_and_rollup(ClickHouseHttpSink(spool_dir=spool, table="trace").foreach_batch(),
+                         foreach_batch_rollup(out))
 q = (normalize_trace(read_trace_stream(spark, logs)).writeStream.foreachBatch(both)
      .option("checkpointLocation", os.path.join(base, "ckpt")).trigger(availableNow=True).start())
 q.awaitTermination()
@@ -91,8 +85,9 @@ print(json.dumps({"spooled": len(os.listdir(spool)), "events": sum(c["n_events"]
 def test_live_trigger_starts_no_chmod_or_readlink(tmp_path):
     """A `PATH` shim logs every `chmod`/`readlink` started while a
     session launches and runs one foreachBatch trigger of a file
-    stream into the rollup and a spooling ClickHouse sink. Stock
-    Hadoop starts dozens here."""
+    stream into `watch --rollup`'s hook: a spooling ClickHouse sink on
+    the overlap thread and the rollup. Stock Hadoop starts dozens
+    here."""
     shims, log = tmp_path / "shims", tmp_path / "spawned.log"
     shims.mkdir()
     for tool in ("chmod", "readlink"):
