@@ -239,12 +239,7 @@ def cmd_optimize(args) -> int:
     from .sinks.mergetree import optimize_mergetree
 
     spark = _spark()
-    stats = optimize_mergetree(
-        spark,
-        args.path,
-        time_col=args.time_col,
-        target_files_per_partition=args.target_files,
-    )
+    stats = optimize_mergetree(spark, args.path, time_col=args.time_col)
     print(stats)
     return 0
 
@@ -272,12 +267,12 @@ def cmd_build_store(args) -> int:
     per distinct content (group_id, gh, s0..s15, bk0..bk3 MinHash, or
     group_id, gh, bv0..bv5 sign bands), a membership side table at
     `<store>_members` with one (doc_id, gh, group_id) row per doc,
-    and the band-partitioned pruning index at `<store>_bands`.
-    Degenerate buckets never reach the admission band join and the
-    store grows O(distinct contents) (VERDICT r9/r10 item #1). The
-    gh/doc_id-bucketed layouts (VERDICT r14) let admit's flat-store
-    classification scan and members anti-join prune to the batch's
-    key buckets."""
+    and the band index at `<store>_bands`. Degenerate buckets never
+    reach the admission band join and the store grows O(distinct
+    contents) (VERDICT r9/r10 item #1). All three tables are
+    key-bucketed (dedup_store.py's layout block), so every admit
+    reads only the buckets its batch's keys hash into; bucket counts
+    size themselves from the row counts."""
     from .operators.dedup_store import (
         banded_path,
         bootstrap_rep_store,
@@ -299,7 +294,6 @@ def cmd_build_store(args) -> int:
         banded_path(args.store),
         members_path(args.store),
         family=args.family,
-        buckets=args.buckets,
     )
     n_groups = read_table(spark, args.store).count()
     n_docs = read_table(spark, members_path(args.store)).count()
@@ -344,6 +338,23 @@ def _pairs_note(spark, stats: dict, ev_part: str | None, n_pairs: int) -> str:
     return str(n_pairs)
 
 
+def _require_rep_store(store: str) -> None:
+    """Exit naming the table and build-store when a rep store's
+    tables are not all in the current layout — file checks only, so
+    no Spark session starts and nothing is written."""
+    from .operators.dedup_store import (
+        StoreLayoutError,
+        banded_path,
+        members_path,
+        require_rep_store,
+    )
+
+    try:
+        require_rep_store(store, banded_path(store), members_path(store))
+    except StoreLayoutError as e:
+        raise SystemExit(str(e)) from None
+
+
 def cmd_admit(args) -> int:
     """`admit` / `admit-vectors`: one admission batch against the
     REPRESENTATIVE store of the family bound by the subcommand:
@@ -386,6 +397,7 @@ def cmd_admit(args) -> int:
         rep_admission_step,
     )
 
+    _require_rep_store(args.store)
     family = args.family
     spark = _spark()
     g_batch = family.group_frame(_store_source(spark, args, args.batch)).cache()
@@ -439,104 +451,74 @@ def cmd_admit(args) -> int:
 
 def cmd_compact_store(args) -> int:
     """OPTIMIZE FINAL for an append-accumulating store: merge the
-    one-file-group-per-batch appends into sort-keyed files. Default
-    sort key is derived from the store schema (text stores sort by
-    bk0, vector stores by bv0 — ADVICE r12); pass
-    `--sort-col list_id` to compact an IVF inverted-lists table
-    (`compact_ivf_lists` semantics — same crash-safe swap). When the
-    store has a banded index sibling (`<store>_bands`, the rep-store
-    layout), its per-partition append files are compacted in the same
-    pass, and so is the `<store>_members` table (one file-group per
-    admit, read on every admit's doc anti-join and every evidence
-    expansion — the layout's largest table, ADVICE r11). Pass
-    `--buckets N` to also RE-BUCKET the banded index to a new
-    partition count (rebucket_banded_index — the migration path for
-    a store built at the small default). Key-bucketed flat-store and
-    members tables are re-bucketed UP automatically when their
-    rows/bucket crosses the soak-measured knee (VERDICT r15 #3 —
-    `maybe_rebucket_table`; disable with --no-auto-rebucket), and a
-    banded index whose bucket count falls below the store's new one
-    is re-bucketed to match in the same pass."""
+    one-file-group-per-batch appends into sort-keyed files, with a
+    sort key derived from the store's schema (text stores sort by
+    bk0, vector stores by bv0 — ADVICE r12; an IVF inverted-lists
+    table by list_id, through `compact_ivf_lists`). A rep store
+    (`<store>_members` / `<store>_bands` siblings) is maintained as a
+    whole, and refused naming the table and build-store before any
+    Spark job when a table is not in the current layout: retraction
+    sidecars are folded first, then each of the three tables is
+    re-bucketed UP when its rows/bucket crosses the soak-measured
+    knee (VERDICT r15 #3 — `maybe_rebucket_table`), then each is
+    compacted within its bucket partitions (the members table is read
+    on every admit's doc anti-join and every evidence expansion — the
+    layout's largest table, ADVICE r11)."""
+    import glob
     import os
 
     from .operators.dedup_store import (
+        _INDEX_KEY,
         banded_path,
-        compact_banded_index,
         compact_signature_store,
         fold_retractions,
         maybe_rebucket_table,
         members_path,
-        rebucket_banded_index,
+        read_table,
     )
     from .storage import heal_swap
 
+    members, bands = members_path(args.store), banded_path(args.store)
+    rep = os.path.isdir(members) or os.path.isdir(bands)
+    if rep:
+        _require_rep_store(args.store)
     spark = _spark()
-    # fold retraction sidecars FIRST, so the compaction below rewrites
-    # the folded tables and the tombstones/deltas are retired in the
-    # same maintenance pass (the retraction contract: a retracted id
-    # becomes re-admittable only here)
-    fold = fold_retractions(
-        spark, args.store, banded_path(args.store), members_path(args.store)
-    )
-    # the automatic re-bucket decision, AFTER the fold (so the row
-    # count reflects retired tombstones) and BEFORE compaction (a
-    # re-bucket leaves one file per partition, so the compactors
-    # no-op on a freshly re-bucketed table)
-    rebucket_notes = []
-    if not args.no_auto_rebucket:
-        rb_kw = {}
-        if args.rebucket_trigger is not None:
-            rb_kw["trigger_rows"] = args.rebucket_trigger
-            rb_kw["target_rows"] = max(1, args.rebucket_trigger // 4)
+    notes = []
+    if rep:
+        # fold retraction sidecars FIRST, so the compaction below
+        # rewrites the folded tables and the tombstones/deltas are
+        # retired in the same maintenance pass (the retraction
+        # contract: a retracted id becomes re-admittable only here)
+        fold = fold_retractions(spark, args.store, bands, members)
+        if fold["folded"]:
+            notes.append(
+                "retractions_folded=true"
+                f" fold_parts=sig:{fold['sig_parts']}"
+                f"/index:{fold['index_parts']}/mem:{fold['mem_parts']}"
+            )
+        # the automatic re-bucket decision, AFTER the fold (so the row
+        # count reflects retired tombstones) and BEFORE compaction (a
+        # re-bucket leaves one file per partition, so the compactor
+        # no-ops on a freshly re-bucketed table)
         for label, p in (
-            ("store", args.store),
-            ("members", members_path(args.store)),
+            ("store", args.store), ("members", members), ("bands", bands)
         ):
-            if not os.path.isdir(p):
-                continue
-            rb = maybe_rebucket_table(spark, p, **rb_kw)
+            rb = maybe_rebucket_table(spark, p)
             if rb["rebucketed"]:
-                rebucket_notes.append(
+                notes.append(
                     f"{label}_rebucketed={rb['buckets_before']}->"
                     f"{rb['buckets_after']} (rows={rb['rows']})"
                 )
-            if label == "store" and rb["rebucketed"]:
-                # the banded index rides the store's decision: its
-                # rows/partition is the same groups/buckets arithmetic
-                # (n_bands × groups over n_bands × buckets), and the
-                # r12 sweep measured over-bucketing penalty-free on
-                # the pruned read — so keep its granularity aligned,
-                # UP only (a manual --buckets below still wins)
-                from .operators.dedup_store import banded_layout
-
-                bands_p = banded_path(args.store)
-                b_lay = banded_layout(bands_p)
-                if b_lay is not None and b_lay["buckets"] < rb["buckets_after"]:
-                    re = rebucket_banded_index(
-                        spark, args.store, bands_p, rb["buckets_after"]
-                    )
-                    rebucket_notes.append(
-                        f"bands_rebucketed={re['buckets_before']}->"
-                        f"{re['buckets_after']} (aligned)"
-                    )
-    sort_col = args.sort_col
-    if sort_col is None:
-        # derive the flat-store sort key from the schema: a text
-        # signature store carries bk0, a build-vstore store carries
-        # bv0 (ADVICE r12 — the bk0 literal default raised
-        # AnalysisException on vector stores). Heal a crash-
-        # interrupted compaction swap BEFORE the schema read, or the
-        # re-run that is supposed to repair it raises PATH_NOT_FOUND
-        # here instead of reaching the compactor's own healer
-        # (self-review r13 finding #3).
-        heal_swap(args.store)
-        from .operators.dedup_store import read_table
-
-        # read_table, not a raw parquet read: a bucketed store hides
-        # its pb partition column, and an EMPTY bucketed store (no
-        # data files) is readable only through the marker schema
-        cols = set(read_table(spark, args.store).columns)
-        sort_col = "bk0" if "bk0" in cols else ("bv0" if "bv0" in cols else "list_id")
+    # Heal a crash-interrupted compaction swap BEFORE the schema read,
+    # or the re-run that is supposed to repair it raises
+    # PATH_NOT_FOUND here instead of reaching the compactor's own
+    # healer (self-review r13 finding #3). read_table, not a raw
+    # parquet read: a bucketed store hides its pb partition column,
+    # and an EMPTY bucketed store (no data files) is readable only
+    # through the marker schema.
+    heal_swap(args.store)
+    cols = set(read_table(spark, args.store).columns)
+    sort_col = "bk0" if "bk0" in cols else ("bv0" if "bv0" in cols else "list_id")
     if sort_col == "list_id":
         # an IVF inverted-lists table: compact_ivf_lists is the fold
         # point — ONE rewrite compacts the live view, folds a codes
@@ -548,7 +530,7 @@ def cmd_compact_store(args) -> int:
         # reported as min(before, target)).
         from .operators.ann_store import compact_ivf_lists
 
-        r = compact_ivf_lists(spark, args.store, n_files=args.target_files)
+        r = compact_ivf_lists(spark, args.store)
         msg = (
             f"compacted: files_before={r['files_before']} "
             f"files_after={r['files_after']}"
@@ -556,48 +538,18 @@ def cmd_compact_store(args) -> int:
         if r["folded"]:
             msg += " retractions_folded=true"
     else:
-        import glob
-
-        before = compact_signature_store(
-            spark, args.store, sort_col=sort_col, n_files=args.target_files
-        )
+        before = compact_signature_store(spark, args.store, sort_col=sort_col)
         # real post-pass count (bucketed stores keep files under
-        # pb=*/ partition dirs), not min(before, target)
+        # pb=*/ partition dirs)
         after = len(
             glob.glob(os.path.join(args.store, "*.parquet"))
         ) + len(glob.glob(os.path.join(args.store, "pb=*", "*.parquet")))
         msg = f"compacted: files_before={before} files_after={after}"
-        if fold["folded"]:
-            # -1 = legacy full rewrite, else partitions rewritten
-            msg += (
-                " retractions_folded=true"
-                f" fold_parts=sig:{fold['sig_parts']}"
-                f"/index:{fold['index_parts']}/mem:{fold['mem_parts']}"
-            )
-    members = members_path(args.store)
-    if os.path.isdir(members):
-        m_before = compact_signature_store(
-            spark, members, sort_col="group_id", n_files=args.target_files
-        )
-        msg += f" members_files_before={m_before}"
-    bands = banded_path(args.store)
-    if os.path.isdir(bands):
-        if args.buckets is not None:
-            re = rebucket_banded_index(spark, args.store, bands, args.buckets)
-            msg += (
-                f" bands_rebucketed={re['buckets_before']}"
-                f"->{re['buckets_after']}"
-            )
-        b_before = compact_banded_index(spark, bands)
-        msg += f" bands_files_before={b_before}"
-    elif args.buckets is not None:
-        # --buckets on a store with no banded index (an IVF lists
-        # table, or a flat store whose index was never built) would
-        # otherwise be ignored silently — say so
-        msg += " buckets_ignored=no_banded_index"
-    if rebucket_notes:
-        msg += " " + " ".join(rebucket_notes)
-    print(msg)
+    if rep:
+        m_before = compact_signature_store(spark, members, sort_col="group_id")
+        b_before = compact_signature_store(spark, bands, sort_col=_INDEX_KEY)
+        msg += f" members_files_before={m_before} bands_files_before={b_before}"
+    print(" ".join([msg, *notes]))
     return 0
 
 
@@ -634,6 +586,7 @@ def cmd_retract(args) -> int:
     takedown-wins rule)."""
     from .operators.dedup_store import members_path, retract_docs
 
+    _require_rep_store(args.store)
     spark = _spark()
     stats = retract_docs(
         spark,
@@ -683,47 +636,24 @@ def cmd_refresh_ivf(args) -> int:
     refresh keeps them RIGHT as the insert stream drifts away from
     the build-time codebook (recall decays silently otherwise —
     measured in SCALE.md; probe cadence via ann_recall_eval-style
-    recall checks). `--max-list N` adds the balance pass after the
-    refresh: over-budget lists are 2-means split (recycling empty
-    list ids first — the reseed), so a skew-drifted corpus cannot
-    grow one corpus-sized list that nprobe=1 searches then scan
-    whole (`split_ivf_lists`). WITHOUT --max-list the split decision
-    is AUTOMATIC (VERDICT r16 #3, `maybe_split_ivf_lists`): when the
-    live max list size crosses the soak-derived trigger (8192
-    rows/list — the last measured point of the r16 search slope
-    inside the 2× bar), lists are split down to the 2048-row target;
-    disable with --no-auto-split, override the trigger with
-    --split-trigger N (target = N/4) — combining --split-trigger
-    with either --max-list or --no-auto-split is an error, not a
-    silent drop (ADVICE r17). `--train-pq` retrains and
-    persists the residual PQ codebook beside the coarse one after
-    the refresh (`train_pq_codebook`) — the build-time artifact
-    IVF-PQ queries read instead of training in-query."""
+    recall checks). The balance pass after the refresh is automatic
+    (VERDICT r16 #3, `maybe_split_ivf_lists`): when the live max list
+    size crosses the soak-derived trigger (8192 rows/list — the last
+    measured point of the r16 search slope inside the 2× bar), lists
+    are 2-means split down to the 2048-row target (empty list ids
+    recycled first), so a skew-drifted corpus cannot grow one
+    corpus-sized list that nprobe=1 searches then scan whole.
+    `--train-pq` retrains and persists the residual PQ codebook
+    beside the coarse one after the refresh (`train_pq_codebook`) —
+    the build-time artifact IVF-PQ queries read instead of training
+    in-query."""
     from .operators.ann_store import (
         maybe_split_ivf_lists,
         refresh_ivf_centroids,
-        split_ivf_lists,
         train_pq_codebook,
     )
     from .operators.dedup import quantize
 
-    # --split-trigger tunes the AUTOMATIC split decision, which
-    # --max-list (manual split) and --no-auto-split each disable —
-    # silently dropping the flag would let a user believe their
-    # tuned trigger is live (ADVICE r17)
-    if args.split_trigger is not None:
-        if args.max_list is not None:
-            raise SystemExit(
-                "refresh-ivf: --split-trigger conflicts with --max-list "
-                "(--max-list runs the manual split pass, which ignores "
-                "the automatic trigger) — pass one or the other"
-            )
-        if args.no_auto_split:
-            raise SystemExit(
-                "refresh-ivf: --split-trigger conflicts with "
-                "--no-auto-split (the trigger tunes the automatic split "
-                "that flag disables) — drop one"
-            )
     spark = _spark()
     qn = quantize(spark.read.parquet(args.vectors))
     stats = refresh_ivf_centroids(spark, qn, args.codebook, args.lists)
@@ -731,26 +661,13 @@ def cmd_refresh_ivf(args) -> int:
         f"refreshed: lists={stats['n_lists']} moved={stats['moved']} "
         f"max_list={stats['max_list_before']}->{stats['max_list_after']}"
     )
-    if args.max_list is not None:
-        sp = split_ivf_lists(spark, qn, args.codebook, args.lists, args.max_list)
+    ms = maybe_split_ivf_lists(spark, qn, args.codebook, args.lists)
+    if ms["triggered"]:
         msg += (
-            f" split={sp['split']} reseeded={sp['reseeded']}"
-            f" max_list_after_split={sp['max_list_after']}"
+            f" auto_split={ms['split']} reseeded={ms['reseeded']}"
+            f" rounds={ms['rounds']}"
+            f" max_list_after_split={ms['max_list_after']}"
         )
-    elif not args.no_auto_split:
-        ms_kw = {}
-        if args.split_trigger is not None:
-            ms_kw["trigger_rows"] = args.split_trigger
-            ms_kw["target_rows"] = max(1, args.split_trigger // 4)
-        ms = maybe_split_ivf_lists(
-            spark, qn, args.codebook, args.lists, **ms_kw
-        )
-        if ms["triggered"]:
-            msg += (
-                f" auto_split={ms['split']} reseeded={ms['reseeded']}"
-                f" rounds={ms['rounds']}"
-                f" max_list_after_split={ms['max_list_after']}"
-            )
     if args.train_pq:
         # refresh/split retrain an EXISTING artifact themselves (the
         # freshness rule); the flag bootstraps it the first time
@@ -904,26 +821,24 @@ def cmd_search_ivfpq(args) -> int:
 
 
 def cmd_bucket_store(args) -> int:
-    """Migrate a rep store's flat signature table and members table
-    to the key-bucketed layout (or to a NEW bucket count) — the
-    scan-bound migration for stores built before the bucketed layout
-    (VERDICT r14: the admission step's last O(store) reads were the
-    flat-store gh scan and the members doc_id projection; bucketing
-    both bounds every per-step read by the batch's bucket
-    footprint). Crash-safe rename-aside swap per table; admission
-    evidence is invariant (the bucket is a pure pruning key)."""
-    import os
+    """Re-bucket all three tables of a rep store (flat signatures,
+    members, band index) to `--buckets N`, each through a crash-safe
+    rename-aside swap; admission evidence is invariant (the bucket is
+    a pure pruning key). compact-store re-buckets UP automatically as
+    a store grows; this is the manual override."""
+    from .operators.dedup_store import banded_path, bucket_table, members_path
 
-    from .operators.dedup_store import bucket_table, members_path
-
+    _require_rep_store(args.store)
     spark = _spark()
-    r = bucket_table(spark, args.store, "gh", args.buckets)
-    msg = f"store buckets: {r['buckets_before']}->{r['buckets_after']}"
-    mem = members_path(args.store)
-    if os.path.isdir(mem):
-        rm = bucket_table(spark, mem, "doc_id", args.buckets)
-        msg += f" members buckets: {rm['buckets_before']}->{rm['buckets_after']}"
-    print(msg)
+    parts = []
+    for label, p in (
+        ("store", args.store),
+        ("members", members_path(args.store)),
+        ("bands", banded_path(args.store)),
+    ):
+        r = bucket_table(spark, p, args.buckets)
+        parts.append(f"{label} buckets: {r['buckets_before']}->{r['buckets_after']}")
+    print(" ".join(parts))
     return 0
 
 
@@ -982,7 +897,6 @@ def main(argv: list[str] | None = None) -> int:
     so = sub.add_parser("optimize")
     so.add_argument("path")
     so.add_argument("--time-col", default="time")
-    so.add_argument("--target-files", type=int, default=1)
     so.set_defaults(fn=cmd_optimize)
 
     from .operators.dedup_store import TEXT, VECTOR
@@ -991,11 +905,6 @@ def main(argv: list[str] | None = None) -> int:
     sb.add_argument("source", metavar="docs",
                     help="JSON-lines doc corpus (doc_id, text)")
     sb.add_argument("store", help="signature-store parquet path")
-    sb.add_argument("--buckets", type=int, default=None,
-                    help="key-bucket count for the flat store (gh) and "
-                         "members (doc_id) layouts — admission reads "
-                         "prune to the batch's buckets (default 16; "
-                         "size to batch_keys << buckets at scale)")
     sb.set_defaults(fn=cmd_build_store, family=TEXT)
 
     sm = sub.add_parser("admit")
@@ -1015,9 +924,6 @@ def main(argv: list[str] | None = None) -> int:
     sbv.add_argument("source", metavar="vectors",
                      help="embeddings parquet (vec_id, embedding)")
     sbv.add_argument("store", help="hyperplane-store parquet path")
-    sbv.add_argument("--buckets", type=int, default=None,
-                     help="key-bucket count for the flat store (gh) and "
-                          "members (doc_id) layouts (default 16)")
     sbv.set_defaults(fn=cmd_build_store, family=VECTOR)
 
     smv = sub.add_parser("admit-vectors")
@@ -1036,24 +942,6 @@ def main(argv: list[str] | None = None) -> int:
 
     sk = sub.add_parser("compact-store")
     sk.add_argument("store")
-    sk.add_argument("--target-files", type=int, default=1)
-    sk.add_argument("--sort-col", default=None,
-                    help="sort key for the flat-store pass (default: "
-                         "derived from the store schema — bk0 for a text "
-                         "signature store, bv0 for a vector store; pass "
-                         "list_id for IVF lists)")
-    sk.add_argument("--buckets", type=int, default=None,
-                    help="re-bucket the banded index to this partition "
-                         "count (migration: a store built at 16 buckets "
-                         "gains pruning granularity without a rebuild)")
-    sk.add_argument("--no-auto-rebucket", action="store_true",
-                    help="skip the automatic rows/bucket check that "
-                         "re-buckets the flat store and members tables "
-                         "up when they cross the measured knee")
-    sk.add_argument("--rebucket-trigger", type=int, default=None,
-                    help="rows/bucket that triggers the automatic "
-                         "re-bucket (default: the soak-derived knee, "
-                         "4096)")
     sk.set_defaults(fn=cmd_compact_store)
 
     sr = sub.add_parser("retract")
@@ -1080,18 +968,6 @@ def main(argv: list[str] | None = None) -> int:
     sv.add_argument("--vectors", required=True,
                     help="embeddings parquet (vec_id, embedding) covering "
                          "every indexed vector")
-    sv.add_argument("--max-list", type=int, default=None,
-                    help="after the refresh, split lists larger than this "
-                         "(2-means, empty ids recycled first); overrides "
-                         "the automatic split decision")
-    sv.add_argument("--no-auto-split", action="store_true",
-                    help="skip the automatic max-list check that splits "
-                         "over-budget lists when they cross the measured "
-                         "search-slope trigger")
-    sv.add_argument("--split-trigger", type=int, default=None,
-                    help="rows/list that triggers the automatic split "
-                         "(default: the soak-derived 8192; target = "
-                         "trigger/4)")
     sv.add_argument("--train-pq", action="store_true",
                     help="retrain + persist the residual PQ codebook "
                          "beside the coarse codebook (<codebook>_pq)")
@@ -1138,8 +1014,8 @@ def main(argv: list[str] | None = None) -> int:
     sbk = sub.add_parser("bucket-store")
     sbk.add_argument("store", help="rep-store signatures parquet path")
     sbk.add_argument("--buckets", type=int, required=True,
-                     help="new key-bucket count for the flat store and "
-                          "members layouts")
+                     help="new key-bucket count for the flat store, "
+                          "members and band index layouts")
     sbk.set_defaults(fn=cmd_bucket_store)
 
     sl = sub.add_parser("list-queries")

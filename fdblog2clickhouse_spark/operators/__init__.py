@@ -32,6 +32,11 @@ CHANGED_OPS = [
     "streaming_ivf_insert",
     "ann_ivf_refresh_recall", "ann_ivfpq_refresh_recall",
     "ann_ivfpq_rerank_topk",
+    # streaming/queries.py's foreachBatch drains and the oracle it
+    # now shares with the batch trace source
+    "streaming_store_admission", "streaming_rollup_ingest",
+    "streaming_upsert_ingest", "streaming_hll_rollup",
+    "streaming_trace_ingest",
 ]
 
 _FRONT_WINDOW = CHANGED_OPS + [
@@ -44,8 +49,7 @@ _FRONT_WINDOW = CHANGED_OPS + [
     "minute_anomaly_zscore", "value_quantile_hist",
     # sequence.py
     "funnel_conversion", "user_path_transitions", "events_pivot_usertype",
-    "events_sliding_windows", "max_concurrent_events", "user_value_deltas",
-    "events_moving_avg", "funnel_windowed",
+    "events_sliding_windows",
     # tpch.py
     "tpch_q1", "tpch_q2", "tpch_q3", "tpch_q4",
     # multimodal.py
@@ -59,7 +63,7 @@ _FRONT_WINDOW = CHANGED_OPS + [
     # lm.py
     "doc_bigram_fluency",
     # streaming/queries.py
-    "streaming_incremental_dedup", "streaming_store_admission",
+    "streaming_incremental_dedup",
 ]
 
 

@@ -1775,19 +1775,18 @@ def maybe_split_ivf_lists(
     codebook_path: str,
     lists_path: str,
     *,
-    trigger_rows: int = _SPLIT_TRIGGER_ROWS,
-    target_rows: int = _SPLIT_TARGET_ROWS,
     max_rounds: int = 4,
 ) -> dict:
     """The automated split decision (VERDICT r16 #3: the r16 soak
     measured the search slope `split_ivf_lists` exists to flatten,
     and the re-bucket analog was automated in r16, but splits still
-    only ran via a hand-chosen `refresh-ivf --max-list` — at 100 TB
+    only ran with a hand-chosen list bound — at 100 TB
     someone had to notice rows/list growing). Called from the
     refresh-ivf maintenance pass: gate on the LIVE max list size
     (probes read whole lists, so the hot list — not the average —
-    is what a query pays); when it crosses `trigger_rows`, run
-    `split_ivf_lists` with max_list = `target_rows`, repeating while
+    is what a query pays); when it crosses _SPLIT_TRIGGER_ROWS, run
+    `split_ivf_lists` with max_list = _SPLIT_TARGET_ROWS (both read
+    at call time), repeating while
     it makes progress (a 2-means child can itself exceed the budget;
     each round strictly shrinks an over-budget list or proves it
     degenerate — identical vectors — in which case splitting cannot
@@ -1805,6 +1804,8 @@ def maybe_split_ivf_lists(
     indexed vector when the decision fires (split_ivf_lists' own
     precondition). Returns {"triggered", "rounds", "split",
     "reseeded", "max_list_before", "max_list_after"}."""
+    trigger_rows, target_rows = _SPLIT_TRIGGER_ROWS, _SPLIT_TARGET_ROWS
+
     def _max_list() -> int:
         m = (
             live_ivf_lists(spark, lists_path)

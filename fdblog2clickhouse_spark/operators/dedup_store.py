@@ -194,7 +194,7 @@ def candidates_from_rows(
 ) -> DataFrame:
     """The admission band join over PREBUILT band rows (id, ks, band,
     band_key) — split from `admission_candidates` so the store side
-    can come from the band-partitioned index's PRUNED read
+    can come from the band index's PRUNED read
     (`pruned_store_rows`) instead of exploding a full store scan.
     Band candidates with at least one NEW side, canonical (da < db),
     pair-distinct via the first-shared-band gate; store×store pairs
@@ -323,20 +323,27 @@ WHERE i / (ca.n + cb.n - i) >= {_JACCARD_THRESHOLD}
 
 
 def compact_signature_store(
-    spark: SparkSession, path: str, *, sort_col: str = "bk0", n_files: int = 1
+    spark: SparkSession, path: str, *, sort_col: str = "bk0"
 ) -> int:
-    """OPTIMIZE FINAL for the (flat-layout) signature store: every
+    """OPTIMIZE FINAL for an append-accumulating table: every
     admission batch appends one file group, so a long-running
     admission loop accumulates one tiny parquet file per batch —
     scan-open overhead and listing pressure on every subsequent
-    store read, the same unmerged-parts failure mode
-    `optimize_mergetree` handles for the time-partitioned table.
-    Rewrites the store into `n_files` files sorted by a band key
-    (band-key locality tightens row-group min/max stats for the
-    admission band join's store scan), through the whole-table swap
-    of `storage`, so a crash leaves the old or the new store, never
-    a mix. Returns the file count before compaction. Content-invariance
-    (admission results identical before/after) is CI-pinned."""
+    read, the same unmerged-parts failure mode `optimize_mergetree`
+    handles for the time-partitioned table. A rep-store table (any of
+    the three, marker present) is compacted to one file per bucket
+    partition, once some partition holds more, keeping the hive dirs
+    and the marker, so pruned reads survive the rewrite unchanged,
+    and retiring crash-leaked duplicate rows (the band index read
+    tolerates them with dropDuplicates; compaction removes them for
+    good). A flat signature store (no marker: the non-rep lifecycle
+    ops' store) is rewritten into one file. Either
+    way rows are sorted by `sort_col` (band-key locality tightens
+    row-group min/max stats) and published through the whole-table
+    swap of `storage`, so a crash leaves the old or the new table,
+    never a mix. Returns the file count before compaction.
+    Content-invariance (admission results identical before/after) is
+    CI-pinned."""
     import glob
     import os
     import shutil
@@ -347,39 +354,37 @@ def compact_signature_store(
     staging = stage(path)
     heal_table_fold(path)
 
-    lay = table_layout(path)
-    if lay is not None:
-        # bucketed layout: compact WITHIN each pb partition (the
-        # banded-index compactor's shape — `n_files` is the
-        # per-partition trigger), keep the hive dirs and the marker
-        # so pruned reads survive the rewrite unchanged.
+    meta = os.path.join(path, _TBL_META)
+    if os.path.exists(meta):
+        table_layout(path)  # refuse a marker no code writes any more
         part_dirs = glob.glob(os.path.join(path, f"{_TBL_PB}=*"))
         counts = [
             len(glob.glob(os.path.join(d, "*.parquet"))) for d in part_dirs
         ]
         n_before = sum(counts)
-        if not counts or max(counts) <= n_files:
+        if not counts or max(counts) <= 1:
             return n_before
         (
             spark.read.parquet(path)
+            .dropDuplicates()
             .repartition(_TBL_PB)
             .sortWithinPartitions(sort_col)
             .write.partitionBy(_TBL_PB)
             .mode("overwrite")
             .parquet(staging)
         )
-        shutil.copy2(
-            os.path.join(path, _TBL_META), os.path.join(staging, _TBL_META)
-        )
+        shutil.copy2(meta, os.path.join(staging, _TBL_META))
+        # exact again after the dedup: footer metadata, no Spark job
+        _set_marker_rows(staging, _footer_rows(staging))
         publish(path)
         return n_before
 
     files = glob.glob(os.path.join(path, "*.parquet"))
-    if len(files) <= n_files:
+    if len(files) <= 1:
         return len(files)
     (
         spark.read.parquet(path)
-        .repartition(n_files)
+        .repartition(1)
         .sortWithinPartitions(sort_col)
         .write.mode("overwrite")
         .parquet(staging)
@@ -706,412 +711,63 @@ def rep_store_frames(
     return family.signatures(reps), members
 
 
-# ---------------------- band-partitioned store index (scan pruning)
+# ------------------------------------ key-bucketed rep-store layout
 #
-# VERDICT r9 #3 / r10 #4: every admit used to read the ENTIRE
-# signature store for the band join's store side — compaction sorted
-# by bk0 but the join matches on all four band keys, so row-group
-# stats never pruned bands 1-3. The fix is a band-row INDEX of the
-# store, hive-partitioned by (band, kb = pmod(band_key, buckets)):
-# a store row can only match a batch row on an exact (band,
-# band_key), which pins its kb — so reading the partitions named by
-# the batch's own (band, kb) set is a provable superset of every
-# possible match, and everything else is never opened. The batch's
-# (band, kb) set is ≤ 4 × _BANDED_BUCKETS entries (collected to the
-# driver as a partition-filter literal — bounded by the layout, not
-# the data). The flat signature store remains the source of truth
-# (gh classification, touched-group sig retrieval — 2-of-22-column
-# projections); the index carries the ks array in-row so the
+# Every per-batch read of the rep store is bounded by the batch's own
+# footprint, never by the store. The three tables are hive-partitioned
+# on a bucket of their JOIN KEY: the flat signature store on gh, the
+# members table on doc_id, and the band index (`<store>_bands`, one
+# row per (group, band)) on `band_hash`, one hash of (band,
+# band_key). A batch key can only match a stored row inside its own
+# bucket, so reading the partitions the batch's keys hash into is a
+# provable superset of every possible semi-, anti- or band-join match,
+# and everything else is never opened (VERDICT r9 #3 / r10 #4 for the
+# index, r14 for the other two: each was a full scan per admit). The
+# index key covers BOTH columns because a candidate needs both to
+# match: bucketing band_key alone would mix bands, and the vector
+# family's 8-bit sign bands have only 256 values per band. The flat
+# store stays the source of truth (gh classification, touched-group
+# retrieval); the index carries the ks array in-row so the
 # first-shared-band gate needs no join back.
-
-_BANDED_BUCKETS = 16  # fallback when a build's row count is unknown
-# (fresh builds auto-size from the flat signature count — see
-# _auto_buckets below; growth re-buckets UP via compact-store)
-_BANDED_META = "_index_meta.json"  # leading '_': parquet listing skips it
-
-
-def banded_path(store: str) -> str:
-    return store.rstrip("/") + "_bands"
-
-
-def banded_layout(path: str) -> dict | None:
-    """The layout a persisted index was BUILT with: bucket count AND
-    band-key columns. The kb partition values are a function of both,
-    so readers and appenders must bucket batch keys with the index's
-    own layout — using in-process defaults against an index built at
-    a different setting would silently select partitions where the
-    matching rows don't live (review finding, round 11). Markers
-    written before the vector store existed lack key_cols and default
-    to the MinHash bk0..bk3. None = no marker (index not yet
-    written)."""
-    import json
-    import os
-
-    meta = os.path.join(path, _BANDED_META)
-    if not os.path.exists(meta):
-        return None
-    with open(meta) as f:
-        lay = json.load(f)
-    return {
-        "buckets": int(lay["buckets"]),
-        "key_cols": list(
-            lay.get("key_cols", [f"bk{b}" for b in range(_N_BANDS)])
-        ),
-    }
-
-
-def banded_buckets(path: str) -> int | None:
-    lay = banded_layout(path)
-    return lay["buckets"] if lay else None
-
-
-def _kb_expr(key_type, buckets: int):
-    """Bucket expression for a band-key value. MinHash keys are md5
-    hex strings — bucket on the first 8 hex chars (uniform, and
-    deterministic across engines); hyperplane keys are sign-band
-    ints — pmod directly."""
-    from pyspark.sql.types import StringType
-
-    if isinstance(key_type, StringType):
-        return F.expr(
-            "CAST(pmod(CAST(conv(substring(band_key, 1, 8), 16, 10) "
-            f"AS BIGINT), {buckets}) AS INT)"
-        )
-    return F.expr(f"CAST(pmod(CAST(band_key AS BIGINT), {buckets}) AS INT)")
-
-
-def banded_rows_frame(
-    sigs: DataFrame,
-    buckets: int | None = None,
-    key_cols: list[str] | None = None,
-) -> DataFrame:
-    """Flat rep-store signature rows → the index rows (group_id, ks,
-    band, band_key, kb). One posexplode, no shuffle; the partitioned
-    write's hive layout does the bucketing. Works over either store
-    family: MinHash bk0..bk3 (string keys, the default) or the
-    hyperplane store's bv0..bv5 (int sign bands)."""
-    b = buckets or _BANDED_BUCKETS
-    rows = store_band_rows(sigs, key_cols, id_col="group_id").select(
-        F.col("id").alias("group_id"), "ks", "band", "band_key"
-    )
-    kb = _kb_expr(rows.schema["band_key"].dataType, b)
-    return rows.select("group_id", "ks", "band", "band_key", kb.alias("kb"))
-
-
-def write_banded_index(
-    sigs: DataFrame,
-    path: str,
-    mode: str,
-    key_cols: list[str] | None = None,
-    buckets: int | None = None,
-    sized_from: str | None = None,
-) -> None:
-    """One file per (band, kb) partition per write: without the
-    repartition, EVERY shuffle partition of the source writes into
-    every hive partition (up to 32 files × 4 × _BANDED_BUCKETS dirs
-    per append) and the reader's listing/open cost swamps the
-    pruning it came for — measured 4-5 s of fixed overhead at sf0.1
-    before this clustering. The bucket count is PERSISTED in a
-    marker file at build time and every append honors the persisted
-    layout, so raising _BANDED_BUCKETS for new stores never
-    corrupts an existing index. The index dir always exists after
-    this call (a hive write of an empty frame creates nothing on
-    its own) — readers rely on that to tell 'legitimately empty'
-    from 'index lost'."""
-    import os
-
-    if mode == "append" and os.path.exists(path):
-        lay = banded_layout(path)
-        if lay is None:
-            # an index dir without a marker is a crashed overwrite
-            # build — appending with a GUESSED layout would mix kb
-            # conventions; force the rebuild instead
-            raise RuntimeError(
-                f"banded index at {path} has no layout marker "
-                "(interrupted build?): rebuild it with mode='overwrite'"
-            )
-        buckets, key_cols = lay["buckets"], lay["key_cols"]
-        persisted = None
-    else:
-        key_cols = list(key_cols or [f"bk{b}" for b in range(_N_BANDS)])
-        persisted = None
-        if buckets is None:
-            # data-derived initial bucket count (r18, see
-            # _auto_buckets): rows/partition-dir is groups/buckets
-            # (n_bands × groups rows over n_bands × buckets dirs), so
-            # the sizing input is the flat signature count. One
-            # persist + count; build sites feed this a just-written
-            # store's read_table, so the count is a single columnar
-            # scan. Growth keeps the rebucket story: compact-store
-            # aligns the index UP with the flat store's decision.
-            # `sized_from` (a flat-store path whose marker caches its
-            # exact row count) skips even that job — the bootstrap
-            # call sites build the index from the store they just
-            # wrote, whose count the write recorded for free.
-            rows = _marker_rows(sized_from) if sized_from else None
-            if rows is not None:
-                buckets = _auto_buckets(rows)
-            elif sigs.storageLevel.useMemory or sigs.storageLevel.useDisk:
-                buckets = _auto_buckets(sigs.count())
-            else:
-                persisted = sigs.persist()
-                buckets = _auto_buckets(persisted.count())
-    banded_rows_frame(sigs, buckets, key_cols).repartition(
-        "band", "kb"
-    ).write.partitionBy("band", "kb").mode(mode).parquet(path)
-    if persisted is not None:
-        persisted.unpersist()
-    os.makedirs(path, exist_ok=True)
-    write_json(
-        os.path.join(path, _BANDED_META),
-        {"buckets": buckets, "key_cols": key_cols},
-    )
-
-
-def pruned_store_rows(
-    spark: SparkSession, path: str, batch_sigs: DataFrame
-) -> DataFrame:
-    """Read ONLY the index partitions the batch's band keys can
-    match: collect the batch's distinct (band, kb) pairs (≤ n_bands ×
-    buckets literals by construction) and push them down as ONE
-    partition filter — a single isin over the synthesized
-    band*buckets+kb partition key, so the expression stays O(1) tree
-    depth at any bucket count (the OR-chain spelling it replaced
-    would build a ~16k-term boolean tree at 4096 buckets, VERDICT
-    r11). dropDuplicates makes a crash-retried banded append harmless
-    (duplicate index rows would duplicate candidate pairs; full-row
-    dedup over the PRUNED subset is bounded by the batch's bucket
-    footprint, never the store)."""
-    import os
-
-    from pyspark.errors import AnalysisException
-
-    # complete a crashed compaction swap first, then a crashed
-    # granular fold's per-partition swaps
-    heal_swap(path)
-    heal_table_fold(path)
-    if not os.path.exists(path):
-        # a write_banded_index'd index dir ALWAYS exists, even empty
-        # (marker file). Missing dir = the index was lost — scoring
-        # against an implicitly-empty store side would silently drop
-        # every store×batch pair (review finding, round 11).
-        raise FileNotFoundError(
-            f"banded index missing at {path}: rebuild it from the flat "
-            f"store with write_banded_index (or restore {path}.old) before "
-            "admitting"
-        )
-
-    # bucket batch keys with the INDEX's persisted layout, never the
-    # in-process defaults (see banded_layout). A present dir with
-    # no marker is a crashed build — defaulting would silently prune
-    # with the wrong layout, so fail loudly like the missing-dir
-    # case (review finding, round 11).
-    lay = banded_layout(path)
-    if lay is None:
-        raise RuntimeError(
-            f"banded index at {path} has no layout marker (interrupted "
-            "build?): rebuild it from the flat store with "
-            "write_banded_index(mode='overwrite') before admitting"
-        )
-    buckets = lay["buckets"]
-    batch_rows = banded_rows_frame(batch_sigs, buckets, lay["key_cols"])
-
-    def _empty() -> DataFrame:
-        return batch_rows.select(
-            F.col("group_id").alias("id"), "ks", "band", "band_key"
-        ).limit(0)
-
-    # bounded by the LAYOUT (≤ n_bands × buckets rows), never by the
-    # data — the one collect this path needs
-    pairs = [
-        (r["band"], r["kb"])
-        for r in batch_rows.select("band", "kb").distinct().collect()
-    ]
-    if not pairs:
-        return _empty()
-    # List ONLY the selected partition dirs, never the whole table:
-    # full-table partition discovery is O(n_bands × buckets) listing
-    # calls even when the filter then prunes to a handful — measured
-    # as the dominant cost at high bucket counts (the r12 sweep's
-    # 8.8 s at 1024 buckets was discovery, not data). The explicit
-    # dir list is O(batch footprint); basePath recovers the partition
-    # columns; dirs the batch names but the store never wrote are
-    # skipped by the same existence check that builds the list.
-    dirs = [
-        d
-        for b, k in pairs
-        if os.path.isdir(d := os.path.join(path, f"band={b}", f"kb={k}"))
-    ]
-    if not dirs:
-        return _empty()
-    try:
-        src = spark.read.option("basePath", path).parquet(*dirs)
-    except AnalysisException:
-        # dirs exist but hold no parquet (hive write of an EMPTY
-        # frame leaves only the marker) — a legitimately empty store
-        return _empty()
-    # belt over suspenders: the isin partition filter is a no-op on
-    # the explicit dir list but keeps the plan self-describing (and
-    # plan-asserted) about WHICH partitions this read may touch
-    filt = (
-        F.col("band").cast("long") * F.lit(buckets) + F.col("kb")
-    ).isin([b * buckets + k for b, k in pairs])
-    return (
-        src.where(filt)
-        .select(F.col("group_id").alias("id"), "ks", "band", "band_key")
-        .dropDuplicates()
-    )
-
-
-def compact_banded_index(
-    spark: SparkSession, path: str, *, n_files: int = 1
-) -> int:
-    """OPTIMIZE FINAL for the banded index: every admit appends up to
-    one file per touched (band, kb) partition, so a long admission
-    loop accumulates files inside each partition dir — the same
-    unmerged-parts failure mode the flat store and the IVF lists
-    have, at partition granularity. Rewrites each partition to ONE
-    file (`n_files` is the trigger threshold: compact only when
-    some partition exceeds it), DEDUPLICATING rows while at it
-    (crash-leaked duplicate index rows are tolerated by the
-    reader's dropDuplicates; compaction retires them permanently).
-    Same
-    crash-safe whole-table swap as `compact_signature_store`.
-    Returns the file count before compaction;
-    no-ops (and returns it) when every partition is already within
-    budget. Search invariance (pruned reads identical before/after)
-    is CI-pinned."""
-    import glob
-    import os
-    import shutil
-
-    staging = stage(path)
-    heal_table_fold(path)
-
-    part_dirs = glob.glob(os.path.join(path, "band=*", "kb=*"))
-    counts = [
-        len(glob.glob(os.path.join(d, "*.parquet"))) for d in part_dirs
-    ]
-    n_before = sum(counts)
-    if not counts or max(counts) <= n_files:
-        return n_before
-    # the layout marker rides inside the dir — readers refuse to run
-    # without it, so a marker-less index here means a crashed build:
-    # surface it rather than launder it through a compaction. Checked
-    # BEFORE the staging write so the failure costs a stat call, not
-    # a full Spark rewrite job that leaves a staging dir behind
-    # (ADVICE r11).
-    meta = os.path.join(path, _BANDED_META)
-    if not os.path.exists(meta):
-        raise RuntimeError(
-            f"banded index at {path} has no layout marker (interrupted "
-            "build?): rebuild it before compacting"
-        )
-    (
-        spark.read.parquet(path)
-        .dropDuplicates()
-        .repartition("band", "kb")
-        .write.partitionBy("band", "kb")
-        .mode("overwrite")
-        .parquet(staging)
-    )
-    shutil.copy2(meta, os.path.join(staging, _BANDED_META))
-    publish(path)
-    return n_before
-
-
-def rebucket_banded_index(
-    spark: SparkSession, store_path: str, path: str, buckets: int
-) -> dict:
-    """Migrate a banded index to a NEW bucket count (VERDICT r11 #3:
-    the kb partition layout is persisted at build time and honored by
-    every append forever, so a store built small — 16 buckets — could
-    never gain pruning granularity; once a batch's footprint covers
-    all n_bands × buckets partitions, the pruned read degenerates to
-    a full scan). Rebuilds `<store>_bands` FROM THE FLAT STORE (the
-    source of truth — crash-leaked duplicate index rows are retired
-    for free) at the new count, carrying the persisted key_cols
-    through, and swaps it in with the same rename-aside discipline as
-    the compactors: at every instant either `path` or `path + '.old'`
-    holds a complete, marker-consistent index — the marker is written
-    into the STAGING dir by write_banded_index before the swap, so no
-    observable state ever pairs old-layout data with the new-layout
-    marker (the atomicity VERDICT r11 asked for). Admission evidence
-    is invariant across a re-bucket (CI-pinned at 16 → 256): kb is a
-    pure pruning key — candidate generation matches on (band,
-    band_key), which any bucketing preserves. Returns
-    {buckets_before, buckets_after}."""
-    staging = stage(path)
-    heal_table_fold(path)
-    lay = banded_layout(path)
-    if lay is None:
-        raise RuntimeError(
-            f"banded index at {path} has no layout marker (interrupted "
-            "build?): rebuild it from the flat store with "
-            "write_banded_index(mode='overwrite') instead of re-bucketing"
-        )
-    if lay["buckets"] == buckets:
-        return {"buckets_before": lay["buckets"], "buckets_after": buckets}
-    write_banded_index(
-        read_table(spark, store_path),
-        staging,
-        "overwrite",
-        key_cols=lay["key_cols"],
-        buckets=buckets,
-    )
-    publish(path)
-    return {"buckets_before": lay["buckets"], "buckets_after": buckets}
-
-
-# --------------- key-bucketed table layout (flat store + members)
 #
-# VERDICT r14 "What's wrong" #1: after the banded index bounded the
-# band join's store side, the admission step's LAST O(store) terms
-# were the flat-store scan (gh classification + touched-group row
-# retrieval) and the members doc_id projection — both full columnar
-# reads per step, linear in store size inside a loop that is
-# otherwise bounded by batch footprint (measured 3.1× over a 256×
-# store in the r14 soak). Same cure as the banded index: both tables
-# are hive-partitioned on a bucket of their JOIN KEY (gh for the
-# signature store, doc_id for members), and every per-batch read
-# prunes to the partitions the batch's own keys hash into — a batch
-# key can only match a store row inside its own bucket, so the
-# pruned read is a provable superset of every possible semi-/anti-
-# join match. The layout (bucket count + key column) is persisted in
-# a marker at build time; appends, compaction, and retraction folds
-# honor it forever (the banded index's own discipline,
-# `banded_layout`). A dir WITHOUT a marker is the legacy flat
-# layout: every reader falls back to the full scan and every append
-# stays flat, so pre-existing stores work unchanged until
-# `bucket_table` migrates them. Bucket count sizing is the
-# rebucket_banded_index story again: the prune reads
-# ≤ min(batch_keys, buckets) of `buckets` partitions, so production
-# stores (small streaming batches against a huge store) raise
-# buckets — 256+ — while the sf-test default stays listing-cheap.
+# The layout (bucket count, key column, schema) is persisted in a
+# marker at build time, and appends, pruned reads, compaction,
+# re-bucketing and retraction folds honor it forever: a different
+# bucket count would select partitions where the matching rows don't
+# live. A table without the current marker (none at all, or one from a
+# bucket expression no code writes any more) is refused with an error
+# naming the table and `build-store`, never read with a guessed
+# layout. Bucket counts size themselves from the row count
+# (`_auto_buckets`) and re-bucket UP as a table grows
+# (`maybe_rebucket_table`, run by compact-store).
 
 _TBL_META = "_table_meta.json"  # leading '_': parquet listing skips it
 _TBL_PB = "pb"
+_INDEX_KEY = "band_hash"
 
 # Build-time bucket sizing (r18 optimization): a fresh build knows its
 # own row count, so the initial bucket count is derived from it instead
 # of a constant — the same rows/bucket arithmetic `maybe_rebucket_table`
 # maintains as the store grows (target 1024 / trigger 4096; builds aim
 # at the midpoint so a store neither rebuckets on its first maintenance
-# pass nor starts at the knee). The r18 profile measured the constant-16
+# pass nor starts at the knee). The r18 profile measured a constant-16
 # default as the dominant lifecycle cost at small stores: every
 # partitioned write pays per-file open/commit overhead per touched dir
-# (the banded index's 4×16 = 64 dirs made one tiny append a 3.2 s
-# write), while the prune bound only needs rows/bucket, not dir count.
-# Production story unchanged: growth re-buckets UP automatically
-# (compact-store), and a huge bootstrap sizes itself up to the same
-# _REBUCKET_MAX listing ceiling.
+# (64 index dirs made one tiny append a 3.2 s write), while the prune
+# bound only needs rows/bucket, not dir count. Growth re-buckets UP
+# automatically (compact-store), and a huge bootstrap sizes itself up
+# to the same _REBUCKET_MAX listing ceiling.
 _BUILD_ROWS_PER_BUCKET = 2048
+
+
+def banded_path(store: str) -> str:
+    return store.rstrip("/") + "_bands"
 
 
 def _auto_buckets(rows: int) -> int:
     """Smallest power-of-two bucket count keeping rows/bucket at or
-    under _BUILD_ROWS_PER_BUCKET, floored at 2 (so kb stays a real
-    pruning key) and capped at _REBUCKET_MAX (one listing dir per
+    under _BUILD_ROWS_PER_BUCKET, floored at 2 (so the bucket stays a
+    real pruning key) and capped at _REBUCKET_MAX (one listing dir per
     bucket)."""
     b = 2
     while rows > b * _BUILD_ROWS_PER_BUCKET and b < _REBUCKET_MAX:
@@ -1119,57 +775,65 @@ def _auto_buckets(rows: int) -> int:
     return b
 
 # Partition-granular fold (VERDICT r15 #2): the retraction fold used
-# to rewrite the bucketed tables whole (`_swap_write_table`), paying
-# per-partition write overhead exactly when the production recipe
-# says to RAISE the bucket count (the r15 soak: fold 7.6 s at 256
-# buckets vs 18.0 s at 1024 on the same store). The granular path
-# rewrites ONLY the partitions that hold tombstoned/relabeled rows
-# through `storage.publish_partitions` and leaves every other
-# partition dir byte-invariant. Rolling a crashed fold back is safe
-# at ANY point: the sidecars are retired only after the whole fold
-# succeeds, so pre-fold bucket + sidecars is exactly the live view.
+# to rewrite the bucketed tables whole, paying per-partition write
+# overhead exactly when the production recipe says to RAISE the
+# bucket count (the r15 soak: fold 7.6 s at 256 buckets vs 18.0 s at
+# 1024 on the same store). The granular path rewrites ONLY the
+# partitions that hold tombstoned/relabeled rows through
+# `storage.publish_partitions` and leaves every other partition dir
+# byte-invariant. Rolling a crashed fold back is safe at ANY point:
+# the sidecars are retired only after the whole fold succeeds, so
+# pre-fold bucket + sidecars is exactly the live view.
 
 
-def table_layout(path: str) -> dict | None:
-    """The bucketed layout a store/members table was BUILT with:
-    {"buckets": int, "key": str}, or None for a legacy flat dir (no
-    marker). Appends and pruned reads must use the persisted layout,
-    never in-process defaults — the banded index rule
-    (`banded_layout`), for the same reason: a different bucket count
-    selects partitions where the matching rows don't live."""
+class StoreLayoutError(RuntimeError):
+    """A rep-store table is missing or not in the current layout."""
+
+
+def table_layout(path: str) -> dict:
+    """The layout a rep-store table was BUILT with: {"buckets": int,
+    "key": str}. Appends and pruned reads must use it, never
+    in-process defaults. Raises StoreLayoutError, naming the table and
+    `build-store`, when the table has no current marker."""
     import json
     import os
 
     meta = os.path.join(path, _TBL_META)
-    if not os.path.exists(meta):
-        return None
-    with open(meta) as f:
-        lay = json.load(f)
-    return {
-        "buckets": int(lay["buckets"]),
-        "key": str(lay["key"]),
-        # bucket-expression version: markers written before round
-        # 15's skew fix carry no field and mean the raw-pmod
-        # spelling; every reader/appender must reproduce the exact
-        # expression the data was WRITTEN with or the prune selects
-        # partitions where the matching rows don't live.
-        "pb": str(lay.get("pb", "mod")),
-    }
+    lay = {}
+    if os.path.exists(meta):
+        with open(meta) as f:
+            lay = json.load(f)
+    # "pb" names the bucket expression; xxh64 is the only one written
+    if lay.get("pb") != "xxh64":
+        state = "has no current layout marker" if os.path.isdir(path) else "is missing"
+        raise StoreLayoutError(
+            f"rep-store table {path} {state}: rebuild the store with "
+            "build-store (build-vstore for a vector store)"
+        )
+    return {"buckets": int(lay["buckets"]), "key": str(lay["key"])}
 
 
-def _tbl_pb_expr(dtype, col: str, buckets: int, variant: str = "xxh64"):
+def require_rep_store(*paths: str) -> None:
+    """Heal each table's crash-interrupted swaps, then check it carries
+    the current layout marker. File operations only, so every entry
+    point (admission, retraction, maintenance) refuses an old layout
+    before any Spark job."""
+    for p in paths:
+        heal_swap(p)
+        heal_table_fold(p)
+        table_layout(p)
+
+
+def _tbl_pb_expr(dtype, col: str, buckets: int):
     """Deterministic bucket of a join key. String keys (gh is an md5
     hex, but any string works) hash through md5 so the bucketing
-    never assumes hex. Integral keys HASH through xxhash64 before
-    the pmod (variant 'xxh64', the default for new layouts): raw
-    `pmod(id, buckets)` degenerates on arithmetic-progression id
-    spaces — snowflake-style ids with low bits zero land every row
-    in a handful of buckets (all in ONE when the stride shares the
-    bucket count's factors), silently turning the pruned read back
-    into a near-full scan. xxhash64 is seed-stable inside Spark, so
-    the same expression buckets the store at write time and the
-    batch at read time; variant 'mod' reproduces pre-r15 markers.
-    Both spellings are pure Spark SQL."""
+    never assumes hex. Integral keys hash through xxhash64 before the
+    pmod: raw `pmod(id, buckets)` degenerates on arithmetic-progression
+    id spaces — snowflake-style ids with low bits zero land every row
+    in a handful of buckets, silently turning the pruned read back
+    into a near-full scan. Both spellings are pure, seed-stable Spark
+    SQL, so the same expression buckets the table at write time and
+    the batch at read time."""
     from pyspark.sql.types import StringType
 
     if isinstance(dtype, StringType):
@@ -1177,8 +841,6 @@ def _tbl_pb_expr(dtype, col: str, buckets: int, variant: str = "xxh64"):
             f"CAST(pmod(CAST(conv(substring(md5({col}), 1, 8), 16, 10) "
             f"AS BIGINT), {buckets}) AS INT)"
         )
-    if variant == "mod":
-        return F.expr(f"CAST(pmod(CAST({col} AS BIGINT), {buckets}) AS INT)")
     return F.expr(
         f"CAST(pmod(xxhash64(CAST({col} AS BIGINT)), {buckets}) AS INT)"
     )
@@ -1189,11 +851,10 @@ def _write_tbl_marker(
     rows: int | None = None,
 ) -> None:
     """The marker also persists the TABLE SCHEMA: a hive write of an
-    EMPTY frame creates no data files at all (unlike the legacy flat
-    write, which leaves a schema-carrying empty part file), so an
-    empty bucketed table would otherwise be unreadable
-    (UNABLE_TO_INFER_SCHEMA) — the empty-base-store bootstrap is a
-    real CLI path (tests/test_cli.py::test_admit_cli_empty_base_store).
+    EMPTY frame creates no data files at all, so an empty bucketed
+    table would otherwise be unreadable (UNABLE_TO_INFER_SCHEMA) —
+    the empty-base-store bootstrap is a real CLI path
+    (tests/test_cli.py::test_admit_cli_empty_base_store).
     `rows` (VERDICT r17 #5) caches the EXACT row count where the
     writer knows it — full rewrites footer-count what they just
     wrote — so `maybe_rebucket_table` reads a number instead of
@@ -1242,8 +903,8 @@ def _footer_rows(path: str) -> int | None:
 
 
 def _marker_rows(path: str) -> int | None:
-    """The marker-cached exact row count, or None (no marker, a
-    pre-r18 marker, or a count invalidated by an append)."""
+    """The marker-cached exact row count, or None (no marker, or a
+    count invalidated by an append)."""
     import json
     import os
 
@@ -1258,7 +919,7 @@ def _marker_rows(path: str) -> int | None:
 def _set_marker_rows(path: str, rows: int | None) -> None:
     """Update (rows=int) or invalidate (rows=None) the marker's
     cached row count, preserving every other field; no-op on tables
-    without a `_TBL_META` marker (legacy flat dirs, banded indexes).
+    without a `_TBL_META` marker.
     Atomic (`write_json`) — readers stat the marker on every pruned
     read."""
     import json
@@ -1301,27 +962,16 @@ def write_table(
     key: str | None = None,
     buckets: int | None = None,
 ) -> None:
-    """Layout-honoring write of a flat-store/members table. Appends
-    read the persisted marker: bucketed tables get a bucketed append
-    (repartition(pb) first — one file per touched partition per
-    append, `write_banded_index`'s clustering rationale), legacy
-    dirs a plain flat append. Builds (overwrite / first write) with
-    `key` set create the bucketed layout and persist the marker;
-    without `key` they stay legacy-flat."""
-    import os
-
-    variant = "xxh64"  # new layouts; appends reproduce the persisted one
-    write_marker = True
-    if mode == "append" and os.path.exists(path):
+    """Layout-honoring write of a rep-store table. Appends read the
+    persisted marker and write bucketed (repartition(pb) first — one
+    file per touched partition per append: without it every shuffle
+    partition of the source writes into every hive partition, and the
+    reader's listing/open cost swamps the pruning it came for).
+    Builds (overwrite) bucket on `key` and persist the marker."""
+    append = mode == "append"
+    if append:
         lay = table_layout(path)
-        if lay is None:
-            df.write.mode("append").parquet(path)
-            return
-        key, buckets, variant = lay["key"], lay["buckets"], lay["pb"]
-        write_marker = False  # the marker IS the layout — never drift it
-    if key is None:
-        df.write.mode(mode).parquet(path)
-        return
+        key, buckets = lay["key"], lay["buckets"]
     persisted = None
     sized_rows = None
     if buckets is None:
@@ -1329,17 +979,18 @@ def write_table(
         # persist + count materializes the build frame exactly once —
         # in the CLI shape its lineage is a corpus JSON scan, so the
         # cache also keeps the sizing pass from re-reading the corpus.
-        # Callers that already know the layout (rebuilds, migrations)
-        # pass `buckets` and skip this entirely. A frame the caller
-        # already persisted is counted in place, never re-persisted
-        # (so the unpersist below can't drop the caller's cache).
+        # Callers that already know the layout (rebuilds, migrations,
+        # the index sized from the flat store's marker) pass `buckets`
+        # and skip this entirely. A frame the caller already persisted
+        # is counted in place, never re-persisted (so the unpersist
+        # below can't drop the caller's cache).
         if df.storageLevel.useMemory or df.storageLevel.useDisk:
             sized_rows = df.count()
         else:
             persisted = df.persist()
             sized_rows = persisted.count()
         buckets = _auto_buckets(sized_rows)
-    pb = _tbl_pb_expr(df.schema[key].dataType, key, buckets, variant)
+    pb = _tbl_pb_expr(df.schema[key].dataType, key, buckets)
     (
         df.withColumn(_TBL_PB, pb)
         .repartition(_TBL_PB)
@@ -1349,7 +1000,12 @@ def write_table(
     )
     if persisted is not None:
         persisted.unpersist()
-    if write_marker:
+    if append:
+        # the cached count is stale now — invalidate; the next
+        # maintenance gate re-derives and re-persists it. The marker
+        # IS the layout: an append never rewrites anything else in it.
+        _set_marker_rows(path, None)
+    else:
         # a build/rewrite knows its exact row count for free — the
         # sizing count above when it ran, else footer metadata of the
         # files just written, no Spark job (VERDICT r17 #5: the
@@ -1361,10 +1017,6 @@ def write_table(
             df.schema.json(),
             rows=sized_rows if sized_rows is not None else _footer_rows(path),
         )
-    else:
-        # append: the cached count is stale now — invalidate; the
-        # next maintenance gate re-derives and re-persists it
-        _set_marker_rows(path, None)
 
 
 def read_table(spark: SparkSession, path: str) -> DataFrame:
@@ -1401,28 +1053,25 @@ def pruned_table(
     collect the distinct bucket ids (≤ buckets literals — bounded by
     the layout, not the data), list exactly those partition dirs
     (full-table partition discovery is O(buckets) listing calls even
-    when the filter prunes to a handful — the banded index's r12
-    sweep measurement), and push the isin down as a partition
-    filter. Legacy tables (no marker) fall back to the full scan —
-    correctness never depends on the layout, only the read bound
-    does. `vals` (r18): a caller that already collected the batch's
-    bucket ids with THIS table's layout (`batch_bucket_vals` — one
-    combined job instead of one collect per table) passes them in and
-    the collect here is skipped; correctness is the caller's layout
-    match, which `batch_bucket_vals` guarantees by deriving the
-    expression from the same persisted marker."""
+    when the filter prunes to a handful — the r12 sweep's 8.8 s at
+    1024 buckets was discovery, not data), and push the isin down as
+    a partition filter. `vals` (r18): a caller that already collected
+    the batch's bucket ids with THIS table's layout
+    (`batch_bucket_vals` — one combined job instead of one collect
+    per table) passes them in and the collect here is skipped."""
     import os
 
     from pyspark.errors import AnalysisException
 
-    heal_table_fold(path)  # same per-partition heal as read_table
+    # complete a crashed whole-table swap, then a crashed granular
+    # fold's per-partition swaps (read_table's heal)
+    heal_swap(path)
+    heal_table_fold(path)
     lay = table_layout(path)
-    if lay is None:
-        return read_table(spark, path)
     buckets = lay["buckets"]
     if vals is None:
         kc = key_col or lay["key"]
-        pb = _tbl_pb_expr(keys.schema[kc].dataType, kc, buckets, lay["pb"])
+        pb = _tbl_pb_expr(keys.schema[kc].dataType, kc, buckets)
         vals = sorted(
             r[0]
             for r in keys.select(pb.alias(_TBL_PB)).distinct().collect()
@@ -1440,76 +1089,108 @@ def pruned_table(
     except AnalysisException:
         # dirs exist but hold no parquet (crash remnants) — empty
         return read_table(spark, path).limit(0)
-    # belt over suspenders, same as pruned_store_rows: the isin is a
-    # no-op on the explicit dir list but keeps the plan
-    # self-describing (and plan-assertable) about WHICH partitions
-    # this read may touch
+    # belt over suspenders: the isin is a no-op on the explicit dir
+    # list but keeps the plan self-describing (and plan-assertable)
+    # about WHICH partitions this read may touch
     return src.where(F.col(_TBL_PB).isin(vals)).drop(_TBL_PB)
 
 
 def batch_bucket_vals(
     batch: DataFrame, tables: list[tuple[str, str]]
-) -> list[list[int] | None]:
+) -> list[list[int]]:
     """Collect the batch's distinct bucket ids for SEVERAL bucketed
     tables in ONE Spark job (r18: the admission step paid one
     driver collect per pruned table — members by doc_id, flat store
     by gh — each a full pass over the batch frame for one tiny value
     set). `tables` is [(path, key_col)]; the bucket expression for
-    each comes from that table's own persisted marker (the layout-
-    honoring rule), so the returned ids are exactly what
-    `pruned_table`'s internal collect would produce. A legacy table
-    (no marker) yields None at its position — the caller passes
-    keys instead and `pruned_table` falls back to the full scan."""
+    each comes from that table's own persisted marker, so the
+    returned ids are exactly what `pruned_table`'s internal collect
+    would produce."""
     exprs = []
-    slots: list[int | None] = []
-    for path, kc in tables:
+    for i, (path, kc) in enumerate(tables):
         heal_table_fold(path)  # marker read below must see live state
-        lay = table_layout(path)
-        if lay is None:
-            slots.append(None)
-            continue
         pb = _tbl_pb_expr(
-            batch.schema[kc].dataType, kc, lay["buckets"], lay["pb"]
+            batch.schema[kc].dataType, kc, table_layout(path)["buckets"]
         )
-        slots.append(len(exprs))
-        exprs.append(F.collect_set(pb).alias(f"v{len(exprs)}"))
-    if not exprs:
-        return [None] * len(tables)
+        exprs.append(F.collect_set(pb).alias(f"v{i}"))
     row = batch.agg(*exprs).collect()[0]
-    return [
-        None if s is None else sorted(v for v in row[s] if v is not None)
-        for s in slots
-    ]
+    return [sorted(v for v in row[i] if v is not None) for i in range(len(tables))]
 
 
-def bucket_table(
-    spark: SparkSession, path: str, key: str, buckets: int
-) -> dict:
-    """Migrate a table to the bucketed layout (or to a NEW bucket
-    count) — the flat-store/members sibling of
-    `rebucket_banded_index`, with the same whole-table swap.
-    Pruned-read results are invariant across a re-bucket (the bucket
-    is a pure pruning key; every join still matches on the key value
-    itself). Also migrates a pre-r15 raw-pmod layout to the
-    skew-robust xxh64 bucket expression (data and marker rewritten
-    together — the no-op early return requires the CURRENT
-    expression version). Returns {buckets_before, buckets_after}."""
-    staging = stage(path)
-    heal_table_fold(path)
-    lay = table_layout(path)
-    before = lay["buckets"] if lay else None
-    if (
-        lay
-        and lay["buckets"] == buckets
-        and lay["key"] == key
-        and lay["pb"] == "xxh64"
-    ):
-        return {"buckets_before": before, "buckets_after": buckets}
+def index_rows_frame(
+    sigs: DataFrame, key_cols: list[str] | None = None
+) -> DataFrame:
+    """Rep-store signature rows → band-index rows (group_id, ks,
+    band, band_key, band_hash): one posexplode, no shuffle. Works
+    over either store family: MinHash bk0..bk3 (string keys, the
+    default) or the hyperplane store's bv0..bv5 (int sign bands).
+    band_hash, the index's bucket key, is one xxhash64 of (band,
+    band_key): a pure function of what a match needs, so it is a
+    pruning key only and admission evidence never depends on it."""
+    rows = store_band_rows(sigs, key_cols, id_col="group_id")
+    return rows.select(
+        F.col("id").alias("group_id"),
+        "ks",
+        "band",
+        "band_key",
+        F.xxhash64("band", "band_key").alias(_INDEX_KEY),
+    )
+
+
+def write_banded_index(
+    sigs: DataFrame,
+    path: str,
+    mode: str,
+    key_cols: list[str] | None = None,
+    buckets: int | None = None,
+) -> None:
+    """`write_table` of the signature rows' band-index rows."""
     write_table(
-        read_table(spark, path), staging, "overwrite", key=key, buckets=buckets
+        index_rows_frame(sigs, key_cols), path, mode, key=_INDEX_KEY,
+        buckets=buckets,
+    )
+
+
+def pruned_store_rows(
+    spark: SparkSession,
+    path: str,
+    batch_sigs: DataFrame,
+    key_cols: list[str] | None = None,
+) -> DataFrame:
+    """The band index's rows a batch's band keys can match, as
+    joinable band rows (id, ks, band, band_key): `pruned_table` over
+    the batch's own band hashes. dropDuplicates makes a crash-retried
+    index append harmless (duplicate index rows would duplicate
+    candidate pairs; full-row dedup over the PRUNED subset is bounded
+    by the batch's bucket footprint, never the store)."""
+    rows = pruned_table(
+        spark, path, index_rows_frame(batch_sigs, key_cols), _INDEX_KEY
+    )
+    return rows.select(
+        F.col("group_id").alias("id"), "ks", "band", "band_key"
+    ).dropDuplicates()
+
+
+def bucket_table(spark: SparkSession, path: str, buckets: int) -> dict:
+    """Re-bucket a rep-store table to a NEW bucket count, through the
+    whole-table swap of `storage`: at every instant either `path` or
+    `path + '.old'` holds a complete table whose marker matches its
+    data (the marker is written into the staging dir before the
+    swap). Pruned-read results are invariant across a re-bucket (the
+    bucket is a pure pruning key; every join still matches on the key
+    value itself). Returns {buckets_before, buckets_after}."""
+    require_rep_store(path)
+    lay = table_layout(path)
+    out = {"buckets_before": lay["buckets"], "buckets_after": buckets}
+    if lay["buckets"] == buckets:
+        return out
+    staging = stage(path)
+    write_table(
+        read_table(spark, path), staging, "overwrite", key=lay["key"],
+        buckets=buckets,
     )
     publish(path)
-    return {"buckets_before": before, "buckets_after": buckets}
+    return out
 
 
 # Auto-rebucket thresholds (VERDICT r15 #3), derived from the r15
@@ -1525,78 +1206,44 @@ _REBUCKET_TARGET_ROWS = 1024  # rows/bucket at the measured good point
 _REBUCKET_MAX = 65536  # ceiling: one listing dir per bucket
 
 
-def maybe_rebucket_table(
-    spark: SparkSession,
-    path: str,
-    *,
-    trigger_rows: int = _REBUCKET_TRIGGER_ROWS,
-    target_rows: int = _REBUCKET_TARGET_ROWS,
-    max_buckets: int = _REBUCKET_MAX,
-) -> dict:
+def maybe_rebucket_table(spark: SparkSession, path: str) -> dict:
     """The automated re-bucket decision (VERDICT r15 #3: the soak's
     1024-bucket row proved 're-bucket up as the store grows' is the
-    production recipe, but only the manual `bucket-store` CLI did it
-    — at 100 TB someone had to notice the admit curve bending).
-    Called from the compact-store maintenance pass: when a bucketed
-    table's rows/bucket crosses `trigger_rows`, re-bucket UP (never
-    down — shrinking buys nothing and pays a rewrite) to the next
-    power of two that brings it under `target_rows`. Legacy-flat
-    tables are left alone — `bucket_table` is the deliberate
-    migration step. Returns {"rebucketed": bool, "rows": n,
-    "buckets_before": b, "buckets_after": b'} (rows/buckets None for
-    legacy).
+    production recipe). Called from the compact-store maintenance
+    pass for each of the three tables: when a table's rows/bucket
+    crosses _REBUCKET_TRIGGER_ROWS, re-bucket UP (never down —
+    shrinking buys nothing and pays a rewrite) to the next power of
+    two that brings it under _REBUCKET_TARGET_ROWS, capped at
+    _REBUCKET_MAX (all read at call time). Returns {"rebucketed": bool,
+    "rows": n, "buckets_before": b, "buckets_after": b'}.
 
     The row count comes from the layout marker when a full rewrite
     cached it there (VERDICT r17 #5 — exact at write/compact/fold
     time, invalidated by appends), so a maintenance pass whose fold
     already rewrote the table pays NO table scan here; the count()
     fallback re-derives it once and re-persists."""
-    lay = table_layout(path)
-    if lay is None:
-        return {
-            "rebucketed": False,
-            "rows": None,
-            "buckets_before": None,
-            "buckets_after": None,
-        }
+    before = table_layout(path)["buckets"]
     n = _marker_rows(path)
     if n is None:
         n = read_table(spark, path).count()
         _set_marker_rows(path, n)
-    before = lay["buckets"]
     out = {
         "rebucketed": False,
         "rows": n,
         "buckets_before": before,
         "buckets_after": before,
     }
-    if n <= before * trigger_rows:
+    if n <= before * _REBUCKET_TRIGGER_ROWS:
         return out
     need = before
-    while need * target_rows < n and need < max_buckets:
+    while need * _REBUCKET_TARGET_ROWS < n and need < _REBUCKET_MAX:
         need *= 2
     if need <= before:
         return out
-    bucket_table(spark, path, lay["key"], need)
+    bucket_table(spark, path, need)
     out["rebucketed"] = True
     out["buckets_after"] = need
     return out
-
-
-def _swap_write_table(df: DataFrame, path: str) -> None:
-    """`commit` for the big tables: a full rewrite (retraction
-    fold) that PRESERVES the persisted bucketed layout — the marker
-    is written into the staging dir before the swap, so no
-    observable state pairs bucketed data with a missing marker.
-    Legacy tables stay legacy."""
-    heal_swap(path)
-    lay = table_layout(path) or {"key": None, "buckets": None}
-    commit(
-        path,
-        lambda staging: write_table(
-            df, staging, "overwrite", key=lay["key"], buckets=lay["buckets"]
-        ),
-    )
 
 
 def bootstrap_rep_store(
@@ -1608,33 +1255,34 @@ def bootstrap_rep_store(
     mem_path: str,
     *,
     family: StoreFamily = TEXT,
-    buckets: int | None = None,
 ) -> None:
-    """Fresh three-table rep-store bootstrap (flat signatures, banded
+    """Fresh three-table rep-store bootstrap (flat signatures, band
     index, members; `rep_store_frames` builds the two frames), shared
     by the proof ops, the streaming op and `build-store` /
-    `build-vstore` (which pass their `--buckets`): the flat store is
-    written first (the banded index auto-sizes from its just-written
-    marker via `sized_from`), then the banded index and the members
-    table build CONCURRENTLY (r19,
-    guide §2.6 — they write to different dirs and neither reads the
-    other's output, so a bootstrap pays max(banded, members) instead
-    of their sum). Appends never come through here; the
-    crash-ordering contract belongs to `rep_admission_step`, and a
-    crashed BOOTSTRAP is re-run from scratch wholesale (every caller
-    builds into a fresh root), so the banded/members completion order
+    `build-vstore`. The flat store is written first; the index sizes
+    itself by the same rows-per-bucket rule from the row count that
+    write cached in its marker (n_bands index rows per group, so no
+    count job), then the index and the members table build
+    CONCURRENTLY (r19, guide §2.6 — they write to different dirs and
+    neither reads the other's output, so a bootstrap pays max(index,
+    members) instead of their sum). Appends never come through here;
+    the crash-ordering contract belongs to `rep_admission_step`, and
+    a crashed BOOTSTRAP is re-run from scratch wholesale (every caller
+    builds into a fresh root), so the index/members completion order
     is not load-bearing."""
-    write_table(sig_frame, sig_path, "overwrite", key="gh", buckets=buckets)
+    write_table(sig_frame, sig_path, "overwrite", key="gh")
+    groups = _marker_rows(sig_path)
     overlap(
-        lambda: write_table(
-            members_frame, mem_path, "overwrite", key="doc_id", buckets=buckets
-        ),
+        lambda: write_table(members_frame, mem_path, "overwrite", key="doc_id"),
         lambda: write_banded_index(
             read_table(spark, sig_path),
             band_path,
             "overwrite",
-            key_cols=family.key_cols,
-            sized_from=sig_path,
+            family.key_cols,
+            buckets=(
+                None if groups is None
+                else _auto_buckets(len(family.key_cols) * groups)
+            ),
         ),
     )
 
@@ -1658,9 +1306,9 @@ def rep_admission_frames(
                    neighbor evidence — see the block comment above);
       touched_sigs — the CACHED store rows backing all of the above;
                    the caller unpersists it after the appends.
-    The store side is the banded index's pruned read MINUS every
+    The store side is the band index's pruned read MINUS every
     batch-side group id (`pruned_store_rows` + anti-join): touched
-    groups move wholly to the batch side, and a crash-leaked banded
+    groups move wholly to the batch side, and a crash-leaked index
     row for a group being re-admitted as new can never double-join.
 
     ONE flat-store scan per step: everything the step needs from the
@@ -1721,13 +1369,17 @@ def rep_admission_step(
        redelivery; `skip_when_no_new_docs` makes a fully-delivered
        batch a no-op);
     2. batch groups classify against the flat store (new vs
-       touched), the banded index serves the PRUNED store side,
+       touched), the band index serves the PRUNED store side,
        and everything reading the store is cache-materialized
        BEFORE any append mutates it;
-    3. verified group evidence goes to `write_evidence` FIRST, then
-       banded → flat → members appends (each idempotent: the banded
-       read dropDuplicates, the gh classification, the doc_id
-       anti-join).
+    3. verified group evidence goes to `write_evidence` alongside
+       the index → flat appends, then the members append commits
+       the batch (each idempotent: the index read's dropDuplicates,
+       the gh classification, the doc_id anti-join).
+
+    Every table must carry the current layout marker; otherwise
+    StoreLayoutError names the table and `build-store` before any
+    Spark job.
 
     `feats_for(cand_ids)` supplies `family.feats` rows for the
     candidate group reps (`family.feats_for` over the corpus in the
@@ -1744,9 +1396,8 @@ def rep_admission_step(
     # admission step than a maintenance re-run — without this the
     # step dies on PATH_NOT_FOUND until an operator runs
     # compact-store (the read_sidecar lesson, r14 self-review #1,
-    # applied to the main tables).
-    heal_swap(sig_path)
-    heal_swap(mem_path)
+    # applied to the main tables). Then refuse an old layout.
+    require_rep_store(sig_path, band_path, mem_path)
     # Tombstoned doc_ids are invisible to the WHOLE step, not just the
     # members append (ADVICE r13 high): a redelivered retracted doc
     # whose group was dropped would otherwise classify as NEW content
@@ -1821,8 +1472,16 @@ def rep_admission_step(
         store_sigs, g_batch, family
     )
     group_map, new_sigs = group_map.cache(), new_sigs.cache()
+    # The batch-side anti-join is also what makes `cand` safe to
+    # RECOMPUTE (cache is best-effort; verify runs while the appends
+    # below write): every index row appended during this step belongs
+    # to a new group, and every new group is on the batch side, so a
+    # re-evaluated store side excludes exactly what it excluded first.
     store_rows = _apply_gdelta(
-        spark, pruned_store_rows(spark, band_path, batch_side), sig_path, "id"
+        spark,
+        pruned_store_rows(spark, band_path, batch_side, key_cols),
+        sig_path,
+        "id",
     ).join(
         batch_side.select(F.col("group_id").alias("id")), "id", "left_anti"
     )
@@ -1855,7 +1514,7 @@ def rep_admission_step(
     # redelivery fast path above counted it already), (groups,
     # new-groups) off the is_new tag, and the feats cache fill whose
     # count value nothing reads. The heavy shared lineages
-    # (touched_sigs, new_sigs, cand) are already cached by the banded
+    # (touched_sigs, new_sigs, cand) are already cached by the index
     # footprint's evaluation, so the concurrent subtrees cannot
     # double-compute them.
     step_stats = group_map.agg(
@@ -1872,25 +1531,26 @@ def rep_admission_step(
         n_mem_new = srow["nd"]
     verified = family.verify(cand, feats, threshold)
     if apply_appends:
-        # banded BEFORE flat: a crash between the two re-admits the
+        # index BEFORE flat: a crash between the two re-admits the
         # group as new next retry and the index read's dropDuplicates
         # absorbs the re-appended rows — the reverse order would
         # strand a group with no index rows at all. The evidence
-        # write OVERLAPS the banded + flat appends (r19, guide §2.6:
+        # write OVERLAPS the index + flat appends (r19, guide §2.6:
         # independent jobs back-fill each other's stragglers): it
         # reads only cached frames (cand, feats) and its own output
-        # dir, and every crash state the overlap can produce —
-        # evidence without banded rows, banded rows without evidence
-        # — is one the sequential order already reaches (crash after
-        # / before the evidence write) and recovers from by the same
-        # idempotence (rotation-scoped evidence overwrite, banded
-        # dropDuplicates, gh classification). The members append —
-        # the step's commit point, which flips a redelivered batch to
-        # "skip" — still runs LAST, strictly after the evidence
+        # dir. The overlap reaches one state the sequential order
+        # never did — appends done, evidence not — and a retry
+        # recovers it because the members append has not run: the
+        # batch's docs are still member-new, so the retry rescores
+        # it, every appended group now classifies as touched and goes
+        # back to the batch side, and the rotation-scoped evidence
+        # overwrite regenerates the complete partition. The members
+        # append — the step's commit point, which flips a redelivered
+        # batch to "skip" — runs LAST, strictly after the evidence
         # result is in (`overlap` re-raises a failed evidence write
         # before the batch can commit).
         def _appends() -> None:
-            write_banded_index(new_sigs, band_path, "append")
+            write_banded_index(new_sigs, band_path, "append", key_cols)
             write_table(new_sigs, sig_path, "append")
 
         overlap(lambda: write_evidence(verified), _appends)
@@ -2023,7 +1683,7 @@ def rep_store_admission(
     union SQL, unchanged, so the hash match proves the pre-pass
     semantics-preserving while the kernel's working set shrank from
     O(docs) to O(distinct contents). The store side of every band
-    join comes through the band-partitioned index's PRUNED read
+    join comes through the band index's PRUNED read
     (`pruned_store_rows` — only partitions the batch's band keys can
     match are opened), so the oracle covers the scan-pruning design
     too."""
@@ -2221,7 +1881,7 @@ def embedding_store_rep_admission(spark: SparkSession, sf_dir: str) -> DataFrame
     family — closing the last uncapped admission kernel (VERDICT r11
     #1): a degenerate bucket of B identical vectors reaches the
     kernel as one row, the store grows O(distinct vectors), and the
-    banded index's pruned read is int-keyed."""
+    band index's pruned read is int-keyed."""
     return rep_store_admission(
         spark, _quantized(spark, sf_dir), VECTOR, "hyperplane_rep_store"
     )
@@ -2274,11 +1934,9 @@ def gdelta_keys_path(sig_path: str) -> str:
     members buckets from the doc_id column DIRECTLY, skipping its
     raw-table affected-key scans — the last store-sized read in the
     retire path. Accumulated by union across retractions (like the
-    tombstones) and retired with the gdelta. COMPLETENESS RULE: the
-    file exists ⟺ it covers the ENTIRE pending gdelta — a retraction
-    composing onto a pre-schema-change sidecar (gdelta present, keys
-    absent) skips writing keys, so the fold falls back to the legacy
-    scans instead of trusting a partial key set."""
+    tombstones) and retired with the gdelta. It is written BEFORE the
+    gdelta and retired after it, so a pending gdelta always has its
+    keys; a gdelta without them is refused (StoreLayoutError)."""
     return sig_path.rstrip("/") + "_gdelta_keys"
 
 
@@ -2341,6 +1999,27 @@ def _apply_gdelta(
     ).drop("__gd_old", "__gd_new", "__gd_hit")
 
 
+def _require_gdelta_keys(sig_path: str) -> None:
+    """Refuse a pending gdelta without its bucket-key sidecar (a
+    sidecar pair no code writes any more: keys go first, see
+    `gdelta_keys_path`). File checks only."""
+    import glob
+    import os
+
+    def _has_rows(p: str) -> bool:
+        heal_swap(p)
+        return bool(glob.glob(os.path.join(p, "*.parquet")))
+
+    if _has_rows(gdelta_path(sig_path)) and not _has_rows(
+        gdelta_keys_path(sig_path)
+    ):
+        raise StoreLayoutError(
+            f"retraction sidecar {gdelta_path(sig_path)} has no bucket-key "
+            "sidecar: rebuild the store with build-store (build-vstore for "
+            "a vector store)"
+        )
+
+
 def retract_docs(
     spark: SparkSession,
     sig_path: str,
@@ -2350,7 +2029,7 @@ def retract_docs(
     """Remove docs from a rep store (both families — nothing here
     touches the signature columns): tombstone their membership, drop
     groups they empty, re-elect (min surviving doc id) groups whose
-    rep they take away. The banded index is never touched — readers
+    rep they take away. The band index is never touched — readers
     compose the gdelta over the pruned read (rep_admission_step), so
     retraction needs no index path. Write order: the bucket-key
     sidecar FIRST (`gdelta_keys_path` — a crash after it leaves a
@@ -2360,6 +2039,8 @@ def retract_docs(
     recompute converges to the same delta — re-election is
     deterministic). Retracting an id the store never admitted is a
     no-op. Returns counts."""
+    require_rep_store(sig_path, mem_path)
+    _require_gdelta_keys(sig_path)
     ids = ids.select("doc_id").distinct().cache()
     live = live_members(spark, mem_path, sig_path)
     # localCheckpoint, not cache: r is consumed AFTER the gdelta swap
@@ -2431,25 +2112,23 @@ def retract_docs(
     old_gd = read_sidecar(spark, gdelta_path(sig_path))
     keys_p = gdelta_keys_path(sig_path)
     old_keys = read_sidecar(spark, keys_p)
-    legacy_keys = old_gd is not None and old_keys is None
-    if not legacy_keys:
-        new_keys = (
-            aff_members.join(
-                eff_changes.select(F.col("eff").alias("group_id")),
-                "group_id",
-                "left_semi",
-            )
-            .select("gh", "doc_id")
-            .distinct()
+    new_keys = (
+        aff_members.join(
+            eff_changes.select(F.col("eff").alias("group_id")),
+            "group_id",
+            "left_semi",
         )
-        if old_keys is not None:
-            new_keys = new_keys.unionByName(
-                old_keys.select("gh", "doc_id")
-            ).distinct()
-        # localCheckpoint: the union's lineage reads the old sidecar
-        # the swap below removes (the tombstone write's rule)
-        new_keys = new_keys.localCheckpoint()
-        commit(keys_p, new_keys.write.parquet)
+        .select("gh", "doc_id")
+        .distinct()
+    )
+    if old_keys is not None:
+        new_keys = new_keys.unionByName(
+            old_keys.select("gh", "doc_id")
+        ).distinct()
+    # localCheckpoint: the union's lineage reads the old sidecar
+    # the swap below removes (the tombstone write's rule)
+    new_keys = new_keys.localCheckpoint()
+    commit(keys_p, new_keys.write.parquet)
     if old_gd is None:
         old_gd = spark.createDataFrame([], gd_schema)
     mapped = old_gd.join(
@@ -2517,24 +2196,23 @@ def _fold_table_granular(
     tomb: DataFrame | None,
     aff_keys: DataFrame | None = None,
 ) -> int:
-    """Granular fold of ONE bucketed table (flat sigs or members):
-    find the rows the sidecars touch, rewrite only their partitions.
-    Partition discovery is O(retracted) when the retraction recorded
-    its bucket-key sidecar (`aff_keys` — the affected raw key values
-    themselves, VERDICT r16 #5): the recorded keys name the
+    """Granular fold of ONE rep-store table (flat sigs, band index or
+    members): find the rows the sidecars touch, rewrite only their
+    partitions. Partition discovery is O(retracted): `aff_keys` holds
+    the affected bucket-key values the retraction recorded (VERDICT
+    r16 #5; for the index, derived from them), which name the
     CANDIDATE partitions with no table read, and the exact
-    affected-key scan then runs over those partitions only — so the
-    scan's convergence semantics are kept intact (a partition an
-    earlier crashed attempt already folded matches nothing and drops
-    back out; a recorded-keys superset from a keys-then-crash
-    retraction re-run selects nothing extra) at O(retracted) cost
-    end to end. Without recorded keys (a pre-schema-change sidecar)
-    discovery falls back to the 2-column columnar scan of the whole
-    RAW table (no shuffle — the sidecar side is O(retracted) and
-    broadcast). Either way the WRITE is bounded by the affected
-    partition set. Returns the number of partitions rewritten."""
+    affected-row scan then runs over those partitions only — so a
+    partition an earlier crashed attempt already folded matches
+    nothing and drops back out, and a recorded-keys superset from a
+    keys-then-crash retraction re-run selects nothing extra. Only the
+    index fold passes aff_keys=None, when its keys cannot be derived
+    (see fold_retractions); discovery then scans the whole index's
+    key and group columns (no shuffle — the sidecar side is
+    O(retracted) and broadcast). Either way the WRITE is bounded by
+    the affected partition set. Returns the number of partitions
+    rewritten."""
     import os
-    import shutil
 
     from pyspark.errors import AnalysisException
 
@@ -2547,7 +2225,7 @@ def _fold_table_granular(
     key = lay["key"]
 
     def _pb_vals(df, col):
-        pb = _tbl_pb_expr(df.schema[col].dataType, col, lay["buckets"], lay["pb"])
+        pb = _tbl_pb_expr(df.schema[col].dataType, col, lay["buckets"])
         return {
             r[0]
             for r in df.select(pb.alias(_TBL_PB)).distinct().collect()
@@ -2578,7 +2256,7 @@ def _fold_table_granular(
         if aff_keys is not None:
             cand = _read_rels(_to_rels(_pb_vals(aff_keys.select(key), key)))
         else:
-            cand = read_table(spark, path)  # legacy: full-table scan
+            cand = read_table(spark, path)
         if cand is not None:
             vals |= _pb_vals(
                 cand.select(key, "group_id").join(
@@ -2638,102 +2316,6 @@ def _fold_table_granular(
     return len(rels)
 
 
-def _fold_index_granular(
-    spark: SparkSession,
-    band_path: str,
-    sig_path: str,
-    gd_keys: DataFrame,
-    aff_gh: DataFrame | None = None,
-) -> int:
-    """Granular fold of the banded index: same contract as
-    `_fold_table_granular` over the index's own (band, kb) hive
-    layout. Equivalent to the full rebuild it replaces: a relabeled
-    group's sig row keeps the old rep's signature (so its band keys
-    — and therefore its partitions — are unchanged), and a dropped
-    group's rows are removed by the same gdelta composition the
-    pruned reader applies; crash-leaked duplicate index rows remain
-    tolerated by the reader's dropDuplicates and retired by
-    compact_banded_index, exactly as before.
-
-    Partition discovery is O(retracted) when the retraction recorded
-    its gh keys (`aff_gh`, VERDICT r16 #5): the affected (band, kb)
-    pairs are recomputed from the PRUNED sig-store read (band keys
-    are content-derived, so any incarnation of a group's sig row —
-    relabeled or not — yields the same pairs; this must run BEFORE
-    the sig fold removes a dropped group's rows, which
-    fold_retractions orders). Fallback to the full index scan when
-    keys are absent OR when some recorded gh has no sig rows left —
-    the one state a crashed earlier fold can produce (sig fold done,
-    index fold not, dropped group's sig rows already gone), where
-    deriving from sigs would silently leak the dropped group's index
-    rows forever."""
-    import os
-    import shutil
-
-    from pyspark.errors import AnalysisException
-
-    heal_table_fold(band_path)  # same entry belt as the table fold
-    pairs = None
-    if aff_gh is not None:
-        sig_rows = pruned_table(spark, sig_path, aff_gh, "gh").join(
-            F.broadcast(aff_gh), "gh", "left_semi"
-        )
-        n_rec = aff_gh.count()
-        n_found = sig_rows.select("gh").distinct().count()
-        if n_found == n_rec:
-            lay = banded_layout(band_path)
-            pair_rows = banded_rows_frame(
-                sig_rows, lay["buckets"], lay["key_cols"]
-            ).select("band", "kb").distinct()
-            pairs = [(r["band"], r["kb"]) for r in pair_rows.collect()]
-    if pairs is None:
-        try:
-            idx = spark.read.parquet(band_path)
-        except AnalysisException:
-            return 0  # marker-only empty index: nothing to fold
-        pair_rows = (
-            idx.select("band", "kb", "group_id")
-            .join(F.broadcast(gd_keys), "group_id", "left_semi")
-            .select("band", "kb")
-            .distinct()
-        )
-        pairs = [(r["band"], r["kb"]) for r in pair_rows.collect()]
-    rels = [
-        rel
-        for b, kb in pairs
-        if os.path.isdir(
-            os.path.join(band_path, rel := f"band={b}/kb={kb}")
-        )
-    ]
-    if not rels:
-        return 0
-    try:
-        src = spark.read.option("basePath", band_path).parquet(
-            *[os.path.join(band_path, rel) for rel in rels]
-        )
-    except AnalysisException:
-        return 0  # selected dirs hold no parquet (crash remnants)
-    folded = _apply_gdelta(spark, src, sig_path, "group_id")
-    # materialize once for the distinct + the staging write — see
-    # _fold_table_granular
-    folded = folded.localCheckpoint(eager=True)
-    # semantic emptied-set from lineage — see _fold_table_granular
-    present = {
-        f"band={r['band']}/kb={r['kb']}"
-        for r in folded.select("band", "kb").distinct().collect()
-    }
-    emptied = {rel for rel in rels if rel not in present}
-    staging = stage_partitions(band_path)
-    (
-        folded.repartition("band", "kb")
-        .write.partitionBy("band", "kb")
-        .mode("overwrite")
-        .parquet(staging)
-    )
-    _publish_fold(band_path, staging, rels, emptied)
-    return len(rels)
-
-
 def fold_retractions(
     spark: SparkSession, sig_path: str, band_path: str, mem_path: str
 ) -> dict:
@@ -2750,27 +2332,24 @@ def fold_retractions(
     into place mid-swap, failing this fold's rename (it converges
     on re-run, but aborts); see `heal_table_fold`.
 
-    Tables in the key-bucketed layout (and the banded index) fold
-    PARTITION-GRANULARLY (VERDICT r15 #2): only partitions holding
-    tombstoned/relabeled rows are rewritten — the write cost tracks
-    the retracted set, not the bucket count (the r15 soak's fold
-    column grew 7.6 → 18.0 s when buckets went 256 → 1024 on the
-    same store, pure per-partition overhead of the full-table swap).
-    Legacy-flat tables keep the full `_swap_write_table` rewrite.
-    Returns {"folded": True, "sig_parts": n, "index_parts": n,
-    "mem_parts": n} with n = partitions rewritten, 0 = table
-    untouched (e.g. a tombstone-only fold never rewrites the sig
-    store or index), -1 = legacy full rewrite."""
-    import os
-
+    Every table folds PARTITION-GRANULARLY (VERDICT r15 #2): only
+    partitions holding tombstoned/relabeled rows are rewritten — the
+    write cost tracks the retracted set, not the bucket count (the
+    r15 soak's fold column grew 7.6 → 18.0 s when buckets went 256 →
+    1024 on the same store, pure per-partition overhead of a
+    full-table swap). Returns {"folded": True, "sig_parts": n,
+    "index_parts": n, "mem_parts": n} with n = partitions rewritten,
+    0 = table untouched (e.g. a tombstone-only fold never rewrites
+    the sig store or index)."""
     # heal crash-interrupted swaps FIRST: a prior fold (or sidecar
     # write) that died mid-rename leaves only path+'.old' (or a
     # granular fold's journal + aside dirs), and the live-view read
     # plans below would raise PATH_NOT_FOUND before commit's
-    # own healer ran (self-review r13 finding #2)
-    for p in (sig_path, mem_path, band_path):
-        heal_swap(p)
-        heal_table_fold(p)
+    # own healer ran (self-review r13 finding #2); then refuse an
+    # old layout — folding past it would retire the gdelta while rows
+    # keyed by retired/dropped group ids stay behind
+    require_rep_store(sig_path, band_path, mem_path)
+    _require_gdelta_keys(sig_path)
     gd_p, tomb_p = gdelta_path(sig_path), tombstones_path(mem_path)
     keys_p = gdelta_keys_path(sig_path)
     for p in (gd_p, tomb_p):
@@ -2780,19 +2359,6 @@ def fold_retractions(
     keys = read_sidecar(spark, keys_p)
     if gd is None and tomb is None:
         return {"folded": False}
-    lay = banded_layout(band_path)
-    if lay is None and os.path.isdir(band_path):
-        # an index dir without a layout marker is a crashed overwrite
-        # build — folding past it would retire the gdelta while stale
-        # band rows keyed by retired/dropped group ids stay behind
-        # with nothing left to filter them at pruned-read time
-        # (ADVICE r13). Mirror write_banded_index's append rule: force
-        # the rebuild instead. A MISSING index dir stays a no-op.
-        raise RuntimeError(
-            f"banded index at {band_path} has no layout marker "
-            "(interrupted build?): rebuild it with write_banded_index "
-            "mode='overwrite' before folding retractions"
-        )
     # the gdelta KEY set drives the sig-store and index folds; an
     # empty one (possible: a retraction where every touched group
     # kept its rep writes only tombstones worth of change) means
@@ -2803,47 +2369,43 @@ def fold_retractions(
         if gd_keys.count() == 0:
             gd_keys.unpersist()
             gd_keys = None
-    # the recorded bucket keys (VERDICT r16 #5): exists ⟺ covers the
-    # whole gdelta (gdelta_keys_path's completeness rule), making
-    # every discovery below O(retracted). localCheckpoint: the fold
-    # consumes them AFTER sidecar-destroying swaps begin.
-    aff_gh = aff_docs = None
-    if keys is not None and gd_keys is not None:
+    stats = {"folded": True, "sig_parts": 0, "index_parts": 0, "mem_parts": 0}
+    aff_docs = None
+    if gd_keys is not None:
+        # the recorded bucket keys (VERDICT r16 #5) make every
+        # discovery below O(retracted). localCheckpoint: the fold
+        # consumes them AFTER sidecar-destroying swaps begin.
         k = keys.localCheckpoint()
         aff_gh = k.select("gh").distinct()
         aff_docs = k.select("doc_id").distinct()
-    stats = {"folded": True, "sig_parts": 0, "index_parts": 0, "mem_parts": 0}
-    if gd_keys is not None:
-        if table_layout(sig_path) is not None:
-            # index discovery FIRST: it derives (band, kb) from the
-            # sig rows, and the sig fold below removes a dropped
-            # group's rows (_fold_index_granular's ordering note)
-            if lay is not None:
-                stats["index_parts"] = _fold_index_granular(
-                    spark, band_path, sig_path, gd_keys, aff_gh
-                )
-            stats["sig_parts"] = _fold_table_granular(
-                spark, sig_path, sig_path, gd_keys, None, aff_gh
-            )
-        else:
-            _swap_write_table(live_store_sigs(spark, sig_path), sig_path)
-            stats["sig_parts"] = -1
-            if lay is not None:
-                write_banded_index(
-                    read_table(spark, sig_path),
-                    band_path,
-                    "overwrite",
-                    key_cols=lay["key_cols"],
-                    buckets=lay["buckets"],
-                )
-                stats["index_parts"] = -1
-    if table_layout(mem_path) is not None:
-        stats["mem_parts"] = _fold_table_granular(
-            spark, mem_path, sig_path, gd_keys, tomb, aff_docs
+        # The index's affected band hashes come from the recorded
+        # groups' sig rows (band keys are content-derived, so any
+        # incarnation of a group's sig row — relabeled or not —
+        # yields the same hashes), so this runs BEFORE the sig fold
+        # removes a dropped group's rows. When some recorded gh has
+        # no sig row left — the state a crashed earlier fold leaves
+        # (sig fold done, index fold not) — deriving from sigs would
+        # silently leak the dropped group's index rows forever, so
+        # the index fold scans instead.
+        sig_rows = pruned_table(spark, sig_path, aff_gh, "gh").join(
+            F.broadcast(aff_gh), "gh", "left_semi"
         )
-    else:
-        _swap_write_table(live_members(spark, mem_path, sig_path), mem_path)
-        stats["mem_parts"] = -1
+        aff_index = None
+        if sig_rows.select("gh").distinct().count() == aff_gh.count():
+            key_cols = (
+                TEXT.key_cols if TEXT.key_cols[0] in sig_rows.columns
+                else VECTOR.key_cols
+            )
+            aff_index = index_rows_frame(sig_rows, key_cols)
+        stats["index_parts"] = _fold_table_granular(
+            spark, band_path, sig_path, gd_keys, None, aff_index
+        )
+        stats["sig_parts"] = _fold_table_granular(
+            spark, sig_path, sig_path, gd_keys, None, aff_gh
+        )
+    stats["mem_parts"] = _fold_table_granular(
+        spark, mem_path, sig_path, gd_keys, tomb, aff_docs
+    )
     if gd_keys is not None:
         gd_keys.unpersist()
     for p in (gd_p, tomb_p, keys_p):

@@ -24,6 +24,8 @@ cannot load the classes, so its sessions keep stock Hadoop.
 from __future__ import annotations
 
 import os
+import threading
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import SparkSession
 
@@ -77,21 +79,29 @@ def get_spark(app_name: str = "fdblog2clickhouse-spark") -> SparkSession:
     return builder.getOrCreate()
 
 
-def overlap(background, foreground, pool=None) -> None:
+_overlap_lock = threading.Lock()
+_overlap_worker: tuple[int, ThreadPoolExecutor] | None = None
+
+
+def overlap(background, foreground) -> None:
     """Run `background()` on a worker thread while `foreground()`
     runs on this one, so independent Spark jobs back-fill each
     other's stragglers; return once both are done. The foreground's
     error wins: a background error raised alongside it is chained as
     its cause instead of replacing it, and a background error alone
-    is raised as itself. A caller that overlaps on every micro-batch
-    keeps a one-worker `pool`: each new Python thread costs a new
-    py4j-pinned JVM thread, 40-55 ms a call on local[4]."""
-    from concurrent.futures import ThreadPoolExecutor
+    is raised as itself.
 
-    if pool is None:
-        with ThreadPoolExecutor(max_workers=1) as own:
-            return overlap(background, foreground, own)
-    bg = pool.submit(background)
+    Every call's background runs on ONE worker thread kept for the
+    whole process (a new Python thread costs a new py4j-pinned JVM
+    thread, 40-55 ms a call on local[4]); backgrounds of concurrent
+    callers queue on it. A background callable must therefore never
+    call `overlap` itself: it would wait on its own worker forever."""
+    global _overlap_worker
+    with _overlap_lock:
+        # a forked child inherits the pool but not its thread
+        if _overlap_worker is None or _overlap_worker[0] != os.getpid():
+            _overlap_worker = (os.getpid(), ThreadPoolExecutor(max_workers=1))
+        bg = _overlap_worker[1].submit(background)
     try:
         foreground()
     except BaseException as err:

@@ -384,9 +384,9 @@ def publish_partitions(
     """Swap staged partition dirs into the live table under the
     journal. `staging` (fully written before any live state is
     touched) holds the new content of exactly the partitions named
-    by `rels` (relative dirs like 'pb=3', 'band=2/kb=7' or
-    'yyyymm=202001'); a rel in `emptied` has its live dir retired
-    instead. The CALLER computes `emptied` from the new frame's own
+    by `rels` (relative dirs like 'pb=3' or 'yyyymm=202001'); a rel
+    in `emptied` has its live dir retired instead. The CALLER
+    computes `emptied` from the new frame's own
     lineage, never from the staging dir, so a racing healer's
     tampering with staging can at worst abort the swap, never turn a
     partition into a retire (r18 stress finding). Partitions not in

@@ -118,21 +118,18 @@ def glob_name_guard(log_dir: str, hook):
 
 def insert_and_rollup(insert, rollup):
     """foreachBatch hook feeding both sinks of a log dir from one
-    batch: `insert` (ClickHouseHttpSink.foreach_batch) on a background
-    thread, `rollup` (foreach_batch_rollup) on the query's own thread,
-    whose `sql.streaming.queryId` property its replay watermark reads.
+    batch: `insert` (ClickHouseHttpSink.foreach_batch) on `overlap`'s
+    kept worker thread, `rollup` (foreach_batch_rollup) on the query's
+    own thread, whose `sql.streaming.queryId` property its replay
+    watermark reads.
     Returns once both are done, so the batch commits, and cleanSource
     deletes its files, only after both sinks took it."""
-    from concurrent.futures import ThreadPoolExecutor
-
     from ..session import overlap
-
-    pool = ThreadPoolExecutor(max_workers=1)  # one insert thread for the query's life
 
     def _fn(df: DataFrame, batch_id: int) -> None:
         # the trace schema has no numeric measure: the rollup counts events
         rows = df.select("time", "severity", "type", F.lit(0).cast("long").alias("value_c"))
-        overlap(lambda: insert(df, batch_id), lambda: rollup(rows, batch_id), pool)
+        overlap(lambda: insert(df, batch_id), lambda: rollup(rows, batch_id))
 
     return _fn
 

@@ -25,7 +25,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hashing import cents, cents_sql
+from ..operators.dedup_store import _STORE_ADMISSION_SQL
+from ..operators.similarity import _ANN_IVF_SQL
 from ..sources.tables import events_stream, table
+from ..sources.trace_json import _TRACE_BATCH_SQL
 from .ingest import normalize_trace, read_trace_stream
 
 
@@ -105,6 +108,20 @@ def _run_to_scratch(
     return spark.read.schema(df.schema).parquet(out)
 
 
+def drain_foreach_batch(stream: DataFrame, fn, checkpoint: str) -> None:
+    """Run the foreachBatch hook `fn` over a finite stream under
+    Trigger.AvailableNow, checkpointed at `checkpoint`, and return
+    once every available micro-batch is done — the drain every
+    foreachBatch proof op runs."""
+    (
+        stream.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
 def _export_trace_logs(
     spark: SparkSession,
     sf_dir: str,
@@ -174,17 +191,6 @@ def streaming_trace_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "type",
         "id",
     )
-
-
-_TRACE_INGEST_SQL = """
-SELECT CAST(CASE WHEN event_type = 'error' THEN 40 ELSE 10 END AS INT) AS severity,
-       'machine-' || CAST(user_id AS VARCHAR) AS machine,
-       'default' AS log_group,
-       epoch_us(ts) AS time_us,
-       event_type AS type,
-       CAST(event_id AS VARCHAR) AS id
-FROM events
-"""
 
 
 def streaming_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -346,12 +352,6 @@ FROM events
 """
 
 
-# All streaming queries read events through the shared schema-aware
-# source (sources/tables.py:events_stream) — never an inline
-# readStream.schema: see the round-4 silent 1000× timestamp shrink.
-_events_stream = events_stream
-
-
 def streaming_rollup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SummingMergeTree materialized-view path end to end: stream
     events through the incremental rollup sink (foreachBatch merge)
@@ -364,7 +364,7 @@ def streaming_rollup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = scratch_dir("rollup_ingest")
     path = os.path.join(base, "rollup")
-    rows = _events_stream(spark, sf_dir).select(
+    rows = events_stream(spark, sf_dir).select(
         F.col("ts").alias("time"),
         F.when(F.col("event_type") == "error", F.lit(40))
         .otherwise(F.lit(10))
@@ -373,13 +373,7 @@ def streaming_rollup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").alias("type"),
         F.round(F.col("value") * 100, 0).cast("long").alias("value_c"),
     )
-    q = (
-        rows.writeStream.foreachBatch(foreach_batch_rollup(path))
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_foreach_batch(rows, foreach_batch_rollup(path), os.path.join(base, "ckpt"))
     return read_rollup(spark, path).select(
         "yyyymm",
         "severity",
@@ -411,21 +405,17 @@ def streaming_upsert_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = scratch_dir("upsert_ingest")
     path = os.path.join(base, "state")
-    rows = _events_stream(spark, sf_dir).select(
+    rows = events_stream(spark, sf_dir).select(
         "user_id", "event_type", "ts", "event_id",
         F.round(F.col("value") * 100, 0).cast("long").alias("value_c"),
     )
-    q = (
-        rows.writeStream.foreachBatch(
-            foreach_batch_upsert(
-                path, keys=["user_id", "event_type"], version="ts", tiebreak="event_id"
-            )
-        )
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    drain_foreach_batch(
+        rows,
+        foreach_batch_upsert(
+            path, keys=["user_id", "event_type"], version="ts", tiebreak="event_id"
+        ),
+        os.path.join(base, "ckpt"),
     )
-    q.awaitTermination()
     return read_upsert(spark, path).select(
         "user_id",
         "event_type",
@@ -461,7 +451,7 @@ def streaming_view_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     covers the whole finite input, so the batch self-join is an exact
     oracle."""
     views = (
-        _events_stream(spark, sf_dir)
+        events_stream(spark, sf_dir)
         .where(F.col("event_type") == "view")
         .select(
             F.col("user_id").alias("v_user"),
@@ -471,7 +461,7 @@ def streaming_view_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("v_ts", "10 minutes")
     )
     purchases = (
-        _events_stream(spark, sf_dir)
+        events_stream(spark, sf_dir)
         .where(F.col("event_type") == "purchase")
         .select(
             F.col("user_id").alias("p_user"),
@@ -521,14 +511,8 @@ def streaming_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = scratch_dir("hll_rollup")
     path = os.path.join(base, "hll")
-    rows = _events_stream(spark, sf_dir).select("event_type", "user_id")
-    q = (
-        rows.writeStream.foreachBatch(foreach_batch_hll(path))
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    rows = events_stream(spark, sf_dir).select("event_type", "user_id")
+    drain_foreach_batch(rows, foreach_batch_hll(path), os.path.join(base, "ckpt"))
     return read_estimate(spark, path)
 
 
@@ -801,21 +785,9 @@ def streaming_store_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = spark.readStream.schema("doc_id long, text string").option(
         "maxFilesPerTrigger", 1
     ).json(base_dir)
-    q = (
-        stream.writeStream.foreachBatch(admit)
-        .option("checkpointLocation", base_dir + "_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_foreach_batch(stream, admit, base_dir + "_ckpt")
     feats.unpersist()
     return spark.read.parquet(evidence).select("da", "db", "jaccard")
-
-
-def _store_admission_stream_sql() -> str:
-    from ..operators.dedup_store import _STORE_ADMISSION_SQL
-
-    return _STORE_ADMISSION_SQL
 
 
 def streaming_ivf_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -893,24 +865,12 @@ def streaming_ivf_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = spark.readStream.schema(
         "vec_id long, q array<long>, nq long"
     ).option("maxFilesPerTrigger", 1).json(arrivals)
-    q = (
-        stream.writeStream.foreachBatch(insert)
-        .option("checkpointLocation", arrivals + "_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_foreach_batch(stream, insert, arrivals + "_ckpt")
 
     out = ivf_store_search_plan(spark, qn, codebook_path, lists_path)
     out.write.mode("overwrite").parquet(root + "/result")
     qn.unpersist()
     return spark.read.parquet(root + "/result")
-
-
-def _ivf_insert_stream_sql() -> str:
-    from ..operators.similarity import _ANN_IVF_SQL
-
-    return _ANN_IVF_SQL
 
 
 QUERIES = {
@@ -929,7 +889,9 @@ QUERIES = {
 }
 
 ORACLE = {
-    "streaming_trace_ingest": _TRACE_INGEST_SQL,
+    # the batch source's oracle: streamed and batch-read rotations
+    # normalize to the same rows
+    "streaming_trace_ingest": _TRACE_BATCH_SQL,
     "streaming_windowed_counts": _WINDOWED_COUNTS_SQL,
     "streaming_sessionize": _SESSIONIZE_SQL,
     "streaming_stateful_error_count": _STATEFUL_ERRORS_SQL,
@@ -939,6 +901,6 @@ ORACLE = {
     "streaming_view_purchase_join": _SS_JOIN_SQL,
     "streaming_hll_rollup": _hll_rollup_sql(),
     "streaming_incremental_dedup": _incr_stream_sql(),
-    "streaming_store_admission": _store_admission_stream_sql(),
-    "streaming_ivf_insert": _ivf_insert_stream_sql(),
+    "streaming_store_admission": _STORE_ADMISSION_SQL,
+    "streaming_ivf_insert": _ANN_IVF_SQL,
 }

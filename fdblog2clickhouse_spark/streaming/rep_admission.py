@@ -8,8 +8,8 @@ every micro-batch runs the round-11 representative design
 
   exact-dedup pre-pass (identical token streams, or identical
   quantized vectors, collapse to one group), gh classification
-  against the flat store, banded-index PRUNED store-side read,
-  new-group + touched-group scoring, and the banded → flat → members
+  against the flat store, band-index PRUNED store-side read,
+  new-group + touched-group scoring, and the index → flat → members
   append order
 
 — so the store grows O(distinct contents) under the stream and a
@@ -53,6 +53,7 @@ from ..operators.dedup_store import (
     _rep_result,
 )
 from ..sources.tables import table
+from .queries import drain_foreach_batch
 
 
 def stream_rep_admission(
@@ -60,7 +61,7 @@ def stream_rep_admission(
 ) -> DataFrame:
     """`source`'s non-base rows as four JSON rotations → four
     micro-batches (maxFilesPerTrigger=1), each admitting against the
-    persisted rep store (flat + banded index + members) and growing
+    persisted rep store (flat + band index + members) and growing
     all three — then the membership expansion, identical to
     `rep_store_admission`'s. The source's first column is its id."""
     root, g_all = _rep_lifecycle(spark, source, family, name)
@@ -87,13 +88,7 @@ def stream_rep_admission(
     stream = spark.readStream.schema(source.schema).option(
         "maxFilesPerTrigger", 1
     ).json(rotations)
-    q = (
-        stream.writeStream.foreachBatch(admit)
-        .option("checkpointLocation", rotations + "_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_foreach_batch(stream, admit, rotations + "_ckpt")
     return _rep_result(spark, family, root, g_all)
 
 

@@ -1096,7 +1096,7 @@ def test_ivf_insert_respects_pending_tombstones(spark, sf_smoke, tmp_path):
     qn.unpersist()
 
 
-def test_maybe_split_ivf_lists_decision(spark, tmp_path):
+def test_maybe_split_ivf_lists_decision(spark, tmp_path, monkeypatch):
     """VERDICT r16 #3: the maintenance pass splits when the live max
     list size crosses the trigger, down to the target; under the
     trigger it no-ops (byte-untouched); degenerate over-budget lists
@@ -1106,18 +1106,20 @@ def test_maybe_split_ivf_lists_decision(spark, tmp_path):
     before = sorted(map(tuple, spark.read.parquet(li).collect()))
 
     # under the trigger: no-op, nothing rewritten
-    ms = ann_store.maybe_split_ivf_lists(
-        spark, qn, cb, li, trigger_rows=64, target_rows=16
-    )
+    def thresholds(trigger, target):
+        monkeypatch.setattr(ann_store, "_SPLIT_TRIGGER_ROWS", trigger)
+        monkeypatch.setattr(ann_store, "_SPLIT_TARGET_ROWS", target)
+
+    thresholds(64, 16)
+    ms = ann_store.maybe_split_ivf_lists(spark, qn, cb, li)
     assert ms["triggered"] is False and ms["rounds"] == 0
     assert ms["max_list_before"] == 30
     assert sorted(map(tuple, spark.read.parquet(li).collect())) == before
 
     # over the trigger: split down to the target (possibly multiple
     # rounds — a child can exceed the budget)
-    ms = ann_store.maybe_split_ivf_lists(
-        spark, qn, cb, li, trigger_rows=20, target_rows=5
-    )
+    thresholds(20, 5)
+    ms = ann_store.maybe_split_ivf_lists(spark, qn, cb, li)
     assert ms["triggered"] is True and ms["split"] >= 1
     assert ms["max_list_after"] <= 20
     sizes = {
@@ -1132,15 +1134,14 @@ def test_maybe_split_ivf_lists_decision(spark, tmp_path):
         "vec_id long, q array<long>, nq long",
     )
     cb2, li2 = _skew_index(spark, tmp_path / "deg", qn2)
-    ms = ann_store.maybe_split_ivf_lists(
-        spark, qn2, cb2, li2, trigger_rows=4, target_rows=2
-    )
+    thresholds(4, 2)
+    ms = ann_store.maybe_split_ivf_lists(spark, qn2, cb2, li2)
     assert ms["triggered"] is True and ms["rounds"] == 1
     assert ms["split"] == 0 and ms["max_list_after"] == 10
 
 
-def test_refresh_ivf_cli_auto_split_growth(spark, tmp_path, capsys):
-    """The growth scenario end to end, with NO manual --max-list: an
+def test_refresh_ivf_cli_auto_split_growth(spark, tmp_path, capsys, monkeypatch):
+    """The growth scenario end to end: an
     index whose hot list crossed the (test-scaled) trigger gets its
     lists split by the refresh-ivf maintenance pass automatically,
     the report line says so, and full-coverage search results are
@@ -1174,9 +1175,10 @@ def test_refresh_ivf_cli_auto_split_growth(spark, tmp_path, capsys):
         )
     )
 
-    rc = cli.main(
-        ["refresh-ivf", cb, li, "--vectors", vecs, "--split-trigger", "16"]
-    )
+    # test-scaled thresholds (trigger 16 rows/list, target 4)
+    monkeypatch.setattr(ann_store, "_SPLIT_TRIGGER_ROWS", 16)
+    monkeypatch.setattr(ann_store, "_SPLIT_TARGET_ROWS", 4)
+    rc = cli.main(["refresh-ivf", cb, li, "--vectors", vecs])
     assert rc == 0
     out = capsys.readouterr().out
     assert "auto_split=" in out and "max_list_after_split=" in out
@@ -1206,9 +1208,7 @@ def test_refresh_ivf_cli_auto_split_growth(spark, tmp_path, capsys):
     # under the trigger now: a second pass still refreshes (that is
     # its job — a Lloyd step may move vectors between the children)
     # but the SPLIT decision no-ops and the bound holds
-    rc = cli.main(
-        ["refresh-ivf", cb, li, "--vectors", vecs, "--split-trigger", "16"]
-    )
+    rc = cli.main(["refresh-ivf", cb, li, "--vectors", vecs])
     assert rc == 0
     out = capsys.readouterr().out
     assert "auto_split=" not in out

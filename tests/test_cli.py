@@ -867,6 +867,144 @@ def test_admit_cli_crash_between_evidence_and_append(spark, tmp_path):
     ) == [1, 10]
 
 
+def test_admit_cli_crash_after_appends_before_evidence(
+    spark, tmp_path, monkeypatch
+):
+    """The crash window the overlapped step adds: the index and flat
+    appends finished, the evidence write had not returned, members
+    were never appended. The retry reclassifies the appended groups
+    as touched (their docs are still member-new), rescores the whole
+    rotation, and regenerates its evidence partition in full; the
+    store converges to the single-run state."""
+    import json
+
+    import pytest
+
+    from fdblog2clickhouse_spark.operators import dedup_store as ds
+
+    def write_json(name, rows):
+        p = tmp_path / name
+        with open(p, "w") as f:
+            for i, t in rows:
+                f.write(json.dumps({"doc_id": i, "text": t}) + "\n")
+        return str(p)
+
+    t10 = _T_A + " mike november"
+    t20 = _T_A + " oscar papa"
+    base = write_json("base.json", [(1, _T_A)])
+    b1 = write_json("b1.json", [(10, t10), (20, t20)])
+    corpus = write_json("corpus.json", [(1, _T_A), (10, t10), (20, t20)])
+    store = str(tmp_path / "store")
+    evidence = str(tmp_path / "evidence")
+    admit = ["admit", b1, store, "--corpus", corpus, "--evidence", evidence]
+
+    assert cli.main(["build-store", base, store]) == 0
+
+    def killed(background, foreground):
+        foreground()  # the index + flat appends complete ...
+        raise RuntimeError("killed before the evidence write returned")
+
+    monkeypatch.setattr(ds, "overlap", killed)
+    with pytest.raises(RuntimeError, match="killed"):
+        cli.main(admit)
+    monkeypatch.undo()
+    # the crash state: both new groups appended, no evidence, no members
+    assert sorted(
+        r["group_id"] for r in spark.read.parquet(store).collect()
+    ) == [1, 10, 20]
+    assert not os.path.exists(evidence)
+    assert sorted(
+        r["doc_id"] for r in spark.read.parquet(ds.members_path(store)).collect()
+    ) == [1]
+
+    assert cli.main(admit) == 0
+    pairs = sorted(
+        (r["da"], r["db"]) for r in spark.read.parquet(evidence).collect()
+    )
+    assert pairs == [(1, 10), (1, 20), (10, 20)]
+    assert sorted(
+        r["group_id"] for r in spark.read.parquet(store).collect()
+    ) == [1, 10, 20]
+    assert sorted(
+        r["doc_id"] for r in spark.read.parquet(ds.members_path(store)).collect()
+    ) == [1, 10, 20]
+
+
+def test_admit_retract_compact_refuse_old_layouts(spark, tmp_path):
+    """admit, retract and compact-store exit naming the table and
+    build-store, before any Spark write, when a rep store holds a
+    layout no code writes any more: a marker-less table, a marker
+    without the bucket-expression field, or a band index in the old
+    per-band partition layout."""
+    import glob
+    import json
+    import shutil
+
+    import pytest
+
+    from fdblog2clickhouse_spark.operators import dedup_store as ds
+
+    docs = tmp_path / "docs.json"
+    docs.write_text("".join(
+        json.dumps({"doc_id": i, "text": t}) + "\n"
+        for i, t in [(1, _T_A), (2, _T_B), (3, _T_C)]
+    ))
+    built = str(tmp_path / "built")
+    assert cli.main(["build-store", str(docs), built]) == 0
+
+    def variant(name, mutate):
+        root = tmp_path / name
+        root.mkdir()
+        store = str(root / "store")
+        for p in (built, ds.banded_path(built), ds.members_path(built)):
+            shutil.copytree(p, p.replace(built, store))
+        return store, mutate(store)
+
+    def markerless(store):
+        os.remove(os.path.join(ds.members_path(store), ds._TBL_META))
+        return ds.members_path(store)
+
+    def no_pb(store):
+        meta = os.path.join(store, ds._TBL_META)
+        with open(meta) as f:
+            lay = json.load(f)
+        lay.pop("pb")
+        with open(meta, "w") as f:
+            json.dump(lay, f)
+        return store
+
+    def per_band_index(store):
+        bands = ds.banded_path(store)
+        shutil.rmtree(bands)
+        part = os.path.join(bands, "band=0", "kb=1")
+        os.makedirs(part)
+        shutil.copy(glob.glob(os.path.join(store, "pb=*", "*.parquet"))[0], part)
+        with open(os.path.join(bands, "_index_meta.json"), "w") as f:
+            json.dump({"buckets": 2}, f)
+        return bands
+
+    def snapshot(root):
+        return sorted(
+            (p, os.path.getmtime(p))
+            for p in glob.glob(os.path.join(root, "**"), recursive=True)
+        )
+
+    for name, mutate in (
+        ("markerless", markerless), ("no_pb", no_pb), ("per_band", per_band_index),
+    ):
+        store, table = variant(name, mutate)
+        root = os.path.dirname(store)
+        for argv in (
+            ["admit", str(docs), store, "--corpus", str(docs)],
+            ["retract", store, "--id", "1"],
+            ["compact-store", store],
+        ):
+            before = snapshot(root)
+            with pytest.raises(SystemExit, match=f"{table} .*build-store"):
+                cli.main(argv)
+            assert snapshot(root) == before, (name, argv)
+
+
 def test_admit_cli_partial_append_rescores_full_rotation(spark, tmp_path):
     """A crashed signature/membership append that PARTIALLY committed
     (v2 committers / object stores) leaves SOME batch docs admitted.
@@ -1098,11 +1236,11 @@ def test_admit_cli_mega_bucket_is_linear(spark, tmp_path, capsys):
 
 def test_compact_store_rebucket_members_and_kept_count(spark, tmp_path, capsys):
     """Round-12 operational hardening, all three in one lifecycle:
-    (1) `compact-store --buckets N` re-buckets the banded index
-    mid-stream and the NEXT rotation still finds its near-dup through
-    the migrated pruned read; (2) the members table is compacted in
-    the same pass (one file-group per admit otherwise — the layout's
-    largest table, ADVICE r11); (3) a full redelivery with --evidence
+    (1) the members table is compacted by compact-store (one
+    file-group per admit otherwise — the layout's largest table,
+    ADVICE r11); (2) `bucket-store --buckets N` re-buckets all three
+    tables mid-stream and the NEXT rotation still finds its near-dup
+    through the migrated pruned read; (3) a full redelivery with --evidence
     reports the STANDING partition's pair count as '(kept)', never a
     misleading 0 (ADVICE r11)."""
     import glob
@@ -1110,9 +1248,9 @@ def test_compact_store_rebucket_members_and_kept_count(spark, tmp_path, capsys):
     import os
 
     from fdblog2clickhouse_spark.operators.dedup_store import (
-        banded_layout,
         banded_path,
         members_path,
+        table_layout,
     )
 
     t_c = "new content charlie group words xray yankee zulu november oscar"
@@ -1149,17 +1287,19 @@ def test_compact_store_rebucket_members_and_kept_count(spark, tmp_path, capsys):
     assert "rotation_pairs=0" in admit(rot2)           # fresh: no pairs
 
     # two admits appended two file-groups to members; the compaction
-    # pass must merge them AND re-bucket the banded index
+    # pass must merge them
     # every admit appends one file per TOUCHED pb partition; the
     # accumulation shows in the total (per-partition merge itself is
     # pinned by test_compact_signature_store_preserves_bucketed_layout)
     assert sum(_tbl_file_counts(members_path(store))) > 1
-    assert cli.main(["compact-store", store, "--buckets", "64"]) == 0
+    assert cli.main(["compact-store", store]) == 0
     out = capsys.readouterr().out
     assert "members_files_before=" in out
-    assert "bands_rebucketed=2->64" in out  # fresh builds auto-size (r18)
     assert max(_tbl_file_counts(members_path(store))) == 1
-    assert banded_layout(banded_path(store))["buckets"] == 64
+    assert cli.main(["bucket-store", store, "--buckets", "64"]) == 0
+    out = capsys.readouterr().out
+    assert "bands buckets: 2->64" in out  # fresh builds auto-size (r18)
+    assert table_layout(banded_path(store))["buckets"] == 64
 
     # post-migration admission still finds its near-dup through the
     # re-bucketed pruned read
@@ -1222,8 +1362,8 @@ def test_vector_store_cli_lifecycle(spark, tmp_path, capsys):
     collapse to membership (store grows O(distinct)), a near-dup
     rotation scores through the int-keyed pruned banded read,
     redelivery reports the standing partition '(kept)', and
-    compact-store (with --sort-col bv0) compacts all three tables of
-    the vector layout."""
+    compact-store (its sort key derived from the schema: bv0)
+    compacts all three tables of the vector layout."""
     import glob
     import os
 
@@ -1288,7 +1428,7 @@ def test_vector_store_cli_lifecycle(spark, tmp_path, capsys):
     }
     assert pairs == {(1, 40)}
 
-    assert cli.main(["compact-store", store, "--sort-col", "bv0"]) == 0
+    assert cli.main(["compact-store", store]) == 0
     out = capsys.readouterr().out
     assert "members_files_before=" in out and "bands_files_before=" in out
     assert max(_tbl_file_counts(store)) == 1
@@ -1337,15 +1477,16 @@ def test_admit_vectors_long_lifecycle_with_rebucket(spark, tmp_path, capsys):
     test_admit_cli_long_lifecycle_with_compaction): build + six
     rotations mixing exact-dup vectors (membership only), near-dups
     (scored), a touched-group rescore, fresh content, and a full
-    redelivery, with `compact-store --buckets 64` in the MIDDLE —
-    the rotation admitted AFTER the migration must find its near-dup
+    redelivery, with `compact-store` and `bucket-store --buckets 64`
+    in the MIDDLE — the rotation admitted AFTER the migration must
+    find its near-dup
     through the re-bucketed int-keyed pruned index. Ends by pinning
     the store at one row per distinct quantized vector, the full
     membership map, and the distinct evidence set."""
     from fdblog2clickhouse_spark.operators.dedup_store import (
-        banded_layout,
         banded_path,
         members_path,
+        table_layout,
     )
 
     def write_vecs(name, rows):
@@ -1396,14 +1537,15 @@ def test_admit_vectors_long_lifecycle_with_rebucket(spark, tmp_path, capsys):
     assert "new_docs=2 groups=2 new_groups=1" in admit(rot4)   # 50 dup + 55 new
     assert "new_docs=0" in admit(rot2)                         # redelivery no-op
 
-    # mid-stream maintenance: compact all three tables AND migrate
-    # the int-keyed banded index to a finer bucket layout
-    assert cli.main(["compact-store", store, "--buckets", "64",
-                     "--sort-col", "bv0"]) == 0
+    # mid-stream maintenance: compact all three tables, then migrate
+    # them (the int-keyed band index included) to a finer layout
+    assert cli.main(["compact-store", store]) == 0
     out = capsys.readouterr().out
     assert "members_files_before=" in out
-    assert "bands_rebucketed=2->64" in out  # fresh builds auto-size (r18)
-    assert banded_layout(banded_path(store))["buckets"] == 64
+    assert cli.main(["bucket-store", store, "--buckets", "64"]) == 0
+    out = capsys.readouterr().out
+    assert "bands buckets: 2->64" in out  # fresh builds auto-size (r18)
+    assert table_layout(banded_path(store))["buckets"] == 64
 
     # post-migration admission: the near-dup of 55 must be found
     # through the re-bucketed pruned read
@@ -1484,24 +1626,6 @@ def test_probe_recall_cli(spark, tmp_path, capsys):
     assert t1 == 16
     assert h1 > h0          # the refresh recovered recall
     assert h1 == 16         # unified C list: exact top-8 fully covered
-
-
-def test_compact_store_buckets_without_banded_index_says_so(
-    spark, tmp_path, capsys
-):
-    """--buckets on a store with no banded index sibling (an IVF
-    lists table, say) cannot re-bucket anything — the CLI must say
-    the flag was ignored rather than stay silent."""
-    store = str(tmp_path / "lists")
-    spark.createDataFrame(
-        [(i, i % 3) for i in range(20)], "n_id long, list_id long"
-    ).repartition(4).write.parquet(store)
-
-    assert cli.main(["compact-store", store, "--sort-col", "list_id",
-                     "--buckets", "64"]) == 0
-    out = capsys.readouterr().out
-    assert "buckets_ignored=no_banded_index" in out
-    assert "bands_rebucketed" not in out
 
 
 def test_retract_cli_lifecycle(spark, tmp_path, capsys):
@@ -1758,15 +1882,18 @@ def test_ivfpq_cli_soak(spark, tmp_path, capsys):
     assert "search: queries=3" in out
     assert f" n={victim} " not in out  # the takedown never answers
 
-def test_compact_store_auto_rebucket_growth(spark, tmp_path, capsys):
+def test_compact_store_auto_rebucket_growth(spark, tmp_path, capsys, monkeypatch):
     """VERDICT r15 #3: a store built small that grows past the
     rows/bucket knee is re-bucketed UP by the compact-store
-    maintenance pass itself — no manual `bucket-store` — the report
-    line says what it did, and the next admission still classifies
-    and pairs correctly through the migrated pruned reads."""
+    maintenance pass itself — no manual `bucket-store` — each of the
+    three tables by its own rows-per-bucket rule, the report line
+    says what it did, and the next admission still classifies and
+    pairs correctly through the migrated pruned reads."""
     import json
 
+    from fdblog2clickhouse_spark.operators import dedup_store as ds
     from fdblog2clickhouse_spark.operators.dedup_store import (
+        banded_path,
         members_path,
         table_layout,
     )
@@ -1794,25 +1921,29 @@ def test_compact_store_auto_rebucket_growth(spark, tmp_path, capsys):
     store = str(tmp_path / "store")
     evidence = str(tmp_path / "evidence")
 
-    # deliberately undersized layout: 1 bucket
-    assert cli.main(["build-store", base, store, "--buckets", "1"]) == 0
+    assert cli.main(["build-store", base, store]) == 0  # 2 buckets each
     capsys.readouterr()
     for rot in (rot1, rot2):
         assert cli.main(["admit", rot, store, "--corpus", corpus,
                          "--evidence", evidence]) == 0
     capsys.readouterr()
 
-    # members now holds 5 docs in 1 bucket — past a trigger of 2;
-    # the maintenance pass must re-bucket BOTH tables up by itself
-    assert cli.main(["compact-store", store, "--rebucket-trigger", "2"]) == 0
+    # test-scaled thresholds: 1 row/bucket triggers, 1 is the target.
+    # 4 groups, 5 members and 16 index rows in 2 buckets each — the
+    # maintenance pass must re-bucket all three tables up by itself
+    monkeypatch.setattr(ds, "_REBUCKET_TRIGGER_ROWS", 1)
+    monkeypatch.setattr(ds, "_REBUCKET_TARGET_ROWS", 1)
+    assert cli.main(["compact-store", store]) == 0
     out = capsys.readouterr().out
-    assert "store_rebucketed=1->" in out
-    assert "members_rebucketed=1->" in out
-    assert table_layout(store)["buckets"] > 1
-    assert table_layout(members_path(store))["buckets"] > 1
+    assert "store_rebucketed=2->4 (rows=4)" in out
+    assert "members_rebucketed=2->8 (rows=5)" in out
+    assert "bands_rebucketed=2->16 (rows=16)" in out
+    assert table_layout(store)["buckets"] == 4
+    assert table_layout(members_path(store))["buckets"] == 8
+    assert table_layout(banded_path(store))["buckets"] == 16
 
     # a SECOND pass is a no-op (trigger/target hysteresis): no report
-    assert cli.main(["compact-store", store, "--rebucket-trigger", "2"]) == 0
+    assert cli.main(["compact-store", store]) == 0
     out2 = capsys.readouterr().out
     assert "rebucketed=" not in out2
 
@@ -1822,80 +1953,3 @@ def test_compact_store_auto_rebucket_growth(spark, tmp_path, capsys):
                      "--evidence", evidence]) == 0
     out3 = capsys.readouterr().out
     assert "new_docs=1" in out3 and "rotation_pairs=1" in out3
-
-def test_compact_store_auto_rebucket_aligns_banded_index(
-    spark, tmp_path, capsys
-):
-    """When the store's auto-rebucket fires with a bucket count ABOVE
-    the banded index's persisted layout, the index is re-bucketed to
-    match in the same pass (its rows/partition is the same
-    groups/buckets arithmetic, and the r12 sweep measured
-    over-bucketing penalty-free on the pruned read) — and the next
-    admission still finds its near-dup through the fully migrated
-    layout."""
-    import json
-
-    from fdblog2clickhouse_spark.operators.dedup_store import (
-        banded_layout,
-        banded_path,
-        members_path,
-        table_layout,
-    )
-
-    def write_json(name, rows):
-        p = tmp_path / name
-        with open(p, "w") as f:
-            for i, t in rows:
-                f.write(json.dumps({"doc_id": i, "text": t}) + "\n")
-        return str(p)
-
-    base_docs = [
-        (i, f"doc{i} alpha bravo charlie delta echo foxtrot golf hotel")
-        for i in range(1, 81)
-    ]
-    rot_doc = (200, _T_A)
-    near_doc = (201, _T_A + " mike november")
-    corpus = write_json("corpus.json", base_docs + [rot_doc, near_doc])
-    base = write_json("base.json", base_docs + [rot_doc])
-    rot = write_json("rot.json", [near_doc])
-    store = str(tmp_path / "store")
-    evidence = str(tmp_path / "evidence")
-
-    assert cli.main(["build-store", base, store, "--buckets", "1"]) == 0
-    capsys.readouterr()
-    # the banded index auto-sizes from the store's group count (r18)
-    assert banded_layout(banded_path(store))["buckets"] == 2
-
-    # 81 groups in 1 bucket, trigger 1 → store jumps to 128, and the
-    # 2-bucket index must follow
-    assert cli.main(["compact-store", store, "--rebucket-trigger", "1"]) == 0
-    out = capsys.readouterr().out
-    assert "store_rebucketed=1->128" in out
-    assert "bands_rebucketed=2->128 (aligned)" in out
-    assert table_layout(store)["buckets"] == 128
-    assert banded_layout(banded_path(store))["buckets"] == 128
-    assert table_layout(members_path(store))["buckets"] == 128
-
-    assert cli.main(["admit", rot, store, "--corpus", corpus,
-                     "--evidence", evidence]) == 0
-    out2 = capsys.readouterr().out
-    assert "new_docs=1" in out2 and "rotation_pairs=1" in out2
-
-
-def test_refresh_ivf_split_flag_conflicts_error(tmp_path):
-    """ADVICE r17: --split-trigger silently dropped when combined
-    with --max-list (manual split wins the elif) or --no-auto-split
-    — both combinations must error loudly instead. Validated before
-    any Spark work, so no index fixtures are needed."""
-    import pytest
-
-    from fdblog2clickhouse_spark import cli
-
-    base = [
-        "refresh-ivf", str(tmp_path / "cb"), str(tmp_path / "lists"),
-        "--vectors", str(tmp_path / "vecs"), "--split-trigger", "100",
-    ]
-    with pytest.raises(SystemExit, match="max-list"):
-        cli.main(base + ["--max-list", "50"])
-    with pytest.raises(SystemExit, match="no-auto-split"):
-        cli.main(base + ["--no-auto-split"])

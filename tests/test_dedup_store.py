@@ -425,16 +425,13 @@ def test_rep_admission_step_replay_is_idempotent(spark, tmp_path):
     t_a = "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo lima"
     base = spark.createDataFrame([(1, t_a)], "doc_id long, text string")
     g_base = dedup_store.rep_group_frame(base)
-    reps = dedup_store.rep_reps(g_base)
     sig = str(tmp_path / "sig")
     bands = str(tmp_path / "bands")
     mem = str(tmp_path / "mem")
     ev = str(tmp_path / "ev")
-    dedup_store.rep_signature_frame(reps).write.parquet(sig)
-    dedup_store.write_banded_index(spark.read.parquet(sig), bands, "overwrite")
-    g_base.select("doc_id", "gh").join(
-        reps.select("gh", "group_id"), "gh"
-    ).select("doc_id", "gh", "group_id").write.parquet(mem)
+    dedup_store.bootstrap_rep_store(
+        spark, *dedup_store.rep_store_frames(g_base), sig, bands, mem
+    )
 
     batch = dedup_store.rep_group_frame(
         spark.createDataFrame(
@@ -516,13 +513,11 @@ def test_rep_signature_frame_equals_exploded_form(spark, sf_oracle):
 
 
 def test_banded_bucket_layout_is_persisted(spark, tmp_path):
-    """The kb partition values are a function of the bucket count the
-    index was BUILT with; readers and appenders must honor the
-    persisted layout, not the in-process constant — otherwise a
-    raised _BANDED_BUCKETS against an old index silently prunes to
-    the wrong partitions (review finding, round 11)."""
-    from pyspark.sql import functions as F
-
+    """The band index's bucket partition values are a function of the
+    bucket count it was BUILT with; readers and appenders must honor
+    the persisted layout, not in-process sizing — otherwise a changed
+    sizing rule against an old index silently prunes to the wrong
+    partitions (review finding, round 11)."""
     d = spark.createDataFrame(
         [
             (i, f"doc {i} words alpha{i} beta{i} gamma{i} delta{i}")
@@ -535,10 +530,10 @@ def test_banded_bucket_layout_is_persisted(spark, tmp_path):
     )
     bands = str(tmp_path / "bands")
     dedup_store.write_banded_index(sigs, bands, "overwrite")
-    # fresh builds auto-size from the flat signature count (r18):
-    # 14 groups → the 2-bucket floor
-    built = dedup_store.banded_buckets(bands)
-    assert built == dedup_store._auto_buckets(sigs.count())
+    # fresh builds auto-size from their own rows (r18): 14 groups × 4
+    # bands → the 2-bucket floor
+    built = dedup_store.table_layout(bands)["buckets"]
+    assert built == dedup_store._auto_buckets(4 * sigs.count())
 
     gb = dedup_store.rep_group_frame(
         spark.createDataFrame(
@@ -548,33 +543,35 @@ def test_banded_bucket_layout_is_persisted(spark, tmp_path):
     )
     batch = dedup_store.rep_signature_frame(dedup_store.rep_reps(gb))
 
-    orig = dedup_store._BANDED_BUCKETS
+    orig = dedup_store._BUILD_ROWS_PER_BUCKET
     try:
-        # operator raises the constant for NEW stores — existing
-        # index reads and appends must keep working
-        dedup_store._BANDED_BUCKETS = 256
+        # a sizing rule that would pick a far larger count for a NEW
+        # build — existing index reads and appends must keep working
+        dedup_store._BUILD_ROWS_PER_BUCKET = 1
         got = {
             r["id"]
             for r in dedup_store.pruned_store_rows(spark, bands, batch).collect()
         }
         assert 7 in got, "pruned read bucketed with the wrong layout"
         dedup_store.write_banded_index(batch, bands, "append")
-        assert dedup_store.banded_buckets(bands) == built  # layout kept
+        assert dedup_store.table_layout(bands)["buckets"] == built  # kept
         got2 = {
             r["id"]
             for r in dedup_store.pruned_store_rows(spark, bands, batch).collect()
         }
         assert 7 in got2 and 100 in got2
     finally:
-        dedup_store._BANDED_BUCKETS = orig
+        dedup_store._BUILD_ROWS_PER_BUCKET = orig
 
     # compaction carries the layout marker through the swap
-    dedup_store.compact_banded_index(spark, bands)
-    assert dedup_store.banded_buckets(bands) == built
+    dedup_store.compact_signature_store(
+        spark, bands, sort_col=dedup_store._INDEX_KEY
+    )
+    assert dedup_store.table_layout(bands)["buckets"] == built
 
 
 def test_pruned_store_rows_missing_index_raises_and_restores(spark, tmp_path):
-    """A LOST banded index must fail loudly (scoring against an
+    """A LOST band index must fail loudly (scoring against an
     implicitly-empty store side would silently drop every
     store×batch pair); a crash-interrupted compaction swap (.old
     present, path missing) is restored transparently."""
@@ -599,11 +596,11 @@ def test_pruned_store_rows_missing_index_raises_and_restores(spark, tmp_path):
     assert rows.count() > 0
     assert os.path.exists(bands) and not os.path.exists(bands + ".old")
 
-    # genuinely lost → loud failure, not silent empty
+    # genuinely lost → loud failure naming the table, not silent empty
     import shutil
 
     shutil.rmtree(bands)
-    with pytest.raises(FileNotFoundError):
+    with pytest.raises(dedup_store.StoreLayoutError, match="build-store"):
         dedup_store.pruned_store_rows(spark, bands, batch)
 
 
@@ -665,7 +662,7 @@ def test_streaming_rep_admission_tiny_and_store_state(spark, tiny_sf):
 
 
 def test_banded_index_compaction_preserves_pruned_reads(spark, tmp_path):
-    """OPTIMIZE FINAL for the banded index: after appends leave
+    """OPTIMIZE FINAL for the band index: after appends leave
     multiple files per partition (including crash-leaked DUPLICATE
     rows), compaction must collapse each partition to one file,
     retire the duplicates, and leave every pruned read's result
@@ -696,13 +693,18 @@ def test_banded_index_compaction_preserves_pruned_reads(spark, tmp_path):
     before = sorted(
         map(tuple, dedup_store.pruned_store_rows(spark, bands, batch).collect())
     )
-    n_files = len(glob.glob(os.path.join(bands, "band=*", "kb=*", "*.parquet")))
+    n_files = len(glob.glob(os.path.join(bands, "pb=*", "*.parquet")))
 
-    got = dedup_store.compact_banded_index(spark, bands)
+    def compact():
+        return dedup_store.compact_signature_store(
+            spark, bands, sort_col=dedup_store._INDEX_KEY
+        )
+
+    got = compact()
     assert got == n_files
     per_dir = [
         len(glob.glob(os.path.join(p, "*.parquet")))
-        for p in glob.glob(os.path.join(bands, "band=*", "kb=*"))
+        for p in glob.glob(os.path.join(bands, "pb=*"))
     ]
     assert per_dir and max(per_dir) == 1
     # duplicates retired permanently: raw row count equals distinct
@@ -713,20 +715,20 @@ def test_banded_index_compaction_preserves_pruned_reads(spark, tmp_path):
     )
     assert after == before
     # idempotent when already compact
-    assert dedup_store.compact_banded_index(spark, bands) == len(per_dir)
+    assert compact() == len(per_dir)
 
     # crash window: index renamed aside, new copy not yet in place
     os.rename(bands, bands + ".old")
     assert not os.path.exists(bands)
-    dedup_store.compact_banded_index(spark, bands)
+    compact()
     assert sorted(
         map(tuple, dedup_store.pruned_store_rows(spark, bands, batch).collect())
     ) == before
 
 
 def test_pruned_store_read_has_partition_filters(spark, tmp_path):
-    """The banded index's store-side read must PRUNE: the scan plan
-    carries non-empty PartitionFilters on (band, kb), so partitions
+    """The band index's store-side read must PRUNE: the scan plan
+    carries non-empty PartitionFilters on its bucket column, so partitions
     the batch's band keys cannot match are never opened — the
     admit-side scaling fix (VERDICT r10 item #4). Also pins the
     functional contract: the pruned read returns a superset of the
@@ -748,7 +750,9 @@ def test_pruned_store_read_has_partition_filters(spark, tmp_path):
     store = str(tmp_path / "store")
     sigs.write.parquet(store)
     bands = str(tmp_path / "bands")
-    dedup_store.write_banded_index(spark.read.parquet(store), bands, "overwrite")
+    dedup_store.write_banded_index(
+        spark.read.parquet(store), bands, "overwrite", buckets=16
+    )
 
     gb = dedup_store.rep_group_frame(
         spark.createDataFrame(
@@ -760,7 +764,7 @@ def test_pruned_store_read_has_partition_filters(spark, tmp_path):
     pruned = dedup_store.pruned_store_rows(spark, bands, batch)
     plan = formatted_plan(pruned)
     assert "PartitionFilters: []" not in plan, plan
-    assert "PartitionFilters:" in plan and "kb" in plan, plan
+    assert "PartitionFilters:" in plan and "pb" in plan, plan
 
     # the exact-dup doc's group must be found through the pruned read
     # (completeness: pruning is a superset of exact matches) ...
@@ -918,16 +922,14 @@ def test_emb_rep_equals_uncapped_property(spark, tmp_path_factory, vecs):
 
 
 def test_rebucket_banded_index_preserves_pruned_reads(spark, tmp_path):
-    """The bucket-count migration (VERDICT r11 #3): a store built at
-    the small default must be able to GAIN pruning granularity
-    without invalidating the index — pruned reads byte-identical
-    across a 16 → 256 re-bucket, the marker updated atomically with
-    the data (it rides in the staging dir through the same
-    rename-aside swap as the compactors), key_cols carried through,
-    and the pruned-read plan still carrying PartitionFilters with the
-    single-column isin spelling at the larger count. Raw pruned-read
-    equality is deliberately NOT the invariant — a finer layout
-    prunes MORE (fewer bucket-collision rows), which is the
+    """The bucket-count migration (VERDICT r11 #3), on the band
+    index: a store built small must be able to GAIN pruning
+    granularity without invalidating the index — the marker updated
+    atomically with the data (it rides in the staging dir through the
+    same rename-aside swap as the compactors) and the pruned-read
+    plan still carrying PartitionFilters at the larger count. Raw
+    pruned-read equality is deliberately NOT the invariant — a finer
+    layout prunes MORE (fewer bucket-collision rows), which is the
     migration's point — the admission contract is: the candidate set
     (exact band-key matches) is byte-identical, and the new read is
     a subset of the old superset."""
@@ -959,14 +961,13 @@ def test_rebucket_banded_index_preserves_pruned_reads(spark, tmp_path):
     sigs = dedup_store.rep_signature_frame(
         dedup_store.rep_reps(dedup_store.rep_group_frame(d))
     )
-    store = str(tmp_path / "store")
-    sigs.write.parquet(store)
     bands = str(tmp_path / "bands")
-    dedup_store.write_banded_index(spark.read.parquet(store), bands, "overwrite")
-    # crash-leaked duplicate rows: the rebuild-from-store retires them
+    dedup_store.write_banded_index(sigs, bands, "overwrite")
+    # crash-leaked duplicate rows: the pruned read's dropDuplicates
+    # absorbs them across the re-bucket
     dedup_store.write_banded_index(sigs.limit(4), bands, "append")
     # fresh builds auto-size (r18): a test-sized store gets the floor
-    assert dedup_store.banded_buckets(bands) == 2
+    assert dedup_store.table_layout(bands)["buckets"] == 2
 
     # batch: NEW ids carrying exact-dup texts of three store docs —
     # guaranteed band-key matches so the candidate pin is non-vacuous
@@ -997,29 +998,27 @@ def test_rebucket_banded_index_preserves_pruned_reads(spark, tmp_path):
     cands_before = cands(bands, batch)
     assert cands_before, "batch produced no candidates — test is vacuous"
 
-    got = dedup_store.rebucket_banded_index(spark, store, bands, 256)
+    got = dedup_store.bucket_table(spark, bands, 256)
     assert got == {"buckets_before": 2, "buckets_after": 256}
-    lay = dedup_store.banded_layout(bands)
-    assert lay == {"buckets": 256, "key_cols": ["bk0", "bk1", "bk2", "bk3"]}
+    assert dedup_store.table_layout(bands) == {
+        "buckets": 256, "key": dedup_store._INDEX_KEY,
+    }
     pruned = dedup_store.pruned_store_rows(spark, bands, batch)
     # finer layout prunes MORE, never less — and candidates survive
     assert pruned_rows(bands, batch) <= rows_before
     assert cands(bands, batch) == cands_before
     plan = formatted_plan(pruned)
     assert "PartitionFilters: []" not in plan, plan
-    assert "PartitionFilters:" in plan and "kb" in plan, plan
+    assert "PartitionFilters:" in plan and "pb" in plan, plan
     # higher granularity actually materialized in the hive layout
-    kbs = {
-        int(p.rsplit("kb=", 1)[1])
-        for p in glob.glob(os.path.join(bands, "band=*", "kb=*"))
+    pbs = {
+        int(p.rsplit("pb=", 1)[1])
+        for p in glob.glob(os.path.join(bands, "pb=*"))
     }
-    assert max(kbs) >= 16, "no kb value beyond the old bucket range"
-    # duplicates retired by the rebuild-from-store
-    raw = spark.read.parquet(bands)
-    assert raw.count() == raw.dropDuplicates().count()
+    assert max(pbs) >= 16, "no bucket value beyond the old bucket range"
 
     # no-op at the same count
-    assert dedup_store.rebucket_banded_index(spark, store, bands, 256) == {
+    assert dedup_store.bucket_table(spark, bands, 256) == {
         "buckets_before": 256,
         "buckets_after": 256,
     }
@@ -1028,17 +1027,14 @@ def test_rebucket_banded_index_preserves_pruned_reads(spark, tmp_path):
     # the next call restores the complete .old index first
     os.rename(bands, bands + ".old")
     assert not os.path.exists(bands)
-    dedup_store.rebucket_banded_index(spark, store, bands, 64)
-    assert dedup_store.banded_buckets(bands) == 64
+    dedup_store.bucket_table(spark, bands, 64)
+    assert dedup_store.table_layout(bands)["buckets"] == 64
     assert cands(bands, batch) == cands_before
 
     # a marker-less (crashed-build) index refuses the migration
-    os.remove(os.path.join(bands, dedup_store._BANDED_META))
-    with pytest.raises(RuntimeError, match="layout marker"):
-        dedup_store.rebucket_banded_index(spark, store, bands, 256)
-
-
-# --------------------- streaming_embedding_rep_admission (vector)
+    os.remove(os.path.join(bands, dedup_store._TBL_META))
+    with pytest.raises(dedup_store.StoreLayoutError, match="build-store"):
+        dedup_store.bucket_table(spark, bands, 256)
 
 
 def test_streaming_emb_rep_matches_oracle_and_batch(spark, sf_oracle):
@@ -1105,27 +1101,21 @@ def test_streaming_emb_rep_mega_bucket_store_linear(spark, tmp_path):
 
 
 def test_rebucket_banded_index_vector_family(spark, tmp_path):
-    """The migration is family-agnostic: a VECTOR store's banded
-    index (int sign-band keys, bv0..bv5 layout marker) re-buckets
-    16 → 64 with key_cols carried through the marker and the
-    candidate set invariant."""
+    """The migration is family-agnostic: a VECTOR store's band index
+    (int sign-band keys, one band hash per (band, band_key))
+    re-buckets 2 → 64 with the candidate set invariant."""
     rows = [(i, [0.001 * i, -0.002 * i, 0.003, 0.0005 * (i % 7)]) for i in range(1, 40)]
     _write_embeddings(spark, str(tmp_path), rows)
     from fdblog2clickhouse_spark.operators.dedup import _quantized
 
     g = dedup_store.emb_rep_group_frame(_quantized(spark, str(tmp_path)))
     sigs = dedup_store.emb_rep_signature_frame(dedup_store.rep_reps(g, "q"))
-    store = str(tmp_path / "vstore")
-    sigs.write.parquet(store)
     bands = str(tmp_path / "vbands")
     dedup_store.write_banded_index(
-        spark.read.parquet(store), bands, "overwrite",
-        key_cols=dedup_store._EMB_KEY_COLS,
+        sigs, bands, "overwrite", key_cols=dedup_store._EMB_KEY_COLS
     )
-    assert dedup_store.banded_layout(bands) == {
-        # auto-sized fresh build (r18): test-sized store → the floor
-        "buckets": 2, "key_cols": dedup_store._EMB_KEY_COLS,
-    }
+    # auto-sized fresh build (r18): test-sized store → the floor
+    assert dedup_store.table_layout(bands)["buckets"] == 2
 
     batch = sigs.limit(5)
 
@@ -1137,7 +1127,9 @@ def test_rebucket_banded_index_vector_family(spark, tmp_path):
             map(
                 tuple,
                 dedup_store.candidates_from_rows(
-                    dedup_store.pruned_store_rows(spark, bands, batch),
+                    dedup_store.pruned_store_rows(
+                        spark, bands, batch, dedup_store._EMB_KEY_COLS
+                    ),
                     rows_,
                     len(dedup_store._EMB_KEY_COLS),
                 ).collect(),
@@ -1146,11 +1138,9 @@ def test_rebucket_banded_index_vector_family(spark, tmp_path):
 
     before = cands()
     assert before, "vector batch produced no candidates — test is vacuous"
-    got = dedup_store.rebucket_banded_index(spark, store, bands, 64)
+    got = dedup_store.bucket_table(spark, bands, 64)
     assert got == {"buckets_before": 2, "buckets_after": 64}
-    assert dedup_store.banded_layout(bands) == {
-        "buckets": 64, "key_cols": dedup_store._EMB_KEY_COLS,
-    }
+    assert dedup_store.table_layout(bands)["buckets"] == 64
     assert cands() == before
 
 
@@ -1206,21 +1196,17 @@ _RETRACT_DOCS = [
 
 
 def _build_rep_store(spark, tmp_path):
-    """Base store over _RETRACT_DOCS via the same helpers the proof
+    """Base store over _RETRACT_DOCS via the same bootstrap the proof
     ops use. Returns (sig, bands, mem) paths."""
-    import os
-
     d = spark.createDataFrame(_RETRACT_DOCS, "doc_id long, text string")
-    g = dedup_store.rep_group_frame(d)
-    reps = dedup_store.rep_reps(g)
     sig = str(tmp_path / "signatures")
     bands = str(tmp_path / "bands")
     mem = str(tmp_path / "members")
-    dedup_store.rep_signature_frame(reps).write.parquet(sig)
-    dedup_store.write_banded_index(spark.read.parquet(sig), bands, "overwrite")
-    g.select("doc_id", "gh").join(
-        reps.select("gh", "group_id"), "gh"
-    ).select("doc_id", "gh", "group_id").write.parquet(mem)
+    dedup_store.bootstrap_rep_store(
+        spark,
+        *dedup_store.rep_store_frames(dedup_store.rep_group_frame(d)),
+        sig, bands, mem,
+    )
     return sig, bands, mem
 
 
@@ -1322,14 +1308,14 @@ def test_retracted_id_cannot_readmit_until_fold(spark, tmp_path):
 
 
 def test_retraction_fold_preserves_pruned_reads(spark, tmp_path):
-    """After a re-election + fold, the banded index (rebuilt at its
+    """After a re-election + fold, the band index (folded at its
     persisted layout) serves exactly the live groups with the new
     ids, and the layout marker survives."""
     sig, bands, mem = _build_rep_store(spark, tmp_path)
-    lay_before = dedup_store.banded_layout(bands)
+    lay_before = dedup_store.table_layout(bands)
     dedup_store.retract_docs(spark, sig, mem, _ids(spark, 1, 3))
     dedup_store.fold_retractions(spark, sig, bands, mem)
-    assert dedup_store.banded_layout(bands) == lay_before
+    assert dedup_store.table_layout(bands) == lay_before
 
     batch_sigs = spark.read.parquet(sig)  # probe with the store itself
     got = dedup_store.pruned_store_rows(spark, bands, batch_sigs)
@@ -1437,10 +1423,12 @@ def test_rep_admission_redelivered_tombstoned_doc(spark, tmp_path):
 
 
 def test_fold_refuses_markerless_banded_index(spark, tmp_path):
-    """ADVICE r13: an index dir WITHOUT a layout marker (crashed
-    overwrite build) must fail the fold loudly — folding past it
-    would retire the gdelta while stale band rows keyed by retired
-    ids stay behind unfiltered. A MISSING index dir stays a no-op."""
+    """ADVICE r13: an index WITHOUT the layout marker (crashed
+    overwrite build, or an index in a layout no code writes any more)
+    must fail the fold loudly, naming the table and build-store —
+    folding past it would retire the gdelta while stale band rows
+    keyed by retired ids stay behind unfiltered. A MISSING index dir
+    is refused the same way."""
     import os
     import shutil
 
@@ -1448,17 +1436,16 @@ def test_fold_refuses_markerless_banded_index(spark, tmp_path):
 
     sig, bands, mem = _build_rep_store(spark, tmp_path)
     dedup_store.retract_docs(spark, sig, mem, _ids(spark, 1))
-    os.remove(os.path.join(bands, "_index_meta.json"))
-    with pytest.raises(RuntimeError, match="no layout marker"):
+    os.remove(os.path.join(bands, dedup_store._TBL_META))
+    with pytest.raises(dedup_store.StoreLayoutError, match=f"{bands}.*build-store"):
         dedup_store.fold_retractions(spark, sig, bands, mem)
     # sidecars still stand — nothing was retired
     assert os.path.isdir(dedup_store.gdelta_path(sig))
 
-    # with the index dir gone entirely, the fold proceeds markerless
     shutil.rmtree(bands)
-    assert dedup_store.fold_retractions(spark, sig, bands, mem)[
-        "folded"
-    ] is True
+    with pytest.raises(dedup_store.StoreLayoutError, match="is missing"):
+        dedup_store.fold_retractions(spark, sig, bands, mem)
+    assert os.path.isdir(dedup_store.gdelta_path(sig))
 
 
 def test_retraction_oracle_parity(spark, sf_oracle):
@@ -1814,8 +1801,9 @@ def test_sidecar_retirement_removes_swap_remnants(spark, tmp_path):
 # signature store's gh scan and the members doc_id projection. The
 # bucketed layout bounds both by the batch's bucket footprint; these
 # tests pin the layout marker discipline, the pruned read's
-# exactness AND its physical read bound, the legacy fallback, the
-# migration swap, and compaction/fold layout preservation.
+# exactness AND its physical read bound, the refusal of layouts no
+# code writes, the re-bucket swap, and compaction/fold layout
+# preservation.
 
 
 def _bucket_vals(ds, keys, col, buckets):
@@ -1840,7 +1828,7 @@ def test_bucketed_table_roundtrip_and_pruned_read(spark, tmp_path):
         [(i, f"gh{i}") for i in range(200)], "group_id long, gh string"
     )
     ds.write_table(df, path, "overwrite", key="gh", buckets=8)
-    assert ds.table_layout(path) == {"buckets": 8, "key": "gh", "pb": "xxh64"}
+    assert ds.table_layout(path) == {"buckets": 8, "key": "gh"}
     full = ds.read_table(spark, path)
     assert sorted(full.columns) == ["gh", "group_id"]
     assert full.count() == 200
@@ -1863,18 +1851,30 @@ def test_bucketed_table_roundtrip_and_pruned_read(spark, tmp_path):
     assert len(opened) <= len(vals)
 
 
-def test_pruned_table_legacy_falls_back_to_full_scan(spark, tmp_path):
+def test_pruned_table_refuses_markerless_table(spark, tmp_path):
+    """A table without the layout marker (the flat layout no code
+    writes any more) is refused by every rep-store read and write,
+    naming the table and build-store, and is left as it was."""
+    import pytest
+
     from fdblog2clickhouse_spark.operators import dedup_store as ds
 
-    path = str(tmp_path / "legacy")
+    path = str(tmp_path / "flat")
     df = spark.createDataFrame(
         [(i, f"gh{i}") for i in range(20)], "group_id long, gh string"
     )
     df.write.parquet(path)
     keys = spark.createDataFrame([("gh3",)], "gh string")
-    assert ds.table_layout(path) is None
-    pr = ds.pruned_table(spark, path, keys)
-    assert pr.count() == 20  # full scan — correctness never needs the layout
+    for call in (
+        lambda: ds.table_layout(path),
+        lambda: ds.pruned_table(spark, path, keys),
+        lambda: ds.batch_bucket_vals(keys, [(path, "gh")]),
+        lambda: ds.write_table(df, path, "append"),
+        lambda: ds.bucket_table(spark, path, 4),
+    ):
+        with pytest.raises(ds.StoreLayoutError, match=f"{path}.*build-store"):
+            call()
+    assert spark.read.parquet(path).count() == 20
 
 
 def test_auto_buckets_sizing():
@@ -1927,13 +1927,11 @@ def test_write_table_build_auto_sizes_buckets(spark, tmp_path):
 def test_batch_bucket_vals_matches_per_table_collects(spark, tmp_path):
     """The combined one-job footprint collect (r18) returns exactly
     the bucket ids `pruned_table`'s own per-table collect derives —
-    same marker-derived expression — and yields None for a legacy
-    table (no marker), which keeps the full-scan fallback."""
+    same marker-derived expression."""
     from fdblog2clickhouse_spark.operators import dedup_store as ds
 
     mem = str(tmp_path / "members")
     sig = str(tmp_path / "sigs")
-    legacy = str(tmp_path / "legacy")
     mems = spark.createDataFrame(
         [(i, f"gh{i % 7}", i) for i in range(40)],
         "doc_id long, gh string, group_id long",
@@ -1943,19 +1941,15 @@ def test_batch_bucket_vals_matches_per_table_collects(spark, tmp_path):
     )
     ds.write_table(mems, mem, "overwrite", key="doc_id", buckets=8)
     ds.write_table(sigs, sig, "overwrite", key="gh", buckets=4)
-    mems.write.parquet(legacy)
 
     batch = spark.createDataFrame(
         [(3, "gh3"), (11, "gh11"), (25, "gh25")], "doc_id long, gh string"
     )
-    got = ds.batch_bucket_vals(
-        batch, [(mem, "doc_id"), (sig, "gh"), (legacy, "doc_id")]
-    )
+    got = ds.batch_bucket_vals(batch, [(mem, "doc_id"), (sig, "gh")])
     # reference: what pruned_table's internal collect computes
-    for vals, (path, kc) in zip(got[:2], [(mem, "doc_id"), (sig, "gh")]):
-        lay = ds.table_layout(path)
+    for vals, (path, kc) in zip(got, [(mem, "doc_id"), (sig, "gh")]):
         pb = ds._tbl_pb_expr(
-            batch.schema[kc].dataType, kc, lay["buckets"], lay["pb"]
+            batch.schema[kc].dataType, kc, ds.table_layout(path)["buckets"]
         )
         ref = sorted(
             r[0]
@@ -1963,7 +1957,6 @@ def test_batch_bucket_vals_matches_per_table_collects(spark, tmp_path):
             if r[0] is not None
         )
         assert vals == ref
-    assert got[2] is None  # legacy: no marker → caller falls back
     # and the pruned read fed with the precomputed vals matches the
     # self-collected one
     a = ds.pruned_table(spark, mem, batch.select("doc_id"), vals=got[0])
@@ -1975,7 +1968,7 @@ def test_batch_bucket_vals_matches_per_table_collects(spark, tmp_path):
 
 def test_write_table_append_honors_persisted_layout(spark, tmp_path):
     """Appends bucket with the MARKER's layout (never in-process
-    defaults), and a legacy dir's append stays flat."""
+    defaults)."""
     import glob
     import os
 
@@ -1987,23 +1980,16 @@ def test_write_table_append_honors_persisted_layout(spark, tmp_path):
     )
     ds.write_table(mk(0, 50), path, "overwrite", key="gh", buckets=4)
     ds.write_table(mk(50, 80), path, "append")
-    assert ds.table_layout(path) == {"buckets": 4, "key": "gh", "pb": "xxh64"}
+    assert ds.table_layout(path) == {"buckets": 4, "key": "gh"}
     assert ds.read_table(spark, path).count() == 80
     # no stray top-level files: every row lives under a pb dir
     assert glob.glob(os.path.join(path, "*.parquet")) == []
 
-    legacy = str(tmp_path / "legacy")
-    mk(0, 10).write.parquet(legacy)
-    ds.write_table(mk(10, 15), legacy, "append")
-    assert ds.table_layout(legacy) is None
-    assert glob.glob(os.path.join(legacy, "pb=*")) == []
-    assert ds.read_table(spark, legacy).count() == 15
-
 
 def test_bucket_table_migration_and_rebucket(spark, tmp_path):
-    """Legacy → bucketed migration, then a re-bucket to a new count:
-    rows invariant both times, the swap leaves no .old remnant, and
-    pruned reads stay exact at the new layout."""
+    """Re-bucket to a new count and back to the same one: rows
+    invariant, the swap leaves no .old remnant, the same count is a
+    no-op, and pruned reads stay exact at the new layout."""
     import os
 
     from fdblog2clickhouse_spark.operators import dedup_store as ds
@@ -2013,14 +1999,15 @@ def test_bucket_table_migration_and_rebucket(spark, tmp_path):
         [(i, f"gh{i % 7}", i % 7) for i in range(100)],
         "doc_id long, gh string, group_id long",
     )
-    df.write.parquet(path)
-    r = ds.bucket_table(spark, path, "doc_id", 8)
-    assert r == {"buckets_before": None, "buckets_after": 8}
-    assert ds.table_layout(path) == {"buckets": 8, "key": "doc_id", "pb": "xxh64"}
-    assert ds.read_table(spark, path).count() == 100
-    r2 = ds.bucket_table(spark, path, "doc_id", 32)
+    ds.write_table(df, path, "overwrite", key="doc_id", buckets=8)
+    r2 = ds.bucket_table(spark, path, 32)
     assert r2 == {"buckets_before": 8, "buckets_after": 32}
+    assert ds.table_layout(path) == {"buckets": 32, "key": "doc_id"}
+    assert ds.read_table(spark, path).count() == 100
     assert not os.path.exists(path + ".old")
+    assert ds.bucket_table(spark, path, 32) == {
+        "buckets_before": 32, "buckets_after": 32,
+    }
     keys = spark.createDataFrame([(13,), (77,)], "doc_id long")
     got = {
         r["doc_id"]
@@ -2057,7 +2044,7 @@ def test_compact_signature_store_preserves_bucketed_layout(spark, tmp_path):
     assert max(per_dir) > 1
     n = ds.compact_signature_store(spark, path, sort_col="bk0")
     assert n == sum(per_dir)
-    assert ds.table_layout(path) == {"buckets": 4, "key": "gh", "pb": "xxh64"}
+    assert ds.table_layout(path) == {"buckets": 4, "key": "gh"}
     per_dir_after = [
         len(glob.glob(os.path.join(d, "*.parquet")))
         for d in glob.glob(os.path.join(path, "pb=*"))
@@ -2110,8 +2097,8 @@ def test_fold_retractions_preserves_bucketed_layout(spark, tmp_path):
     # the retracted singleton's rows
     assert fold["sig_parts"] == 1 and fold["mem_parts"] == 1
     assert 1 <= fold["index_parts"] <= 4
-    assert ds.table_layout(sig) == {"buckets": 4, "key": "gh", "pb": "xxh64"}
-    assert ds.table_layout(mem) == {"buckets": 4, "key": "doc_id", "pb": "xxh64"}
+    assert ds.table_layout(sig) == {"buckets": 4, "key": "gh"}
+    assert ds.table_layout(mem) == {"buckets": 4, "key": "doc_id"}
     assert not os.path.exists(sig + ".old") and not os.path.exists(mem + ".old")
     m = ds.read_table(spark, mem)
     assert m.where(F.col("doc_id") == 3).count() == 0
@@ -2152,70 +2139,38 @@ def test_integral_bucketing_survives_strided_id_spaces(spark, tmp_path):
     assert got == [128, 640]
 
 
-def test_pre_r15_mod_marker_reads_with_its_own_expression(spark, tmp_path):
-    """A marker WITHOUT the pb field is the raw-pmod layout
-    (backward compat): appends and pruned reads must reproduce that
-    exact expression — bucketing the batch keys with xxh64 against
-    pmod-written data would prune to partitions where the matching
-    rows don't live."""
+def test_pre_xxh64_marker_is_refused(spark, tmp_path):
+    """A marker WITHOUT the pb field names the raw-pmod bucket
+    expression no code writes any more: reads, appends and
+    re-bucketing refuse it naming the table and build-store (never
+    guessing the expression), and leave the table as it was."""
     import json
     import os
 
+    import pytest
+
     from fdblog2clickhouse_spark.operators import dedup_store as ds
 
-    path = str(tmp_path / "legacy_mod")
+    path = str(tmp_path / "old_marker")
     df = spark.createDataFrame(
         [(i, f"g{i}") for i in range(40)], "doc_id long, gh string"
     )
-    # write the data the way a pre-r15 build did: raw pmod buckets
-    pb = ds._tbl_pb_expr(df.schema["doc_id"].dataType, "doc_id", 4, "mod")
-    (
-        df.withColumn(ds._TBL_PB, pb)
-        .repartition(ds._TBL_PB)
-        .write.partitionBy(ds._TBL_PB)
-        .parquet(path)
-    )
+    ds.write_table(df, path, "overwrite", key="doc_id", buckets=4)
     with open(os.path.join(path, ds._TBL_META), "w") as f:
         json.dump(
             {"buckets": 4, "key": "doc_id", "schema": df.schema.json()}, f
         )
-    assert ds.table_layout(path)["pb"] == "mod"
-
     keys = spark.createDataFrame([(7,), (22,)], "doc_id long")
-    pr = ds.pruned_table(spark, path, keys)
-    got = sorted(
-        r["doc_id"] for r in pr.join(keys, "doc_id", "left_semi").collect()
-    )
-    assert got == [7, 22]
-    # physical: the opened dirs are the MOD buckets (7%4=3, 22%4=2)
-    opened = {f.split("/pb=")[1].split("/")[0] for f in pr.inputFiles()}
-    assert opened <= {"2", "3"}
-
-    # an append lands in the mod buckets too (marker never drifts)
-    ds.write_table(
-        spark.createDataFrame([(41, "g41")], "doc_id long, gh string"),
-        path,
-        "append",
-    )
-    assert ds.table_layout(path)["pb"] == "mod"
-    keys2 = spark.createDataFrame([(41,)], "doc_id long")
-    pr2 = ds.pruned_table(spark, path, keys2)
-    assert [r["doc_id"] for r in pr2.join(keys2, "doc_id", "left_semi").collect()] == [41]
-    opened2 = {f.split("/pb=")[1].split("/")[0] for f in pr2.inputFiles()}
-    assert opened2 == {"1"}  # 41 % 4
-
-    # bucket_table migrates the expression version even at the same
-    # bucket count/key, and pruned reads stay invariant
-    r = ds.bucket_table(spark, path, "doc_id", 4)
-    assert r == {"buckets_before": 4, "buckets_after": 4}
-    assert ds.table_layout(path)["pb"] == "xxh64"
-    got3 = sorted(
-        r2["doc_id"]
-        for r2 in ds.pruned_table(spark, path, keys)
-        .join(keys, "doc_id", "left_semi")
-        .collect()
-    )
-    assert got3 == [7, 22]
+    for call in (
+        lambda: ds.pruned_table(spark, path, keys),
+        lambda: ds.write_table(df, path, "append"),
+        lambda: ds.bucket_table(spark, path, 8),
+        lambda: ds.maybe_rebucket_table(spark, path),
+        lambda: ds.compact_signature_store(spark, path, sort_col="doc_id"),
+    ):
+        with pytest.raises(ds.StoreLayoutError, match=f"{path}.*build-store"):
+            call()
+    assert spark.read.parquet(path).count() == 40
 
 
 def test_admission_step_heals_crashed_maintenance_swap(spark, tmp_path):
@@ -2269,9 +2224,10 @@ def test_admission_step_heals_crashed_maintenance_swap(spark, tmp_path):
     assert not os.path.isdir(sig + ".old") and not os.path.isdir(mem + ".old")
 
 def _build_bucketed_rep_store(spark, tmp_path, buckets=4, extra_docs=24):
-    """_build_rep_store in the key-bucketed layout, padded with
+    """_build_rep_store at explicit bucket counts, padded with
     `extra_docs` singleton docs so several buckets carry rows the
-    fold must NOT touch."""
+    fold must NOT touch. The index gets 4× the buckets (4 band rows
+    per group: the same rows per bucket as the other two tables)."""
     docs = list(_RETRACT_DOCS) + [
         (100 + i, f"pad{i} one two three four five six seven eight nine")
         for i in range(extra_docs)
@@ -2287,7 +2243,8 @@ def _build_bucketed_rep_store(spark, tmp_path, buckets=4, extra_docs=24):
         key="gh", buckets=buckets,
     )
     dedup_store.write_banded_index(
-        dedup_store.read_table(spark, sig), bands, "overwrite"
+        dedup_store.read_table(spark, sig), bands, "overwrite",
+        buckets=4 * buckets,
     )
     dedup_store.write_table(
         g.select("doc_id", "gh")
@@ -2486,11 +2443,11 @@ def test_heal_table_fold_crash_windows(spark, tmp_path):
     assert ds.read_table(spark, path).count() == total
 
 
-def test_maybe_rebucket_table_decision(spark, tmp_path):
+def test_maybe_rebucket_table_decision(spark, tmp_path, monkeypatch):
     """VERDICT r15 #3: the maintenance pass re-buckets UP when
     rows/bucket crosses the trigger, straight to the target ratio's
-    power of two; under the trigger it no-ops; legacy tables are
-    never auto-migrated."""
+    power of two; under the trigger it no-ops; a marker-less table is
+    refused, never auto-migrated."""
     from fdblog2clickhouse_spark.operators import dedup_store as ds
 
     path = str(tmp_path / "tbl")
@@ -2501,18 +2458,18 @@ def test_maybe_rebucket_table_decision(spark, tmp_path):
     before = {tuple(r) for r in ds.read_table(spark, path).collect()}
 
     # under the trigger: no-op
-    rb = ds.maybe_rebucket_table(
-        spark, path, trigger_rows=64, target_rows=16
-    )
+    monkeypatch.setattr(ds, "_REBUCKET_TRIGGER_ROWS", 64)
+    monkeypatch.setattr(ds, "_REBUCKET_TARGET_ROWS", 16)
+    rb = ds.maybe_rebucket_table(spark, path)
     assert rb == {
         "rebucketed": False, "rows": 64,
         "buckets_before": 2, "buckets_after": 2,
     }
 
     # over the trigger: jump to the target ratio
-    rb = ds.maybe_rebucket_table(
-        spark, path, trigger_rows=16, target_rows=4
-    )
+    monkeypatch.setattr(ds, "_REBUCKET_TRIGGER_ROWS", 16)
+    monkeypatch.setattr(ds, "_REBUCKET_TARGET_ROWS", 4)
+    rb = ds.maybe_rebucket_table(spark, path)
     assert rb["rebucketed"] is True
     assert rb["buckets_before"] == 2 and rb["buckets_after"] == 16
     assert ds.table_layout(path)["buckets"] == 16
@@ -2520,15 +2477,17 @@ def test_maybe_rebucket_table_decision(spark, tmp_path):
     keys = spark.createDataFrame([(7,)], "doc_id long")
     assert ds.pruned_table(spark, path, keys).where("doc_id = 7").count() == 1
 
-    # legacy table: never auto-migrated
-    legacy = str(tmp_path / "legacy")
-    df.write.parquet(legacy)
-    rb = ds.maybe_rebucket_table(spark, legacy, trigger_rows=1)
-    assert rb["rebucketed"] is False and rb["rows"] is None
+    # marker-less table: refused
+    import pytest
+
+    flat = str(tmp_path / "flat")
+    df.write.parquet(flat)
+    with pytest.raises(ds.StoreLayoutError, match="build-store"):
+        ds.maybe_rebucket_table(spark, flat)
 
 def test_heal_table_fold_banded_index_reader(spark, tmp_path):
-    """The banded index's crash window: a granular index fold that
-    died between its two renames leaves a (band, kb) partition only
+    """The band index's crash window: a granular index fold that
+    died between its two renames leaves a bucket partition only
     at its '.bfold-' aside — pruned_store_rows must heal before
     planning or the batch's candidates from that partition silently
     vanish (a missing dir is skipped by the explicit-dir listing)."""
@@ -2545,11 +2504,11 @@ def test_heal_table_fold_banded_index_reader(spark, tmp_path):
     }
     assert want  # probe with the store itself: every group answers
 
-    # crash state: one kb dir renamed aside, journal present
-    kb_dir = glob.glob(os.path.join(bands, "band=*", "kb=*"))[0]
-    parent, leaf = os.path.split(kb_dir)
-    rel = os.path.join(os.path.basename(parent), leaf)
-    os.rename(kb_dir, os.path.join(parent, storage._BFOLD_PREFIX + leaf))
+    # crash state: one bucket dir renamed aside, journal present
+    pb_dir = glob.glob(os.path.join(bands, "pb=*"))[0]
+    parent, leaf = os.path.split(pb_dir)
+    rel = leaf
+    os.rename(pb_dir, os.path.join(parent, storage._BFOLD_PREFIX + leaf))
     with open(os.path.join(bands, storage._FOLD_JOURNAL), "w") as f:
         json.dump({"dirs": [rel]}, f)
 
@@ -2557,46 +2516,9 @@ def test_heal_table_fold_banded_index_reader(spark, tmp_path):
         r["id"] for r in ds.pruned_store_rows(spark, bands, batch_sigs).collect()
     }
     assert got == want  # healed before planning — nothing vanished
-    assert os.path.isdir(kb_dir)
+    assert os.path.isdir(pb_dir)
     assert not os.path.exists(os.path.join(bands, storage._FOLD_JOURNAL))
 
-
-def test_fold_mixed_legacy_and_bucketed_layouts(spark, tmp_path):
-    """A store migrated halfway (bucketed members, legacy flat sigs)
-    folds each table by its own layout: the legacy sig store takes
-    the full layout-preserving rewrite (-1), the bucketed members
-    fold granularly, and the live views match either way."""
-    from fdblog2clickhouse_spark.operators import dedup_store as ds
-
-    d = spark.createDataFrame(_RETRACT_DOCS, "doc_id long, text string")
-    g = ds.rep_group_frame(d)
-    reps = ds.rep_reps(g)
-    sig = str(tmp_path / "signatures")
-    bands = str(tmp_path / "bands")
-    mem = str(tmp_path / "members")
-    ds.rep_signature_frame(reps).write.parquet(sig)  # legacy flat
-    ds.write_banded_index(spark.read.parquet(sig), bands, "overwrite")
-    ds.write_table(
-        g.select("doc_id", "gh")
-        .join(reps.select("gh", "group_id"), "gh")
-        .select("doc_id", "gh", "group_id"),
-        mem,
-        "overwrite",
-        key="doc_id",
-        buckets=4,
-    )
-    ds.retract_docs(spark, sig, mem, _ids(spark, 1, 3))
-    live_m = {
-        tuple(r) for r in ds.live_members(spark, mem, sig).collect()
-    }
-    fold = ds.fold_retractions(spark, sig, bands, mem)
-    assert fold["folded"] is True
-    assert fold["sig_parts"] == -1 and fold["index_parts"] == -1
-    assert fold["mem_parts"] >= 1
-    assert {
-        tuple(r) for r in ds.read_table(spark, mem).collect()
-    } == live_m
-    assert ds.live_store_sigs(spark, sig).count() == 2
 
 @settings(
     max_examples=5,
@@ -2777,8 +2699,8 @@ def test_fold_keys_fast_path_skips_table_scans(spark, tmp_path, monkeypatch):
     """With the bucket-key sidecar present, the granular fold's
     discovery never reads the raw tables whole: read_table is not
     called at all (discovery = recorded keys → candidate partitions
-    → exact scan WITHIN them; the banded pairs come from the PRUNED
-    sig read), and the result still materializes exactly the live
+    → exact scan WITHIN them; the index's band hashes come from the
+    PRUNED sig read), and the result still materializes exactly the live
     views."""
     sig, bands, mem = _build_bucketed_rep_store(spark, tmp_path)
     dedup_store.retract_docs(spark, sig, mem, _ids(spark, 1, 3, 14))
@@ -2810,44 +2732,34 @@ def test_fold_keys_fast_path_skips_table_scans(spark, tmp_path, monkeypatch):
     } == live_m
 
 
-def test_fold_without_keys_sidecar_falls_back_to_scan(spark, tmp_path):
-    """A pre-schema-change retraction (gdelta present, keys absent)
-    folds through the legacy scans — byte-for-byte the same end
-    state as the fast path, and a retraction COMPOSING onto such a
-    sidecar skips writing keys (the completeness rule) so the fold
-    never trusts a partial key set."""
+def test_gdelta_without_keys_sidecar_is_refused(spark, tmp_path):
+    """A gdelta without its bucket-key sidecar is a sidecar pair no
+    code writes any more (retract_docs writes keys first and the fold
+    retires them last): a further retraction and the fold both refuse
+    it, naming build-store, and leave the sidecars as they were."""
     import os
     import shutil
+
+    import pytest
 
     sig, bands, mem = _build_bucketed_rep_store(spark, tmp_path)
     dedup_store.retract_docs(spark, sig, mem, _ids(spark, 1))
     keys_p = dedup_store.gdelta_keys_path(sig)
-    shutil.rmtree(keys_p)  # simulate a pre-schema-change retraction
+    shutil.rmtree(keys_p)
 
-    # composing retraction must NOT write a (partial) keys sidecar
-    dedup_store.retract_docs(spark, sig, mem, _ids(spark, 3))
+    with pytest.raises(dedup_store.StoreLayoutError, match="build-store"):
+        dedup_store.retract_docs(spark, sig, mem, _ids(spark, 3))
+    with pytest.raises(dedup_store.StoreLayoutError, match="build-store"):
+        dedup_store.fold_retractions(spark, sig, bands, mem)
     assert not os.path.exists(keys_p)
-
-    live_s = {
-        tuple(r) for r in dedup_store.live_store_sigs(spark, sig).collect()
-    }
-    live_m = {
-        tuple(r) for r in dedup_store.live_members(spark, mem, sig).collect()
-    }
-    fold = dedup_store.fold_retractions(spark, sig, bands, mem)
-    assert fold["folded"] is True and fold["sig_parts"] >= 1
-    assert {
-        tuple(r) for r in dedup_store.read_table(spark, sig).collect()
-    } == live_s
-    assert {
-        tuple(r) for r in dedup_store.read_table(spark, mem).collect()
-    } == live_m
+    assert os.path.isdir(dedup_store.gdelta_path(sig))
+    assert os.path.isdir(dedup_store.tombstones_path(mem))
 
 
 def test_fold_index_falls_back_when_dropped_sigs_already_folded(
     spark, tmp_path
 ):
-    """The one crash state where deriving banded pairs from the sig
+    """The one crash state where deriving band hashes from the sig
     store would LEAK: sig fold completed (dropped group's sig rows
     gone), index fold not, re-run. The recorded gh then has no sig
     rows left — the index fold must detect that and fall back to its
@@ -3003,7 +2915,7 @@ def test_fold_aborts_cleanly_when_reader_heal_rolls_back(
         if storage._BFOLD_PREFIX in os.path.basename(dst) and not fired:
             # the reader in another process: full heal of the TABLE
             # whose partition is mid-swap (walk up from the aside to
-            # the dir holding the fold journal — band/kb rels nest)
+            # the dir holding the fold journal)
             d = os.path.dirname(dst)
             while d and not os.path.exists(
                 os.path.join(d, storage._FOLD_JOURNAL)
@@ -3100,7 +3012,7 @@ def test_fold_emptied_partition_not_resurrected_by_racing_heal(
     assert dedup_store.read_table(spark, path).count() == survivors
 
 
-def test_marker_row_cache_lifecycle(spark, tmp_path):
+def test_marker_row_cache_lifecycle(spark, tmp_path, monkeypatch):
     """VERDICT r17 #5: the layout marker caches the EXACT row count
     where writers know it for free — set by full rewrites (footer
     metadata), invalidated by appends, adjusted O(retracted) by the
@@ -3125,18 +3037,16 @@ def test_marker_row_cache_lifecycle(spark, tmp_path):
     assert dedup_store._marker_rows(path) is None
 
     # the gate's fallback counts once and re-persists
-    rb = dedup_store.maybe_rebucket_table(
-        spark, path, trigger_rows=1000, target_rows=100
-    )
+    monkeypatch.setattr(dedup_store, "_REBUCKET_TRIGGER_ROWS", 1000)
+    monkeypatch.setattr(dedup_store, "_REBUCKET_TARGET_ROWS", 100)
+    rb = dedup_store.maybe_rebucket_table(spark, path)
     assert rb["rows"] == 40
     assert dedup_store._marker_rows(path) == 40
 
     # the gate itself now reads the marker (no scan): poison the
     # cache deliberately and observe the gate believe it
     dedup_store._set_marker_rows(path, 7)
-    rb = dedup_store.maybe_rebucket_table(
-        spark, path, trigger_rows=1000, target_rows=100
-    )
+    rb = dedup_store.maybe_rebucket_table(spark, path)
     assert rb["rows"] == 7
     dedup_store._set_marker_rows(path, 40)
 
@@ -3151,16 +3061,15 @@ def test_marker_row_cache_lifecycle(spark, tmp_path):
     assert dedup_store.read_table(spark, path).count() == 40 - n_victims
 
     # full rewrite (rebucket) resets it exactly
-    dedup_store.bucket_table(spark, path, "doc_id", 8)
+    dedup_store.bucket_table(spark, path, 8)
     assert dedup_store._marker_rows(path) == 40 - n_victims
 
 
 def test_compaction_preserves_marker_row_cache(spark, tmp_path):
     """compact_signature_store copies the layout marker into its
-    staging dir — the cached row count must survive (compaction is
-    row-preserving, so the cached number stays EXACT; measured at
-    1 M rows the marker read saves ~0.9 s of count() per maintenance
-    gate call)."""
+    staging dir and re-counts the rewritten files from their footers
+    — the cached row count stays EXACT (measured at 1 M rows the
+    marker read saves ~0.9 s of count() per maintenance gate call)."""
     from fdblog2clickhouse_spark.operators import dedup_store as ds
 
     path = str(tmp_path / "tbl")
@@ -3180,8 +3089,8 @@ def test_compaction_preserves_marker_row_cache(spark, tmp_path):
     )
     assert ds._marker_rows(path) is None
     ds._set_marker_rows(path, 80)
-    ds.compact_signature_store(spark, path, sort_col="bk0", n_files=1)
-    assert ds._marker_rows(path) == 80  # rode the marker copy
+    ds.compact_signature_store(spark, path, sort_col="bk0")
+    assert ds._marker_rows(path) == 80  # footer recount, no Spark job
     assert ds.read_table(spark, path).count() == 80
 
 

@@ -283,8 +283,8 @@ def test_no_unbounded_driver_collect():
     replaces scheduler-latency-bound contraction rounds), the
     per-iteration argmax in bpe_train_merges (limit(1) — one row per
     merge, the driver-iterated-trainer pattern shared with
-    embedding_kmeans), and the banded store index's partition-filter
-    literal (≤ 4 × _BANDED_BUCKETS rows by layout). Everything else
+    embedding_kmeans), and the rep store's partition-filter literals
+    (≤ buckets rows by the persisted layout). Everything else
     must stay distributed (scalar `.count()` actions are fine;
     `.collect()`/`.toPandas()` are not)."""
     import pathlib
@@ -310,28 +310,21 @@ def test_no_unbounded_driver_collect():
         "operators/bpe.py": {
             "best = argmax_one_row.collect()",
         },
-        # the banded index's partition-filter literal (≤ n_bands ×
-        # buckets rows by layout construction), the bucketed
-        # flat-store/members partition-filter literal (≤ buckets
+        # the rep-store tables' partition-filter literal (≤ buckets
         # rows by the persisted layout — round 15), and the granular
-        # fold's affected-partition literals (same bounds: ≤ buckets
-        # distinct pb values / ≤ n_bands × buckets (band, kb) pairs
-        # — round 16)
+        # fold's affected-partition literals (same bound: ≤ buckets
+        # distinct pb values — round 16)
         "operators/dedup_store.py": {
-            'for r in batch_rows.select("band", "kb").distinct().collect()',
             "for r in keys.select(pb.alias(_TBL_PB)).distinct().collect()",
             # _fold_table_granular._pb_vals (r17: the aff scan's
             # spelling, generalized to recorded-keys / candidate
             # frames — still ≤ buckets distinct pb values by layout)
             "for r in df.select(pb.alias(_TBL_PB)).distinct().collect()",
-            'pairs = [(r["band"], r["kb"]) for r in pair_rows.collect()]',
             # the semantic emptied-set (r18: computed from the folded
             # frame's lineage so staging tampering can't reclassify a
             # non-empty partition as emptied) — same bounds as the
-            # discovery literals above: ≤ affected pb values /
-            # (band, kb) pairs
+            # discovery literals above: ≤ affected pb values
             "for r in folded.select(_TBL_PB).distinct().collect()",
-            'for r in folded.select("band", "kb").distinct().collect()',
             # r18/r19 single-row stat/footprint aggregations: each is
             # one .agg(...).collect()[0] — exactly ONE row by
             # construction (batch_bucket_vals' combined bucket-id

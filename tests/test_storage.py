@@ -81,22 +81,19 @@ def test_overlap_raises_background_error_alone():
         overlap(bg, lambda: None)
 
 
-def test_overlap_keeps_a_passed_pool():
-    """A caller's pool runs every background call on its one thread,
-    the foreground stays on the caller's, and the pool outlives the
-    call."""
+def test_overlap_runs_every_background_on_one_kept_thread():
+    """Successive calls run their backgrounds on the same worker
+    thread (one py4j-pinned JVM thread for the process, not one per
+    call), and the foreground stays on the caller's thread."""
     import threading
-    from concurrent.futures import ThreadPoolExecutor
 
     seen = []
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        for _ in range(3):
-            overlap(lambda: seen.append(("bg", threading.get_ident())),
-                    lambda: seen.append(("fg", threading.get_ident())), pool)
-        assert pool.submit(lambda: 1).result() == 1
-    threads = {side: {t for s, t in seen if s == side} for side in ("bg", "fg")}
-    assert len(seen) == 6 and threads["fg"] == {threading.get_ident()}
-    assert len(threads["bg"]) == 1 and threads["bg"] != threads["fg"]
+    for _ in range(2):
+        overlap(lambda: seen.append(("bg", threading.get_ident())),
+                lambda: seen.append(("fg", threading.get_ident())))
+    threads = {side: [t for s, t in seen if s == side] for side in ("bg", "fg")}
+    assert threads["fg"] == [threading.get_ident()] * 2
+    assert len(set(threads["bg"])) == 1 and threads["bg"][0] != threading.get_ident()
 
 
 def test_race_stress_swap_mode_green():

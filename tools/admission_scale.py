@@ -1,12 +1,12 @@
 """Scale evidence for the admission path: hold the batch FIXED, grow
 the persisted signature store K×, measure the scoring step — FULL
-store scan vs the band-partitioned index's PRUNED read.
+store scan vs the band index's PRUNED read.
 
 The 100 TB claim of the admission family (operators/dedup_store.py)
 is that a batch's admission cost is O(batch + matched candidates).
 Round 11 added the banded store index (VERDICT r9 #3 / r10 #4):
-`pruned_store_rows` opens only the (band, kb) partitions the batch's
-own band keys can match, so the store-side READ cost is bounded by
+`pruned_store_rows` opens only the bucket partitions the batch's
+own band keys hash into, so the store-side READ cost is bounded by
 the batch's bucket footprint instead of the store size. This tool
 measures both spellings at 1×/4×/16×/64× stores with a small
 (rotation-sized) batch — the regime pruning exists for.
@@ -18,8 +18,8 @@ scored against each store size. Replicated docs are exact text
 duplicates of their originals, so bucket occupancy grows K× in every
 band — the PESSIMISTIC growth mode (real rep stores are pre-deduped
 by construction); candidates grow ~K per matched batch doc.
-_BANDED_BUCKETS is raised to 256 (the scale setting — the default 16
-is sized for CI corpora; pruning needs buckets ≫ batch keys).
+Each index is built at 256 buckets (the scale setting: pruning needs
+buckets ≫ batch keys).
 
 Interleaved ABBA-style ordering across K values and variants,
 median-of-3.
@@ -54,8 +54,6 @@ KS = (
 )
 OFFSET = 10_000_000  # ≡ 0 mod 10: replicas stay in base slices
 BATCH_DOCS = 24  # a rotation, not a backfill — the pruning regime
-
-ds._BANDED_BUCKETS = 256  # scale setting; see module docstring
 
 spark = get_spark()
 spark.sparkContext.setLogLevel("ERROR")
@@ -96,6 +94,7 @@ for k in KS:
         spark.read.parquet(path).withColumnRenamed("doc_id", "group_id"),
         path + "_bands",
         "overwrite",
+        buckets=256,  # scale setting; see module docstring
     )
     stores[k] = path
     n = spark.read.parquet(path).count()
@@ -120,7 +119,7 @@ def score_full(k: int) -> tuple[float, int]:
 
 
 def score_pruned_at(bands_path: str) -> tuple[float, int]:
-    """The r11 spelling against an arbitrary banded index path (the
+    """The r11 spelling against an arbitrary band index path (the
     bucket sweep points it at indexes built at different counts)."""
     t0 = time.perf_counter()
     g_batch = batch_sigs.withColumnRenamed("doc_id", "group_id")
@@ -168,9 +167,9 @@ for v in VARIANTS:
 
 # ------------------------- bucket-count sweep (VERDICT r11 #3 Done)
 #
-# Same store (the largest, x64), banded indexes built at 16/64/256/
+# Same store (the largest, x64), band indexes built at 16/64/256/
 # 1024 buckets; one is produced through the MIGRATION path
-# (rebucket_banded_index from a 16-bucket build) to pin that the
+# (bucket_table from a 16-bucket build) to pin that the
 # migrated index is cost- and candidate-identical to a native build
 # at the same count. Interleaved ABBA, median-of-3, like the main
 # loop. Under whole-table partition discovery the dir term
@@ -184,17 +183,12 @@ sig_big = spark.read.parquet(stores[KBIG]).withColumnRenamed(
     "doc_id", "group_id"
 )
 idx: dict[int, str] = {}
-# rebucket rebuilds from the FLAT store, whose rows it expects in
-# rep-store form (group_id) — park a renamed copy for the migration
-# point (the tool's stores keep raw doc_id for the full-scan variant)
-store_g = f"{root}/store_x{KBIG}_g"
-sig_big.write.mode("overwrite").parquet(store_g)
 for b in BUCKET_SWEEP:
     p = f"{root}/bands_x{KBIG}_b{b}"
     if b == 256:
         # exercise the migration path for one of the points
         ds.write_banded_index(sig_big, p, "overwrite", buckets=16)
-        ds.rebucket_banded_index(spark, store_g, p, 256)
+        ds.bucket_table(spark, p, 256)
     else:
         ds.write_banded_index(sig_big, p, "overwrite", buckets=b)
     idx[b] = p

@@ -35,12 +35,11 @@ journal, aside, or staging remnants; racers never crash.
 
 STORE MODE (`python tools/race_stress.py store [CYCLES] [N_RACERS]`):
 the full three-table dedup store under the same fire — a real store
-(signature table, banded index, members table) built from sf0.001
+(signature table, band index, members table) built from sf0.001
 documents, cycling `retract_docs` → `fold_retractions` while racer
 processes loop `heal_table_fold` on ALL THREE paths. This is the
-only mode that drives `_fold_index_granular`'s two-level
-`band=*/kb=*` rels (nested parent dirs for asides and the publish
-handoff) under real cross-process heals. Pass criteria per cycle
+only mode that drives the three tables' granular folds, the index's
+included, under real cross-process heals. Pass criteria per cycle
 (with retries on documented aborts): members hold EXACTLY the
 surviving doc set; the signature store holds exactly the surviving
 groups with min-surviving-doc reps; the index's group set equals
@@ -83,7 +82,7 @@ inconclusive.
 CRASH-STORE MODE (`python tools/race_stress.py crash-store
 [KILLS]`): writer death over the FULL three-table lifecycle — a
 child process loops real `retract_docs` → `fold_retractions`
-cycles on a signature + banded index + members store, and the
+cycles on a signature + band index + members store, and the
 parent SIGKILLs its process group (alternating random landings
 with targeted kills fired when any of the three fold journals
 appears), then plays the documented recovery — re-run the

@@ -60,12 +60,11 @@ OFFSET = 10_000_000
 N_RETRACT = 100
 BATCH_DOCS = 24
 
-ds._BANDED_BUCKETS = 256  # scale setting (see admission_scale.py)
-# flat store + members key-bucket scale setting; override via env to
+# key-bucket scale setting for all three tables; override via env to
 # measure the rebucket-UP story (the layout's slope is store/buckets
 # per touched bucket, so doubling buckets should halve the admit
-# curve's residual data term — the banded index's sweep, table
-# edition)
+# curve's residual data term — admission_scale.py's index sweep,
+# table edition)
 TBL_BUCKETS = int(os.environ.get("TBL_BUCKETS", "256"))
 
 spark = get_spark()
@@ -105,7 +104,9 @@ for k in KS:
     ds.write_table(sig_k, sig_p, "overwrite", key="gh", buckets=TBL_BUCKETS)
     ds.write_table(mem_k, mem_p, "overwrite", key="doc_id",
                    buckets=TBL_BUCKETS)
-    ds.write_banded_index(ds.read_table(spark, sig_p), band_p, "overwrite")
+    ds.write_banded_index(
+        ds.read_table(spark, sig_p), band_p, "overwrite", buckets=TBL_BUCKETS
+    )
     stores[k] = (sig_p, band_p, mem_p)
     print(f"store x{k}: {ds.read_table(spark, sig_p).count()} groups / "
           f"{ds.read_table(spark, mem_p).count()} members", flush=True)
