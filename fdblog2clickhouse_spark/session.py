@@ -19,6 +19,16 @@ Spark's checkpoint manager (`fs.AbstractFileSystem.file.impl`). The
 jar goes on the driver class path when this process launches the JVM.
 A JVM launched without it (another caller built the first session)
 cannot load the classes, so its sessions keep stock Hadoop.
+
+An idle file-stream query lists its source dir every
+`spark.sql.streaming.pollingDelay`. On a quiet 4-core box, one idle
+query cost 0.08-0.11 CPU s per wall second at Spark's 10 ms default,
+against 0.004 with no query; 0.026-0.028 at 50 ms, 0.019-0.022 at
+100 ms and 0.008-0.010 at 250 ms. On the same box under host load,
+10 ms cost 0.19-0.21 and 50 ms 0.09-0.10. A deployed `watch` is idle
+most of its life, since fdbserver rolls a trace file only at 10 MiB,
+so the sessions here poll every POLLING_DELAY: a new file waits at
+most 50 ms longer before its insert starts.
 """
 
 from __future__ import annotations
@@ -37,6 +47,9 @@ from pyspark.sql import SparkSession
 # assumes the value; every result is partitioning-independent by
 # construction.
 DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
+
+# How often an idle file-stream query looks for new files (docstring).
+POLLING_DELAY = "50ms"
 
 LOCAL_FS_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "localfs.jar")
 LOCAL_FS = "fdblog2clickhouse_spark.jvm.LocalFileSystem"
@@ -71,6 +84,7 @@ def get_spark(app_name: str = "fdblog2clickhouse-spark") -> SparkSession:
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.streaming.pollingDelay", POLLING_DELAY)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")

@@ -17,7 +17,9 @@ Scale shape: the stored state is bounded by the value domain
 batch's one-count bin rows and the stored bins in one aggregation in
 one task: one Spark job, no exchange, for a micro-batch of one or two
 scan partitions; a larger batch reduces map-side, in parallel, to
-O(types × bins) rows first (sinks/state.py). The family is now
+O(types × bins) rows first (sinks/state.py). The same bound lets the
+state be read and written on the driver through Arrow, with no Spark
+parquet scan or file-commit job per merge. The family is now
 complete: counts (sinks/rollup.py, SUM), distincts
 (sinks/hll_rollup.py, idempotent MAX), quantiles (here, SUM of bin
 counts).

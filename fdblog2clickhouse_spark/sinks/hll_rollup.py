@@ -22,7 +22,9 @@ volume. A micro-batch of one or two scan partitions folds its
 per-event register rows with the stored registers in one task (one
 Spark job, no exchange); a larger one reduces map-side, in parallel,
 to ≤ that many rows before the merge (sinks/state.py), so a merge's
-cost does not grow with stream volume.
+cost does not grow with stream volume. At that size the registers
+are read and written on the driver through Arrow, with no Spark
+parquet scan or file-commit job per merge.
 """
 
 from __future__ import annotations

@@ -586,14 +586,39 @@ def test_state_sink_replay_is_exactly_once(spark, sf_smoke, tmp_path, sink):
     assert _state(spark, twice) == _state(spark, direct)
 
 
-@pytest.mark.parametrize("sink", _STATE_SINKS)
+def _truncated_then_raise(write, target_arg: int):
+    """A writer that leaves half of what `write` writes at its
+    positional argument `target_arg`, a file path, then fails."""
+
+    def crash(*args, **kwargs):
+        write(*args, **kwargs)
+        target = args[target_arg]
+        with open(target, "r+b") as f:
+            f.truncate(os.path.getsize(target) // 2)
+        raise OSError("simulated crash inside the staging write")
+
+    return crash
+
+
+@pytest.mark.parametrize(
+    "sink, crash",
+    [pytest.param(s, "publish", id=s) for s in _STATE_SINKS]
+    + [pytest.param(s, "staging_write", id=f"{s}-staging_write") for s in _STATE_SINKS],
+)
 def test_state_sink_crash_before_publish_heals(
-    spark, sf_smoke, tmp_path, monkeypatch, sink
+    spark, sf_smoke, tmp_path, monkeypatch, sink, crash
 ):
-    """Crash inside the commit after the live state is renamed aside
-    and before the new state is published: the next merge heals the
-    aside back and the stream's redelivery of the failed batch ends
-    in the state of a run with no crash."""
+    """Two crashes inside the commit. `publish`: after the live state
+    is renamed aside and before the new state is published; the next
+    merge heals the aside back. `staging_write`: the staging write
+    leaves a truncated file and raises (the state file of a bounded
+    state, the watermark of the upsert state, which Spark writes); the
+    live state is untouched. Either way the stream's redelivery of the
+    failed batch ends in the state of a run with no crash."""
+    import pyarrow.parquet as pq
+
+    from fdblog2clickhouse_spark import storage
+
     merge, _ = _state_sink(sink)
     rows = _state_sink_rows(spark, sf_smoke)
     # user slices: every sink's state (HLL registers and upsert keys
@@ -604,30 +629,78 @@ def test_state_sink_crash_before_publish_heals(
         merge(spark, clean, b)
 
     merge(spark, path, batches[0])
-    real_rename = os.rename
+    before = _state(spark, path)
+    if crash == "publish":
+        real_rename = os.rename
 
-    def crash_on_publish(src, dst):
-        if dst == path:
-            raise OSError("simulated crash before publish")
-        real_rename(src, dst)
+        def crash_on_publish(src, dst):
+            if dst == path:
+                raise OSError("simulated crash before publish")
+            real_rename(src, dst)
 
-    monkeypatch.setattr(os, "rename", crash_on_publish)
+        monkeypatch.setattr(os, "rename", crash_on_publish)
+    elif sink == "upsert":
+        monkeypatch.setattr(storage, "write_json", _truncated_then_raise(storage.write_json, 0))
+    else:
+        monkeypatch.setattr(pq, "write_table", _truncated_then_raise(pq.write_table, 1))
     with pytest.raises(OSError, match="simulated crash"):
         merge(spark, path, batches[1])
-    monkeypatch.setattr(os, "rename", real_rename)
-    assert not os.path.exists(path)
+    monkeypatch.undo()
+    if crash == "publish":
+        assert not os.path.exists(path)
+    else:
+        assert _state(spark, path) == before
+        assert os.listdir(path + storage.STAGING)  # the truncated leftover
 
     merge(spark, path, batches[1])  # at-least-once redelivery
     merge(spark, path, batches[2])
     assert _state(spark, path) == _state(spark, clean)
 
 
+@pytest.mark.parametrize("sink", _STATE_SINKS)
+def test_state_sink_folds_a_spark_written_state(spark, sf_smoke, tmp_path, sink):
+    """A state committed by Spark's own parquet writer (`part-*`
+    files, `_SUCCESS`, `.crc` checksums), as every state was before
+    bounded states moved to the Arrow writer, folds the next batch to
+    the rows of a clean run, and a replay of its recorded batch is
+    still skipped."""
+    from fdblog2clickhouse_spark.sinks.state import _MARKS, _columns
+
+    merge, hook = _state_sink(sink)
+    rows = _state_sink_rows(spark, sf_smoke)
+    b0 = rows.where(F.col("event_id") % 2 == 0)
+    b1 = rows.where(F.col("event_id") % 2 == 1)
+    clean, old = str(tmp_path / "clean"), str(tmp_path / "old")
+    merge(spark, clean, b0)
+    merge(spark, clean, b1)
+
+    fold = _fold(sink)(b0)
+    fold.coalesce(1).write.parquet(old)
+    with open(os.path.join(old, _MARKS), "w") as f:
+        json.dump({"columns": _columns(fold), "batches": {"query-a": 0}}, f)
+    names = os.listdir(old)
+    assert "_SUCCESS" in names
+    assert any(n.startswith("part-") and n.endswith(".snappy.parquet") for n in names)
+    assert any(n.endswith(".crc") for n in names)
+
+    sc = spark.sparkContext
+    try:
+        sc.setLocalProperty(_QUERY_ID, "query-a")
+        hook(old)(b0, 0)  # replay of the recorded batch
+        hook(old)(b1, 1)
+    finally:
+        sc.setLocalProperty(_QUERY_ID, None)
+    assert _state(spark, old) == _state(spark, clean)
+
+
 # A merge folds the batch into the stored state in one aggregation.
 # Rollup, histogram and HLL fold a batch of at most ONE_TASK_PARTITIONS
-# partitions in one task (1 Spark job, the write) and pre-aggregate a
-# larger one in parallel (2 jobs: its map stage and the write); upsert
-# always runs one key-partitioned window (2 jobs). The state is read
-# under the fold's own schema, and the stored columns are recorded.
+# partitions in one task (1 Spark job, the fold's collect to the
+# driver; their state is read and written there, with no Spark job)
+# and pre-aggregate a larger one in parallel (2 jobs: its map stage
+# and the collect); upsert always runs one key-partitioned window (2
+# jobs: its map stage and the write). The state is read under the
+# fold's own schema, and the stored columns are recorded.
 
 _JOBS_PER_MERGE = {"rollup": (1, 2), "hist": (1, 2), "hll": (1, 2), "upsert": (2, 2)}
 
