@@ -277,9 +277,9 @@ def cmd_build_store(args) -> int:
         banded_path,
         bootstrap_rep_store,
         members_path,
-        read_table,
         rep_store_frames,
     )
+    from .operators.tables import read_table
 
     spark = _spark()
     # cache the corpus group frame: the store write and the members
@@ -338,21 +338,38 @@ def _pairs_note(spark, stats: dict, ev_part: str | None, n_pairs: int) -> str:
     return str(n_pairs)
 
 
-def _require_rep_store(store: str) -> None:
-    """Exit naming the table and build-store when a rep store's
-    tables are not all in the current layout — file checks only, so
-    no Spark session starts and nothing is written."""
-    from .operators.dedup_store import (
-        StoreLayoutError,
-        banded_path,
-        members_path,
-        require_rep_store,
-    )
+def _require_layout(store: str, ivf: bool = False) -> None:
+    """Exit naming the table and its build command when a rep store's
+    tables (an IVF index's lists and codes, with `ivf`) are not all in
+    the current layout — file checks only, so no Spark session starts
+    and nothing is written."""
+    from .operators.ann_store import require_ivf_tables
+    from .operators.dedup_store import banded_path, members_path
+    from .operators.tables import StoreLayoutError, require_tables
 
     try:
-        require_rep_store(store, banded_path(store), members_path(store))
+        if ivf:
+            require_ivf_tables(store)
+        else:
+            require_tables(store, banded_path(store), members_path(store))
     except StoreLayoutError as e:
         raise SystemExit(str(e)) from None
+
+
+def _is_ivf_lists(path: str) -> bool:
+    """Whether compact-store was handed an IVF inverted-lists table,
+    from files only (a data file's columns), so a flat lists table is
+    refused, not compacted as a signature store."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    from .storage import heal_swap
+
+    heal_swap(path)
+    files = glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
+    return bool(files) and "list_id" in pq.read_schema(files[0]).names
 
 
 def cmd_admit(args) -> int:
@@ -397,7 +414,7 @@ def cmd_admit(args) -> int:
         rep_admission_step,
     )
 
-    _require_rep_store(args.store)
+    _require_layout(args.store)
     family = args.family
     spark = _spark()
     g_batch = family.group_frame(_store_source(spark, args, args.batch)).cache()
@@ -450,105 +467,82 @@ def cmd_admit(args) -> int:
 
 
 def cmd_compact_store(args) -> int:
-    """OPTIMIZE FINAL for an append-accumulating store: merge the
-    one-file-group-per-batch appends into sort-keyed files, with a
-    sort key derived from the store's schema (text stores sort by
-    bk0, vector stores by bv0 — ADVICE r12; an IVF inverted-lists
-    table by list_id, through `compact_ivf_lists`). A rep store
-    (`<store>_members` / `<store>_bands` siblings) is maintained as a
-    whole, and refused naming the table and build-store before any
-    Spark job when a table is not in the current layout: retraction
-    sidecars are folded first, then each of the three tables is
-    re-bucketed UP when its rows/bucket crosses the soak-measured
-    knee (VERDICT r15 #3 — `maybe_rebucket_table`), then each is
-    compacted within its bucket partitions (the members table is read
-    on every admit's doc anti-join and every evidence expansion — the
-    layout's largest table, ADVICE r11)."""
+    """OPTIMIZE FINAL — the one maintenance pass of both persisted
+    stores: a rep store (`<store>_members` / `<store>_bands`
+    siblings) or an IVF index (an inverted-lists table and its
+    `<lists>_codes` sibling). A table not in the current layout is
+    refused, naming its build command, before any Spark job. Then,
+    for every bucketed table of the store: retraction sidecars are
+    folded first, rewriting only the buckets they touch; each table
+    is re-bucketed UP past the soak-measured rows/bucket knee
+    (VERDICT r15 #3); each is compacted to one file per bucket,
+    sorted by its key (text stores by bk0, vector stores by bv0 —
+    ADVICE r12). A flat signature store is rewritten into one file."""
     import glob
     import os
 
+    from .operators.ann_store import fold_ivf_tombstones, ivf_codes_path
     from .operators.dedup_store import (
         _INDEX_KEY,
         banded_path,
         compact_signature_store,
         fold_retractions,
-        maybe_rebucket_table,
         members_path,
-        read_table,
     )
-    from .storage import heal_swap
+    from .operators.tables import compact_table, maybe_rebucket_table, read_table
 
+    ivf = _is_ivf_lists(args.store)
     members, bands = members_path(args.store), banded_path(args.store)
-    rep = os.path.isdir(members) or os.path.isdir(bands)
-    if rep:
-        _require_rep_store(args.store)
+    rep = not ivf and (os.path.isdir(members) or os.path.isdir(bands))
+    if ivf or rep:
+        _require_layout(args.store, ivf=ivf)
     spark = _spark()
-    notes = []
-    if rep:
-        # fold retraction sidecars FIRST, so the compaction below
-        # rewrites the folded tables and the tombstones/deltas are
-        # retired in the same maintenance pass (the retraction
-        # contract: a retracted id becomes re-admittable only here)
-        fold = fold_retractions(spark, args.store, bands, members)
-        if fold["folded"]:
-            notes.append(
-                "retractions_folded=true"
-                f" fold_parts=sig:{fold['sig_parts']}"
-                f"/index:{fold['index_parts']}/mem:{fold['mem_parts']}"
-            )
-        # the automatic re-bucket decision, AFTER the fold (so the row
-        # count reflects retired tombstones) and BEFORE compaction (a
-        # re-bucket leaves one file per partition, so the compactor
-        # no-ops on a freshly re-bucketed table)
-        for label, p in (
-            ("store", args.store), ("members", members), ("bands", bands)
-        ):
-            rb = maybe_rebucket_table(spark, p)
-            if rb["rebucketed"]:
-                notes.append(
-                    f"{label}_rebucketed={rb['buckets_before']}->"
-                    f"{rb['buckets_after']} (rows={rb['rows']})"
-                )
-    # Heal a crash-interrupted compaction swap BEFORE the schema read,
-    # or the re-run that is supposed to repair it raises
-    # PATH_NOT_FOUND here instead of reaching the compactor's own
-    # healer (self-review r13 finding #3). read_table, not a raw
-    # parquet read: a bucketed store hides its pb partition column,
-    # and an EMPTY bucketed store (no data files) is readable only
-    # through the marker schema.
-    heal_swap(args.store)
-    cols = set(read_table(spark, args.store).columns)
-    sort_col = "bk0" if "bk0" in cols else ("bv0" if "bv0" in cols else "list_id")
-    if sort_col == "list_id":
-        # an IVF inverted-lists table: compact_ivf_lists is the fold
-        # point — ONE rewrite compacts the live view, folds a codes
-        # sibling, and retires the vec_id tombstone sidecar. The
-        # message is built from what the pass ACTUALLY did (its
-        # return), never from a pre-call sidecar-dir probe (ADVICE
-        # r14: an empty crash-remnant dir used to print folded=true
-        # without folding, and a fold that RAISED the file count was
-        # reported as min(before, target)).
-        from .operators.ann_store import compact_ivf_lists
-
-        r = compact_ivf_lists(spark, args.store)
-        msg = (
-            f"compacted: files_before={r['files_before']} "
-            f"files_after={r['files_after']}"
+    # fold retraction sidecars FIRST, so the compaction below
+    # rewrites the folded tables and the tombstones/deltas are
+    # retired in the same maintenance pass (the retraction contract:
+    # a retracted id becomes re-admittable only here)
+    if ivf:
+        codes = ivf_codes_path(args.store)
+        tables = [("lists", args.store, "list_id")] + (
+            [("codes", codes, "vec_id")] if os.path.isdir(codes) else []
         )
-        if r["folded"]:
-            msg += " retractions_folded=true"
+        fold = fold_ivf_tombstones(spark, args.store)
+        parts = "lists:{lists_parts}/codes:{codes_parts}"
     else:
-        before = compact_signature_store(spark, args.store, sort_col=sort_col)
-        # real post-pass count (bucketed stores keep files under
-        # pb=*/ partition dirs)
-        after = len(
-            glob.glob(os.path.join(args.store, "*.parquet"))
-        ) + len(glob.glob(os.path.join(args.store, "pb=*", "*.parquet")))
-        msg = f"compacted: files_before={before} files_after={after}"
-    if rep:
-        m_before = compact_signature_store(spark, members, sort_col="group_id")
-        b_before = compact_signature_store(spark, bands, sort_col=_INDEX_KEY)
-        msg += f" members_files_before={m_before} bands_files_before={b_before}"
+        # read after `_is_ivf_lists` healed a crash-interrupted swap,
+        # or the re-run meant to repair it dies on PATH_NOT_FOUND
+        cols = read_table(spark, args.store).columns
+        sig_col = "bv0" if "bv0" in cols else "bk0"
+        if not rep:
+            before = compact_signature_store(spark, args.store, sort_col=sig_col)
+            after = len(glob.glob(os.path.join(args.store, "*.parquet")))
+            print(f"compacted: files_before={before} files_after={after}")
+            return 0
+        tables = [
+            ("store", args.store, sig_col),
+            ("members", members, "group_id"),
+            ("bands", bands, _INDEX_KEY),
+        ]
+        fold = fold_retractions(spark, args.store, bands, members)
+        parts = "sig:{sig_parts}/index:{index_parts}/mem:{mem_parts}"
+    notes = []
+    if fold["folded"]:
+        notes.append("retractions_folded=true fold_parts=" + parts.format(**fold))
+    # the re-bucket decision, AFTER the fold (so the row count
+    # reflects retired tombstones) and BEFORE compaction (a re-bucket
+    # leaves one file per partition, so the compactor then no-ops)
+    for label, p, _ in tables:
+        rb = maybe_rebucket_table(spark, p)
+        if rb["rebucketed"]:
+            notes.append(
+                f"{label}_rebucketed={rb['buckets_before']}->"
+                f"{rb['buckets_after']} (rows={rb['rows']})"
+            )
+    befores = [compact_table(spark, p, sort_col=c) for _, p, c in tables]
+    after = len(glob.glob(os.path.join(args.store, "pb=*", "*.parquet")))
+    msg = f"compacted: files_before={befores[0]} files_after={after}"
+    for (label, _, _), n in zip(tables[1:], befores[1:]):
+        msg += f" {label}_files_before={n}"
     print(" ".join([msg, *notes]))
     return 0
 
@@ -586,7 +580,7 @@ def cmd_retract(args) -> int:
     takedown-wins rule)."""
     from .operators.dedup_store import members_path, retract_docs
 
-    _require_rep_store(args.store)
+    _require_layout(args.store)
     spark = _spark()
     stats = retract_docs(
         spark,
@@ -612,6 +606,7 @@ def cmd_retract_vectors(args) -> int:
     enough to drift recall."""
     from .operators.ann_store import retract_ivf_vectors
 
+    _require_layout(args.lists, ivf=True)
     spark = _spark()
     stats = retract_ivf_vectors(spark, args.lists, _retract_ids_frame(spark, args))
     print(f"retracted: tombstones_total={stats['tombstoned']}")
@@ -654,6 +649,7 @@ def cmd_refresh_ivf(args) -> int:
     )
     from .operators.dedup import quantize
 
+    _require_layout(args.lists, ivf=True)
     spark = _spark()
     qn = quantize(spark.read.parquet(args.vectors))
     stats = refresh_ivf_centroids(spark, qn, args.codebook, args.lists)
@@ -693,6 +689,7 @@ def cmd_probe_recall(args) -> int:
     from .operators.ann_store import ivf_recall_probe
     from .operators.dedup import quantize
 
+    _require_layout(args.lists, ivf=True)
     spark = _spark()
     r = ivf_recall_probe(
         spark,
@@ -721,13 +718,14 @@ def cmd_build_ivfpq(args) -> int:
     for the Lloyd iteration that makes residuals tight (SCALE.md:
     corpus-point centroids leave residuals larger than the raw
     vectors; ONE refresh recovers flat-PQ recall — the lift
-    `ann_ivfpq_refresh_recall` pins in the driver)."""
+    `ann_ivfpq_refresh_recall` pins in the driver). The lists and
+    codes are key-bucketed tables, the layout the IVF commands need."""
     import os
 
     from pyspark.sql import functions as F
 
     from .operators.ann_store import (
-        _assign,
+        assign_lists,
         ivf_codes_path,
         reencode_ivf_codes,
         train_pq_codebook,
@@ -742,9 +740,7 @@ def cmd_build_ivfpq(args) -> int:
         F.col("vec_id").alias("c_id"), "q", "nq"
     )
     cent.coalesce(1).write.mode("overwrite").parquet(cb_path)
-    _assign(qn, spark.read.parquet(cb_path), 1).select(
-        F.col("v_id").alias("n_id"), F.col("c_id").alias("list_id")
-    ).write.mode("overwrite").parquet(lists_path)
+    assign_lists(spark, qn, cb_path, lists_path)
     train_pq_codebook(spark, qn, cb_path, lists_path)
     n = reencode_ivf_codes(spark, qn, cb_path, lists_path)
     qn.unpersist()
@@ -766,10 +762,12 @@ def cmd_insert_vectors(args) -> int:
     driver-pinned equivalence (`ann_ivfpq_store_search`). Inserts
     are IDEMPOTENT under redelivery (VERDICT r16 #1): a retried run
     of the same batch appends nothing twice — already-present
-    vec_ids are reported as skipped."""
+    vec_ids are reported as skipped. An insert only appends; folding,
+    re-bucketing and compaction are compact-store's job."""
     from .operators.ann_store import ivf_insert_batch
     from .operators.dedup import quantize
 
+    _require_layout(args.lists, ivf=True)
     spark = _spark()
     qn_b = quantize(spark.read.parquet(args.batch)).cache()
     try:
@@ -784,8 +782,6 @@ def cmd_insert_vectors(args) -> int:
         msg += f" skipped={r['skipped']} (already indexed)"
     if r["codes_appended"]:
         msg += " codes=appended"
-    if r["compacted"]:
-        msg += " lists=auto-compacted"
     qn_b.unpersist()
     print(msg)
     return 0
@@ -799,6 +795,7 @@ def cmd_search_ivfpq(args) -> int:
     from .operators.ann_store import ivf_codes_path, ivfpq_store_search_plan
     from .operators.dedup import quantize
 
+    _require_layout(args.lists, ivf=True)
     spark = _spark()
     qn = quantize(spark.read.parquet(args.vectors))
     queries = qn.orderBy("vec_id").limit(args.queries)
@@ -826,9 +823,10 @@ def cmd_bucket_store(args) -> int:
     rename-aside swap; admission evidence is invariant (the bucket is
     a pure pruning key). compact-store re-buckets UP automatically as
     a store grows; this is the manual override."""
-    from .operators.dedup_store import banded_path, bucket_table, members_path
+    from .operators.dedup_store import banded_path, members_path
+    from .operators.tables import bucket_table
 
-    _require_rep_store(args.store)
+    _require_layout(args.store)
     spark = _spark()
     parts = []
     for label, p in (

@@ -23,13 +23,16 @@ from pyspark.sql import DataFrame, SparkSession
 # tools/window_check.py), then the stalest greens, exactly 50 in all.
 # Every other op stays registered; tools/driver_sim.py checks all.
 CHANGED_OPS = [
-    # the rep-store family ops (dedup_store.py, streaming/rep_admission.py)
+    # the rep-store family ops (dedup_store.py, streaming/rep_admission.py;
+    # their table layer moved to operators/tables.py)
     "dedup_store_retraction", "embedding_store_retraction",
     "dedup_store_admission", "embedding_store_admission",
     "dedup_store_rep_admission", "embedding_store_rep_admission",
     "streaming_rep_admission", "streaming_embedding_rep_admission",
-    # ann_store.py's IVF kernel, refresh pair and rerank op
-    "streaming_ivf_insert",
+    # ann_store.py's IVF ops: the lists and codes are bucketed tables
+    # (operators/tables.py), built, appended and read through it
+    "ann_ivf_store_search", "ann_ivf_filtered_search",
+    "ann_ivfpq_store_search", "streaming_ivf_insert",
     "ann_ivf_refresh_recall", "ann_ivfpq_refresh_recall",
     "ann_ivfpq_rerank_topk",
     # streaming/queries.py's foreachBatch drains and the oracle it
@@ -59,11 +62,6 @@ _FRONT_WINDOW = CHANGED_OPS + [
     "multimodal_decode_jpeg", "multimodal_audio_decode",
     # training.py
     "sequence_packing", "embedding_int8_quantize", "doc_skyline_select",
-    "pack_manifest",
-    # lm.py
-    "doc_bigram_fluency",
-    # streaming/queries.py
-    "streaming_incremental_dedup",
 ]
 
 

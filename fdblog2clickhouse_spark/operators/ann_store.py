@@ -29,22 +29,32 @@ lists table is one row per vector (the partition key at 100 TB —
 queries touch nprobe/k of it); insert cost is O(batch × centroids)
 with no shuffle beyond the batch's own assignment window.
 
+Storage: the inverted lists (n_id, list_id) and the PQ codes (vec_id,
+sub, code) are key-bucketed tables of `tables` — the lists bucketed
+by list_id, the key a probe selects, the codes by vec_id, the key the
+candidate join matches — built and appended through `write_table`,
+read through `read_table`, and maintained by the one `compact-store`
+pass both stores share (fold the tombstone sidecar, re-bucket,
+compact). A lists or codes table without the layout marker is
+refused (StoreLayoutError, naming build-ivfpq). The coarse and PQ
+codebooks are flat one-file tables.
+
 MAINTAINER CONTRACT (VERDICT r17 #2 / ADVICE r17) — the rule of the
 `storage` module, which carries every write in this module:
 
   ONE MAINTAINER, MANY READERS. An index artifact set (codebook,
   lists, codes, PQ codebook, sidecars) takes its WRITES from exactly
-  one process at a time. `ivf_insert_batch` is a writer — and since
-  round 17 a COMPACTING writer (`maybe_compact_ivf_lists` runs
-  inside it), so a live insert stream counts as the maintainer: do
-  not run `refresh-ivf` / `compact-store` / `split` from a cron
-  beside it — pause the stream (or route the maintenance commands
-  through the same process, which serializes them).
+  one process at a time. `ivf_insert_batch` is a plain writer: it
+  appends and never rewrites, so a live insert stream is the
+  maintainer — do not run `refresh-ivf` / `compact-store` from a
+  cron beside it; pause the stream, or route the maintenance
+  commands through the same process, which serializes them.
 
-  Every rewrite is a `storage` whole-table swap (`storage.commit`,
+  Every rewrite is a `storage` swap: whole-table (`storage.commit`,
   or `storage.stage` … `storage.publish` for the refresh/split
-  double swap), so at every instant each artifact or its '.old'
-  aside holds a complete table. Concurrent QUERY processes are safe
+  double swap) or the journaled partition swap of the granular
+  tombstone fold, so at every instant each artifact or its aside
+  holds a complete table. Concurrent QUERY processes are safe
   against the one maintainer: every reader heals crash remnants
   before building its plan (`storage.heal_swap`, rename-only), a
   reader's heal that fires inside the maintainer's swap window is
@@ -61,8 +71,8 @@ MAINTAINER CONTRACT (VERDICT r17 #2 / ADVICE r17) — the rule of the
   ::test_second_writer_aborts_not_corrupts.
 
 The IVF takedown path (`retract_ivf_vectors` → tombstone sidecar,
-`live_ivf_lists` → composed read, `fold_ivf_retractions` → physical
-fold) lives here beside the lists and codes it rewrites.
+`live_ivf_lists` → composed read, `fold_ivf_tombstones` → granular
+physical fold) lives here beside the lists and codes it rewrites.
 """
 
 from __future__ import annotations
@@ -84,8 +94,17 @@ from .similarity import (
     _N_QUERIES,
     _cosine_cols,
 )
+from .tables import (
+    _fold_table_granular,
+    read_table,
+    require_tables,
+    table_layout,
+    write_table,
+)
 
 _INSERT_MOD = 10  # vec_id % 10 == 0 → the incremental-insert batch
+_LISTS_KEY = "list_id"  # the lists' bucket key: the key a probe selects
+_CODES_KEY = "vec_id"  # the codes' bucket key: the candidate join's key
 
 
 def _assign(sub: DataFrame, cent: DataFrame, rank_cap: int) -> DataFrame:
@@ -132,6 +151,24 @@ def _assign(sub: DataFrame, cent: DataFrame, rank_cap: int) -> DataFrame:
     )
 
 
+def assign_lists(
+    spark: SparkSession, vecs: DataFrame, codebook_path: str,
+    lists_path: str, mode: str = "overwrite",
+) -> None:
+    """Assign vectors (vec_id, q, nq) to their nearest persisted
+    centroid and write the (n_id, list_id) rows through the table
+    layer: a build (overwrite: bucketed on list_id, sized from the
+    rows) or an append."""
+    write_table(
+        _assign(vecs, spark.read.parquet(codebook_path), 1).select(
+            F.col("v_id").alias("n_id"), F.col("c_id").alias("list_id")
+        ),
+        lists_path,
+        mode,
+        key=_LISTS_KEY,
+    )
+
+
 def ann_ivf_store_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build → insert → search through the persisted index (module
     docstring). Output: identical schema/content to `ann_ivf_topk`
@@ -146,18 +183,13 @@ def ann_ivf_store_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     qn.where(F.col("vec_id").isin(_CENTROID_IDS)).select(
         F.col("vec_id").alias("c_id"), "q", "nq"
     ).write.mode("overwrite").parquet(codebook_path)
-    cent_disk = spark.read.parquet(codebook_path)
     base = qn.where(F.pmod(F.col("vec_id"), F.lit(_INSERT_MOD)) != 0)
-    _assign(base, cent_disk, 1).select(
-        F.col("v_id").alias("n_id"), F.col("c_id").alias("list_id")
-    ).write.mode("overwrite").parquet(lists_path)
+    assign_lists(spark, base, codebook_path, lists_path)
 
     # 2. incremental INSERT: assign the new batch against the
     # persisted codebook, append to the lists table
     batch = qn.where(F.pmod(F.col("vec_id"), F.lit(_INSERT_MOD)) == 0)
-    _assign(batch, spark.read.parquet(codebook_path), 1).select(
-        F.col("v_id").alias("n_id"), F.col("c_id").alias("list_id")
-    ).write.mode("append").parquet(lists_path)
+    assign_lists(spark, batch, codebook_path, lists_path, "append")
 
     # 3. SEARCH through the on-disk index: probe lists come from the
     # disk codebook too (a real query node holds no build state)
@@ -179,14 +211,13 @@ def ivf_store_search_plan(
     allowed: DataFrame | None = None,
 ) -> DataFrame:
     """The LAZY query-node search plan over an on-disk IVF index —
-    reusable (`compact_ivf_lists`'s invariance pin,
-    tests/test_ann_store.py, re-runs it against the compacted lists
-    table) and plan-testable (the operator above materializes its
-    result, hiding the join tree behind a scan). Reads the lists
-    through `live_ivf_lists`, so a pending takedown (tombstone
-    sidecar) is invisible without any index rewrite; `nprobe` is the
-    recall/cost knob (sweep in tools/pq_recall.py, curve in
-    SCALE.md) — the proof ops pin the oracle's _N_PROBE. `allowed`
+    reusable (tests/test_ann_store.py re-runs it against a folded and
+    compacted index) and plan-testable (the operator above
+    materializes its result, hiding the join tree behind a scan).
+    Reads the lists through `live_ivf_lists`, so a pending takedown
+    (tombstone sidecar) is invisible without any index rewrite;
+    `nprobe` is the recall/cost knob (curve in SCALE.md) — the proof
+    ops pin the oracle's _N_PROBE. `allowed`
     (a frame with an `n_id` column) composes a metadata predicate
     into the index read — see `ivf_store_filtered_search_plan`, the
     documented filtered-search entry point; keeping the semi-join
@@ -292,9 +323,7 @@ def ann_ivf_filtered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     qn.where(F.col("vec_id").isin(_CENTROID_IDS)).select(
         F.col("vec_id").alias("c_id"), "q", "nq"
     ).write.mode("overwrite").parquet(codebook_path)
-    _assign(qn, spark.read.parquet(codebook_path), 1).select(
-        F.col("v_id").alias("n_id"), F.col("c_id").alias("list_id")
-    ).write.mode("overwrite").parquet(lists_path)
+    assign_lists(spark, qn, codebook_path, lists_path)
 
     allowed = qn.where(F.col("label") < _FILTER_LABEL_MAX).select(
         F.col("vec_id").alias("n_id")
@@ -310,7 +339,7 @@ def ann_ivf_filtered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ivf_codes_path(lists_path: str) -> str:
     """The PQ codes table lives BESIDE the inverted lists —
     (vec_id, sub, code), one row per (indexed vector, subspace). The
-    maintenance passes (compact/fold/refresh/split) auto-detect this
+    maintenance passes (fold/compact/refresh/split) auto-detect this
     sibling so a takedown removes the taken-down vectors' derived
     representations and a centroid refresh re-encodes instead of
     leaving codes pointing at retired geometry (VERDICT r14 /
@@ -322,27 +351,31 @@ def ivf_tombstones_path(lists_path: str) -> str:
     return lists_path.rstrip("/") + "_tombstones"
 
 
-def _lists_id_col(lists: DataFrame) -> str:
-    """The vector-id column of an inverted-lists table: ann_store
-    writes (n_id, list_id); accept vec_id too for externally built
-    tables (the CLI takes an arbitrary --lists path)."""
-    return "n_id" if "n_id" in lists.columns else "vec_id"
+def require_ivf_tables(lists_path: str) -> None:
+    """Heal the lists and (when present) codes tables and refuse
+    either without the layout marker (StoreLayoutError, naming the
+    table and build-ivfpq). File operations only, so every IVF entry
+    point refuses a flat table before any Spark job."""
+    import os
+
+    codes_p = ivf_codes_path(lists_path)
+    storage.heal_swap(codes_p)
+    require_tables(lists_path, *([codes_p] if os.path.isdir(codes_p) else []))
 
 
 def live_ivf_lists(spark: SparkSession, lists_path: str) -> DataFrame:
     """The inverted-lists table with retractions applied: tombstoned
     vec_ids removed. The sidecar is O(retracted) → broadcast — the
     same composition rule as `live_members`, so EVERY lists reader
-    (search, probe-recall, refresh, split, compaction) sees the
+    (search, probe-recall, refresh, split, PQ training) sees the
     post-takedown index without a single physical rewrite."""
-    storage.heal_swap(lists_path)
-    lists = spark.read.parquet(lists_path)
+    require_ivf_tables(lists_path)
+    lists = read_table(spark, lists_path)
     tomb = storage.read_sidecar(spark, ivf_tombstones_path(lists_path))
     if tomb is None:
         return lists
-    idc = _lists_id_col(lists)
     return lists.join(
-        F.broadcast(tomb.select(F.col("vec_id").alias(idc))), idc, "left_anti"
+        F.broadcast(tomb.select(F.col("vec_id").alias("n_id"))), "n_id", "left_anti"
     )
 
 
@@ -354,12 +387,13 @@ def retract_ivf_vectors(
     rewrite was a full-index write per takedown batch): merge the
     retracted vec_ids into a tombstone sidecar beside the lists
     table; the physical lists are untouched, readers compose the
-    sidecar (`live_ivf_lists`), and `fold_ivf_retractions` (run by
-    compact-store / refresh-ivf, which rewrite the lists anyway)
-    retires it. The codebook keeps its centroids — vanished-list ids
-    never drop, matching refresh_ivf_centroids' rule — and recall
-    drift from the now-stale centroids is what `probe-recall` exists
-    to catch. Same crash-safe swap as the text sidecars."""
+    sidecar (`live_ivf_lists`), and `fold_ivf_tombstones` (run by
+    compact-store) or a refresh-ivf rewrite retires it. The codebook
+    keeps its centroids — vanished-list ids never drop, matching
+    refresh_ivf_centroids' rule — and recall drift from the now-stale
+    centroids is what `probe-recall` exists to catch. Same crash-safe
+    swap as the text sidecars."""
+    require_ivf_tables(lists_path)
     ids = ids.select(F.col("doc_id").alias("vec_id")).distinct()
     tomb_path = ivf_tombstones_path(lists_path)
     storage.heal_swap(tomb_path)
@@ -376,42 +410,44 @@ def retract_ivf_vectors(
     return {"tombstoned": n_total}
 
 
-def fold_ivf_retractions(spark: SparkSession, lists_path: str) -> dict:
-    """Fold the IVF tombstone sidecar into the physical lists table
-    and retire it — the compaction-time companion to
-    `retract_ivf_vectors`, mirroring `fold_retractions`: one swap
-    rewrite of the lists (the only O(index) write, amortized into the
-    maintenance pass that rewrites them anyway), sidecar deleted
-    LAST. A codes sibling (`ivf_codes_path`) is folded in the same
-    pass — the takedown contract covers the taken-down vectors'
-    DERIVED representations, not just their list membership
-    (VERDICT r14). A crash between the steps leaves tombstones that
-    match nothing — harmless, and the re-run retires them. No-op
-    when no sidecar exists."""
+def fold_ivf_tombstones(spark: SparkSession, lists_path: str) -> dict:
+    """Fold the IVF tombstone sidecar into the lists and codes and
+    retire it — compact-store's first step on an IVF index, the
+    sibling of `dedup_store.fold_retractions` through the same
+    `_fold_table_granular`: only the buckets holding tombstoned ids
+    are rewritten, every other partition dir stays byte-invariant. A
+    tombstone is a vec_id: the codes' bucket key, so it names their
+    partitions directly; the lists are bucketed by list_id, so
+    discovery scans their (n_id, list_id) columns against the
+    broadcast sidecar. The takedown covers the vectors' DERIVED
+    representation too, not just their list membership (VERDICT
+    r14). Every step is idempotent and the sidecar is retired LAST,
+    so a crash at any point is repaired by re-running. Returns
+    {"folded": bool, "lists_parts": n, "codes_parts": n}, n =
+    partitions rewritten."""
     import os
 
-    storage.heal_swap(lists_path)
+    require_ivf_tables(lists_path)
     tomb_path = ivf_tombstones_path(lists_path)
     tomb = storage.read_sidecar(spark, tomb_path)
     if tomb is None:
         return {"folded": False}
-    storage.commit(lists_path, live_ivf_lists(spark, lists_path).write.parquet)
+    out = {"folded": True, "lists_parts": 0, "codes_parts": 0}
+    out["lists_parts"] = _fold_table_granular(
+        spark, lists_path, [(tomb.select(F.col("vec_id").alias("n_id")), "n_id")]
+    )
     codes_p = ivf_codes_path(lists_path)
-    storage.heal_swap(codes_p)
     if os.path.isdir(codes_p):
-        storage.commit(
-            codes_p,
-            spark.read.parquet(codes_p)
-            .join(tomb.select("vec_id"), "vec_id", "left_anti")
-            .write.parquet,
+        out["codes_parts"] = _fold_table_granular(
+            spark, codes_p, [(tomb, _CODES_KEY)]
         )
     storage.retire_sidecar(tomb_path)
-    return {"folded": True}
+    return out
 
 
 def ivf_insert_batch(
     spark: SparkSession, qn_batch: DataFrame, codebook_path: str,
-    lists_path: str, *, compact_trigger_files: int | None = None,
+    lists_path: str,
 ) -> dict:
     """Insert ONE vector batch into a persisted IVF(-PQ) index
     purely through the persisted codebooks — THE single insert
@@ -425,7 +461,8 @@ def ivf_insert_batch(
     persisted PQ codebook and appended beside them in the SAME call
     — a codes table with no PQ codebook is an incoherent artifact
     set and refuses loudly BEFORE any write, so a refused insert
-    leaves the artifact set untouched (ADVICE r16). Codebooks are
+    leaves the artifact set untouched (ADVICE r16), and so does a
+    lists or codes table without the layout marker. Codebooks are
     never retrained by an insert (refresh-ivf's job);
     encode-at-insert ≡ rebuild is the driver-pinned equivalence
     (`ann_ivfpq_store_search`).
@@ -445,32 +482,23 @@ def ivf_insert_batch(
     column); batch-internal duplicate vec_ids are collapsed first
     (a redelivered batch IS an internal duplicate).
 
-    AUTO-COMPACTS (round 17): after the appends the kernel runs
-    `maybe_compact_ivf_lists`, so a long-running insert loop can
-    never accumulate unbounded tiny files — the unmerged-parts
-    failure mode — without anyone noticing; `compact_trigger_files`
-    overrides the measured default (None), 0 disables. Returns
-    {"vectors": appended, "skipped": redelivered, "codes_appended":
-    bool, "compacted": bool}.
-
-    WRITER — one maintainer per artifact set (module docstring
-    MAINTAINER CONTRACT): auto-compact makes every insert loop a
-    COMPACTING writer, so a cron refresh-ivf/compact-store beside a
-    live insert stream is out of contract (aborts, never corrupts;
-    query processes are always safe)."""
+    A PLAIN WRITER: the kernel appends and never rewrites. Like the
+    rep store's admit loop, it leaves folding, re-bucketing and
+    compaction to the one maintenance pass, compact-store (module
+    docstring MAINTAINER CONTRACT). Returns {"vectors": appended,
+    "skipped": redelivered, "codes_appended": bool}."""
     import os
 
-    # heal crash-interrupted swaps FIRST (a compaction that died
+    # heal crash-interrupted swaps FIRST (a maintenance pass that died
     # mid-rename leaves the table only at path+'.old'): the reads
     # below would raise PATH_NOT_FOUND — and worse, the codes
     # existence CHECK would silently classify a codes-bearing index
     # as lists-only, inserting vectors invisible to compressed
     # search (and an append to the missing lists path would fork a
     # fresh table beside the real one at .old)
-    storage.heal_swap(lists_path)
+    require_ivf_tables(lists_path)
     storage.heal_swap(codebook_path)
     codes_p = ivf_codes_path(lists_path)
-    storage.heal_swap(codes_p)
     has_codes = os.path.isdir(codes_p)
     if has_codes:
         pq_p = pq_codebook_path(codebook_path)
@@ -496,7 +524,7 @@ def ivf_insert_batch(
     # codes invariant rested on Spark's implicit InMemoryFileIndex
     # snapshot never re-listing files (ADVICE r17 — any refactor
     # that refreshed the path would double-encode fresh vectors).
-    prior = spark.read.parquet(lists_path).select(
+    prior = read_table(spark, lists_path).select(
         F.col("n_id").alias("vec_id"), "list_id"
     ).join(
         F.broadcast(batch.select("vec_id")), "vec_id", "left_semi"
@@ -516,24 +544,14 @@ def ivf_insert_batch(
     n_fresh = b_lists.count()
     n_batch = batch.count()
     if n_fresh:
-        b_lists.write.mode("append").parquet(lists_path)
-    def _auto_compact() -> bool:
-        if compact_trigger_files is not None and compact_trigger_files <= 0:
-            return False
-        kw = (
-            {}
-            if compact_trigger_files is None
-            else {"trigger_files": compact_trigger_files}
-        )
-        return maybe_compact_ivf_lists(spark, lists_path, **kw)["compacted"]
-
+        write_table(b_lists, lists_path, "append")
+    out = {
+        "vectors": n_fresh,
+        "skipped": n_batch - n_fresh,
+        "codes_appended": has_codes,
+    }
     if not has_codes:
-        return {
-            "vectors": n_fresh,
-            "skipped": n_batch - n_fresh,
-            "codes_appended": False,
-            "compacted": _auto_compact(),
-        }
+        return out
     # lists_after ∩ batch = b_lists ∪ prior; of those, encode codes
     # for exactly the vec_ids the codes table is missing. The codes
     # side is reduced to its batch-relevant ids FIRST (columnar scan
@@ -541,7 +559,7 @@ def ivf_insert_batch(
     # batch-bounded — a direct anti against the codes table would
     # shuffle the whole table (left_anti can only build on the
     # right).
-    codes_present = spark.read.parquet(codes_p).select("vec_id").join(
+    codes_present = read_table(spark, codes_p).select("vec_id").join(
         F.broadcast(batch.select("vec_id")), "vec_id", "left_semi"
     )
     need = (
@@ -562,187 +580,9 @@ def ivf_insert_batch(
         .localCheckpoint()
     )
     if resid.count():
-        _ivfpq_codes(resid, spark.read.parquet(pq_p)).write.mode(
-            "append"
-        ).parquet(codes_p)
-    return {
-        "vectors": n_fresh,
-        "skipped": n_batch - n_fresh,
-        "codes_appended": True,
-        "compacted": _auto_compact(),
-    }
-
-
-def compact_ivf_lists(
-    spark: SparkSession, lists_path: str, *, n_files: int = 1
-) -> dict:
-    """OPTIMIZE FINAL for the inverted-lists table: every
-    `ann_ivf_store_search`-style insert batch appends one file group,
-    so a long-running insert loop accumulates one tiny parquet file
-    per batch — the same unmerged-parts failure mode the signature
-    store has (VERDICT r9/r10 item: IVF store maintenance). Rewrites
-    the lists into `n_files` files sorted by list_id, which is ALSO
-    the search-time access pattern: probes read whole lists, so
-    list_id locality tightens row-group min/max pruning for the
-    lists join. Same crash-safe rename-aside swap as the signature
-    store. This is ALSO the retraction fold point: the rewrite reads
-    the LIVE view (tombstone sidecar composed) and retires the
-    sidecar after the swap — ONE O(index) write covers both jobs
-    (self-review r14: fold-then-compact was two full rewrites per
-    maintenance pass); `fold_ivf_retractions` stays for a fold with
-    no compaction need. Search-result invariance before/after is
-    CI-pinned by re-running `ivf_store_search_plan` against the
-    compacted table (tests/test_ann_store.py). Returns
-    {files_before, files_after, rewrote, folded} — built from what
-    ACTUALLY happened, not a pre-call sidecar probe (ADVICE r14: an
-    empty crash-remnant sidecar dir on an already-compact table used
-    to report folded=true without folding, and a fold rewrite that
-    RAISED the file count was reported as min(before, target)). An
-    already-compact table with NO pending sidecar is left untouched.
-    WRITER — one maintainer per artifact set (module docstring
-    MAINTAINER CONTRACT); its swaps retry through racing reader
-    heals (`_swap_aside`).
-    A codes sibling (`ivf_codes_path`) is folded in the same pass:
-    tombstoned vectors' codes rows are anti-joined away — the
-    takedown contract covers derived representations, not just list
-    membership (VERDICT r14). Centroid refresh is intentionally NOT
-    done here: the insert ≡ rebuild equivalence (module docstring)
-    holds only for a frozen codebook, and refreshing centroids is a
-    reindex, not a maintenance pass — that is `refresh_ivf_centroids`
-    below, with its own recall-pinned probe
-    (`ann_ivf_refresh_recall`)."""
-    import glob
-    import os
-
-    storage.heal_swap(lists_path)
-    tomb_path = ivf_tombstones_path(lists_path)
-    tomb = storage.read_sidecar(spark, tomb_path)
-    has_tomb = tomb is not None
-    files = glob.glob(os.path.join(lists_path, "*.parquet"))
-    if not has_tomb and len(files) <= n_files:
-        # an empty/remnant sidecar DIR (crashed first write) on an
-        # already-compact table: nothing to fold — clean the remnant
-        # so the next probe doesn't see phantom state
-        if os.path.isdir(tomb_path):
-            storage.retire_sidecar(tomb_path)
-        return {
-            "files_before": len(files),
-            "files_after": len(files),
-            "rewrote": False,
-            "folded": False,
-        }
-    storage.commit(
-        lists_path,
-        live_ivf_lists(spark, lists_path)
-        .repartition(n_files)
-        .sortWithinPartitions("list_id")
-        .write.parquet,
-    )
-    codes_p = ivf_codes_path(lists_path)
-    storage.heal_swap(codes_p)
-    if has_tomb and os.path.isdir(codes_p):
-        # fold the takedown into the DERIVED representation too: a
-        # tombstoned vector's PQ codes leave disk with the same pass
-        # that rewrites the lists (they were already query-invisible
-        # — candidates come from live lists — but takedown means
-        # REMOVED, and the rows otherwise accumulate unboundedly
-        # under an insert+retract loop)
-        storage.commit(
-            codes_p,
-            spark.read.parquet(codes_p)
-            .join(tomb.select("vec_id"), "vec_id", "left_anti")
-            .repartition(n_files)
-            .sortWithinPartitions("vec_id")
-            .write.parquet,
+        write_table(
+            _ivfpq_codes(resid, spark.read.parquet(pq_p)), codes_p, "append"
         )
-    if has_tomb:
-        storage.retire_sidecar(tomb_path)
-    return {
-        "files_before": len(files),
-        "files_after": len(
-            glob.glob(os.path.join(lists_path, "*.parquet"))
-        ),
-        "rewrote": True,
-        "folded": has_tomb,
-    }
-
-
-# Auto-compact thresholds (round 17 — the file-count third of the
-# maintenance triad beside maybe_rebucket_table and
-# maybe_split_ivf_lists): every insert batch appends ≥1 parquet file
-# to the lists (and codes), so a long-running stream accumulates one
-# tiny file per micro-batch — the unmerged-parts failure mode.
-# Measured locally (128 k-row lists, 10-query search, median-of-3):
-# 1.24 s at 512 files, 1.69 at 2048, 2.93 at 4096, 3.79 at 8192 —
-# flat basin to ~512, then ~linear listing/open/task overhead per
-# file (worse on object stores, where listing is a network call per
-# batch). Trigger at the basin's edge; target files sized at the
-# scan-split granularity (parquet is splittable, so FEW LARGE files
-# lose no read parallelism — Spark re-splits them at
-# maxPartitionBytes anyway).
-_COMPACT_TRIGGER_FILES = 1024
-_COMPACT_TARGET_BYTES = 128 * 1024 * 1024
-
-
-def maybe_compact_ivf_lists(
-    spark: SparkSession,
-    lists_path: str,
-    *,
-    trigger_files: int = _COMPACT_TRIGGER_FILES,
-    target_bytes: int = _COMPACT_TARGET_BYTES,
-) -> dict:
-    """The automated compaction decision for a persisted IVF index —
-    run by `ivf_insert_batch` after its appends (so BOTH the
-    insert-vectors CLI and the streaming foreachBatch leg amortize
-    compaction into the insert cadence with zero caller changes;
-    one directory listing per batch is the whole cost of the check).
-    When the lists' file count crosses `trigger_files`, run
-    `compact_ivf_lists` down to ceil(bytes / target_bytes) files
-    (which also folds any pending tombstone sidecar — a triggered
-    compaction IS a fold, same contract as compact-store); a codes
-    sibling whose own file count crossed the trigger is rewritten
-    vec_id-sorted to the same sizing in the same pass (the plain
-    compactor only rewrites codes when folding a takedown, so a
-    streamed IVF-PQ index accumulates codes files independently).
-    Returns {"compacted": bool, "files": n, "codes_compacted":
-    bool}. The occasional O(index) rewrite inside one micro-batch is
-    the LSM amortization trade; a crash mid-compact heals through
-    the compactor's own swap recovery. WRITER — one maintainer per
-    artifact set (module docstring MAINTAINER CONTRACT)."""
-    import glob
-    import math
-    import os
-
-    files = glob.glob(os.path.join(lists_path, "*.parquet"))
-    out = {"compacted": False, "files": len(files), "codes_compacted": False}
-    codes_p = ivf_codes_path(lists_path)
-    folded_codes = False
-    if len(files) > trigger_files:
-        total = sum(os.path.getsize(f) for f in files)
-        res = compact_ivf_lists(
-            spark, lists_path,
-            n_files=max(1, math.ceil(total / target_bytes)),
-        )
-        out["compacted"] = True
-        # a fold inside the triggered compaction already rewrote the
-        # codes sibling — don't pay a second O(codes) rewrite in the
-        # same micro-batch (ADVICE r17; the cfiles glob below is
-        # taken post-compact, but the explicit guard keeps the
-        # single-rewrite invariant independent of the fold's sizing)
-        folded_codes = res["folded"] and os.path.isdir(codes_p)
-    if os.path.isdir(codes_p):
-        storage.heal_swap(codes_p)
-        cfiles = glob.glob(os.path.join(codes_p, "*.parquet"))
-        if not folded_codes and len(cfiles) > trigger_files:
-            total = sum(os.path.getsize(f) for f in cfiles)
-            storage.commit(
-                codes_p,
-                spark.read.parquet(codes_p)
-                .repartition(max(1, math.ceil(total / target_bytes)))
-                .sortWithinPartitions("vec_id")
-                .write.parquet,
-            )
-            out["codes_compacted"] = True
     return out
 
 
@@ -802,6 +642,8 @@ def reencode_ivf_codes(
     every live indexed vector — enforced, because the resid inner
     join would otherwise DROP missing vectors' codes silently.
     Swap-written; returns the re-encoded row count's vector count."""
+    import os
+
     codes_path = codes_path or ivf_codes_path(lists_path)
     cent = spark.read.parquet(codebook_path).select(
         "c_id", F.col("q").alias("cq")
@@ -824,7 +666,16 @@ def reencode_ivf_codes(
             f"vector ({n_resid} of {n_live} matched) — pass the full "
             "corpus, or fold/retract missing vectors first"
         )
-    storage.commit(codes_path, _ivfpq_codes(resid, pq_cb).write.parquet)
+    # a rewrite keeps the live bucket count (only compact-store
+    # re-buckets); a first build sizes it from the rows
+    buckets = table_layout(codes_path)["buckets"] if os.path.isdir(codes_path) else None
+    storage.commit(
+        codes_path,
+        lambda staging: write_table(
+            _ivfpq_codes(resid, pq_cb), staging, "overwrite",
+            key=_CODES_KEY, buckets=buckets,
+        ),
+    )
     return n_resid
 
 
@@ -865,8 +716,8 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Exact-rerank refinement pool: ADC keeps 3×k candidates, the exact
 # pass re-scores only those — the FAISS refine/RFlat shape (public
-# method). 3× is the conventional default; tools/recall_frontier.py
-# measures what the refinement buys at production geometry.
+# method). 3× is the conventional default; SCALE.md records what the
+# refinement bought at production geometry.
 _RERANK_POOL = 3 * _IVF_TOPK
 
 
@@ -929,8 +780,8 @@ def ivfpq_rerank_store_plan(
     persisted four-artifact index, exact re-rank on raw vectors from
     the corpus table `qn` (the store keeps codes, not raw vectors —
     refinement reads the corpus, pool-bounded). This is the named
-    binder for the PQ-resolution recall gap tools/recall_frontier.py
-    measures: coverage losses need more nprobe, resolution losses
+    binder for the PQ-resolution recall gap SCALE.md's recall
+    frontier measured: coverage losses need more nprobe, resolution losses
     need exactly this."""
     adc = ivfpq_store_search_plan(
         spark, queries, codebook_path, lists_path, codes_path, nprobe, pool
@@ -946,7 +797,7 @@ def ann_ivfpq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the final top-k. Compression accelerates the scan; the
     refinement removes its ranking error for candidates that
     survive — recall approaches the probe-coverage ceiling at
-    pool-bounded raw I/O (tools/recall_frontier.py separates the
+    pool-bounded raw I/O (SCALE.md's recall frontier separates the
     two loss terms; this operator is the binder for the resolution
     term). The oracle composes the full trained-PQ spelling
     (`_ivfpq_sql`, pool-sized) with the exact BIGINT distance on the
@@ -975,7 +826,7 @@ def _ivfpq_parts(
     """The shared IVF-side frames of the IVF-PQ proof op: (cent,
     centv, lists, probes, resid) over the in-memory index the
     md5-derived centroid constants define. `nprobe` is the
-    recall/cost knob (tools/pq_recall.py sweeps it; the oracle proof
+    recall/cost knob (its sweep is in SCALE.md; the oracle proof
     pins _N_PROBE)."""
     cent = qn.where(F.col("vec_id").isin(_CENTROID_IDS)).select(
         F.col("vec_id").alias("c_id"), "q", "nq"
@@ -1169,11 +1020,13 @@ def ivfpq_store_search_plan(
     died mid-rename doesn't take the read path down with it."""
     for p in (codebook_path, codes_path, pq_codebook_path(codebook_path)):
         storage.heal_swap(p)
+    lists = live_ivf_lists(spark, lists_path)
+    require_tables(codes_path)
     return _ivfpq_query(
         queries,
         spark.read.parquet(codebook_path),
-        live_ivf_lists(spark, lists_path),
-        spark.read.parquet(codes_path),
+        lists,
+        read_table(spark, codes_path),
         spark.read.parquet(pq_codebook_path(codebook_path)),
         nprobe,
         k,
@@ -1209,7 +1062,7 @@ def ann_ivfpq_store_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     cb_path = root + "/codebook"
     lists_path = root + "/lists"
     # the maintenance-pass convention (`ivf_codes_path`): the codes
-    # table is a lifecycle citizen — compact/fold/refresh/split find
+    # table is a lifecycle citizen — fold/compact/refresh/split find
     # it beside the lists
     codes_path = ivf_codes_path(lists_path)
 
@@ -1221,9 +1074,7 @@ def ann_ivfpq_store_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).coalesce(1).write.mode("overwrite").parquet(cb_path)
     cent_d = spark.read.parquet(cb_path)
     base = qn.where(F.pmod(F.col("vec_id"), F.lit(_INSERT_MOD)) != 0)
-    _assign(base, cent_d, 1).select(
-        F.col("v_id").alias("n_id"), F.col("c_id").alias("list_id")
-    ).write.mode("overwrite").parquet(lists_path)
+    assign_lists(spark, base, cb_path, lists_path)
     train_pq_codebook(spark, base, cb_path, lists_path)
     pq_d = spark.read.parquet(pq_codebook_path(cb_path))
     centv_d = cent_d.select("c_id", F.col("q").alias("cq"))
@@ -1238,19 +1089,20 @@ def ann_ivfpq_store_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    _ivfpq_codes(
-        resid_of(base, spark.read.parquet(lists_path)), pq_d
-    ).write.mode("overwrite").parquet(codes_path)
+    write_table(
+        _ivfpq_codes(resid_of(base, read_table(spark, lists_path)), pq_d),
+        codes_path,
+        "overwrite",
+        key=_CODES_KEY,
+    )
 
     # 2. INSERT through the persisted codebooks only
     batch = qn.where(F.pmod(F.col("vec_id"), F.lit(_INSERT_MOD)) == 0)
     b_lists = _assign(batch, cent_d, 1).select(
         F.col("v_id").alias("n_id"), F.col("c_id").alias("list_id")
     )
-    b_lists.write.mode("append").parquet(lists_path)
-    _ivfpq_codes(resid_of(batch, b_lists), pq_d).write.mode("append").parquet(
-        codes_path
-    )
+    write_table(b_lists, lists_path, "append")
+    write_table(_ivfpq_codes(resid_of(batch, b_lists), pq_d), codes_path, "append")
 
     # 3. QUERY through the on-disk index
     out = ivfpq_store_search_plan(
@@ -1267,7 +1119,7 @@ def ann_ivfpq_store_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------- IVF centroid refresh
 #
-# VERDICT r11 #4: lists compact (`compact_ivf_lists`) but centroids
+# VERDICT r11 #4: lists compact (compact-store) but centroids
 # never retrain, so recall degrades SILENTLY as an insert loop
 # drifts the corpus away from the build-time codebook — the index
 # keeps answering, just increasingly badly. The maintenance pass is
@@ -1294,8 +1146,9 @@ def refresh_ivf_centroids(
     every indexed vector (vec_id, q, nq); lists whose members all
     vanished keep their old centroid (a production corpus can shrink;
     an empty M-step group must not drop the list id). Swap order is
-    codebook THEN lists, each through the compactors' rename-aside
-    discipline; a crash between the two swaps leaves the NEW codebook
+    codebook THEN lists, each through the `storage` whole-table
+    swap, the lists written into their staging dir through
+    `write_table` with the live bucket count; a crash between the two swaps leaves the NEW codebook
     over the OLD lists — searches stay self-consistent (probes and
     lists join on list_id either way), only recall is stale, and
     re-running the refresh repairs it deterministically: the M-step
@@ -1305,7 +1158,7 @@ def refresh_ivf_centroids(
 
     WRITER — one maintainer per artifact set (module docstring
     MAINTAINER CONTRACT): do not run beside a live insert stream
-    (the stream's auto-compact is itself a writer)."""
+    (the stream's appends are themselves writes)."""
     import os
 
     cb_staging = storage.stage(codebook_path)
@@ -1316,6 +1169,7 @@ def refresh_ivf_centroids(
     # covers live members only, the refresh doubles as the fold point
     # (the sidecar is retired after the swap)
     lists = live_ivf_lists(spark, lists_path)
+    buckets = table_layout(lists_path)["buckets"]
     member_vecs = qn.join(
         lists.select(F.col("n_id").alias("vec_id")), "vec_id", "left_semi"
     )
@@ -1359,7 +1213,7 @@ def refresh_ivf_centroids(
     lists1 = _assign(member_vecs, spark.read.parquet(cb_staging), 1).select(
         F.col("v_id").alias("n_id"), F.col("c_id").alias("list_id")
     )
-    lists1.write.mode("overwrite").parquet(li_staging)
+    write_table(lists1, li_staging, "overwrite", key=_LISTS_KEY, buckets=buckets)
 
     # stats BEFORE the swap (reads old + staged tables). ONE driver
     # action (r19, guide §1.2): the four stat subtrees — centroid
@@ -1368,7 +1222,7 @@ def refresh_ivf_centroids(
     # independent single-row aggregations, so a crossJoin runs them
     # as concurrent stages of one job instead of four sequential
     # fixed-cost actions.
-    new_lists = spark.read.parquet(li_staging)
+    new_lists = read_table(spark, li_staging)
     rstats = (
         spark.read.parquet(cb_staging)
         .agg(F.count(F.lit(1)).alias("n_lists"))
@@ -1541,8 +1395,9 @@ def split_ivf_lists(
     # pin); the LIVE view drives everything semantic — the over-budget
     # gate, the member assignment, the new centroids — so tombstoned
     # vectors neither vote nor need qn coverage
-    lists = spark.read.parquet(lists_path)
     lists_live = live_ivf_lists(spark, lists_path)
+    lists = read_table(spark, lists_path)
+    buckets = table_layout(lists_path)["buckets"]
     cb = spark.read.parquet(codebook_path)
     sizes = lists_live.groupBy("list_id").count()
     # metadata-tier collects: bounded by the CODEBOOK size (one row
@@ -1718,9 +1573,9 @@ def split_ivf_lists(
     ).unionByName(relabel.select("n_id", "list_id"))
 
     cb1.coalesce(1).write.mode("overwrite").parquet(cb_staging)
-    lists1.write.mode("overwrite").parquet(li_staging)
+    write_table(lists1, li_staging, "overwrite", key=_LISTS_KEY, buckets=buckets)
     max_after = (
-        spark.read.parquet(li_staging)
+        read_table(spark, li_staging)
         .groupBy("list_id")
         .count()
         .agg(F.max("count"))
@@ -1797,7 +1652,7 @@ def maybe_split_ivf_lists(
     trigger/target gap already implies. Balanced corpora converge in
     ~log2(max/target) rounds; the measured worst case is extreme tie
     geometry (a hot list of replicated identical vectors sheds one
-    vector-group per round — tools/split_scale.py, SCALE.md), where
+    vector-group per round — SCALE.md), where
     the cap is exactly what bounds the pass. The gate is one
     O(index) two-column aggregate inside a pass that is O(index)
     anyway (refresh reassigns every vector). `qn` must cover every
@@ -1961,18 +1816,14 @@ def ann_ivf_refresh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).coalesce(1).write.mode("overwrite").parquet(codebook_path)
 
     def _build_lists() -> None:
-        cb_disk = spark.read.parquet(codebook_path)
-        _assign(qn0.select("vec_id", "q", "nq"), cb_disk, 1).select(
-            F.col("v_id").alias("n_id"), F.col("c_id").alias("list_id")
-        ).write.mode("overwrite").parquet(lists_path)
+        assign_lists(
+            spark, qn0.select("vec_id", "q", "nq"), codebook_path, lists_path
+        )
         # drifted INSERT through the stale codebook
-        _assign(
-            corpus.where(F.col("vec_id") >= _DRIFT_ID_OFFSET),
-            spark.read.parquet(codebook_path),
-            1,
-        ).select(
-            F.col("v_id").alias("n_id"), F.col("c_id").alias("list_id")
-        ).write.mode("append").parquet(lists_path)
+        assign_lists(
+            spark, corpus.where(F.col("vec_id") >= _DRIFT_ID_OFFSET),
+            codebook_path, lists_path, "append",
+        )
 
     overlap(brute.count, _build_lists)
 
@@ -2022,8 +1873,8 @@ def _ivfpq_search_hits(
 def ann_ivfpq_refresh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The IVF-PQ sibling of `ann_ivf_refresh_recall` — the oracle
     row for the r14 recall-recovery story (VERDICT r14 #4, measured
-    in SCALE.md as 0.033 → 0.200 but pinned until now only by
-    tools/pq_recall_lloyd.py): build the four-artifact persisted
+    in SCALE.md as 0.033 → 0.200 and pinned before only by a
+    one-off measurement script): build the four-artifact persisted
     IVF-PQ index on the original vectors (coarse codebook from the
     md5-derived corpus points, lists, BASE-trained residual PQ
     codebook, codes), INSERT a drifted copy of the corpus purely
@@ -2078,9 +1929,7 @@ def ann_ivfpq_refresh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _build_index() -> None:
         cent_d = spark.read.parquet(codebook_path)
-        _assign(qn0, cent_d, 1).select(
-            F.col("v_id").alias("n_id"), F.col("c_id").alias("list_id")
-        ).write.mode("overwrite").parquet(lists_path)
+        assign_lists(spark, qn0, codebook_path, lists_path)
         train_pq_codebook(spark, qn0, codebook_path, lists_path)
         pq_d = spark.read.parquet(pq_codebook_path(codebook_path))
         centv_d = cent_d.select("c_id", F.col("q").alias("cq"))
@@ -2097,9 +1946,12 @@ def ann_ivfpq_refresh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
 
-        _ivfpq_codes(
-            resid_of(qn0, spark.read.parquet(lists_path)), pq_d
-        ).write.mode("overwrite").parquet(codes_path)
+        write_table(
+            _ivfpq_codes(resid_of(qn0, read_table(spark, lists_path)), pq_d),
+            codes_path,
+            "overwrite",
+            key=_CODES_KEY,
+        )
 
         # drifted INSERT purely through the stale persisted codebooks;
         # the assignment frame is CACHED because two consumers read it
@@ -2109,10 +1961,10 @@ def ann_ivfpq_refresh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         b_lists = _assign(drift, cent_d, 1).select(
             F.col("v_id").alias("n_id"), F.col("c_id").alias("list_id")
         ).cache()
-        b_lists.write.mode("append").parquet(lists_path)
-        _ivfpq_codes(resid_of(drift, b_lists), pq_d).write.mode(
-            "append"
-        ).parquet(codes_path)
+        write_table(b_lists, lists_path, "append")
+        write_table(
+            _ivfpq_codes(resid_of(drift, b_lists), pq_d), codes_path, "append"
+        )
         b_lists.unpersist()
 
     overlap(brute.count, _build_index)

@@ -506,27 +506,6 @@ _PQ_TOPK = 3
 _PQ_N_QUERIES = 10
 
 
-def _pq_codebook() -> list[tuple[int, int, list[int]]]:
-    """(sub, code, centroid[8]) — md5-derived integer centroids in the
-    quantized embedding domain [-10000, 10000]. Retained ONLY as the
-    recall baseline for the trained codebook (tools/pq_recall.py,
-    SCALE.md): production PQ trains per-subspace centroids
-    (`_pq_train_cb` below) — a data-blind random codebook wastes most
-    of its codes on empty regions."""
-    return [
-        (
-            s,
-            c,
-            [
-                (_h32_py(f"pq|{s}|{c}|{d}") % 20001) - 10000
-                for d in range(_PQ_SUBDIM)
-            ],
-        )
-        for s in range(_PQ_SUBS)
-        for c in range(_PQ_CODES)
-    ]
-
-
 def _pq_train_cb(src: DataFrame) -> DataFrame:
     """Train the PQ codebook: per subspace, ONE exact Lloyd iteration
     of k-means over the subvectors, seeded deterministically with the
@@ -659,7 +638,7 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration per subspace from deterministic seeds — VERDICT r12
     #5), not the md5 literal it used to be: measured recall@3
     against exact-L2 top-3 at sf0.1 jumped with the switch
-    (tools/pq_recall.py, SCALE.md). The trained frame is 128 rows —
+    (SCALE.md). The trained frame is 128 rows —
     still broadcast."""
     qn = _quantized(spark, sf_dir)
     cb = _pq_train_cb(qn)

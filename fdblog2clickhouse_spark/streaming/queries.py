@@ -804,7 +804,7 @@ def streaming_ivf_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch assigns itself against the persisted codebook
     (`ivf_insert_batch` — THE shared insert kernel, also behind the
     insert-vectors CLI) and APPENDS its (n_id, list_id) rows to the
-    on-disk lists table. Codebooks are never retrained by an insert
+    on-disk lists table (a key-bucketed table of `tables`). Codebooks are never retrained by an insert
     (refresh-ivf's job), so the index the final search reads is
     byte-equivalent to the batch lifecycle's. Because the kernel is
     shared, a codes-bearing IVF-PQ target gets its residual PQ codes
@@ -827,7 +827,7 @@ def streaming_ivf_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     (checkpointed availableNow drain, per-batch codebook reads,
     append visibility across batches) plus the index roundtrip."""
     from ..operators.ann_store import (
-        _assign,
+        assign_lists,
         ivf_insert_batch,
         ivf_store_search_plan,
     )
@@ -848,9 +848,7 @@ def streaming_ivf_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("c_id"), "q", "nq"
     ).write.mode("overwrite").parquet(codebook_path)
     base = qn.where(F.pmod(F.col("vec_id"), F.lit(10)) != 0)
-    _assign(base, spark.read.parquet(codebook_path), 1).select(
-        F.col("v_id").alias("n_id"), F.col("c_id").alias("list_id")
-    ).write.mode("overwrite").parquet(lists_path)
+    assign_lists(spark, base, codebook_path, lists_path)
 
     # arrivals: the insert slice as 4 integer-exact JSON rotations
     qn.where(F.pmod(F.col("vec_id"), F.lit(10)) == 0).select(

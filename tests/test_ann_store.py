@@ -4,7 +4,25 @@ from __future__ import annotations
 
 from fdblog2clickhouse_spark import storage
 from fdblog2clickhouse_spark.operators import ann_store, similarity
+from fdblog2clickhouse_spark.operators.tables import read_table, write_table
 from tests.oracle import compare
+
+
+def _write_lists(df, path):
+    """Build an inverted-lists table the way the package does: a
+    key-bucketed table on list_id."""
+    write_table(df, path, "overwrite", key="list_id")
+
+
+def _tree(path):
+    """{relative path: bytes} of every data file under a table dir."""
+    import glob
+    import os
+
+    return {
+        os.path.relpath(f, path): open(f, "rb").read()
+        for f in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
+    }
 
 
 def test_store_search_matches_oracle(spark, sf_oracle):
@@ -39,23 +57,24 @@ def test_lists_table_covers_every_vector(spark, sf_oracle):
     ann_store.ann_ivf_store_search(spark, sf_oracle)
     from fdblog2clickhouse_spark.sources.tables import table
 
-    lists = spark.read.parquet(os.path.join(scratch_path("ivf_store"), "lists"))
+    lists = read_table(spark, os.path.join(scratch_path("ivf_store"), "lists"))
     n = table(spark, sf_oracle, "embeddings").count()
     assert lists.count() == n
     assert lists.select("n_id").distinct().count() == n
 
 
 def test_ivf_lists_compaction_preserves_search(spark, sf_oracle):
-    """`compact_ivf_lists` is OPTIMIZE FINAL for the inverted lists:
-    after build + incremental insert leave multiple file groups,
-    compaction must shrink the table to one list_id-sorted file
-    without changing a single assignment row — so re-running the
-    query-node search plan against the compacted table returns
-    byte-identical results. This is the invariance pin
-    `ivf_store_search_plan`'s docstring promises."""
+    """compact-store is OPTIMIZE FINAL for the inverted lists: after
+    build + incremental insert leave several files in a bucket, the
+    pass leaves one list_id-sorted file per bucket without changing a
+    single assignment row — so re-running the query-node search plan
+    against the compacted table returns byte-identical results. This
+    is the invariance pin `ivf_store_search_plan`'s docstring
+    promises."""
     import glob
     import os
 
+    from fdblog2clickhouse_spark import cli
     from fdblog2clickhouse_spark.operators.dedup import _quantized
     from fdblog2clickhouse_spark.operators.sinkcheck import scratch_path
 
@@ -64,14 +83,15 @@ def test_ivf_lists_compaction_preserves_search(spark, sf_oracle):
     )
     root = scratch_path("ivf_store")
     lists_path = os.path.join(root, "lists")
-    n_before = len(glob.glob(os.path.join(lists_path, "*.parquet")))
-    assert n_before > 1, "expected one file group per insert batch"
-    rows_before = sorted(map(tuple, spark.read.parquet(lists_path).collect()))
+    parts = glob.glob(os.path.join(lists_path, "pb=*"))
+    counts = [len(glob.glob(os.path.join(d, "*.parquet"))) for d in parts]
+    assert max(counts) > 1, "expected one file per bucket per write"
+    rows_before = sorted(map(tuple, read_table(spark, lists_path).collect()))
 
-    r = ann_store.compact_ivf_lists(spark, lists_path)
-    assert r["files_before"] == n_before and r["rewrote"]
-    assert len(glob.glob(os.path.join(lists_path, "*.parquet"))) == 1
-    assert sorted(map(tuple, spark.read.parquet(lists_path).collect())) == rows_before
+    assert cli.main(["compact-store", lists_path]) == 0
+    for d in parts:
+        assert len(glob.glob(os.path.join(d, "*.parquet"))) == 1
+    assert sorted(map(tuple, read_table(spark, lists_path).collect())) == rows_before
 
     after = sorted(
         map(
@@ -169,9 +189,9 @@ def _ivf_hit_sets(spark, qn, cb_path, lists_path, query_ids, topk):
 
     queries = qn.where(F.col("vec_id").isin(query_ids))
     probes = ann_store._assign(
-        queries, spark.read.parquet(cb_path), 1
+        queries, read_table(spark, cb_path), 1
     ).select(F.col("v_id").alias("q_id"), F.col("c_id").alias("probe_list"))
-    lists = spark.read.parquet(lists_path)
+    lists = read_table(spark, lists_path)
     qv = queries.select(
         F.col("vec_id").alias("q_id"), F.col("q").alias("qa"), F.col("nq").alias("na")
     )
@@ -213,9 +233,7 @@ def test_refresh_recovers_straddled_cluster_recall(spark, tmp_path):
     qn.where(qn.vec_id.isin([200, 300])).selectExpr(
         "vec_id AS c_id", "q", "nq"
     ).coalesce(1).write.parquet(cb)
-    ann_store._assign(qn, spark.read.parquet(cb), 1).selectExpr(
-        "v_id AS n_id", "c_id AS list_id"
-    ).write.parquet(li)
+    ann_store.assign_lists(spark, qn, cb, li)
 
     ivf0, brute = _ivf_hit_sets(spark, qn, cb, li, [400, 401], 8)
     assert len(brute) == 16
@@ -246,17 +264,15 @@ def test_refresh_crash_repair_is_deterministic(spark, tmp_path):
         qn.where(qn.vec_id.isin([200, 300])).selectExpr(
             "vec_id AS c_id", "q", "nq"
         ).coalesce(1).write.parquet(cb)
-        ann_store._assign(qn, spark.read.parquet(cb), 1).selectExpr(
-            "v_id AS n_id", "c_id AS list_id"
-        ).write.parquet(li)
+        ann_store.assign_lists(spark, qn, cb, li)
         return cb, li
 
     def state(cb, li):
         cents = sorted(
-            (r["c_id"], tuple(r["q"])) for r in spark.read.parquet(cb).collect()
+            (r["c_id"], tuple(r["q"])) for r in read_table(spark, cb).collect()
         )
         lists = sorted(
-            (r["n_id"], r["list_id"]) for r in spark.read.parquet(li).collect()
+            (r["n_id"], r["list_id"]) for r in read_table(spark, li).collect()
         )
         return cents, lists
 
@@ -267,14 +283,17 @@ def test_refresh_crash_repair_is_deterministic(spark, tmp_path):
     # crash BETWEEN the swaps: codebook already new, lists still old
     cb_b, li_b = build(str(tmp_path / "midswap"))
     old_lists = sorted(
-        (r["n_id"], r["list_id"]) for r in spark.read.parquet(li_b).collect()
+        (r["n_id"], r["list_id"]) for r in read_table(spark, li_b).collect()
     )
     ann_store.refresh_ivf_centroids(spark, qn, cb_b, li_b)
     # rewind the lists side only (new codebook over old lists)
     shutil.rmtree(li_b)
-    spark.createDataFrame(
-        [(n, l) for n, l in old_lists], "n_id long, list_id long"
-    ).write.parquet(li_b)
+    _write_lists(
+        spark.createDataFrame(
+            [(n, l) for n, l in old_lists], "n_id long, list_id long"
+        ),
+        li_b,
+    )
     ann_store.refresh_ivf_centroids(spark, qn, cb_b, li_b)
     assert state(cb_b, li_b) == want
 
@@ -316,9 +335,7 @@ def _skew_index(spark, tmp_path, qn):
         [(c, q, sum(x * x for x in q)) for c, q in cents],
         "c_id long, q array<long>, nq long",
     ).coalesce(1).write.parquet(cb)
-    ann_store._assign(qn, spark.read.parquet(cb), 1).selectExpr(
-        "v_id AS n_id", "c_id AS list_id"
-    ).write.parquet(li)
+    ann_store.assign_lists(spark, qn, cb, li)
     return cb, li
 
 
@@ -331,14 +348,14 @@ def test_split_ivf_lists_bounds_hot_list_and_reseeds(spark, tmp_path):
     cb, li = _skew_index(spark, tmp_path, qn)
     sizes0 = {
         r["list_id"]: r["count"]
-        for r in spark.read.parquet(li).groupBy("list_id").count().collect()
+        for r in read_table(spark, li).groupBy("list_id").count().collect()
     }
     assert sizes0 == {7000: 30, 8000: 3}
     cold_rows0 = {
         (r["n_id"], r["list_id"])
-        for r in spark.read.parquet(li).where("list_id = 8000").collect()
+        for r in read_table(spark, li).where("list_id = 8000").collect()
     }
-    cold_cent0 = spark.read.parquet(cb).where("c_id = 8000").collect()
+    cold_cent0 = read_table(spark, cb).where("c_id = 8000").collect()
 
     stats = ann_store.split_ivf_lists(spark, qn, cb, li, max_list=20)
     assert stats["split"] == 1
@@ -347,7 +364,7 @@ def test_split_ivf_lists_bounds_hot_list_and_reseeds(spark, tmp_path):
 
     sizes1 = {
         r["list_id"]: r["count"]
-        for r in spark.read.parquet(li).groupBy("list_id").count().collect()
+        for r in read_table(spark, li).groupBy("list_id").count().collect()
     }
     assert sizes1[8000] == 3
     assert sizes1[7000] + sizes1[9000] == 30
@@ -355,7 +372,7 @@ def test_split_ivf_lists_bounds_hot_list_and_reseeds(spark, tmp_path):
     # the two lobes separate exactly
     lobe = {
         r["n_id"]: r["list_id"]
-        for r in spark.read.parquet(li).where("list_id <> 8000").collect()
+        for r in read_table(spark, li).where("list_id <> 8000").collect()
     }
     assert len({lobe[100 + i] for i in range(15)}) == 1
     assert len({lobe[200 + i] for i in range(15)}) == 1
@@ -363,11 +380,11 @@ def test_split_ivf_lists_bounds_hot_list_and_reseeds(spark, tmp_path):
     # untouched list: rows AND centroid identical
     assert {
         (r["n_id"], r["list_id"])
-        for r in spark.read.parquet(li).where("list_id = 8000").collect()
+        for r in read_table(spark, li).where("list_id = 8000").collect()
     } == cold_rows0
-    assert spark.read.parquet(cb).where("c_id = 8000").collect() == cold_cent0
+    assert read_table(spark, cb).where("c_id = 8000").collect() == cold_cent0
     # every list id still has a centroid; no id vanished
-    assert {r["c_id"] for r in spark.read.parquet(cb).collect()} == {
+    assert {r["c_id"] for r in read_table(spark, cb).collect()} == {
         7000, 8000, 9000,
     }
 
@@ -380,10 +397,10 @@ def test_split_ivf_lists_skips_degenerate_and_under_budget(spark, tmp_path):
         "vec_id long, q array<long>, nq long",
     )
     cb, li = _skew_index(spark, tmp_path, qn)
-    before = sorted(map(tuple, spark.read.parquet(li).collect()))
+    before = sorted(map(tuple, read_table(spark, li).collect()))
     stats = ann_store.split_ivf_lists(spark, qn, cb, li, max_list=4)
     assert stats["split"] == 0
-    assert sorted(map(tuple, spark.read.parquet(li).collect())) == before
+    assert sorted(map(tuple, read_table(spark, li).collect())) == before
 
     stats = ann_store.split_ivf_lists(spark, qn, cb, li, max_list=100)
     assert stats == {"split": 0, "reseeded": 0, "max_list_after": None}
@@ -397,8 +414,8 @@ def test_store_search_composes_tombstones(spark, sf_oracle):
     index's search WITHOUT a physical rewrite — retract_ivf_vectors
     writes only the tombstone sidecar, ivf_store_search_plan composes
     it (results identical to an index that never held the vectors),
-    and compact_ivf_lists is the fold point that rewrites once and
-    retires the sidecar."""
+    and compact-store's fold rewrites only the buckets holding the
+    victims and retires the sidecar."""
     import os
 
     from fdblog2clickhouse_spark.operators.dedup import _quantized
@@ -416,10 +433,10 @@ def test_store_search_composes_tombstones(spark, sf_oracle):
     # retract two vectors that actually appear as neighbors — the
     # invariance claim is then non-vacuous
     victims = sorted({r["n_id"] for r in before})[:2]
-    files_before = sorted(os.listdir(lists_path))
+    files_before = _tree(lists_path)
     ids = spark.createDataFrame([(v,) for v in victims], "doc_id long")
     retract_ivf_vectors(spark, lists_path, ids)
-    assert sorted(os.listdir(lists_path)) == files_before  # NO rewrite
+    assert _tree(lists_path) == files_before  # NO rewrite
 
     got = sorted(
         map(
@@ -436,8 +453,8 @@ def test_store_search_composes_tombstones(spark, sf_oracle):
 
     with tempfile.TemporaryDirectory() as td:
         lists2 = os.path.join(td, "lists")
-        raw = spark.read.parquet(lists_path)
-        raw.where(~raw["n_id"].isin(victims)).write.parquet(lists2)
+        raw = read_table(spark, lists_path)
+        _write_lists(raw.where(~raw["n_id"].isin(victims)), lists2)
         want = sorted(
             map(
                 tuple,
@@ -448,10 +465,12 @@ def test_store_search_composes_tombstones(spark, sf_oracle):
         )
     assert got == want
 
-    # the fold point: compaction folds + retires, search unchanged
-    ann_store.compact_ivf_lists(spark, lists_path)
+    # the fold point: compact-store folds + retires, search unchanged
+    from fdblog2clickhouse_spark import cli
+
+    assert cli.main(["compact-store", lists_path]) == 0
     assert not os.path.isdir(ivf_tombstones_path(lists_path))
-    folded = spark.read.parquet(lists_path)
+    folded = read_table(spark, lists_path)
     assert folded.where(folded["n_id"].isin(victims)).count() == 0
     after = sorted(
         map(
@@ -496,10 +515,10 @@ def test_split_ignores_tombstoned_vectors(spark, tmp_path):
     )
     assert stats["split"] == 1
     # the retracted row is gone from the (rewritten) hot list
-    assert spark.read.parquet(li).where("n_id = 100").count() == 0
+    assert read_table(spark, li).where("n_id = 100").count() == 0
     sizes = {
         r["list_id"]: r["count"]
-        for r in spark.read.parquet(li).groupBy("list_id").count().collect()
+        for r in read_table(spark, li).groupBy("list_id").count().collect()
     }
     assert sizes[8000] == 3
     assert sizes[7000] + sizes[9000] == 29  # 30 hot members − 1 retracted
@@ -522,17 +541,15 @@ def test_refresh_folds_tombstones(spark, tmp_path):
     qn.where(qn.vec_id.isin([200, 300])).selectExpr(
         "vec_id AS c_id", "q", "nq"
     ).coalesce(1).write.parquet(cb)
-    ann_store._assign(qn, spark.read.parquet(cb), 1).selectExpr(
-        "v_id AS n_id", "c_id AS list_id"
-    ).write.parquet(li)
+    ann_store.assign_lists(spark, qn, cb, li)
 
     ids = spark.createDataFrame([(305,)], "doc_id long")
     retract_ivf_vectors(spark, li, ids)
     ann_store.refresh_ivf_centroids(spark, qn, cb, li)
     assert not os.path.isdir(ivf_tombstones_path(li))
-    assert spark.read.parquet(li).where("n_id = 305").count() == 0
+    assert read_table(spark, li).where("n_id = 305").count() == 0
     # every other vector is still indexed exactly once
-    assert spark.read.parquet(li).count() == qn.count() - 1
+    assert read_table(spark, li).count() == qn.count() - 1
 
 
 # ------------------------------------------- persisted PQ codebook
@@ -557,7 +574,7 @@ def test_train_pq_codebook_matches_in_plan_training(spark, sf_oracle):
     assert path == os.path.join(root, "codebook_pq")
     got = sorted(
         (r["sub"], r["code"], tuple(r["carr"]))
-        for r in spark.read.parquet(path).collect()
+        for r in read_table(spark, path).collect()
     )
     _, _, _, _, resid = ann_store._ivfpq_parts(qn)
     want = sorted(
@@ -586,12 +603,12 @@ def test_refresh_retrains_persisted_pq_codebook(spark, sf_oracle):
     pq_p = ann_store.train_pq_codebook(spark, qn, cb_p, li_p)
     rows0 = sorted(
         (r["sub"], r["code"], tuple(r["carr"]))
-        for r in spark.read.parquet(pq_p).collect()
+        for r in read_table(spark, pq_p).collect()
     )
     ann_store.refresh_ivf_centroids(spark, qn, cb_p, li_p)
     rows1 = sorted(
         (r["sub"], r["code"], tuple(r["carr"]))
-        for r in spark.read.parquet(pq_p).collect()
+        for r in read_table(spark, pq_p).collect()
     )
     # the Lloyd step moved the centroids, so the residual geometry —
     # and with it the trained codebook — changed
@@ -601,43 +618,51 @@ def test_refresh_retrains_persisted_pq_codebook(spark, sf_oracle):
     ann_store.train_pq_codebook(spark, qn, cb_p, li_p)
     rows2 = sorted(
         (r["sub"], r["code"], tuple(r["carr"]))
-        for r in spark.read.parquet(pq_p).collect()
+        for r in read_table(spark, pq_p).collect()
     )
     qn.unpersist()
     assert rows1 == rows2
 
 
-def test_compact_ivf_lists_skips_when_compact_and_no_sidecar(spark, tmp_path):
-    """The single-rewrite compaction (self-review r14) leaves an
-    already-compact table with no pending sidecar byte-untouched, and
-    folds + sorts in ONE rewrite when a sidecar exists."""
+def test_compact_store_leaves_compact_ivf_index_untouched(
+    spark, tmp_path, capsys
+):
+    """compact-store on an IVF index whose buckets each hold one file
+    and with no pending sidecar rewrites nothing: every file is
+    byte-identical. With a sidecar, it folds the takedown and retires
+    the sidecar, and each bucket still holds one file."""
     import glob
     import os
 
+    from fdblog2clickhouse_spark import cli
     from fdblog2clickhouse_spark.operators.ann_store import (
         ivf_tombstones_path,
         retract_ivf_vectors,
     )
 
     lists = str(tmp_path / "lists")
-    spark.createDataFrame(
-        [(1, 10), (0, 11), (1, 12)], "list_id long, n_id long"
-    ).coalesce(1).write.parquet(lists)
-    files0 = sorted(os.listdir(lists))
-    r = ann_store.compact_ivf_lists(spark, lists)
-    assert r == {"files_before": 1, "files_after": 1,
-                 "rewrote": False, "folded": False}
-    assert sorted(os.listdir(lists)) == files0  # untouched
+    _write_lists(
+        spark.createDataFrame(
+            [(1, 10), (0, 11), (1, 12)], "list_id long, n_id long"
+        ),
+        lists,
+    )
+    files0 = _tree(lists)
+    assert cli.main(["compact-store", lists]) == 0
+    out = capsys.readouterr().out
+    assert "retractions_folded" not in out and "rebucketed" not in out
+    assert _tree(lists) == files0  # untouched
 
     ids = spark.createDataFrame([(12,)], "doc_id long")
     retract_ivf_vectors(spark, lists, ids)
-    r = ann_store.compact_ivf_lists(spark, lists)
-    assert r["folded"] and r["rewrote"]  # folds anyway
+    assert cli.main(["compact-store", lists]) == 0
+    assert "retractions_folded=true" in capsys.readouterr().out
     assert not os.path.isdir(ivf_tombstones_path(lists))
     assert {
-        (r["list_id"], r["n_id"]) for r in spark.read.parquet(lists).collect()
+        (r["list_id"], r["n_id"]) for r in read_table(spark, lists).collect()
     } == {(1, 10), (0, 11)}
-    assert len(glob.glob(os.path.join(lists, "*.parquet"))) == 1
+    for d in glob.glob(os.path.join(lists, "pb=*")):
+        assert len(glob.glob(os.path.join(d, "*.parquet"))) == 1
 
 
 def test_ivfpq_store_search_matches_oracle(spark, sf_oracle):
@@ -668,10 +693,10 @@ def test_ivfpq_store_search_composes_tombstones(spark, sf_oracle):
     root = scratch_path("ivfpq_store")
     lists_path = os.path.join(root, "lists")
     victims = sorted({r["n_id"] for r in before})[:2]
-    files_before = sorted(os.listdir(lists_path))
+    files_before = _tree(lists_path)
     ids = spark.createDataFrame([(v,) for v in victims], "doc_id long")
     retract_ivf_vectors(spark, lists_path, ids)
-    assert sorted(os.listdir(lists_path)) == files_before  # no rewrite
+    assert _tree(lists_path) == files_before  # no rewrite
 
     qn = _quantized(spark, sf_oracle)
     got = ann_store.ivfpq_store_search_plan(
@@ -698,19 +723,31 @@ def _toy_codes_index(spark, tmp_path):
 
     lists = str(tmp_path / "lists")
     codes = ann_store.ivf_codes_path(lists)
-    spark.createDataFrame(
-        [(10, 0), (11, 0), (12, 1)], "n_id long, list_id long"
-    ).write.parquet(lists)
-    spark.createDataFrame(
-        [(v, s, (v + s) % 4) for v in (10, 11, 12) for s in (0, 1)],
-        "vec_id long, sub int, code int",
-    ).write.parquet(codes)
+    _write_lists(
+        spark.createDataFrame(
+            [(10, 0), (11, 0), (12, 1)], "n_id long, list_id long"
+        ),
+        lists,
+    )
+    write_table(
+        spark.createDataFrame(
+            [(v, s, (v + s) % 4) for v in (10, 11, 12) for s in (0, 1)],
+            "vec_id long, sub int, code int",
+        ),
+        codes,
+        "overwrite",
+        key="vec_id",
+    )
     return lists, codes
 
 
-def test_compact_folds_takedown_into_codes(spark, tmp_path):
+def test_compact_folds_takedown_into_codes(spark, tmp_path, capsys):
+    """compact-store's fold covers the taken-down vectors' derived
+    representation too: their codes rows leave with the lists rows,
+    and the sidecar is retired."""
     import os
 
+    from fdblog2clickhouse_spark import cli
     from fdblog2clickhouse_spark.operators.ann_store import (
         ivf_tombstones_path,
         retract_ivf_vectors,
@@ -720,22 +757,27 @@ def test_compact_folds_takedown_into_codes(spark, tmp_path):
     retract_ivf_vectors(
         spark, lists, spark.createDataFrame([(12,)], "doc_id long")
     )
-    r = ann_store.compact_ivf_lists(spark, lists)
-    assert r["folded"] and r["rewrote"]
+    assert cli.main(["compact-store", lists]) == 0
+    out = capsys.readouterr().out
+    assert "retractions_folded=true fold_parts=lists:1/codes:1" in out, out
+    assert "codes_files_before=" in out
     assert not os.path.isdir(ivf_tombstones_path(lists))
     assert {
-        r["n_id"] for r in spark.read.parquet(lists).collect()
+        r["n_id"] for r in read_table(spark, lists).collect()
     } == {10, 11}
     assert {
-        r["vec_id"] for r in spark.read.parquet(codes).collect()
+        r["vec_id"] for r in read_table(spark, codes).collect()
     } == {10, 11}  # the takedown removed the derived representation too
 
 
-def test_fold_ivf_retractions_folds_codes(spark, tmp_path):
+def test_fold_ivf_tombstones_folds_codes(spark, tmp_path):
+    """The granular fold rewrites only the buckets holding a
+    tombstoned id — in the codes, the buckets its vec_id hashes to —
+    and reports the partitions it rewrote."""
     import os
 
     from fdblog2clickhouse_spark.operators.ann_store import (
-        fold_ivf_retractions,
+        fold_ivf_tombstones,
         retract_ivf_vectors,
     )
 
@@ -743,10 +785,136 @@ def test_fold_ivf_retractions_folds_codes(spark, tmp_path):
     retract_ivf_vectors(
         spark, lists, spark.createDataFrame([(11,)], "doc_id long")
     )
-    assert fold_ivf_retractions(spark, lists) == {"folded": True}
+    assert fold_ivf_tombstones(spark, lists) == {
+        "folded": True, "lists_parts": 1, "codes_parts": 1,
+    }
     assert {
-        r["vec_id"] for r in spark.read.parquet(codes).collect()
+        r["vec_id"] for r in read_table(spark, codes).collect()
     } == {10, 12}
+    assert fold_ivf_tombstones(spark, lists) == {"folded": False}
+    assert not os.path.isdir(ann_store.ivf_tombstones_path(lists))
+
+
+def _tiny_vectors(spark, ids):
+    """Deterministic 4-dim quantized vectors (vec_id, q, nq)."""
+    import random
+
+    def vec(vid):
+        r = random.Random(vid * 2654435761 % 2**31)
+        return [r.randint(-1000, 1000) for _ in range(4)]
+
+    return spark.createDataFrame(
+        [(i, vec(i), sum(x * x for x in vec(i))) for i in ids],
+        "vec_id long, q array<long>, nq long",
+    )
+
+
+def _tiny_index(spark, tmp_path, base_ids):
+    """A four-list IVF index over `_tiny_vectors`: a flat one-file
+    codebook and the bucketed lists, built the package's way."""
+    from pyspark.sql import functions as F
+
+    cb = str(tmp_path / "codebook")
+    lists = str(tmp_path / "lists")
+    _tiny_vectors(spark, range(9000, 9004)).select(
+        F.col("vec_id").alias("c_id"), "q", "nq"
+    ).coalesce(1).write.parquet(cb)
+    ann_store.assign_lists(spark, _tiny_vectors(spark, base_ids), cb, lists)
+    return cb, lists
+
+
+def test_ivf_maintenance_smoke(spark, tmp_path, capsys):
+    """The IVF lifecycle's fast default-tier check: build, insert the
+    same batch twice, retract, compact-store, search. The replay
+    appends nothing; the fold rewrites only the bucket holding the
+    retracted vector (every other partition dir is byte-identical);
+    the sidecar is gone; and search equals an index built from the
+    live vectors alone."""
+    import glob
+    import os
+
+    from pyspark.sql import functions as F
+
+    from fdblog2clickhouse_spark import cli
+
+    all_ids = list(range(40))
+    cb, lists = _tiny_index(spark, tmp_path, all_ids[:30])
+    batch = _tiny_vectors(spark, all_ids[30:])
+    assert ann_store.ivf_insert_batch(spark, batch, cb, lists)["vectors"] == 10
+    r = ann_store.ivf_insert_batch(spark, batch, cb, lists)
+    assert r == {"vectors": 0, "skipped": 10, "codes_appended": False}
+
+    assert cli.main(["compact-store", lists]) == 0  # one file per bucket
+    capsys.readouterr()
+    parts = sorted(glob.glob(os.path.join(lists, "pb=*")))
+    assert len(parts) >= 2, "the fixture needs an untouched bucket"
+    before = {d: _tree(d) for d in parts}
+
+    victim = 3
+    (victim_part,) = [
+        d for d in parts
+        if spark.read.parquet(d).where(F.col("n_id") == victim).count()
+    ]
+    assert cli.main(["retract-vectors", lists, "--id", str(victim)]) == 0
+    assert cli.main(["compact-store", lists]) == 0
+    assert "fold_parts=lists:1/codes:0" in capsys.readouterr().out
+    assert not os.path.isdir(ann_store.ivf_tombstones_path(lists))
+    for d in parts:
+        if d != victim_part:
+            assert _tree(d) == before[d], d
+
+    live = [i for i in all_ids if i != victim]
+    model = tmp_path / "model"
+    model.mkdir()
+    _, model_lists = _tiny_index(spark, model, live)
+    qn = _tiny_vectors(spark, all_ids)
+    got = ann_store.ivf_store_search_plan(spark, qn, cb, lists)
+    want = ann_store.ivf_store_search_plan(spark, qn, cb, model_lists)
+    got, want = sorted(map(tuple, got.collect())), sorted(map(tuple, want.collect()))
+    assert got and got == want
+    assert sorted(map(tuple, read_table(spark, lists).collect())) == sorted(
+        map(tuple, read_table(spark, model_lists).collect())
+    )
+
+
+def test_ivf_commands_refuse_flat_tables(spark, tmp_path):
+    """Every IVF command exits naming the table and build-ivfpq when
+    the lists table has no layout marker — a flat table the package
+    no longer writes — before any Spark job, and leaves it as it
+    was."""
+    import pytest
+
+    from pyspark.sql import functions as F
+
+    from fdblog2clickhouse_spark import cli
+
+    cb, lists = _tiny_index(spark, tmp_path, range(20))
+    flat = str(tmp_path / "flat")
+    read_table(spark, lists).coalesce(1).write.parquet(flat)
+    vecs = str(tmp_path / "vecs")
+    _tiny_vectors(spark, range(20, 24)).select(
+        "vec_id", F.col("q").cast("array<float>").alias("embedding")
+    ).write.parquet(vecs)
+    files = _tree(flat)
+
+    sc = spark.sparkContext
+    sc.setJobGroup("test-ivf-flat-refusal", "IVF layout refusal")
+    try:
+        for argv in (
+            ["insert-vectors", vecs, cb, flat],
+            ["refresh-ivf", cb, flat, "--vectors", vecs],
+            ["retract-vectors", flat, "--id", "1"],
+            ["compact-store", flat],
+            ["search-ivfpq", cb, flat, "--vectors", vecs],
+            ["probe-recall", cb, flat, "--vectors", vecs],
+        ):
+            with pytest.raises(SystemExit, match=f"{flat} .*build-ivfpq"):
+                cli.main(argv)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    assert sc.statusTracker().getJobIdsForGroup("test-ivf-flat-refusal") == []
+    assert _tree(flat) == files
 
 
 def test_refresh_reencodes_persisted_codes(spark, sf_smoke, tmp_path):
@@ -769,12 +937,10 @@ def test_refresh_reencodes_persisted_codes(spark, sf_smoke, tmp_path):
     qn.orderBy("vec_id").limit(4).select(
         F.col("vec_id").alias("c_id"), "q", "nq"
     ).coalesce(1).write.parquet(cb)
-    ann_store._assign(qn, spark.read.parquet(cb), 1).select(
-        F.col("v_id").alias("n_id"), F.col("c_id").alias("list_id")
-    ).write.parquet(lists)
+    ann_store.assign_lists(spark, qn, cb, lists)
     ann_store.train_pq_codebook(spark, qn, cb, lists)
     ann_store.reencode_ivf_codes(spark, qn, cb, lists)
-    codes0 = {tuple(r) for r in spark.read.parquet(codes).collect()}
+    codes0 = {tuple(r) for r in read_table(spark, codes).collect()}
 
     victim = qn.agg(F.max("vec_id")).first()[0]
     retract_ivf_vectors(
@@ -782,15 +948,15 @@ def test_refresh_reencodes_persisted_codes(spark, sf_smoke, tmp_path):
     )
     ann_store.refresh_ivf_centroids(spark, qn, cb, lists)
 
-    got = {tuple(r) for r in spark.read.parquet(codes).collect()}
+    got = {tuple(r) for r in read_table(spark, codes).collect()}
     assert got != codes0  # geometry changed → codes changed
     assert all(r[0] != victim for r in got)  # takedown's codes are gone
 
     # expected: fresh encode against the post-refresh artifacts
-    centv = spark.read.parquet(cb).select("c_id", F.col("q").alias("cq"))
+    centv = read_table(spark, cb).select("c_id", F.col("q").alias("cq"))
     resid = (
         qn.join(
-            spark.read.parquet(lists).withColumnRenamed("n_id", "vec_id"),
+            read_table(spark, lists).withColumnRenamed("n_id", "vec_id"),
             "vec_id",
         )
         .join(broadcast(centv), F.col("list_id") == F.col("c_id"))
@@ -799,7 +965,7 @@ def test_refresh_reencodes_persisted_codes(spark, sf_smoke, tmp_path):
             F.zip_with(F.col("q"), F.col("cq"), lambda x, y: x - y).alias("q"),
         )
     )
-    pq_cb = spark.read.parquet(ann_store.pq_codebook_path(cb))
+    pq_cb = read_table(spark, ann_store.pq_codebook_path(cb))
     want = {
         tuple(r) for r in ann_store._ivfpq_codes(resid, pq_cb).collect()
     }
@@ -821,9 +987,7 @@ def test_refresh_rejects_codes_without_pq_codebook(spark, sf_smoke, tmp_path):
     qn.orderBy("vec_id").limit(4).select(
         F.col("vec_id").alias("c_id"), "q", "nq"
     ).coalesce(1).write.parquet(cb)
-    ann_store._assign(qn, spark.read.parquet(cb), 1).select(
-        F.col("v_id").alias("n_id"), F.col("c_id").alias("list_id")
-    ).write.parquet(lists)
+    ann_store.assign_lists(spark, qn, cb, lists)
     ann_store.train_pq_codebook(spark, qn, cb, lists)
     ann_store.reencode_ivf_codes(spark, qn, cb, lists)
     shutil.rmtree(ann_store.pq_codebook_path(cb))
@@ -859,9 +1023,7 @@ def test_filtered_search_prefilters_and_composes_tombstones(
     qn.where(
         F.col("vec_id").isin(similarity._CENTROID_IDS)
     ).select(F.col("vec_id").alias("c_id"), "q", "nq").coalesce(1).write.parquet(cb)
-    ann_store._assign(qn, spark.read.parquet(cb), 1).select(
-        F.col("v_id").alias("n_id"), F.col("c_id").alias("list_id")
-    ).write.parquet(lists)
+    ann_store.assign_lists(spark, qn, cb, lists)
     allowed = qn.where(
         F.col("label") < ann_store._FILTER_LABEL_MAX
     ).select(F.col("vec_id").alias("n_id"))
@@ -901,9 +1063,7 @@ def test_filtered_plan_shape_no_cartesian(spark, sf_smoke, tmp_path):
     qn.where(
         F.col("vec_id").isin(similarity._CENTROID_IDS)
     ).select(F.col("vec_id").alias("c_id"), "q", "nq").coalesce(1).write.parquet(cb)
-    ann_store._assign(qn, spark.read.parquet(cb), 1).select(
-        F.col("v_id").alias("n_id"), F.col("c_id").alias("list_id")
-    ).write.parquet(lists)
+    ann_store.assign_lists(spark, qn, cb, lists)
     allowed = qn.where(
         F.col("label") < ann_store._FILTER_LABEL_MAX
     ).select(F.col("vec_id").alias("n_id"))
@@ -930,9 +1090,7 @@ def _build_ivfpq_fixture(spark, sf_smoke, tmp_path):
     base.orderBy("vec_id").limit(4).select(
         F.col("vec_id").alias("c_id"), "q", "nq"
     ).coalesce(1).write.parquet(cb)
-    ann_store._assign(base, spark.read.parquet(cb), 1).select(
-        F.col("v_id").alias("n_id"), F.col("c_id").alias("list_id")
-    ).write.parquet(lists)
+    ann_store.assign_lists(spark, base, cb, lists)
     ann_store.train_pq_codebook(spark, base, cb, lists)
     ann_store.reencode_ivf_codes(spark, base, cb, lists)
     batch = qn.where(F.pmod("vec_id", F.lit(10)) == 0)
@@ -944,12 +1102,13 @@ def _files(path):
     import os
 
     return sorted(
-        os.path.basename(f) for f in glob.glob(path + "/*.parquet")
+        os.path.relpath(f, path)
+        for f in glob.glob(path + "/**/*.parquet", recursive=True)
     )
 
 
 def _rows(spark, path):
-    return sorted(map(tuple, spark.read.parquet(path).collect()))
+    return sorted(map(tuple, read_table(spark, path).collect()))
 
 
 def test_ivf_insert_idempotent_redelivery(spark, sf_smoke, tmp_path):
@@ -969,15 +1128,14 @@ def test_ivf_insert_idempotent_redelivery(spark, sf_smoke, tmp_path):
     r2 = ann_store.ivf_insert_batch(spark, batch, cb, lists)
     assert r2 == {
         "vectors": 0, "skipped": r1["vectors"], "codes_appended": True,
-        "compacted": False,
     }
     assert _files(lists) == lf and _files(codes) == cf
     assert _rows(spark, lists) == lr and _rows(spark, codes) == cr
 
     # coherent after the replay: codes cover every listed vector
-    li = spark.read.parquet(lists)
+    li = read_table(spark, lists)
     assert (
-        spark.read.parquet(codes).select("vec_id").distinct().count()
+        read_table(spark, codes).select("vec_id").distinct().count()
         == li.count()
     )
     # and compressed search still answers with the batch's vectors
@@ -999,25 +1157,22 @@ def test_ivf_insert_repairs_crash_between_appends(spark, sf_smoke, tmp_path):
     codes = ann_store.ivf_codes_path(lists)
 
     # simulate the crash: assignment rows land, codes never do
-    ann_store._assign(batch, spark.read.parquet(cb), 1).select(
-        F.col("v_id").alias("n_id"), F.col("c_id").alias("list_id")
-    ).write.mode("append").parquet(lists)
-    n_half = spark.read.parquet(lists).count()
+    ann_store.assign_lists(spark, batch, cb, lists, "append")
+    n_half = read_table(spark, lists).count()
     n_batch = batch.count()
     assert (
-        spark.read.parquet(codes).select("vec_id").distinct().count()
+        read_table(spark, codes).select("vec_id").distinct().count()
         == n_half - n_batch
     )
 
     r = ann_store.ivf_insert_batch(spark, batch, cb, lists)
     assert r == {
         "vectors": 0, "skipped": n_batch, "codes_appended": True,
-        "compacted": False,
     }
-    assert spark.read.parquet(lists).count() == n_half
+    assert read_table(spark, lists).count() == n_half
     # coherence restored: every listed vector has codes again
     assert (
-        spark.read.parquet(codes).select("vec_id").distinct().count()
+        read_table(spark, codes).select("vec_id").distinct().count()
         == n_half
     )
     # and the repaired codes are byte-identical to a clean insert's:
@@ -1064,7 +1219,7 @@ def test_ivf_insert_respects_pending_tombstones(spark, sf_smoke, tmp_path):
     from pyspark.sql import functions as F
 
     from fdblog2clickhouse_spark.operators.ann_store import (
-        fold_ivf_retractions,
+        fold_ivf_tombstones,
         retract_ivf_vectors,
     )
 
@@ -1087,7 +1242,7 @@ def test_ivf_insert_respects_pending_tombstones(spark, sf_smoke, tmp_path):
     ).count() == 0
 
     # after the fold the id may be admitted fresh
-    fold_ivf_retractions(spark, lists)
+    fold_ivf_tombstones(spark, lists)
     r3 = ann_store.ivf_insert_batch(spark, batch, cb, lists)
     assert r3["vectors"] == 1 and r3["skipped"] == r1["vectors"] - 1
     assert live_ivf_lists(spark, lists).where(
@@ -1103,7 +1258,7 @@ def test_maybe_split_ivf_lists_decision(spark, tmp_path, monkeypatch):
     stop the loop instead of spinning."""
     qn = _skew_fixture_qn(spark)
     cb, li = _skew_index(spark, tmp_path, qn)
-    before = sorted(map(tuple, spark.read.parquet(li).collect()))
+    before = sorted(map(tuple, read_table(spark, li).collect()))
 
     # under the trigger: no-op, nothing rewritten
     def thresholds(trigger, target):
@@ -1114,7 +1269,7 @@ def test_maybe_split_ivf_lists_decision(spark, tmp_path, monkeypatch):
     ms = ann_store.maybe_split_ivf_lists(spark, qn, cb, li)
     assert ms["triggered"] is False and ms["rounds"] == 0
     assert ms["max_list_before"] == 30
-    assert sorted(map(tuple, spark.read.parquet(li).collect())) == before
+    assert sorted(map(tuple, read_table(spark, li).collect())) == before
 
     # over the trigger: split down to the target (possibly multiple
     # rounds — a child can exceed the budget)
@@ -1124,7 +1279,7 @@ def test_maybe_split_ivf_lists_decision(spark, tmp_path, monkeypatch):
     assert ms["max_list_after"] <= 20
     sizes = {
         r["list_id"]: r["count"]
-        for r in spark.read.parquet(li).groupBy("list_id").count().collect()
+        for r in read_table(spark, li).groupBy("list_id").count().collect()
     }
     assert max(sizes.values()) == ms["max_list_after"]
 
@@ -1165,7 +1320,7 @@ def test_refresh_ivf_cli_auto_split_growth(spark, tmp_path, capsys, monkeypatch)
         ).alias("embedding"),
     ).coalesce(1).write.parquet(vecs)
 
-    n_lists_before = spark.read.parquet(cb).count()
+    n_lists_before = read_table(spark, cb).count()
     search0 = sorted(
         map(
             tuple,
@@ -1185,10 +1340,10 @@ def test_refresh_ivf_cli_auto_split_growth(spark, tmp_path, capsys, monkeypatch)
 
     sizes = {
         r["list_id"]: r["count"]
-        for r in spark.read.parquet(li).groupBy("list_id").count().collect()
+        for r in read_table(spark, li).groupBy("list_id").count().collect()
     }
     assert max(sizes.values()) <= 16  # bounded: under the trigger
-    assert spark.read.parquet(cb).count() > n_lists_before
+    assert read_table(spark, cb).count() > n_lists_before
     search1 = sorted(
         map(
             tuple,
@@ -1214,118 +1369,9 @@ def test_refresh_ivf_cli_auto_split_growth(spark, tmp_path, capsys, monkeypatch)
     assert "auto_split=" not in out
     sizes = {
         r["list_id"]: r["count"]
-        for r in spark.read.parquet(li).groupBy("list_id").count().collect()
+        for r in read_table(spark, li).groupBy("list_id").count().collect()
     }
     assert max(sizes.values()) <= 16
-
-
-def test_maybe_compact_ivf_lists_decision(spark, sf_smoke, tmp_path):
-    """Round 17 — the file-count third of the maintenance triad:
-    under the trigger the check is a pure listing (files untouched);
-    over it, the lists compact to size-derived file counts with
-    search results invariant, a pending tombstone folds in the same
-    pass, and a many-files CODES sibling compacts too (the plain
-    compactor only rewrites codes on a takedown)."""
-    import glob
-    import os
-
-    from pyspark.sql import functions as F
-
-    qn, cb, lists, batch = _build_ivfpq_fixture(spark, sf_smoke, tmp_path)
-    codes = ann_store.ivf_codes_path(lists)
-    # fragment both tables: many tiny appends
-    for i in range(6):
-        ann_store.ivf_insert_batch(
-            spark,
-            batch.withColumn(
-                "vec_id", F.col("vec_id") + F.lit(1_000_000 * (i + 1))
-            ),
-            cb,
-            lists,
-        )
-    n_lists_files = len(glob.glob(os.path.join(lists, "*.parquet")))
-    n_codes_files = len(glob.glob(os.path.join(codes, "*.parquet")))
-    assert n_lists_files > 4 and n_codes_files > 4
-
-    # under the trigger: pure no-op
-    r = ann_store.maybe_compact_ivf_lists(
-        spark, lists, trigger_files=10_000
-    )
-    assert r == {
-        "compacted": False, "files": n_lists_files,
-        "codes_compacted": False,
-    }
-    assert len(glob.glob(os.path.join(lists, "*.parquet"))) == n_lists_files
-
-    rows_l = sorted(map(tuple, spark.read.parquet(lists).collect()))
-    rows_c = sorted(map(tuple, spark.read.parquet(codes).collect()))
-    search0 = sorted(
-        map(
-            tuple,
-            ann_store.ivfpq_store_search_plan(
-                spark, qn, cb, lists, codes
-            ).collect(),
-        )
-    )
-    # over the trigger: both tables collapse, content identical
-    r = ann_store.maybe_compact_ivf_lists(spark, lists, trigger_files=4)
-    assert r["compacted"] is True and r["codes_compacted"] is True
-    assert len(glob.glob(os.path.join(lists, "*.parquet"))) < n_lists_files
-    assert len(glob.glob(os.path.join(codes, "*.parquet"))) < n_codes_files
-    assert sorted(map(tuple, spark.read.parquet(lists).collect())) == rows_l
-    assert sorted(map(tuple, spark.read.parquet(codes).collect())) == rows_c
-    assert (
-        sorted(
-            map(
-                tuple,
-                ann_store.ivfpq_store_search_plan(
-                    spark, qn, cb, lists, codes
-                ).collect(),
-            )
-        )
-        == search0
-    )
-    qn.unpersist()
-
-
-def test_insert_kernel_auto_compacts(spark, sf_smoke, tmp_path):
-    """The kernel runs the compaction decision itself, so BOTH
-    insert paths (CLI and streaming foreachBatch) amortize it with
-    zero caller changes: with a test-scaled trigger, a run of tiny
-    insert batches ends with a compacted lists table and reports
-    compacted=True on the batch that crossed the line; the
-    idempotence contract survives the rewrite (a replay after the
-    compaction still appends nothing)."""
-    import glob
-    import os
-
-    from pyspark.sql import functions as F
-
-    qn, cb, lists, batch = _build_ivfpq_fixture(spark, sf_smoke, tmp_path)
-    fired = []
-    for i in range(5):
-        r = ann_store.ivf_insert_batch(
-            spark,
-            batch.withColumn(
-                "vec_id", F.col("vec_id") + F.lit(1_000_000 * (i + 1))
-            ),
-            cb,
-            lists,
-            compact_trigger_files=3,
-        )
-        fired.append(r["compacted"])
-    assert any(fired)
-    assert len(glob.glob(os.path.join(lists, "*.parquet"))) <= 3
-    # replay the last batch: still idempotent across the rewrite
-    r = ann_store.ivf_insert_batch(
-        spark,
-        batch.withColumn("vec_id", F.col("vec_id") + F.lit(5_000_000)),
-        cb,
-        lists,
-        compact_trigger_files=0,  # disabled: pure replay check
-    )
-    assert r["vectors"] == 0 and r["skipped"] == batch.count()
-    qn.unpersist()
 
 
 import pytest as _pytest
@@ -1335,7 +1381,7 @@ import pytest as _pytest
 def test_ivf_lifecycle_random_ops_match_model(spark, tmp_path, seed):
     """Randomized lifecycle property (the IVF analog of the dedup
     store's fold-matches-live-views property): a seeded random
-    sequence of insert / REPLAY / retract / fold / auto-compact ops
+    sequence of insert / REPLAY / retract / fold / compact-store ops
     against the persisted index must leave live_ivf_lists exactly
     equal to a driver-side reference model (set of live vec_ids,
     each assigned by the same fixed codebook) — replays never
@@ -1347,8 +1393,9 @@ def test_ivf_lifecycle_random_ops_match_model(spark, tmp_path, seed):
 
     from pyspark.sql import functions as F
 
+    from fdblog2clickhouse_spark import cli
     from fdblog2clickhouse_spark.operators.ann_store import (
-        fold_ivf_retractions,
+        fold_ivf_tombstones,
         live_ivf_lists,
         retract_ivf_vectors,
     )
@@ -1377,9 +1424,7 @@ def test_ivf_lifecycle_random_ops_match_model(spark, tmp_path, seed):
 
     # seed the index with an initial base
     base_ids = list(range(100, 130))
-    ann_store._assign(frame(base_ids), spark.read.parquet(cb), 1).select(
-        F.col("v_id").alias("n_id"), F.col("c_id").alias("list_id")
-    ).write.parquet(lists)
+    ann_store.assign_lists(spark, frame(base_ids), cb, lists)
 
     live = set(base_ids)       # the model: ids visible to readers
     tombstoned = set()         # retracted, pending fold
@@ -1393,15 +1438,11 @@ def test_ivf_lifecycle_random_ops_match_model(spark, tmp_path, seed):
             # sprinkle in some already-known ids: replays/overlaps
             ids += rng.sample(sorted(live), min(2, len(live)))
             next_id += n
-            ann_store.ivf_insert_batch(
-                spark, frame(ids), cb, lists, compact_trigger_files=0
-            )
+            ann_store.ivf_insert_batch(spark, frame(ids), cb, lists)
             last_batch = ids
             live |= set(ids) - tombstoned  # tombstoned ids stay hidden
         elif op == "replay" and last_batch:
-            ann_store.ivf_insert_batch(
-                spark, frame(last_batch), cb, lists, compact_trigger_files=0
-            )
+            ann_store.ivf_insert_batch(spark, frame(last_batch), cb, lists)
             live |= set(last_batch) - tombstoned
         elif op == "retract" and live:
             victims = set(rng.sample(sorted(live), min(3, len(live))))
@@ -1414,10 +1455,12 @@ def test_ivf_lifecycle_random_ops_match_model(spark, tmp_path, seed):
             live -= victims
             tombstoned |= victims
         elif op == "fold":
-            fold_ivf_retractions(spark, lists)
+            fold_ivf_tombstones(spark, lists)
             tombstoned = set()  # folded: ids may re-admit fresh
         elif op == "compact":
-            ann_store.maybe_compact_ivf_lists(spark, lists, trigger_files=2)
+            # the maintenance pass: fold, re-bucket, compact
+            assert cli.main(["compact-store", lists]) == 0
+            tombstoned = set()
 
         got = {
             (r["n_id"], r["list_id"])
@@ -1426,15 +1469,15 @@ def test_ivf_lifecycle_random_ops_match_model(spark, tmp_path, seed):
         want = {
             (r["v_id"], r["c_id"])
             for r in ann_store._assign(
-                frame(sorted(live)), spark.read.parquet(cb), 1
+                frame(sorted(live)), read_table(spark, cb), 1
             ).collect()
         }
         assert got == want, f"divergence after {op} (seed {seed})"
 
 
 def test_ivf_insert_heals_crashed_swap_first(spark, sf_smoke, tmp_path):
-    """A compaction that crashed mid-rename leaves lists (or codes)
-    only at path+'.old'. The insert kernel must heal BEFORE its
+    """A maintenance swap that crashed mid-rename leaves lists (or
+    codes) only at path+'.old'. The insert kernel must heal BEFORE its
     reads and existence checks: un-healed, the lists read raises (or
     an append forks a fresh table beside the real one), and the
     codes-dir check silently classifies a codes-bearing index as
@@ -1454,9 +1497,9 @@ def test_ivf_insert_heals_crashed_swap_first(spark, sf_smoke, tmp_path):
     assert r["vectors"] == batch.count() and r["codes_appended"] is True
     assert not os.path.exists(lists + ".old") or os.path.isdir(lists)
     # healed + coherent: every listed vector (base + batch) has codes
-    li = spark.read.parquet(lists)
+    li = read_table(spark, lists)
     assert (
-        spark.read.parquet(codes).select("vec_id").distinct().count()
+        read_table(spark, codes).select("vec_id").distinct().count()
         == li.count()
     )
     # and the base rows survived (no forked fresh table)
@@ -1520,66 +1563,6 @@ def test_search_plans_heal_crashed_swaps(spark, sf_smoke, tmp_path):
     qn.unpersist()
 
 
-def test_auto_compact_fold_retires_tombstones_mid_insert_loop(
-    spark, sf_smoke, tmp_path
-):
-    """A triggered auto-compaction IS a fold (compact-store's
-    contract, inherited): when the insert loop crosses the file
-    trigger with a tombstone sidecar pending, the tombstoned rows
-    leave disk, the sidecar retires, and the id becomes
-    re-admittable by a later batch — while the tombstone is pending,
-    redelivery cannot revive it."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from fdblog2clickhouse_spark.operators.ann_store import (
-        ivf_tombstones_path,
-        live_ivf_lists,
-        retract_ivf_vectors,
-    )
-
-    qn, cb, lists, batch = _build_ivfpq_fixture(spark, sf_smoke, tmp_path)
-    r1 = ann_store.ivf_insert_batch(
-        spark, batch, cb, lists, compact_trigger_files=0
-    )
-    victim = batch.orderBy("vec_id").limit(1)
-    vid = victim.first()["vec_id"]
-    retract_ivf_vectors(
-        spark, lists, victim.select(F.col("vec_id").alias("doc_id"))
-    )
-    assert os.path.isdir(ivf_tombstones_path(lists))
-
-    # inserts until the file trigger fires: the compaction folds the
-    # pending tombstone in the same pass
-    fired = False
-    for i in range(4):
-        r = ann_store.ivf_insert_batch(
-            spark,
-            batch.withColumn(
-                "vec_id", F.col("vec_id") + F.lit(1_000_000 * (i + 1))
-            ),
-            cb,
-            lists,
-            compact_trigger_files=2,
-        )
-        fired = fired or r["compacted"]
-    assert fired
-    assert not os.path.isdir(ivf_tombstones_path(lists))
-    raw = spark.read.parquet(lists)
-    assert raw.where(F.col("n_id") == vid).count() == 0  # physically gone
-
-    # post-fold: the id admits fresh
-    r = ann_store.ivf_insert_batch(
-        spark, batch, cb, lists, compact_trigger_files=0
-    )
-    assert r["vectors"] == 1 and r["skipped"] == r1["vectors"] - 1
-    assert live_ivf_lists(spark, lists).where(
-        F.col("n_id") == vid
-    ).count() == 1
-    qn.unpersist()
-
-
 def test_swap_survives_racing_heal(spark, sf_smoke, tmp_path, monkeypatch):
     """MAINTAINER CONTRACT (module docstring / ADVICE r17): a query
     node in another process whose heal_swap fires inside the
@@ -1588,6 +1571,8 @@ def test_swap_survives_racing_heal(spark, sf_smoke, tmp_path, monkeypatch):
     swap's bounded retry. The compaction COMPLETES (old behavior:
     ENOTEMPTY abort) and search results are unchanged."""
     import os
+
+    from fdblog2clickhouse_spark.operators.tables import compact_table
 
     qn, cb, lists, batch = _build_ivfpq_fixture(spark, sf_smoke, tmp_path)
     ann_store.ivf_insert_batch(spark, batch, cb, lists)
@@ -1608,9 +1593,9 @@ def test_swap_survives_racing_heal(spark, sf_smoke, tmp_path, monkeypatch):
             storage.heal_swap(lists)  # the query node's heal
 
     monkeypatch.setattr(os, "rename", racing)
-    res = ann_store.compact_ivf_lists(spark, lists, n_files=1)
+    n_before = compact_table(spark, lists, sort_col="list_id")
     monkeypatch.setattr(os, "rename", real_rename)
-    assert fired and res["rewrote"] is True
+    assert fired and n_before > len(_files(lists))  # it rewrote
     assert not os.path.exists(lists + ".old")
     assert not os.path.exists(lists + ".staging")
     got = sorted(
@@ -1633,6 +1618,8 @@ def test_second_writer_aborts_not_corrupts(spark, sf_smoke, tmp_path, monkeypatc
 
     import pytest
 
+    from fdblog2clickhouse_spark.operators.tables import compact_table
+
     qn, cb, lists, batch = _build_ivfpq_fixture(spark, sf_smoke, tmp_path)
     ann_store.ivf_insert_batch(spark, batch, cb, lists)
     want = sorted(
@@ -1651,7 +1638,7 @@ def test_second_writer_aborts_not_corrupts(spark, sf_smoke, tmp_path, monkeypatc
 
     monkeypatch.setattr(os, "rename", always_racing)
     with pytest.raises(RuntimeError, match="second"):
-        ann_store.compact_ivf_lists(spark, lists, n_files=1)
+        compact_table(spark, lists, sort_col="list_id")
     monkeypatch.setattr(os, "rename", real_rename)
 
     # abort, not corruption: the live index answers unchanged
@@ -1663,8 +1650,8 @@ def test_second_writer_aborts_not_corrupts(spark, sf_smoke, tmp_path, monkeypatc
     )
     assert got == want
     # converge once the other writer stops
-    res = ann_store.compact_ivf_lists(spark, lists, n_files=1)
-    assert res["rewrote"] is True
+    n_before = compact_table(spark, lists, sort_col="list_id")
+    assert n_before > len(_files(lists))  # it rewrote
     got = sorted(
         map(
             tuple,
@@ -1673,39 +1660,6 @@ def test_second_writer_aborts_not_corrupts(spark, sf_smoke, tmp_path, monkeypatc
     )
     assert got == want
     qn.unpersist()
-
-
-def test_maybe_compact_single_codes_rewrite_when_fold_runs(
-    spark, sf_smoke, tmp_path, monkeypatch
-):
-    """ADVICE r17: when the triggered lists compaction folds a
-    pending takedown it already rewrites the codes sibling —
-    maybe_compact_ivf_lists must not pay a second O(codes) rewrite
-    in the same pass."""
-
-    qn, cb, lists, batch = _build_ivfpq_fixture(spark, sf_smoke, tmp_path)
-    ann_store.ivf_insert_batch(
-        spark, batch, cb, lists, compact_trigger_files=0
-    )
-    # a pending takedown → the triggered compaction is also a fold
-    victim = spark.read.parquet(lists).limit(1)
-    ann_store.retract_ivf_vectors(
-        spark, lists, victim.select(victim.n_id.alias("doc_id"))
-    )
-
-    calls = []
-    real = storage.commit
-
-    def counting(path, write):
-        calls.append(path)
-        real(path, write)
-
-    monkeypatch.setattr(storage, "commit", counting)
-    out = ann_store.maybe_compact_ivf_lists(spark, lists, trigger_files=0)
-    assert out["compacted"] is True
-    codes_p = ann_store.ivf_codes_path(lists)
-    assert [p for p in calls if p == codes_p] == [codes_p]  # exactly once
-    assert out["codes_compacted"] is False  # the fold's rewrite counted
 
 
 def test_rerank_recovers_adc_ranking_error(spark, sf_oracle):

@@ -6,6 +6,7 @@ from __future__ import annotations
 import os
 
 from fdblog2clickhouse_spark import cli
+from fdblog2clickhouse_spark.operators import tables
 
 
 def _tbl_file_counts(path):
@@ -961,11 +962,11 @@ def test_admit_retract_compact_refuse_old_layouts(spark, tmp_path):
         return store, mutate(store)
 
     def markerless(store):
-        os.remove(os.path.join(ds.members_path(store), ds._TBL_META))
+        os.remove(os.path.join(ds.members_path(store), tables._TBL_META))
         return ds.members_path(store)
 
     def no_pb(store):
-        meta = os.path.join(store, ds._TBL_META)
+        meta = os.path.join(store, tables._TBL_META)
         with open(meta) as f:
             lay = json.load(f)
         lay.pop("pb")
@@ -1250,8 +1251,8 @@ def test_compact_store_rebucket_members_and_kept_count(spark, tmp_path, capsys):
     from fdblog2clickhouse_spark.operators.dedup_store import (
         banded_path,
         members_path,
-        table_layout,
     )
+    from fdblog2clickhouse_spark.operators.tables import table_layout
 
     t_c = "new content charlie group words xray yankee zulu november oscar"
 
@@ -1343,9 +1344,14 @@ def test_refresh_ivf_cli(spark, tmp_path, capsys):
     qn.where(qn.vec_id.isin([200, 300])).selectExpr(
         "vec_id AS c_id", "q", "nq"
     ).coalesce(1).write.parquet(cb)
-    ann_store._assign(qn, spark.read.parquet(cb), 1).selectExpr(
-        "v_id AS n_id", "c_id AS list_id"
-    ).write.parquet(li)
+    tables.write_table(
+        ann_store._assign(qn, spark.read.parquet(cb), 1).selectExpr(
+            "v_id AS n_id", "c_id AS list_id"
+        ),
+        li,
+        "overwrite",
+        key="list_id",
+    )
 
     assert cli.main(["refresh-ivf", cb, li, "--vectors", vectors]) == 0
     out = capsys.readouterr().out
@@ -1486,8 +1492,8 @@ def test_admit_vectors_long_lifecycle_with_rebucket(spark, tmp_path, capsys):
     from fdblog2clickhouse_spark.operators.dedup_store import (
         banded_path,
         members_path,
-        table_layout,
     )
+    from fdblog2clickhouse_spark.operators.tables import table_layout
 
     def write_vecs(name, rows):
         p = str(tmp_path / name)
@@ -1596,9 +1602,14 @@ def test_probe_recall_cli(spark, tmp_path, capsys):
     qn.where(qn.vec_id.isin([200, 300])).selectExpr(
         "vec_id AS c_id", "q", "nq"
     ).coalesce(1).write.parquet(cb)
-    ann_store._assign(qn, spark.read.parquet(cb), 1).selectExpr(
-        "v_id AS n_id", "c_id AS list_id"
-    ).write.parquet(li)
+    tables.write_table(
+        ann_store._assign(qn, spark.read.parquet(cb), 1).selectExpr(
+            "v_id AS n_id", "c_id AS list_id"
+        ),
+        li,
+        "overwrite",
+        key="list_id",
+    )
 
     def probe():
         assert cli.main([
@@ -1611,13 +1622,13 @@ def test_probe_recall_cli(spark, tmp_path, capsys):
         return int(parts["hits"]), int(parts["total"])
 
     lists_before = sorted(
-        (r["n_id"], r["list_id"]) for r in spark.read.parquet(li).collect()
+        (r["n_id"], r["list_id"]) for r in tables.read_table(spark, li).collect()
     )
     h0, t0 = probe()
     assert t0 == 16  # 2 queries × topk 8
     # probing is read-only
     assert sorted(
-        (r["n_id"], r["list_id"]) for r in spark.read.parquet(li).collect()
+        (r["n_id"], r["list_id"]) for r in tables.read_table(spark, li).collect()
     ) == lists_before
 
     assert cli.main(["refresh-ivf", cb, li, "--vectors", vectors]) == 0
@@ -1895,8 +1906,8 @@ def test_compact_store_auto_rebucket_growth(spark, tmp_path, capsys, monkeypatch
     from fdblog2clickhouse_spark.operators.dedup_store import (
         banded_path,
         members_path,
-        table_layout,
     )
+    from fdblog2clickhouse_spark.operators.tables import table_layout
 
     t_c = "new content charlie group words xray yankee zulu november oscar"
 
@@ -1931,8 +1942,8 @@ def test_compact_store_auto_rebucket_growth(spark, tmp_path, capsys, monkeypatch
     # test-scaled thresholds: 1 row/bucket triggers, 1 is the target.
     # 4 groups, 5 members and 16 index rows in 2 buckets each — the
     # maintenance pass must re-bucket all three tables up by itself
-    monkeypatch.setattr(ds, "_REBUCKET_TRIGGER_ROWS", 1)
-    monkeypatch.setattr(ds, "_REBUCKET_TARGET_ROWS", 1)
+    monkeypatch.setattr(tables, "_REBUCKET_TRIGGER_ROWS", 1)
+    monkeypatch.setattr(tables, "_REBUCKET_TARGET_ROWS", 1)
     assert cli.main(["compact-store", store]) == 0
     out = capsys.readouterr().out
     assert "store_rebucketed=2->4 (rows=4)" in out

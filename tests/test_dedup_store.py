@@ -13,8 +13,20 @@ import pytest
 from pyspark.sql import functions as F
 
 from fdblog2clickhouse_spark import storage
-from fdblog2clickhouse_spark.operators import ann_store, dedup_store
+from fdblog2clickhouse_spark.operators import ann_store, dedup_store, tables
 from tests.oracle import compare
+from tests.test_ann_store import _tree
+
+
+def _write_ivf_lists(spark, path, rows):
+    """(list_id, n_id) rows → an inverted-lists table, built the
+    package's way (key-bucketed on list_id)."""
+    tables.write_table(
+        spark.createDataFrame(rows, "list_id long, n_id long"),
+        path,
+        "overwrite",
+        key="list_id",
+    )
 
 
 def test_store_admission_matches_oracle(spark, sf_oracle):
@@ -532,8 +544,8 @@ def test_banded_bucket_layout_is_persisted(spark, tmp_path):
     dedup_store.write_banded_index(sigs, bands, "overwrite")
     # fresh builds auto-size from their own rows (r18): 14 groups × 4
     # bands → the 2-bucket floor
-    built = dedup_store.table_layout(bands)["buckets"]
-    assert built == dedup_store._auto_buckets(4 * sigs.count())
+    built = tables.table_layout(bands)["buckets"]
+    assert built == tables._auto_buckets(4 * sigs.count())
 
     gb = dedup_store.rep_group_frame(
         spark.createDataFrame(
@@ -543,31 +555,31 @@ def test_banded_bucket_layout_is_persisted(spark, tmp_path):
     )
     batch = dedup_store.rep_signature_frame(dedup_store.rep_reps(gb))
 
-    orig = dedup_store._BUILD_ROWS_PER_BUCKET
+    orig = tables._BUILD_ROWS_PER_BUCKET
     try:
         # a sizing rule that would pick a far larger count for a NEW
         # build — existing index reads and appends must keep working
-        dedup_store._BUILD_ROWS_PER_BUCKET = 1
+        tables._BUILD_ROWS_PER_BUCKET = 1
         got = {
             r["id"]
             for r in dedup_store.pruned_store_rows(spark, bands, batch).collect()
         }
         assert 7 in got, "pruned read bucketed with the wrong layout"
         dedup_store.write_banded_index(batch, bands, "append")
-        assert dedup_store.table_layout(bands)["buckets"] == built  # kept
+        assert tables.table_layout(bands)["buckets"] == built  # kept
         got2 = {
             r["id"]
             for r in dedup_store.pruned_store_rows(spark, bands, batch).collect()
         }
         assert 7 in got2 and 100 in got2
     finally:
-        dedup_store._BUILD_ROWS_PER_BUCKET = orig
+        tables._BUILD_ROWS_PER_BUCKET = orig
 
     # compaction carries the layout marker through the swap
     dedup_store.compact_signature_store(
         spark, bands, sort_col=dedup_store._INDEX_KEY
     )
-    assert dedup_store.table_layout(bands)["buckets"] == built
+    assert tables.table_layout(bands)["buckets"] == built
 
 
 def test_pruned_store_rows_missing_index_raises_and_restores(spark, tmp_path):
@@ -600,7 +612,7 @@ def test_pruned_store_rows_missing_index_raises_and_restores(spark, tmp_path):
     import shutil
 
     shutil.rmtree(bands)
-    with pytest.raises(dedup_store.StoreLayoutError, match="build-store"):
+    with pytest.raises(tables.StoreLayoutError, match="build-store"):
         dedup_store.pruned_store_rows(spark, bands, batch)
 
 
@@ -967,7 +979,7 @@ def test_rebucket_banded_index_preserves_pruned_reads(spark, tmp_path):
     # absorbs them across the re-bucket
     dedup_store.write_banded_index(sigs.limit(4), bands, "append")
     # fresh builds auto-size (r18): a test-sized store gets the floor
-    assert dedup_store.table_layout(bands)["buckets"] == 2
+    assert tables.table_layout(bands)["buckets"] == 2
 
     # batch: NEW ids carrying exact-dup texts of three store docs —
     # guaranteed band-key matches so the candidate pin is non-vacuous
@@ -998,9 +1010,9 @@ def test_rebucket_banded_index_preserves_pruned_reads(spark, tmp_path):
     cands_before = cands(bands, batch)
     assert cands_before, "batch produced no candidates — test is vacuous"
 
-    got = dedup_store.bucket_table(spark, bands, 256)
+    got = tables.bucket_table(spark, bands, 256)
     assert got == {"buckets_before": 2, "buckets_after": 256}
-    assert dedup_store.table_layout(bands) == {
+    assert tables.table_layout(bands) == {
         "buckets": 256, "key": dedup_store._INDEX_KEY,
     }
     pruned = dedup_store.pruned_store_rows(spark, bands, batch)
@@ -1018,7 +1030,7 @@ def test_rebucket_banded_index_preserves_pruned_reads(spark, tmp_path):
     assert max(pbs) >= 16, "no bucket value beyond the old bucket range"
 
     # no-op at the same count
-    assert dedup_store.bucket_table(spark, bands, 256) == {
+    assert tables.bucket_table(spark, bands, 256) == {
         "buckets_before": 256,
         "buckets_after": 256,
     }
@@ -1027,14 +1039,14 @@ def test_rebucket_banded_index_preserves_pruned_reads(spark, tmp_path):
     # the next call restores the complete .old index first
     os.rename(bands, bands + ".old")
     assert not os.path.exists(bands)
-    dedup_store.bucket_table(spark, bands, 64)
-    assert dedup_store.table_layout(bands)["buckets"] == 64
+    tables.bucket_table(spark, bands, 64)
+    assert tables.table_layout(bands)["buckets"] == 64
     assert cands(bands, batch) == cands_before
 
     # a marker-less (crashed-build) index refuses the migration
-    os.remove(os.path.join(bands, dedup_store._TBL_META))
-    with pytest.raises(dedup_store.StoreLayoutError, match="build-store"):
-        dedup_store.bucket_table(spark, bands, 256)
+    os.remove(os.path.join(bands, tables._TBL_META))
+    with pytest.raises(tables.StoreLayoutError, match="build-store"):
+        tables.bucket_table(spark, bands, 256)
 
 
 def test_streaming_emb_rep_matches_oracle_and_batch(spark, sf_oracle):
@@ -1115,7 +1127,7 @@ def test_rebucket_banded_index_vector_family(spark, tmp_path):
         sigs, bands, "overwrite", key_cols=dedup_store._EMB_KEY_COLS
     )
     # auto-sized fresh build (r18): test-sized store → the floor
-    assert dedup_store.table_layout(bands)["buckets"] == 2
+    assert tables.table_layout(bands)["buckets"] == 2
 
     batch = sigs.limit(5)
 
@@ -1138,9 +1150,9 @@ def test_rebucket_banded_index_vector_family(spark, tmp_path):
 
     before = cands()
     assert before, "vector batch produced no candidates — test is vacuous"
-    got = dedup_store.bucket_table(spark, bands, 64)
+    got = tables.bucket_table(spark, bands, 64)
     assert got == {"buckets_before": 2, "buckets_after": 64}
-    assert dedup_store.table_layout(bands)["buckets"] == 64
+    assert tables.table_layout(bands)["buckets"] == 64
     assert cands() == before
 
 
@@ -1312,10 +1324,10 @@ def test_retraction_fold_preserves_pruned_reads(spark, tmp_path):
     persisted layout) serves exactly the live groups with the new
     ids, and the layout marker survives."""
     sig, bands, mem = _build_rep_store(spark, tmp_path)
-    lay_before = dedup_store.table_layout(bands)
+    lay_before = tables.table_layout(bands)
     dedup_store.retract_docs(spark, sig, mem, _ids(spark, 1, 3))
     dedup_store.fold_retractions(spark, sig, bands, mem)
-    assert dedup_store.table_layout(bands) == lay_before
+    assert tables.table_layout(bands) == lay_before
 
     batch_sigs = spark.read.parquet(sig)  # probe with the store itself
     got = dedup_store.pruned_store_rows(spark, bands, batch_sigs)
@@ -1326,22 +1338,21 @@ def test_retract_ivf_vectors(spark, tmp_path):
     """IVF retraction is O(retracted): the physical lists table is
     byte-untouched (no rewrite, VERDICT r13 #2), the tombstone
     sidecar carries the takedown, live_ivf_lists composes it, and
-    fold_ivf_retractions rewrites once + retires the sidecar."""
+    fold_ivf_tombstones rewrites the touched buckets + retires the
+    sidecar."""
     import os
 
     lists = str(tmp_path / "lists")
-    spark.createDataFrame(
-        [(0, 1), (0, 2), (1, 3), (1, 4)], "list_id int, vec_id long"
-    ).write.parquet(lists)
-    files_before = sorted(os.listdir(lists))
+    _write_ivf_lists(spark, lists, [(0, 1), (0, 2), (1, 3), (1, 4)])
+    files_before = _tree(lists)
 
     stats = ann_store.retract_ivf_vectors(spark, lists, _ids(spark, 2, 3, 99))
     assert stats == {"tombstoned": 3}  # 99 tombstones too (never indexed)
     # physical table untouched — the whole point of the sidecar
-    assert sorted(os.listdir(lists)) == files_before
-    assert spark.read.parquet(lists).count() == 4
+    assert _tree(lists) == files_before
+    assert tables.read_table(spark, lists).count() == 4
     live = {
-        (r["list_id"], r["vec_id"])
+        (r["list_id"], r["n_id"])
         for r in ann_store.live_ivf_lists(spark, lists).collect()
     }
     assert live == {(0, 1), (1, 4)}
@@ -1349,20 +1360,21 @@ def test_retract_ivf_vectors(spark, tmp_path):
     # a second retraction composes (sidecar union), still no rewrite
     stats = ann_store.retract_ivf_vectors(spark, lists, _ids(spark, 1, 2))
     assert stats == {"tombstoned": 4}
-    assert sorted(os.listdir(lists)) == files_before
+    assert _tree(lists) == files_before
     assert {
-        (r["list_id"], r["vec_id"])
+        (r["list_id"], r["n_id"])
         for r in ann_store.live_ivf_lists(spark, lists).collect()
     } == {(1, 4)}
 
-    # fold: one rewrite, sidecar retired, live view unchanged
-    assert ann_store.fold_ivf_retractions(spark, lists) == {"folded": True}
+    # fold: touched buckets rewritten, sidecar retired, live view unchanged
+    assert ann_store.fold_ivf_tombstones(spark, lists)["folded"] is True
     assert not os.path.isdir(ann_store.ivf_tombstones_path(lists))
     assert {
-        (r["list_id"], r["vec_id"]) for r in spark.read.parquet(lists).collect()
+        (r["list_id"], r["n_id"])
+        for r in tables.read_table(spark, lists).collect()
     } == {(1, 4)}
     # idempotent: folding again is a no-op
-    assert ann_store.fold_ivf_retractions(spark, lists) == {"folded": False}
+    assert ann_store.fold_ivf_tombstones(spark, lists) == {"folded": False}
 
 
 def test_rep_admission_redelivered_tombstoned_doc(spark, tmp_path):
@@ -1436,14 +1448,14 @@ def test_fold_refuses_markerless_banded_index(spark, tmp_path):
 
     sig, bands, mem = _build_rep_store(spark, tmp_path)
     dedup_store.retract_docs(spark, sig, mem, _ids(spark, 1))
-    os.remove(os.path.join(bands, dedup_store._TBL_META))
-    with pytest.raises(dedup_store.StoreLayoutError, match=f"{bands}.*build-store"):
+    os.remove(os.path.join(bands, tables._TBL_META))
+    with pytest.raises(tables.StoreLayoutError, match=f"{bands}.*build-store"):
         dedup_store.fold_retractions(spark, sig, bands, mem)
     # sidecars still stand — nothing was retired
     assert os.path.isdir(dedup_store.gdelta_path(sig))
 
     shutil.rmtree(bands)
-    with pytest.raises(dedup_store.StoreLayoutError, match="is missing"):
+    with pytest.raises(tables.StoreLayoutError, match="is missing"):
         dedup_store.fold_retractions(spark, sig, bands, mem)
     assert os.path.isdir(dedup_store.gdelta_path(sig))
 
@@ -1757,15 +1769,13 @@ def test_live_ivf_lists_heals_crashed_sidecar_swap(spark, tmp_path):
     import os
 
     lists = str(tmp_path / "lists")
-    spark.createDataFrame(
-        [(0, 1), (0, 2), (1, 3)], "list_id int, vec_id long"
-    ).write.parquet(lists)
+    _write_ivf_lists(spark, lists, [(0, 1), (0, 2), (1, 3)])
     ann_store.retract_ivf_vectors(spark, lists, _ids(spark, 2))
     tomb = ann_store.ivf_tombstones_path(lists)
     os.rename(tomb, tomb + ".old")
 
     live = {
-        r["vec_id"] for r in ann_store.live_ivf_lists(spark, lists).collect()
+        r["n_id"] for r in ann_store.live_ivf_lists(spark, lists).collect()
     }
     assert live == {1, 3}  # the takedown still filters
 
@@ -1778,20 +1788,18 @@ def test_sidecar_retirement_removes_swap_remnants(spark, tmp_path):
     import os
 
     lists = str(tmp_path / "lists")
-    spark.createDataFrame(
-        [(0, 1), (0, 2)], "list_id int, vec_id long"
-    ).write.parquet(lists)
+    _write_ivf_lists(spark, lists, [(0, 1), (0, 2)])
     ann_store.retract_ivf_vectors(spark, lists, _ids(spark, 1))
     tomb = ann_store.ivf_tombstones_path(lists)
     # simulate the crashed final-cleanup state: tomb AND a stale .old
     spark.createDataFrame([(2,)], "vec_id long").write.parquet(tomb + ".old")
 
-    assert ann_store.fold_ivf_retractions(spark, lists) == {"folded": True}
+    assert ann_store.fold_ivf_tombstones(spark, lists)["folded"] is True
     assert not os.path.isdir(tomb)
     assert not os.path.exists(tomb + ".old")
     # vec 2 (re-insertable content) is NOT ghost-filtered afterwards
     assert {
-        r["vec_id"] for r in ann_store.live_ivf_lists(spark, lists).collect()
+        r["n_id"] for r in ann_store.live_ivf_lists(spark, lists).collect()
     } == {2}
 
 
@@ -1807,7 +1815,7 @@ def test_sidecar_retirement_removes_swap_remnants(spark, tmp_path):
 
 
 def _bucket_vals(ds, keys, col, buckets):
-    expr = ds._tbl_pb_expr(keys.schema[col].dataType, col, buckets)
+    expr = tables._tbl_pb_expr(keys.schema[col].dataType, col, buckets)
     return sorted(
         r[0] for r in keys.select(expr.alias("pb")).distinct().collect()
     )
@@ -1827,14 +1835,14 @@ def test_bucketed_table_roundtrip_and_pruned_read(spark, tmp_path):
     df = spark.createDataFrame(
         [(i, f"gh{i}") for i in range(200)], "group_id long, gh string"
     )
-    ds.write_table(df, path, "overwrite", key="gh", buckets=8)
-    assert ds.table_layout(path) == {"buckets": 8, "key": "gh"}
-    full = ds.read_table(spark, path)
+    tables.write_table(df, path, "overwrite", key="gh", buckets=8)
+    assert tables.table_layout(path) == {"buckets": 8, "key": "gh"}
+    full = tables.read_table(spark, path)
     assert sorted(full.columns) == ["gh", "group_id"]
     assert full.count() == 200
 
     keys = spark.createDataFrame([("gh3",), ("gh17",)], "gh string")
-    pr = ds.pruned_table(spark, path, keys)
+    pr = tables.pruned_table(spark, path, keys)
     got = {
         (r["group_id"], r["gh"])
         for r in pr.join(keys, "gh", "left_semi").collect()
@@ -1866,13 +1874,13 @@ def test_pruned_table_refuses_markerless_table(spark, tmp_path):
     df.write.parquet(path)
     keys = spark.createDataFrame([("gh3",)], "gh string")
     for call in (
-        lambda: ds.table_layout(path),
-        lambda: ds.pruned_table(spark, path, keys),
-        lambda: ds.batch_bucket_vals(keys, [(path, "gh")]),
-        lambda: ds.write_table(df, path, "append"),
-        lambda: ds.bucket_table(spark, path, 4),
+        lambda: tables.table_layout(path),
+        lambda: tables.pruned_table(spark, path, keys),
+        lambda: tables.batch_bucket_vals(keys, [(path, "gh")]),
+        lambda: tables.write_table(df, path, "append"),
+        lambda: tables.bucket_table(spark, path, 4),
     ):
-        with pytest.raises(ds.StoreLayoutError, match=f"{path}.*build-store"):
+        with pytest.raises(tables.StoreLayoutError, match=f"{path}.*build-store"):
             call()
     assert spark.read.parquet(path).count() == 20
 
@@ -1886,16 +1894,16 @@ def test_auto_buckets_sizing():
     trigger on its first maintenance pass."""
     from fdblog2clickhouse_spark.operators import dedup_store as ds
 
-    per = ds._BUILD_ROWS_PER_BUCKET
-    assert ds._auto_buckets(0) == 2
-    assert ds._auto_buckets(2 * per) == 2
-    assert ds._auto_buckets(2 * per + 1) == 4
-    assert ds._auto_buckets(16 * per) == 16
-    assert ds._auto_buckets(10**12) == ds._REBUCKET_MAX
+    per = tables._BUILD_ROWS_PER_BUCKET
+    assert tables._auto_buckets(0) == 2
+    assert tables._auto_buckets(2 * per) == 2
+    assert tables._auto_buckets(2 * per + 1) == 4
+    assert tables._auto_buckets(16 * per) == 16
+    assert tables._auto_buckets(10**12) == tables._REBUCKET_MAX
     # every sized build starts under the rebucket trigger
     for rows in (1, 5_000, 100_000, 10**7):
-        b = ds._auto_buckets(rows)
-        assert rows / b <= ds._REBUCKET_TRIGGER_ROWS or b == ds._REBUCKET_MAX
+        b = tables._auto_buckets(rows)
+        assert rows / b <= tables._REBUCKET_TRIGGER_ROWS or b == tables._REBUCKET_MAX
 
 
 def test_write_table_build_auto_sizes_buckets(spark, tmp_path):
@@ -1908,20 +1916,20 @@ def test_write_table_build_auto_sizes_buckets(spark, tmp_path):
     df = spark.createDataFrame(
         [(i, f"gh{i}") for i in range(50)], "group_id long, gh string"
     )
-    ds.write_table(df, path, "overwrite", key="gh")
-    lay = ds.table_layout(path)
-    assert lay["buckets"] == ds._auto_buckets(50) == 2
+    tables.write_table(df, path, "overwrite", key="gh")
+    lay = tables.table_layout(path)
+    assert lay["buckets"] == tables._auto_buckets(50) == 2
     # the build frame is left unpersisted (no cache leak)
     assert not (df.storageLevel.useMemory or df.storageLevel.useDisk)
     # marker carries the exact row count (rebucket gate reads it free)
-    assert ds._marker_rows(path) == 50
-    ds.write_table(
+    assert tables._marker_rows(path) == 50
+    tables.write_table(
         spark.createDataFrame([(99, "gh99")], "group_id long, gh string"),
         path,
         "append",
     )
-    assert ds.table_layout(path)["buckets"] == 2
-    assert ds.read_table(spark, path).count() == 51
+    assert tables.table_layout(path)["buckets"] == 2
+    assert tables.read_table(spark, path).count() == 51
 
 
 def test_batch_bucket_vals_matches_per_table_collects(spark, tmp_path):
@@ -1939,17 +1947,17 @@ def test_batch_bucket_vals_matches_per_table_collects(spark, tmp_path):
     sigs = spark.createDataFrame(
         [(i, f"gh{i}") for i in range(12)], "group_id long, gh string"
     )
-    ds.write_table(mems, mem, "overwrite", key="doc_id", buckets=8)
-    ds.write_table(sigs, sig, "overwrite", key="gh", buckets=4)
+    tables.write_table(mems, mem, "overwrite", key="doc_id", buckets=8)
+    tables.write_table(sigs, sig, "overwrite", key="gh", buckets=4)
 
     batch = spark.createDataFrame(
         [(3, "gh3"), (11, "gh11"), (25, "gh25")], "doc_id long, gh string"
     )
-    got = ds.batch_bucket_vals(batch, [(mem, "doc_id"), (sig, "gh")])
+    got = tables.batch_bucket_vals(batch, [(mem, "doc_id"), (sig, "gh")])
     # reference: what pruned_table's internal collect computes
     for vals, (path, kc) in zip(got, [(mem, "doc_id"), (sig, "gh")]):
-        pb = ds._tbl_pb_expr(
-            batch.schema[kc].dataType, kc, ds.table_layout(path)["buckets"]
+        pb = tables._tbl_pb_expr(
+            batch.schema[kc].dataType, kc, tables.table_layout(path)["buckets"]
         )
         ref = sorted(
             r[0]
@@ -1959,8 +1967,8 @@ def test_batch_bucket_vals_matches_per_table_collects(spark, tmp_path):
         assert vals == ref
     # and the pruned read fed with the precomputed vals matches the
     # self-collected one
-    a = ds.pruned_table(spark, mem, batch.select("doc_id"), vals=got[0])
-    b = ds.pruned_table(spark, mem, batch.select("doc_id"))
+    a = tables.pruned_table(spark, mem, batch.select("doc_id"), vals=got[0])
+    b = tables.pruned_table(spark, mem, batch.select("doc_id"))
     assert sorted(r["doc_id"] for r in a.collect()) == sorted(
         r["doc_id"] for r in b.collect()
     )
@@ -1978,10 +1986,10 @@ def test_write_table_append_honors_persisted_layout(spark, tmp_path):
     mk = lambda lo, hi: spark.createDataFrame(
         [(i, f"gh{i}") for i in range(lo, hi)], "group_id long, gh string"
     )
-    ds.write_table(mk(0, 50), path, "overwrite", key="gh", buckets=4)
-    ds.write_table(mk(50, 80), path, "append")
-    assert ds.table_layout(path) == {"buckets": 4, "key": "gh"}
-    assert ds.read_table(spark, path).count() == 80
+    tables.write_table(mk(0, 50), path, "overwrite", key="gh", buckets=4)
+    tables.write_table(mk(50, 80), path, "append")
+    assert tables.table_layout(path) == {"buckets": 4, "key": "gh"}
+    assert tables.read_table(spark, path).count() == 80
     # no stray top-level files: every row lives under a pb dir
     assert glob.glob(os.path.join(path, "*.parquet")) == []
 
@@ -1999,19 +2007,19 @@ def test_bucket_table_migration_and_rebucket(spark, tmp_path):
         [(i, f"gh{i % 7}", i % 7) for i in range(100)],
         "doc_id long, gh string, group_id long",
     )
-    ds.write_table(df, path, "overwrite", key="doc_id", buckets=8)
-    r2 = ds.bucket_table(spark, path, 32)
+    tables.write_table(df, path, "overwrite", key="doc_id", buckets=8)
+    r2 = tables.bucket_table(spark, path, 32)
     assert r2 == {"buckets_before": 8, "buckets_after": 32}
-    assert ds.table_layout(path) == {"buckets": 32, "key": "doc_id"}
-    assert ds.read_table(spark, path).count() == 100
+    assert tables.table_layout(path) == {"buckets": 32, "key": "doc_id"}
+    assert tables.read_table(spark, path).count() == 100
     assert not os.path.exists(path + ".old")
-    assert ds.bucket_table(spark, path, 32) == {
+    assert tables.bucket_table(spark, path, 32) == {
         "buckets_before": 32, "buckets_after": 32,
     }
     keys = spark.createDataFrame([(13,), (77,)], "doc_id long")
     got = {
         r["doc_id"]
-        for r in ds.pruned_table(spark, path, keys)
+        for r in tables.pruned_table(spark, path, keys)
         .join(keys, "doc_id", "left_semi")
         .collect()
     }
@@ -2031,11 +2039,11 @@ def test_compact_signature_store_preserves_bucketed_layout(spark, tmp_path):
         [(i, f"gh{i}", f"bk{i % 3}") for i in range(lo, hi)],
         "group_id long, gh string, bk0 string",
     )
-    ds.write_table(mk(0, 40), path, "overwrite", key="gh", buckets=4)
-    ds.write_table(mk(40, 60), path, "append")
-    ds.write_table(mk(60, 90), path, "append")
+    tables.write_table(mk(0, 40), path, "overwrite", key="gh", buckets=4)
+    tables.write_table(mk(40, 60), path, "append")
+    tables.write_table(mk(60, 90), path, "append")
     before = {
-        tuple(r) for r in ds.read_table(spark, path).collect()
+        tuple(r) for r in tables.read_table(spark, path).collect()
     }
     per_dir = [
         len(glob.glob(os.path.join(d, "*.parquet")))
@@ -2044,14 +2052,14 @@ def test_compact_signature_store_preserves_bucketed_layout(spark, tmp_path):
     assert max(per_dir) > 1
     n = ds.compact_signature_store(spark, path, sort_col="bk0")
     assert n == sum(per_dir)
-    assert ds.table_layout(path) == {"buckets": 4, "key": "gh"}
+    assert tables.table_layout(path) == {"buckets": 4, "key": "gh"}
     per_dir_after = [
         len(glob.glob(os.path.join(d, "*.parquet")))
         for d in glob.glob(os.path.join(path, "pb=*"))
     ]
     assert per_dir_after and max(per_dir_after) == 1
     assert {
-        tuple(r) for r in ds.read_table(spark, path).collect()
+        tuple(r) for r in tables.read_table(spark, path).collect()
     } == before
 
 
@@ -2075,11 +2083,11 @@ def test_fold_retractions_preserves_bucketed_layout(spark, tmp_path):
     mem = str(tmp_path / "members")
     g = ds.rep_group_frame(docs)
     reps = ds.rep_reps(g)
-    ds.write_table(
+    tables.write_table(
         ds.rep_signature_frame(reps), sig, "overwrite", key="gh", buckets=4
     )
-    ds.write_banded_index(ds.read_table(spark, sig), band, "overwrite")
-    ds.write_table(
+    ds.write_banded_index(tables.read_table(spark, sig), band, "overwrite")
+    tables.write_table(
         g.select("doc_id", "gh")
         .join(reps.select("gh", "group_id"), "gh")
         .select("doc_id", "gh", "group_id"),
@@ -2097,15 +2105,15 @@ def test_fold_retractions_preserves_bucketed_layout(spark, tmp_path):
     # the retracted singleton's rows
     assert fold["sig_parts"] == 1 and fold["mem_parts"] == 1
     assert 1 <= fold["index_parts"] <= 4
-    assert ds.table_layout(sig) == {"buckets": 4, "key": "gh"}
-    assert ds.table_layout(mem) == {"buckets": 4, "key": "doc_id"}
+    assert tables.table_layout(sig) == {"buckets": 4, "key": "gh"}
+    assert tables.table_layout(mem) == {"buckets": 4, "key": "doc_id"}
     assert not os.path.exists(sig + ".old") and not os.path.exists(mem + ".old")
-    m = ds.read_table(spark, mem)
+    m = tables.read_table(spark, mem)
     assert m.where(F.col("doc_id") == 3).count() == 0
     assert m.count() == 7
     keys = spark.createDataFrame([(5,)], "doc_id long")
     assert (
-        ds.pruned_table(spark, mem, keys).where(F.col("doc_id") == 5).count()
+        tables.pruned_table(spark, mem, keys).where(F.col("doc_id") == 5).count()
         == 1
     )
 
@@ -2123,7 +2131,7 @@ def test_integral_bucketing_survives_strided_id_spaces(spark, tmp_path):
     df = spark.createDataFrame(
         [(i * 64, f"g{i}") for i in range(64)], "doc_id long, gh string"
     )
-    ds.write_table(df, path, "overwrite", key="doc_id", buckets=8)
+    tables.write_table(df, path, "overwrite", key="doc_id", buckets=8)
     import glob
     import os
 
@@ -2132,7 +2140,7 @@ def test_integral_bucketing_survives_strided_id_spaces(spark, tmp_path):
     keys = spark.createDataFrame([(128,), (640,)], "doc_id long")
     got = sorted(
         r["doc_id"]
-        for r in ds.pruned_table(spark, path, keys)
+        for r in tables.pruned_table(spark, path, keys)
         .join(keys, "doc_id", "left_semi")
         .collect()
     )
@@ -2155,20 +2163,20 @@ def test_pre_xxh64_marker_is_refused(spark, tmp_path):
     df = spark.createDataFrame(
         [(i, f"g{i}") for i in range(40)], "doc_id long, gh string"
     )
-    ds.write_table(df, path, "overwrite", key="doc_id", buckets=4)
-    with open(os.path.join(path, ds._TBL_META), "w") as f:
+    tables.write_table(df, path, "overwrite", key="doc_id", buckets=4)
+    with open(os.path.join(path, tables._TBL_META), "w") as f:
         json.dump(
             {"buckets": 4, "key": "doc_id", "schema": df.schema.json()}, f
         )
     keys = spark.createDataFrame([(7,), (22,)], "doc_id long")
     for call in (
-        lambda: ds.pruned_table(spark, path, keys),
-        lambda: ds.write_table(df, path, "append"),
-        lambda: ds.bucket_table(spark, path, 8),
-        lambda: ds.maybe_rebucket_table(spark, path),
+        lambda: tables.pruned_table(spark, path, keys),
+        lambda: tables.write_table(df, path, "append"),
+        lambda: tables.bucket_table(spark, path, 8),
+        lambda: tables.maybe_rebucket_table(spark, path),
         lambda: ds.compact_signature_store(spark, path, sort_col="doc_id"),
     ):
-        with pytest.raises(ds.StoreLayoutError, match=f"{path}.*build-store"):
+        with pytest.raises(tables.StoreLayoutError, match=f"{path}.*build-store"):
             call()
     assert spark.read.parquet(path).count() == 40
 
@@ -2193,9 +2201,9 @@ def test_admission_step_heals_crashed_maintenance_swap(spark, tmp_path):
     sig = str(tmp_path / "sigs")
     band = str(tmp_path / "bands")
     mem = str(tmp_path / "members")
-    ds.write_table(ds.rep_signature_frame(reps), sig, "overwrite", key="gh")
-    ds.write_banded_index(ds.read_table(spark, sig), band, "overwrite")
-    ds.write_table(
+    tables.write_table(ds.rep_signature_frame(reps), sig, "overwrite", key="gh")
+    ds.write_banded_index(tables.read_table(spark, sig), band, "overwrite")
+    tables.write_table(
         g_base.select("doc_id", "gh")
         .join(reps.select("gh", "group_id"), "gh")
         .select("doc_id", "gh", "group_id"),
@@ -2238,15 +2246,15 @@ def _build_bucketed_rep_store(spark, tmp_path, buckets=4, extra_docs=24):
     sig = str(tmp_path / "signatures")
     bands = str(tmp_path / "bands")
     mem = str(tmp_path / "members")
-    dedup_store.write_table(
+    tables.write_table(
         dedup_store.rep_signature_frame(reps), sig, "overwrite",
         key="gh", buckets=buckets,
     )
     dedup_store.write_banded_index(
-        dedup_store.read_table(spark, sig), bands, "overwrite",
+        tables.read_table(spark, sig), bands, "overwrite",
         buckets=4 * buckets,
     )
-    dedup_store.write_table(
+    tables.write_table(
         g.select("doc_id", "gh")
         .join(reps.select("gh", "group_id"), "gh")
         .select("doc_id", "gh", "group_id"),
@@ -2302,10 +2310,10 @@ def test_granular_fold_equivalence_and_byte_invariance(spark, tmp_path):
 
     # physical tables now ARE the pre-fold live views
     assert {
-        tuple(r) for r in dedup_store.read_table(spark, sig).collect()
+        tuple(r) for r in tables.read_table(spark, sig).collect()
     } == live_s
     assert {
-        tuple(r) for r in dedup_store.read_table(spark, mem).collect()
+        tuple(r) for r in tables.read_table(spark, mem).collect()
     } == live_m
     # untouched partitions byte-invariant (size AND mtime)
     for path, before in ((sig, snap_sig), (mem, snap_mem), (bands, snap_band)):
@@ -2324,11 +2332,11 @@ def test_granular_fold_equivalence_and_byte_invariance(spark, tmp_path):
     # live groups (probe with the store itself — every group's own
     # band keys select its partitions)
     got = dedup_store.pruned_store_rows(
-        spark, bands, dedup_store.read_table(spark, sig)
+        spark, bands, tables.read_table(spark, sig)
     )
     live_gids = {
         r["group_id"]
-        for r in dedup_store.read_table(spark, sig)
+        for r in tables.read_table(spark, sig)
         .select("group_id")
         .collect()
     }
@@ -2352,7 +2360,7 @@ def test_granular_fold_tombstone_only_skips_sig_and_index(spark, tmp_path):
     assert fold["mem_parts"] == 1
     assert _partition_snapshot(sig) == snap_sig
     assert _partition_snapshot(bands) == snap_band
-    m = dedup_store.read_table(spark, mem)
+    m = tables.read_table(spark, mem)
     assert m.where(m["doc_id"] == 2).count() == 0
 
 
@@ -2372,8 +2380,8 @@ def test_granular_fold_partial_crash_converges(spark, tmp_path):
     # partial fold: sig only (the crash point after the first table)
     gd = spark.read.parquet(dedup_store.gdelta_path(sig))
     gd_keys = gd.select("group_id").distinct()
-    assert dedup_store._fold_table_granular(
-        spark, sig, sig, gd_keys, None
+    assert tables._fold_table_granular(
+        spark, sig, [(gd_keys, "group_id")], dedup_store._gdelta_fold(spark, sig)
     ) >= 1
     # live views still correct mid-crash (gdelta applies as no-op to
     # the already-folded sig rows)
@@ -2392,7 +2400,7 @@ def test_granular_fold_partial_crash_converges(spark, tmp_path):
     assert fold["sig_parts"] == 0  # converged — nothing re-rewritten
     assert fold["mem_parts"] >= 1
     assert {
-        tuple(r) for r in dedup_store.read_table(spark, mem).collect()
+        tuple(r) for r in tables.read_table(spark, mem).collect()
     } == live_m
 
 
@@ -2414,8 +2422,8 @@ def test_heal_table_fold_crash_windows(spark, tmp_path):
     df = spark.createDataFrame(
         [(i, f"g{i}") for i in range(32)], "doc_id long, gh string"
     )
-    ds.write_table(df, path, "overwrite", key="doc_id", buckets=4)
-    total = ds.read_table(spark, path).count()
+    tables.write_table(df, path, "overwrite", key="doc_id", buckets=4)
+    total = tables.read_table(spark, path).count()
     part = os.path.basename(glob.glob(os.path.join(path, "pb=*"))[0])
 
     # (a) mid-swap: live renamed aside, journal present
@@ -2426,7 +2434,7 @@ def test_heal_table_fold_crash_windows(spark, tmp_path):
     with open(os.path.join(path, storage._FOLD_JOURNAL), "w") as f:
         json.dump({"dirs": [part]}, f)
     # a raw read WOULD drop the bucket's rows; read_table heals first
-    assert ds.read_table(spark, path).count() == total
+    assert tables.read_table(spark, path).count() == total
     assert os.path.isdir(os.path.join(path, part))
     assert not os.path.exists(os.path.join(path, storage._FOLD_JOURNAL))
 
@@ -2438,9 +2446,9 @@ def test_heal_table_fold_crash_windows(spark, tmp_path):
     with open(os.path.join(path, storage._FOLD_JOURNAL), "w") as f:
         json.dump({"dirs": [part]}, f)
     keys = spark.createDataFrame([(1,)], "doc_id long")
-    assert ds.pruned_table(spark, path, keys).count() >= 1
+    assert tables.pruned_table(spark, path, keys).count() >= 1
     assert not os.path.isdir(os.path.join(path, storage._BFOLD_PREFIX + part))
-    assert ds.read_table(spark, path).count() == total
+    assert tables.read_table(spark, path).count() == total
 
 
 def test_maybe_rebucket_table_decision(spark, tmp_path, monkeypatch):
@@ -2454,36 +2462,36 @@ def test_maybe_rebucket_table_decision(spark, tmp_path, monkeypatch):
     df = spark.createDataFrame(
         [(i, f"g{i}") for i in range(64)], "doc_id long, gh string"
     )
-    ds.write_table(df, path, "overwrite", key="doc_id", buckets=2)
-    before = {tuple(r) for r in ds.read_table(spark, path).collect()}
+    tables.write_table(df, path, "overwrite", key="doc_id", buckets=2)
+    before = {tuple(r) for r in tables.read_table(spark, path).collect()}
 
     # under the trigger: no-op
-    monkeypatch.setattr(ds, "_REBUCKET_TRIGGER_ROWS", 64)
-    monkeypatch.setattr(ds, "_REBUCKET_TARGET_ROWS", 16)
-    rb = ds.maybe_rebucket_table(spark, path)
+    monkeypatch.setattr(tables, "_REBUCKET_TRIGGER_ROWS", 64)
+    monkeypatch.setattr(tables, "_REBUCKET_TARGET_ROWS", 16)
+    rb = tables.maybe_rebucket_table(spark, path)
     assert rb == {
         "rebucketed": False, "rows": 64,
         "buckets_before": 2, "buckets_after": 2,
     }
 
     # over the trigger: jump to the target ratio
-    monkeypatch.setattr(ds, "_REBUCKET_TRIGGER_ROWS", 16)
-    monkeypatch.setattr(ds, "_REBUCKET_TARGET_ROWS", 4)
-    rb = ds.maybe_rebucket_table(spark, path)
+    monkeypatch.setattr(tables, "_REBUCKET_TRIGGER_ROWS", 16)
+    monkeypatch.setattr(tables, "_REBUCKET_TARGET_ROWS", 4)
+    rb = tables.maybe_rebucket_table(spark, path)
     assert rb["rebucketed"] is True
     assert rb["buckets_before"] == 2 and rb["buckets_after"] == 16
-    assert ds.table_layout(path)["buckets"] == 16
-    assert {tuple(r) for r in ds.read_table(spark, path).collect()} == before
+    assert tables.table_layout(path)["buckets"] == 16
+    assert {tuple(r) for r in tables.read_table(spark, path).collect()} == before
     keys = spark.createDataFrame([(7,)], "doc_id long")
-    assert ds.pruned_table(spark, path, keys).where("doc_id = 7").count() == 1
+    assert tables.pruned_table(spark, path, keys).where("doc_id = 7").count() == 1
 
     # marker-less table: refused
     import pytest
 
     flat = str(tmp_path / "flat")
     df.write.parquet(flat)
-    with pytest.raises(ds.StoreLayoutError, match="build-store"):
-        ds.maybe_rebucket_table(spark, flat)
+    with pytest.raises(tables.StoreLayoutError, match="build-store"):
+        tables.maybe_rebucket_table(spark, flat)
 
 def test_heal_table_fold_banded_index_reader(spark, tmp_path):
     """The band index's crash window: a granular index fold that
@@ -2498,7 +2506,7 @@ def test_heal_table_fold_banded_index_reader(spark, tmp_path):
     from fdblog2clickhouse_spark.operators import dedup_store as ds
 
     sig, bands, mem = _build_bucketed_rep_store(spark, tmp_path)
-    batch_sigs = ds.read_table(spark, sig)
+    batch_sigs = tables.read_table(spark, sig)
     want = {
         r["id"] for r in ds.pruned_store_rows(spark, bands, batch_sigs).collect()
     }
@@ -2552,10 +2560,10 @@ def test_granular_fold_matches_live_views_property(spark, tmp_path_factory, retr
     fold = dedup_store.fold_retractions(spark, sig, bands, mem)
     assert fold["folded"] is True
     assert {
-        tuple(r) for r in dedup_store.read_table(spark, sig).collect()
+        tuple(r) for r in tables.read_table(spark, sig).collect()
     } == live_s
     assert {
-        tuple(r) for r in dedup_store.read_table(spark, mem).collect()
+        tuple(r) for r in tables.read_table(spark, mem).collect()
     } == live_m
     import os
 
@@ -2563,11 +2571,11 @@ def test_granular_fold_matches_live_views_property(spark, tmp_path_factory, retr
     assert not os.path.isdir(dedup_store.gdelta_path(sig))
     # the index serves exactly the live groups after the granular fold
     got = dedup_store.pruned_store_rows(
-        spark, bands, dedup_store.read_table(spark, sig)
+        spark, bands, tables.read_table(spark, sig)
     )
     assert {r["id"] for r in got.collect()} == {
         r["group_id"]
-        for r in dedup_store.read_table(spark, sig).select("group_id").collect()
+        for r in tables.read_table(spark, sig).select("group_id").collect()
     }
 
 
@@ -2588,8 +2596,8 @@ def test_heal_table_fold_corrupt_journal(spark, tmp_path):
     df = spark.createDataFrame(
         [(i, f"g{i}") for i in range(32)], "doc_id long, gh string"
     )
-    ds.write_table(df, path, "overwrite", key="doc_id", buckets=4)
-    total = ds.read_table(spark, path).count()
+    tables.write_table(df, path, "overwrite", key="doc_id", buckets=4)
+    total = tables.read_table(spark, path).count()
     parts = sorted(
         os.path.basename(p) for p in glob.glob(os.path.join(path, "pb=*"))
     )
@@ -2598,7 +2606,7 @@ def test_heal_table_fold_corrupt_journal(spark, tmp_path):
     with open(os.path.join(path, storage._FOLD_JOURNAL), "w") as f:
         f.write('{"dirs": ["pb=')  # the mid-write crash
     os.makedirs(path + ".bfold/pb=0", exist_ok=True)
-    assert ds.read_table(spark, path).count() == total
+    assert tables.read_table(spark, path).count() == total
     assert not os.path.exists(os.path.join(path, storage._FOLD_JOURNAL))
     assert not os.path.exists(path + ".bfold")
 
@@ -2615,7 +2623,7 @@ def test_heal_table_fold_corrupt_journal(spark, tmp_path):
     )
     with open(os.path.join(path, storage._FOLD_JOURNAL), "w") as f:
         f.write("not json at all")
-    assert ds.read_table(spark, path).count() == total
+    assert tables.read_table(spark, path).count() == total
     assert os.path.isdir(os.path.join(path, parts[0]))
     assert not os.path.exists(
         os.path.join(path, storage._BFOLD_PREFIX + parts[0])
@@ -2624,7 +2632,7 @@ def test_heal_table_fold_corrupt_journal(spark, tmp_path):
         os.path.join(path, storage._BFOLD_PREFIX + parts[1])
     )
     assert not os.path.exists(os.path.join(path, storage._FOLD_JOURNAL))
-    assert ds.read_table(spark, path).count() == total
+    assert tables.read_table(spark, path).count() == total
 
 
 def test_granular_fold_journal_written_atomically(spark, tmp_path, monkeypatch):
@@ -2641,7 +2649,7 @@ def test_granular_fold_journal_written_atomically(spark, tmp_path, monkeypatch):
     df = spark.createDataFrame(
         [(i, f"g{i}") for i in range(32)], "doc_id long, gh string"
     )
-    ds.write_table(df, path, "overwrite", key="doc_id", buckets=4)
+    tables.write_table(df, path, "overwrite", key="doc_id", buckets=4)
 
     seen = []
     real_dump = json_mod.dump
@@ -2659,10 +2667,10 @@ def test_granular_fold_journal_written_atomically(spark, tmp_path, monkeypatch):
     live0 = [p for p in os.listdir(path) if p.startswith("pb=")][0]
     shutil.copytree(path, staging, ignore=shutil.ignore_patterns("_*"))
     # r18 signature: the caller passes the semantic emptied set
-    ds._publish_fold(path, staging, [live0], set())
+    tables._publish_fold(path, staging, [live0], set())
     assert seen and all(n.endswith(".tmp") for n in seen)
     # the journal and both marker row-count writes went through the spy
-    meta_tmp = os.path.join(path, ds._TBL_META) + ".tmp"
+    meta_tmp = os.path.join(path, tables._TBL_META) + ".tmp"
     assert seen.count(meta_tmp) == 2
     assert not os.path.exists(os.path.join(path, storage._FOLD_JOURNAL))
 
@@ -2711,24 +2719,27 @@ def test_fold_keys_fast_path_skips_table_scans(spark, tmp_path, monkeypatch):
         tuple(r) for r in dedup_store.live_members(spark, mem, sig).collect()
     }
 
-    real = dedup_store.read_table
+    real = tables.read_table
     calls = []
 
     def spy(spark_, path_):
         calls.append(path_)
         return real(spark_, path_)
 
+    # the fold reads through both modules: dedup_store's own calls
+    # and the granular fold's discovery in `tables`
     monkeypatch.setattr(dedup_store, "read_table", spy)
+    monkeypatch.setattr(tables, "read_table", spy)
     fold = dedup_store.fold_retractions(spark, sig, bands, mem)
     monkeypatch.undo()
     assert fold["folded"] is True
     assert fold["sig_parts"] >= 1 and fold["index_parts"] >= 1
     assert calls == [], f"fast path read tables whole: {calls}"
     assert {
-        tuple(r) for r in dedup_store.read_table(spark, sig).collect()
+        tuple(r) for r in tables.read_table(spark, sig).collect()
     } == live_s
     assert {
-        tuple(r) for r in dedup_store.read_table(spark, mem).collect()
+        tuple(r) for r in tables.read_table(spark, mem).collect()
     } == live_m
 
 
@@ -2747,9 +2758,9 @@ def test_gdelta_without_keys_sidecar_is_refused(spark, tmp_path):
     keys_p = dedup_store.gdelta_keys_path(sig)
     shutil.rmtree(keys_p)
 
-    with pytest.raises(dedup_store.StoreLayoutError, match="build-store"):
+    with pytest.raises(tables.StoreLayoutError, match="build-store"):
         dedup_store.retract_docs(spark, sig, mem, _ids(spark, 3))
-    with pytest.raises(dedup_store.StoreLayoutError, match="build-store"):
+    with pytest.raises(tables.StoreLayoutError, match="build-store"):
         dedup_store.fold_retractions(spark, sig, bands, mem)
     assert not os.path.exists(keys_p)
     assert os.path.isdir(dedup_store.gdelta_path(sig))
@@ -2769,8 +2780,8 @@ def test_fold_index_falls_back_when_dropped_sigs_already_folded(
     gd = spark.read.parquet(dedup_store.gdelta_path(sig))
     gd_keys = gd.select("group_id").distinct()
     # the crash: sig folded, index not
-    assert dedup_store._fold_table_granular(
-        spark, sig, sig, gd_keys, None
+    assert tables._fold_table_granular(
+        spark, sig, [(gd_keys, "group_id")], dedup_store._gdelta_fold(spark, sig)
     ) >= 1
     assert (
         spark.read.parquet(bands).where("group_id = 3").count() > 0
@@ -2979,7 +2990,7 @@ def test_fold_emptied_partition_not_resurrected_by_racing_heal(
     df = spark.createDataFrame(
         [(i, f"g{i}") for i in range(32)], "doc_id long, gh string"
     )
-    dedup_store.write_table(df, path, "overwrite", key="doc_id", buckets=4)
+    tables.write_table(df, path, "overwrite", key="doc_id", buckets=4)
     # tombstone EVERY doc in one physical bucket → the fold empties it
     part_dir = sorted(glob.glob(os.path.join(path, "pb=*")))[0]
     part = os.path.basename(part_dir)
@@ -3001,15 +3012,12 @@ def test_fold_emptied_partition_not_resurrected_by_racing_heal(
             storage._restore_aside(dst, os.path.join(path, part))
 
     monkeypatch.setattr(os, "rename", racing)
-    # sig_path = a dir with no sidecars → gdelta composes as a no-op
-    n = dedup_store._fold_table_granular(
-        spark, path, str(tmp_path / "nosuch"), None, victims
-    )
+    n = tables._fold_table_granular(spark, path, [(victims, "doc_id")])
     monkeypatch.setattr(os, "rename", real_rename)
     assert fired
     assert n == 1
     assert not os.path.isdir(part_dir)  # retired, not resurrected
-    assert dedup_store.read_table(spark, path).count() == survivors
+    assert tables.read_table(spark, path).count() == survivors
 
 
 def test_marker_row_cache_lifecycle(spark, tmp_path, monkeypatch):
@@ -3026,43 +3034,41 @@ def test_marker_row_cache_lifecycle(spark, tmp_path, monkeypatch):
     df = spark.createDataFrame(
         [(i, f"g{i}") for i in range(32)], "doc_id long, gh string"
     )
-    dedup_store.write_table(df, path, "overwrite", key="doc_id", buckets=4)
-    assert dedup_store._marker_rows(path) == 32  # build sets it
+    tables.write_table(df, path, "overwrite", key="doc_id", buckets=4)
+    assert tables._marker_rows(path) == 32  # build sets it
 
     # append invalidates
     extra = spark.createDataFrame(
         [(100 + i, f"x{i}") for i in range(8)], "doc_id long, gh string"
     )
-    dedup_store.write_table(extra, path, "append")
-    assert dedup_store._marker_rows(path) is None
+    tables.write_table(extra, path, "append")
+    assert tables._marker_rows(path) is None
 
     # the gate's fallback counts once and re-persists
-    monkeypatch.setattr(dedup_store, "_REBUCKET_TRIGGER_ROWS", 1000)
-    monkeypatch.setattr(dedup_store, "_REBUCKET_TARGET_ROWS", 100)
-    rb = dedup_store.maybe_rebucket_table(spark, path)
+    monkeypatch.setattr(tables, "_REBUCKET_TRIGGER_ROWS", 1000)
+    monkeypatch.setattr(tables, "_REBUCKET_TARGET_ROWS", 100)
+    rb = tables.maybe_rebucket_table(spark, path)
     assert rb["rows"] == 40
-    assert dedup_store._marker_rows(path) == 40
+    assert tables._marker_rows(path) == 40
 
     # the gate itself now reads the marker (no scan): poison the
     # cache deliberately and observe the gate believe it
-    dedup_store._set_marker_rows(path, 7)
-    rb = dedup_store.maybe_rebucket_table(spark, path)
+    tables._set_marker_rows(path, 7)
+    rb = tables.maybe_rebucket_table(spark, path)
     assert rb["rows"] == 7
-    dedup_store._set_marker_rows(path, 40)
+    tables._set_marker_rows(path, 40)
 
     # granular fold adjusts by exactly the folded delta
     part_dir = sorted(glob.glob(os.path.join(path, "pb=*")))[0]
     victims = spark.read.parquet(part_dir).select("doc_id").limit(2)
     n_victims = victims.count()
-    assert dedup_store._fold_table_granular(
-        spark, path, str(tmp_path / "nosuch"), None, victims
-    ) >= 1
-    assert dedup_store._marker_rows(path) == 40 - n_victims
-    assert dedup_store.read_table(spark, path).count() == 40 - n_victims
+    assert tables._fold_table_granular(spark, path, [(victims, "doc_id")]) >= 1
+    assert tables._marker_rows(path) == 40 - n_victims
+    assert tables.read_table(spark, path).count() == 40 - n_victims
 
     # full rewrite (rebucket) resets it exactly
-    dedup_store.bucket_table(spark, path, 8)
-    assert dedup_store._marker_rows(path) == 40 - n_victims
+    tables.bucket_table(spark, path, 8)
+    assert tables._marker_rows(path) == 40 - n_victims
 
 
 def test_compaction_preserves_marker_row_cache(spark, tmp_path):
@@ -3077,21 +3083,21 @@ def test_compaction_preserves_marker_row_cache(spark, tmp_path):
         [(i, f"g{i}", i) for i in range(64)],
         "doc_id long, gh string, bk0 long",
     )
-    ds.write_table(df, path, "overwrite", key="doc_id", buckets=4)
-    assert ds._marker_rows(path) == 64
+    tables.write_table(df, path, "overwrite", key="doc_id", buckets=4)
+    assert tables._marker_rows(path) == 64
     # accumulate appends (invalidates), then restore the known count
-    ds.write_table(
+    tables.write_table(
         spark.createDataFrame(
             [(100 + i, f"x{i}", i) for i in range(16)],
             "doc_id long, gh string, bk0 long",
         ),
         path, "append",
     )
-    assert ds._marker_rows(path) is None
-    ds._set_marker_rows(path, 80)
+    assert tables._marker_rows(path) is None
+    tables._set_marker_rows(path, 80)
     ds.compact_signature_store(spark, path, sort_col="bk0")
-    assert ds._marker_rows(path) == 80  # footer recount, no Spark job
-    assert ds.read_table(spark, path).count() == 80
+    assert tables._marker_rows(path) == 80  # footer recount, no Spark job
+    assert tables.read_table(spark, path).count() == 80
 
 
 def test_heal_rolls_back_dead_writer_promptly(tmp_path):

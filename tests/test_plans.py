@@ -321,11 +321,11 @@ def test_no_unbounded_driver_collect():
         "operators/bpe.py": {
             "best = argmax_one_row.collect()",
         },
-        # the rep-store tables' partition-filter literal (≤ buckets
+        # the bucketed tables' partition-filter literal (≤ buckets
         # rows by the persisted layout — round 15), and the granular
         # fold's affected-partition literals (same bound: ≤ buckets
         # distinct pb values — round 16)
-        "operators/dedup_store.py": {
+        "operators/tables.py": {
             "for r in keys.select(pb.alias(_TBL_PB)).distinct().collect()",
             # _fold_table_granular._pb_vals (r17: the aff scan's
             # spelling, generalized to recorded-keys / candidate
@@ -336,14 +336,16 @@ def test_no_unbounded_driver_collect():
             # non-empty partition as emptied) — same bounds as the
             # discovery literals above: ≤ affected pb values
             "for r in folded.select(_TBL_PB).distinct().collect()",
-            # r18/r19 single-row stat/footprint aggregations: each is
-            # one .agg(...).collect()[0] — exactly ONE row by
-            # construction (batch_bucket_vals' combined bucket-id
-            # sets, themselves ≤ buckets literals per table; the
-            # admission step's combined (groups, new-groups,
+            # batch_bucket_vals' combined bucket-id sets: ONE row by
+            # construction, itself ≤ buckets literals per table
+            "row = batch.agg(*exprs).collect()[0]",
+        },
+        "operators/dedup_store.py": {
+            # r18/r19 single-row stat aggregations: each is one
+            # .agg(...).collect()[0] — exactly ONE row by construction
+            # (the admission step's combined (groups, new-groups,
             # feats-fill[, new-docs]) crossJoin of single-row aggs;
             # retract_docs' (changes, dropped) pair)
-            "row = batch.agg(*exprs).collect()[0]",
             "srow = step_stats.collect()[0]",
             "crow = cstats.collect()[0]",
         },

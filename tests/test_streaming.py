@@ -419,7 +419,8 @@ def test_streaming_ivf_insert_redelivery_idempotent(spark, tmp_path):
 
     drain(str(tmp_path / "ckpt1"))
     files = lambda p: sorted(
-        os.path.basename(f) for f in glob.glob(p + "/*.parquet")
+        os.path.relpath(f, p)
+        for f in glob.glob(p + "/**/*.parquet", recursive=True)
     )
     rows = lambda p: sorted(map(tuple, spark.read.parquet(p).collect()))
     lf, cf = files(lists), files(codes)

@@ -86,7 +86,7 @@ def test_resolver_flags_missing_names():
         f"from {PKG}.operators import dedup_store as ds, no_such_module\n"
         f"from {PKG}.session import get_spark, no_such_helper\n"
         f"import {PKG}.operators.similarity as sim\n"
-        "ds.StoreFamily; ds.no_such_attr; sim._pq_codebook\n"
+        "ds.StoreFamily; ds.no_such_attr; sim._cosine_cols\n"
     )
     assert unresolved(src) == [
         f"{PKG}.operators.dedup_store.no_such_attr",

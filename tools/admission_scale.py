@@ -40,6 +40,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from fdblog2clickhouse_spark.session import get_spark  # noqa: E402
 from fdblog2clickhouse_spark.operators import dedup_store as ds  # noqa: E402
+from fdblog2clickhouse_spark.operators import tables  # noqa: E402
 from fdblog2clickhouse_spark.operators import dedup as dd  # noqa: E402
 from fdblog2clickhouse_spark.sources.tables import table  # noqa: E402
 
@@ -188,7 +189,7 @@ for b in BUCKET_SWEEP:
     if b == 256:
         # exercise the migration path for one of the points
         ds.write_banded_index(sig_big, p, "overwrite", buckets=16)
-        ds.bucket_table(spark, p, 256)
+        tables.bucket_table(spark, p, 256)
     else:
         ds.write_banded_index(sig_big, p, "overwrite", buckets=b)
     idx[b] = p

@@ -48,18 +48,22 @@ remnants anywhere; racers never crash.
 
 IVF MODE (`python tools/race_stress.py ivf [BATCHES] [N_RACERS]`):
 the vector-family analog — a real IVF-PQ artifact set (centroid
-codebook, lists, codes, PQ codebook) built from sf0.001 embeddings,
-then a micro-batch insert stream through the real kernel
-`ivf_insert_batch` with the auto-compact trigger forced low (2
-files) so the stream performs rename-aside swaps of lists AND codes
-nearly every batch, while racer processes loop `heal_swap` over all
-four artifact paths (exactly what every query node does before
-building its read plan). Every third batch is a REDELIVERY of the
-previous batch, pinning the idempotence anti-joins under racer
-fire. Pass criteria per batch: lists vec_id set EXACTLY base ∪
-inserted-so-far, codes vec_ids == lists vec_ids (coherence),
-redeliveries append nothing; afterwards no '.old'/staging/trash
-remnants on any artifact; racers never crash.
+codebook, bucketed lists and codes, PQ codebook) built from sf0.001
+embeddings, then a micro-batch insert stream through the real kernel
+`ivf_insert_batch`, with a maintenance pass in the insert loop's own
+process every fourth batch: two base vectors retracted, then
+`compact-store` (tombstone fold through journaled partition swaps,
+re-bucket, compaction through a whole-table swap), while racer
+processes loop `heal_swap` and `heal_table_fold` over all four
+artifact paths (exactly what every query node does before building
+its read plan). Every third batch is a REDELIVERY of the previous
+batch, pinning the idempotence anti-joins under racer fire.
+Documented aborts of the maintenance pass are retried. Pass
+criteria per batch: lists vec_ids EXACTLY (base − retracted) ∪
+inserted-so-far, one row each; codes vec_ids == lists vec_ids
+(coherence); redeliveries append nothing; afterwards no
+'.old'/staging/journal/aside/trash remnants and no pending sidecar;
+racers never crash.
 
 CRASH MODE (`python tools/race_stress.py crash [KILLS]`): writer
 DEATH, not reader races — the dead-pid recovery that the other
@@ -96,20 +100,25 @@ afterwards; no journal/aside/.bpub/staging/trash remnants at the
 end.
 
 CRASH-IVF MODE (`python tools/race_stress.py crash-ivf [KILLS]`):
-writer death for the vector insert stream — a child loops real
-`ivf_insert_batch` micro-batches (auto-compact trigger 2, so kills
-can land mid-swap too) and the parent SIGKILLs its process group at
-a random point, classifies the state the death actually left
-(half-inserted: lists rows whose codes are missing; mid-compact:
-an artifact present only at '.old'), then plays the documented
-at-least-once recovery: heal_swap on all four artifacts and a
-REDELIVERY of the in-flight batch through the same kernel. Pass
-criteria per kill: after redelivery the lists hold exactly base ∪
-delivered vec_ids and the codes cover exactly the lists (the
-half-inserted rows got their codes, not duplicate lists rows); no
-remnants at the end. The tool reports how many kills landed in the
-half-inserted and mid-swap states so an all-boring run is visibly
-inconclusive.
+writer death for the vector insert stream and its maintenance — a
+child loops real `ivf_insert_batch` micro-batches with a
+compact-store pass (retract two base vectors, fold, re-bucket,
+compact) after every third, and the parent SIGKILLs its process
+group — at a random point, or as soon as a fold journal or a
+compaction's staging dir appears, in turn (the child widens those
+windows and the half-inserted one) — classifies the state the death
+actually left (the step in flight; a fold journal on disk; a
+compaction staged; an artifact only at '.old'; half-inserted lists
+rows whose codes are missing), then
+plays the documented recovery: `heal_swap` and `heal_table_fold` on
+all four artifacts, then a REDELIVERY of an in-flight insert batch
+through the same kernel, or a re-run of an in-flight maintenance
+pass. Pass criteria per kill: the lists hold exactly (base −
+retracted) ∪ delivered vec_ids, one row each, and the codes cover
+exactly the lists; no remnants and no pending sidecar at the end.
+The tool reports how many kills landed in an append, a fold
+journal window, a compaction, a swap and the half-inserted state,
+so an all-boring run is visibly inconclusive.
 
 Usage: python tools/race_stress.py [N_SWAPS] [N_RACERS]
        python tools/race_stress.py fold [CYCLES] [N_RACERS]
@@ -132,6 +141,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from fdblog2clickhouse_spark import storage  # noqa: E402
+from fdblog2clickhouse_spark.operators import tables  # noqa: E402
 
 
 def racer(path: str, stop, hits) -> None:
@@ -178,7 +188,7 @@ def fold_main() -> None:
     df = spark.createDataFrame(
         [(i, f"g{i}") for i in range(n0)], "doc_id long, gh string"
     )
-    ds.write_table(df, path, "overwrite", key="doc_id", buckets=8)
+    tables.write_table(df, path, "overwrite", key="doc_id", buckets=8)
 
     stop = mp.Event()
     sightings = mp.Value("i", 0)
@@ -202,9 +212,7 @@ def fold_main() -> None:
         )
         for attempt in range(25):
             try:
-                ds._fold_table_granular(
-                    spark, path, os.path.join(root, "nosuch"), None, tomb
-                )
+                tables._fold_table_granular(spark, path, [(tomb, "doc_id")])
                 break
             except RuntimeError as e:
                 msg = str(e)
@@ -218,7 +226,7 @@ def fold_main() -> None:
             raise AssertionError("fold never converged in 25 attempts")
         got = sorted(
             r["doc_id"]
-            for r in ds.read_table(spark, path).select("doc_id").collect()
+            for r in tables.read_table(spark, path).select("doc_id").collect()
         )
         if got != sorted(alive):
             import glob as _g
@@ -325,11 +333,11 @@ def store_main() -> None:
     )
     g = ds.rep_group_frame(docs).cache()
     sigs, members = ds.rep_store_frames(g)
-    ds.write_table(sigs, sig_path, "overwrite", key="gh")
+    tables.write_table(sigs, sig_path, "overwrite", key="gh")
     ds.write_banded_index(
-        ds.read_table(spark, sig_path), band_path, "overwrite"
+        tables.read_table(spark, sig_path), band_path, "overwrite"
     )
-    ds.write_table(members, mem_path, "overwrite", key="doc_id")
+    tables.write_table(members, mem_path, "overwrite", key="doc_id")
     # ground truth, driver-side: doc_id → gh for every admitted doc
     # (sf0.001 documents — a few hundred rows)
     doc_gh = {
@@ -386,7 +394,7 @@ def store_main() -> None:
         exp = expected()
         mem = {
             (r["doc_id"], r["gh"], r["group_id"])
-            for r in ds.read_table(spark, mem_path).collect()
+            for r in tables.read_table(spark, mem_path).collect()
         }
         want_mem = {(d, doc_gh[d], exp[doc_gh[d]]) for d in alive}
         assert mem == want_mem, (
@@ -395,7 +403,7 @@ def store_main() -> None:
         )
         sig = {
             (r["gh"], r["group_id"])
-            for r in ds.read_table(spark, sig_path)
+            for r in tables.read_table(spark, sig_path)
             .select("gh", "group_id")
             .collect()
         }
@@ -446,56 +454,121 @@ def store_main() -> None:
 
 def ivf_racer(paths: list[str], stop, hits) -> None:
     """A query node healing all four IVF artifacts before every
-    read, run hot; counts how often a swap window ('.old' present,
-    live missing) was actually observed."""
-    from fdblog2clickhouse_spark.storage import heal_swap
+    read, run hot — both swap shapes: the whole-table swap
+    (`heal_swap`) and, on the bucketed lists and codes, the fold's
+    journaled partition swap (`heal_table_fold`); counts how often a
+    swap window ('.old' present and live missing, or a fold journal)
+    was actually observed."""
+    from fdblog2clickhouse_spark.storage import (
+        _FOLD_JOURNAL,
+        heal_swap,
+        heal_table_fold,
+    )
 
     while not stop.is_set():
         for p in paths:
-            if os.path.exists(p + ".old") and not os.path.exists(p):
+            if (
+                os.path.exists(p + ".old") and not os.path.exists(p)
+            ) or os.path.exists(os.path.join(p, _FOLD_JOURNAL)):
                 with hits.get_lock():
                     hits.value += 1
             heal_swap(p)  # must never raise
+            heal_table_fold(p)  # must never raise
 
 
-def ivf_main() -> None:
-    n_batches = int(sys.argv[2]) if len(sys.argv) > 2 else 24
-    n_racers = int(sys.argv[3]) if len(sys.argv) > 3 else 4
-
+def _ivf_index(spark, root: str):
+    """A real IVF-PQ artifact set over the sf0.001 embeddings' base
+    slice (vec_id % 10 != 0), built the package's way: (qn, cb,
+    lists, base ids, held-out ids)."""
     from pyspark.sql import functions as F
 
-    from fdblog2clickhouse_spark.session import get_spark
     from fdblog2clickhouse_spark.operators import ann_store
     from fdblog2clickhouse_spark.operators.dedup import _quantized
+    from fdblog2clickhouse_spark.operators.tables import read_table, write_table
 
-    spark = get_spark()
-    spark.sparkContext.setLogLevel("ERROR")
-    root = tempfile.mkdtemp(prefix="ivf_race_")
     cb = os.path.join(root, "codebook")
     lists = os.path.join(root, "lists")
-
     qn = _quantized(spark, "/root/testdata/sf0.001").cache()
     base = qn.where(F.pmod("vec_id", F.lit(10)) != 0)
     base.orderBy("vec_id").limit(4).select(
         F.col("vec_id").alias("c_id"), "q", "nq"
     ).coalesce(1).write.parquet(cb)
-    ann_store._assign(base, spark.read.parquet(cb), 1).select(
-        F.col("v_id").alias("n_id"), F.col("c_id").alias("list_id")
-    ).write.parquet(lists)
+    write_table(
+        ann_store._assign(base, read_table(spark, cb), 1).select(
+            F.col("v_id").alias("n_id"), F.col("c_id").alias("list_id")
+        ),
+        lists,
+        "overwrite",
+        key="list_id",
+    )
     ann_store.train_pq_codebook(spark, base, cb, lists)
     ann_store.reencode_ivf_codes(spark, base, cb, lists)
-    codes = ann_store.ivf_codes_path(lists)
-    pq_cb = ann_store.pq_codebook_path(cb)
-
+    base_ids = sorted(r["vec_id"] for r in base.select("vec_id").collect())
     stream_ids = sorted(
         r["vec_id"]
         for r in qn.where(F.pmod("vec_id", F.lit(10)) == 0)
         .select("vec_id")
         .collect()
     )
-    base_ids = {
-        r["vec_id"] for r in base.select("vec_id").collect()
-    }
+    return qn, cb, lists, base_ids, stream_ids
+
+
+def _ivf_batch(spark, qn, ids):
+    return qn.join(
+        spark.createDataFrame([(i,) for i in ids], "vec_id long"),
+        "vec_id",
+        "left_semi",
+    )
+
+
+def _ivf_maintain(spark, lists: str, victims: list[int]) -> int:
+    """One maintenance pass in the insert loop's own process: retract
+    `victims`, then `compact-store` the index (fold, re-bucket,
+    compact), retrying the documented aborts a racing healer can
+    cause. Returns the number of aborts."""
+    import contextlib
+    import io
+
+    from fdblog2clickhouse_spark import cli
+    from fdblog2clickhouse_spark.operators import ann_store
+
+    ann_store.retract_ivf_vectors(
+        spark, lists,
+        spark.createDataFrame([(v,) for v in victims], "doc_id long"),
+    )
+    for attempt in range(25):
+        try:
+            with contextlib.redirect_stdout(io.StringIO()):
+                assert cli.main(["compact-store", lists]) == 0
+            return attempt
+        except RuntimeError as e:
+            msg = str(e)
+            assert (
+                "vanished" in msg or "gutted" in msg
+                or "losing the rename" in msg
+            ), f"undocumented maintenance failure: {msg}"
+    raise AssertionError("compact-store never converged in 25 attempts")
+
+
+def _ivf_ids(spark, path: str, col: str) -> list:
+    from fdblog2clickhouse_spark.operators.tables import read_table
+
+    return [r[col] for r in read_table(spark, path).select(col).collect()]
+
+
+def ivf_main() -> None:
+    n_batches = int(sys.argv[2]) if len(sys.argv) > 2 else 24
+    n_racers = int(sys.argv[3]) if len(sys.argv) > 3 else 4
+
+    from fdblog2clickhouse_spark.session import get_spark
+    from fdblog2clickhouse_spark.operators import ann_store
+
+    spark = get_spark()
+    spark.sparkContext.setLogLevel("ERROR")
+    root = tempfile.mkdtemp(prefix="ivf_race_")
+    qn, cb, lists, base_ids, stream_ids = _ivf_index(spark, root)
+    codes = ann_store.ivf_codes_path(lists)
+    pq_cb = ann_store.pq_codebook_path(cb)
     # slice the held-out vectors into n_batches micro-batches
     # (round-robin so every batch is non-empty while any ids remain)
     slices = [stream_ids[i::n_batches] for i in range(n_batches)]
@@ -511,8 +584,8 @@ def ivf_main() -> None:
         p.start()
 
     inserted: set = set()
-    compactions = 0
-    redeliveries = 0
+    retracted: set = set()
+    passes = aborts = redeliveries = 0
     t0 = time.perf_counter()
     prev_slice: list = []
     for b in range(n_batches):
@@ -524,14 +597,7 @@ def ivf_main() -> None:
             prev_slice = ids
         if not ids:
             continue
-        batch = qn.join(
-            spark.createDataFrame([(i,) for i in ids], "vec_id long"),
-            "vec_id",
-            "left_semi",
-        )
-        r = ann_store.ivf_insert_batch(
-            spark, batch, cb, lists, compact_trigger_files=2
-        )
+        r = ann_store.ivf_insert_batch(spark, _ivf_batch(spark, qn, ids), cb, lists)
         if redelivery:
             assert r["vectors"] == 0 and r["skipped"] == len(ids), (
                 f"batch {b}: redelivery not idempotent: {r}"
@@ -541,23 +607,22 @@ def ivf_main() -> None:
                 f"batch {b}: {r} for {len(ids)} fresh ids"
             )
             inserted.update(ids)
-        compactions += bool(r["compacted"])
-        want = base_ids | inserted
-        got_l = {
-            x["n_id"]
-            for x in spark.read.parquet(lists).select("n_id").collect()
-        }
-        assert got_l == want, (
+        if b % 4 == 3:
+            # the maintenance pass, every few batches: takedowns of
+            # base vectors (never redelivered), folded, re-bucketed
+            # and compacted while the racers heal
+            victims = base_ids[2 * passes: 2 * passes + 2]
+            aborts += _ivf_maintain(spark, lists, victims)
+            retracted.update(victims)
+            passes += 1
+        want = (set(base_ids) - retracted) | inserted
+        got_l = _ivf_ids(spark, lists, "n_id")
+        assert set(got_l) == want and len(got_l) == len(want), (
             f"batch {b}: lists diverged — missing "
-            f"{sorted(want - got_l)[:5]}, extra {sorted(got_l - want)[:5]}"
+            f"{sorted(want - set(got_l))[:5]}, extra "
+            f"{sorted(set(got_l) - want)[:5]}, rows {len(got_l)}"
         )
-        got_c = {
-            x["vec_id"]
-            for x in spark.read.parquet(codes)
-            .select("vec_id")
-            .distinct()
-            .collect()
-        }
+        got_c = set(_ivf_ids(spark, codes, "vec_id"))
         assert got_c == want, (
             f"batch {b}: codes incoherent — missing "
             f"{sorted(want - got_c)[:5]}, extra {sorted(got_c - want)[:5]}"
@@ -573,15 +638,21 @@ def ivf_main() -> None:
     for p in paths:
         assert not os.path.exists(p + ".old"), p
         assert not os.path.exists(p + ".staging"), p
+        assert not os.path.exists(os.path.join(p, storage._FOLD_JOURNAL)), p
+        assert not _g.glob(
+            os.path.join(p, "**", storage._BFOLD_PREFIX + "*"), recursive=True
+        ), p
+    assert not os.path.exists(ann_store.ivf_tombstones_path(lists))
     assert not _g.glob(os.path.join(root, ".trash-*")), "trash leaked"
     qn.unpersist()
     print(
         f"ivf-race-stress: GREEN — {n_batches} insert micro-batches "
-        f"({redeliveries} redeliveries, {compactions} auto-compactions "
-        f"at trigger=2) vs {n_racers} healing processes in {dt:.1f}s, "
-        f"swap windows observed={hits.value} (lists+codes exact and "
-        "coherent after every batch, redeliveries appended nothing, "
-        "no remnants, no racer crash)",
+        f"({redeliveries} redeliveries) and {passes} in-process "
+        f"compact-store passes (retract, fold, re-bucket, compact; "
+        f"{aborts} documented aborts retried) vs {n_racers} healing "
+        f"processes in {dt:.1f}s, swap windows observed={hits.value} "
+        "(lists+codes exact and coherent after every batch, "
+        "redeliveries appended nothing, no remnants, no racer crash)",
         flush=True,
     )
     shutil.rmtree(root, ignore_errors=True)
@@ -624,9 +695,7 @@ def crash_child() -> None:
         tomb = spark.createDataFrame(
             [(v,) for v in victims], "doc_id long"
         )
-        ds._fold_table_granular(
-            spark, path, os.path.dirname(path) + "/nosuch", None, tomb
-        )
+        tables._fold_table_granular(spark, path, [(tomb, "doc_id")])
         with open(progress_file, "a") as f:
             f.write(f"{idx}\n")
             f.flush()
@@ -653,7 +722,7 @@ def crash_main() -> None:
     df = spark.createDataFrame(
         [(i, f"g{i}") for i in range(n0)], "doc_id long, gh string"
     )
-    ds.write_table(df, path, "overwrite", key="doc_id", buckets=8)
+    tables.write_table(df, path, "overwrite", key="doc_id", buckets=8)
 
     alive = set(range(n0))
     batches = [[2 * k, 2 * k + 1] for k in range(8 * kills)]
@@ -717,14 +786,12 @@ def crash_main() -> None:
             tomb = spark.createDataFrame(
                 [(v,) for v in batches[i]], "doc_id long"
             )
-            ds._fold_table_granular(
-                spark, path, os.path.join(root, "nosuch"), None, tomb
-            )
+            tables._fold_table_granular(spark, path, [(tomb, "doc_id")])
             alive.difference_update(batches[i])
             i += 1
         got = sorted(
             r["doc_id"]
-            for r in ds.read_table(spark, path).select("doc_id").collect()
+            for r in tables.read_table(spark, path).select("doc_id").collect()
         )
         assert got == sorted(alive), (
             f"kill {k}: row divergence — missing "
@@ -827,11 +894,11 @@ def crash_store_main() -> None:
     )
     g = ds.rep_group_frame(docs).cache()
     sigs, members = ds.rep_store_frames(g)
-    ds.write_table(sigs, sig_path, "overwrite", key="gh")
+    tables.write_table(sigs, sig_path, "overwrite", key="gh")
     ds.write_banded_index(
-        ds.read_table(spark, sig_path), band_path, "overwrite"
+        tables.read_table(spark, sig_path), band_path, "overwrite"
     )
-    ds.write_table(members, mem_path, "overwrite", key="doc_id")
+    tables.write_table(members, mem_path, "overwrite", key="doc_id")
     doc_gh = {
         r["doc_id"]: r["gh"] for r in g.select("doc_id", "gh").collect()
     }
@@ -856,7 +923,7 @@ def crash_store_main() -> None:
         exp = expected()
         mem = {
             (r["doc_id"], r["gh"], r["group_id"])
-            for r in ds.read_table(spark, mem_path).collect()
+            for r in tables.read_table(spark, mem_path).collect()
         }
         want_mem = {(d, doc_gh[d], exp[doc_gh[d]]) for d in alive}
         assert mem == want_mem, (
@@ -866,7 +933,7 @@ def crash_store_main() -> None:
         )
         sig = {
             (r["gh"], r["group_id"])
-            for r in ds.read_table(spark, sig_path)
+            for r in tables.read_table(spark, sig_path)
             .select("gh", "group_id")
             .collect()
         }
@@ -969,16 +1036,19 @@ def crash_store_main() -> None:
 
 def crash_ivf_child() -> None:
     """The insert-stream writer that will be SIGKILLed: loop real
-    ivf_insert_batch micro-batches (auto-compact at trigger 2),
-    appending each batch index to `progress` after the kernel
-    returns."""
+    ivf_insert_batch micro-batches and, after every third, a
+    maintenance pass (retract two base vectors, compact-store),
+    recording the step about to run in `progress` as `phase <step>`
+    and each finished step as `done <step>`. Three windows are
+    widened by tool-side patches of this child's own process
+    (product code untouched) so kills can land inside them: the
+    lists-appended-codes-missing window, each fold journal window
+    and the compaction's staged-not-published window."""
     import json
 
-    root, batches_file, progress_file, ready_file = sys.argv[2:6]
+    root, plan_file, progress_file, ready_file = sys.argv[2:6]
     cb = os.path.join(root, "codebook")
     lists = os.path.join(root, "lists")
-
-    from pyspark.sql import functions as F  # noqa: F401
 
     from fdblog2clickhouse_spark.session import get_spark
     from fdblog2clickhouse_spark.operators import ann_store
@@ -988,8 +1058,8 @@ def crash_ivf_child() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     qn = _quantized(spark, "/root/testdata/sf0.001").cache()
     qn.count()
-    with open(batches_file) as f:
-        batches = json.load(f)
+    with open(plan_file) as f:
+        steps = json.load(f)
 
     # widen the lists-appended-codes-missing window to ~1.2 s (the
     # kernel's crash state that only an insert stream can leave):
@@ -1004,21 +1074,37 @@ def crash_ivf_child() -> None:
         return orig_codes(*a, **k)
 
     ann_store._ivfpq_codes = slow_codes
-    with open(ready_file, "w") as f:
-        f.write("ready")
-    for idx, ids in enumerate(batches):
-        batch = qn.join(
-            spark.createDataFrame([(i,) for i in ids], "vec_id long"),
-            "vec_id",
-            "left_semi",
-        )
-        ann_store.ivf_insert_batch(
-            spark, batch, cb, lists, compact_trigger_files=2
-        )
+    orig_swap = storage._fold_swap_loop
+    orig_publish = tables.publish
+
+    def slow_swap(*a, **k):
+        _t.sleep(0.4)
+        return orig_swap(*a, **k)
+
+    def slow_publish(*a, **k):
+        _t.sleep(0.4)
+        return orig_publish(*a, **k)
+
+    storage._fold_swap_loop = slow_swap
+    tables.publish = slow_publish
+
+    def log(line: str) -> None:
         with open(progress_file, "a") as f:
-            f.write(f"{idx}\n")
+            f.write(line + "\n")
             f.flush()
             os.fsync(f.fileno())
+
+    with open(ready_file, "w") as f:
+        f.write("ready")
+    for step in steps:
+        log(f"phase {step['name']}")
+        if step["kind"] == "insert":
+            ann_store.ivf_insert_batch(
+                spark, _ivf_batch(spark, qn, step["ids"]), cb, lists
+            )
+        else:
+            _ivf_maintain(spark, lists, step["ids"])
+        log(f"done {step['name']}")
 
 
 def crash_ivf_main() -> None:
@@ -1030,61 +1116,56 @@ def crash_ivf_main() -> None:
     kills = int(sys.argv[2]) if len(sys.argv) > 2 else 10
     rng = random.Random(99)
 
-    from pyspark.sql import functions as F
-
     from fdblog2clickhouse_spark.session import get_spark
     from fdblog2clickhouse_spark.operators import ann_store
-    from fdblog2clickhouse_spark.operators.dedup import _quantized
+    from fdblog2clickhouse_spark.storage import heal_swap, heal_table_fold
 
     spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
     root = tempfile.mkdtemp(prefix="crash_ivf_")
-    cb = os.path.join(root, "codebook")
-    lists = os.path.join(root, "lists")
-
-    qn = _quantized(spark, "/root/testdata/sf0.001").cache()
-    base = qn.where(F.pmod("vec_id", F.lit(10)) != 0)
-    base.orderBy("vec_id").limit(4).select(
-        F.col("vec_id").alias("c_id"), "q", "nq"
-    ).coalesce(1).write.parquet(cb)
-    ann_store._assign(base, spark.read.parquet(cb), 1).select(
-        F.col("v_id").alias("n_id"), F.col("c_id").alias("list_id")
-    ).write.parquet(lists)
-    ann_store.train_pq_codebook(spark, base, cb, lists)
-    ann_store.reencode_ivf_codes(spark, base, cb, lists)
+    qn, cb, lists, base_ids, stream_ids = _ivf_index(spark, root)
     codes = ann_store.ivf_codes_path(lists)
     pq_cb = ann_store.pq_codebook_path(cb)
     paths = [lists, codes, cb, pq_cb]
 
-    base_ids = {r["vec_id"] for r in base.select("vec_id").collect()}
-    stream_ids = sorted(
-        r["vec_id"]
-        for r in qn.where(F.pmod("vec_id", F.lit(10)) == 0)
-        .select("vec_id")
-        .collect()
-    )
+    # the writer's plan: insert batches, with a maintenance pass
+    # (retract two base vectors, compact-store) after every third
     n_batches = 4 * kills
-    batches = [stream_ids[j::n_batches] for j in range(n_batches)]
+    steps = []
+    for j in range(n_batches):
+        steps.append({"name": f"i{j}", "kind": "insert",
+                      "ids": stream_ids[j::n_batches]})
+        if j % 3 == 2:
+            m = len([s for s in steps if s["kind"] == "maint"])
+            steps.append({"name": f"m{j}", "kind": "maint",
+                          "ids": base_ids[2 * m: 2 * m + 2]})
 
-    from fdblog2clickhouse_spark.storage import heal_swap
+    def run(step) -> None:
+        """The documented recovery of one step: redeliver an insert
+        through the same kernel, re-run a maintenance pass."""
+        if step["kind"] == "insert":
+            ann_store.ivf_insert_batch(
+                spark, _ivf_batch(spark, qn, step["ids"]), cb, lists
+            )
+        else:
+            _ivf_maintain(spark, lists, step["ids"])
 
-    def vec_ids(path, col):
-        return {
-            r[col]
-            for r in spark.read.parquet(path).select(col).distinct().collect()
-        }
-
+    journals = [os.path.join(p, storage._FOLD_JOURNAL) for p in (lists, codes)]
+    stagings = [p + storage.STAGING for p in (lists, codes)]
     delivered: set = set()
+    retracted: set = set()
+    landed = {"append": 0, "fold": 0, "compaction": 0, "swap": 0,
+              "half-inserted": 0}
     i = 0
-    half_inserted = 0
-    mid_swap = 0
     t0 = time.perf_counter()
     for k in range(kills):
-        bf = os.path.join(root, f"batches_{k}.json")
+        if i >= len(steps):
+            break
+        bf = os.path.join(root, f"plan_{k}.json")
         pf = os.path.join(root, f"progress_{k}")
         rf = os.path.join(root, f"ready_{k}")
         with open(bf, "w") as f:
-            json.dump(batches[i:], f)
+            json.dump(steps[i:], f)
         child = subprocess.Popen(
             [sys.executable, os.path.abspath(__file__),
              "crash-ivf-child", root, bf, pf, rf],
@@ -1095,79 +1176,97 @@ def crash_ivf_main() -> None:
         while not os.path.exists(rf):
             time.sleep(0.05)
             assert child.poll() is None, "crash child died before ready"
-        time.sleep(rng.uniform(1.0, 8.0))
+        # one random landing, then kills targeted at a fold journal
+        # and at a compaction's staging dir, in turn
+        if k % 3 == 0:
+            time.sleep(rng.uniform(1.0, 8.0))
+        else:
+            marks = journals if k % 3 == 1 else stagings
+            deadline = time.perf_counter() + 300
+            while not any(os.path.exists(m) for m in marks):
+                time.sleep(0.005)
+                assert time.perf_counter() < deadline, "no window for a targeted kill"
+                assert child.poll() is None, "child exited early"
         os.killpg(child.pid, signal.SIGKILL)
         child.wait()
         # classify the state death left, BEFORE healing
+        progress = open(pf).read().split("\n") if os.path.exists(pf) else []
+        done = {ln.split()[1] for ln in progress if ln.startswith("done ")}
+        phases = [ln.split()[1] for ln in progress if ln.startswith("phase ")]
+        in_flight = phases[-1] if phases and phases[-1] not in done else None
+        journal = any(os.path.exists(j) for j in journals)
+        staged = any(os.path.exists(st) for st in stagings)
         swapped = [
             os.path.basename(p)
             for p in paths
             if os.path.exists(p + ".old") and not os.path.exists(p)
         ]
-        mid_swap += bool(swapped)
+        landed["fold"] += journal
+        landed["compaction"] += staged
+        landed["swap"] += bool(swapped)
+        landed["append"] += bool(in_flight and in_flight.startswith("i"))
         for p in paths:
             heal_swap(p)
-        lists_now = vec_ids(lists, "n_id")
-        codes_now = vec_ids(codes, "vec_id")
-        gap = lists_now - codes_now
-        half_inserted += bool(gap)
-        done = []
-        if os.path.exists(pf):
-            with open(pf) as f:
-                done = [int(x) for x in f.read().split()]
-        for idx_ in done:
-            delivered.update(batches[i + idx_])
-        i += len(done)
-        # the at-least-once recovery: REDELIVER the in-flight batch
-        # through the same kernel (idempotent anti-joins fill the
-        # lists/codes gaps, append nothing twice)
-        if i < len(batches):
-            ids = batches[i]
-            batch = qn.join(
-                spark.createDataFrame([(x,) for x in ids], "vec_id long"),
-                "vec_id",
-                "left_semi",
+            heal_table_fold(p)
+        gap = set(_ivf_ids(spark, lists, "n_id")) - set(
+            _ivf_ids(spark, codes, "vec_id")
+        )
+        landed["half-inserted"] += bool(gap)
+        # every finished step, then the documented recovery of the
+        # one in flight (redelivery or re-run)
+        while i < len(steps) and steps[i]["name"] in done:
+            (delivered if steps[i]["kind"] == "insert" else retracted).update(
+                steps[i]["ids"]
             )
-            ann_store.ivf_insert_batch(
-                spark, batch, cb, lists, compact_trigger_files=2
-            )
-            delivered.update(ids)
             i += 1
-        want = base_ids | delivered
-        got_l = vec_ids(lists, "n_id")
-        got_c = vec_ids(codes, "vec_id")
-        assert got_l == want, (
+        if i < len(steps):
+            run(steps[i])
+            (delivered if steps[i]["kind"] == "insert" else retracted).update(
+                steps[i]["ids"]
+            )
+            i += 1
+        want = (set(base_ids) - retracted) | delivered
+        got_l = _ivf_ids(spark, lists, "n_id")
+        got_c = set(_ivf_ids(spark, codes, "vec_id"))
+        assert set(got_l) == want, (
             f"kill {k}: lists diverged — missing "
-            f"{sorted(want - got_l)[:5]}, extra {sorted(got_l - want)[:5]}"
+            f"{sorted(want - set(got_l))[:5]}, extra "
+            f"{sorted(set(got_l) - want)[:5]}"
         )
-        assert got_c == want, (
-            f"kill {k}: codes incoherent after redelivery — missing "
-            f"{sorted(want - got_c)[:5]}, extra {sorted(got_c - want)[:5]}"
-        )
-        # lists must also be row-exact (no duplicate assignment rows
-        # from a replayed append)
-        n_rows = spark.read.parquet(lists).count()
-        assert n_rows == len(want), (
-            f"kill {k}: duplicate lists rows — {n_rows} rows for "
+        # row-exact: no duplicate assignment rows from a replayed append
+        assert len(got_l) == len(want), (
+            f"kill {k}: duplicate lists rows — {len(got_l)} rows for "
             f"{len(want)} vec_ids"
         )
+        assert got_c == want, (
+            f"kill {k}: codes incoherent after recovery — missing "
+            f"{sorted(want - got_c)[:5]}, extra {sorted(got_c - want)[:5]}"
+        )
         print(
-            f"  kill {k}: child completed {len(done)} batches, state at "
-            f"death: mid-swap={swapped or 'no'}, half-inserted gap="
-            f"{len(gap)}, redelivery converged exact",
+            f"  kill {k}: child finished {len(done)} steps, in flight at "
+            f"death: {in_flight or 'none'} (fold journal={journal}, "
+            f"compaction staged={staged}, mid-swap={swapped or 'no'}, "
+            f"half-inserted gap={len(gap)}), "
+            "recovery converged exact",
             flush=True,
         )
     dt = time.perf_counter() - t0
     for p in paths:
         assert not os.path.exists(p + ".old"), p
         assert not os.path.exists(p + ".staging"), p
+        assert not os.path.exists(os.path.join(p, storage._FOLD_JOURNAL)), p
+    assert not os.path.exists(ann_store.ivf_tombstones_path(lists))
     qn.unpersist()
     print(
         f"crash-ivf-race-stress: GREEN — {kills} SIGKILLs of a live "
-        f"insert stream in {dt:.1f}s ({half_inserted} left the "
-        f"half-inserted lists-without-codes state, {mid_swap} died "
-        "mid-swap), every redelivery recovery converged to exact, "
-        "coherent, duplicate-free lists+codes; no remnants",
+        f"insert stream with in-process compact-store passes in "
+        f"{dt:.1f}s (kills landing in an append {landed['append']}, "
+        f"with a fold journal on disk {landed['fold']}, inside a "
+        f"compaction {landed['compaction']}, mid-swap {landed['swap']}; "
+        f"{landed['half-inserted']} left the "
+        "half-inserted lists-without-codes state), every recovery "
+        "converged to exact, coherent, duplicate-free lists+codes; no "
+        "remnants",
         flush=True,
     )
     shutil.rmtree(root, ignore_errors=True)

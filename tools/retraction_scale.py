@@ -48,6 +48,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from fdblog2clickhouse_spark.session import get_spark  # noqa: E402
 from fdblog2clickhouse_spark.operators import dedup_store as ds  # noqa: E402
+from fdblog2clickhouse_spark.operators import tables  # noqa: E402
 from fdblog2clickhouse_spark.sources.tables import table  # noqa: E402
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
@@ -101,15 +102,15 @@ for k in KS:
             .withColumn("group_id", F.col("group_id") + OFFSET * i)
             .withColumn("gh", F.concat(F.col("gh"), tag))
         )
-    ds.write_table(sig_k, sig_p, "overwrite", key="gh", buckets=TBL_BUCKETS)
-    ds.write_table(mem_k, mem_p, "overwrite", key="doc_id",
+    tables.write_table(sig_k, sig_p, "overwrite", key="gh", buckets=TBL_BUCKETS)
+    tables.write_table(mem_k, mem_p, "overwrite", key="doc_id",
                    buckets=TBL_BUCKETS)
     ds.write_banded_index(
-        ds.read_table(spark, sig_p), band_p, "overwrite", buckets=TBL_BUCKETS
+        tables.read_table(spark, sig_p), band_p, "overwrite", buckets=TBL_BUCKETS
     )
     stores[k] = (sig_p, band_p, mem_p)
-    print(f"store x{k}: {ds.read_table(spark, sig_p).count()} groups / "
-          f"{ds.read_table(spark, mem_p).count()} members", flush=True)
+    print(f"store x{k}: {tables.read_table(spark, sig_p).count()} groups / "
+          f"{tables.read_table(spark, mem_p).count()} members", flush=True)
 
 # three DISJOINT 100-doc retraction slices of the base replica (reps
 # must retract fresh ids — a re-retraction is a no-op by design)
