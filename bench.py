@@ -19,6 +19,7 @@ startup is likewise excluded via a session-level warmup read.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -230,7 +231,13 @@ def bench_sink_compaction(spark, sf_dir: str) -> float:
     return round(dt, 3)
 
 
-def main() -> None:
+def main(argv: list[str] | None = None) -> None:
+    # no options: the scale factor and core count come from the
+    # environment; the parser gives --help and refuses stray arguments
+    argparse.ArgumentParser(
+        description="Time the headline queries at $SPARK_GRAFT_SF_DIR "
+        "(default: the sf0.1 test data) and print one JSON line."
+    ).parse_args(argv)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").split("sf")[-1]
 

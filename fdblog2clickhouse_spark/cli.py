@@ -232,10 +232,12 @@ def cmd_watch(args) -> int:
 
 
 def cmd_optimize(args) -> int:
-    """`OPTIMIZE TABLE ... FINAL` analog: compact a MergeTree-style
-    parquet table's per-partition small files (one per streamed
-    micro-batch) into sorted files — the background part-merge,
-    invoked off the ingest path."""
+    """`OPTIMIZE TABLE ... FINAL` analog: compact each month of a
+    MergeTree-style parquet table that holds more than one file (one
+    per streamed micro-batch) into one sorted file — the background
+    part-merge, invoked off the ingest path. All dirty months are
+    rewritten by one Spark write and published by one journaled
+    partition swap; single-file months stay byte-identical."""
     from .sinks.mergetree import optimize_mergetree
 
     spark = _spark()
@@ -359,7 +361,7 @@ def _require_layout(store: str, ivf: bool = False) -> None:
 def _is_ivf_lists(path: str) -> bool:
     """Whether compact-store was handed an IVF inverted-lists table,
     from files only (a data file's columns), so a flat lists table is
-    refused, not compacted as a signature store."""
+    refused naming build-ivfpq, not build-store."""
     import glob
     import os
 
@@ -470,14 +472,15 @@ def cmd_compact_store(args) -> int:
     """OPTIMIZE FINAL — the one maintenance pass of both persisted
     stores: a rep store (`<store>_members` / `<store>_bands`
     siblings) or an IVF index (an inverted-lists table and its
-    `<lists>_codes` sibling). A table not in the current layout is
-    refused, naming its build command, before any Spark job. Then,
-    for every bucketed table of the store: retraction sidecars are
-    folded first, rewriting only the buckets they touch; each table
-    is re-bucketed UP past the soak-measured rows/bucket knee
-    (VERDICT r15 #3); each is compacted to one file per bucket,
-    sorted by its key (text stores by bk0, vector stores by bv0 —
-    ADVICE r12). A flat signature store is rewritten into one file."""
+    `<lists>_codes` sibling). Any other dir, a flat signature store
+    included, or a table not in the current layout is refused, naming
+    its build command, before any Spark job. Then, for every bucketed
+    table of the store: retraction sidecars are folded first,
+    rewriting only the buckets they touch; each table is re-bucketed
+    UP past the soak-measured rows/bucket knee (VERDICT r15 #3); each
+    bucket holding more than one file is compacted to one, sorted by
+    the table's key (text stores by bk0, vector stores by bv0 — ADVICE
+    r12), through the journaled partition swap the fold uses."""
     import glob
     import os
 
@@ -485,17 +488,13 @@ def cmd_compact_store(args) -> int:
     from .operators.dedup_store import (
         _INDEX_KEY,
         banded_path,
-        compact_signature_store,
         fold_retractions,
         members_path,
     )
     from .operators.tables import compact_table, maybe_rebucket_table, read_table
 
     ivf = _is_ivf_lists(args.store)
-    members, bands = members_path(args.store), banded_path(args.store)
-    rep = not ivf and (os.path.isdir(members) or os.path.isdir(bands))
-    if ivf or rep:
-        _require_layout(args.store, ivf=ivf)
+    _require_layout(args.store, ivf=ivf)
     spark = _spark()
     # fold retraction sidecars FIRST, so the compaction below
     # rewrites the folded tables and the tombstones/deltas are
@@ -509,15 +508,9 @@ def cmd_compact_store(args) -> int:
         fold = fold_ivf_tombstones(spark, args.store)
         parts = "lists:{lists_parts}/codes:{codes_parts}"
     else:
-        # read after `_is_ivf_lists` healed a crash-interrupted swap,
-        # or the re-run meant to repair it dies on PATH_NOT_FOUND
         cols = read_table(spark, args.store).columns
         sig_col = "bv0" if "bv0" in cols else "bk0"
-        if not rep:
-            before = compact_signature_store(spark, args.store, sort_col=sig_col)
-            after = len(glob.glob(os.path.join(args.store, "*.parquet")))
-            print(f"compacted: files_before={before} files_after={after}")
-            return 0
+        members, bands = members_path(args.store), banded_path(args.store)
         tables = [
             ("store", args.store, sig_col),
             ("members", members, "group_id"),
@@ -817,29 +810,6 @@ def cmd_search_ivfpq(args) -> int:
     return 0
 
 
-def cmd_bucket_store(args) -> int:
-    """Re-bucket all three tables of a rep store (flat signatures,
-    members, band index) to `--buckets N`, each through a crash-safe
-    rename-aside swap; admission evidence is invariant (the bucket is
-    a pure pruning key). compact-store re-buckets UP automatically as
-    a store grows; this is the manual override."""
-    from .operators.dedup_store import banded_path, members_path
-    from .operators.tables import bucket_table
-
-    _require_layout(args.store)
-    spark = _spark()
-    parts = []
-    for label, p in (
-        ("store", args.store),
-        ("members", members_path(args.store)),
-        ("bands", banded_path(args.store)),
-    ):
-        r = bucket_table(spark, p, args.buckets)
-        parts.append(f"{label} buckets: {r['buckets_before']}->{r['buckets_after']}")
-    print(" ".join(parts))
-    return 0
-
-
 def cmd_query(args) -> int:
     """Run one registered operator against a testdata dir and print
     the result — the 'traditional OLAP SQL queries' consumer surface
@@ -1008,13 +978,6 @@ def main(argv: list[str] | None = None) -> int:
                      help="query sample size (lowest vec_ids)")
     ssq.add_argument("--nprobe", type=int, default=4)
     ssq.set_defaults(fn=cmd_search_ivfpq)
-
-    sbk = sub.add_parser("bucket-store")
-    sbk.add_argument("store", help="rep-store signatures parquet path")
-    sbk.add_argument("--buckets", type=int, required=True,
-                     help="new key-bucket count for the flat store, "
-                          "members and band index layouts")
-    sbk.set_defaults(fn=cmd_bucket_store)
 
     sl = sub.add_parser("list-queries")
     sl.set_defaults(fn=cmd_list_queries)

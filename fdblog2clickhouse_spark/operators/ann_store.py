@@ -53,8 +53,8 @@ MAINTAINER CONTRACT (VERDICT r17 #2 / ADVICE r17) — the rule of the
   Every rewrite is a `storage` swap: whole-table (`storage.commit`,
   or `storage.stage` … `storage.publish` for the refresh/split
   double swap) or the journaled partition swap of the granular
-  tombstone fold, so at every instant each artifact or its aside
-  holds a complete table. Concurrent QUERY processes are safe
+  tombstone fold and the compaction, so at every instant each
+  artifact or its aside holds a complete table. Concurrent QUERY processes are safe
   against the one maintainer: every reader heals crash remnants
   before building its plan (`storage.heal_swap`, rename-only), a
   reader's heal that fires inside the maintainer's swap window is

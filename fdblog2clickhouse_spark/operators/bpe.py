@@ -96,7 +96,7 @@ def _train(spark: SparkSession, sf_dir: str) -> tuple[list[tuple], DataFrame]:
     # a cached chain keeps the full LOGICAL plan, so Catalyst
     # re-analyzes a tree one `replace` deeper every iteration —
     # measured to OOM the driver JVM around merge 60 (round 11,
-    # tools/bpe_scale.py). The checkpoint truncates lineage to a
+    # SCALE.md; tools/driver_sim.py runs the bpe ops). The checkpoint truncates lineage to a
     # LogicalRDD leaf, making per-merge analysis cost CONSTANT; the
     # superseded states' blocks are released by the ContextCleaner
     # as Python drops the references. Local (unreplicated)

@@ -64,10 +64,8 @@ from ..sources.tables import table
 from ..storage import (
     commit,
     heal_swap,
-    publish,
     read_sidecar,
     retire_sidecar,
-    stage,
 )
 from .dedup import (
     _COSINE_THRESHOLD,
@@ -95,13 +93,11 @@ from .dedup import (
     shingles_cte_sql,
 )
 from .tables import (
-    _TBL_META,
     StoreLayoutError,
     _auto_buckets,
     _fold_table_granular,
     _marker_rows,
     batch_bucket_vals,
-    compact_table,
     pruned_table,
     read_table,
     require_tables,
@@ -329,36 +325,6 @@ SELECT da, db, i / (ca.n + cb.n - i) AS jaccard
 FROM inter JOIN cnt ca ON ca.doc_id = da JOIN cnt cb ON cb.doc_id = db
 WHERE i / (ca.n + cb.n - i) >= {_JACCARD_THRESHOLD}
 """
-
-
-def compact_signature_store(
-    spark: SparkSession, path: str, *, sort_col: str = "bk0"
-) -> int:
-    """OPTIMIZE FINAL for an append-accumulating signature store: a
-    rep-store table (marker present) is compacted within its bucket
-    partitions (`tables.compact_table`); a flat signature store (no
-    marker: the non-rep lifecycle ops' store) is rewritten into one
-    file sorted by `sort_col`, through the whole-table swap of
-    `storage`. Returns the file count before compaction."""
-    import glob
-    import os
-
-    heal_swap(path)
-    if os.path.exists(os.path.join(path, _TBL_META)):
-        return compact_table(spark, path, sort_col=sort_col)
-    staging = stage(path)
-    files = glob.glob(os.path.join(path, "*.parquet"))
-    if len(files) <= 1:
-        return len(files)
-    (
-        spark.read.parquet(path)
-        .repartition(1)
-        .sortWithinPartitions(sort_col)
-        .write.mode("overwrite")
-        .parquet(staging)
-    )
-    publish(path)
-    return len(files)
 
 
 # ------------------- representative (exact-dedup pre-pass) store

@@ -10,10 +10,11 @@ through `write_table(..., "overwrite")`, appends through
 `pruned_table` (the buckets a batch's keys hash into). The
 maintenance pass (`compact-store`) is the same for every table:
 `_fold_table_granular` folds a sidecar into the buckets it touches,
-`maybe_rebucket_table` re-buckets UP as the table grows, and
-`compact_table` merges each bucket's appended files into one. Every
-rewrite is published through `storage`, so a crash leaves the old or
-the new table, never a mix.
+`maybe_rebucket_table` re-buckets UP as the table grows (a whole-table
+swap), and `compact_table` merges each multi-file bucket into one
+file. The fold and the compaction, and the MergeTree sink's optimize,
+go through one `rewrite_partitions` (a journaled partition swap), so a
+crash leaves the old or the new table, never a mix.
 """
 
 from __future__ import annotations
@@ -54,15 +55,12 @@ from ..storage import (
 # per admit).
 #
 # The layout (bucket count, key column, schema) is persisted in a
-# marker at build time, and appends, pruned reads, compaction,
-# re-bucketing and retraction folds honor it forever: a different
-# bucket count would select partitions where the matching rows don't
-# live. A table without the current marker (none at all, or one from a
-# bucket expression no code writes any more) is refused with an error
+# marker at build time and honored by every later read and rewrite: a
+# different bucket count would select partitions where the matching
+# rows don't live. A table without the current marker is refused,
 # naming the table and the build commands, never read with a guessed
 # layout. Bucket counts size themselves from the row count
-# (`_auto_buckets`) and re-bucket UP as a table grows
-# (`maybe_rebucket_table`, run by compact-store).
+# (`_auto_buckets`) and re-bucket UP as a table grows.
 
 _TBL_META = "_table_meta.json"  # leading '_': parquet listing skips it
 _TBL_PB = "pb"
@@ -502,69 +500,35 @@ def maybe_rebucket_table(spark: SparkSession, path: str) -> dict:
 def compact_table(
     spark: SparkSession, path: str, *, sort_col: str
 ) -> int:
-    """OPTIMIZE FINAL for a bucketed table: every append writes one
-    file per touched bucket, so a long-running admission or insert
-    loop accumulates tiny files — scan-open overhead and listing
-    pressure on every later read, the unmerged-parts failure mode
-    `optimize_mergetree` handles for the time-partitioned table. Once
-    some partition holds more than one file, the table is rewritten
-    to one file per bucket partition, keeping the hive dirs and the
-    marker, so pruned reads survive the rewrite unchanged, and
-    retiring crash-leaked duplicate rows (the band index read
-    tolerates them with dropDuplicates; compaction removes them for
-    good). Rows are sorted by `sort_col` within each file (key
-    locality tightens row-group min/max stats) and published through
-    the whole-table swap of `storage`, so a crash leaves the old or
-    the new table, never a mix. Returns the file count before
-    compaction. Content-invariance is CI-pinned."""
-    import glob
-    import os
-    import shutil
-
-    # finish a previous crash-interrupted swap, then a crashed
-    # granular fold's per-partition swaps: compaction reads the live
-    # dirs, so a missing bucket would lose its rows.
-    staging = stage(path)
-    heal_table_fold(path)
-    table_layout(path)  # refuse a marker no code writes any more
-    part_dirs = glob.glob(os.path.join(path, f"{_TBL_PB}=*"))
-    counts = [len(glob.glob(os.path.join(d, "*.parquet"))) for d in part_dirs]
-    n_before = sum(counts)
-    if not counts or max(counts) <= 1:
-        return n_before
-    (
-        spark.read.parquet(path)
-        .dropDuplicates()
-        .repartition(_TBL_PB)
-        .sortWithinPartitions(sort_col)
-        .write.partitionBy(_TBL_PB)
-        .mode("overwrite")
-        .parquet(staging)
-    )
-    shutil.copy2(os.path.join(path, _TBL_META), os.path.join(staging, _TBL_META))
-    # exact again after the dedup: footer metadata, no Spark job
-    _set_marker_rows(staging, _footer_rows(staging))
-    publish(path)
-    return n_before
+    """OPTIMIZE FINAL for a bucketed table: each append writes one
+    file per touched bucket, and every later read pays to open them.
+    `compact_partitions` merges each multi-file bucket into one file
+    sorted by `sort_col`, retiring crash-leaked duplicate rows; the
+    other buckets and the layout stay as they are. Returns the file
+    count before compaction."""
+    # heal a crashed re-bucket swap or fold first (a missing bucket
+    # dir would lose its rows), and refuse an old marker
+    require_tables(path)
+    return sum(compact_partitions(spark, path, sort_col, dedup=True).values())
 
 
-# Partition-granular fold (VERDICT r15 #2): the retraction fold used
-# to rewrite the bucketed tables whole, paying per-partition write
-# overhead exactly when the production recipe says to RAISE the
-# bucket count (the r15 soak: fold 7.6 s at 256 buckets vs 18.0 s at
-# 1024 on the same store). The granular path rewrites ONLY the
-# partitions that hold tombstoned/relabeled rows through
-# `storage.publish_partitions` and leaves every other partition dir
-# byte-invariant. Rolling a crashed fold back is safe at ANY point:
-# the sidecars are retired only after the whole fold succeeds, so
-# pre-fold bucket + sidecars is exactly the live view.
+# Partition rewrites (VERDICT r15 #2): the retraction fold and the
+# compaction rewrite ONLY the partitions they name, through one
+# staging write and `storage.publish_partitions`, and leave every
+# other partition dir byte-identical: a whole-table rewrite pays
+# per-partition write overhead exactly when a growing store RAISES
+# its bucket count (the r15 soak: fold 7.6 s at 256 buckets vs 18.0 s
+# at 1024). Rolling a crashed rewrite back is always safe: a fold
+# retires its sidecars only after it succeeds, and a compaction's
+# partitions hold the same rows before and after.
 
 
 def _publish_fold(
     path: str, staging: str, rels: list[str], emptied: set[str]
 ) -> None:
-    """`storage.publish_partitions` for a fold, keeping the marker's
-    cached row count exact at O(retracted) cost (VERDICT r17 #5):
+    """`storage.publish_partitions` for a partition rewrite, keeping
+    the marker's cached row count exact at O(rewritten) cost (VERDICT
+    r17 #5):
     footer-count only the affected partitions (pre-swap live vs
     staged), invalidate the cache BEFORE any swap (a crash or a
     raced abort leaves no stale number), and write the adjusted
@@ -695,21 +659,54 @@ def _fold_table_granular(
         for r in folded.select(_TBL_PB).distinct().collect()
     }
     emptied = {rel for rel in rels if rel not in present}
-    if os.environ.get("FOLD_TRACE"):  # tools/race_stress.py forensics
-        print(
-            f"FOLD_TRACE table rels={rels} present={sorted(present)} "
-            f"emptied={sorted(emptied)}",
-            flush=True,
-        )
+    # the fold never changes a bucket key, so no row crosses partitions
+    rewrite_partitions(path, folded.repartition(F.col(_TBL_PB)), rels, emptied)
+    return len(rels)
+
+
+def rewrite_partitions(
+    path: str, rows: DataFrame, rels: list[str], emptied: set[str]
+) -> None:
+    """Replace the partition dirs `rels` with `rows` (partitioned, and
+    sorted, the way each file is to be written): one write into a
+    `stage_partitions` dir, partitioned by the column the dirs name,
+    then one `_publish_fold`."""
     staging = stage_partitions(path)
-    (
-        # carry the READ's own partition column through — bit-identical
-        # layout by construction (the fold never changes a bucket key,
-        # so no row can cross partitions)
-        folded.repartition(F.col(_TBL_PB))
-        .write.partitionBy(_TBL_PB)
-        .mode("overwrite")
-        .parquet(staging)
+    rows.write.partitionBy(rels[0].split("=", 1)[0]).mode("overwrite").parquet(
+        staging
     )
     _publish_fold(path, staging, rels, emptied)
-    return len(rels)
+
+
+def compact_partitions(
+    spark: SparkSession, path: str, sort_col: str, *, dedup: bool
+) -> dict[str, int]:
+    """OPTIMIZE FINAL for a hive-partitioned table (a store table or
+    the MergeTree table), healed by the caller: each partition holding
+    more than one file becomes one file sorted by `sort_col`, all in
+    one `rewrite_partitions`. `dedup` drops duplicate rows. The read
+    merges file schemas, so a column one append added is kept.
+    Returns {partition dir: data files before} for every partition."""
+    import glob
+    import os
+
+    counts = {
+        os.path.basename(d): len(glob.glob(os.path.join(d, "*.parquet")))
+        for d in sorted(glob.glob(os.path.join(path, "*=*")))
+    }
+    rels = [rel for rel, n in counts.items() if n > 1]
+    if not rels:
+        return counts
+    col = rels[0].split("=", 1)[0]
+    rows = (
+        spark.read.option("basePath", path)
+        .option("mergeSchema", "true")
+        .parquet(*[os.path.join(path, rel) for rel in rels])
+    )
+    if dedup:
+        rows = rows.dropDuplicates()
+    # sorting on the partition column first meets the partitioned
+    # writer's required ordering, so it adds no sort over ours
+    rows = rows.repartition(col).sortWithinPartitions(col, sort_col)
+    rewrite_partitions(path, rows, rels, set())
+    return counts

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import storage
+from ..operators.tables import compact_partitions
 
 
 def write_mergetree(
@@ -52,51 +53,32 @@ def optimize_mergetree(
     path: str,
     *,
     time_col: str = "time",
-    target_files_per_partition: int = 1,
 ) -> dict:
     """The `OPTIMIZE TABLE ... FINAL` analog: compact each yyyymm
     partition's accumulated small files (one per append micro-batch —
-    the parquet equivalent of unmerged MergeTree parts) into
-    `target_files_per_partition` sorted files.
+    the parquet equivalent of unmerged MergeTree parts) into one file
+    sorted by `time_col`.
 
     Mirrors ClickHouse's background merge (reference
     trace-converter.py:46-54's MergeTree engine merges parts off the
     insert path). Streaming `foreachBatch` appends one file per
     partition per batch, so a day of minutely batches is ~1440 tiny
     files per partition — at 100 TB that's scan-open overhead and
-    NameNode/listing pressure; compaction restores one-ish file per
+    NameNode/listing pressure; compaction restores one file per
     partition and re-sorts rows so min/max row-group pruning on
     `time_col` is tight again (appends interleave time ranges,
     widening every row group's stats).
 
-    Each compacted partition is written to a staging dir BESIDE the
-    table (invisible to readers) and published on its own through
-    `storage.publish_partitions`, so a reader sees each partition
-    either old or compacted — never both, never neither — and a
-    crash at any point is healed by the next `read_mergetree`.
-    Compaction leaves a partition's rows unchanged, so partitions
-    need no common publish: the extra disk is one partition, and a
-    failure keeps the partitions already compacted. Untouched
-    partitions stay byte-invariant. SINGLE MAINTAINER: appends must
-    not run concurrently with an optimize. Returns
-    {partition: files_before} for observability."""
-    import glob
-    import os
-
+    It is the store tables' compaction (`tables.compact_partitions`):
+    every multi-file month is rewritten by one Spark write into one staging
+    dir BESIDE the table (invisible to readers), which then holds
+    every dirty month at once, and published by one journaled
+    partition swap, so a reader sees each month either old or
+    compacted — never both, never neither — and a crash at any point
+    is healed by the next `read_mergetree`. Single-file months stay
+    byte-identical and rows pass unchanged. SINGLE MAINTAINER:
+    appends must not run concurrently with an optimize. Returns
+    {partition: files_before} of the compacted months."""
     storage.heal_table_fold(path)
-    stats: dict[str, int] = {}
-    for part_dir in sorted(glob.glob(os.path.join(path, "yyyymm=*"))):
-        part = os.path.basename(part_dir)
-        files = glob.glob(os.path.join(part_dir, "*.parquet"))
-        if len(files) <= target_files_per_partition:
-            continue
-        staging = storage.stage_partitions(path)
-        (
-            spark.read.parquet(part_dir)
-            .repartition(target_files_per_partition)
-            .sortWithinPartitions(time_col)
-            .write.parquet(os.path.join(staging, part))
-        )
-        storage.publish_partitions(path, staging, [part])
-        stats[part] = len(files)
-    return stats
+    counts = compact_partitions(spark, path, time_col, dedup=False)
+    return {part: n for part, n in counts.items() if n > 1}

@@ -9,12 +9,17 @@ through one of two shapes:
   caller writes the complete new table there, `publish(path)` renames
   the live dir aside to `path + '.old'`, renames the staging dir into
   place, and only then deletes the aside. `commit(path, write)` is
-  the three steps in one call.
+  the three steps in one call. Used where every file changes: the
+  retraction sidecars, the state sinks, the IVF codebooks and a
+  refresh's lists, and a store table's re-bucket
+  (`tables.bucket_table`).
 * JOURNALED PARTITION SWAP — `stage_partitions(path)` names a
   per-attempt staging dir, the caller writes replacement hive
   partitions there, and `publish_partitions` swaps exactly those
   partition dirs in under a journal kept inside the table; every
-  other partition stays byte-invariant.
+  other partition stays byte-invariant. Used, through
+  `tables.rewrite_partitions`, by a store table's retraction fold and
+  its compaction, and by the MergeTree table's optimize.
 
 INVARIANT: at every instant `path` or `path + '.old'` holds a
 complete table — and, inside a journaled partition swap, each named

@@ -1565,14 +1565,15 @@ def test_search_plans_heal_crashed_swaps(spark, sf_smoke, tmp_path):
 
 def test_swap_survives_racing_heal(spark, sf_smoke, tmp_path, monkeypatch):
     """MAINTAINER CONTRACT (module docstring / ADVICE r17): a query
-    node in another process whose heal_swap fires inside the
-    compactor's swap window — restoring the superseded lists between
-    rename(live→old) and rename(staging→live) — is absorbed by the
-    swap's bounded retry. The compaction COMPLETES (old behavior:
-    ENOTEMPTY abort) and search results are unchanged."""
+    node in another process whose heal_swap fires inside a
+    re-bucket's whole-table swap window — restoring the superseded
+    lists between rename(live→old) and rename(staging→live) — is
+    absorbed by the swap's bounded retry. The re-bucket COMPLETES
+    (old behavior: ENOTEMPTY abort) and search results are
+    unchanged."""
     import os
 
-    from fdblog2clickhouse_spark.operators.tables import compact_table
+    from fdblog2clickhouse_spark.operators.tables import bucket_table, table_layout
 
     qn, cb, lists, batch = _build_ivfpq_fixture(spark, sf_smoke, tmp_path)
     ann_store.ivf_insert_batch(spark, batch, cb, lists)
@@ -1592,10 +1593,11 @@ def test_swap_survives_racing_heal(spark, sf_smoke, tmp_path, monkeypatch):
             fired.append(1)
             storage.heal_swap(lists)  # the query node's heal
 
+    buckets = 2 * table_layout(lists)["buckets"]
     monkeypatch.setattr(os, "rename", racing)
-    n_before = compact_table(spark, lists, sort_col="list_id")
+    bucket_table(spark, lists, buckets)
     monkeypatch.setattr(os, "rename", real_rename)
-    assert fired and n_before > len(_files(lists))  # it rewrote
+    assert fired and table_layout(lists)["buckets"] == buckets  # it rewrote
     assert not os.path.exists(lists + ".old")
     assert not os.path.exists(lists + ".staging")
     got = sorted(
@@ -1611,14 +1613,15 @@ def test_swap_survives_racing_heal(spark, sf_smoke, tmp_path, monkeypatch):
 def test_second_writer_aborts_not_corrupts(spark, sf_smoke, tmp_path, monkeypatch):
     """MAINTAINER CONTRACT: a second WRITER re-creating the live
     lists on every retry (out of contract) exhausts `_swap_aside`'s
-    bounded retry — the compaction ABORTS with the live table and the
-    staging dir both complete (searches still answer, identically),
-    and re-running once the other writer stops converges."""
+    bounded retry — a re-bucket's whole-table swap ABORTS with the
+    live table and the staging dir both complete (searches still
+    answer, identically), and re-running once the other writer stops
+    converges."""
     import os
 
     import pytest
 
-    from fdblog2clickhouse_spark.operators.tables import compact_table
+    from fdblog2clickhouse_spark.operators.tables import bucket_table, table_layout
 
     qn, cb, lists, batch = _build_ivfpq_fixture(spark, sf_smoke, tmp_path)
     ann_store.ivf_insert_batch(spark, batch, cb, lists)
@@ -1636,10 +1639,12 @@ def test_second_writer_aborts_not_corrupts(spark, sf_smoke, tmp_path, monkeypatc
         if src == lists and dst == lists + ".old":
             storage.heal_swap(lists)
 
+    buckets = 2 * table_layout(lists)["buckets"]
     monkeypatch.setattr(os, "rename", always_racing)
     with pytest.raises(RuntimeError, match="second"):
-        compact_table(spark, lists, sort_col="list_id")
+        bucket_table(spark, lists, buckets)
     monkeypatch.setattr(os, "rename", real_rename)
+    assert table_layout(lists)["buckets"] == buckets // 2
 
     # abort, not corruption: the live index answers unchanged
     got = sorted(
@@ -1650,8 +1655,8 @@ def test_second_writer_aborts_not_corrupts(spark, sf_smoke, tmp_path, monkeypatc
     )
     assert got == want
     # converge once the other writer stops
-    n_before = compact_table(spark, lists, sort_col="list_id")
-    assert n_before > len(_files(lists))  # it rewrote
+    bucket_table(spark, lists, buckets)
+    assert table_layout(lists)["buckets"] == buckets  # it rewrote
     got = sorted(
         map(
             tuple,

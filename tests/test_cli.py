@@ -24,6 +24,17 @@ def _tbl_file_counts(path):
     return [len(glob.glob(os.path.join(path, "*.parquet")))]
 
 
+def _rebucket_to_64(monkeypatch, store):
+    """Re-bucket every table of a rep store to 64 buckets through
+    compact-store's own rule: with 0-row trigger and target, every
+    non-empty table re-buckets up to the (patched) ceiling."""
+    with monkeypatch.context() as m:
+        m.setattr(tables, "_REBUCKET_TRIGGER_ROWS", 0)
+        m.setattr(tables, "_REBUCKET_TARGET_ROWS", 0)
+        m.setattr(tables, "_REBUCKET_MAX", 64)
+        assert cli.main(["compact-store", store]) == 0
+
+
 def test_print_schema_matches_reference_shape(capsys):
     rc = cli.main(["print-schema", "--table", "trace"])
     out = capsys.readouterr().out
@@ -1235,13 +1246,16 @@ def test_admit_cli_mega_bucket_is_linear(spark, tmp_path, capsys):
     assert spark.read.parquet(evidence).count() == 0
 
 
-def test_compact_store_rebucket_members_and_kept_count(spark, tmp_path, capsys):
+def test_compact_store_rebucket_members_and_kept_count(
+    spark, tmp_path, capsys, monkeypatch
+):
     """Round-12 operational hardening, all three in one lifecycle:
     (1) the members table is compacted by compact-store (one
     file-group per admit otherwise — the layout's largest table,
-    ADVICE r11); (2) `bucket-store --buckets N` re-buckets all three
-    tables mid-stream and the NEXT rotation still finds its near-dup
-    through the migrated pruned read; (3) a full redelivery with --evidence
+    ADVICE r11); (2) compact-store's re-bucket rule, with test-scaled
+    thresholds, re-buckets all three tables to 64 buckets mid-stream
+    and the NEXT rotation still finds its near-dup through the
+    migrated pruned read; (3) a full redelivery with --evidence
     reports the STANDING partition's pair count as '(kept)', never a
     misleading 0 (ADVICE r11)."""
     import glob
@@ -1291,15 +1305,15 @@ def test_compact_store_rebucket_members_and_kept_count(spark, tmp_path, capsys):
     # pass must merge them
     # every admit appends one file per TOUCHED pb partition; the
     # accumulation shows in the total (per-partition merge itself is
-    # pinned by test_compact_signature_store_preserves_bucketed_layout)
+    # pinned by test_compact_table_rewrites_only_multifile_buckets)
     assert sum(_tbl_file_counts(members_path(store))) > 1
     assert cli.main(["compact-store", store]) == 0
     out = capsys.readouterr().out
     assert "members_files_before=" in out
     assert max(_tbl_file_counts(members_path(store))) == 1
-    assert cli.main(["bucket-store", store, "--buckets", "64"]) == 0
+    _rebucket_to_64(monkeypatch, store)
     out = capsys.readouterr().out
-    assert "bands buckets: 2->64" in out  # fresh builds auto-size (r18)
+    assert "bands_rebucketed=2->64" in out  # fresh builds auto-size (r18)
     assert table_layout(banded_path(store))["buckets"] == 64
 
     # post-migration admission still finds its near-dup through the
@@ -1478,13 +1492,16 @@ def test_admit_vectors_mega_bucket_is_linear(spark, tmp_path, capsys):
     assert spark.read.parquet(evidence).count() == 0
 
 
-def test_admit_vectors_long_lifecycle_with_rebucket(spark, tmp_path, capsys):
+def test_admit_vectors_long_lifecycle_with_rebucket(
+    spark, tmp_path, capsys, monkeypatch
+):
     """Soak the VECTOR production loop (the hyperplane sibling of
     test_admit_cli_long_lifecycle_with_compaction): build + six
     rotations mixing exact-dup vectors (membership only), near-dups
     (scored), a touched-group rescore, fresh content, and a full
-    redelivery, with `compact-store` and `bucket-store --buckets 64`
-    in the MIDDLE — the rotation admitted AFTER the migration must
+    redelivery, with `compact-store`, then a compact-store re-bucket of
+    all three tables to 64 buckets, in the MIDDLE — the rotation
+    admitted AFTER the migration must
     find its near-dup
     through the re-bucketed int-keyed pruned index. Ends by pinning
     the store at one row per distinct quantized vector, the full
@@ -1548,9 +1565,9 @@ def test_admit_vectors_long_lifecycle_with_rebucket(spark, tmp_path, capsys):
     assert cli.main(["compact-store", store]) == 0
     out = capsys.readouterr().out
     assert "members_files_before=" in out
-    assert cli.main(["bucket-store", store, "--buckets", "64"]) == 0
+    _rebucket_to_64(monkeypatch, store)
     out = capsys.readouterr().out
-    assert "bands buckets: 2->64" in out  # fresh builds auto-size (r18)
+    assert "bands_rebucketed=2->64" in out  # fresh builds auto-size (r18)
     assert table_layout(banded_path(store))["buckets"] == 64
 
     # post-migration admission: the near-dup of 55 must be found
@@ -1637,6 +1654,164 @@ def test_probe_recall_cli(spark, tmp_path, capsys):
     assert t1 == 16
     assert h1 > h0          # the refresh recovered recall
     assert h1 == 16         # unified C list: exact top-8 fully covered
+
+
+def _appended_rep_store(spark, tmp_path, monkeypatch):
+    """A text rep store built small-bucketed from 8 docs, then two
+    one-doc admits, so some buckets of each table hold two files and
+    the rest one. Returns (store, {doc_id: text}, the three tables)."""
+    import json
+
+    from fdblog2clickhouse_spark.operators.dedup_store import (
+        banded_path,
+        members_path,
+    )
+
+    docs = {
+        i: " ".join(f"w{i}x{j}" for j in range(12)) for i in range(1, 9)
+    }
+    docs[2] = docs[1]  # an exact dup: group 1 = {1, 2}
+    docs[20] = " ".join(f"v20x{j}" for j in range(12))
+    docs[30] = " ".join(f"v30x{j}" for j in range(12))
+
+    def write(name, ids):
+        p = tmp_path / name
+        p.write_text("".join(
+            json.dumps({"doc_id": i, "text": docs[i]}) + "\n" for i in ids
+        ))
+        return str(p)
+
+    corpus = write("corpus.json", sorted(docs))
+    store = str(tmp_path / "store")
+    with monkeypatch.context() as m:
+        m.setattr(tables, "_BUILD_ROWS_PER_BUCKET", 2)  # 4 / 4 / 16 buckets
+        assert cli.main(["build-store", write("base.json", range(1, 9)), store]) == 0
+    for i in (20, 30):
+        assert cli.main(["admit", write(f"b{i}.json", [i]), store,
+                         "--corpus", corpus]) == 0
+    paths = [store, members_path(store), banded_path(store)]
+    assert max(max(_tbl_file_counts(p)) for p in paths) > 1
+    return store, docs, paths
+
+
+def _table_rows(spark, paths):
+    return [sorted(map(tuple, tables.read_table(spark, p).collect())) for p in paths]
+
+
+def test_rep_store_maintenance_smoke(spark, tmp_path, capsys, monkeypatch):
+    """The rep store's fast default-tier maintenance check: build,
+    admit two batches, retract, compact-store. The tables equal a
+    store built from the live docs and the sidecars are retired; every
+    bucket holds one file, and the buckets that held one file (and
+    none of the retracted doc's rows) are byte-identical; the marker's
+    row count equals the footer count; a second compact-store changes
+    no byte. A flat signature dir is refused naming build-store,
+    before any Spark job."""
+    import glob
+    import json
+
+    import pytest
+    from pyspark.sql import functions as F
+
+    from fdblog2clickhouse_spark.operators.dedup_store import (
+        banded_path,
+        gdelta_keys_path,
+        gdelta_path,
+        members_path,
+        tombstones_path,
+    )
+    from tests.test_ann_store import _tree
+
+    store, docs, paths = _appended_rep_store(spark, tmp_path, monkeypatch)
+    victim = 30  # its own group: the fold drops its rows everywhere
+    assert cli.main(["retract", store, "--id", str(victim)]) == 0
+    kept = {}
+    for p in paths:
+        raw = spark.read.parquet(p)
+        hit = {r[0] for r in raw.where(F.col("group_id") == victim).select("pb").collect()}
+        for d in glob.glob(os.path.join(p, "pb=*")):
+            n = len(glob.glob(os.path.join(d, "*.parquet")))
+            if n == 1 and int(d.rsplit("=", 1)[1]) not in hit:
+                kept[d] = _tree(d)
+    assert kept
+    capsys.readouterr()
+
+    assert cli.main(["compact-store", store]) == 0
+    assert "retractions_folded=true" in capsys.readouterr().out
+    for side in (tombstones_path(paths[1]), gdelta_path(store), gdelta_keys_path(store)):
+        assert not os.path.isdir(side), side
+    for p in paths:
+        assert set(_tbl_file_counts(p)) == {1}, p
+        assert tables._marker_rows(p) == tables._footer_rows(p), p
+    for d, tree in kept.items():
+        assert _tree(d) == tree, d
+
+    live = tmp_path / "live.json"
+    live.write_text("".join(
+        json.dumps({"doc_id": i, "text": t}) + "\n"
+        for i, t in sorted(docs.items()) if i != victim
+    ))
+    model = str(tmp_path / "model")
+    assert cli.main(["build-store", str(live), model]) == 0
+    want = _table_rows(spark, [model, members_path(model), banded_path(model)])
+    assert _table_rows(spark, paths) == want
+
+    trees = [_tree(p) for p in paths]
+    assert cli.main(["compact-store", store]) == 0
+    assert [_tree(p) for p in paths] == trees
+
+    flat = str(tmp_path / "flat")
+    tables.read_table(spark, store).coalesce(1).write.parquet(flat)
+    flat_tree = _tree(flat)
+    sc = spark.sparkContext
+    sc.setJobGroup("test-flat-store-refusal", "compact-store layout refusal")
+    try:
+        with pytest.raises(SystemExit, match=f"{flat} .*build-store"):
+            cli.main(["compact-store", flat])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    assert sc.statusTracker().getJobIdsForGroup("test-flat-store-refusal") == []
+    assert _tree(flat) == flat_tree
+
+
+def test_compact_store_failed_publish_rolls_back(spark, tmp_path, monkeypatch):
+    """A compaction publish that fails during compact-store rolls its
+    own attempt back: no journal, no aside and no staging is left,
+    the rows are those from before, and a re-run compacts."""
+    import glob
+
+    import pytest
+
+    from fdblog2clickhouse_spark import storage
+
+    store, _, paths = _appended_rep_store(spark, tmp_path, monkeypatch)
+    before = _table_rows(spark, paths)
+    real_rename = os.rename
+    failed = []
+
+    def fail_publish_once(src, dst):
+        if os.path.basename(dst).startswith("pb=") and not failed:
+            failed.append(dst)
+            raise OSError("simulated publish failure")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", fail_publish_once)
+    with pytest.raises(OSError, match="simulated publish failure"):
+        cli.main(["compact-store", store])
+    monkeypatch.setattr(os, "rename", real_rename)
+    assert failed
+    for p in paths:
+        assert not os.path.exists(os.path.join(p, storage._FOLD_JOURNAL)), p
+        assert not glob.glob(os.path.join(p, storage._BFOLD_PREFIX + "*")), p
+        assert not glob.glob(os.path.join(p, ".bpub-*")), p
+        assert not glob.glob(p + storage._BFOLD_PREFIX + "*"), p  # staging
+    assert _table_rows(spark, paths) == before
+
+    assert cli.main(["compact-store", store]) == 0
+    for p in paths:
+        assert set(_tbl_file_counts(p)) == {1}, p
+    assert _table_rows(spark, paths) == before
 
 
 def test_retract_cli_lifecycle(spark, tmp_path, capsys):
@@ -1896,7 +2071,7 @@ def test_ivfpq_cli_soak(spark, tmp_path, capsys):
 def test_compact_store_auto_rebucket_growth(spark, tmp_path, capsys, monkeypatch):
     """VERDICT r15 #3: a store built small that grows past the
     rows/bucket knee is re-bucketed UP by the compact-store
-    maintenance pass itself — no manual `bucket-store` — each of the
+    maintenance pass itself, with no separate command, each of the
     three tables by its own rows-per-bucket rule, the report line
     says what it did, and the next admission still classifies and
     pairs correctly through the migrated pruned reads."""

@@ -158,61 +158,6 @@ def test_streaming_store_admission_tiny_pairs(spark, tiny_sf):
     assert (1, 2) not in pairs
 
 
-def test_store_compaction_preserves_admission(spark, sf_oracle):
-    """OPTIMIZE FINAL on the signature store: after the streaming
-    admission loop leaves one file group per micro-batch, compaction
-    must shrink the file count without changing a single store row —
-    so a batch scored against the compacted store produces identical
-    evidence."""
-    import glob
-    import os
-
-    from pyspark.sql import functions as F
-    from fdblog2clickhouse_spark.operators.sinkcheck import scratch_path
-    from fdblog2clickhouse_spark.streaming.queries import streaming_store_admission
-
-    streaming_store_admission(spark, sf_oracle).collect()
-    # the streaming op's deterministic per-run store path (scratch_dir)
-    store_path = os.path.join(
-        scratch_path("store_admission_stream"), "signatures"
-    )
-    before_rows = sorted(map(tuple, spark.read.parquet(store_path).collect()))
-    n_before = len(glob.glob(os.path.join(store_path, "*.parquet")))
-    assert n_before > 1, "expected one file group per micro-batch append"
-
-    compacted = dedup_store.compact_signature_store(spark, store_path)
-    assert compacted == n_before
-    n_after = len(glob.glob(os.path.join(store_path, "*.parquet")))
-    assert n_after == 1
-    after_rows = sorted(map(tuple, spark.read.parquet(store_path).collect()))
-    assert after_rows == before_rows
-
-
-def test_compaction_crash_recovery(spark, tmp_path):
-    """ADVICE r9: at every instant of the compaction swap either the
-    store path or the .old copy holds the complete store. Simulate
-    the crash window (store renamed aside, new copy not yet in
-    place): the next compact call must restore the .old copy."""
-    import os
-    import shutil
-
-    p = str(tmp_path / "store")
-    spark.range(10).selectExpr("id AS doc_id", "id AS bk0").repartition(
-        4
-    ).write.parquet(p)
-    rows = sorted(r["doc_id"] for r in spark.read.parquet(p).collect())
-    # simulate: crash after `os.rename(path, old)` — path missing
-    os.rename(p, p + ".old")
-    assert not os.path.exists(p)
-    dedup_store.compact_signature_store(spark, p, sort_col="bk0")
-    assert sorted(r["doc_id"] for r in spark.read.parquet(p).collect()) == rows
-    assert not os.path.exists(p + ".old")
-    # and a stale staging dir from an earlier crash is inert
-    shutil.copytree(p, p + storage.STAGING)
-    dedup_store.compact_signature_store(spark, p, sort_col="bk0")
-    assert sorted(r["doc_id"] for r in spark.read.parquet(p).collect()) == rows
-
-
 def test_admission_mega_bucket_contract(spark, tmp_path):
     """The admission kernel is deliberately UNCAPPED (the cap's
     population would be mode-dependent and break the sequential ≡
@@ -575,10 +520,8 @@ def test_banded_bucket_layout_is_persisted(spark, tmp_path):
     finally:
         tables._BUILD_ROWS_PER_BUCKET = orig
 
-    # compaction carries the layout marker through the swap
-    dedup_store.compact_signature_store(
-        spark, bands, sort_col=dedup_store._INDEX_KEY
-    )
+    # compaction keeps the layout marker
+    tables.compact_table(spark, bands, sort_col=dedup_store._INDEX_KEY)
     assert tables.table_layout(bands)["buckets"] == built
 
 
@@ -708,7 +651,7 @@ def test_banded_index_compaction_preserves_pruned_reads(spark, tmp_path):
     n_files = len(glob.glob(os.path.join(bands, "pb=*", "*.parquet")))
 
     def compact():
-        return dedup_store.compact_signature_store(
+        return tables.compact_table(
             spark, bands, sort_col=dedup_store._INDEX_KEY
         )
 
@@ -729,7 +672,8 @@ def test_banded_index_compaction_preserves_pruned_reads(spark, tmp_path):
     # idempotent when already compact
     assert compact() == len(per_dir)
 
-    # crash window: index renamed aside, new copy not yet in place
+    # a crashed re-bucket's window: index renamed aside, new copy
+    # not yet in place — compaction heals it before its listing
     os.rename(bands, bands + ".old")
     assert not os.path.exists(bands)
     compact()
@@ -1620,21 +1564,27 @@ def test_compact_cli_heals_crashed_swap_before_sort_derivation(
     spark, tmp_path, capsys
 ):
     """Self-review r13 finding #3: compact-store's schema-derived
-    sort key must heal a crash-interrupted swap BEFORE reading the
-    store schema, or the re-run that is supposed to repair the crash
-    dies on PATH_NOT_FOUND."""
+    sort key must heal a crash-interrupted swap (here a re-bucket's,
+    the signature table left only at '.old') BEFORE reading the store
+    schema, or the re-run that is supposed to repair the crash dies
+    on PATH_NOT_FOUND."""
+    import json
     import os
 
     from fdblog2clickhouse_spark import cli
 
+    docs = tmp_path / "docs.json"
+    docs.write_text("".join(
+        json.dumps({"doc_id": i, "text": f"doc {i} alpha{i} beta{i} gamma{i}"}) + "\n"
+        for i in range(10)
+    ))
     p = str(tmp_path / "store")
-    spark.range(10).selectExpr("id AS doc_id", "id AS bk0").repartition(
-        4
-    ).write.parquet(p)
+    assert cli.main(["build-store", str(docs), p]) == 0
     os.rename(p, p + ".old")
     assert cli.main(["compact-store", p]) == 0
     assert "compacted:" in capsys.readouterr().out
-    assert spark.read.parquet(p).count() == 10
+    assert tables.read_table(spark, p).count() == 10
+    assert not os.path.exists(p + ".old")
 
 
 def test_streaming_admission_composes_mid_stream_retraction(spark, tmp_path):
@@ -2026,41 +1976,51 @@ def test_bucket_table_migration_and_rebucket(spark, tmp_path):
     assert got == {13, 77}
 
 
-def test_compact_signature_store_preserves_bucketed_layout(spark, tmp_path):
-    """The bucketed branch compacts WITHIN each pb partition: marker
-    survives, rows byte-identical, one file per partition after."""
+def test_compact_table_rewrites_only_multifile_buckets(spark, tmp_path):
+    """compact_table compacts WITHIN each pb partition, and only the
+    partitions holding more than one file: the marker's layout
+    survives, the rows are the same, a crash-leaked duplicate row is
+    retired, every partition holds one file after, single-file
+    partitions are byte-identical, and the marker's row count equals
+    the footer count. A second compaction changes nothing."""
     import glob
     import os
 
-    from fdblog2clickhouse_spark.operators import dedup_store as ds
-
     path = str(tmp_path / "sigs")
-    mk = lambda lo, hi: spark.createDataFrame(
-        [(i, f"gh{i}", f"bk{i % 3}") for i in range(lo, hi)],
+    mk = lambda ids: spark.createDataFrame(
+        [(i, f"gh{i}", f"bk{i % 3}") for i in ids],
         "group_id long, gh string, bk0 string",
     )
-    tables.write_table(mk(0, 40), path, "overwrite", key="gh", buckets=4)
-    tables.write_table(mk(40, 60), path, "append")
-    tables.write_table(mk(60, 90), path, "append")
-    before = {
-        tuple(r) for r in tables.read_table(spark, path).collect()
-    }
-    per_dir = [
-        len(glob.glob(os.path.join(d, "*.parquet")))
-        for d in glob.glob(os.path.join(path, "pb=*"))
-    ]
-    assert max(per_dir) > 1
-    n = ds.compact_signature_store(spark, path, sort_col="bk0")
-    assert n == sum(per_dir)
-    assert tables.table_layout(path) == {"buckets": 4, "key": "gh"}
-    per_dir_after = [
-        len(glob.glob(os.path.join(d, "*.parquet")))
-        for d in glob.glob(os.path.join(path, "pb=*"))
-    ]
-    assert per_dir_after and max(per_dir_after) == 1
-    assert {
-        tuple(r) for r in tables.read_table(spark, path).collect()
-    } == before
+    tables.write_table(mk(range(40)), path, "overwrite", key="gh", buckets=8)
+    # two appends touching at most three buckets; the second leaks a
+    # duplicate of a built row
+    tables.write_table(mk([40, 41]), path, "append")
+    tables.write_table(mk([42, 7]), path, "append")
+    before = {tuple(r) for r in tables.read_table(spark, path).collect()}
+    tables._set_marker_rows(path, 44)  # what the re-bucket gate counts
+
+    def per_dir():
+        return {
+            os.path.basename(d): len(glob.glob(os.path.join(d, "*.parquet")))
+            for d in glob.glob(os.path.join(path, "pb=*"))
+        }
+
+    counts = per_dir()
+    single = [d for d, n in counts.items() if n == 1]
+    assert max(counts.values()) > 1 and single
+    trees = {d: _tree(os.path.join(path, d)) for d in single}
+    assert tables.compact_table(spark, path, sort_col="bk0") == sum(counts.values())
+    assert tables.table_layout(path) == {"buckets": 8, "key": "gh"}
+    assert set(per_dir().values()) == {1}
+    for d in single:
+        assert _tree(os.path.join(path, d)) == trees[d], d
+    rows = tables.read_table(spark, path).collect()
+    assert len(rows) == 43 and {tuple(r) for r in rows} == before
+    assert tables._marker_rows(path) == tables._footer_rows(path) == 43
+
+    tree = _tree(path)
+    assert tables.compact_table(spark, path, sort_col="bk0") == len(counts)
+    assert _tree(path) == tree
 
 
 def test_fold_retractions_preserves_bucketed_layout(spark, tmp_path):
@@ -2174,7 +2134,7 @@ def test_pre_xxh64_marker_is_refused(spark, tmp_path):
         lambda: tables.write_table(df, path, "append"),
         lambda: tables.bucket_table(spark, path, 8),
         lambda: tables.maybe_rebucket_table(spark, path),
-        lambda: ds.compact_signature_store(spark, path, sort_col="doc_id"),
+        lambda: tables.compact_table(spark, path, sort_col="doc_id"),
     ):
         with pytest.raises(tables.StoreLayoutError, match=f"{path}.*build-store"):
             call()
@@ -3072,12 +3032,10 @@ def test_marker_row_cache_lifecycle(spark, tmp_path, monkeypatch):
 
 
 def test_compaction_preserves_marker_row_cache(spark, tmp_path):
-    """compact_signature_store copies the layout marker into its
-    staging dir and re-counts the rewritten files from their footers
-    — the cached row count stays EXACT (measured at 1 M rows the
-    marker read saves ~0.9 s of count() per maintenance gate call)."""
-    from fdblog2clickhouse_spark.operators import dedup_store as ds
-
+    """compact_table adjusts the marker's cached row count by the
+    footer counts of the buckets it rewrote — the count stays EXACT
+    (measured at 1 M rows the marker read saves ~0.9 s of count() per
+    maintenance gate call)."""
     path = str(tmp_path / "tbl")
     df = spark.createDataFrame(
         [(i, f"g{i}", i) for i in range(64)],
@@ -3095,8 +3053,8 @@ def test_compaction_preserves_marker_row_cache(spark, tmp_path):
     )
     assert tables._marker_rows(path) is None
     tables._set_marker_rows(path, 80)
-    ds.compact_signature_store(spark, path, sort_col="bk0")
-    assert tables._marker_rows(path) == 80  # footer recount, no Spark job
+    tables.compact_table(spark, path, sort_col="bk0")
+    assert tables._marker_rows(path) == 80  # footer deltas, no Spark job
     assert tables.read_table(spark, path).count() == 80
 
 

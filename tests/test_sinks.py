@@ -879,17 +879,18 @@ def test_optimize_mergetree_crash_mid_publish_heals_on_read(
     import textwrap
 
     from fdblog2clickhouse_spark import storage
+    from fdblog2clickhouse_spark.operators import tables
     from fdblog2clickhouse_spark.sinks.mergetree import optimize_mergetree
 
     path, pre = _appended_mergetree(spark, sf_smoke, tmp_path)
     staged = []
-    monkeypatch.setattr(storage, "publish_partitions", lambda *a: staged.append(a))
+    monkeypatch.setattr(tables, "publish_partitions", lambda *a: staged.append(a))
     optimize_mergetree(spark, path)
     monkeypatch.undo()
-    compacted = {a[2][0] for a in staged}
-    # each partition is staged on its own; staging the next one reaps
-    # the previous (unpublished) staging dir, so the last survives
-    _, staging, rels = staged[-1][:3]
+    # every dirty month is staged in one dir, for one journaled swap
+    ((_, staging, rels, emptied),) = staged
+    assert rels and not emptied
+    compacted = set(rels)
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     child = textwrap.dedent(
@@ -917,6 +918,77 @@ def test_optimize_mergetree_crash_mid_publish_heals_on_read(
     assert not os.path.exists(os.path.join(path, storage._FOLD_JOURNAL))
     assert set(optimize_mergetree(spark, path)) == compacted
     _assert_mergetree_rows(spark, path, pre)
+
+
+def test_optimize_mergetree_jobs_independent_of_dirty_months(spark, tmp_path):
+    """One optimize rewrites every dirty month in one Spark write and
+    one journaled swap: it runs as many Spark jobs on 4 dirty months
+    as on 2, leaves one file per month, keeps a single-file month
+    byte-identical and the rows unchanged."""
+    from fdblog2clickhouse_spark.sinks.mergetree import optimize_mergetree
+
+    def files(path):
+        return {
+            os.path.relpath(f, path): open(f, "rb").read()
+            for f in glob.glob(os.path.join(path, "yyyymm=*", "*.parquet"))
+        }
+
+    def run(n_months):
+        path = str(tmp_path / f"mt{n_months}")
+        rows = spark.range(0, 240, 1, 1).select(
+            F.expr(
+                f"make_timestamp(2020, CAST(id % {n_months} AS INT) + 1, "
+                "1, 0, CAST(id % 60 AS INT), 0)"
+            ).alias("time"),
+            F.col("id").alias("event_id"),
+        )
+        write_mergetree(rows, path)
+        write_mergetree(rows.where(F.col("event_id") % 2 == 0), path)
+        # a month written once keeps its single file
+        write_mergetree(
+            spark.range(1).select(
+                F.expr("make_timestamp(2021, 6, 1, 0, 0, 0)").alias("time"),
+                F.col("id").alias("event_id"),
+            ),
+            path,
+        )
+        pre = sorted(map(tuple, read_mergetree(spark, path).collect()))
+        single = {
+            f: b for f, b in files(path).items() if f.startswith("yyyymm=202106")
+        }
+        n = _jobs(spark, f"optimize-{n_months}", lambda: optimize_mergetree(spark, path))
+        after = files(path)
+        assert len(after) == n_months + 1
+        assert {f: b for f, b in after.items() if f.startswith("yyyymm=202106")} == single
+        assert sorted(map(tuple, read_mergetree(spark, path).collect())) == pre
+        return n
+
+    assert run(2) == run(4) > 0
+
+
+def test_optimize_mergetree_keeps_a_column_one_month_added(spark, tmp_path):
+    """Schema evolution under optimize: one month's appends carry a
+    column the other month's lack. Compacting both months in one
+    write keeps the new column's values (a read without schema
+    merging takes one file's schema and would drop them)."""
+    from fdblog2clickhouse_spark.sinks.mergetree import optimize_mergetree
+
+    path = str(tmp_path / "mt")
+    old = spark.range(10).select(
+        F.expr("make_timestamp(2020, 1, 1, 0, 0, CAST(id AS INT))").alias("time"),
+        F.col("id"),
+    )
+    new = spark.range(10).select(
+        F.expr("make_timestamp(2020, 2, 1, 0, 0, CAST(id AS INT))").alias("time"),
+        F.col("id"),
+        (F.col("id") * 10).alias("extra"),
+    )
+    for df in (old, old, new, new):
+        write_mergetree(df, path)
+    assert set(optimize_mergetree(spark, path)) == {"yyyymm=202001", "yyyymm=202002"}
+    merged = spark.read.option("mergeSchema", "true").parquet(path)
+    assert merged.where("extra IS NOT NULL").count() == 20
+    assert merged.where("extra IS NULL").count() == 20
 
 
 # The insert runs one Spark job and no Python worker task: the encoded

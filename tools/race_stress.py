@@ -52,8 +52,9 @@ codebook, bucketed lists and codes, PQ codebook) built from sf0.001
 embeddings, then a micro-batch insert stream through the real kernel
 `ivf_insert_batch`, with a maintenance pass in the insert loop's own
 process every fourth batch: two base vectors retracted, then
-`compact-store` (tombstone fold through journaled partition swaps,
-re-bucket, compaction through a whole-table swap), while racer
+`compact-store` (tombstone fold, re-bucket, and compaction of the
+multi-file buckets, the fold and the compaction each through a
+journaled partition swap), while racer
 processes loop `heal_swap` and `heal_table_fold` over all four
 artifact paths (exactly what every query node does before building
 its read plan). Every third batch is a REDELIVERY of the previous
@@ -104,12 +105,13 @@ writer death for the vector insert stream and its maintenance — a
 child loops real `ivf_insert_batch` micro-batches with a
 compact-store pass (retract two base vectors, fold, re-bucket,
 compact) after every third, and the parent SIGKILLs its process
-group — at a random point, or as soon as a fold journal or a
-compaction's staging dir appears, in turn (the child widens those
-windows and the half-inserted one) — classifies the state the death
-actually left (the step in flight; a fold journal on disk; a
-compaction staged; an artifact only at '.old'; half-inserted lists
-rows whose codes are missing), then
+group — at a random point, as soon as a fold journal appears, or as
+soon as a compaction's journal appears, in turn (the child widens
+the journal windows and the half-inserted one, and marks the span of
+each compaction) — classifies the state the death actually left (the
+step in flight; a fold journal on disk; inside a compaction; an
+artifact only at '.old'; half-inserted lists rows whose codes are
+missing), then
 plays the documented recovery: `heal_swap` and `heal_table_fold` on
 all four artifacts, then a REDELIVERY of an in-flight insert batch
 through the same kernel, or a re-run of an in-flight maintenance
@@ -583,6 +585,17 @@ def ivf_main() -> None:
     for p in procs:
         p.start()
 
+    # count the compactions that rewrote buckets under racer fire
+    compactions = []
+    orig_compact = tables.compact_partitions
+
+    def counted_compact(*a, **k):
+        counts = orig_compact(*a, **k)
+        compactions.extend(n for n in counts.values() if n > 1)
+        return counts
+
+    tables.compact_partitions = counted_compact
+
     inserted: set = set()
     retracted: set = set()
     passes = aborts = redeliveries = 0
@@ -649,6 +662,7 @@ def ivf_main() -> None:
         f"ivf-race-stress: GREEN — {n_batches} insert micro-batches "
         f"({redeliveries} redeliveries) and {passes} in-process "
         f"compact-store passes (retract, fold, re-bucket, compact; "
+        f"{len(compactions)} multi-file buckets compacted; "
         f"{aborts} documented aborts retried) vs {n_racers} healing "
         f"processes in {dt:.1f}s, swap windows observed={hits.value} "
         "(lists+codes exact and coherent after every batch, "
@@ -1042,8 +1056,11 @@ def crash_ivf_child() -> None:
     and each finished step as `done <step>`. Three windows are
     widened by tool-side patches of this child's own process
     (product code untouched) so kills can land inside them: the
-    lists-appended-codes-missing window, each fold journal window
-    and the compaction's staged-not-published window."""
+    lists-appended-codes-missing window, each journaled partition
+    swap (a fold's or a compaction's) and a re-bucket's whole-table
+    swap. Another patch keeps the file `<root>/compacting` on disk
+    while a compaction runs, so the parent can aim a kill at a
+    compaction's swap and classify it."""
     import json
 
     root, plan_file, progress_file, ready_file = sys.argv[2:6]
@@ -1087,6 +1104,17 @@ def crash_ivf_child() -> None:
 
     storage._fold_swap_loop = slow_swap
     tables.publish = slow_publish
+    orig_compact = tables.compact_partitions
+    compacting = os.path.join(root, "compacting")
+
+    def marked_compact(*a, **k):
+        open(compacting, "w").close()
+        try:
+            return orig_compact(*a, **k)
+        finally:
+            os.remove(compacting)
+
+    tables.compact_partitions = marked_compact
 
     def log(line: str) -> None:
         with open(progress_file, "a") as f:
@@ -1151,7 +1179,7 @@ def crash_ivf_main() -> None:
             _ivf_maintain(spark, lists, step["ids"])
 
     journals = [os.path.join(p, storage._FOLD_JOURNAL) for p in (lists, codes)]
-    stagings = [p + storage.STAGING for p in (lists, codes)]
+    compacting = os.path.join(root, "compacting")  # crash_ivf_child's mark
     delivered: set = set()
     retracted: set = set()
     landed = {"append": 0, "fold": 0, "compaction": 0, "swap": 0,
@@ -1176,14 +1204,17 @@ def crash_ivf_main() -> None:
         while not os.path.exists(rf):
             time.sleep(0.05)
             assert child.poll() is None, "crash child died before ready"
-        # one random landing, then kills targeted at a fold journal
-        # and at a compaction's staging dir, in turn
+        # one random landing, then kills targeted at a fold's journal
+        # and at a compaction's journal, in turn
         if k % 3 == 0:
             time.sleep(rng.uniform(1.0, 8.0))
         else:
-            marks = journals if k % 3 == 1 else stagings
+            want_compacting = k % 3 == 2
             deadline = time.perf_counter() + 300
-            while not any(os.path.exists(m) for m in marks):
+            while not (
+                any(os.path.exists(j) for j in journals)
+                and os.path.exists(compacting) == want_compacting
+            ):
                 time.sleep(0.005)
                 assert time.perf_counter() < deadline, "no window for a targeted kill"
                 assert child.poll() is None, "child exited early"
@@ -1195,14 +1226,16 @@ def crash_ivf_main() -> None:
         phases = [ln.split()[1] for ln in progress if ln.startswith("phase ")]
         in_flight = phases[-1] if phases and phases[-1] not in done else None
         journal = any(os.path.exists(j) for j in journals)
-        staged = any(os.path.exists(st) for st in stagings)
+        compaction = os.path.exists(compacting)
+        if compaction:
+            os.remove(compacting)
         swapped = [
             os.path.basename(p)
             for p in paths
             if os.path.exists(p + ".old") and not os.path.exists(p)
         ]
-        landed["fold"] += journal
-        landed["compaction"] += staged
+        landed["fold"] += journal and not compaction
+        landed["compaction"] += compaction
         landed["swap"] += bool(swapped)
         landed["append"] += bool(in_flight and in_flight.startswith("i"))
         for p in paths:
@@ -1244,8 +1277,8 @@ def crash_ivf_main() -> None:
         )
         print(
             f"  kill {k}: child finished {len(done)} steps, in flight at "
-            f"death: {in_flight or 'none'} (fold journal={journal}, "
-            f"compaction staged={staged}, mid-swap={swapped or 'no'}, "
+            f"death: {in_flight or 'none'} (journal={journal}, "
+            f"inside a compaction={compaction}, mid-swap={swapped or 'no'}, "
             f"half-inserted gap={len(gap)}), "
             "recovery converged exact",
             flush=True,
