@@ -4,7 +4,8 @@
 Runs each headline query at $SPARK_GRAFT_SF_DIR (default sf0.1) on
 local[$SPARK_GRAFT_CPUS]; prints ONE JSON line:
   {"metric": ..., "value": total_sec, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": ...}
+   "queries": {name: sec, ...}, "sf": ...,
+   "compilations": {name: classes compiled over its timed runs, ...}}
 
 Per query: one untimed warm run (first-execution plan analysis +
 whole-stage codegen compilation), then THREE timed runs reporting the
@@ -241,7 +242,7 @@ def main(argv: list[str] | None = None) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").split("sf")[-1]
 
-    from fdblog2clickhouse_spark.session import get_spark
+    from fdblog2clickhouse_spark.session import compiled_classes, get_spark
     from fdblog2clickhouse_spark import operators
 
     spark = get_spark("fdblog2clickhouse-bench")
@@ -252,11 +253,13 @@ def main(argv: list[str] | None = None) -> None:
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
 
     timings: dict[str, float] = {}
+    compilations: dict[str, int] = {}
     for name in HEADLINE:
         fn = queries.get(name)
         if fn is None:
             continue
         fn(spark, sf_dir).count()  # warm: analysis + codegen compile
+        compiled0 = compiled_classes(spark)
         samples = []
         for _ in range(3):
             spark.catalog.clearCache()  # internal .cache() must not carry over
@@ -266,6 +269,9 @@ def main(argv: list[str] | None = None) -> None:
             samples.append(time.perf_counter() - t0)
             assert n >= 0
         timings[name] = round(min(samples), 3)
+        # classes compiled over the timed runs: non-zero flags a plan
+        # whose generated code differs on every run
+        compilations[name] = compiled_classes(spark) - compiled0
     # sink_compaction is reported OUTSIDE the summed query timings:
     # folding it into `total` (as round 6 briefly did) shifts the
     # headline number and breaks round-over-round comparability of
@@ -295,6 +301,7 @@ def main(argv: list[str] | None = None) -> None:
                 "queries": timings,
                 "families": families,
                 "aux": aux,
+                "compilations": compilations,
                 "timed_runs": 3,  # per-query min-of-3 (noise floor)
                 # headline composition grew in round 2 (ngram/neardup
                 # added after their BLAS rewrites) — n disambiguates

@@ -65,10 +65,19 @@ def stream_rep_admission(
     all three — then the membership expansion, identical to
     `rep_store_admission`'s. The source's first column is its id."""
     root, g_all = _rep_lifecycle(spark, source, family, name)
-    rotations = root + "/rotations"
     source.where(~_base_pred(F.col(source.columns[0]))).coalesce(4).write.mode(
         "overwrite"
-    ).json(rotations)
+    ).json(root + "/rotations")
+    drain_rep_admission(spark, source.schema, family, root, g_all)
+    return _rep_result(spark, family, root, g_all)
+
+
+def drain_rep_admission(
+    spark: SparkSession, schema, family: StoreFamily, root: str, g_all: DataFrame
+) -> None:
+    """Admit the JSON rotations under <root>/rotations, one
+    micro-batch per file, into the rep store under <root>; the
+    checkpoint <root>/rotations_ckpt skips the batches it committed."""
 
     def admit(batch_df: DataFrame, batch_id: int) -> None:
         # the SHARED step (operators/dedup_store.py) — including the
@@ -85,11 +94,9 @@ def stream_rep_admission(
             skip_when_no_new_docs=True,
         )
 
-    stream = spark.readStream.schema(source.schema).option(
-        "maxFilesPerTrigger", 1
-    ).json(rotations)
+    rotations = root + "/rotations"
+    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(rotations)
     drain_foreach_batch(stream, admit, rotations + "_ckpt")
-    return _rep_result(spark, family, root, g_all)
 
 
 def streaming_rep_admission(spark: SparkSession, sf_dir: str) -> DataFrame:

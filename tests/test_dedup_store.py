@@ -616,6 +616,80 @@ def test_streaming_rep_admission_tiny_and_store_state(spark, tiny_sf):
     )
 
 
+def _rep_store_rows(spark, root):
+    """Each table of the rep store under `root` as a multiset of
+    rows, every group id replaced by its member doc ids: which of two
+    identical docs founds their group depends on arrival order."""
+    from collections import Counter
+
+    groups = {}
+    for r in tables.read_table(spark, root + "/members").collect():
+        groups.setdefault(r["group_id"], set()).add(r["doc_id"])
+    groups = {g: frozenset(docs) for g, docs in groups.items()}
+
+    def canon(r):
+        return tuple(
+            groups[v] if k == "group_id" else tuple(v) if isinstance(v, list) else v
+            for k, v in sorted(r.asDict().items())
+        )
+
+    return {
+        t: Counter(canon(r) for r in tables.read_table(spark, f"{root}/{t}").collect())
+        for t in ("signatures", "bands", "members")
+    }
+
+
+def test_streaming_rep_admission_smoke(spark, tiny_sf):
+    """Two micro-batches through the streaming rep admission: a batch
+    replayed from the checkpoint changes no file of the store or its
+    evidence, and the store equals the batch lifecycle's."""
+    import os
+
+    from fdblog2clickhouse_spark.operators.sinkcheck import scratch_path
+    from fdblog2clickhouse_spark.streaming.rep_admission import (
+        drain_rep_admission,
+        stream_rep_admission,
+    )
+
+    text = dict(_DOCS)
+    # two slices, so two rotations: the batch lifecycle's batch 1
+    # (40, 50) and batch 2 (45, 25), each beside base docs
+    order = [1, 40, 50, 2, 3, 45, 25]
+    source = spark.createDataFrame(
+        spark.sparkContext.parallelize([(i, text[i]) for i in order], 2),
+        "doc_id long, text string",
+    )
+    out = stream_rep_admission(spark, source, dedup_store.TEXT, "rep_admission_smoke")
+    assert {(r["da"], r["db"]) for r in out.collect()} == {(1, 40), (2, 40), (45, 50)}
+
+    root = scratch_path("rep_admission_smoke")
+    commits = root + "/rotations_ckpt/commits"
+    assert sorted(n for n in os.listdir(commits) if n.isdigit()) == ["0", "1"]
+
+    def files():
+        got = {}
+        for t in ("signatures", "bands", "members", "evidence"):
+            for d, _, names in os.walk(os.path.join(root, t)):
+                for n in names:
+                    with open(os.path.join(d, n), "rb") as f:
+                        got[os.path.relpath(os.path.join(d, n), root)] = f.read()
+        return got
+
+    before = files()
+    # the last batch ran but its commit was lost: the restart replays it
+    for n in ("1", ".1.crc"):
+        if os.path.exists(os.path.join(commits, n)):
+            os.remove(os.path.join(commits, n))
+    drain_rep_admission(
+        spark, source.schema, dedup_store.TEXT, root, dedup_store.TEXT.group_frame(source)
+    )
+    assert os.path.exists(os.path.join(commits, "1"))
+    assert files() == before
+
+    dedup_store.dedup_store_rep_admission(spark, tiny_sf)
+    assert _rep_store_rows(spark, root) == _rep_store_rows(spark, scratch_path("rep_store"))
+
+
 def test_banded_index_compaction_preserves_pruned_reads(spark, tmp_path):
     """OPTIMIZE FINAL for the band index: after appends leave
     multiple files per partition (including crash-leaked DUPLICATE

@@ -503,3 +503,60 @@ def test_quoted_trace_values_normalize_like_numbers(spark, tmp_path):
         f.write(json.dumps({"Severity": "ten", "Time": "soon", "ID": "x"}) + "\n")
     [bad] = normalize_trace(read_trace_batch(spark, str(tmp_path / "bad"))).collect()
     assert (bad["severity"], bad["time"], bad["id"]) == (None, None, "x")
+
+
+def test_insert_and_rollup_later_triggers_compile_nothing(spark, fake_ch, tmp_path):
+    """`watch --rollup`'s hook over five one-file rotations: from the
+    third trigger on, no trigger compiles a generated class, so a
+    live watch reuses its plans' code. A sink that put a per-batch
+    value (the batch id, a file's time range) into generated code as
+    a literal would compile again on every trigger and fail this."""
+    import json
+
+    from fdblog2clickhouse_spark.session import compiled_classes
+    from fdblog2clickhouse_spark.sinks.clickhouse import ClickHouseHttpSink
+    from fdblog2clickhouse_spark.sinks.rollup import foreach_batch_rollup, read_rollup
+    from fdblog2clickhouse_spark.streaming.ingest import (
+        insert_and_rollup,
+        normalize_trace,
+        read_trace_stream,
+    )
+
+    url, received, _ = fake_ch
+    logs = tmp_path / "logs"
+    logs.mkdir()
+    rotations = 5
+    for r in range(rotations):
+        with open(logs / f"trace.{r}.json", "w") as f:
+            for i in range(40):
+                f.write(json.dumps({
+                    "Severity": str((10, 20, 40)[i % 3]), "Machine": f"m{i % 4}",
+                    "LogGroup": "default", "Time": f"{1706659207 + 60 * r + i}.{i:06d}",
+                    "Type": f"T{(r + i) % 5}", "ID": f"{r}-{i}",
+                }) + "\n")
+    out = str(tmp_path / "rollup")
+    both = insert_and_rollup(
+        ClickHouseHttpSink(addr=url, database="tracedb", table="trace").foreach_batch(),
+        foreach_batch_rollup(out),
+    )
+    counts = []
+
+    def hook(df, batch_id):
+        counts.append(compiled_classes(spark))
+        both(df, batch_id)
+
+    (
+        normalize_trace(read_trace_stream(spark, str(logs), max_files_per_trigger=1))
+        .writeStream.foreachBatch(hook)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    counts.append(compiled_classes(spark))
+    assert len(counts) == rotations + 1
+    # trigger k (1-based) compiled counts[k] - counts[k-1] classes
+    per_trigger = [b - a for a, b in zip(counts, counts[1:])]
+    assert per_trigger[2:] == [0] * (rotations - 2), per_trigger
+    assert sum(len(p["body"].splitlines()) for p in received) == 40 * rotations
+    assert sum(c["n_events"] for c in read_rollup(spark, out).collect()) == 40 * rotations

@@ -15,6 +15,27 @@ def test_trace_oracle_parity(spark, sf_oracle, name):
     compare(df, trace_ops.ORACLE[name], sf_oracle)
 
 
+def test_repeat_pass_compiles_nothing(spark, sf_oracle):
+    """A second pass of the benchmark's consumer queries compiles no
+    generated class: the first pass's classes all stay in the JVM's
+    codegen cache (session.CODEGEN_CACHE_ENTRIES). At Spark's default
+    of 100 entries a pass needs more classes than the cache keeps,
+    and the second pass compiles about 100 again. churned_users is
+    not pinned: it compiled 4 classes on its second run and 0 on
+    every run after that."""
+    from fdblog2clickhouse_spark.session import compiled_classes
+    from perfbench.workloads import MIX
+
+    def one_pass():
+        for name in MIX:
+            trace_ops.QUERIES[name](spark, sf_oracle).toPandas()
+
+    one_pass()
+    before = compiled_classes(spark)
+    one_pass()
+    assert compiled_classes(spark) - before == 0
+
+
 def test_sessionization_sane(spark, sf_smoke):
     rows = trace_ops.event_sessionization(spark, sf_smoke).collect()
     assert len(rows) > 0

@@ -24,6 +24,7 @@ def main() -> int:
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as mod
+    from fdblog2clickhouse_spark.session import compiled_classes
     from tests.oracle import compare
 
     cpus = os.environ.get("DRIVER_SIM_CPUS", "8")
@@ -71,6 +72,8 @@ def main() -> int:
             print("    " + "\n    ".join(str(e).splitlines()[:12]))
             failures += 1
 
+    # the driver's session keeps Spark's 100-entry codegen cache
+    print(f"codegen: {compiled_classes(spark)} classes compiled")
     spark.stop()
     print(f"driver-sim: {'GREEN' if failures == 0 else f'{failures} FAILURES'}")
     return 1 if failures else 0
