@@ -92,10 +92,13 @@ from .similarity import (
     _IVF_TOPK,
     _N_PROBE,
     _N_QUERIES,
+    _PQ_SUBS,
     _cosine_cols,
 )
 from .tables import (
+    _auto_buckets,
     _fold_table_granular,
+    _marker_rows,
     read_table,
     require_tables,
     table_layout,
@@ -1089,11 +1092,14 @@ def ann_ivfpq_store_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
+    # sized from the lists' marker (one code row per subspace per
+    # listed vector), so the build pays no sizing persist + count
     write_table(
         _ivfpq_codes(resid_of(base, read_table(spark, lists_path)), pq_d),
         codes_path,
         "overwrite",
         key=_CODES_KEY,
+        buckets=_auto_buckets(_PQ_SUBS * _marker_rows(lists_path)),
     )
 
     # 2. INSERT through the persisted codebooks only
@@ -1951,6 +1957,7 @@ def ann_ivfpq_refresh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             codes_path,
             "overwrite",
             key=_CODES_KEY,
+            buckets=_auto_buckets(_PQ_SUBS * _marker_rows(lists_path)),
         )
 
         # drifted INSERT purely through the stale persisted codebooks;

@@ -1,21 +1,24 @@
-"""Persisted MinHash signature-store lifecycle (SURVEY §2.3).
+"""Persisted near-dup store lifecycle (SURVEY §2.3).
 
-`doc_minhash_signatures` (dedup.py) defines the STORE SCHEMA a
-100 TB pipeline persists; the incremental ops (dedup.py:478,
-streaming/queries.py) prove batch-vs-base scoring — but until round
-9 nothing exercised the actual production admission LOOP:
+The production admission LOOP, for MinHash signatures over token
+streams and hyperplane sign bands over quantized vectors alike:
 
-    read store from disk → score batch → append admitted docs'
+    read store from disk → score batch → append admitted content's
     signatures → next batch sees them.
 
-This module is that loop, driver-oracle-checked. The operator runs
-TWO sequential admission batches against a parquet store on disk
-(base corpus signatures written first, each batch's signatures
-appended after scoring), while the DuckDB oracle computes the
-ONE-SHOT spelling — every near-dup pair over the full corpus except
-base×base pairs. The hash match IS the lifecycle proof: two-batch
-sequential admission, reading the store from disk both times,
-produces exactly the pairs one batch over the union would.
+The store is the representative ("rep") store: one signature row per
+distinct content, a band index bucketed by band hash, and a
+(doc_id, gh, group_id) membership table. `build-store`,
+`build-vstore`, `admit` and `admit-vectors` write it through
+`bootstrap_rep_store` and `rep_admission_step`; the registered
+lifecycle ops (`dedup_store_admission`, `*_rep_admission`, the
+streaming ops, the retraction ops) run the same two functions. Each
+lifecycle op bootstraps a base slice on disk, admits two sequential
+batches that each read the store the previous step appended to,
+and expands the group evidence back to document pairs, while its
+DuckDB oracle computes the ONE-SHOT spelling: every near-dup pair
+over the full corpus except base×base pairs. The hash match is the
+lifecycle proof.
 
 Why the equivalence is exact (and the design choices it forces):
 
@@ -27,22 +30,20 @@ Why the equivalence is exact (and the design choices it forces):
   no gap, any batch slicing gives the same union.
 * The candidate rule is the same first-shared-band gate as every
   MinHash op (in-row test on the carried key arrays — pair-distinct
-  with zero extra shuffle), which depends only on the two docs'
+  with zero extra shuffle), which depends only on the two sides'
   signatures, never on which batch they arrived in.
 * No bucket cap here, deliberately: `_LSH_BUCKET_CAP` is a
   bulk-backfill guard whose population (store∪batch at score time)
   would differ between sequential and one-shot runs, breaking the
-  batch-boundary-independence this operator exists to prove. A
-  production admission loop bounds degenerate buckets upstream (the
-  backfill that built the base store routed mega-buckets to exact
-  dedup) — documented here, asserted nowhere else needed.
+  batch-boundary-independence this lifecycle exists to prove. A
+  degenerate bucket of identical documents costs one group row
+  instead (the rep block comment below).
 
-Scale shape: each step touches the base corpus ONLY through the
-persisted store (O(store) band rows read from parquet, no text
-recompute) plus the shingle arrays of docs that appear in candidate
-pairs; the band join is batch×(store∪batch) via hash-partitioned
-band keys. Cost per batch is O(batch + candidates) — the store
-read is a columnar scan of 21 small columns.
+Scale shape: a step reads the store only through pruned reads of
+the batch's bucket footprint (members by doc_id, signatures by gh,
+the band index by band hash) plus the verify features of the
+candidate reps, so its cost is O(batch + candidates), and the store
+grows O(distinct contents).
 
 Reference parity: the reference's whole contract is
 ingest-then-query (README.md:139-141 — what you POSTed is what the
@@ -78,7 +79,6 @@ from .dedup import (
     _NEARDUP_LSH_BANDS,
     _QUANT_CTE,
     _band_keys_col,
-    _doc_shingles,
     _hyperplane_bands_cte,
     _minhash_bands_cte,
     _minhash_sig,
@@ -92,6 +92,7 @@ from .dedup import (
     quantize,
     shingles_cte_sql,
 )
+from .sinkcheck import scratch_dir
 from .tables import (
     StoreLayoutError,
     _auto_buckets,
@@ -103,12 +104,6 @@ from .tables import (
     require_tables,
     write_table,
 )
-
-# NOTE: sinkcheck's scratch_dir is imported INSIDE the operators, not
-# here — sinkcheck's module-level oracle build imports
-# streaming.queries, which imports this module's union-spelling SQL;
-# a top-level import here would close that cycle before
-# _STORE_ADMISSION_SQL exists.
 
 # Two sequential admission batches over the sf corpus: base is
 # everything else. pmod so the slices stay a true 3-way partition
@@ -133,25 +128,12 @@ def _base_pred(col):
     return (~_slice(col, _BATCH1_REM)) & (~_slice(col, _BATCH2_REM))
 
 
-def shingle_frame(d: DataFrame) -> DataFrame:
-    """(doc_id, text) → (doc_id, sh distinct-shingle array) — the
-    `_doc_shingles` transform over ANY document frame (a table read,
-    a stream micro-batch), so batch and streaming admission share
-    one feature path. Docs with < 3 tokens have no shingles and are
-    excluded (same rule as every MinHash op and its oracle)."""
-    t = d.select("doc_id", tokens(F.col("text")).alias("t")).where(
-        F.size("t") >= 3
-    )
-    return t.select(
-        "doc_id", F.array_distinct(F.expr(shingles_expr("t", 3))).alias("sh")
-    )
-
-
 def signature_frame(sh: DataFrame) -> DataFrame:
-    """(doc_id, sh) → the persistable store row: 16 signature values
-    + 4 band keys — the exact `doc_minhash_signatures` schema, built
-    here from any doc subset so base and batches share one code
-    path."""
+    """(doc_id, sh) → one doc-level signature row: 16 signature
+    values + 4 band keys, the exact `doc_minhash_signatures` schema.
+    `streaming_incremental_dedup` persists its static base store in
+    this schema; `rep_signature_frame` is pinned equal to it per
+    group."""
     hv = sh.select("doc_id", F.explode("sh").alias("s")).select(
         "doc_id", F.expr(h32_spark_sql("s")).alias("h")
     )
@@ -198,9 +180,9 @@ def candidates_from_rows(
     store_rows: DataFrame, batch_rows: DataFrame, n_bands: int
 ) -> DataFrame:
     """The admission band join over PREBUILT band rows (id, ks, band,
-    band_key) — split from `admission_candidates` so the store side
-    can come from the band index's PRUNED read
-    (`pruned_store_rows`) instead of exploding a full store scan.
+    band_key): the store side comes from the band index's PRUNED
+    read (`pruned_store_rows`), the batch side from
+    `store_band_rows` over the batch's signature rows.
     Band candidates with at least one NEW side, canonical (da < db),
     pair-distinct via the first-shared-band gate; store×store pairs
     are excluded at the join, so the pair work is O(batch-involved
@@ -220,82 +202,6 @@ def candidates_from_rows(
         .where(_first_band_gate_n(n_bands))
         .select(F.col("a.id").alias("da"), F.col("b.id").alias("db"))
     )
-
-
-def admission_candidates(
-    store_sigs: DataFrame,
-    batch_sigs: DataFrame,
-    key_cols: list[str] | None = None,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """`candidates_from_rows` with both sides exploded from flat
-    signature frames — the spelling the store-lifecycle proof ops
-    and the streaming admission path use. The band join is the only
-    shuffle: hash-partition by (band, band_key)."""
-    key_cols = key_cols or [f"bk{b}" for b in range(_N_BANDS)]
-    return candidates_from_rows(
-        store_band_rows(store_sigs, key_cols, id_col),
-        store_band_rows(batch_sigs, key_cols, id_col),
-        len(key_cols),
-    )
-
-
-def dedup_store_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The production admission loop, end to end, on disk:
-
-    1. write the BASE corpus's signature store (parquet);
-    2. batch 1 (doc_id ≡ 0 mod 10): READ the store from disk, band-
-       join batch signatures against it (plus batch-internal pairs),
-       verify candidates with exact Jaccard on the docs' shingle
-       sets, materialize the evidence, APPEND batch 1's signatures
-       to the store;
-    3. batch 2 (doc_id ≡ 5 mod 10): read the GROWN store from disk —
-       batch 1's appended signatures are now base — and repeat.
-
-    Returns the union of both steps' admission evidence
-    (da, db, jaccard ≥ 0.5), da < db canonical. The oracle computes
-    the one-shot union spelling, so the hash match proves
-    sequential-reads-the-appends ≡ one-batch-over-union (see module
-    docstring for why that equivalence is exact).
-
-    Each step's evidence is written to scratch BEFORE its append so
-    the store read each plan sees is unambiguous (reads list their
-    parquet files eagerly, but the materialize-then-append order
-    makes the lifecycle explicit rather than resting on listing
-    timing)."""
-    from .sinkcheck import scratch_dir
-
-    root = scratch_dir("minhash_store")
-    store_path = root + "/signatures"
-    evidence = root + "/evidence"
-
-    # shingle sets once for the whole corpus: batch signature builds
-    # and exact verification both draw from it. Cached because three
-    # batch builds + two verify joins re-walk it.
-    sh = _doc_shingles(spark, sf_dir).cache()
-    feats = sh.select("doc_id", F.col("sh").alias("fs"))
-
-    # 1. base store on disk
-    signature_frame(sh.where(_base_pred(F.col("doc_id")))).write.mode(
-        "overwrite"
-    ).parquet(store_path)
-
-    for step, rem in ((1, _BATCH1_REM), (2, _BATCH2_REM)):
-        batch_sigs = signature_frame(sh.where(_slice(F.col("doc_id"), rem)))
-        store_sigs = spark.read.parquet(store_path)
-        cand = admission_candidates(store_sigs, batch_sigs)
-        verified = jaccard_on_candidates(cand, feats, _JACCARD_THRESHOLD)
-        verified.write.mode("append").parquet(evidence)
-        # admit the whole batch: the store tracks every doc seen
-        # (keep/drop is a downstream policy over the evidence), so
-        # batch 2 must be scored against batch 1's signatures too.
-        batch_sigs.write.mode("append").parquet(store_path)
-
-    # the returned frame is a parquet scan — the corpus-sized shingle
-    # cache has served its last read, so release executor storage
-    # before the next operator in a bench/sweep session (ADVICE r9).
-    sh.unpersist()
-    return spark.read.parquet(evidence).select("da", "db", "jaccard")
 
 
 _STORE_ADMISSION_SQL = f"""
@@ -339,11 +245,11 @@ WHERE i / (ca.n + cb.n - i) >= {_JACCARD_THRESHOLD}
 # signatures and band keys, and identical exact-Jaccard relations to
 # every other doc — so one rep row carries the whole group through
 # candidate generation AND verification, and a degenerate bucket of
-# B copies reaches `admission_candidates` as ONE row. The store then
+# B copies reaches the band join as ONE row. The store then
 # grows O(distinct contents), not O(docs).
 #
-# Equivalence (proved by `dedup_store_rep_admission`'s oracle, which
-# is the UNCHANGED one-shot union SQL of the uncapped op): run the
+# Equivalence (proved by the lifecycle ops' oracle, the one-shot
+# union SQL above, which knows nothing of groups): run the
 # lifecycle at group level — scoring each batch's new groups PLUS a
 # rescore of store groups the batch touched (gained a member) — then
 # expand group-level evidence back through membership:
@@ -363,7 +269,7 @@ def rep_group_frame(d: DataFrame) -> DataFrame:
     """(doc_id, text) → (doc_id, gh, t): gh = md5 of the exact token
     stream (tokens contain no whitespace, so the single-space join is
     injective). Docs with < 3 tokens have no shingles/signature and
-    are excluded — same eligibility rule as `shingle_frame`."""
+    are excluded — same eligibility rule as every MinHash op."""
     t = d.select("doc_id", tokens(F.col("text")).alias("t")).where(
         F.size("t") >= 3
     )
@@ -459,8 +365,8 @@ def emb_rep_group_frame(qn: DataFrame) -> DataFrame:
     carries the vec_id under the name the shared step machinery
     uses. Eligibility mirrors the text side's ≥3-token rule: an EMPTY
     quantized vector is excluded here, at the group-frame level — it
-    can produce no band rows (the uncapped op and the oracle emit
-    none for it) and no non-NULL cosine, and admitting it into
+    can produce no band rows (the oracle emits none for it) and no
+    non-NULL cosine, and admitting it into
     membership would make every later batch's identical empty vector
     classify as NEW content forever, since its group never gets a
     signature row."""
@@ -502,7 +408,7 @@ def emb_rep_signature_frame(reps: DataFrame) -> DataFrame:
     # shorter array, which would poison the whole fold for any
     # corpus whose vectors aren't exactly `dim`-dimensional — the
     # exploded spelling this replaces intersected indices instead
-    # (caught by the hypothesis rep≡uncapped property on 4-dim
+    # (caught by the hypothesis rep ≡ one-shot property on 4-dim
     # corpora)
     ln = f"least(size(q), {dim})"
     cols = []
@@ -1043,8 +949,6 @@ def _rep_lifecycle(
     expansion all draw on it — a production verifier recomputes
     features for candidate reps; the store persists signatures only),
     with its base slice bootstrapped under <root>."""
-    from .sinkcheck import scratch_dir
-
     root = scratch_dir(name)
     g_all = family.group_frame(source).cache()
     bootstrap_rep_store(
@@ -1130,29 +1034,34 @@ def _rep_result(
 def rep_store_admission(
     spark: SparkSession, source: DataFrame, family: StoreFamily, name: str
 ) -> DataFrame:
-    """The uncapped admission op with the production exact-dedup
-    representative pre-pass composed in (block comment above), for
-    either family: the same two-batch read-append-read lifecycle, but
-    the persisted store holds ONE signature row per distinct content
-    (token stream, or quantized vector) plus a (doc_id, gh, group_id)
-    membership table, and the band join only ever sees group
-    representatives. The returned frame is the group-level evidence
-    EXPANDED back through membership to member pairs — cross-group
+    """The two-batch admission lifecycle over a fresh rep store under
+    scratch dir `name`, for either family: the base slice is
+    bootstrapped on disk, then batch 1 (id ≡ 0 mod 10) and batch 2
+    (id ≡ 5 mod 10) each run `rep_admission_step`, so batch 2 reads
+    what batch 1 appended. The store holds ONE signature row per
+    distinct content (token stream, or quantized vector), the band
+    join only ever sees group representatives, and the store side of
+    every band join is the band index's PRUNED read
+    (`pruned_store_rows`). The returned frame is the group evidence
+    EXPANDED back through membership to member pairs: cross-group
     pairs inherit the rep pair's value, within-group pairs carry the
-    family's self-value. The oracle is the uncapped op's one-shot
-    union SQL, unchanged, so the hash match proves the pre-pass
-    semantics-preserving while the kernel's working set shrank from
-    O(docs) to O(distinct contents). The store side of every band
-    join comes through the band index's PRUNED read
-    (`pruned_store_rows` — only partitions the batch's band keys can
-    match are opened), so the oracle covers the scan-pruning design
-    too."""
+    family's self-value. The oracle is the one-shot union SQL over
+    documents, so one hash match covers the sequential ≡ one-shot
+    equivalence, the rep collapse and the pruned reads at once."""
     root, g_all = _rep_lifecycle(spark, source, family, name)
     for rem in (_BATCH1_REM, _BATCH2_REM):
         _rep_admit(
             spark, family, root, g_all, g_all.where(_slice(F.col("doc_id"), rem))
         )
     return _rep_result(spark, family, root, g_all)
+
+
+def dedup_store_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """`rep_store_admission` over the documents, text family, under
+    the `minhash_store` scratch dir. Output: (da, db, jaccard)."""
+    return rep_store_admission(
+        spark, table(spark, sf_dir, "documents"), TEXT, "minhash_store"
+    )
 
 
 def dedup_store_rep_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1242,78 +1151,6 @@ def expand_group_evidence(
     return cross.unionByName(within)
 
 
-# --------------------------------- embedding_store_admission
-
-
-def emb_signature_frame(spark: SparkSession, qn: DataFrame) -> DataFrame:
-    """(vec_id, q) → the persistable VECTOR store row: 6 hyperplane
-    sign-band values (bv0..bv5) — the embedding analog of
-    `signature_frame` (the `_hyperplane_bands` construction up to
-    the bandvals stage, kept here so the store build, like the text
-    side, shares one code path between base and batches)."""
-    pl = spark.createDataFrame(_neardup_planes(), "p int, i int, w long")
-    el = qn.select("vec_id", F.posexplode("q").alias("i", "v"))
-    dots = (
-        el.join(F.broadcast(pl), "i")
-        .groupBy("vec_id", "p")
-        .agg(F.sum(F.col("v") * F.col("w")).alias("dot"))
-    )
-    bb = _NEARDUP_LSH_BAND_BITS
-    return dots.groupBy("vec_id").agg(
-        *[
-            F.sum(
-                F.expr(
-                    f"CASE WHEN p >= {b * bb} AND p < {(b + 1) * bb} AND dot >= 0 "
-                    f"THEN shiftleft(1, p - {b * bb}) ELSE 0 END"
-                )
-            )
-            .cast("int")
-            .alias(f"bv{b}")
-            for b in range(_NEARDUP_LSH_BANDS)
-        ]
-    )
-
-
-def embedding_store_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The VECTOR-store admission lifecycle — same read-append-read
-    contract as `dedup_store_admission`, over the hyperplane
-    sign-band store: base vectors' band signatures written to
-    parquet; two sequential batches (vec_id ≡ 0, then ≡ 5 mod 10)
-    each read the store from disk, band-join against it (plus
-    batch-internal pairs), verify candidates with EXACT
-    int64-quantized cosine, and append their signatures. The oracle
-    is the one-shot union spelling (all non-base×base pairs over
-    uncapped bands), so the hash match proves the same sequential ≡
-    one-shot equivalence — the store persists signatures only; the
-    verifier re-reads candidate vectors from the embedding table,
-    exactly how a production vector store splits index vs payload."""
-    from .sinkcheck import scratch_dir
-
-    root = scratch_dir("hyperplane_store")
-    store_path = root + "/signatures"
-    evidence = root + "/evidence"
-
-    qn = _quantized(spark, sf_dir).cache()
-    emb_signature_frame(
-        spark, qn.where(_base_pred(F.col("vec_id")))
-    ).write.mode("overwrite").parquet(store_path)
-
-    for rem in (_BATCH1_REM, _BATCH2_REM):
-        batch_sigs = emb_signature_frame(
-            spark, qn.where(_slice(F.col("vec_id"), rem))
-        )
-        store_sigs = spark.read.parquet(store_path)
-        cand = admission_candidates(
-            store_sigs, batch_sigs, _EMB_KEY_COLS, id_col="vec_id"
-        ).select(F.col("da").alias("va"), F.col("db").alias("vb"))
-        verified = cosine_on_candidates(cand, qn, _COSINE_THRESHOLD)
-        verified.write.mode("append").parquet(evidence)
-        batch_sigs.write.mode("append").parquet(store_path)
-
-    qn.unpersist()  # evidence is on disk; drop the vector cache
-    return spark.read.parquet(evidence).select("va", "vb", "cosine")
-
-
 _EMB_STORE_ADMISSION_SQL = f"""
 WITH {_QUANT_CTE},
 planes(p, i, w) AS (VALUES {_neardup_planes_values_sql()}),
@@ -1336,10 +1173,18 @@ WHERE {_NEARDUP_COS_SQL_BODY} >= {_COSINE_THRESHOLD}
 """
 
 
+def embedding_store_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """`rep_store_admission` over the quantized embeddings, vector
+    family, under the `hyperplane_store` scratch dir. Output: (va,
+    vb, cosine)."""
+    return rep_store_admission(
+        spark, _quantized(spark, sf_dir), VECTOR, "hyperplane_store"
+    )
+
+
 def embedding_store_rep_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`rep_store_admission` over the quantized embeddings, vector
-    family — closing the last uncapped admission kernel (VERDICT r11
-    #1): a degenerate bucket of B identical vectors reaches the
+    family: a degenerate bucket of B identical vectors reaches the
     kernel as one row, the store grows O(distinct vectors), and the
     band index's pruned read is int-keyed."""
     return rep_store_admission(
@@ -1923,13 +1768,12 @@ QUERIES = {
 
 ORACLE = {
     "dedup_store_admission": _STORE_ADMISSION_SQL,
-    # the UNCHANGED one-shot union spelling: the rep-store lifecycle
-    # must reproduce the uncapped op's output exactly (expansion
-    # through membership), proving the pre-pass semantics-preserving.
+    # the one-shot union spelling, which knows nothing of groups: the
+    # rep-store lifecycle must reproduce it exactly (expansion through
+    # membership), proving the pre-pass semantics-preserving.
     "dedup_store_rep_admission": _STORE_ADMISSION_SQL,
     "embedding_store_admission": _EMB_STORE_ADMISSION_SQL,
-    # same trick on the vector side: the rep lifecycle vs the
-    # uncapped op's own one-shot SQL, unchanged.
+    # same on the vector side.
     "embedding_store_rep_admission": _EMB_STORE_ADMISSION_SQL,
     # retract-then-admit ≡ never-admitted: the one-shot spelling over
     # the SURVIVING corpus, restricted to batch-2-involving pairs.

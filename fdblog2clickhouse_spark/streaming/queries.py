@@ -25,7 +25,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hashing import cents, cents_sql
-from ..operators.dedup_store import _STORE_ADMISSION_SQL
 from ..operators.similarity import _ANN_IVF_SQL
 from ..sources.tables import events_stream, table
 from ..sources.trace_json import _TRACE_BATCH_SQL
@@ -720,82 +719,12 @@ WHERE i / (ca.n + cb.n - i) >= {dd._JACCARD_THRESHOLD}
 """
 
 
-# ----------------------------------- streaming_store_admission
-
-def streaming_store_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ONLINE admission loop with a GROWING store — the
-    streaming completion of `dedup_store_admission`
-    (operators/dedup_store.py): arriving documents (the
-    doc_id % 10 ∈ {0, 5} slices, landed as JSON rotations and
-    consumed one file per micro-batch) run through foreachBatch,
-    and EVERY micro-batch reads the persisted signature store from
-    disk, scores itself against it (store×batch + batch-internal
-    pairs, first-shared-band gate, exact-Jaccard verify), appends
-    its admission evidence, and appends its own signatures so the
-    NEXT micro-batch sees them. Unlike `streaming_incremental_dedup`
-    (stream vs a STATIC store), the store here evolves under the
-    stream — the reference's ingest-then-query contract applied to
-    the dedup index itself.
-
-    Oracle: the same one-shot union spelling as the batch lifecycle
-    op — admission results are provably independent of HOW the
-    arrivals are sliced into micro-batches (each batch contributes
-    exactly its pairs against everything seen before it plus itself;
-    see dedup_store.py's module docstring), so any rotation/trigger
-    layout must hash-match the same evidence."""
-    from ..operators import dedup as dd
-    from ..operators.dedup_store import (
-        _JACCARD_THRESHOLD as _JT,
-        _base_pred,
-        admission_candidates,
-        shingle_frame,
-        signature_frame,
-    )
-    from ..operators.sinkcheck import scratch_dir
-
-    # deterministic per-run root (wiped on entry) — same hygiene as
-    # the batch lifecycle ops (VERDICT r9 item 8).
-    root = scratch_dir("store_admission_stream")
-    base_dir = root + "/rotations"
-    store_path = root + "/signatures"
-    evidence = root + "/evidence"
-    d = table(spark, sf_dir, "documents").select("doc_id", "text")
-    # arrivals: 4 rotation files → 4 micro-batches under
-    # maxFilesPerTrigger=1 (the store must grow ACROSS batches)
-    d.where(~_base_pred(F.col("doc_id"))).coalesce(4).write.mode(
-        "overwrite"
-    ).json(base_dir)
-
-    # store bootstrap: the base corpus's signatures on disk
-    feats = shingle_frame(d).cache()  # verify-side features (all docs)
-    signature_frame(
-        feats.where(_base_pred(F.col("doc_id")))
-    ).write.mode("overwrite").parquet(store_path)
-
-    def admit(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
-        batch_sigs = signature_frame(shingle_frame(batch_df))
-        store_sigs = s.read.parquet(store_path)
-        cand = admission_candidates(store_sigs, batch_sigs)
-        dd.jaccard_on_candidates(
-            cand, feats.select("doc_id", F.col("sh").alias("fs")), _JT
-        ).write.mode("append").parquet(evidence)
-        batch_sigs.write.mode("append").parquet(store_path)
-
-    stream = spark.readStream.schema("doc_id long, text string").option(
-        "maxFilesPerTrigger", 1
-    ).json(base_dir)
-    drain_foreach_batch(stream, admit, base_dir + "_ckpt")
-    feats.unpersist()
-    return spark.read.parquet(evidence).select("da", "db", "jaccard")
-
-
 def streaming_ivf_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuous vector ingestion into the PERSISTED IVF index —
     the streaming completion of `ann_ivf_store_search`
     (operators/ann_store.py), closing the store family's symmetry:
     the dedup stores have had an online admission loop since round
-    12 (`streaming_store_admission`), while the ANN index could only
+    12 (streaming/rep_admission.py), while the ANN index could only
     be fed by batch CLI inserts. Arriving vectors (the
     vec_id % 10 == 0 insert slice, landed as 4 JSON rotations of the
     QUANTIZED frame — exact integers, so the rotation roundtrip is
@@ -882,7 +811,6 @@ QUERIES = {
     "streaming_view_purchase_join": streaming_view_purchase_join,
     "streaming_hll_rollup": streaming_hll_rollup,
     "streaming_incremental_dedup": streaming_incremental_dedup,
-    "streaming_store_admission": streaming_store_admission,
     "streaming_ivf_insert": streaming_ivf_insert,
 }
 
@@ -899,6 +827,5 @@ ORACLE = {
     "streaming_view_purchase_join": _SS_JOIN_SQL,
     "streaming_hll_rollup": _hll_rollup_sql(),
     "streaming_incremental_dedup": _incr_stream_sql(),
-    "streaming_store_admission": _STORE_ADMISSION_SQL,
     "streaming_ivf_insert": _ANN_IVF_SQL,
 }

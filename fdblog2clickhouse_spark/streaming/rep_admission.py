@@ -1,25 +1,30 @@
-"""STREAMING representative-store admission (SURVEY §2.7).
+"""STREAMING rep-store admission (SURVEY §2.7).
 
-`streaming_store_admission` (queries.py) proves the ONLINE lifecycle
-for the deliberately-uncapped doc-level kernel; this module is its
-PRODUCTION form: the same growing-store-under-foreachBatch loop, but
-every micro-batch runs the round-11 representative design
-(operators/dedup_store.py) end to end, for either store family —
+The online form of the admission lifecycle (operators/dedup_store.py):
+arriving rows land as JSON rotations, one micro-batch per file, and
+EVERY micro-batch runs the shared `rep_admission_step` against the
+persisted rep store, for either store family —
 
   exact-dedup pre-pass (identical token streams, or identical
   quantized vectors, collapse to one group), gh classification
-  against the flat store, band-index PRUNED store-side read,
-  new-group + touched-group scoring, and the index → flat → members
-  append order
+  against the signature table, band-index PRUNED store-side read,
+  new-group + touched-group scoring, and the index → signatures →
+  members append order
 
 — so the store grows O(distinct contents) under the stream and a
 boilerplate-heavy rotation costs one group row, exactly like the
 batch CLI path (`admit` / `admit-vectors`). One body serves both
-families; the registered names bind the family and the source. The
-returned frame is the group evidence expanded through membership,
-and the oracle is the batch ops' one-shot union SQL unchanged: the
-hash match proves that micro-batch slicing, the rep collapse, and
-the pruned reads are all semantics-preserving at once.
+families; the registered names bind the family, the source and the
+scratch dir. The returned frame is the group evidence expanded
+through membership, and the oracle is the batch ops' one-shot union
+SQL unchanged: the hash match proves that micro-batch slicing, the
+rep collapse, and the pruned reads are all semantics-preserving at
+once.
+
+Exactly-once under foreachBatch's at-least-once delivery is the
+step's: the members append is its commit point, and a replayed
+micro-batch whose docs are all members is a no-op
+(`skip_when_no_new_docs`).
 
 Why slicing-invariance still holds with the rep pre-pass: a group's
 FIRST arrival scores it against everything in the store at that
@@ -61,7 +66,7 @@ def stream_rep_admission(
 ) -> DataFrame:
     """`source`'s non-base rows as four JSON rotations → four
     micro-batches (maxFilesPerTrigger=1), each admitting against the
-    persisted rep store (flat + band index + members) and growing
+    persisted rep store (signatures + band index + members) and growing
     all three — then the membership expansion, identical to
     `rep_store_admission`'s. The source's first column is its id."""
     root, g_all = _rep_lifecycle(spark, source, family, name)
@@ -99,6 +104,18 @@ def drain_rep_admission(
     drain_foreach_batch(stream, admit, rotations + "_ckpt")
 
 
+def streaming_store_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Text family under the `store_admission_stream` scratch dir:
+    (doc_id, text) rotations. Output: (da, db, jaccard), hash-equal
+    to the one-shot union oracle."""
+    return stream_rep_admission(
+        spark,
+        table(spark, sf_dir, "documents").select("doc_id", "text"),
+        TEXT,
+        "store_admission_stream",
+    )
+
+
 def streaming_rep_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Text family: (doc_id, text) rotations. Output: (da, db,
     jaccard), hash-equal to the one-shot union oracle."""
@@ -114,8 +131,8 @@ def streaming_embedding_rep_admission(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Vector family: rotations of QUANTIZED vectors (vec_id, q).
-    Output: (va, vb, cosine), hash-equal to
-    `embedding_store_admission`'s one-shot union SQL unchanged. The
+    Output: (va, vb, cosine), hash-equal to the vector lifecycle
+    ops' one-shot union SQL unchanged. The
     stream carries the quantized long arrays (a float JSON roundtrip
     could flip a .5-boundary rounding; the integer stream is exact by
     construction — a production feed ships whatever its embedder
@@ -130,6 +147,7 @@ def streaming_embedding_rep_admission(
 
 
 QUERIES = {
+    "streaming_store_admission": streaming_store_admission,
     "streaming_rep_admission": streaming_rep_admission,
     "streaming_embedding_rep_admission": streaming_embedding_rep_admission,
 }
@@ -138,6 +156,7 @@ ORACLE = {
     # the batch lifecycle ops' one-shot union SQL, unchanged — one
     # hash match pins slicing-invariance, the rep collapse, and the
     # pruned reads together.
+    "streaming_store_admission": _STORE_ADMISSION_SQL,
     "streaming_rep_admission": _STORE_ADMISSION_SQL,
     "streaming_embedding_rep_admission": _EMB_STORE_ADMISSION_SQL,
 }

@@ -15,6 +15,8 @@ the driver's canonicalizer — emit delimited strings instead.
 
 from __future__ import annotations
 
+import os
+
 import duckdb
 import pandas as pd
 
@@ -22,11 +24,17 @@ from fdblog2clickhouse_spark.sources.tables import TABLE_NAMES
 
 
 def run_oracle(sql: str, sf_dir: str) -> pd.DataFrame:
+    """Run `sql` over the tables present under `sf_dir`. A table is a
+    parquet file or a directory of them (as Spark writes a test's tmp
+    corpus); a query over an absent table fails at bind."""
     con = duckdb.connect()
     for name in TABLE_NAMES:
-        con.execute(
-            f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{sf_dir}/{name}.parquet')"
-        )
+        path = os.path.join(sf_dir, f"{name}.parquet")
+        if os.path.isdir(path):
+            path = os.path.join(path, "*.parquet")
+        elif not os.path.exists(path):
+            continue
+        con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{path}')")
     df = con.sql(sql).df()
     con.close()
     return df

@@ -76,20 +76,22 @@ def test_lifecycle_mechanics(spark, tiny_sf):
 
 
 def test_store_holds_every_doc_seen(spark, tiny_sf):
+    """The op's store under its own scratch dir is the rep store:
+    membership holds every doc seen, the signatures one row per
+    distinct token stream."""
     dedup_store.dedup_store_admission(spark, tiny_sf)
-    import os
-
     from fdblog2clickhouse_spark.operators.sinkcheck import scratch_path
 
-    store = spark.read.parquet(
-        os.path.join(scratch_path("minhash_store"), "signatures")
-    )
-    assert sorted(r["doc_id"] for r in store.select("doc_id").collect()) == [
+    root = scratch_path("minhash_store")
+    members = tables.read_table(spark, root + "/members")
+    assert sorted(r["doc_id"] for r in members.collect()) == [
         1, 2, 3, 25, 40, 45, 50,
     ]
-    # the persisted schema is the doc_minhash_signatures schema
+    store = tables.read_table(spark, root + "/signatures")
+    assert sorted(r["group_id"] for r in store.collect()) == [1, 3, 25, 50]
     assert store.columns == (
-        ["doc_id"] + [f"s{i}" for i in range(16)] + [f"bk{b}" for b in range(4)]
+        ["group_id", "gh"] + [f"s{i}" for i in range(16)]
+        + [f"bk{b}" for b in range(4)]
     )
 
 
@@ -107,10 +109,9 @@ def test_embedding_store_admission_matches_oracle(spark, sf_oracle):
 
 
 def test_embedding_store_rerun_and_store_contents(spark, sf_oracle):
-    """Rerun idempotence (scratch wipe) + the persisted vector store
-    ends holding every vector's sign-band signature row."""
-    import os
-
+    """Rerun idempotence (scratch wipe) + the persisted vector rep
+    store ends with every vector in membership and one sign-band
+    signature row per distinct quantized vector."""
     from fdblog2clickhouse_spark.operators.sinkcheck import scratch_path
 
     a = sorted(
@@ -120,86 +121,26 @@ def test_embedding_store_rerun_and_store_contents(spark, sf_oracle):
         map(tuple, dedup_store.embedding_store_admission(spark, sf_oracle).collect())
     )
     assert a == b
-    store = spark.read.parquet(
-        os.path.join(scratch_path("hyperplane_store"), "signatures")
-    )
     from fdblog2clickhouse_spark.sources.tables import table
 
-    assert store.count() == table(spark, sf_oracle, "embeddings").count()
-    assert store.columns == ["vec_id"] + [f"bv{b}" for b in range(6)]
-
-
-def test_streaming_store_admission_equals_batch_lifecycle(spark, sf_oracle):
-    """Slicing-invariance made real: the 4-micro-batch streaming
-    admission (store growing under the stream) must produce exactly
-    the evidence the two-batch lifecycle op produces — and both
-    must match the one-shot union oracle."""
-    from fdblog2clickhouse_spark.streaming.queries import streaming_store_admission
-
-    streamed = sorted(
-        map(tuple, streaming_store_admission(spark, sf_oracle).collect())
-    )
-    batch = sorted(
-        map(tuple, dedup_store.dedup_store_admission(spark, sf_oracle).collect())
-    )
-    assert streamed == batch
-    # cross-slice evidence on the crafted corpus: 45 (arrives in a
-    # later or same rotation) duplicates 50 — present regardless of
-    # how the file stream sliced the arrivals.
+    root = scratch_path("hyperplane_store")
+    members = tables.read_table(spark, root + "/members")
+    assert members.count() == table(spark, sf_oracle, "embeddings").count()
+    store = tables.read_table(spark, root + "/signatures")
+    assert store.count() == members.select("gh").distinct().count()
+    assert store.columns == ["group_id", "gh"] + [f"bv{b}" for b in range(6)]
 
 
 def test_streaming_store_admission_tiny_pairs(spark, tiny_sf):
-    from fdblog2clickhouse_spark.streaming.queries import streaming_store_admission
+    from fdblog2clickhouse_spark.streaming.rep_admission import (
+        streaming_store_admission,
+    )
 
     pairs = {
         (r["da"], r["db"]) for r in streaming_store_admission(spark, tiny_sf).collect()
     }
     assert (45, 50) in pairs and (1, 40) in pairs and (2, 40) in pairs
     assert (1, 2) not in pairs
-
-
-def test_admission_mega_bucket_contract(spark, tmp_path):
-    """The admission kernel is deliberately UNCAPPED (the cap's
-    population would be mode-dependent and break the sequential ≡
-    one-shot proof — dedup_store.py module docstring). This pins the
-    honest consequence: a degenerate bucket of B identical docs
-    split across store and batches yields exactly the all-qualifying-
-    pairs output (minus store-internal pairs), i.e. quadratic BY
-    CONTRACT, matching the oracle — and the op still completes fine
-    at bucket sizes well past the bulk ops' cap."""
-    import numpy as np
-    import pandas as pd
-
-    text = "mega bucket boilerplate sentence repeated verbatim in every copy"
-    n = 90  # > _LSH_BUCKET_CAP (64) — the bulk ops would drop this bucket
-    ids = list(range(1, n + 1))  # mods spread over base/batch1/batch2
-    pd.DataFrame(
-        {
-            "doc_id": np.array(ids, dtype=np.int64),
-            "text": [text] * n,
-            "lang": ["en"] * n,
-            "source": ["s"] * n,
-            "n_chars": np.array([len(text)] * n, dtype=np.int64),
-        }
-    ).to_parquet(str(tmp_path / "documents.parquet"), index=False)
-
-    pairs = {
-        (r["da"], r["db"])
-        for r in dedup_store.dedup_store_admission(spark, str(tmp_path)).collect()
-    }
-    base = [i for i in ids if i % 10 not in (0, 5)]
-    batch = [i for i in ids if i % 10 in (0, 5)]
-    expect = {
-        (min(a, b), max(a, b))
-        for a in ids
-        for b in ids
-        if a < b and not (a in base and b in base)
-    }
-    assert pairs == expect
-    # sanity on the magnitude: all-pairs minus base-internal
-    n_base = len(base)
-    assert len(pairs) == n * (n - 1) // 2 - n_base * (n_base - 1) // 2
-    assert len(batch) == n - n_base
 
 
 # ------------------- representative (exact-dedup pre-pass) lifecycle
@@ -212,23 +153,10 @@ def test_rep_admission_matches_oracle(spark, sf_oracle):
     compare(df, dedup_store.ORACLE["dedup_store_rep_admission"], sf_oracle)
 
 
-def test_rep_admission_equals_uncapped(spark, sf_oracle):
-    """DataFrame-level equivalence, independent of DuckDB: the
-    rep-store lifecycle and the uncapped doc-level lifecycle must
-    produce the identical evidence set."""
-    rep = sorted(
-        map(tuple, dedup_store.dedup_store_rep_admission(spark, sf_oracle).collect())
-    )
-    unc = sorted(
-        map(tuple, dedup_store.dedup_store_admission(spark, sf_oracle).collect())
-    )
-    assert rep == unc
-
-
 def test_rep_admission_tiny_mechanics(spark, tiny_sf):
-    """Same crafted corpus as the doc-level lifecycle test: identical
-    output pairs, but the persisted store holds one row per DISTINCT
-    token stream and membership records the collapses."""
+    """Same crafted corpus as the lifecycle test: the persisted store
+    holds one row per DISTINCT token stream and membership records
+    the collapses."""
     import os
 
     from fdblog2clickhouse_spark.operators.sinkcheck import scratch_path
@@ -274,11 +202,12 @@ def test_rep_admission_touched_group_rescore(spark, tmp_path):
 
 
 def test_rep_admission_mega_bucket_store_linear(spark, tmp_path):
-    """The point of the pre-pass: the same 90-identical-doc corpus
-    whose uncapped contract is quadratic BY OUTPUT still produces the
-    full all-qualifying-pairs output (the contract), but the kernel's
-    persisted state is O(distinct contents) — ONE signature row, zero
-    group-level evidence rows."""
+    """The point of the pre-pass: 90 identical docs (past the bulk
+    ops' _LSH_BUCKET_CAP of 64, spread over base and both batches),
+    whose admission contract is quadratic BY OUTPUT, still produce
+    the full all-qualifying-pairs output, which the one-shot oracle
+    matches, but the kernel's persisted state is O(distinct contents)
+    — ONE signature row, zero group-level evidence rows."""
     import os
 
     import numpy as np
@@ -299,10 +228,8 @@ def test_rep_admission_mega_bucket_store_linear(spark, tmp_path):
         }
     ).to_parquet(str(tmp_path / "documents.parquet"), index=False)
 
-    pairs = {
-        (r["da"], r["db"])
-        for r in dedup_store.dedup_store_rep_admission(spark, str(tmp_path)).collect()
-    }
+    out = dedup_store.dedup_store_rep_admission(spark, str(tmp_path))
+    pairs = {(r["da"], r["db"]) for r in out.collect()}
     base = [i for i in ids if i % 10 not in (0, 5)]
     expect = {
         (a, b)
@@ -311,6 +238,8 @@ def test_rep_admission_mega_bucket_store_linear(spark, tmp_path):
         if a < b and not (a in base and b in base)
     }
     assert pairs == expect
+    assert len(pairs) == n * (n - 1) // 2 - len(base) * (len(base) - 1) // 2
+    compare(out, dedup_store._STORE_ADMISSION_SQL, str(tmp_path))
 
     root = scratch_path("rep_store")
     assert spark.read.parquet(os.path.join(root, "signatures")).count() == 1
@@ -346,9 +275,10 @@ _doc_strategy = st.lists(
 def test_rep_equals_uncapped_property(spark, tmp_path_factory, docs):
     """Randomized equivalence: for ARBITRARY small corpora (dense
     with exact dups and near-dups across all three arrival slices),
-    the representative lifecycle must produce byte-identical
-    evidence to the uncapped doc-level lifecycle. Catches collapse /
-    rescore / expansion edge cases no crafted corpus pins."""
+    the representative lifecycle must match the uncapped one-shot
+    oracle on the same corpus under the driver's strict rules.
+    Catches collapse / rescore / expansion edge cases no crafted
+    corpus pins."""
     import os
 
     p = tmp_path_factory.mktemp("rep_prop")
@@ -360,13 +290,11 @@ def test_rep_equals_uncapped_property(spark, tmp_path_factory, docs):
     d.coalesce(1).write.mode("overwrite").parquet(
         os.path.join(str(p), "documents.parquet")
     )
-    rep = sorted(
-        map(tuple, dedup_store.dedup_store_rep_admission(spark, str(p)).collect())
+    compare(
+        dedup_store.dedup_store_rep_admission(spark, str(p)),
+        dedup_store._STORE_ADMISSION_SQL,
+        str(p),
     )
-    unc = sorted(
-        map(tuple, dedup_store.dedup_store_admission(spark, str(p)).collect())
-    )
-    assert rep == unc
 
 
 def test_rep_admission_step_replay_is_idempotent(spark, tmp_path):
@@ -821,18 +749,12 @@ def _write_embeddings(spark, sf_dir, rows):
     )
 
 
-def test_embedding_rep_admission_matches_oracle_and_uncapped(spark, sf_oracle):
-    """The vector rep lifecycle vs the uncapped op's one-shot union
-    SQL, unchanged — the hash match proves the quantized-vector-hash
-    pre-pass semantics-preserving — AND byte-equal to the uncapped
-    Spark spelling."""
+def test_embedding_rep_admission_matches_oracle(spark, sf_oracle):
+    """The vector rep lifecycle vs the uncapped one-shot union SQL —
+    the hash match proves the quantized-vector-hash pre-pass
+    semantics-preserving."""
     df = dedup_store.embedding_store_rep_admission(spark, sf_oracle)
     compare(df, dedup_store.ORACLE["embedding_store_rep_admission"], sf_oracle)
-    rep = sorted(map(tuple, df.collect()))
-    unc = sorted(
-        map(tuple, dedup_store.embedding_store_admission(spark, sf_oracle).collect())
-    )
-    assert rep == unc
 
 
 def test_embedding_rep_mega_bucket_store_linear(spark, tmp_path):
@@ -900,11 +822,7 @@ def test_embedding_rep_tiny_mechanics(spark, tmp_path):
     assert (2, 30) in got and (2, 45) in got
     assert (1, 2) not in got
     assert not any(25 in p or 35 in p or 3 in p for p in got)
-    unc = {
-        (r["va"], r["vb"])
-        for r in dedup_store.embedding_store_admission(spark, str(tmp_path)).collect()
-    }
-    assert got == unc
+    compare(out, dedup_store._EMB_STORE_ADMISSION_SQL, str(tmp_path))
 
 
 _vec_strategy = st.lists(
@@ -925,27 +843,19 @@ _vec_strategy = st.lists(
 )
 @given(vecs=_vec_strategy)
 def test_emb_rep_equals_uncapped_property(spark, tmp_path_factory, vecs):
-    """Randomized equivalence for the VECTOR store: arbitrary small
+    """Randomized equivalence for the VECTOR store: on arbitrary small
     corpora dense with exact-dup vectors (tiny component alphabet),
-    near-dups, and zero vectors must produce byte-identical evidence
-    from the rep lifecycle and the uncapped one."""
+    near-dups, and zero vectors, the rep lifecycle must match the
+    uncapped one-shot oracle on the same corpus."""
     p = tmp_path_factory.mktemp("emb_rep_prop")
     _write_embeddings(
         spark, str(p), [(i, [k / 10000.0 for k in q]) for i, q in vecs]
     )
-    rep = sorted(
-        map(
-            tuple,
-            dedup_store.embedding_store_rep_admission(spark, str(p)).collect(),
-        )
+    compare(
+        dedup_store.embedding_store_rep_admission(spark, str(p)),
+        dedup_store._EMB_STORE_ADMISSION_SQL,
+        str(p),
     )
-    unc = sorted(
-        map(
-            tuple,
-            dedup_store.embedding_store_admission(spark, str(p)).collect(),
-        )
-    )
-    assert rep == unc
 
 
 # ------------------------------ banded-index re-bucket migration
@@ -1306,9 +1216,7 @@ def test_retracted_id_cannot_readmit_until_fold(spark, tmp_path):
         "doc_id long, text string",
     )
     g_batch = dedup_store.rep_group_frame(batch)
-    feats = lambda ids: dedup_store.shingle_frame(batch).select(  # noqa: E731
-        "doc_id", F.col("sh").alias("fs")
-    )
+    feats = dedup_store.TEXT.feats_for(g_batch)
     sink = []
     stats = dedup_store.rep_admission_step(
         spark, g_batch, sig, bands, mem, feats,
@@ -1416,9 +1324,7 @@ def test_rep_admission_redelivered_tombstoned_doc(spark, tmp_path):
         [(3, txt), (30, txt)], "doc_id long, text string"
     )
     g_batch = dedup_store.rep_group_frame(batch)
-    feats = lambda ids: dedup_store.shingle_frame(batch).select(  # noqa: E731
-        "doc_id", F.col("sh").alias("fs")
-    )
+    feats = dedup_store.TEXT.feats_for(g_batch)
     stats = dedup_store.rep_admission_step(
         spark, g_batch, sig, bands, mem, feats, lambda v: v.count()
     )
@@ -1571,8 +1477,6 @@ def test_retract_admit_retract_follows_late_members(spark, tmp_path):
     re-elected rep is itself retracted, the late member must follow
     the group to the next rep instead of stranding in a phantom
     group with no signature row."""
-    from pyspark.sql import functions as F
-
     sig, bands, mem = _build_rep_store(spark, tmp_path)
     # retract founding rep 1 → group A = {2, 11} re-elected to 2
     dedup_store.retract_docs(spark, sig, mem, _ids(spark, 1))
@@ -1585,9 +1489,7 @@ def test_retract_admit_retract_follows_late_members(spark, tmp_path):
     g_batch = dedup_store.rep_group_frame(batch)
     dedup_store.rep_admission_step(
         spark, g_batch, sig, bands, mem,
-        lambda ids: dedup_store.shingle_frame(batch).select(
-            "doc_id", F.col("sh").alias("fs")
-        ),
+        dedup_store.TEXT.feats_for(g_batch),
         lambda v: v.count(),
     )
     assert dedup_store.live_members(spark, mem, sig).where(
@@ -2436,6 +2338,70 @@ def test_granular_fold_partial_crash_converges(spark, tmp_path):
     assert {
         tuple(r) for r in tables.read_table(spark, mem).collect()
     } == live_m
+
+
+def test_fold_crash_mid_swap_rerun_converges(spark, tmp_path, monkeypatch):
+    """The crash-store family's fast check (tools/race_stress.py
+    crash-store runs it with SIGKILLs): a fold that fails inside a
+    table's journaled partition swap, with the journal on disk and
+    one partition already swapped, is re-run, and the three tables
+    then equal a never-crashed fold's, with no journal, aside,
+    staging or sidecar left."""
+    import glob
+    import os
+    import shutil
+
+    crashed = _build_bucketed_rep_store(
+        spark, tmp_path / "crashed", buckets=2, extra_docs=8
+    )
+    dedup_store.retract_docs(spark, crashed[0], crashed[2], _ids(spark, 1, 3))
+    # the never-crashed twin: a byte copy of the retracted store
+    shutil.copytree(tmp_path / "crashed", tmp_path / "clean")
+    clean = tuple(str(tmp_path / "clean" / os.path.basename(p)) for p in crashed)
+    dedup_store.fold_retractions(spark, *clean)
+
+    def rows(paths):
+        return [
+            sorted(
+                tuple(tuple(v) if isinstance(v, list) else v for v in r)
+                for r in tables.read_table(spark, p).collect()
+            )
+            for p in paths
+        ]
+
+    orig = storage._fold_swap_loop
+    seen = []
+
+    def crash_once(path, staging, rels, emptied, staged_files):
+        if seen:
+            return orig(path, staging, rels, emptied, staged_files)
+        seen.append(path)
+        assert os.path.exists(os.path.join(path, storage._FOLD_JOURNAL))
+        orig(path, staging, rels[:1], emptied, staged_files)
+        raise RuntimeError("injected crash mid-swap")
+
+    monkeypatch.setattr(storage, "_fold_swap_loop", crash_once)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        dedup_store.fold_retractions(spark, *crashed)
+    assert seen
+    assert dedup_store.fold_retractions(spark, *crashed)["folded"] is True
+
+    assert rows(crashed) == rows(clean)
+    sig, _, mem = crashed
+    for side in (
+        dedup_store.tombstones_path(mem),
+        dedup_store.gdelta_path(sig),
+        dedup_store.gdelta_keys_path(sig),
+    ):
+        assert not os.path.exists(side), side
+    root = str(tmp_path / "crashed")
+    left = [
+        f
+        for pat in (storage._FOLD_JOURNAL, ".bfold*", ".bpub-*", ".trash-*",
+                    "*.bfold*", "*.old", storage.STAGING)
+        for f in glob.glob(os.path.join(root, "**", pat), recursive=True)
+    ]
+    assert left == []
 
 
 def test_heal_table_fold_crash_windows(spark, tmp_path):

@@ -508,42 +508,47 @@ def test_packing_has_no_global_window(spark, sf_smoke):
     assert "hashpartitioning(bucket" in plan, plan
 
 
-def test_store_admission_plans_grid_free(spark, sf_smoke):
-    """The r9 store-lifecycle admission kernels must stay on the
-    banded path: no Python block kernel, no cartesian, no
-    non-broadcast nested loop — same contract as the composed
-    *_lsh_verified trio, checked on the LAZY admission plan (the
-    operators themselves materialize to parquet, so their returned
-    frames are just scans; the plan that matters is the band join +
-    exact verify)."""
-    import fdblog2clickhouse_spark.operators.dedup as dd
+def test_store_admission_plans_grid_free(spark, sf_smoke, tmp_path):
+    """The rep-store admission kernel must stay on the banded path
+    for both families: no Python block kernel, no cartesian — same
+    contract as the composed *_lsh_verified trio, checked on the LAZY
+    plan of one step's band join (the band index's pruned read
+    against a batch's signature rows) + exact verify. The lifecycle
+    ops materialize to parquet, so their returned frames are just
+    scans."""
     from fdblog2clickhouse_spark.operators import dedup_store as ds
+    from fdblog2clickhouse_spark.operators.dedup import _quantized
     from fdblog2clickhouse_spark.plans.audit import formatted_plan
+    from fdblog2clickhouse_spark.sources.tables import table
     from pyspark.sql import functions as F
 
-    sh = dd._doc_shingles(spark, sf_smoke)
-    base = ds.signature_frame(sh.where(ds._base_pred(F.col("doc_id"))))
-    batch = ds.signature_frame(sh.where(ds._slice(F.col("doc_id"), 0)))
-    cand = ds.admission_candidates(base, batch)
-    verified = dd.jaccard_on_candidates(
-        cand, sh.select("doc_id", F.col("sh").alias("fs")), 0.5
-    )
-    plan = formatted_plan(verified)
-    assert "FlatMapGroupsInPandas" not in plan, plan
-    assert "CartesianProduct" not in plan, plan
-    assert "BatchEvalPython" not in plan, plan
-
-    qn = dd._quantized(spark, sf_smoke)
-    vbase = ds.emb_signature_frame(spark, qn.where(ds._base_pred(F.col("vec_id"))))
-    vbatch = ds.emb_signature_frame(spark, qn.where(ds._slice(F.col("vec_id"), 0)))
-    vcand = ds.admission_candidates(
-        vbase, vbatch, [f"bv{b}" for b in range(6)], id_col="vec_id"
-    ).select(F.col("da").alias("va"), F.col("db").alias("vb"))
-    vverified = dd.cosine_on_candidates(vcand, qn, dd._COSINE_THRESHOLD)
-    vplan = formatted_plan(vverified)
-    assert "FlatMapGroupsInPandas" not in vplan, vplan
-    assert "CartesianProduct" not in vplan, vplan
-    assert "BatchEvalPython" not in vplan, vplan
+    for family, source in (
+        (ds.TEXT, table(spark, sf_smoke, "documents")),
+        (ds.VECTOR, _quantized(spark, sf_smoke)),
+    ):
+        g = family.group_frame(source)
+        sig, bands, mem = (
+            str(tmp_path / family.payload / n)
+            for n in ("signatures", "bands", "members")
+        )
+        ds.bootstrap_rep_store(
+            spark,
+            *ds.rep_store_frames(g.where(ds._base_pred(F.col("doc_id"))), family),
+            sig, bands, mem,
+            family=family,
+        )
+        batch = family.signatures(
+            ds.rep_reps(g.where(ds._slice(F.col("doc_id"), 0)), family.payload)
+        )
+        cand = ds.candidates_from_rows(
+            ds.pruned_store_rows(spark, bands, batch, family.key_cols),
+            ds.store_band_rows(batch, family.key_cols, id_col="group_id"),
+            len(family.key_cols),
+        )
+        plan = formatted_plan(family.verify(cand, family.feats(g), family.threshold))
+        assert "FlatMapGroupsInPandas" not in plan, plan
+        assert "CartesianProduct" not in plan, plan
+        assert "BatchEvalPython" not in plan, plan
 
 
 def test_ivf_store_search_plan(spark, sf_smoke):
